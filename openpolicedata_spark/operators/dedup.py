@@ -32,6 +32,7 @@ from openpolicedata_spark.functions.text import (
     normalize_text_expr,
     tokens_expr,
 )
+from openpolicedata_spark.streaming import _read_index
 
 
 def _token_hash_expr(tok: Column, token_hash: str) -> Column:
@@ -1056,7 +1057,7 @@ def exact_dedup_incremental(
     tagged = batch.withColumn(
         "__fp__", fingerprint_md5_expr(F.coalesce(F.col(text_col),
                                                   F.lit(""))))
-    idx = _read_digest_index(spark, index_path)
+    idx = _read_index(spark, index_path)
     if idx is not None:
         tagged = tagged.join(
             idx.withColumnRenamed("fingerprint", "__fp__"),
@@ -1066,32 +1067,6 @@ def exact_dedup_incremental(
     if update_index:
         kept.select(F.col("__fp__").alias("fingerprint"))             .write.mode("append").parquet(index_path)
     return kept.drop("__fp__")
-
-
-def _read_digest_index(spark, index_path: str, merge_schema: bool = False):
-    """The digest index, or None when absent OR when a crashed first
-    append left the directory without data files (read.parquet would
-    throw 'unable to infer schema' forever otherwise). `merge_schema`
-    unions old single-column files with marker-carrying (fingerprint,
-    batch_id) files from `exact_dedup_ingest`."""
-    import glob as _glob
-    import os
-
-    from openpolicedata_spark.streaming import _recover_dir
-
-    # a compaction (streaming.compact_index / scale.compact_parquet_dir)
-    # that crashed between its two swap renames leaves the index only at
-    # `<path>.__old__`; without this restore the missing directory would
-    # read as an EMPTY index and silently re-admit everything
-    _recover_dir(index_path)
-    if not os.path.isdir(index_path):
-        return None
-    if not _glob.glob(os.path.join(index_path, "*.parquet")):
-        return None
-    rd = spark.read
-    if merge_schema:
-        rd = rd.option("mergeSchema", "true")
-    return rd.parquet(index_path)
 
 
 def append_digest_index(admitted: DataFrame, index_path: str,
@@ -1155,7 +1130,7 @@ def exact_dedup_ingest(
                          "([A-Za-z0-9._-]+)")
     spark = batch.sparkSession
     part_path = f"{output_path}/batch={batch_id}"
-    idx = _read_digest_index(spark, index_path, merge_schema=True)
+    idx = _read_index(spark, index_path, merge_schema=True)
     if idx is not None and "batch_id" in idx.columns:
         done = idx.where(F.col("fingerprint").isNull()
                          & (F.col("batch_id") == batch_id)).limit(1)

@@ -219,3 +219,27 @@ def test_semantic_dedup_sink_compaction_same_admits(spark, tmp_path):
     assert (sorted(r.vec_id for r in spark.read.parquet(idx_c).collect())
             == [0, 1, 3])
     assert len(_pq_files(idx_c)) < len(_pq_files(idx_u))
+
+
+def test_near_dedup_sink_reads_empty_index_dir_as_empty(spark, tmp_path):
+    """A crash during the first index append can leave the index
+    directory with no data files; the next drain must treat it as an
+    empty index instead of failing to infer its schema."""
+    from openpolicedata_spark.streaming import near_dedup_sink
+
+    schema = "doc_id long, text string"
+    src = tmp_path / "src"
+    src.mkdir()
+    spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog while the cat "
+             "watches from the warm windowsill every single day"),
+         (2, "parquet row groups carry footers statistics and column "
+             "chunk encodings that readers consult before any scan")],
+        schema).coalesce(1).write.parquet(str(src / "f0"))
+    out, idx = str(tmp_path / "out"), str(tmp_path / "idx")
+    os.makedirs(idx)
+
+    near_dedup_sink(spark.readStream.schema(schema).parquet(f"{src}/*/"),
+                    out, idx)
+    assert sorted(r.doc_id for r in spark.read.parquet(out).collect()) \
+        == [1, 2]
