@@ -26,6 +26,8 @@ import struct
 
 import numpy as np
 
+from openpolicedata_spark.sources.pixels import MAX_PIXELS
+
 __all__ = ["BmpError", "decode_bmp", "BMP_SIGNATURE"]
 
 BMP_SIGNATURE = b"BM"
@@ -117,6 +119,8 @@ def decode_bmp(data: bytes) -> np.ndarray:
     height = abs(height)
     if width <= 0 or height == 0:
         raise BmpError("bad dimensions")
+    if width * height > MAX_PIXELS:
+        raise BmpError(f"{width}x{height} exceeds the {MAX_PIXELS}-pixel cap")
     if bpp not in (1, 4, 8, 24, 32):
         raise BmpError(f"{bpp}-bit BMP not supported")
 

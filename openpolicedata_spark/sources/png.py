@@ -42,6 +42,8 @@ import zlib
 
 import numpy as np
 
+from openpolicedata_spark.sources.pixels import MAX_PIXELS
+
 PNG_SIGNATURE = b"\x89PNG\r\n\x1a\n"
 
 # Adam7 pass layout: (x_start, y_start, x_step, y_step)
@@ -185,6 +187,9 @@ def decode_png(data: bytes) -> np.ndarray:
                 raise PngError(f"unsupported bit depth {depth}")
             if ctype == 3 and depth == 16:
                 raise PngError("palette images cannot be 16-bit")
+            if width * height > MAX_PIXELS:
+                raise PngError(
+                    f"{width}x{height} exceeds the {MAX_PIXELS}-pixel cap")
         elif chunk == b"PLTE":
             if len(body) % 3:
                 raise PngError("PLTE length not a multiple of 3")

@@ -38,6 +38,8 @@ import struct
 
 import numpy as np
 
+from openpolicedata_spark.sources.pixels import MAX_PIXELS
+
 __all__ = ["TiffError", "decode_tiff", "TIFF_SIGNATURES"]
 
 TIFF_SIGNATURES = (b"II*\x00", b"MM\x00*")
@@ -250,7 +252,7 @@ def decode_tiff(data: bytes) -> np.ndarray:
 
     width = one(256)
     height = one(257)
-    if width == 0 or height == 0 or width * height > (1 << 28):
+    if width == 0 or height == 0 or width * height > MAX_PIXELS:
         raise TiffError("bad dimensions")
     compression = one(259, 1)
     if compression not in (1, 5, 7, 8, 32773, 32946):

@@ -45,7 +45,6 @@ from openpolicedata_spark.operators.merge import merge_tables
 from openpolicedata_spark.operators.similarity import (
     ann_topk,
     brute_force_topk,
-    cosine_expr,
     make_random_planes,
     ann_index,
 )
@@ -237,8 +236,7 @@ GROUP BY c_mktsegment
 
 def _revenue_expr() -> Column:
     """Shared TPC-H revenue term `extendedprice * (1 - discount)` on exact
-    decimals (order-independent sums; oracle-stable). One definition so a
-    precision tweak can't drift between q11/q59/q60."""
+    decimals (order-independent sums; oracle-stable)."""
     return (F.col("l_extendedprice").cast("decimal(12,2)")
             * (F.lit(1).cast("decimal(2,0)")
                - F.col("l_discount").cast("decimal(4,4)")))
@@ -1713,94 +1711,6 @@ QUALIFY rank <= 3
 """
 
 
-def q59_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5 shape: revenue by nation for one region and one order
-    year, where supplier and customer share the nation. Five-way join —
-    every dimension (region→nation→supplier) broadcasts; only the
-    orders⋈lineitem fact join shuffles. Decimal revenue for
-    order-independent sums."""
-    l = _read(spark, sf_dir, "lineitem")
-    o = _read(spark, sf_dir, "orders")
-    c = _read(spark, sf_dir, "customer")
-    s = _read(spark, sf_dir, "supplier")
-    n = _read(spark, sf_dir, "nation")
-    r = _read(spark, sf_dir, "region")
-    rev = _revenue_expr()
-    dims = (F.broadcast(n.join(F.broadcast(r.where(F.col("r_name") == "ASIA")),
-                               n.n_regionkey == r.r_regionkey)))
-    return (
-        o.where((F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp_ntz"))
-                & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp_ntz")))
-        .join(l, o.o_orderkey == l.l_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(s), l.l_suppkey == s.s_suppkey)
-        .where(F.col("c_nationkey") == F.col("s_nationkey"))
-        .join(dims, F.col("s_nationkey") == F.col("n_nationkey"))
-        .groupBy("n_name")
-        .agg(F.round(F.sum(rev), 2).cast("double").alias("revenue"))
-        .select(F.col("n_name").alias("nation"), "revenue")
-    )
-
-
-_Q59_SQL = """
-SELECT n_name AS nation,
-  CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-                 * (1 - CAST(l_discount AS DECIMAL(4,4)))), 2) AS DOUBLE)
-    AS revenue
-FROM orders
-JOIN lineitem ON o_orderkey = l_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation ON s_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-WHERE r_name = 'ASIA'
-  AND c_nationkey = s_nationkey
-  AND o_orderdate >= TIMESTAMP '1996-01-01'
-  AND o_orderdate < TIMESTAMP '1997-01-01'
-GROUP BY n_name
-"""
-
-
-def q60_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3 shape (o_shippriority → o_orderpriority, which this
-    schema has): unshipped BUILDING-segment orders ranked by revenue.
-    Customer broadcasts; top-10 via orderBy+limit
-    (TakeOrderedAndProject); orderkey tiebreak for determinism."""
-    l = _read(spark, sf_dir, "lineitem")
-    o = _read(spark, sf_dir, "orders")
-    c = _read(spark, sf_dir, "customer")
-    cutoff = F.lit("1998-01-01").cast("timestamp_ntz")
-    rev = _revenue_expr()
-    return (
-        o.where(F.col("o_orderdate") < cutoff)
-        .join(F.broadcast(c.where(F.col("c_mktsegment") == "BUILDING")),
-              o.o_custkey == c.c_custkey)
-        .join(l.where(F.col("l_shipdate") > cutoff),
-              o.o_orderkey == l.l_orderkey)
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(F.round(F.sum(rev), 2).cast("double").alias("revenue"))
-        .orderBy(F.desc("revenue"), F.asc("l_orderkey"))
-        .limit(10)
-    )
-
-
-_Q60_SQL = """
-SELECT l_orderkey, o_orderdate, o_orderpriority,
-  CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-                 * (1 - CAST(l_discount AS DECIMAL(4,4)))), 2) AS DOUBLE)
-    AS revenue
-FROM orders
-JOIN customer ON o_custkey = c_custkey
-JOIN lineitem ON o_orderkey = l_orderkey
-WHERE c_mktsegment = 'BUILDING'
-  AND o_orderdate < TIMESTAMP '1998-01-01'
-  AND l_shipdate > TIMESTAMP '1998-01-01'
-GROUP BY l_orderkey, o_orderdate, o_orderpriority
-ORDER BY revenue DESC, l_orderkey ASC
-LIMIT 10
-"""
-
-
 def q61_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single-pass data-quality profile of the events table: one
     aggregation computes rows/nulls/distincts/min/max for every column —
@@ -2279,119 +2189,6 @@ WITH lookup(code, value) AS (
 SELECT l.value AS agency_name, COUNT(*) AS n_docs, MIN(d.doc_id) AS first_doc
 FROM documents d LEFT JOIN lookup l ON d.source = l.code
 GROUP BY l.value
-"""
-
-
-def q75_cube_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full CUBE over (priority, status) with GROUPING disambiguation —
-    grouping sets in one pass (the reference has none, SURVEY §2.4; Spark
-    executes the cube as ONE Expand + aggregate, not 4 scans). grouping_id
-    bits tell a real NULL group from a rolled-up one."""
-    o = _read(spark, sf_dir, "orders")
-    return (
-        o.cube("o_orderpriority", "o_orderstatus")
-        .agg(F.grouping_id().cast("int").alias("gid"),
-             F.count(F.lit(1)).alias("n_orders"),
-             F.sum(F.col("o_totalprice").cast("decimal(14,2)")).cast("double")
-             .alias("sum_price"))
-        .select("gid", "o_orderpriority", "o_orderstatus",
-                "n_orders", "sum_price")
-    )
-
-
-_Q75_SQL = """
-SELECT CAST(GROUPING(o_orderpriority, o_orderstatus) AS INTEGER) AS gid,
-       o_orderpriority, o_orderstatus, COUNT(*) AS n_orders,
-       CAST(SUM(CAST(o_totalprice AS DECIMAL(14,2))) AS DOUBLE) AS sum_price
-FROM orders
-GROUP BY CUBE (o_orderpriority, o_orderstatus)
-"""
-
-
-def q76_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q7 shape: bilateral trade volume between two nations by ship
-    year. Both nation dims broadcast onto the fact joins; only
-    orders⋈lineitem shuffles. The (n1,n2)|(n2,n1) pair filter rides the
-    broadcast hash join as an ordinary predicate."""
-    l = _read(spark, sf_dir, "lineitem")
-    o = _read(spark, sf_dir, "orders")
-    c = _read(spark, sf_dir, "customer")
-    s = _read(spark, sf_dir, "supplier")
-    n = _read(spark, sf_dir, "nation")
-    n1 = n.select(F.col("n_nationkey").alias("s_nkey"),
-                  F.col("n_name").alias("supp_nation"))
-    n2 = n.select(F.col("n_nationkey").alias("c_nkey"),
-                  F.col("n_name").alias("cust_nation"))
-    pair = (
-        ((F.col("supp_nation") == "NATION_1") & (F.col("cust_nation") == "NATION_2"))
-        | ((F.col("supp_nation") == "NATION_2") & (F.col("cust_nation") == "NATION_1"))
-    )
-    return (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(s), l.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("s_nkey"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("c_nkey"))
-        .where(pair)
-        .groupBy("supp_nation", "cust_nation",
-                 F.year("l_shipdate").alias("ship_year"))
-        .agg(F.round(F.sum(_revenue_expr()), 2).cast("double").alias("revenue"))
-    )
-
-
-_Q76_SQL = """
-SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-       CAST(EXTRACT(YEAR FROM l_shipdate) AS INTEGER) AS ship_year,
-       CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-                      * (1 - CAST(l_discount AS DECIMAL(4,4)))), 2) AS DOUBLE)
-         AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation n1 ON s_nationkey = n1.n_nationkey
-JOIN nation n2 ON c_nationkey = n2.n_nationkey
-WHERE (n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
-   OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1')
-GROUP BY n1.n_name, n2.n_name, CAST(EXTRACT(YEAR FROM l_shipdate) AS INTEGER)
-"""
-
-
-def q77_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q18 shape: orders whose total quantity exceeds a threshold,
-    with customer attribution — top 100 by price. The HAVING subquery is a
-    map-side-combined groupBy on the fact's join key (so the aggregate is
-    already co-partitioned with the orders join: AQE reuses the exchange);
-    customer broadcasts; top-k is TakeOrderedAndProject."""
-    l = _read(spark, sf_dir, "lineitem")
-    o = _read(spark, sf_dir, "orders")
-    c = _read(spark, sf_dir, "customer")
-    big = (
-        l.groupBy("l_orderkey")
-        .agg(F.sum(F.col("l_quantity").cast("decimal(12,2)")).alias("__q__"))
-        .where(F.col("__q__") > 300)
-    )
-    return (
-        o.join(big, o.o_orderkey == big.l_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .select("c_custkey", "o_orderkey", "o_orderdate", "o_totalprice",
-                F.col("__q__").cast("double").alias("total_qty"))
-        .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-        .limit(100)
-    )
-
-
-_Q77_SQL = """
-SELECT c_custkey, o_orderkey, o_orderdate, o_totalprice,
-       CAST(total_qty AS DOUBLE) AS total_qty
-FROM orders
-JOIN (SELECT l_orderkey, SUM(CAST(l_quantity AS DECIMAL(12,2))) AS total_qty
-      FROM lineitem GROUP BY l_orderkey
-      HAVING SUM(CAST(l_quantity AS DECIMAL(12,2))) > 300) big
-  ON o_orderkey = big.l_orderkey
-JOIN customer ON o_custkey = c_custkey
-ORDER BY o_totalprice DESC, o_orderkey ASC
-LIMIT 100
 """
 
 
@@ -4543,167 +4340,6 @@ SELECT doc_id, ROUND(zv, 6) AS logit, zv >= 0 AS keep FROM z
 """
 
 
-def q118_small_quantity_revenue(spark: SparkSession,
-                                sf_dir: str) -> DataFrame:
-    """TPC-H Q17 shape — correlated SCALAR subquery: revenue from lines
-    whose quantity is below half the PART's average quantity, for one
-    brand's small parts. Written as SQL so Catalyst's subquery
-    DECORRELATION does the work: the correlated `avg(l_quantity)` per
-    part rewrites into an aggregate + join (no per-row re-execution);
-    the brand filter prunes `part` before anything joins. DECIMAL sum
-    for the order-independent total."""
-    _read(spark, sf_dir, "lineitem").createOrReplaceTempView("q118_l")
-    _read(spark, sf_dir, "part").createOrReplaceTempView("q118_p")
-    return spark.sql("""
-        SELECT CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,2)))
-                          / 7.0, 2) AS DOUBLE) AS avg_yearly
-        FROM q118_l JOIN q118_p ON p_partkey = l_partkey
-        WHERE p_brand = 'Brand#13' AND p_size <= 10
-          AND l_quantity < (
-            SELECT 0.5 * AVG(l_quantity) FROM q118_l
-            WHERE l_partkey = p_partkey)
-    """)
-
-
-_Q118_SQL = """
-SELECT CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,2)))
-                  / 7.0, 2) AS DOUBLE) AS avg_yearly
-FROM lineitem JOIN part ON p_partkey = l_partkey
-WHERE p_brand = 'Brand#13' AND p_size <= 10
-  AND l_quantity < (
-    SELECT 0.5 * AVG(l_quantity) FROM lineitem
-    WHERE l_partkey = p_partkey)
-"""
-
-
-def q119_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q21 shape — correlated EXISTS + NOT EXISTS: suppliers who
-    were the ONLY late shipper (ship > order date + 90 days) in a
-    multi-supplier order. Catalyst decorrelates both predicates into
-    left-semi / left-anti joins on l_orderkey — the plan a hand-written
-    pipeline would build, derived from declarative SQL. Top-20 with a
-    name tiebreak."""
-    _read(spark, sf_dir, "lineitem").createOrReplaceTempView("q119_l")
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q119_o")
-    _read(spark, sf_dir, "supplier").createOrReplaceTempView("q119_s")
-    return spark.sql("""
-        SELECT s_name, COUNT(*) AS numwait
-        FROM q119_l l1
-        JOIN q119_o ON o_orderkey = l1.l_orderkey
-        JOIN q119_s ON s_suppkey = l1.l_suppkey
-        WHERE l1.l_shipdate > o_orderdate + INTERVAL 90 DAYS
-          AND EXISTS (
-            SELECT 1 FROM q119_l l2
-            WHERE l2.l_orderkey = l1.l_orderkey
-              AND l2.l_suppkey <> l1.l_suppkey)
-          AND NOT EXISTS (
-            SELECT 1 FROM q119_l l3
-            JOIN q119_o o3 ON o3.o_orderkey = l3.l_orderkey
-            WHERE l3.l_orderkey = l1.l_orderkey
-              AND l3.l_suppkey <> l1.l_suppkey
-              AND l3.l_shipdate > o3.o_orderdate + INTERVAL 90 DAYS)
-        GROUP BY s_name
-        ORDER BY numwait DESC, s_name ASC
-        LIMIT 20
-    """)
-
-
-_Q119_SQL = """
-SELECT s_name, COUNT(*) AS numwait
-FROM lineitem l1
-JOIN orders ON o_orderkey = l1.l_orderkey
-JOIN supplier ON s_suppkey = l1.l_suppkey
-WHERE l1.l_shipdate > o_orderdate + INTERVAL 90 DAY
-  AND EXISTS (
-    SELECT 1 FROM lineitem l2
-    WHERE l2.l_orderkey = l1.l_orderkey
-      AND l2.l_suppkey <> l1.l_suppkey)
-  AND NOT EXISTS (
-    SELECT 1 FROM lineitem l3
-    JOIN orders o3 ON o3.o_orderkey = l3.l_orderkey
-    WHERE l3.l_orderkey = l1.l_orderkey
-      AND l3.l_suppkey <> l1.l_suppkey
-      AND l3.l_shipdate > o3.o_orderdate + INTERVAL 90 DAY)
-GROUP BY s_name
-ORDER BY numwait DESC, s_name ASC
-LIMIT 20
-"""
-
-
-def q120_parts_supplier_counts(spark: SparkSession,
-                               sf_dir: str) -> DataFrame:
-    """TPC-H Q16 shape — NOT IN subquery + COUNT DISTINCT: how many
-    distinct suppliers offer each (brand, type, size) combination,
-    excluding one brand and excluding "complaint" suppliers (negative
-    account balance stands in for the comment scan). The NOT IN rewrites
-    to a null-aware anti join; the count-distinct is a two-phase
-    aggregate. Top-20 by breadth."""
-    _read(spark, sf_dir, "lineitem").createOrReplaceTempView("q120_l")
-    _read(spark, sf_dir, "part").createOrReplaceTempView("q120_p")
-    _read(spark, sf_dir, "supplier").createOrReplaceTempView("q120_s")
-    return spark.sql("""
-        SELECT p_brand, p_type, p_size,
-               COUNT(DISTINCT l_suppkey) AS supplier_cnt
-        FROM q120_l
-        JOIN q120_p ON p_partkey = l_partkey
-        WHERE p_brand <> 'Brand#13' AND p_size IN (1, 5, 9, 14, 23)
-          AND l_suppkey NOT IN (
-            SELECT s_suppkey FROM q120_s WHERE s_acctbal < 0)
-        GROUP BY p_brand, p_type, p_size
-        ORDER BY supplier_cnt DESC, p_brand ASC, p_type ASC, p_size ASC
-        LIMIT 20
-    """)
-
-
-_Q120_SQL = """
-SELECT p_brand, p_type, p_size,
-       COUNT(DISTINCT l_suppkey) AS supplier_cnt
-FROM lineitem
-JOIN part ON p_partkey = l_partkey
-WHERE p_brand <> 'Brand#13' AND p_size IN (1, 5, 9, 14, 23)
-  AND l_suppkey NOT IN (
-    SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-GROUP BY p_brand, p_type, p_size
-ORDER BY supplier_cnt DESC, p_brand ASC, p_type ASC, p_size ASC
-LIMIT 20
-"""
-
-
-def q121_trailing_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-interval RANGE window frame: each user event's trailing
-    6-hour event count and value sum — a VALUE-based frame (all rows
-    within the interval), not the row-count frames q48 uses; the frame
-    width varies per row with event density. Spark's rangeBetween is
-    numeric, so the frame rides epoch seconds — and since
-    `unix_timestamp` TRUNCATES to whole seconds, the oracle floors
-    epoch(ts) too (DuckDB's epoch is fractional: sub-second events in
-    one wall-clock second must be RANGE peers on BOTH engines, and
-    21600-boundary gaps must land identically). DECIMAL value sums keep
-    the moving total order-independent. One user_id exchange; the
-    per-user sort is the window's own."""
-    e = _read(spark, sf_dir, "events").where(F.col("user_id") < 50)
-    sec = F.unix_timestamp(F.col("ts"))
-    w = (Window.partitionBy("user_id").orderBy(sec)
-         .rangeBetween(-6 * 3600, 0))
-    return e.select(
-        "user_id", "event_id",
-        F.count(F.lit(1)).over(w).alias("n_6h"),
-        F.sum(F.col("value").cast("decimal(14,2)")).over(w)
-        .cast("double").alias("sum_6h"),
-    )
-
-
-_Q121_SQL = """
-SELECT user_id, event_id,
-  CAST(COUNT(*) OVER w AS BIGINT) AS n_6h,
-  CAST(SUM(CAST(value AS DECIMAL(14,2))) OVER w AS DOUBLE) AS sum_6h
-FROM events WHERE user_id < 50
-WINDOW w AS (PARTITION BY user_id
-             ORDER BY CAST(floor(epoch(ts)) AS BIGINT)
-             RANGE BETWEEN 21600 PRECEDING AND CURRENT ROW)
-"""
-
-
 _Q122_COLS = [
     ("orders.o_orderkey", "orders", "o_orderkey"),
     ("orders.o_custkey", "orders", "o_custkey"),
@@ -5299,109 +4935,6 @@ _Q132_SQL = ("SELECT doc_id, md5("
              + ") AS idx_md5, TRUE AS gif_ok FROM documents")
 
 
-def q133_dominant_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q20 shape — IN-subquery whose inner query carries a
-    correlated SCALAR aggregate: suppliers that shipped more than half
-    of some part's total 1995 volume. Catalyst decorrelates the nested
-    structure into aggregate + joins (the scalar per-part total becomes
-    a grouped aggregate joined on l_partkey; the IN becomes a
-    left-semi) — no per-row re-execution, plus a volume floor so the
-    predicate actually rejects (without it every supplier dominates
-    some thin part). l_quantity is integer-valued, so the double sums
-    are exact and the 0.5x comparison is engine-portable."""
-    _read(spark, sf_dir, "lineitem").createOrReplaceTempView("q133_l")
-    _read(spark, sf_dir, "supplier").createOrReplaceTempView("q133_s")
-    return spark.sql("""
-        SELECT s_suppkey, s_name
-        FROM q133_s
-        WHERE s_suppkey IN (
-            SELECT l1.l_suppkey
-            FROM (SELECT l_suppkey, l_partkey,
-                         SUM(l_quantity) AS qty
-                  FROM q133_l
-                  WHERE l_shipdate >= TIMESTAMP '1995-01-01'
-                    AND l_shipdate <  TIMESTAMP '1996-01-01'
-                  GROUP BY l_suppkey, l_partkey) l1
-            WHERE l1.qty >= 60 AND l1.qty > (
-                SELECT 0.5 * SUM(l2.l_quantity)
-                FROM q133_l l2
-                WHERE l2.l_partkey = l1.l_partkey
-                  AND l2.l_shipdate >= TIMESTAMP '1995-01-01'
-                  AND l2.l_shipdate <  TIMESTAMP '1996-01-01'))
-        ORDER BY s_suppkey
-    """)
-
-
-_Q133_SQL = """
-SELECT s_suppkey, s_name
-FROM supplier
-WHERE s_suppkey IN (
-    SELECT l1.l_suppkey
-    FROM (SELECT l_suppkey, l_partkey, SUM(l_quantity) AS qty
-          FROM lineitem
-          WHERE l_shipdate >= TIMESTAMP '1995-01-01'
-            AND l_shipdate <  TIMESTAMP '1996-01-01'
-          GROUP BY l_suppkey, l_partkey) l1
-    WHERE l1.qty >= 60 AND l1.qty > (
-        SELECT 0.5 * SUM(l2.l_quantity)
-        FROM lineitem l2
-        WHERE l2.l_partkey = l1.l_partkey
-          AND l2.l_shipdate >= TIMESTAMP '1995-01-01'
-          AND l2.l_shipdate <  TIMESTAMP '1996-01-01'))
-ORDER BY s_suppkey
-"""
-
-
-def q134_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q22 shape — uncorrelated scalar subquery + NOT EXISTS:
-    above-average-balance customers with no order since 2000, rolled up
-    by market segment. Catalyst turns the scalar average into a
-    one-row broadcast and the NOT EXISTS into a left-anti join on
-    o_custkey with the date filter pushed below it. The average is
-    computed over exact integer cents (ROUND(bal*100) summed as
-    BIGINT, then one double division), so the threshold double is
-    bit-identical across engines — no decimal-vs-double AVG drift."""
-    _read(spark, sf_dir, "customer").createOrReplaceTempView("q134_c")
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q134_o")
-    return spark.sql("""
-        SELECT c_mktsegment,
-               COUNT(*) AS numcust,
-               CAST(SUM(CAST(ROUND(c_acctbal * 100) AS BIGINT)) AS DOUBLE)
-                   / 100.0 AS totacctbal
-        FROM q134_c c
-        WHERE c_acctbal > (
-            SELECT CAST(SUM(CAST(ROUND(c_acctbal * 100) AS BIGINT))
-                        AS DOUBLE)
-                   / (100.0 * COUNT(*))
-            FROM q134_c WHERE c_acctbal > 0.0)
-          AND NOT EXISTS (
-            SELECT 1 FROM q134_o o
-            WHERE o.o_custkey = c.c_custkey
-              AND o.o_orderdate >= TIMESTAMP '2000-01-01')
-        GROUP BY c_mktsegment
-        ORDER BY c_mktsegment
-    """)
-
-
-_Q134_SQL = """
-SELECT c_mktsegment,
-       COUNT(*) AS numcust,
-       CAST(SUM(CAST(ROUND(c_acctbal * 100) AS BIGINT)) AS DOUBLE)
-           / 100.0 AS totacctbal
-FROM customer c
-WHERE c_acctbal > (
-    SELECT CAST(SUM(CAST(ROUND(c_acctbal * 100) AS BIGINT)) AS DOUBLE)
-           / (100.0 * COUNT(*))
-    FROM customer WHERE c_acctbal > 0.0)
-  AND NOT EXISTS (
-    SELECT 1 FROM orders o
-    WHERE o.o_custkey = c.c_custkey
-      AND o.o_orderdate >= TIMESTAMP '2000-01-01')
-GROUP BY c_mktsegment
-ORDER BY c_mktsegment
-"""
-
-
 _GOPHER_STOPS = ["the", "be", "to", "of", "and", "that", "have", "with"]
 
 
@@ -5841,79 +5374,6 @@ ORDER BY id_a, id_b
 """
 
 
-def q140_priority_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4 shape — correlated EXISTS: orders in one quarter with at
-    least one line shipped late, counted by priority. Catalyst
-    decorrelates the EXISTS into a left-semi join on l_orderkey with
-    the lateness predicate pushed below it — the orders date filter
-    prunes at the scan. Completes the decorrelation set (Q17/Q21/Q16 =
-    q118-q120, Q20/Q22 = q133/q134)."""
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q140_o")
-    _read(spark, sf_dir, "lineitem").createOrReplaceTempView("q140_l")
-    return spark.sql("""
-        SELECT o_orderpriority, COUNT(*) AS order_count
-        FROM q140_o
-        WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-          AND o_orderdate <  TIMESTAMP '1996-04-01'
-          AND EXISTS (
-            SELECT 1 FROM q140_l
-            WHERE l_orderkey = o_orderkey
-              AND l_shipdate > o_orderdate + INTERVAL 30 DAYS)
-        GROUP BY o_orderpriority
-        ORDER BY o_orderpriority
-    """)
-
-
-_Q140_SQL = """
-SELECT o_orderpriority, COUNT(*) AS order_count
-FROM orders
-WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-  AND o_orderdate <  TIMESTAMP '1996-04-01'
-  AND EXISTS (
-    SELECT 1 FROM lineitem
-    WHERE l_orderkey = o_orderkey
-      AND l_shipdate > o_orderdate + INTERVAL 30 DAYS)
-GROUP BY o_orderpriority
-ORDER BY o_orderpriority
-"""
-
-
-def q141_shipmode_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q12 shape — join + two-way conditional aggregation: for
-    lines shipped in 1996, count high- vs low-priority orders per
-    return flag (the testdata lacks l_shipmode; l_returnflag plays its
-    role). One broadcast-or-shuffle join, one aggregation exchange with
-    map-side partials; the CASE arithmetic is pure codegen."""
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q141_o")
-    _read(spark, sf_dir, "lineitem").createOrReplaceTempView("q141_l")
-    return spark.sql("""
-        SELECT l_returnflag,
-          SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                   THEN 1 ELSE 0 END) AS high_line_count,
-          SUM(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-                   THEN 1 ELSE 0 END) AS low_line_count
-        FROM q141_l JOIN q141_o ON o_orderkey = l_orderkey
-        WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-          AND l_shipdate <  TIMESTAMP '1997-01-01'
-        GROUP BY l_returnflag
-        ORDER BY l_returnflag
-    """)
-
-
-_Q141_SQL = """
-SELECT l_returnflag,
-  SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-           THEN 1 ELSE 0 END) AS high_line_count,
-  SUM(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-           THEN 1 ELSE 0 END) AS low_line_count
-FROM lineitem JOIN orders ON o_orderkey = l_orderkey
-WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-  AND l_shipdate <  TIMESTAMP '1997-01-01'
-GROUP BY l_returnflag
-ORDER BY l_returnflag
-"""
-
-
 def q142_progressive_jpeg_roundtrip(spark: SparkSession,
                                     sf_dir: str) -> DataFrame:
     """Real PROGRESSIVE JPEG bytes (SOF2) through the full multimodal
@@ -6304,93 +5764,6 @@ _Q146_SQL = ("SELECT doc_id, md5("
              + ") AS pcm_md5, TRUE AS parity_ok FROM documents")
 
 
-_Q147_BODY = """
-    WITH cost AS (
-        SELECT l_partkey, l_suppkey,
-               SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS cost
-        FROM {l}
-        GROUP BY l_partkey, l_suppkey)
-    SELECT p.p_partkey, p.p_brand, s.s_suppkey, s.s_name, n.n_name,
-           CAST(c.cost AS DOUBLE) AS supply_cost
-    FROM {p} p, {s} s, {n} n, {r} r, cost c
-    WHERE c.l_partkey = p.p_partkey
-      AND c.l_suppkey = s.s_suppkey
-      AND s.s_nationkey = n.n_nationkey
-      AND n.n_regionkey = r.r_regionkey
-      AND r.r_name = 'EUROPE'
-      AND c.cost = (
-          SELECT MIN(c2.cost)
-          FROM cost c2, {s} s2, {n} n2, {r} r2
-          WHERE c2.l_partkey = p.p_partkey
-            AND c2.l_suppkey = s2.s_suppkey
-            AND s2.s_nationkey = n2.n_nationkey
-            AND n2.n_regionkey = r2.r_regionkey
-            AND r2.r_name = 'EUROPE')
-    ORDER BY p.p_partkey, s.s_suppkey
-    LIMIT 100
-"""
-
-
-def q147_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q2 shape — a correlated scalar MIN over an aggregated,
-    multi-join subquery: for each European part/supplier pairing,
-    keep the supplier(s) achieving that part's minimum total supply
-    cost within the region. Catalyst decorrelates the scalar MIN into
-    a grouped aggregate re-joined on p_partkey (no per-row
-    re-execution, no BroadcastNestedLoopJoin), and the region/nation
-    dimensions broadcast. The lineitem aggregate substitutes for
-    TPC-H's partsupp (not in this schema); DECIMAL sums keep the
-    min-equality engine-portable, and (p_partkey, s_suppkey) ordering
-    makes the LIMIT deterministic under ties."""
-    _read(spark, sf_dir, "lineitem").createOrReplaceTempView("q147_l")
-    _read(spark, sf_dir, "part").createOrReplaceTempView("q147_p")
-    _read(spark, sf_dir, "supplier").createOrReplaceTempView("q147_s")
-    _read(spark, sf_dir, "nation").createOrReplaceTempView("q147_n")
-    _read(spark, sf_dir, "region").createOrReplaceTempView("q147_r")
-    return spark.sql(_Q147_BODY.format(
-        l="q147_l", p="q147_p", s="q147_s", n="q147_n", r="q147_r"))
-
-
-_Q147_SQL = _Q147_BODY.format(l="lineitem", p="part", s="supplier",
-                              n="nation", r="region")
-
-
-_Q148_BODY = """
-    WITH revenue AS (
-        SELECT l_suppkey AS supplier_no,
-               SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                   * (CAST(1 AS DECIMAL(2,0))
-                      - CAST(l_discount AS DECIMAL(4,4))))
-               AS total_revenue
-        FROM {l}
-        WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-          AND l_shipdate <  TIMESTAMP '1996-04-01'
-        GROUP BY l_suppkey)
-    SELECT s.s_suppkey, s.s_name,
-           CAST(r.total_revenue AS DOUBLE) AS total_revenue
-    FROM {s} s, revenue r
-    WHERE s.s_suppkey = r.supplier_no
-      AND r.total_revenue = (SELECT MAX(total_revenue) FROM revenue)
-    ORDER BY s.s_suppkey
-"""
-
-
-def q148_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q15 shape — an aggregated view consumed twice: once as
-    the join input and once under an uncorrelated scalar MAX. Spark
-    plans the MAX as a one-row subquery stage and the view as a
-    grouped aggregate with map-side partials; the revenue equality is
-    DECIMAL-exact so the 'top supplier' set is engine-portable
-    (TPC-H's own Q15 comment notes the tie case — ORDER BY s_suppkey
-    pins it)."""
-    _read(spark, sf_dir, "lineitem").createOrReplaceTempView("q148_l")
-    _read(spark, sf_dir, "supplier").createOrReplaceTempView("q148_s")
-    return spark.sql(_Q148_BODY.format(l="q148_l", s="q148_s"))
-
-
-_Q148_SQL = _Q148_BODY.format(l="lineitem", s="supplier")
-
-
 def _pq_codebooks(m: int = 8, k: int = 16, sub: int = 8):
     """Fixed deterministic PQ codebooks for q149: md5-derived integers
     over a power-of-two denominator, so every centroid coordinate is
@@ -6432,260 +5805,6 @@ def q149_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             e.where(F.col("vec_id") == 0).head()["embedding"]]
     codes = pq_encode_arrow(e.where(F.col("vec_id") != 0), books)
     return pq_adc_topk(codes, books, qvec, topk=10)
-
-
-_Q152_BODY = """
-    SELECT CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))
-                    * (CAST(1 AS DECIMAL(2,0))
-                       - CAST(l.l_discount AS DECIMAL(4,4))))
-           AS DOUBLE) AS revenue,
-           COUNT(*) AS n_lines
-    FROM {l} l JOIN {p} p ON p.p_partkey = l.l_partkey
-    WHERE
-      (p.p_brand = 'Brand#1' AND p.p_size BETWEEN 1 AND 15
-       AND l.l_quantity BETWEEN 1 AND 11)
-      OR
-      (p.p_brand = 'Brand#2' AND p.p_size BETWEEN 1 AND 25
-       AND l.l_quantity BETWEEN 10 AND 20)
-      OR
-      (p.p_brand = 'Brand#3' AND p.p_size BETWEEN 1 AND 35
-       AND l.l_quantity BETWEEN 20 AND 30)
-"""
-
-
-def q152_disjunctive_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q19 shape — a disjunction of conjunctive predicates
-    spanning BOTH join sides. The planner must keep p_partkey =
-    l_partkey as the equi-join key and evaluate the OR-of-ANDs as a
-    post-join filter (naively pushing the disjunction would lose the
-    equi-key and fall into a nested-loop join); the per-side pieces
-    that CAN prune (the brand/size and quantity ranges' union) are
-    fair game for partial pushdown. Plan-pinned: no
-    BroadcastNestedLoopJoin. DECIMAL revenue keeps the oracle exact."""
-    _read(spark, sf_dir, "lineitem").createOrReplaceTempView("q152_l")
-    _read(spark, sf_dir, "part").createOrReplaceTempView("q152_p")
-    return spark.sql(_Q152_BODY.format(l="q152_l", p="q152_p"))
-
-
-_Q152_SQL = _Q152_BODY.format(l="lineitem", p="part")
-
-
-_Q153_BODY = """
-    SELECT ROUND(
-      100.0 * CAST(SUM(CASE WHEN p.p_type LIKE 'STANDARD%'
-        THEN CAST(l.l_extendedprice AS DECIMAL(18,2))
-             * (CAST(1 AS DECIMAL(2,0))
-                - CAST(l.l_discount AS DECIMAL(4,4)))
-        ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE)
-      / CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))
-                 * (CAST(1 AS DECIMAL(2,0))
-                    - CAST(l.l_discount AS DECIMAL(4,4)))) AS DOUBLE)
-    , 6) AS standard_revenue_pct
-    FROM {l} l JOIN {p} p ON p.p_partkey = l.l_partkey
-    WHERE l.l_shipdate >= TIMESTAMP '1995-06-01'
-      AND l.l_shipdate <  TIMESTAMP '1995-07-01'
-"""
-
-
-def q153_type_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14 shape — a conditional-aggregate RATIO in one pass:
-    both the numerator (CASE on the dimension attribute) and the
-    denominator accumulate in the same grouped aggregate, so the join
-    output is consumed once (no self-join, no second scan). DECIMAL
-    sums make the ratio's double engine-portable; the date slice
-    reaches the scan as a pushed filter."""
-    _read(spark, sf_dir, "lineitem").createOrReplaceTempView("q153_l")
-    _read(spark, sf_dir, "part").createOrReplaceTempView("q153_p")
-    return spark.sql(_Q153_BODY.format(l="q153_l", p="q153_p"))
-
-
-_Q153_SQL = _Q153_BODY.format(l="lineitem", p="part")
-
-
-_Q154_BODY = """
-    SELECT c.c_custkey, c.c_name, n.n_name,
-           CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))
-                    * (CAST(1 AS DECIMAL(2,0))
-                       - CAST(l.l_discount AS DECIMAL(4,4))))
-           AS DOUBLE) AS revenue
-    FROM {c} c
-    JOIN {o} o ON o.o_custkey = c.c_custkey
-    JOIN {l} l ON l.l_orderkey = o.o_orderkey
-    JOIN {n} n ON n.n_nationkey = c.c_nationkey
-    WHERE o.o_orderdate >= TIMESTAMP '1995-01-01'
-      AND o.o_orderdate <  TIMESTAMP '1995-07-01'
-      AND l.l_returnflag = 'R'
-    GROUP BY c.c_custkey, c.c_name, n.n_name
-    ORDER BY revenue DESC, c.c_custkey ASC
-    LIMIT 20
-"""
-
-
-def q154_returned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q10 shape — lost-revenue-per-customer top-20: a
-    fact-to-fact join (lineitem × orders) with the half-year and
-    return-flag slices pushed to both scans, dimension joins
-    (customer, nation) broadcast, one grouped aggregate with map-side
-    partials, and TakeOrderedAndProject for the limit. DECIMAL
-    revenue + c_custkey tiebreak pin the top-20 under ties."""
-    _read(spark, sf_dir, "lineitem").createOrReplaceTempView("q154_l")
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q154_o")
-    _read(spark, sf_dir, "customer").createOrReplaceTempView("q154_c")
-    _read(spark, sf_dir, "nation").createOrReplaceTempView("q154_n")
-    return spark.sql(_Q154_BODY.format(l="q154_l", o="q154_o",
-                                       c="q154_c", n="q154_n"))
-
-
-_Q154_SQL = _Q154_BODY.format(l="lineitem", o="orders", c="customer",
-                              n="nation")
-
-
-_Q160_BODY = """
-    SELECT l.l_orderkey,
-           CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))
-                    * (CAST(1 AS DECIMAL(2,0))
-                       - CAST(l.l_discount AS DECIMAL(4,4))))
-                AS DOUBLE) AS revenue,
-           o.o_orderdate, o.o_orderpriority
-    FROM {c} c, {o} o, {l} l
-    WHERE c.c_mktsegment = 'BUILDING'
-      AND c.c_custkey = o.o_custkey
-      AND l.l_orderkey = o.o_orderkey
-      AND o.o_orderdate < TIMESTAMP '1997-03-15'
-      AND l.l_shipdate  > TIMESTAMP '1997-03-15'
-    GROUP BY l.l_orderkey, o.o_orderdate, o.o_orderpriority
-    ORDER BY revenue DESC, o.o_orderdate ASC, l.l_orderkey ASC
-    LIMIT 10
-"""
-
-
-def q160_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3 shape, SQL form — the declarative twin of q60 (which
-    hand-builds the same plan with the DataFrame API): from the bare
-    three-table SQL the optimizer must DERIVE the broadcast of the
-    filtered customer dimension, push both date predicates to the fact
-    scans, and plan TakeOrderedAndProject for the top-10 (plan-pinned:
-    no nested loop, >=2 real joins). DECIMAL revenue +
-    orderdate/orderkey tiebreaks make the limit deterministic."""
-    _read(spark, sf_dir, "customer").createOrReplaceTempView("q160_c")
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q160_o")
-    _read(spark, sf_dir, "lineitem").createOrReplaceTempView("q160_l")
-    return spark.sql(_Q160_BODY.format(c="q160_c", o="q160_o", l="q160_l"))
-
-
-_Q160_SQL = _Q160_BODY.format(c="customer", o="orders", l="lineitem")
-
-
-_Q161_BODY = """
-    SELECT n.n_name,
-           CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))
-                    * (CAST(1 AS DECIMAL(2,0))
-                       - CAST(l.l_discount AS DECIMAL(4,4))))
-                AS DOUBLE) AS revenue
-    FROM {c} c, {o} o, {l} l, {s} s, {n} n, {r} r
-    WHERE c.c_custkey = o.o_custkey
-      AND l.l_orderkey = o.o_orderkey
-      AND l.l_suppkey = s.s_suppkey
-      AND c.c_nationkey = s.s_nationkey
-      AND s.s_nationkey = n.n_nationkey
-      AND n.n_regionkey = r.r_regionkey
-      AND r.r_name = 'ASIA'
-      AND o.o_orderdate >= TIMESTAMP '1996-01-01'
-      AND o.o_orderdate <  TIMESTAMP '1997-01-01'
-    GROUP BY n.n_name
-    ORDER BY revenue DESC, n.n_name ASC
-"""
-
-
-def q161_local_supplier_volume(spark: SparkSession,
-                               sf_dir: str) -> DataFrame:
-    """TPC-H Q5 shape, SQL form — the declarative twin of q59 (which
-    hand-orders the joins and broadcasts explicitly): the defining
-    constraint is the NON-hierarchical equi-join c_nationkey =
-    s_nationkey tying the customer side of one fact to the supplier
-    side of the other ("local" supplier), and from bare SQL the
-    optimizer must carry both nationkeys through the fact join and
-    close the cycle with hash joins, never a nested-loop (plan-pinned:
-    >=4 real joins, 0 BroadcastNestedLoopJoin)."""
-    for t in ("customer", "orders", "lineitem", "supplier", "nation",
-              "region"):
-        _read(spark, sf_dir, t).createOrReplaceTempView(f"q161_{t[0]}")
-    return spark.sql(_Q161_BODY.format(
-        c="q161_c", o="q161_o", l="q161_l", s="q161_s", n="q161_n",
-        r="q161_r"))
-
-
-_Q161_SQL = _Q161_BODY.format(c="customer", o="orders", l="lineitem",
-                              s="supplier", n="nation", r="region")
-
-
-_Q162_BODY = """
-    SELECT c.c_name, c.c_custkey, o.o_orderkey, o.o_orderdate,
-           CAST(o.o_totalprice AS DOUBLE) AS o_totalprice,
-           CAST(SUM(CAST(l.l_quantity AS DECIMAL(12,2))) AS DOUBLE)
-               AS total_qty
-    FROM {c} c, {o} o, {l} l
-    WHERE o.o_orderkey IN (
-            SELECT l_orderkey FROM {l}
-            GROUP BY l_orderkey
-            HAVING SUM(CAST(l_quantity AS DECIMAL(12,2))) > 300)
-      AND c.c_custkey = o.o_custkey
-      AND o.o_orderkey = l.l_orderkey
-    GROUP BY c.c_name, c.c_custkey, o.o_orderkey, o.o_orderdate,
-             o.o_totalprice
-    ORDER BY o_totalprice DESC, o.o_orderdate ASC, o.o_orderkey ASC
-    LIMIT 100
-"""
-
-
-def q162_large_volume_customer(spark: SparkSession,
-                               sf_dir: str) -> DataFrame:
-    """TPC-H Q18 shape, SQL form — where q77 hand-builds the
-    HAVING-aggregate join, this is the textbook IN-subquery spelling
-    over a grouped HAVING aggregate of the SAME fact being joined:
-    Catalyst must rewrite the IN into a left-semi join against the
-    aggregated lineitem (one extra aggregate + semi-join, no per-row
-    re-execution), then re-aggregate the surviving orders (plan-pinned:
-    >=3 joins, no nested loop). DECIMAL sums + totalprice/orderkey
-    tiebreaks pin the top-100."""
-    _read(spark, sf_dir, "customer").createOrReplaceTempView("q162_c")
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q162_o")
-    _read(spark, sf_dir, "lineitem").createOrReplaceTempView("q162_l")
-    return spark.sql(_Q162_BODY.format(c="q162_c", o="q162_o",
-                                       l="q162_l"))
-
-
-_Q162_SQL = _Q162_BODY.format(c="customer", o="orders", l="lineitem")
-
-
-_Q163_BODY = """
-    SELECT c_count, COUNT(*) AS custdist
-    FROM (
-        SELECT c.c_custkey, COUNT(o.o_orderkey) AS c_count
-        FROM {c} c LEFT OUTER JOIN {o} o
-          ON c.c_custkey = o.o_custkey
-         AND o.o_orderpriority <> '1-URGENT'
-        GROUP BY c.c_custkey) c_orders
-    GROUP BY c_count
-    ORDER BY custdist DESC, c_count DESC
-"""
-
-
-def q163_customer_distribution(spark: SparkSession,
-                               sf_dir: str) -> DataFrame:
-    """TPC-H Q13 shape — LEFT OUTER join with a predicate on the INNER
-    side (it must stay in the join condition: pushing it below as a
-    filter would silently turn customers with only urgent orders into
-    dropped rows instead of c_count=0), followed by a double aggregate
-    (per-customer count, then a histogram of counts). COUNT of a
-    nullable column exercises the count-vs-count(*) null semantics
-    both engines must agree on."""
-    _read(spark, sf_dir, "customer").createOrReplaceTempView("q163_c")
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q163_o")
-    return spark.sql(_Q163_BODY.format(c="q163_c", o="q163_o"))
-
-
-_Q163_SQL = _Q163_BODY.format(c="customer", o="orders")
 
 
 def q164_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7036,172 +6155,6 @@ FROM (
     FROM documents)
 WHERE rk <= 50
 """
-
-
-_Q168_BODY = """
-    SELECT l.l_partkey,
-           CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))
-                    * CAST(l.l_quantity AS DECIMAL(12,2)))
-                AS DOUBLE) AS part_value
-    FROM {l} l
-    JOIN {s} s ON s.s_suppkey = l.l_suppkey
-    JOIN {n} n ON n.n_nationkey = s.s_nationkey
-    WHERE n.n_name = 'NATION_7'
-    GROUP BY l.l_partkey
-    HAVING CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))
-                    * CAST(l.l_quantity AS DECIMAL(12,2))) AS DOUBLE) > (
-      SELECT CAST(SUM(CAST(l2.l_extendedprice AS DECIMAL(18,2))
-                      * CAST(l2.l_quantity AS DECIMAL(12,2))) AS DOUBLE)
-             * 0.001
-      FROM {l} l2
-      JOIN {s} s2 ON s2.s_suppkey = l2.l_suppkey
-      JOIN {n} n2 ON n2.n_nationkey = s2.s_nationkey
-      WHERE n2.n_name = 'NATION_7')
-    ORDER BY part_value DESC, l.l_partkey ASC
-"""
-
-
-def q168_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q11 shape — HAVING against a GLOBAL-total scalar subquery,
-    the one decorrelation pattern the plan-pinned corpus lacked
-    (round-7 verdict item 3): per-part value for one nation's
-    suppliers, keeping parts above a fraction of the whole nation's
-    total. Catalyst must plan the total as a ONE-ROW uncorrelated
-    scalar-subquery stage consumed by the HAVING filter — never
-    re-execute it per group or fall into a nested loop (plan-pinned:
-    zero BroadcastNestedLoopJoin, a scalar subquery node present).
-    No partsupp table in this corpus, so 'stock value' is the
-    lineitem-derived value per part; same shape, same plan obligations
-    as TPC-H Q11 (reference has no optimizer, beyond-ref coverage).
-    DECIMAL sums on both branches keep the threshold comparison and
-    the output doubles engine-portable; part_value DESC + partkey
-    tiebreak pins the order."""
-    _read(spark, sf_dir, "lineitem").createOrReplaceTempView("q168_l")
-    _read(spark, sf_dir, "supplier").createOrReplaceTempView("q168_s")
-    _read(spark, sf_dir, "nation").createOrReplaceTempView("q168_n")
-    return spark.sql(_Q168_BODY.format(l="q168_l", s="q168_s", n="q168_n"))
-
-
-_Q168_SQL = _Q168_BODY.format(l="lineitem", s="supplier", n="nation")
-
-
-_Q169_BODY = """
-    SELECT CAST(YEAR(o.o_orderdate) AS INT) AS o_year,
-      ROUND(CAST(SUM(CASE WHEN n2.n_name = 'NATION_3'
-        THEN CAST(l.l_extendedprice AS DECIMAL(18,2))
-             * (CAST(1 AS DECIMAL(2,0)) - CAST(l.l_discount AS DECIMAL(4,4)))
-        ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE)
-      / CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))
-             * (CAST(1 AS DECIMAL(2,0)) - CAST(l.l_discount AS DECIMAL(4,4))))
-        AS DOUBLE), 6) AS mkt_share
-    FROM {p} p, {s} s, {l} l, {o} o, {c} c,
-         {n} n1, {n} n2, {r} r
-    WHERE p.p_partkey = l.l_partkey AND s.s_suppkey = l.l_suppkey
-      AND l.l_orderkey = o.o_orderkey AND o.o_custkey = c.c_custkey
-      AND c.c_nationkey = n1.n_nationkey AND n1.n_regionkey = r.r_regionkey
-      AND r.r_name = 'AMERICA' AND s.s_nationkey = n2.n_nationkey
-      AND o.o_orderdate BETWEEN TIMESTAMP '1995-01-01'
-                            AND TIMESTAMP '1996-12-31'
-      AND p.p_type = 'ECONOMY'
-    GROUP BY YEAR(o.o_orderdate)
-    ORDER BY o_year
-"""
-
-
-def q169_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q8 shape — the eight-relation market-share ratio: nation
-    joins TWICE under different roles (customer geography filters the
-    region, supplier geography feeds the CASE numerator), and the
-    two-level aggregate is a conditional-sum RATIO in ONE grouped
-    pass (q153's Q14 pattern, here over the widest join in the
-    corpus). The optimizer must keep every equi-key (plan-pinned:
-    zero BroadcastNestedLoopJoin, ≥5 real joins), broadcast the five
-    dimension tables, and push the date window + p_type to the fact
-    scans. DECIMAL numerator/denominator make the ratio portable;
-    ROUND(…, 6) per the float-output rule."""
-    _read(spark, sf_dir, "part").createOrReplaceTempView("q169_p")
-    _read(spark, sf_dir, "supplier").createOrReplaceTempView("q169_s")
-    _read(spark, sf_dir, "lineitem").createOrReplaceTempView("q169_l")
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q169_o")
-    _read(spark, sf_dir, "customer").createOrReplaceTempView("q169_c")
-    _read(spark, sf_dir, "nation").createOrReplaceTempView("q169_n")
-    _read(spark, sf_dir, "region").createOrReplaceTempView("q169_r")
-    return spark.sql(_Q169_BODY.format(
-        p="q169_p", s="q169_s", l="q169_l", o="q169_o", c="q169_c",
-        n="q169_n", r="q169_r"))
-
-
-_Q169_SQL = _Q169_BODY.format(p="part", s="supplier", l="lineitem",
-                              o="orders", c="customer", n="nation",
-                              r="region")
-
-
-_Q170_BODY = """
-    SELECT n.n_name AS nation, CAST(YEAR(o.o_orderdate) AS INT) AS o_year,
-      CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))
-               * (CAST(1 AS DECIMAL(2,0)) - CAST(l.l_discount AS DECIMAL(4,4)))
-               - CAST(p.p_retailprice AS DECIMAL(18,2))
-                 * CAST(l.l_quantity AS DECIMAL(12,2)))
-           AS DOUBLE) AS sum_profit
-    FROM {p} p, {s} s, {l} l, {o} o, {n} n
-    WHERE s.s_suppkey = l.l_suppkey AND p.p_partkey = l.l_partkey
-      AND l.l_orderkey = o.o_orderkey AND s.s_nationkey = n.n_nationkey
-      AND p.p_name LIKE '%gear%'
-    GROUP BY n.n_name, CAST(YEAR(o.o_orderdate) AS INT)
-    ORDER BY nation ASC, o_year DESC
-"""
-
-
-def q170_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q9 shape — LIKE-filtered multi-join profit rollup: the
-    non-sargable substring predicate on part must still PRUNE the join
-    (filter part first, broadcast the survivors into lineitem), profit
-    is a DIFFERENCE of decimal products aggregated by (nation, year),
-    and lineitem joins three ways (part, supplier→nation, orders)
-    without ever losing an equi-key (plan-pinned: zero
-    BroadcastNestedLoopJoin, ≥4 real joins). No partsupp table in this
-    corpus, so supply cost is p_retailprice × quantity — same shape,
-    same plan obligations as TPC-H Q9. All-DECIMAL arithmetic keeps
-    the profit sums engine-portable bit-for-bit."""
-    _read(spark, sf_dir, "part").createOrReplaceTempView("q170_p")
-    _read(spark, sf_dir, "supplier").createOrReplaceTempView("q170_s")
-    _read(spark, sf_dir, "lineitem").createOrReplaceTempView("q170_l")
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q170_o")
-    _read(spark, sf_dir, "nation").createOrReplaceTempView("q170_n")
-    return spark.sql(_Q170_BODY.format(
-        p="q170_p", s="q170_s", l="q170_l", o="q170_o", n="q170_n"))
-
-
-_Q170_SQL = _Q170_BODY.format(p="part", s="supplier", l="lineitem",
-                              o="orders", n="nation")
-
-
-_Q173_BODY = """
-    SELECT CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))
-                    * CAST(l.l_discount AS DECIMAL(4,4))) AS DOUBLE)
-               AS revenue,
-           COUNT(*) AS n_lines
-    FROM {l} l
-    WHERE l.l_shipdate >= TIMESTAMP '1996-01-01'
-      AND l.l_shipdate <  TIMESTAMP '1997-01-01'
-      AND l.l_discount BETWEEN 0.05 AND 0.07
-      AND l.l_quantity < 24
-"""
-
-
-def q173_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6 shape — the pure scan-aggregate: every predicate (date
-    window, discount band, quantity cap) must reach the parquet scan
-    as a pushed filter, the plan has ZERO joins, and the only exchange
-    is the one-row global-aggregate merge (map-side partials do the
-    work). Completes the declarative corpus: all 22 TPC-H query
-    shapes now have exact-oracle, plan-audited twins. DECIMAL product
-    keeps the revenue double engine-portable."""
-    _read(spark, sf_dir, "lineitem").createOrReplaceTempView("q173_l")
-    return spark.sql(_Q173_BODY.format(l="q173_l"))
-
-
-_Q173_SQL = _Q173_BODY.format(l="lineitem")
 
 
 def q155_keep_first_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7574,176 +6527,6 @@ FROM sized GROUP BY doc_id
 """
 
 
-_Q178_BODY = """
-    WITH monthly AS (
-        SELECT n.n_name AS nation, year(o.o_orderdate) AS yr,
-               month(o.o_orderdate) AS mon,
-               SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS sales
-        FROM {o} o, {c} c, {n} n
-        WHERE o.o_custkey = c.c_custkey
-          AND c.c_nationkey = n.n_nationkey
-        GROUP BY n.n_name, year(o.o_orderdate), month(o.o_orderdate)
-    ), v AS (
-        SELECT nation, yr, mon, sales,
-               CAST(SUM(sales) OVER (PARTITION BY nation, yr) AS DOUBLE)
-                   / COUNT(*) OVER (PARTITION BY nation, yr) AS avg_year,
-               LAG(sales) OVER (PARTITION BY nation ORDER BY yr, mon)
-                   AS prev_sales,
-               LEAD(sales) OVER (PARTITION BY nation ORDER BY yr, mon)
-                   AS next_sales
-        FROM monthly
-    )
-    SELECT nation, yr, mon,
-           CAST(sales AS DOUBLE) AS sales,
-           ROUND(CAST(sales AS DOUBLE) - avg_year, 6) AS dev,
-           CAST(prev_sales AS DOUBLE) AS prev_sales,
-           CAST(next_sales AS DOUBLE) AS next_sales
-    FROM v
-    WHERE avg_year > 0
-      AND abs(CAST(sales AS DOUBLE) - avg_year) > avg_year * 0.05
-    ORDER BY dev DESC, nation ASC, yr ASC, mon ASC
-"""
-
-
-def q178_sales_deviation_window(spark: SparkSession,
-                                sf_dir: str) -> DataFrame:
-    """TPC-DS Q47 shape (round-9: the window-after-aggregate
-    decorrelation class TPC-H doesn't exercise): monthly sales per
-    nation from a 3-table join, then THREE window functions over the
-    aggregate — a yearly average on one partitioning (nation, yr) and
-    lag/lead neighbors on another (nation, ordered by month) — and a
-    deviation filter against the windowed average. The optimizer must
-    aggregate FIRST and window over the AGGREGATE output (never the
-    raw join), sharing one sort for lag+lead (plan-pinned: exactly 2
-    Window nodes above the aggregate). Window arithmetic is kept
-    engine-portable: the average is SUM(DECIMAL) cast to DOUBLE over
-    COUNT(*) — both engines sum exactly and divide identically, so
-    ROUND(.,6) pins values bit-for-bit (AVG(DECIMAL) would be exact
-    decimal division in Spark but double in DuckDB)."""
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q178_o")
-    _read(spark, sf_dir, "customer").createOrReplaceTempView("q178_c")
-    _read(spark, sf_dir, "nation").createOrReplaceTempView("q178_n")
-    return spark.sql(_Q178_BODY.format(o="q178_o", c="q178_c",
-                                       n="q178_n"))
-
-
-_Q178_SQL = _Q178_BODY.format(o="orders", c="customer", n="nation")
-
-
-_Q179_BODY = """
-    WITH multi_supp AS (
-        SELECT DISTINCT l1.l_orderkey
-        FROM {l} l1, {l} l2
-        WHERE l1.l_orderkey = l2.l_orderkey
-          AND l1.l_suppkey <> l2.l_suppkey
-    )
-    SELECT COUNT(DISTINCT o.o_orderkey) AS order_count,
-           CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2)))
-                AS DOUBLE) AS total_price
-    FROM {o} o, {l} l
-    WHERE o.o_orderkey = l.l_orderkey
-      AND o.o_orderdate >= TIMESTAMP '1995-01-01'
-      AND o.o_orderdate <  TIMESTAMP '1996-01-01'
-      AND EXISTS (SELECT 1 FROM multi_supp m
-                  WHERE m.l_orderkey = o.o_orderkey)
-      AND EXISTS (SELECT 1 FROM {l} lr, multi_supp m2
-                  WHERE lr.l_orderkey = o.o_orderkey
-                    AND m2.l_orderkey = lr.l_orderkey
-                    AND lr.l_returnflag = 'R')
-"""
-
-
-def q179_multi_supplier_returns(spark: SparkSession,
-                                sf_dir: str) -> DataFrame:
-    """TPC-DS Q95 shape (round-9): a CTE that self-joins the fact on
-    the order key ("shipped by more than one supplier" = Q95's
-    two-warehouse ws_wh) REUSED by two EXISTS predicates — one plain,
-    one additionally joined through the returns slice of the same
-    fact — under a one-year date window, producing a single
-    count-distinct + sum row. Catalyst must decorrelate BOTH EXISTS
-    into left-semi joins and must never fall back to a nested loop
-    (plan-pinned: >=2 LeftSemi, 0 BroadcastNestedLoopJoin). One
-    output row of exact-integer count + DECIMAL-sum double."""
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q179_o")
-    _read(spark, sf_dir, "lineitem").createOrReplaceTempView("q179_l")
-    return spark.sql(_Q179_BODY.format(o="q179_o", l="q179_l"))
-
-
-_Q179_SQL = _Q179_BODY.format(o="orders", l="lineitem")
-
-
-_Q180_BODY = """
-    WITH a AS (
-        SELECT l.l_partkey AS item, month(l.l_shipdate) AS mon,
-               SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))) AS rev
-        FROM {l} l
-        WHERE l.l_linenumber % 2 = 0 AND l.l_partkey % 25 = 0
-          AND l.l_shipdate >= TIMESTAMP '1995-01-01'
-          AND l.l_shipdate <  TIMESTAMP '1996-01-01'
-        GROUP BY l.l_partkey, month(l.l_shipdate)
-    ), b AS (
-        SELECT l.l_partkey AS item, month(l.l_shipdate) AS mon,
-               SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))) AS rev
-        FROM {l} l
-        WHERE l.l_linenumber % 2 = 1 AND l.l_partkey % 25 = 0
-          AND l.l_shipdate >= TIMESTAMP '1995-01-01'
-          AND l.l_shipdate <  TIMESTAMP '1996-01-01'
-        GROUP BY l.l_partkey, month(l.l_shipdate)
-    ), ac AS (
-        SELECT item, mon,
-               SUM(rev) OVER (PARTITION BY item ORDER BY mon
-                              ROWS UNBOUNDED PRECEDING) AS cume
-        FROM a
-    ), bc AS (
-        SELECT item, mon,
-               SUM(rev) OVER (PARTITION BY item ORDER BY mon
-                              ROWS UNBOUNDED PRECEDING) AS cume
-        FROM b
-    ), j AS (
-        SELECT COALESCE(ac.item, bc.item) AS item,
-               COALESCE(ac.mon, bc.mon) AS mon,
-               ac.cume AS a_cume, bc.cume AS b_cume
-        FROM ac FULL OUTER JOIN bc
-          ON ac.item = bc.item AND ac.mon = bc.mon
-    ), w AS (
-        SELECT item, mon,
-               MAX(a_cume) OVER (PARTITION BY item ORDER BY mon
-                                 ROWS UNBOUNDED PRECEDING) AS a_run,
-               MAX(b_cume) OVER (PARTITION BY item ORDER BY mon
-                                 ROWS UNBOUNDED PRECEDING) AS b_run
-        FROM j
-    )
-    SELECT CAST(item AS BIGINT) AS item, CAST(mon AS BIGINT) AS mon,
-           CAST(a_run AS DOUBLE) AS even_cume,
-           CAST(b_run AS DOUBLE) AS odd_cume
-    FROM w
-    WHERE a_run > b_run OR b_run IS NULL
-    ORDER BY item, mon
-"""
-
-
-def q180_cumulative_crossover(spark: SparkSession,
-                              sf_dir: str) -> DataFrame:
-    """TPC-DS Q51 shape (round-9: the FULL OUTER + windowed-cumulative
-    class — the only join type the corpus didn't yet exercise): two
-    channel slices of the same fact aggregate to (item, month)
-    revenue, each gets a running cumulative sum, the two series FULL
-    OUTER join on (item, month) — months present in only one channel
-    must survive with nulls — and a second window carries each side's
-    max-so-far across the merged timeline before the crossover filter.
-    Spark must plan the full outer as a SortMergeJoin (broadcast hash
-    doesn't support it; the nested-loop fallback is pinned out) and
-    fuse both max-so-far columns into ONE Window node (identical
-    partitioning/order). All sums are DECIMAL-exact and (item, mon) is
-    unique per side, so every window is deterministic and the DuckDB
-    replay is bit-for-bit."""
-    _read(spark, sf_dir, "lineitem").createOrReplaceTempView("q180_l")
-    return spark.sql(_Q180_BODY.format(l="q180_l"))
-
-
-_Q180_SQL = _Q180_BODY.format(l="lineitem")
-
-
 _Q181_MESSY = """
     CASE CAST(doc_id % 4 AS INT)
       WHEN 0 THEN 'HTTP://HOST' || substr(md5(text), 1, 4)
@@ -7855,80 +6638,6 @@ FROM c GROUP BY col_name
 """
 
 
-_Q183_BODY = """
-    WITH y95 AS (
-        SELECT DISTINCT o_custkey FROM {o}
-        WHERE o_orderdate >= TIMESTAMP '1995-01-01'
-          AND o_orderdate <  TIMESTAMP '1996-01-01'
-    ), y96 AS (
-        SELECT DISTINCT o_custkey FROM {o}
-        WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-          AND o_orderdate <  TIMESTAMP '1997-01-01'
-    )
-    SELECT 'both' AS cohort, CAST(COUNT(*) AS BIGINT) AS n
-    FROM (SELECT o_custkey FROM y95 INTERSECT
-          SELECT o_custkey FROM y96)
-    UNION ALL
-    SELECT 'only_1995', CAST(COUNT(*) AS BIGINT)
-    FROM (SELECT o_custkey FROM y95 EXCEPT
-          SELECT o_custkey FROM y96)
-    UNION ALL
-    SELECT 'only_1996', CAST(COUNT(*) AS BIGINT)
-    FROM (SELECT o_custkey FROM y96 EXCEPT
-          SELECT o_custkey FROM y95)
-"""
-
-
-def q183_customer_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INTERSECT / EXCEPT set-operator shapes (round-9: the corpus
-    exercised UNION and dropDuplicates but never the other two ANSI
-    set ops): year-cohort retention — customers active in both 1995
-    and 1996, churned, and newly acquired. Spark must plan INTERSECT
-    as a LeftSemi join and EXCEPT as LeftAnti over the
-    distinct-projected year slices (plan-pinned; the nested-loop
-    fallback is pinned out). Counts are exact integers."""
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q183_o")
-    return spark.sql(_Q183_BODY.format(o="q183_o"))
-
-
-_Q183_SQL = _Q183_BODY.format(o="orders")
-
-
-_Q184_BODY = """
-    WITH RECURSIVE t(id, depth) AS (
-        SELECT CAST(1 AS BIGINT), 0
-        FROM {d} WHERE doc_id = 1
-        UNION ALL
-        SELECT d.doc_id, t.depth + 1
-        FROM {d} d, t
-        WHERE d.doc_id >= 2
-          AND CAST(floor(d.doc_id / 2) AS BIGINT) = t.id
-    )
-    SELECT id AS doc_id, CAST(depth AS BIGINT) AS depth FROM t
-"""
-
-
-def q184_recursive_tree_depth(spark: SparkSession,
-                              sf_dir: str) -> DataFrame:
-    """RECURSIVE CTE (round-9: Spark 4's WITH RECURSIVE — iterative
-    transitive closure, the plan class nothing else here exercises):
-    documents form an implicit binary heap (parent(n) = floor(n/2)),
-    and the recursion walks depth level by level from doc 1 — each
-    iteration is one join of the frontier against the node table, so
-    rounds = tree depth (~log2 N) and the frontier rows are (id,
-    depth) pairs only. DuckDB executes the IDENTICAL recursive SQL
-    (both engines iterate; the closed form depth = floor(log2(id)) is
-    additionally pinned in tests as an independent check).
-    floor(x/2) is used instead of integer division on purpose:
-    DuckDB's CAST(double AS BIGINT) ROUNDS while Spark's truncates,
-    but floor() before the cast is exact in both."""
-    _read(spark, sf_dir, "documents").createOrReplaceTempView("q184_d")
-    return spark.sql(_Q184_BODY.format(d="q184_d"))
-
-
-_Q184_SQL = _Q184_BODY.format(d="documents")
-
-
 _Q185_MESSY = """
     CASE CAST(doc_id % 4 AS INT)
       WHEN 0 THEN 'http://H' || substr(md5(text), 1, 4)
@@ -8005,8 +6714,7 @@ def q186_chain_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     drop are pinned in tests/SCALE.md). DuckDB replays the components
     with a WITH RECURSIVE transitive closure over the SAME pair list
     and takes MIN over each node's reachable set — engine-independent
-    ground truth for the iterative path (the q184 recursion machinery
-    aimed at a graph instead of a tree)."""
+    ground truth for the iterative path."""
     from openpolicedata_spark.operators.dedup import dup_clusters
 
     d = _read(spark, sf_dir, "documents").select("doc_id")
@@ -8159,121 +6867,6 @@ FROM p JOIN padsum s ON s.doc_id = p.doc_id
 """
 
 
-_Q188_BODY = """
-    SELECT CAST(2 * GROUPING(o_orderpriority)
-                + GROUPING(o_orderstatus) AS INTEGER) AS gid,
-           o_orderpriority, o_orderstatus,
-           COUNT(*) AS n_orders,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(14,2))) AS DOUBLE)
-               AS sum_price
-    FROM {o}
-    GROUP BY GROUPING SETS ((o_orderpriority, o_orderstatus),
-                            (o_orderpriority), (o_orderstatus))
-"""
-
-
-_Q190_JSON = """
-    CASE WHEN event_id % 11 = 0 THEN '{"user": {'
-    ELSE '{"user": {"id": ' || CAST(user_id AS STRING)
-         || ', "tier": "' || event_type || '"}, "metrics": ['
-         || CAST(event_id % 7 AS STRING) || ', '
-         || CAST(event_id % 5 AS STRING) || ', '
-         || CAST(user_id % 9 AS STRING) || ']'
-         || CASE WHEN event_id % 3 = 0
-                 THEN ', "tag": "t' || CAST(event_id % 4 AS STRING) || '"'
-                 ELSE '' END
-         || '}'
-    END
-"""
-
-
-def q190_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark 4 VARIANT ingestion (round 10 — the semi-structured type
-    class nothing else here exercises, the q184 recursive-CTE recipe
-    applied to storage): each event becomes a nested JSON payload
-    (generatively, from its own columns — every 11th row MALFORMED by
-    truncation, every 3rd carrying an optional "tag" field), parsed
-    with `try_parse_json` into a VARIANT column and extracted with
-    typed `try_variant_get` paths — nested object ($.user.id), array
-    index ($.metrics[2]), optional field ($.tag, NULL on miss),
-    malformed → NULL variant (the whole row lands in the NULL-tier
-    group). The aggregate replays from the SOURCE columns in DuckDB —
-    no JSON on the oracle side at all — so any drift in parse/path/
-    cast semantics breaks the hash. Expression-only; the aggregation
-    combines map-side."""
-    e = _read(spark, sf_dir, "events")
-    j = e.selectExpr(_Q190_JSON + " AS j")
-    v = j.select(
-        F.try_parse_json(F.col("j")).alias("v"))
-    ext = v.select(
-        F.try_variant_get(F.col("v"), "$.user.tier", "string")
-        .alias("tier"),
-        F.try_variant_get(F.col("v"), "$.user.id", "long").alias("uid"),
-        F.try_variant_get(F.col("v"), "$.metrics[2]", "long")
-        .alias("m2"),
-        F.try_variant_get(F.col("v"), "$.tag", "string").alias("tag"),
-    )
-    return ext.groupBy("tier").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("uid").alias("sum_uid"),
-        F.sum("m2").alias("sum_m2"),
-        F.count("tag").alias("n_tag"),
-    )
-
-
-_Q190_SQL = """
-SELECT CASE WHEN event_id % 11 = 0 THEN NULL ELSE event_type END AS tier,
-       CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(SUM(CASE WHEN event_id % 11 = 0 THEN NULL
-                     ELSE user_id END) AS BIGINT) AS sum_uid,
-       CAST(SUM(CASE WHEN event_id % 11 = 0 THEN NULL
-                     ELSE user_id % 9 END) AS BIGINT) AS sum_m2,
-       CAST(COUNT(CASE WHEN event_id % 11 <> 0 AND event_id % 3 = 0
-                       THEN 1 END) AS BIGINT) AS n_tag
-FROM events
-GROUP BY 1
-"""
-
-
-_Q191_BODY = """
-    SELECT c.c_mktsegment,
-           CAST(COUNT(*) AS BIGINT) AS n_never_urgent,
-           CAST(SUM(CAST(c.c_acctbal AS DECIMAL(14,2))) AS DOUBLE)
-               AS sum_acctbal
-    FROM {c} c
-    WHERE c.c_custkey NOT IN (
-        SELECT CASE WHEN o.o_totalprice < 0 THEN NULL
-                    ELSE o.o_custkey END
-        FROM {o} o
-        WHERE o.o_orderpriority = '1-URGENT')
-    GROUP BY c.c_mktsegment
-"""
-
-
-def q191_null_aware_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NULL-AWARE anti join (round 10 — the one anti-join flavor the
-    corpus lacked): `NOT IN` over a column the optimizer cannot prove
-    non-null (the CASE keeps compile-time nullability while never
-    producing a runtime NULL) forces Spark's null-aware anti join —
-    a BroadcastHashJoin LeftAnti with isNullAwareAntiJoin=true that
-    must additionally check the broadcast side for NULLs, because
-    ONE NULL in the subquery makes
-    `x NOT IN (...)` never-true (three-valued logic; the poisoned
-    variant returning ZERO rows is pinned in tests/test_plans.py
-    alongside the plan marker). Customers with no URGENT order,
-    rolled up per market segment — DuckDB executes the identical
-    NOT IN with identical semantics. At scale the null-aware build
-    side must broadcast (Spark refuses to shuffle it); the subquery
-    projects one column of a filtered fact, exactly the shape that
-    stays broadcastable."""
-    _read(spark, sf_dir, "customer").createOrReplaceTempView("q191_c")
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q191_o")
-    return spark.sql(_Q191_BODY.format(c="q191_c", o="q191_o"))
-
-
-_Q191_SQL = _Q191_BODY.format(c="customer", o="orders")
-
-
 def q189_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content-defined chunking (`textpipe.cdc_chunks`, round 10 —
     FastCDC's boundary idea at the token level): a chunk ends wherever
@@ -8329,25 +6922,6 @@ SELECT doc_id,
            ' ')) AS chunk_hash
 FROM s, unnest(range(1, len(starts) + 1)) t(i)
 """
-
-
-def q188_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ASYMMETRIC grouping sets (round-10 verdict item 5: q75 pins the
-    full CUBE; this is the set list neither ROLLUP nor CUBE can spell
-    — (priority, status) / (priority) / (status), no grand total):
-    the reporting-layer plan class a 100 TB rollup leans on. Spark
-    must execute ALL THREE groupings in ONE pass — a single Expand
-    node replicating each input row once per set, feeding one
-    hash aggregate whose partials combine map-side — never N unioned
-    scans of the fact table (plan-pinned alongside q75's CUBE in
-    tests/test_plans.py). GROUPING() bits disambiguate a real NULL
-    group from a rolled-up one; DECIMAL sums keep both engines
-    bit-exact."""
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q188_o")
-    return spark.sql(_Q188_BODY.format(o="q188_o"))
-
-
-_Q188_SQL = _Q188_BODY.format(o="orders")
 
 
 def q192_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8448,135 +7022,6 @@ SELECT user_id, event_type,
 FROM kept
 WINDOW w2 AS (PARTITION BY user_id ORDER BY ts, event_id)
 """
-
-
-def q194_reused_aggregate_join(spark: SparkSession,
-                               sf_dir: str) -> DataFrame:
-    """Aggregate-once self-join (round 10 — the ReuseExchange plan
-    class nothing else pins: TPC-DS Q4/Q11's year-over-year CTE
-    compares one aggregate against itself): per-customer-per-year
-    DECIMAL order totals self-joined on the customer with BOTH
-    growth conditions as non-equi residuals (`a.yr > b.yr`,
-    `a.total * 10 > b.total * 11` — decimal integer math, no float
-    boundary), rolled up to pairs/customers per later year. The MERGE
-    hint keeps both sides on the shuffle path, where the two subtrees
-    are IDENTICAL — Spark must plan the aggregation ONCE and feed the
-    second side from a ReusedExchange (pinned in tests/test_plans.py);
-    without reuse a 100 TB fact would be scanned and aggregated twice.
-    The yr inequality must stay OUT of the equi-join keys (keys would
-    make the two exchanges hash different columns and kill the reuse);
-    the oracle replays the identical CTE self-join in DuckDB."""
-    o = _read(spark, sf_dir, "orders")
-    yr = o.groupBy(
-        F.col("o_custkey"),
-        F.year("o_orderdate").cast("long").alias("yr"),
-    ).agg(F.sum(F.col("o_totalprice").cast("decimal(14,2)"))
-          .alias("total"))
-    a, b = yr.alias("a"), yr.alias("b")
-    pairs = a.hint("merge").join(
-        b.hint("merge"),
-        on=[
-            F.col("a.o_custkey") == F.col("b.o_custkey"),
-            F.col("a.yr") > F.col("b.yr"),
-            F.col("a.total") * 10 > F.col("b.total") * 11,
-        ],
-    )
-    return pairs.groupBy(F.col("a.yr").alias("yr")).agg(
-        F.count(F.lit(1)).alias("n_pairs"),
-        F.count_distinct(F.col("a.o_custkey")).alias("n_cust"),
-    )
-
-
-_Q194_SQL = """
-WITH yr AS (
-  SELECT o_custkey, year(o_orderdate) AS yr,
-         SUM(CAST(o_totalprice AS DECIMAL(14,2))) AS total
-  FROM orders GROUP BY 1, 2
-)
-SELECT a.yr AS yr,
-       CAST(COUNT(*) AS BIGINT) AS n_pairs,
-       CAST(COUNT(DISTINCT a.o_custkey) AS BIGINT) AS n_cust
-FROM yr a JOIN yr b
-  ON a.o_custkey = b.o_custkey AND a.yr > b.yr
- AND a.total * 10 > b.total * 11
-GROUP BY 1
-"""
-
-
-def q195_ordered_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered string aggregation (Spark 4 `listagg ... WITHIN GROUP`,
-    round 10 — the ONE safe form of collect-to-list: an unordered
-    collect_list is nondeterministic under partitioning, which is why
-    the corpus bans array outputs; the WITHIN GROUP sort makes the
-    concatenation a pure function of the data): per market segment,
-    the year-ordered timeline of order counts as a CSV string — the
-    reporting-layer 'sparkline' export shape. Two keyed aggregates
-    (the (segment, year) counts combine map-side; the listagg sorts
-    WITHIN each segment's group, never globally) over a
-    dimension-broadcast join; DuckDB replays with
-    `string_agg(... ORDER BY yr)` — identical ordered-concat
-    semantics, and any partitioning-order leak breaks the hash (this
-    is ALSO the 17-partition sweep's favorite failure shape, pinned
-    green there)."""
-    c = _read(spark, sf_dir, "customer").select("c_custkey",
-                                                "c_mktsegment")
-    o = _read(spark, sf_dir, "orders")
-    per = (o.join(c, o["o_custkey"] == c["c_custkey"])
-           .groupBy("c_mktsegment",
-                    F.year("o_orderdate").cast("long").alias("yr"))
-           .agg(F.count(F.lit(1)).alias("n")))
-    return per.groupBy("c_mktsegment").agg(
-        F.expr("listagg(CAST(n AS STRING), ',') WITHIN GROUP (ORDER BY yr)")
-        .alias("timeline"),
-        F.sum("n").alias("n_orders"),
-    )
-
-
-_Q195_SQL = """
-WITH per AS (
-  SELECT c_mktsegment, year(o_orderdate) AS yr, COUNT(*) AS n
-  FROM orders JOIN customer ON o_custkey = c_custkey
-  GROUP BY 1, 2
-)
-SELECT c_mktsegment,
-       string_agg(CAST(n AS VARCHAR), ',' ORDER BY yr) AS timeline,
-       CAST(SUM(n) AS BIGINT) AS n_orders
-FROM per GROUP BY 1
-"""
-
-
-_Q196_BODY = """
-    SELECT c.c_mktsegment,
-           CAST(COUNT(*) AS BIGINT) AS n_cust,
-           CAST(SUM(t.total) AS DOUBLE) AS sum_total
-    FROM {c} c, LATERAL (
-        SELECT SUM(CAST(o.o_totalprice AS DECIMAL(14,2))) AS total
-        FROM {o} o WHERE o.o_custkey = c.c_custkey
-    ) t
-    WHERE t.total > 1000
-    GROUP BY c.c_mktsegment
-"""
-
-
-def q196_lateral_decorrelate(spark: SparkSession,
-                             sf_dir: str) -> DataFrame:
-    """Correlated LATERAL subquery (round 10 — the lateral-join
-    decorrelation class; q118-q120 pin WHERE-clause subqueries, this
-    is the FROM-clause form): per customer a lateral scalar aggregate
-    of their order total, filtered and rolled up per segment. A naive
-    engine evaluates the subquery per outer row (O(customers) scans);
-    Spark must DECORRELATE it into a per-custkey aggregate joined back
-    — pinned: zero nested-loop joins, the aggregate runs below the
-    join. The scalar-aggregate lateral keeps CROSS JOIN semantics
-    honest (one row per customer even with no orders — total NULL,
-    dropped by the filter), which DuckDB executes from the IDENTICAL
-    SQL body; DECIMAL sums keep the engines bit-exact."""
-    _read(spark, sf_dir, "customer").createOrReplaceTempView("q196_c")
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q196_o")
-    return spark.sql(_Q196_BODY.format(c="q196_c", o="q196_o"))
-
-
-_Q196_SQL = _Q196_BODY.format(c="customer", o="orders")
 
 
 def q197_spatial_radius_pairs(spark: SparkSession,
@@ -8851,71 +7296,6 @@ QUALIFY NOT is_del
 """
 
 
-_Q201_BODY = """
-    SELECT metric,
-           CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(SUM(CAST(val AS DECIMAL(18,6))) AS DOUBLE) AS total,
-           MIN(val) AS min_val, MAX(val) AS max_val
-    FROM {l} UNPIVOT (val FOR metric IN
-        (l_quantity, l_extendedprice, l_discount, l_tax))
-    GROUP BY metric
-"""
-
-
-_Q202_BODY = """
-WITH freq AS (
-  SELECT l_partkey AS pk
-  FROM {l} GROUP BY l_partkey HAVING COUNT(*) >= 6
-)
-SELECT yr,
-       CAST(COUNT(*) AS BIGINT) AS n_rows,
-       CAST(SUM(CAST(l_extendedprice AS DECIMAL(14,2))) AS DOUBLE) AS total
-FROM (
-  SELECT 1995 AS yr, l_extendedprice
-  FROM {l} JOIN {o} ON l_orderkey = o_orderkey
-  WHERE year(o_orderdate) = 1995 AND l_partkey IN (SELECT pk FROM freq)
-  UNION ALL
-  SELECT 1996 AS yr, l_extendedprice
-  FROM {l} JOIN {o} ON l_orderkey = o_orderkey
-  WHERE year(o_orderdate) = 1996 AND l_partkey IN (SELECT pk FROM freq)
-  UNION ALL
-  SELECT 1997 AS yr, l_extendedprice
-  FROM {l} JOIN {o} ON l_orderkey = o_orderkey
-  WHERE year(o_orderdate) = 1997 AND l_partkey IN (SELECT pk FROM freq)
-  UNION ALL
-  SELECT 1998 AS yr, l_extendedprice
-  FROM {l} JOIN {o} ON l_orderkey = o_orderkey
-  WHERE year(o_orderdate) = 1998 AND l_partkey IN (SELECT pk FROM freq)
-)
-GROUP BY yr
-"""
-
-
-def q202_multi_consumer_reuse(spark: SparkSession,
-                              sf_dir: str) -> DataFrame:
-    """Multi-consumer CTE reuse (round 11 — the TPC-DS Q23 class: a
-    frequent-items CTE consumed FOUR times across channels; q194 pins
-    reuse across a self-join's TWO consumers, this pins the four-way
-    fan-in where accidental plan divergence actually bites): the
-    frequent-parts aggregate (parts on ≥6 lineitems) gates four
-    year-sliced order channels via IN-subqueries. Every consumer
-    prunes freq to the SAME single column, so the four aggregate
-    subtrees stay IDENTICAL — Spark must build the broadcast hash
-    relation ONCE and feed the other three consumers from
-    ReusedExchange nodes (pinned: exactly 3 in the final adaptive
-    plan; the q91 gotcha — column pruning splitting 'identical'
-    subtrees — is exactly what the single-column projection guards
-    against). Without reuse a 100 TB fact is scanned and aggregated
-    four times. DuckDB runs the identical body; DECIMAL sums keep the
-    engines bit-exact."""
-    _read(spark, sf_dir, "lineitem").createOrReplaceTempView("q202_l")
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q202_o")
-    return spark.sql(_Q202_BODY.format(l="q202_l", o="q202_o"))
-
-
-_Q202_SQL = _Q202_BODY.format(l="lineitem", o="orders")
-
-
 def q203_skewed_fact_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deliberately skewed fact-fact sort-merge join (round 11 — the
     input shape AQE's OptimizeSkewedJoin exists for, which the corpus
@@ -8972,36 +7352,6 @@ SELECT CAST(a.k % 8 AS BIGINT) AS bucket,
 FROM a JOIN b ON a.k = b.k
 GROUP BY a.k % 8
 """
-
-
-_Q204_BODY = """
-SELECT rf,
-       CAST(o_qty AS DOUBLE) AS o_qty,
-       CAST(f_qty AS DOUBLE) AS f_qty
-FROM (
-  SELECT l_returnflag AS rf, l_linestatus AS ls,
-         CAST(l_quantity AS DECIMAL(14,2)) AS qty
-  FROM {l}
-) PIVOT (SUM(qty) FOR ls IN ('O' AS o_qty, 'F' AS f_qty))
-"""
-
-
-def q204_sql_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Declarative SQL PIVOT (round 11 — q201's UNPIVOT twin and
-    q13's SQL-surface sibling: the reporting layer writes `PIVOT`,
-    not groupBy().pivot()): lineitem quantities pivot linestatus
-    values into columns per returnflag. Spark lowers the clause to a
-    two-phase aggregate over ONE scan (pinned: one Scan, zero
-    Expand/Union — four filtered re-reads of a 100 TB fact would be
-    the naive lowering); the DECIMAL(14,2) sums are
-    order-independent, and the IDENTICAL SQL body runs on DuckDB
-    (its SQL-standard PIVOT form shares the syntax, including the
-    'O' AS o_qty value aliases)."""
-    _read(spark, sf_dir, "lineitem").createOrReplaceTempView("q204_l")
-    return spark.sql(_Q204_BODY.format(l="q204_l"))
-
-
-_Q204_SQL = _Q204_BODY.format(l="lineitem")
 
 
 _Q205_SNAPS = ["2024-01-08 00:00:00", "2024-01-16 12:00:00",
@@ -9063,160 +7413,6 @@ FROM dim, snaps
 WHERE valid_from <= snap_ts AND (valid_to IS NULL OR snap_ts < valid_to)
 GROUP BY 1, 2
 """.format(s0=_Q205_SNAPS[0], s1=_Q205_SNAPS[1], s2=_Q205_SNAPS[2])
-
-
-_Q206_BODY = """
-SELECT
-  CAST((SELECT COUNT(*) FROM {l} WHERE l_quantity > 30)
-       AS BIGINT) AS n_hi,
-  CAST((SELECT SUM(CAST(l_extendedprice AS DECIMAL(14,2))) FROM {l}
-        WHERE l_quantity > 30) AS DOUBLE) AS sum_hi,
-  CAST((SELECT MAX(l_extendedprice) FROM {l} WHERE l_quantity > 30)
-       AS DOUBLE) AS max_hi,
-  CAST((SELECT MIN(l_extendedprice) FROM {l} WHERE l_quantity > 30)
-       AS DOUBLE) AS min_hi
-"""
-
-
-def q206_merged_scalar_subqueries(spark: SparkSession,
-                                  sf_dir: str) -> DataFrame:
-    """Scalar-subquery merging (round 11 — the TPC-DS Q9/Q28 dashboard
-    shape and the LAST uncovered subquery-optimizer class: four
-    scalar aggregates over the same filtered fact): Spark's
-    MergeScalarSubqueries must fuse the four subplans into ONE
-    aggregate computing a struct of all four functions over ONE scan
-    (pinned: a single 'Scan parquet' in the whole formatted plan
-    incl. the Subqueries section, ReusedSubquery markers for the
-    other three) — a naive engine reads a 100 TB fact four times for
-    one dashboard row. In Spark 4 the merge materializes only in the
-    FINAL adaptive plan (the collect-first gotcha — measured: 4
-    scans/0 reuses before execution, 1/3 after). The identical SQL
-    body runs on DuckDB; the filter pushes into the one scan
-    (PushedFilters pinned)."""
-    _read(spark, sf_dir, "lineitem").createOrReplaceTempView("q206_l")
-    return spark.sql(_Q206_BODY.format(l="q206_l"))
-
-
-_Q206_SQL = _Q206_BODY.format(l="lineitem")
-
-
-def q207_runtime_bloom_join(spark: SparkSession,
-                            sf_dir: str) -> DataFrame:
-    """Runtime bloom-filter join pruning (round 11 — InjectRuntimeFilter,
-    the THIRD adaptive/runtime plan class after DPP and skew-split,
-    and the one that matters when the fact is NOT partition-laid-out):
-    a selective part filter (p_size < 3) joined to lineitem on the
-    shuffle path. With the runtime-filter knobs on, Spark builds a
-    bloom_filter_agg over the dim's join keys and injects
-    `might_contain(...)` into the FACT scan's filter — at 100 TB that
-    turns a full-fact shuffle into a shuffle of only
-    plausibly-matching rows, the engine-native form of
-    sketch.bloom_probe's decontamination join. Values are plain
-    DECIMAL rollups per p_size (trivially exact in DuckDB); the bloom
-    injection is pinned in tests/test_plans.py with the thresholds
-    scaled to the test data (the MERGE hints keep the join on the
-    shuffle path — a broadcast join gets no runtime filter)."""
-    li = _read(spark, sf_dir, "lineitem")
-    p = _read(spark, sf_dir, "part")
-    dim = p.where(F.col("p_size") < 3).select("p_partkey", "p_size")
-    j = li.hint("merge").join(
-        dim.hint("merge"), li["l_partkey"] == dim["p_partkey"])
-    return (j.groupBy("p_size")
-            .agg(F.count(F.lit(1)).alias("n_rows"),
-                 F.sum(F.col("l_extendedprice").cast("decimal(14,2)"))
-                 .cast("double").alias("revenue")))
-
-
-_Q207_SQL = """
-SELECT p_size,
-       CAST(COUNT(*) AS BIGINT) AS n_rows,
-       CAST(SUM(CAST(l_extendedprice AS DECIMAL(14,2))) AS DOUBLE)
-           AS revenue
-FROM lineitem JOIN part ON l_partkey = p_partkey
-WHERE p_size < 3
-GROUP BY p_size
-"""
-
-
-_Q208_GOOD = """concat('<doc id="', doc_id, '"><lang>', lang,
-    '</lang><score>', CAST(n_chars AS STRING), '</score><body>',
-    substring(md5(text), 1, 12), '</body><amp>a&amp;', lang,
-    '</amp></doc>')"""
-
-
-def q208_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Native XML parsing (round 11 — Spark 4's built-in `from_xml`,
-    the q190 VARIANT sibling for the other semi-structured format a
-    crawl pipeline ingests): each document becomes a generative XML
-    payload (id attribute, three elements, an entity-escaped field);
-    every 13th doc truncates mid-tag to pin the malformed contract
-    (from_xml returns an all-NULL struct — measured, like
-    try_parse_json's NULL). The parse is load-bearing in the oracle:
-    per parsed lang (malformed rows group under '__bad__'), count,
-    summed parsed score, an ordered md5 fingerprint of the parsed
-    bodies, and an entity-decode check (`a&amp;` must come back as
-    'a&'). DuckDB replays the expected values FROM THE SOURCE COLUMNS
-    (generative replay — any mis-parse, mis-unescape, or
-    malformed-row leak breaks the hash). XML work is row-local
-    expressions: zero exchanges before the final rollup."""
-    d = _read(spark, sf_dir, "documents")
-    xml = d.selectExpr(
-        "doc_id",
-        f"""CASE WHEN doc_id % 13 = 0
-             THEN substring({_Q208_GOOD}, 1, 25)
-             ELSE {_Q208_GOOD} END AS payload""")
-    parsed = xml.select(
-        F.from_xml(
-            "payload",
-            "_id BIGINT, lang STRING, score BIGINT, body STRING, "
-            "amp STRING").alias("x"))
-    return (parsed
-            .groupBy(F.coalesce(F.col("x.lang"), F.lit("__bad__"))
-                     .alias("lang"))
-            .agg(F.count(F.lit(1)).alias("n_docs"),
-                 F.sum("x.score").alias("sum_score"),
-                 F.md5(F.coalesce(
-                     F.expr("listagg(x.body, '') "
-                            "WITHIN GROUP (ORDER BY x._id)"),
-                     F.lit(""))).alias("bodies_md5"),
-                 F.sum(F.when(F.col("x.amp")
-                              == F.concat(F.lit("a&"), F.col("x.lang")),
-                              1).otherwise(0)).alias("n_amp_ok")))
-
-
-_Q208_SQL = """
-WITH src AS (
-  SELECT doc_id, lang, n_chars, substring(md5(text), 1, 12) AS body,
-         doc_id % 13 = 0 AS bad
-  FROM documents
-)
-SELECT CASE WHEN bad THEN '__bad__' ELSE lang END AS lang,
-       CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(CASE WHEN bad THEN NULL ELSE n_chars END) AS BIGINT)
-           AS sum_score,
-       md5(COALESCE(string_agg(CASE WHEN bad THEN NULL ELSE body END,
-                               '' ORDER BY doc_id), '')) AS bodies_md5,
-       CAST(SUM(CASE WHEN bad THEN 0 ELSE 1 END) AS BIGINT) AS n_amp_ok
-FROM src
-GROUP BY 1
-"""
-
-
-def q201_unpivot_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Declarative UNPIVOT (round 10 — the SQL surface of the
-    explode-of-structs unpivot `profile_columns` hand-builds): four
-    lineitem measures melt to (metric, val) rows in ONE pass — Spark
-    plans the same Expand node the GROUPING SETS class uses (never
-    four unioned scans of the fact) — then a per-metric rollup whose
-    DECIMAL(18,6) sum is order-independent (the raw doubles are exact
-    at ≤2 decimals, so the cast loses nothing and both engines agree
-    bit-for-bit). The IDENTICAL SQL body runs on DuckDB (its UNPIVOT
-    shares the syntax)."""
-    _read(spark, sf_dir, "lineitem").createOrReplaceTempView("q201_l")
-    return spark.sql(_Q201_BODY.format(l="q201_l"))
-
-
-_Q201_SQL = _Q201_BODY.format(l="lineitem")
 
 
 def q209_per_key_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9282,225 +7478,6 @@ FROM s
 """
 
 
-def q210_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Native gap-based sessionization in BATCH mode (round 11 —
-    `F.session_window` is exercised by the streaming suite but had no
-    exact-oracle query; this pins Spark's session OPERATOR against the
-    classic SQL gaps-and-islands form): per user, 30-minute-gap
-    sessions with start / end / event count, where Spark's session end
-    is the last event + gap — the oracle rebuilds the identical
-    sessions in DuckDB with a lag-break cumulative-sum island id and
-    MAX(ts) + INTERVAL. Timestamp ties are safe by construction: a
-    tied pair's within-tie order flips only WHICH row carries the
-    break flag, never the island membership. One keyed exchange."""
-    e = _read(spark, sf_dir, "events").where(F.col("user_id") % 20 == 4)
-    return (e.groupBy(F.session_window("ts", "30 minutes").alias("w"),
-                      "user_id")
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .select("user_id", F.col("w.start").alias("s_start"),
-                    F.col("w.end").alias("s_end"), "n_events"))
-
-
-_Q210_SQL = """
-WITH e AS (
-  SELECT user_id, ts,
-         CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                   > INTERVAL 30 MINUTE OR
-                   lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                   IS NULL
-              THEN 1 ELSE 0 END AS brk
-  FROM events WHERE user_id % 20 = 4
-), g AS (
-  SELECT user_id, ts,
-         SUM(brk) OVER (PARTITION BY user_id ORDER BY ts
-                        ROWS UNBOUNDED PRECEDING) AS sid
-  FROM e
-)
-SELECT user_id, MIN(ts) AS s_start,
-       MAX(ts) + INTERVAL 30 MINUTE AS s_end,
-       CAST(COUNT(*) AS BIGINT) AS n_events
-FROM g GROUP BY user_id, sid
-"""
-
-
-def q211_sql_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SQL-defined scalar function (round 11 — Spark 4's
-    `CREATE FUNCTION ... RETURN <expr>`, the UDF surface that does NOT
-    leave the JVM: the body INLINES into the plan as an expression, so
-    whole-stage codegen, pushdown, and the zero-Python rule all hold —
-    pinned: no Python eval nodes, one scan. This is the
-    reference's custom-converter surface done right at 100 TB: users
-    write reusable SQL logic, the optimizer sees through it). The
-    discounted-price function computes in DECIMAL so the rollup is
-    order-independent; the oracle inlines the identical expression in
-    DuckDB — any divergence between the function body and its
-    registration breaks the hash."""
-    _read(spark, sf_dir, "lineitem").createOrReplaceTempView("q211_l")
-    spark.sql("""
-CREATE OR REPLACE TEMPORARY FUNCTION q211_disc_price(p DOUBLE, d DOUBLE)
-RETURNS DECIMAL(18,4)
-RETURN CAST(p AS DECIMAL(14,2)) * CAST(1.0 - d AS DECIMAL(3,2))
-""")
-    return spark.sql("""
-SELECT l_returnflag AS rf,
-       CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(SUM(q211_disc_price(l_extendedprice, l_discount)) AS DOUBLE)
-           AS rev
-FROM q211_l GROUP BY l_returnflag
-""")
-
-
-_Q211_SQL = """
-SELECT l_returnflag AS rf,
-       CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(SUM(CAST(l_extendedprice AS DECIMAL(14,2))
-                * CAST(1.0 - l_discount AS DECIMAL(3,2))) AS DOUBLE)
-           AS rev
-FROM lineitem GROUP BY l_returnflag
-"""
-
-
-_Q212_BODY = """
-SELECT l_returnflag AS rf, l_linestatus AS ls,
-       CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(SUM(CAST(l_quantity AS DECIMAL(14,2))) AS DOUBLE) AS qty
-FROM {l}
-GROUP BY ALL
-"""
-
-
-def q212_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GROUP BY ALL (round 11 — the analyst-surface sugar both engines
-    share: every non-aggregate select item becomes a grouping key, so
-    adding a dimension to the SELECT can't silently change the
-    grouping): the IDENTICAL SQL body runs on Spark and DuckDB. Plans
-    exactly like the explicit GROUP BY (one partial+final aggregate
-    over one scan — the sugar must cost nothing, pinned)."""
-    _read(spark, sf_dir, "lineitem").createOrReplaceTempView("q212_l")
-    return spark.sql(_Q212_BODY.format(l="q212_l"))
-
-
-_Q212_SQL = _Q212_BODY.format(l="lineitem")
-
-
-_Q213_BODY = """
-SELECT o_custkey, o_orderkey, CAST(rnk AS BIGINT) AS rnk,
-       CAST(o_totalprice AS DOUBLE) AS price
-FROM (
-  SELECT o_custkey, o_orderkey, o_totalprice,
-         row_number() OVER (PARTITION BY o_custkey
-                            ORDER BY o_totalprice DESC, o_orderkey)
-             AS rnk
-  FROM {o}
-) WHERE rnk <= 3
-"""
-
-
-def q213_topk_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-key top-k via rank-limit pushdown (round 12, VERDICT r11
-    #2 — the `row_number() <= k` idiom every retrieval/dedup pipeline
-    writes, and the last unexercised window-optimizer class): top-3
-    orders per customer by price. Spark 3.5+/4's InferWindowGroupLimit
-    plans the filter as a WindowGroupLimit node BELOW the window —
-    and, crucially for 100 TB, a PARTIAL WindowGroupLimit below the
-    exchange too, so each map task forwards at most k rows per key
-    and the shuffle + window state carry O(keys × k), not O(rows)
-    (pinned in tests/test_plans.py: Partial+Final pair present, and
-    absent with spark.sql.optimizer.windowGroupLimitThreshold=-1;
-    measured at sf1 in SCALE.md). The o_orderkey tiebreak makes the
-    top-3 exact; the IDENTICAL body runs on DuckDB."""
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q213_o")
-    return spark.sql(_Q213_BODY.format(o="q213_o"))
-
-
-_Q213_SQL = _Q213_BODY.format(o="orders")
-
-
-_Q214_BODY = """
-SELECT n_name,
-       CAST(COUNT(*) AS BIGINT) AS n_items,
-       CAST(SUM(CAST(l_extendedprice AS DECIMAL(14,2))) AS DOUBLE)
-           AS revenue
-FROM {l}
-JOIN {o} ON l_orderkey = o_orderkey
-JOIN {c} ON o_custkey = c_custkey
-JOIN {n} ON c_nationkey = n_nationkey
-WHERE n_name IN ('NATION_7', 'NATION_19')
-GROUP BY n_name
-"""
-
-
-def q214_cbo_join_reorder(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deliberately badly-ordered 4-table join (round 12, VERDICT r11
-    #3 — the cost-based-optimizer surface: catalog statistics driving
-    join REORDERING, the one optimizer input family the corpus never
-    exercised; AQE reacts to runtime shuffle sizes, CBO plans from
-    ANALYZE TABLE stats before anything runs): the FROM order joins
-    fact⋈fact first (lineitem⋈orders) and saves the 2-of-25-nations
-    selective dimension chain for last. The workload entry runs on
-    the default session (plain exact aggregate — DuckDB plans its own
-    order); tests/test_plans.py rebuilds it over ANALYZEd catalog
-    tables with spark.sql.cbo.{enabled,joinReorder.enabled}=true and
-    pins that the optimized join tree moves the nation⋈customer
-    reduction BELOW the fact join (the q203 discipline: the query
-    exists to pin the mechanism; the salt-vs-AQE-vs-CBO decision rule
-    lives in SCALE.md)."""
-    _read(spark, sf_dir, "lineitem").createOrReplaceTempView("q214_l")
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q214_o")
-    _read(spark, sf_dir, "customer").createOrReplaceTempView("q214_c")
-    _read(spark, sf_dir, "nation").createOrReplaceTempView("q214_n")
-    return spark.sql(_Q214_BODY.format(l="q214_l", o="q214_o",
-                                       c="q214_c", n="q214_n"))
-
-
-_Q214_SQL = _Q214_BODY.format(l="lineitem", o="orders",
-                              c="customer", n="nation")
-
-
-_Q215_BODY = """
-SELECT rf, ls, CAST(sm AS BIGINT) AS sm,
-       CAST(total AS DOUBLE) AS total,
-       CAST(rk AS BIGINT) AS rk
-FROM (
-  SELECT rf, ls, sm, total,
-         rank() OVER (PARTITION BY rf
-                      ORDER BY total DESC, ls ASC NULLS FIRST,
-                               sm ASC NULLS FIRST) AS rk
-  FROM (
-    SELECT l_returnflag AS rf, l_linestatus AS ls,
-           month(l_shipdate) AS sm,
-           SUM(CAST(l_quantity AS DECIMAL(14,2))) AS total
-    FROM {l}
-    GROUP BY ROLLUP (l_returnflag, l_linestatus, month(l_shipdate))
-  )
-) WHERE rk <= 3
-"""
-
-
-def q215_rollup_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q67-class shape (round 12, VERDICT r11 #6): windowed
-    top-k over a ROLLUP — rank the rollup hierarchy's rows (detail,
-    per-linestatus, per-returnflag, grand total) within each
-    returnflag partition and keep the top 3 by quantity. Composes the
-    GROUPING SETS class (q188) with q213's rank-limit pushdown: the
-    plan must be ONE Expand feeding the aggregate, then a
-    WindowGroupLimit BEFORE the full window sort — at 100 TB the
-    rollup multiplies rows ×4 and the rank-limit is what keeps the
-    window's buffered state bounded at O(partitions × k) (pinned in
-    tests/test_plans.py). Exactness: DECIMAL sums, and the window
-    order is total — a total order because each partition's (ls, sm)
-    pairs are distinct across rollup levels (the ship month is never
-    NULL in the data, so a detail row can't collide with a subtotal
-    row);
-    NULLS FIRST is explicit because the engines' defaults differ.
-    The IDENTICAL body runs on DuckDB."""
-    _read(spark, sf_dir, "lineitem").createOrReplaceTempView("q215_l")
-    return spark.sql(_Q215_BODY.format(l="q215_l"))
-
-
-_Q215_SQL = _Q215_BODY.format(l="lineitem")
-
-
 # q216: the 8 generative IDN labels and their RFC 3490 ToASCII forms
 # (computed once from the stdlib codec — note 'groß' NAMEPREP-maps to
 # plain 'gross', no ACE prefix: the IDNA2003 pin)
@@ -9560,380 +7537,6 @@ SELECT 'http://www.' || (CASE doc_id % 8 {_Q216_CASE} END)
 FROM documents GROUP BY 1
 """
 
-_Q217_BODY = """
-SELECT l_returnflag AS rf,
-       CAST(SUM(CAST(l_extendedprice AS DECIMAL(14,2))) AS DOUBLE)
-           AS gross,
-       gross * 0.1 AS fee,
-       gross - fee AS net
-FROM {l} GROUP BY l_returnflag
-"""
-
-
-def q217_lateral_column_alias(spark: SparkSession,
-                              sf_dir: str) -> DataFrame:
-    """Lateral column aliases (round 12 — the analyst-surface family
-    q212's GROUP BY ALL belongs to: a SELECT item references a PRIOR
-    alias in the SAME list, so derived-metric chains are written once
-    instead of re-pasting the aggregate expression): fee derives from
-    gross, net from both. Spark resolves the chain into stacked
-    Projects over ONE aggregate — the sum computes once, no
-    re-evaluation, no extra exchange (pinned in tests/test_plans.py)
-    — and the IDENTICAL body runs on DuckDB. Exactness: the DECIMAL
-    sum is order-independent; fee/net are single IEEE ops on the
-    exact double, bit-identical across engines."""
-    _read(spark, sf_dir, "lineitem").createOrReplaceTempView("q217_l")
-    return spark.sql(_Q217_BODY.format(l="q217_l"))
-
-
-_Q217_SQL = _Q217_BODY.format(l="lineitem")
-
-_Q218_BODY = """
-SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-       CAST(COUNT(l_orderkey) AS BIGINT) AS n_keys,
-       CAST(MIN(l_orderkey) AS BIGINT) AS key_lo,
-       CAST(MAX(l_orderkey) AS BIGINT) AS key_hi,
-       MIN(l_quantity) AS qty_lo,
-       MAX(l_quantity) AS qty_hi,
-       MIN(l_extendedprice) AS price_lo,
-       MAX(l_extendedprice) AS price_hi
-FROM {l}
-"""
-
-
-def q218_stats_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Table statistics panel — COUNT/MIN/MAX over the fact (round 12:
-    the shape Spark's V2 parquet AGGREGATE PUSHDOWN answers from row-
-    group FOOTERS without reading a single data page — at 100 TB the
-    difference between a metadata sweep and a full scan). The workload
-    entry runs on the default session (plain exact aggregate — the
-    q203/q214 discipline: `spark.sql.sources.useV1SourceList` is a
-    session-wide reader switch, so the knobs live in the plan pin);
-    tests/test_plans.py rebuilds it with the V2 reader +
-    `spark.sql.parquet.aggregatePushdown=true` and pins
-    `PushedAggregation: [COUNT(*), ...]` on the BatchScan, plus the
-    measured engine rule that MIN/MAX of TIMESTAMP_NTZ columns are NOT
-    pushable (parquet stats limitation) — keep stats panels numeric or
-    the whole pushdown silently degrades to a scan. sf1 timing in
-    SCALE.md."""
-    _read(spark, sf_dir, "lineitem").createOrReplaceTempView("q218_l")
-    return spark.sql(_Q218_BODY.format(l="q218_l"))
-
-
-_Q218_SQL = _Q218_BODY.format(l="lineitem")
-
-_Q219_BODY = """
-SELECT user_id, event_id,
-       CAST(rn AS BIGINT) AS rn,
-       CAST(cum AS DOUBLE) AS cum,
-       mx
-FROM (
-  SELECT user_id, event_id,
-         row_number() OVER w AS rn,
-         SUM(CAST(value AS DECIMAL(14,2))) OVER w AS cum,
-         MAX(value) OVER w AS mx
-  FROM {e}
-  WHERE user_id % 25 = 11
-  WINDOW w AS (PARTITION BY user_id
-               ORDER BY ts ASC NULLS FIRST, event_id)
-)
-"""
-
-
-def q219_collapsed_windows(spark: SparkSession,
-                           sf_dir: str) -> DataFrame:
-    """CollapseWindow pin (round 12 — the window-optimizer rule every
-    feature pipeline leans on: a SELECT computing several analytics
-    over the SAME window spec must evaluate them in ONE Window node
-    over one sort/exchange, never one pass per function): rank,
-    running DECIMAL sum, and running max share spec `w`. Pinned in
-    tests/test_plans.py: exactly 1 Window node, 1 exchange — three
-    windowed columns, one shuffle+sort, which at 100 TB is the
-    difference between one pass over the fact and three. Differing
-    FRAMES don't block the merge (row_number's ROWS frame vs the
-    aggregates' RANGE default live in the same node). The IDENTICAL
-    body runs on DuckDB (WINDOW clause + explicit NULLS FIRST — the
-    engines' order defaults differ); (ts, event_id) is unique per
-    key, so the running values are exact."""
-    _read(spark, sf_dir, "events").createOrReplaceTempView("q219_e")
-    return spark.sql(_Q219_BODY.format(e="q219_e"))
-
-
-_Q219_SQL = _Q219_BODY.format(e="events")
-
-_Q220_BODY = """
-SELECT o_custkey,
-       CAST(SUM(CAST(o_totalprice AS DECIMAL(14,2))) AS DOUBLE)
-           AS total
-FROM {o}
-GROUP BY o_custkey
-ORDER BY total DESC, o_custkey
-LIMIT 5 OFFSET 10
-"""
-
-
-def q220_paged_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SQL-native pagination (round 12 — the OFFSET surface, the
-    declarative twin of q09's nrows/offset API row): page 3 of the
-    top customers by spend. Spark plans ONE
-    TakeOrderedAndProject(limit=15, offset=10) — per-partition
-    top-15 HEAPS feed a driver merge that skips 10, so no partition
-    ever sorts more than limit+offset rows and nothing global sorts
-    (pinned in tests/test_plans.py: zero Sort nodes). The classic
-    100 TB warning is also why limit+offset is the plan's cost:
-    page N costs O(N·page) — deep pagination belongs on a keyset
-    predicate (WHERE total < last_seen), which is just q213's
-    rank-limit family. Full ORDER BY tiebreak (total, custkey) makes
-    the page exact; the IDENTICAL body runs on DuckDB."""
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q220_o")
-    return spark.sql(_Q220_BODY.format(o="q220_o"))
-
-
-_Q220_SQL = _Q220_BODY.format(o="orders")
-
-# q221: the SAME aggregate twice — classic form (the oracle, and the
-# plan-equality reference) and Spark 4.1 pipe syntax. The bodies must
-# stay semantically identical: the test pins optimizedPlan(pipe) ==
-# optimizedPlan(classic) up to expression ids.
-_Q221_CLASSIC_BODY = """
-SELECT l_returnflag AS rf, l_linestatus AS ls,
-       CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(SUM(CAST(l_extendedprice AS DECIMAL(14,2))) AS DOUBLE)
-           AS rev
-FROM {l}
-WHERE l_quantity < 25
-GROUP BY l_returnflag, l_linestatus
-"""
-
-_Q221_PIPE_BODY = """
-FROM {l}
-|> WHERE l_quantity < 25
-|> AGGREGATE CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(CAST(l_extendedprice AS DECIMAL(14,2)))
-                  AS DOUBLE) AS rev
-   GROUP BY l_returnflag AS rf, l_linestatus AS ls
-"""
-
-
-def q221_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SQL pipe syntax (round 13, VERDICT r12 #5 — Spark 4.1's `|>`
-    operator chain, the q212/q217 analyst-surface family): the
-    pricing-summary-class aggregate written as FROM |> WHERE |>
-    AGGREGATE … GROUP BY. The sugar must cost NOTHING: the test pins
-    the OPTIMIZED plan equal (up to expression ids) to the classic
-    SELECT/WHERE/GROUP BY form — same filter-before-scan pushdown,
-    same single partial+final aggregate, and pipe AGGREGATE emits
-    grouping keys first then aggregates, so the column order matches
-    the classic projection too. The oracle runs the classic body on
-    DuckDB (pipe syntax is Spark-side sugar; value parity proves the
-    two forms compute the same thing). DECIMAL sum → exact."""
-    _read(spark, sf_dir, "lineitem").createOrReplaceTempView("q221_l")
-    return spark.sql(_Q221_PIPE_BODY.format(l="q221_l"))
-
-
-_Q221_SQL = _Q221_CLASSIC_BODY.format(l="lineitem")
-
-# q222: keyset pagination — page 3 of q220's exact ordering fetched by
-# BOUNDARY PREDICATE instead of OFFSET. Production passes the boundary
-# as literals from the previous page's last row (the whole point: page
-# N+1 costs O(page), not O(N·page)); here the boundary derives
-# in-query from page 2's tail purely so the oracle is closed-form.
-_Q222_BODY = """
-WITH totals AS (
-  SELECT o_custkey,
-         CAST(SUM(CAST(o_totalprice AS DECIMAL(14,2))) AS DOUBLE)
-             AS total
-  FROM {o} GROUP BY o_custkey
-), boundary AS (
-  SELECT total AS b_total, o_custkey AS b_key
-  FROM (SELECT total, o_custkey FROM totals
-        ORDER BY total DESC, o_custkey LIMIT 10)
-  ORDER BY total ASC, o_custkey DESC LIMIT 1
-)
-SELECT o_custkey, total
-FROM totals, boundary
-WHERE total < b_total OR (total = b_total AND o_custkey > b_key)
-ORDER BY total DESC, o_custkey
-LIMIT 5
-"""
-
-
-def q222_keyset_pagination(spark: SparkSession,
-                           sf_dir: str) -> DataFrame:
-    """Keyset (seek-method) pagination (round 13, VERDICT r12 #6 —
-    the scale-correct sibling q220's own docstring names): page 3 of
-    the top customers by spend, fetched as
-    `WHERE (total, key) after-boundary ORDER BY … LIMIT 5` instead of
-    OFFSET 10. The ordering is (total DESC, key ASC), so
-    "after the boundary" is the explicit disjunction
-    `total < b_total OR (total = b_total AND key > b_key)` — a struct
-    compare can't mix sort directions. Plan (pinned in
-    tests/test_plans.py): the page is ONE
-    TakeOrderedAndProject(limit=5) over the filtered aggregate with
-    ZERO Sort nodes — the heap holds 5 rows wherever the page sits,
-    while the OFFSET form's heap is limit+offset (the pin contrasts a
-    deep OFFSET page planning an O(N·page) heap against this staying
-    at 5). The one-row boundary rides a broadcast nested loop — the
-    documented snapshot-literal broadcast class. Oracle: DuckDB
-    computes the SAME page via LIMIT 5 OFFSET 10 — value parity IS
-    the keyset ≡ offset proof. Full (total, key) tiebreak makes the
-    page exact."""
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q222_o")
-    return spark.sql(_Q222_BODY.format(o="q222_o"))
-
-
-_Q222_SQL = """
-WITH totals AS (
-  SELECT o_custkey,
-         CAST(SUM(CAST(o_totalprice AS DECIMAL(14,2))) AS DOUBLE)
-             AS total
-  FROM orders GROUP BY o_custkey
-)
-SELECT o_custkey, total FROM totals
-ORDER BY total DESC, o_custkey
-LIMIT 5 OFFSET 10
-"""
-
-# q223: the parameter-marker body (Spark runs it with args=...) and its
-# literal-substituted twin (the oracle, and the plan-equality reference)
-_Q223_PARAM_BODY = """
-SELECT o_orderpriority AS pri,
-       CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(SUM(CAST(o_totalprice AS DECIMAL(14,2))) AS DOUBLE)
-           AS total
-FROM {o}
-WHERE o_orderstatus = :status AND o_custkey % :buckets = :sel
-GROUP BY o_orderpriority
-"""
-_Q223_LITERAL_BODY = """
-SELECT o_orderpriority AS pri,
-       CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(SUM(CAST(o_totalprice AS DECIMAL(14,2))) AS DOUBLE)
-           AS total
-FROM {o}
-WHERE o_orderstatus = 'O' AND o_custkey % 4 = 1
-GROUP BY o_orderpriority
-"""
-_Q223_ARGS = {"status": "O", "buckets": 4, "sel": 1}
-
-
-def q223_parameterized_sql(spark: SparkSession,
-                           sf_dir: str) -> DataFrame:
-    """Parameterized SQL (round 13 — Spark 4's named parameter
-    markers, the injection-safe surface every SQL-serving layer
-    should use instead of string interpolation): the SAME body runs
-    with `spark.sql(body, args={...})`. Parameters bind as LITERALS
-    at analysis time, so the optimized plan is IDENTICAL to the
-    literal-substituted query — including constant-folding the
-    parameter into the parquet PushedFilters (pinned in
-    tests/test_plans.py: plan equality up to expression ids + the
-    pushed o_orderstatus filter). The oracle runs the literal twin
-    on DuckDB."""
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q223_o")
-    return spark.sql(_Q223_PARAM_BODY.format(o="q223_o"),
-                     args=dict(_Q223_ARGS))
-
-
-_Q223_SQL = _Q223_LITERAL_BODY.format(o="orders")
-
-_Q224_INNER = ("SELECT o_orderpriority AS pri, "
-               "CAST(COUNT(*) AS BIGINT) AS n, "
-               "CAST(SUM(CAST(o_totalprice AS DECIMAL(14,2))) "
-               "AS DOUBLE) AS total "
-               "FROM IDENTIFIER(:t) GROUP BY o_orderpriority")
-
-
-def q224_dynamic_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dynamic SQL, made safe (round 13 — the Spark 4 trio a
-    multi-tenant platform composes instead of f-string SQL: session
-    VARIABLEs hold state, EXECUTE IMMEDIATE runs a query held in a
-    string, IDENTIFIER() binds a parameter as a table NAME without
-    opening the injection hole): the table name travels through a
-    session variable into IDENTIFIER(:t). Resolution happens at
-    analysis time, so the optimized plan is IDENTICAL to naming the
-    table directly (pinned in tests/test_plans.py). The oracle is the
-    static form on DuckDB — value parity proves the indirection
-    changed nothing."""
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q224_o")
-    spark.sql("DECLARE OR REPLACE VARIABLE q224_tbl STRING")
-    spark.sql("SET VAR q224_tbl = 'q224_o'")
-    return spark.sql(
-        f"EXECUTE IMMEDIATE '{_Q224_INNER}' USING q224_tbl AS t")
-
-
-_Q224_SQL = """
-SELECT o_orderpriority AS pri,
-       CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(SUM(CAST(o_totalprice AS DECIMAL(14,2))) AS DOUBLE)
-           AS total
-FROM orders GROUP BY o_orderpriority
-"""
-
-_Q225_BODY = """
-SELECT o_orderstatus AS status, o_orderpriority AS pri,
-       CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(SUM(CAST(o_totalprice AS DECIMAL(14,2))) AS DOUBLE)
-           AS total
-FROM {o}
-GROUP BY ALL
-ORDER BY ALL
-LIMIT 7
-"""
-
-
-def q225_order_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ORDER BY ALL (round 13 — q212's GROUP BY ALL sibling, the
-    other half of the duo both engines share): order by every output
-    column left-to-right. The IDENTICAL body runs on DuckDB (both
-    engines define ALL as the full left-to-right column list;
-    ascending default matches — no NULLs here, where the engines'
-    NULL-order defaults would diverge). Sugar must cost nothing: the
-    optimized plan is IDENTICAL to the explicit ORDER BY (pinned),
-    and with the LIMIT it is ONE TakeOrderedAndProject — a
-    deterministic page because (status, pri) is unique after the
-    grouping."""
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q225_o")
-    return spark.sql(_Q225_BODY.format(o="q225_o"))
-
-
-_Q225_SQL = _Q225_BODY.format(o="orders")
-
-# Spark spells it * EXCEPT (...), DuckDB * EXCLUDE (...) — same
-# projection sugar; the oracle uses DuckDB's spelling.
-_Q226_EXCLUDED = ("l_partkey, l_suppkey, l_extendedprice, l_discount, "
-                  "l_tax, l_shipdate")
-_Q226_OUTER = """
-SELECT CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(MIN(l_orderkey) AS BIGINT) AS key_lo,
-       CAST(MAX(l_orderkey) AS BIGINT) AS key_hi,
-       CAST(MAX(l_linenumber) AS BIGINT) AS line_hi,
-       CAST(SUM(CAST(l_quantity AS DECIMAL(14,2))) AS DOUBLE) AS qty,
-       MIN(l_returnflag) AS rf_lo,
-       MAX(l_linestatus) AS ls_hi
-FROM kept
-"""
-
-
-def q226_star_except(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SELECT * EXCEPT (round 13 — the wide-table projection idiom:
-    'everything but the heavy columns', written without enumerating
-    the 200 survivors): the inner projection drops 6 of lineitem's 11
-    columns, the outer aggregate consumes EVERY survivor (so the
-    except-list, not the aggregate, is what bounds the scan). Pinned
-    in tests/test_plans.py: the parquet ReadSchema carries exactly
-    the 5 kept columns — the sugar prunes like an explicit
-    projection, which at 100 TB is the difference between reading 5
-    and 11 column chunks. Oracle: DuckDB's spelling of the same
-    sugar (* EXCLUDE)."""
-    _read(spark, sf_dir, "lineitem").createOrReplaceTempView("q226_l")
-    return spark.sql(
-        f"WITH kept AS (SELECT * EXCEPT ({_Q226_EXCLUDED}) "
-        f"FROM q226_l) {_Q226_OUTER}")
-
-
-_Q226_SQL = (f"WITH kept AS (SELECT * EXCLUDE ({_Q226_EXCLUDED}) "
-             f"FROM lineitem) {_Q226_OUTER}")
-
 # q227: deterministic DENORMALIZED suffixes — combining marks that NFC
 # precomposes (U+0301 acute, U+0302 circumflex + U+0303 tilde); doc_id
 # % 3 == 0 stays pure ASCII so the fast path and changed=false rows
@@ -9985,268 +7588,6 @@ SELECT doc_id,
 FROM dec
 """
 
-_Q228_MIXED = ("CASE WHEN doc_id % 2 = 0 THEN upper(lang) "
-               "ELSE lower(lang) END")
-
-
-def q228_collated_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Collation-aware grouping (round 13 — Spark 4's COLLATE, the
-    engine-native form of case-insensitive semantics that otherwise
-    hides in lower() calls scattered through a pipeline): languages
-    arrive in mixed case (deterministically upper/lower by doc
-    parity) and group under UTF8_LCASE as ONE key per language —
-    collation is a property of the string TYPE, so the comparison,
-    the grouping hash, and the equality filter are all
-    case-insensitive with zero expression rewriting (one ordinary
-    aggregate, no extra nodes — pinned in tests/test_plans.py along
-    with a collated-equality filter law). The group REPRESENTATIVE
-    under a case-insensitive collation is whichever spelling the
-    engine saw first — nondeterministic by design — so the output
-    key is lower()ed for the exact oracle, which replays the
-    semantics on DuckDB as grouping by lower()."""
-    _read(spark, sf_dir, "documents").createOrReplaceTempView("q228_d")
-    return spark.sql(f"""
-SELECT lower(k) AS lang_ci,
-       CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(SUM(n_chars) AS BIGINT) AS chars
-FROM (SELECT ({_Q228_MIXED}) COLLATE UTF8_LCASE AS k, n_chars
-      FROM q228_d)
-GROUP BY k
-""")
-
-
-_Q228_SQL = f"""
-SELECT lower({_Q228_MIXED}) AS lang_ci,
-       CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(SUM(n_chars) AS BIGINT) AS chars
-FROM documents
-GROUP BY lang_ci
-"""
-
-# percent_rank/cume_dist emit RAW doubles: each is ONE IEEE division
-# ((rank-1)/(n-1), rank'/n) on integer inputs — bit-identical across
-# engines (the q198 raw-doubles rule; ROUND(…,6) is the only
-# non-portable step on tie rationals, so it is omitted).
-_Q229_BODY = """
-SELECT o_orderkey,
-       percent_rank() OVER w AS pr,
-       cume_dist()    OVER w AS cd,
-       CAST(ntile(4)  OVER w AS BIGINT) AS quartile,
-       lag(o_orderkey)  OVER w AS prev_key,
-       lead(o_orderkey) OVER w AS next_key
-FROM {o}
-WHERE o_custkey % 25 = 9
-WINDOW w AS (ORDER BY o_totalprice, o_orderkey)
-"""
-
-
-def q229_analytic_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rank-analytic panel (round 13 — the remaining window-function
-    family the corpus hadn't oracle-pinned: percent_rank, cume_dist,
-    ntile, lag AND lead over ONE shared spec): five analytics, one
-    IDENTICAL body on both engines. CollapseWindow must fuse all five
-    into ONE Window node over one exchange+sort (pinned in
-    tests/test_plans.py — the rank family's growing frame, ntile's
-    whole-partition frame, and the offset functions coexist in one
-    node). (o_totalprice, o_orderkey) is a unique ordering, so every
-    rank — and hence every division — is deterministic; the divisions
-    are single IEEE ops on integer ranks, emitted raw (the q198
-    engine-portability rule). An UNPARTITIONED window is the honest
-    shape for percentiles-of-everything: one task sorts the filtered
-    slice — at 100 TB you either pre-filter (as here) or use q102's
-    broadcast percentile-boundary form."""
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q229_o")
-    return spark.sql(_Q229_BODY.format(o="q229_o"))
-
-
-_Q229_SQL = _Q229_BODY.format(o="orders")
-
-# Bitmap exact-distinct: a bitmap covers 32768 key positions per
-# bucket, so the construct MUST also group by bitmap_bucket_number —
-# grouping by the status alone silently UNDERCOUNTS (keys alias within
-# one bitmap across buckets; measured round 13: 147 vs 148 on sf0.001
-# custkeys). DuckDB has no bitmap aggregate family; the oracle is
-# plain COUNT(DISTINCT …), which is the semantic spec.
-_Q230_BODY = """
-SELECT st, CAST(SUM(nd) AS BIGINT) AS n_customers,
-       CAST(SUM(n) AS BIGINT) AS n_orders
-FROM (
-  SELECT o_orderstatus AS st,
-         bitmap_bucket_number(o_custkey) AS bkt,
-         bitmap_count(bitmap_construct_agg(
-             bitmap_bit_position(o_custkey))) AS nd,
-         COUNT(*) AS n
-  FROM {o}
-  GROUP BY st, bkt
-)
-GROUP BY st
-"""
-
-
-def q230_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT distinct counting via bitmap aggregates (round 13 —
-    Spark 3.5+'s bitmap family, the engine-native way to carry
-    exact-distinct state as fixed-size bytes instead of per-key rows:
-    each (group, bucket) partial is a ≤4 KB bitmap, map-side
-    combinable, so the shuffle for a billion-key distinct carries
-    O(groups × buckets) bitmaps where COUNT(DISTINCT) shuffles every
-    key once): distinct customers per order status, two stacked
-    map-combinable aggregates, NO distinct expansion. The measured
-    sharp edge is in the comment above _Q230_BODY: omit the
-    bucket-number grouping and the count silently aliases. Oracle:
-    COUNT(DISTINCT) on DuckDB — the equivalence IS the correctness
-    claim."""
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q230_o")
-    return spark.sql(_Q230_BODY.format(o="q230_o"))
-
-
-_Q230_SQL = """
-SELECT o_orderstatus AS st,
-       CAST(COUNT(DISTINCT o_custkey) AS BIGINT) AS n_customers,
-       CAST(COUNT(*) AS BIGINT) AS n_orders
-FROM orders
-GROUP BY st
-"""
-
-_Q231_BODY = """
-WITH buyers AS (
-  SELECT o_custkey AS k FROM {o} WHERE o_orderstatus = 'O'
-  INTERSECT
-  SELECT o_custkey FROM {o} WHERE o_orderstatus = 'F'
-  INTERSECT
-  SELECT o_custkey FROM {o} WHERE o_orderpriority LIKE '1-%'
-)
-SELECT metric, v FROM (
-  SELECT 'n_buyers' AS metric, CAST(COUNT(*) AS DOUBLE) AS v
-  FROM buyers
-  UNION ALL
-  SELECT 'spend' AS metric,
-         CAST(SUM(CAST(o_totalprice AS DECIMAL(14,2))) AS DOUBLE) AS v
-  FROM {o} JOIN buyers ON o_custkey = buyers.k
-)
-"""
-
-
-def q231_cross_channel_buyers(spark: SparkSession,
-                              sf_dir: str) -> DataFrame:
-    """TPC-DS Q14-class cross-channel INTERSECT with CTE reuse (round
-    13 — the one set-op shape the corpus hadn't pinned: a THREE-way
-    INTERSECT building a qualifying-key set that TWO downstream
-    consumers read): customers present in all three order slices,
-    counted once and joined back against the fact for their spend.
-    Spark plans each INTERSECT as a distinct-aggregate + LeftSemi
-    join, and the second consumer reads the buyers subtree through
-    ReusedExchange instead of recomputing the three-scan INTERSECT
-    tree (exactly 2 reuses pinned in tests/test_plans.py — the q202
-    discipline; the reuse materializes at AQE time, so the pin
-    collects first — the q206 rule measured again here). The IDENTICAL body runs on DuckDB (INTERSECT is
-    distinct-set semantics in both engines); DECIMAL spend → exact."""
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q231_o")
-    return spark.sql(_Q231_BODY.format(o="q231_o"))
-
-
-_Q231_SQL = _Q231_BODY.format(o="orders")
-
-_Q232_BODY = """
-WITH yearly AS (
-  SELECT o_custkey, CAST(year(o_orderdate) AS BIGINT) AS yr,
-         CAST(SUM(CAST(o_totalprice AS DECIMAL(14,2)))
-              AS DECIMAL(18,2)) AS spend
-  FROM {o}
-  GROUP BY o_custkey, year(o_orderdate)
-)
-SELECT o_custkey, yr,
-       CAST(spend AS DOUBLE) AS spend,
-       CAST(prev AS DOUBLE) AS prev_spend,
-       CAST(spend AS DOUBLE) / CAST(prev AS DOUBLE) AS growth
-FROM (
-  SELECT o_custkey, yr, spend,
-         lag(spend) OVER (PARTITION BY o_custkey ORDER BY yr) AS prev,
-         lag(yr)    OVER (PARTITION BY o_custkey ORDER BY yr)
-             AS prev_yr
-  FROM yearly
-)
-WHERE prev IS NOT NULL AND yr = prev_yr + 1 AND spend > prev
-"""
-
-# the naive TPC-DS Q11-style formulation of the SAME question — the
-# aggregate self-joined on (custkey, yr = yr+1); the plan-pin test
-# runs it for the contrast, equality with _Q232_BODY is asserted
-_Q232_SELF_JOIN = """
-WITH yearly AS (
-  SELECT o_custkey, CAST(year(o_orderdate) AS BIGINT) AS yr,
-         CAST(SUM(CAST(o_totalprice AS DECIMAL(14,2)))
-              AS DECIMAL(18,2)) AS spend
-  FROM {o}
-  GROUP BY o_custkey, year(o_orderdate)
-)
-SELECT cur.o_custkey, cur.yr,
-       CAST(cur.spend AS DOUBLE) AS spend,
-       CAST(prev.spend AS DOUBLE) AS prev_spend,
-       CAST(cur.spend AS DOUBLE) / CAST(prev.spend AS DOUBLE)
-           AS growth
-FROM yearly cur JOIN yearly prev
-  ON cur.o_custkey = prev.o_custkey AND cur.yr = prev.yr + 1
-WHERE cur.spend > prev.spend
-"""
-
-
-def q232_yoy_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Year-over-year growth (round 13 — the TPC-DS Q11/Q4 class,
-    written the RIGHT way: consecutive-period comparison is a
-    lag() window over the per-(customer, year) aggregate — ONE scan,
-    one aggregate, one window — where the classic formulation
-    self-joins the aggregate on yr = yr+1 and pays a join exchange
-    plus a second aggregate build (or an AQE reuse at best). Both
-    forms are computed and pinned EQUAL in tests/test_plans.py,
-    with the plan contrast (lag: zero joins; self-join: one) — the
-    optimization is a rewrite, not a different question. The growth
-    ratio is ONE IEEE division of exact decimal sums (raw doubles,
-    the q198 portability rule). Subtlety the rewrite must handle:
-    lag returns the previous EXISTING year — when a customer skips a
-    year that is yr-2, which the self-join's `yr = prev.yr + 1`
-    would exclude — so the lag form carries `lag(yr)` too and
-    filters `yr = prev_yr + 1`, aligning both forms on strictly
-    consecutive years (real on this data: customers do skip
-    years)."""
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q232_o")
-    return spark.sql(_Q232_BODY.format(o="q232_o"))
-
-
-_Q232_SQL = _Q232_BODY.format(o="orders")
-
-_Q233_BODY = """
-SELECT o_orderstatus AS st,
-       CAST(COUNT(DISTINCT o_custkey) AS BIGINT) AS exact_nd,
-       {est} AS within_5pct
-FROM {o}
-GROUP BY o_orderstatus
-"""
-
-
-def q233_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate distinct via Datasketches HLL (round 13 — the
-    approx-distinct surface q230's exact bitmaps complement: at 100 TB
-    an HLL sketch is ~KBs per group at ANY cardinality, where bitmaps
-    grow with the key range; the price is bounded error): per order
-    status, the exact distinct count anchors the values and the query
-    asserts the ENGINE-side law `|hll_estimate − exact| ≤ 5%·exact`
-    as a boolean column — the oracle emits literal TRUE, so an HLL
-    drift past the bound breaks the hash (exact-oracle discipline for
-    an approximate operator). The estimate itself is DETERMINISTIC
-    and partition-order-invariant (sketch merge is commutative —
-    verified under repartition(13)); it is kept out of the output
-    because its exact value is an implementation detail of the
-    Datasketches build, not a portable semantic."""
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q233_o")
-    est = ("abs(hll_sketch_estimate(hll_sketch_agg(o_custkey)) - "
-           "COUNT(DISTINCT o_custkey)) <= "
-           "0.05 * COUNT(DISTINCT o_custkey)")
-    return spark.sql(_Q233_BODY.format(o="q233_o", est=est))
-
-
-_Q233_SQL = _Q233_BODY.format(o="orders", est="TRUE")
-
 # q234: inputs constructed IDENTICALLY in both engines — ASCII base +
 # a deterministic accent suffix that is PRECOMPOSED for some docs and
 # COMBINING-MARK for others (both spellings must strip to the same
@@ -10292,1116 +7633,6 @@ SELECT doc_id,
        strip_accents(raw) != raw AS changed,
        md5(strip_accents(raw)) AS h
 FROM dec
-"""
-
-# q235: the table-function body and its direct twin share this SELECT
-_Q235_DIRECT_BODY = """
-SELECT o_orderpriority AS pri,
-       CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(SUM(CAST(o_totalprice AS DECIMAL(14,2))) AS DOUBLE)
-           AS total
-FROM {o}
-WHERE o_orderstatus = '{st}'
-GROUP BY o_orderpriority
-"""
-
-
-def q235_sql_table_function(spark: SparkSession,
-                            sf_dir: str) -> DataFrame:
-    """SQL table function (round 13 — `CREATE TEMPORARY FUNCTION …
-    RETURNS TABLE … RETURN SELECT`, the q211 scalar-UDF sibling: the
-    reusable-view-with-parameters surface a platform publishes so
-    consumers never copy aggregate bodies): a parameterized
-    priority-summary function over orders, invoked as
-    `SELECT * FROM f('O')`. Like q211's scalar form, the body must
-    INLINE at analysis time: the test pins the OPTIMIZED plan of the
-    invocation IDENTICAL (up to expression ids) to the direct
-    WHERE/GROUP BY query — the function is an analysis-time macro,
-    not a runtime layer, so the parameter constant-folds into the
-    parquet PushedFilters exactly like q223's markers. Oracle: the
-    direct twin on DuckDB. DECIMAL sum → exact."""
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q235_o")
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION q235_pri_summary"
-        "(st STRING) RETURNS TABLE (pri STRING, n BIGINT, "
-        "total DOUBLE) RETURN "
-        "SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT), "
-        "CAST(SUM(CAST(o_totalprice AS DECIMAL(14,2))) AS DOUBLE) "
-        "FROM q235_o WHERE o_orderstatus = st "
-        "GROUP BY o_orderpriority")
-    return spark.sql("SELECT * FROM q235_pri_summary('O')")
-
-
-_Q235_SQL = _Q235_DIRECT_BODY.format(o="orders", st="O")
-
-# q236: the scripted form SETs the cutoff from a scalar subquery, then
-# runs the final SELECT with the variable; the oracle inlines the same
-# cutoff as a CTE. The cutoff is ONE IEEE division of an exact DECIMAL
-# sum by an exact count (raw doubles — the q198 portability rule), so
-# the variable's value is bit-identical across engines.
-_Q236_FINAL_BODY = """
-SELECT o_orderpriority AS pri,
-       CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(SUM(CAST(o_totalprice AS DECIMAL(14,2))) AS DOUBLE)
-           AS total
-FROM {o}
-WHERE CAST(o_totalprice AS DOUBLE) > {cutoff}
-GROUP BY o_orderpriority
-"""
-_Q236_CUTOFF = ("CAST(SUM(CAST(o_totalprice AS DECIMAL(14,2))) "
-                "AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)")
-
-
-def q236_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SQL scripting (round 13 — Spark 4's BEGIN…END compound
-    statements: DECLARE a session-local variable, SET it from a
-    scalar subquery, use it in the final statement — the procedural
-    control-flow surface an orchestration layer uses instead of
-    driver-side glue code): the script computes the mean order value
-    into a variable, then aggregates the above-mean orders per
-    priority; the script's RESULT is its last statement's DataFrame.
-    The honest division of labor is pinned: the LOOP-free script
-    body stays declarative (each statement is one Catalyst plan —
-    scripting sequences plans, it never iterates rows), and the
-    final statement's plan is IDENTICAL to the same query with the
-    variable's value as a literal (tests/test_plans.py). Oracle:
-    DuckDB computes the identical cutoff in a CTE — the variable is
-    one exact-sum IEEE division, bit-identical across engines."""
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q236_o")
-    body = _Q236_FINAL_BODY.format(o="q236_o", cutoff="cutoff")
-    return spark.sql(f"""
-    BEGIN
-      DECLARE cutoff DOUBLE DEFAULT 0.0;
-      SET cutoff = (SELECT {_Q236_CUTOFF} FROM q236_o);
-      {body};
-    END""")
-
-
-_Q236_SQL = f"""
-WITH c AS (SELECT {_Q236_CUTOFF} AS cutoff FROM orders)
-SELECT o_orderpriority AS pri,
-       CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(SUM(CAST(o_totalprice AS DECIMAL(14,2))) AS DOUBLE)
-           AS total
-FROM orders, c
-WHERE CAST(o_totalprice AS DOUBLE) > c.cutoff
-GROUP BY o_orderpriority
-"""
-
-# q237: ancestor walk up the implicit binary-tree numbering of
-# customer keys (parent = key DIV 2, dense TPC-H keys → every parent
-# exists until the root). DIV is Spark's integer division; DuckDB
-# spells the same floor-division `//` (both exact on positive
-# BIGINTs). The walk still requires the JOIN (the frontier must prove
-# the parent row exists), so each iteration is one equi-join of the
-# shrinking frontier against the table.
-_Q237_BODY = """
-WITH RECURSIVE up(start_key, cur, depth) AS (
-  SELECT c_custkey, c_custkey, 0
-  FROM {c} WHERE c_custkey % 97 = 1
-  UNION ALL
-  SELECT u.start_key, p.c_custkey, u.depth + 1
-  FROM up u JOIN {c} p ON p.c_custkey = u.cur {div} 2
-  WHERE u.cur > 1
-)
-SELECT depth,
-       CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(SUM(start_key) AS BIGINT) AS key_sum,
-       CAST(MIN(cur) AS BIGINT) AS min_cur
-FROM up
-GROUP BY depth
-"""
-
-
-def q237_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Native WITH RECURSIVE (round 13 — Spark 4.1 executes recursive
-    CTEs in-engine; every earlier round ran recursion only as the
-    DuckDB oracle for iterative operators like q186's components): an
-    ancestor walk up the implicit binary-tree numbering of customer
-    keys (parent = key DIV 2), one frontier-vs-table equi-join per
-    level until every chain reaches the root. The plan pins the
-    UnionLoop/UnionLoopRef nodes and zero Python — the ENGINE owns
-    the fixpoint loop (contrast q186's driver-side convergence loop);
-    depth is log2(max key) ≈ 14-17 here, far under the recursion
-    limit. Deliberately a DIMENSION-table walk — the 100 TB rule this
-    query encodes: recursion re-scans its build side once PER LEVEL,
-    so hierarchy walks (org charts, category trees) belong on
-    dimension-sized tables; the same walk pointed at the orders fact
-    table measured 4.3 s at sf0.1 → 31 s at sf1 (depth × full-scan
-    per level), while q186's batched pointer-jumping remains the
-    corpus's fact-scale transitive-closure path (O(log diameter)
-    SHUFFLES, not O(depth) rescans). Oracle: DuckDB runs the same
-    recursion with its `//` floor division. All-integer → exact."""
-    _read(spark, sf_dir, "customer").createOrReplaceTempView("q237_c")
-    return spark.sql(_Q237_BODY.format(c="q237_c", div="DIV"))
-
-
-_Q237_SQL = _Q237_BODY.format(c="customer", div="//")
-
-# q238: partial HLL sketches per key-disjoint group, unioned to the
-# global estimate — the distributed-mergeability law every 100 TB
-# sketch rollup stands on (partials materialize per partition/day and
-# union later; the law says the rollup loses NOTHING vs re-sketching).
-_Q238_BODY = """
-WITH parts AS (
-  SELECT {g} AS g, hll_sketch_agg(o_custkey) AS s
-  FROM {o} GROUP BY {g}
-),
-merged AS (
-  SELECT hll_sketch_estimate(hll_union_agg(s)) AS est_u FROM parts
-),
-glob AS (
-  SELECT hll_sketch_estimate(hll_sketch_agg(o_custkey)) AS est_g,
-         COUNT(DISTINCT o_custkey) AS exact_nd
-  FROM {o}
-)
-SELECT CAST(exact_nd AS BIGINT) AS exact_nd,
-       {law_merge} AS union_agrees,
-       {law_err} AS within_5pct
-FROM merged, glob
-"""
-
-
-def q238_hll_union_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HLL sketch MERGEABILITY (round 13 — q233's scale story made
-    explicit: sketch per key-disjoint group, union the partials,
-    compare against sketching the whole column in one pass): 8
-    `hll_sketch_agg` partials over pmod(custkey, 8) groups feed ONE
-    `hll_union_agg`, and the query asserts the two operational laws
-    engine-side as booleans the oracle fixes to TRUE — (a) the union
-    estimate agrees with the direct global estimate within 4%, and
-    (b) the q233 ≤5% error law against the exact distinct count.
-    MEASURED finding behind the band (NOT exact equality): the
-    register STATE merge is lossless (max is associative), but
-    Datasketches' union ESTIMATOR forgoes the direct sketch's HIP
-    estimator, and the union estimate even varies with merge order
-    (1489 vs 1490 at sf0.01 across 8 vs 16 shuffle partitions;
-    15149 vs direct 15120 at sf0.1 — observed gap ≤0.27%, band 4% ≈
-    2.5× the lgK=12 standard error) — so a 100 TB per-day sketch
-    rollup must pin BANDS, never bit-equality, on unioned sketches.
-    Estimates stay out of the output (q233's implementation-detail
-    rule); the exact count anchors the values."""
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q238_o")
-    return spark.sql(_Q238_BODY.format(
-        o="q238_o", g="pmod(o_custkey, 8)",
-        law_merge="abs(est_u - est_g) <= 0.04 * est_g",
-        law_err="abs(est_u - exact_nd) <= 0.05 * exact_nd"))
-
-
-_Q238_SQL = """
-SELECT CAST(COUNT(DISTINCT o_custkey) AS BIGINT) AS exact_nd,
-       TRUE AS union_agrees,
-       TRUE AS within_5pct
-FROM orders
-"""
-
-# q239: the three try_* arms and their engineered failure populations;
-# aggregate FILTER clauses count each failure class per status. The
-# divide arm value-matches because BOTH engines yield NULL on a zero
-# divisor: under Spark 4's ANSI default, PLAIN division raises
-# DIVIDE_BY_ZERO (even for doubles — pre-ANSI Spark gave Infinity),
-# try_divide converts that error to NULL, and DuckDB's native `/`
-# NULLs — so try_* IS the portability bridge (pinned in
-# tests/test_plans.py). MIN/MAX of the surviving IEEE quotients are
-# exact selections (no float accumulation); cast/overflow arms are
-# integer-exact.
-_Q239_BODY = """
-SELECT o_orderstatus AS st,
-       CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(COUNT(*) FILTER (WHERE d IS NULL) AS BIGINT) AS n_div0,
-       CAST(COUNT(*) FILTER (WHERE i IS NULL) AS BIGINT) AS n_badcast,
-       CAST(COUNT(*) FILTER (WHERE a IS NULL) AS BIGINT) AS n_overflow,
-       MIN(d) AS min_ratio,
-       MAX(d) AS max_ratio,
-       CAST(SUM(i) AS BIGINT) AS i_sum
-FROM (
-  SELECT o_orderstatus,
-         {div} AS d,
-         {cast} AS i,
-         {add} AS a
-  FROM {o}
-)
-GROUP BY o_orderstatus
-"""
-_Q239_CAST_INNER = ("CASE WHEN o_orderkey % 7 = 0 "
-                    "THEN concat('#', o_orderpriority) "
-                    "ELSE CAST(o_orderkey AS STRING) END")
-_Q239_ADD_INNER = ("CASE WHEN o_orderkey % 3 = 0 THEN CAST(0 AS BIGINT) "
-                   "ELSE CAST(1 AS BIGINT) END")
-
-
-def q239_try_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Error-safe arithmetic + aggregate FILTER (round 13 — the
-    `try_*` family is how an ANSI-mode pipeline survives dirty data
-    without abandoning strictness: the expression NULLs instead of
-    failing the 1000-executor job): three engineered failure
-    populations over orders — division by zero (custkey%5 hits 0),
-    unparseable casts (every 7th key gets a '#'-prefixed string),
-    BIGINT overflow (max_int64 + 1 except every 3rd key) — counted
-    per status with aggregate FILTER clauses, plus MIN/MAX of the
-    surviving quotients and the exact sum of the surviving casts.
-    Oracle: DuckDB's native semantics agree arm by arm — its `/`
-    NULLs on a zero divisor, which is exactly what try_divide
-    produces by converting ANSI's DIVIDE_BY_ZERO error (plain Spark
-    division RAISES under the ANSI default, even for doubles —
-    pinned in tests/test_plans.py), TRY_CAST is the same function,
-    and the overflow arm is spelled as its closed form. All outputs
-    exact (counts, integer sums, IEEE-exact MIN/MAX selections)."""
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q239_o")
-    return spark.sql(_Q239_BODY.format(
-        o="q239_o",
-        div=("try_divide(CAST(o_totalprice AS DOUBLE), "
-             "CAST(o_custkey % 5 AS DOUBLE))"),
-        cast=f"try_cast({_Q239_CAST_INNER} AS INT)",
-        add=f"try_add(9223372036854775807, {_Q239_ADD_INNER})"))
-
-
-_Q239_SQL = _Q239_BODY.format(
-    o="orders",
-    div=("CAST(o_totalprice AS DOUBLE) / "
-         "CAST(o_custkey % 5 AS DOUBLE)"),
-    cast=f"TRY_CAST({_Q239_CAST_INNER} AS INT)",
-    add=(f"CASE WHEN o_orderkey % 3 = 0 THEN 9223372036854775807 "
-         f"ELSE NULL END"))
-
-# q240: the strategy-hinted join. SHUFFLE_HASH is the one join
-# strategy no other query plans (broadcast and sort-merge are
-# everywhere); the hint must OVERRIDE the size-based choice — at
-# these SFs customer is broadcastable and the optimizer would pick
-# BroadcastHashJoin on its own (pinned, with the MERGE and BROADCAST
-# triplet, in tests/test_plans.py).
-_Q240_BODY = """
-SELECT {hint} c.c_mktsegment AS seg,
-       CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(SUM(CAST(o.o_totalprice AS DECIMAL(14,2))) AS DOUBLE)
-           AS total
-FROM {o} o JOIN {c} c ON o.o_custkey = c.c_custkey
-GROUP BY c.c_mktsegment
-"""
-
-
-def q240_join_strategy_hint(spark: SparkSession,
-                            sf_dir: str) -> DataFrame:
-    """Join strategy hints (round 13 — the escape hatch when the
-    planner's size estimates are wrong at 100 TB: a build side whose
-    compressed parquet footprint lies under the broadcast threshold
-    but explodes decoded, or a dimension the operator KNOWS fits
-    memory): the segment-revenue join runs under /*+ SHUFFLE_HASH(c) */
-    — the one strategy no unhinted query in the corpus plans, because
-    size-based selection always prefers broadcast for these dims. The
-    test pins the full triplet (BROADCAST→BroadcastHashJoin,
-    MERGE→SortMergeJoin, SHUFFLE_HASH→ShuffledHashJoin), that each
-    hint OVERRIDES the default choice, and that all three strategies
-    return identical rows — strategy changes cost, never semantics.
-    At scale the hash build is O(build partition) memory with no sort
-    on either side; vs SMJ it trades the two sorts for a per-partition
-    hash table. Oracle: the unhinted join on DuckDB."""
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q240_o")
-    _read(spark, sf_dir, "customer").createOrReplaceTempView("q240_c")
-    return spark.sql(_Q240_BODY.format(
-        hint="/*+ SHUFFLE_HASH(c) */", o="q240_o", c="q240_c"))
-
-
-_Q240_SQL = _Q240_BODY.format(hint="", o="orders", c="customer")
-
-# q241: the approx-percentile error law. Exact percentile values are
-# the anchors (Spark `percentile` and DuckDB `quantile_cont`
-# interpolate identically on doubles — the q102 precedent); the
-# approx arm rides as booleans the oracle fixes to TRUE.
-_Q241_BODY = """
-WITH ap AS (
-  SELECT o_orderstatus AS st,
-         approx_percentile(CAST(o_totalprice AS DOUBLE),
-                           array(0.5D, 0.9D), 10000) AS ap
-  FROM {o} GROUP BY o_orderstatus
-),
-ex AS (
-  SELECT o_orderstatus AS st,
-         percentile(CAST(o_totalprice AS DOUBLE),
-                    array(0.5D, 0.9D)) AS ex
-  FROM {o} GROUP BY o_orderstatus
-)
-SELECT ap.st AS st,
-       CAST(ex.ex[0] AS DOUBLE) AS p50_exact,
-       CAST(ex.ex[1] AS DOUBLE) AS p90_exact,
-       abs(ap.ap[0] - ex.ex[0]) <= 0.01 * ex.ex[0] AS p50_close,
-       abs(ap.ap[1] - ex.ex[1]) <= 0.01 * ex.ex[1] AS p90_close
-FROM ap JOIN ex ON ap.st = ex.st
-"""
-
-
-def q241_approx_percentile_law(spark: SparkSession,
-                               sf_dir: str) -> DataFrame:
-    """Approx-percentile error law (round 13 — the missing pin behind
-    the corpus's own scale rule: CLAUDE.md's gotcha says exact
-    `percentile` buffers EVERY distinct value into one final merge,
-    so planning boundaries at 100 TB must use `approx_percentile`;
-    this query pins that the approximation is actually usable): per
-    order status, exact p50/p90 anchor the values (Spark `percentile`
-    ≡ DuckDB `quantile_cont` on doubles — the verified q102
-    interpolation identity), and the approx arm (accuracy=10000, the
-    sampling operator's setting) asserts |approx − exact| ≤ 1%·exact
-    engine-side as booleans the oracle fixes to TRUE. The GK-sketch
-    guarantee is on RANK (n/accuracy), so the VALUE band holds on any
-    distribution without pathological density plateaus — totalprice
-    here is smooth; the 1% band is ~40× the observed error. Sketch
-    merges are partition-count-insensitive within the band (the q238
-    band discipline)."""
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q241_o")
-    return spark.sql(_Q241_BODY.format(o="q241_o"))
-
-
-_Q241_SQL = """
-SELECT o_orderstatus AS st,
-       quantile_cont(CAST(o_totalprice AS DOUBLE), 0.5) AS p50_exact,
-       quantile_cont(CAST(o_totalprice AS DOUBLE), 0.9) AS p90_exact,
-       TRUE AS p50_close,
-       TRUE AS p90_close
-FROM orders GROUP BY o_orderstatus
-"""
-
-# q242: the SQL higher-order-function surface over per-key arrays.
-# All arithmetic runs in BIGINT cents (decimal→cents is exact), so
-# folds are order-exact; the sorted array makes element_at and the
-# index-weighted sum deterministic (equal values commute under tied
-# weights). Lambdas reference ONLY their own arguments — the
-# interpreted-HOF re-evaluation gotcha never fires.
-_Q242_BODY = """
-WITH arr AS (
-  SELECT o_custkey,
-         array_sort(collect_list(
-             CAST(o_totalprice AS DECIMAL(14,2)))) AS a
-  FROM {o} GROUP BY o_custkey
-), cents AS (
-  SELECT o_custkey, a,
-         transform(a, x -> CAST(x * 100 AS BIGINT)) AS c
-  FROM arr
-)
-SELECT o_custkey,
-       CAST(size(a) AS BIGINT) AS n,
-       CAST(element_at(a, 1) AS DOUBLE) AS lo,
-       CAST(element_at(a, -1) AS DOUBLE) AS hi,
-       aggregate(filter(c, x -> x > 10000000),
-                 CAST(0 AS BIGINT), (acc, x) -> acc + x)
-           AS big_cents,
-       aggregate(transform(c, (x, i) -> x * CAST(i + 1 AS BIGINT)),
-                 CAST(0 AS BIGINT), (acc, x) -> acc + x)
-           AS wsum_cents,
-       aggregate(zip_with(c, reverse(c), (x, y) -> x + y),
-                 CAST(0 AS BIGINT), (acc, x) -> acc + x)
-           AS pal_cents
-FROM cents
-"""
-
-
-def q242_array_hof_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SQL higher-order-function surface (round 13 — the corpus
-    USES HOFs inside operators everywhere, but no query pinned the
-    user-facing SQL forms end-to-end against an independent engine):
-    per-customer sorted order-value arrays exercised through
-    collect_list → array_sort → element_at(±1) → transform (with the
-    INDEX lambda parameter) → filter → zip_with(reverse) → aggregate
-    folds. Everything folds in BIGINT cents, so every output is
-    exact; the index-weighted sum is deterministic on ties (equal
-    values commute under tied weights). DuckDB replays via its list_*
-    family — list_sort/list_filter/list_transform's own (x, i)
-    1-based index lambda — and the zip_with-with-reverse arm by its
-    closed form 2·sum (the value, not the mechanics, is the
-    contract). Per the interpreted-HOF gotcha the lambdas reference
-    only their own arguments; per-element work is one add/multiply,
-    the shape where interpreted evaluation is fine at any scale."""
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q242_o")
-    return spark.sql(_Q242_BODY.format(o="q242_o"))
-
-
-_Q242_SQL = """
-WITH arr AS (
-  SELECT o_custkey,
-         list_sort(list(CAST(o_totalprice AS DECIMAL(14,2)))) AS a
-  FROM orders GROUP BY o_custkey
-), cents AS (
-  SELECT o_custkey, a,
-         list_transform(a, x -> CAST(x * 100 AS BIGINT)) AS c
-  FROM arr
-)
-SELECT o_custkey,
-       CAST(len(a) AS BIGINT) AS n,
-       CAST(a[1] AS DOUBLE) AS lo,
-       CAST(a[-1] AS DOUBLE) AS hi,
-       CAST(coalesce(list_sum(list_filter(c, x -> x > 10000000)), 0)
-            AS BIGINT) AS big_cents,
-       CAST(list_sum(list_transform(c, (x, i) -> x * i))
-            AS BIGINT) AS wsum_cents,
-       CAST(2 * list_sum(c) AS BIGINT) AS pal_cents
-FROM cents
-"""
-
-# q243: the date-spine densification — a calendar spine from the data's
-# own bounds, crossed with the dimension, left-joined to the monthly
-# counts, zero-filled. Months ride as year*100+month ints (portable).
-_Q243_BODY = """
-WITH bounds AS (
-  SELECT CAST(date_trunc('month', MIN(o_orderdate)) AS DATE) AS lo,
-         CAST(date_trunc('month', MAX(o_orderdate)) AS DATE) AS hi
-  FROM {o}
-), spine AS (
-  {spine_select}
-), sts AS (
-  SELECT DISTINCT o_orderstatus AS st FROM {o}
-), counts AS (
-  SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS m,
-         o_orderstatus AS st,
-         COUNT(*) AS n
-  FROM {o} GROUP BY 1, 2
-)
-SELECT CAST(year(spine.m) * 100 + month(spine.m) AS BIGINT) AS ym,
-       sts.st AS st,
-       CAST(coalesce(counts.n, 0) AS BIGINT) AS n,
-       counts.n IS NULL AS filled
-FROM spine CROSS JOIN sts
-LEFT JOIN counts ON counts.m = spine.m AND counts.st = sts.st
-"""
-_Q243_SPARK_SPINE = ("SELECT explode(sequence(lo, hi, INTERVAL 1 MONTH))"
-                     " AS m FROM bounds")
-_Q243_DUCK_SPINE = (
-    "SELECT CAST(unnest(generate_series(CAST(lo AS TIMESTAMP), "
-    "CAST(hi AS TIMESTAMP), INTERVAL 1 MONTH)) AS DATE) AS m "
-    "FROM bounds")
-
-
-def q243_date_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Date-spine densification (round 13 — the reporting pattern
-    every BI layer builds on top of a warehouse: a complete calendar
-    spine × dimension grid with ZERO-FILLED gaps, so a month with no
-    orders still charts as 0 instead of vanishing): the spine
-    generates from the data's own month bounds via
-    `explode(sequence(lo, hi, INTERVAL 1 MONTH))` — one row of
-    bounds, so the spine and the 3-row status grid ride the
-    documented one-row broadcast class, and the only real exchange
-    is the monthly count aggregate; the left join back marks which
-    grid cells were filled. This is the BATCH face of
-    events.gap_fill's bucket densification (that operator owns the
-    per-key streaming form). Oracle: DuckDB builds the same spine
-    with `unnest(generate_series(...))` — the scalar-list form per
-    the documented lateral rule. Counts and year*100+month ints →
-    exact."""
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q243_o")
-    return spark.sql(_Q243_BODY.format(
-        o="q243_o", spine_select=_Q243_SPARK_SPINE))
-
-
-_Q243_SQL = _Q243_BODY.format(o="orders",
-                              spine_select=_Q243_DUCK_SPINE)
-
-# q244: the regexp extraction surface. Patterns stay in the Java∩RE2
-# portable subset (no backrefs/lookaround; ASCII classes); the
-# decorated column guarantees BOTH arms deterministically — every
-# doc_id % 5 == 0 row is a digit-free literal (the no-match arm),
-# every other row gains digit runs. first_pos replays in DuckDB as
-# strpos(s, first_match): for '[0-9]+' the leftmost match starts at
-# the first digit, and any occurrence of the matched string starts
-# with a digit, so first-occurrence == match position.
-_Q244_DECORATE = (
-    "CASE WHEN doc_id % 5 = 0 THEN 'no digits here' "
-    "ELSE concat(text, ' id', CAST(doc_id % 100 AS STRING), "
-    "' code ', CAST((doc_id * 7) % 1000 AS STRING), '-', "
-    "CAST(doc_id % 97 AS STRING)) END")
-
-
-def q244_regexp_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Regexp extraction panel (round 13 — q55 pinned regexp_replace;
-    this pins the EXTRACTION family a text pipeline tags with:
-    regexp_extract_all flattened to a joined string — never an array
-    output column, per the comparator rule — regexp_count,
-    regexp_substr's first match, and the first-match position): over
-    deterministically decorated documents where every 5th row is a
-    digit-free literal (the no-match arm: empty join-string, count 0,
-    NULL first match, position 0 — all pinned by the oracle) and the
-    rest carry injected digit runs. DuckDB replays extraction via its
-    RE2 regexp_extract_all (the patterns sit in the Java∩RE2
-    portable subset) and the position via strpos of the first match
-    (== match position for '[0-9]+', where the leftmost match starts
-    at the first digit). All row-local JVM expressions — one scan,
-    zero exchanges, zero Python."""
-    _read(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q244_d")
-    return spark.sql(f"""
-WITH dec AS (
-  SELECT doc_id, {_Q244_DECORATE} AS s FROM q244_d
-)
-SELECT doc_id,
-       array_join(regexp_extract_all(s, '[0-9]+', 0), ' ')
-           AS all_nums,
-       CAST(regexp_count(s, '[0-9]+') AS BIGINT) AS n_nums,
-       regexp_substr(s, '[0-9]+') AS first_num,
-       CAST(regexp_instr(s, '[0-9]+') AS BIGINT) AS first_pos
-FROM dec
-""")
-
-
-_Q244_SQL = f"""
-WITH dec AS (
-  SELECT doc_id, {_Q244_DECORATE} AS s FROM documents
-)
-SELECT doc_id,
-       -- DuckDB array_to_string([]) is NULL where Spark array_join
-       --([]) is '' — coalesce aligns the no-match arm
-       coalesce(array_to_string(regexp_extract_all(s, '[0-9]+'), ' '),
-                '') AS all_nums,
-       CAST(len(regexp_extract_all(s, '[0-9]+')) AS BIGINT) AS n_nums,
-       nullif(regexp_extract(s, '[0-9]+'), '') AS first_num,
-       CAST(CASE WHEN regexp_extract(s, '[0-9]+') = '' THEN 0
-                 ELSE strpos(s, regexp_extract(s, '[0-9]+'))
-            END AS BIGINT) AS first_pos
-FROM dec
-"""
-
-# q245: bag-semantics set ops. The identical body runs on both engines
-# (both implement multiset INTERSECT/EXCEPT ALL); the output aggregates
-# the multisets to (key, multiplicity) so rows are deterministic.
-_Q245_BODY = """
-WITH o_keys AS (
-  SELECT o_custkey FROM {o} WHERE o_orderstatus = 'O'
-), f_keys AS (
-  SELECT o_custkey FROM {o} WHERE o_orderstatus = 'F'
-), ia AS (
-  SELECT o_custkey FROM o_keys INTERSECT ALL
-  SELECT o_custkey FROM f_keys
-), ea AS (
-  SELECT o_custkey FROM o_keys EXCEPT ALL
-  SELECT o_custkey FROM f_keys
-)
-SELECT 'both' AS arm, o_custkey, CAST(COUNT(*) AS BIGINT) AS mult
-FROM ia GROUP BY o_custkey
-UNION ALL
-SELECT 'o_surplus' AS arm, o_custkey, CAST(COUNT(*) AS BIGINT) AS mult
-FROM ea GROUP BY o_custkey
-"""
-
-
-def q245_multiset_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bag-semantics set operations (round 13 — q183 pinned the SET
-    forms; INTERSECT ALL / EXCEPT ALL carry MULTIPLICITY, the form
-    dedup accounting actually needs: how many of a customer's open
-    orders are matched one-for-one by filled ones): per-customer
-    order multisets by status, intersected and differenced ALL, then
-    aggregated to (key, multiplicity). The optimizer shape is the
-    reason this query exists (pinned in tests/test_plans.py): Spark
-    rewrites both ALL ops JOIN-FREE — one Union of the two arms with
-    tag columns, ONE aggregate counting both tags per key, then a
-    `Generate replicaterows(min/diff)` re-expands the multiset — so
-    the whole bag algebra costs one keyed exchange per op, never a
-    join, and multiplicities arrive as counts, not row storms.
-    DuckDB runs the identical body (its bag semantics match the
-    standard). All-integer output → exact."""
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q245_o")
-    return spark.sql(_Q245_BODY.format(o="q245_o"))
-
-
-_Q245_SQL = _Q245_BODY.format(o="orders")
-
-# q246: OR-of-EXISTS — NOT decorrelatable to plain semi joins (a semi
-# join can only FILTER; a disjunction needs each arm's verdict as a
-# VALUE), so Catalyst plans ExistenceJoin: a join type that appends a
-# boolean column instead of filtering or multiplying rows.
-_Q246_BODY = """
-SELECT c_custkey,
-       EXISTS (SELECT 1 FROM {o} o
-               WHERE o.o_custkey = c.c_custkey
-                 AND o.o_orderstatus = 'F') AS has_filled,
-       EXISTS (SELECT 1 FROM {o} o2
-               WHERE o2.o_custkey = c.c_custkey
-                 AND o2.o_totalprice > 400000.0) AS has_big
-FROM {c} c
-WHERE EXISTS (SELECT 1 FROM {o} o3
-              WHERE o3.o_custkey = c.c_custkey
-                AND o3.o_orderstatus = 'F')
-   OR EXISTS (SELECT 1 FROM {o} o4
-              WHERE o4.o_custkey = c.c_custkey
-                AND o4.o_totalprice > 400000.0)
-"""
-
-
-def q246_exists_or(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ExistenceJoin (round 13 — the one join type the corpus had
-    never planned: q179's EXISTS chains decorrelate to LeftSemi
-    because they're CONJUNCTIVE filters, but an EXISTS inside a
-    DISJUNCTION — or projected as a column — can't filter rows away
-    per-arm, so Catalyst plans ExistenceJoin, which appends the
-    arm's boolean verdict without filtering or multiplying rows,
-    then evaluates the OR as a plain Filter): customers with a
-    filled order OR a >400k order, each arm's verdict also projected.
-    Pinned: the executed plan carries ExistenceJoin hash joins and a
-    disjunctive Filter over the exists flags, zero row explosion. At
-    scale each arm is one hash join whose build side is the
-    filtered subquery — the OR costs two joins, not a union of two
-    semi-joined scans. Oracle: DuckDB evaluates the same projected
-    EXISTS + WHERE disjunction. TPC-DS Q10/Q35 class."""
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q246_o")
-    _read(spark, sf_dir, "customer").createOrReplaceTempView("q246_c")
-    return spark.sql(_Q246_BODY.format(o="q246_o", c="q246_c"))
-
-
-_Q246_SQL = _Q246_BODY.format(o="orders", c="customer")
-
-# q247: the null-safe equi-join. Both sides aggregate over an
-# engineered NULLable key; {eq} is `<=>` on Spark and
-# `IS NOT DISTINCT FROM` on DuckDB (same operator, two spellings).
-_Q247_BODY = """
-WITH a AS (
-  SELECT CASE WHEN o_custkey % 7 = 0 THEN NULL
-              ELSE o_custkey END AS k,
-         CAST(COUNT(*) AS BIGINT) AS n_open
-  FROM {o} WHERE o_orderstatus = 'O' GROUP BY 1
-), b AS (
-  SELECT CASE WHEN o_custkey % 7 = 0 THEN NULL
-              ELSE o_custkey END AS k,
-         CAST(COUNT(*) AS BIGINT) AS n_filled
-  FROM {o} WHERE o_orderstatus = 'F' GROUP BY 1
-)
-SELECT a.k AS k, n_open, n_filled
-FROM a JOIN b ON a.k {eq} b.k
-"""
-
-
-def q247_nullsafe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Null-safe equi-join (round 13 — the join spelling that treats
-    NULL as an ordinary key value, which the streaming SCD2 sink
-    already depends on internally (its state joins are eqNullSafe);
-    this query pins the SQL surface and its PLAN): every 7th customer
-    key folds to NULL on both aggregated sides, and `a.k <=> b.k`
-    must match the NULL group to the NULL group — AND still plan a
-    HASH join, not a nested loop: Catalyst rewrites null-safe
-    equality into a hashable key (coalesce/isnull pairing), pinned in
-    tests/test_plans.py alongside the contrast that a plain `=` join
-    silently drops the NULL rows (the bug class eqNullSafe exists to
-    prevent). Oracle: DuckDB's `IS NOT DISTINCT FROM` — the standard
-    spelling of the same operator. Counts → exact."""
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q247_o")
-    return spark.sql(_Q247_BODY.format(o="q247_o", eq="<=>"))
-
-
-_Q247_SQL = _Q247_BODY.format(o="orders", eq="IS NOT DISTINCT FROM")
-
-# q248: native regression aggregates, law-pinned against the q209
-# exact-OLS discipline: y rides as BIGINT cents so all five sums are
-# exact (DECIMAL(38,0) / HUGEINT); the closed forms take ONE division
-# of exactly-converted doubles. r² is scale-free, slope/intercept are
-# compared in cents (×100). Bands are 1e-9 relative — ~1e4× the
-# observed single-pass float error, far under any real drift.
-_Q248_BODY = """
-WITH pts AS (
-  SELECT o_orderstatus AS st,
-         o_custkey AS x,
-         CAST(CAST(o_totalprice AS DECIMAL(14,2)) * 100 AS BIGINT)
-             AS y
-  FROM {o}
-), s AS (
-  SELECT st,
-         CAST(COUNT(*) AS {big}) AS n,
-         SUM(CAST(x AS {big})) AS sx,
-         SUM(CAST(y AS {big})) AS sy,
-         SUM(CAST(x * y AS {big})) AS sxy,
-         SUM(CAST(x * x AS {big})) AS sxx,
-         SUM(CAST(y AS {big}) * CAST(y AS {big})) AS syy,
-         regr_slope(CAST(y AS DOUBLE) / 100.0, CAST(x AS DOUBLE))
-             AS rslope,
-         regr_intercept(CAST(y AS DOUBLE) / 100.0, CAST(x AS DOUBLE))
-             AS ricept,
-         regr_r2(CAST(y AS DOUBLE) / 100.0, CAST(x AS DOUBLE)) AS rr2
-  FROM pts GROUP BY st
-), closed AS (
-  SELECT st, n, rslope, ricept, rr2,
-         CAST(n * sxy - sx * sy AS DOUBLE) AS numd,
-         CAST(n * sxx - sx * sx AS DOUBLE) AS dend,
-         CAST(n * syy - sy * sy AS DOUBLE) AS syyd,
-         CAST(sy * sxx - sx * sxy AS DOUBLE) AS inumd
-  FROM s
-)
-SELECT st,
-       CAST(n AS BIGINT) AS n,
-       numd / dend / 100.0 AS slope_exact,
-       inumd / dend / 100.0 AS icept_exact,
-       {law_slope} AS slope_ok,
-       {law_icept} AS icept_ok,
-       {law_r2} AS r2_ok
-FROM closed
-"""
-_Q248_LAWS = dict(
-    law_slope=("abs(rslope - numd / dend / 100.0) <= "
-               "1e-9 * greatest(abs(numd / dend / 100.0), 1.0)"),
-    law_icept=("abs(ricept - inumd / dend / 100.0) <= "
-               "1e-9 * greatest(abs(inumd / dend / 100.0), 1.0)"),
-    law_r2="abs(rr2 - numd * numd / (dend * syyd)) <= 1e-9")
-
-
-def q248_regr_aggregates_law(spark: SparkSession,
-                             sf_dir: str) -> DataFrame:
-    """Native regression aggregates (round 13 — regr_slope /
-    regr_intercept / regr_r2, the one-call surface analysts reach for
-    where q209 hand-builds the exact closed form): per order status,
-    the EXACT OLS fit anchors the values (the q209 discipline:
-    BIGINT-cents y, DECIMAL(38,0)/HUGEINT sums, one division of
-    exactly-converted doubles — bit-identical across engines), and
-    the native aggregates are pinned within 1e-9 relative of the
-    exact forms as booleans the oracle fixes to TRUE (measured
-    agreement ~1e-13; the single-pass float accumulators are
-    order-sensitive at ~1e-15, so the band is partition-safe — the
-    q238 discipline). r² is scale-invariant so the cents ride cancels
-    there; slope/intercept compare in dollars via the ×100 rescale.
-    One ObjectHash-free grouped aggregate carries the five exact sums
-    AND the three native aggregates in a single pass."""
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q248_o")
-    return spark.sql(_Q248_BODY.format(o="q248_o", big="DECIMAL(38,0)",
-                                       **_Q248_LAWS))
-
-
-# the oracle fixes the law booleans to TRUE (q233 discipline); DuckDB
-# recomputes the exact anchors from the same HUGEINT sums
-_Q248_SQL = _Q248_BODY.format(o="orders", big="HUGEINT",
-                              law_slope="TRUE", law_icept="TRUE",
-                              law_r2="TRUE")
-
-
-def q249_map_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The MAP-type SQL surface (round 13 — the last untouched complex
-    type: arrays have q242, structs ride every codec query, maps had
-    only internal uses): per customer, a status→count map built with
-    map_from_entries over a KEY-SORTED struct array (map entry order
-    is construction order — sorting first makes every downstream
-    entry walk deterministic), then exercised through element_at
-    lookups, map_filter, transform_values + map_values folded to the
-    sum of squared counts, and map_entries flattened to a joined
-    string (never a map output column — the comparator rule). Oracle:
-    DuckDB replays the SEMANTICS map-free from the same per-status
-    counts (conditional sums, ordered string_agg, Σn²) — the map ops'
-    VALUES are the contract, not their storage. All counts exact."""
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q249_o")
-    return spark.sql("""
-WITH per AS (
-  SELECT o_custkey, o_orderstatus AS st,
-         CAST(COUNT(*) AS BIGINT) AS n
-  FROM q249_o GROUP BY 1, 2
-), m AS (
-  SELECT o_custkey,
-         map_from_entries(array_sort(collect_list(struct(st, n))))
-             AS mp
-  FROM per GROUP BY o_custkey
-)
-SELECT o_custkey,
-       CAST(size(mp) AS BIGINT) AS n_statuses,
-       coalesce(element_at(mp, 'O'), 0) AS n_open,
-       coalesce(element_at(mp, 'F'), 0) AS n_filled,
-       array_join(transform(
-           map_entries(map_filter(mp, (k, v) -> v >= 2)),
-           e -> concat(e.key, '=', CAST(e.value AS STRING))), ',')
-           AS big_entries,
-       aggregate(map_values(transform_values(mp, (k, v) -> v * v)),
-                 CAST(0 AS BIGINT), (acc, x) -> acc + x) AS sq_sum
-FROM m
-""")
-
-
-_Q249_SQL = """
-WITH per AS (
-  SELECT o_custkey, o_orderstatus AS st,
-         CAST(COUNT(*) AS BIGINT) AS n
-  FROM orders GROUP BY 1, 2
-)
-SELECT o_custkey,
-       CAST(COUNT(*) AS BIGINT) AS n_statuses,
-       CAST(coalesce(SUM(n) FILTER (WHERE st = 'O'), 0) AS BIGINT)
-           AS n_open,
-       CAST(coalesce(SUM(n) FILTER (WHERE st = 'F'), 0) AS BIGINT)
-           AS n_filled,
-       coalesce(string_agg(CASE WHEN n >= 2
-                                THEN st || '=' || CAST(n AS VARCHAR)
-                           END, ',' ORDER BY st), '') AS big_entries,
-       CAST(SUM(n * n) AS BIGINT) AS sq_sum
-FROM per
-GROUP BY o_custkey
-"""
-
-# q250: IGNORE NULLS analytics. The two engines place the modifier
-# differently — Spark `last_value(v) IGNORE NULLS`, DuckDB
-# `last_value(v IGNORE NULLS)` — so the body takes the three analytic
-# expressions as template slots; the SEMANTICS are identical (probed
-# on a hand-case first). One shared running frame keeps all three in
-# one Window node (CollapseWindow), and every output is a SELECTED
-# double (no accumulation) over a unique ordering key → exact.
-_Q250_FRAME = ("OVER (PARTITION BY o_custkey ORDER BY o_orderkey "
-               "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)")
-_Q250_BODY = """
-WITH base AS (
-  SELECT o_custkey, o_orderkey,
-         CASE WHEN o_orderkey % 4 = 0 THEN NULL
-              ELSE CAST(o_totalprice AS DOUBLE) END AS v
-  FROM {o}
-)
-SELECT o_custkey, o_orderkey, v,
-       {locf} {frame} AS locf,
-       {fv} {frame} AS first_seen,
-       {nv2} {frame} AS second_seen
-FROM base
-"""
-
-
-def q250_ignore_nulls_analytics(spark: SparkSession,
-                                sf_dir: str) -> DataFrame:
-    """IGNORE NULLS window analytics (round 13 — the SQL face of the
-    LOCF machinery events.gap_fill/q192 builds with the DataFrame
-    API: last-observation-carried-forward, first-seen, and
-    second-seen per key as plain SELECT expressions): every 4th
-    order's value is NULLed deterministically, then
-    last_value/first_value/nth_value(2) ALL with IGNORE NULLS over
-    ONE shared running frame — so CollapseWindow fuses the three
-    into a single Window node with one keyed exchange (pinned). The
-    oracle runs the same body on DuckDB with its modifier placement
-    (`f(v IGNORE NULLS)` vs Spark's `f(v) IGNORE NULLS` — the only
-    difference; semantics probed identical). Unique ordering key +
-    selected-not-accumulated doubles → exact."""
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q250_o")
-    return spark.sql(_Q250_BODY.format(
-        o="q250_o", frame=_Q250_FRAME,
-        locf="last_value(v) IGNORE NULLS",
-        fv="first_value(v) IGNORE NULLS",
-        nv2="nth_value(v, 2) IGNORE NULLS"))
-
-
-_Q250_SQL = _Q250_BODY.format(
-    o="orders", frame=_Q250_FRAME,
-    locf="last_value(v IGNORE NULLS)",
-    fv="first_value(v IGNORE NULLS)",
-    nv2="nth_value(v, 2 IGNORE NULLS)")
-
-# q251: conditional/selection aggregates. The max_by/min_by ordering
-# value is made UNIQUE (cents·10^8 + orderkey — exact BIGINTs, unique
-# while orderkey < 10^8, true through sf1's 6·10^7) because ties make
-# arg-extrema nondeterministic; mode()'s winner is engineered strict
-# (half the rows share one sentinel value, every other value ≤ ~13%).
-_Q251_BODY = """
-WITH base AS (
-  SELECT o_orderstatus AS st, o_orderkey, o_custkey,
-         CAST(o_totalprice AS DOUBLE) AS price,
-         CAST(CAST(o_totalprice AS DECIMAL(14,2)) * 100 AS BIGINT)
-             * 100000000 + o_orderkey AS uniq,
-         CASE WHEN o_custkey % 2 = 0 THEN -1
-              ELSE CAST(o_custkey % 5 AS INT) END AS m
-  FROM {o}
-)
-SELECT st,
-       CAST(count_if(price > 300000.0) AS BIGINT) AS n_big,
-       {every}(o_custkey >= 1) AS all_pos,
-       {any}(o_custkey % 997 = 0) AS has_997,
-       max_by(o_orderkey, uniq) AS priciest_key,
-       min_by(o_orderkey, uniq) AS cheapest_key,
-       CAST(mode(m) AS BIGINT) AS common_m
-FROM base GROUP BY st
-"""
-
-
-def q251_selection_aggregates(spark: SparkSession,
-                              sf_dir: str) -> DataFrame:
-    """Conditional + selection aggregates (round 13 — count_if /
-    every / any / max_by / min_by / mode, the one-call forms of the
-    CASE-WHEN-SUM and struct-min idioms the corpus hand-builds
-    elsewhere, e.g. q25's min_by dedup survivor): per order status.
-    The two determinism rules this query encodes (both bitten
-    elsewhere in this repo): arg-extrema (max_by/min_by) are
-    NONDETERMINISTIC under ordering ties — the ordering value here is
-    engineered unique (cents·10^8 + key, exact BIGINT) — and mode()
-    ties are engine-arbitrary, so the modal value is engineered a
-    strict majority winner. DuckDB spells every/any as
-    bool_and/bool_or (Spark accepts every/any; the oracle uses the
-    portable names). All outputs exact."""
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q251_o")
-    return spark.sql(_Q251_BODY.format(o="q251_o", every="every",
-                                       any="any"))
-
-
-_Q251_SQL = _Q251_BODY.format(o="orders", every="bool_and",
-                              any="bool_or")
-
-# q252: width_bucket histogram. DuckDB has no width_bucket — the
-# oracle replicates Spark's EXACT operand order:
-# n·(v−min) FIRST, then divided by (max−min), floored, +1 (<min → 0,
-# >=max → n+1). Operand order is LOAD-BEARING: both other groupings —
-# (v-min)/((max-min)/n) and ((v-min)/(max-min))·n — flip one bucket
-# on boundary values in the last ulp; the 2000-case seeded-random pin
-# in tests/test_plans.py caught 32/2000 flips under EACH wrong form
-# before this one matched every case.
-_Q252_SPARK_BUCKET = ("width_bucket(CAST(o_totalprice AS DOUBLE), "
-                      "0.0D, 600000.0D, 12)")
-_Q252_DUCK_BUCKET = """
-CASE WHEN CAST(o_totalprice AS DOUBLE) < 0.0 THEN 0
-     WHEN CAST(o_totalprice AS DOUBLE) >= 600000.0 THEN 13
-     ELSE CAST(FLOOR((12 * (CAST(o_totalprice AS DOUBLE) - 0.0))
-                     / (600000.0 - 0.0)) AS BIGINT) + 1
-END"""
-_Q252_BODY = """
-SELECT o_orderstatus AS st,
-       CAST({bucket} AS BIGINT) AS bkt,
-       CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(MIN(o_orderkey) AS BIGINT) AS min_key
-FROM {o}
-GROUP BY 1, 2
-"""
-
-
-def q252_width_bucket_histogram(spark: SparkSession,
-                                sf_dir: str) -> DataFrame:
-    """Equi-width histogram via width_bucket (round 13 — the
-    fixed-bounds binning surface; q102's percentile bins are the
-    data-driven sibling): order values bucketed into 12 equal bins
-    per status, with the under/overflow buckets 0 and n+1 that make
-    width_bucket total. DuckDB lacks the function, so the oracle
-    replays Spark's exact operand order — n·(v − min) first, then
-    / (max − min), floored, +1 — which is bit-identical IEEE
-    arithmetic, so even a price sitting exactly on a bin boundary
-    buckets the same way (BOTH wrong groupings — precomputed width,
-    or ratio-then-scale — flip boundary buckets in the last ulp;
-    pinned by the randomized operand-order test in
-    tests/test_plans.py). At 100 TB this is ONE map-side-combined aggregate (no
-    percentile state, no sort): the histogram every profiler
-    dashboard starts from. Counts + min-key anchor → exact."""
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q252_o")
-    return spark.sql(_Q252_BODY.format(o="q252_o",
-                                       bucket=_Q252_SPARK_BUCKET))
-
-
-_Q252_SQL = _Q252_BODY.format(o="orders", bucket=_Q252_DUCK_BUCKET)
-
-# q253: bitwise aggregates — identical body on both engines; the
-# masks derive from keys via portable integer arithmetic. AND/OR/XOR
-# are commutative+associative, so partial aggregation and any
-# partition order fold identically (unlike float sums, bit folds are
-# EXACT under reordering — the reason flag rollups can map-side
-# combine fearlessly at 100 TB).
-_Q253_BODY = """
-WITH flags AS (
-  SELECT o_orderstatus AS st,
-         CAST(1 AS BIGINT) * CAST(pow(2, o_custkey % 7) AS BIGINT)
-             AS one_hot,
-         o_custkey % 64 AS low6,
-         o_orderkey AS k
-  FROM {o}
-)
-SELECT st,
-       bit_or(one_hot) AS seen_mask,
-       bit_and(15 + low6 - (low6 % 16)) AS common_bits,
-       bit_xor(k) AS key_parity,
-       CAST(bit_count(bit_or(one_hot)) AS BIGINT) AS n_distinct_slots
-FROM flags GROUP BY st
-"""
-
-
-def q253_bitwise_aggregates(spark: SparkSession,
-                            sf_dir: str) -> DataFrame:
-    """Bitwise aggregate panel (round 13 — bit_or as the one-hot flag
-    rollup, bit_and as the all-rows-share-these-bits probe, bit_xor
-    as the order-free parity/checksum; q230's bitmap family handles
-    POSITIONS, these handle packed FLAG WORDS): per status, a
-    one-hot mask of custkey residue classes OR-folded to "which
-    slots occur", an AND-fold whose low nibble is forced to 1111
-    (so the common bits are provably the engineered ones), the XOR
-    parity of all order keys, and bit_count over the OR mask. The
-    scale point: AND/OR/XOR are commutative + associative, so these
-    fold EXACTLY under map-side combine and any partition order —
-    the property float sums lack — pinned by the 13-partition sweep.
-    Identical body on DuckDB. All-integer → exact."""
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q253_o")
-    return spark.sql(_Q253_BODY.format(o="q253_o"))
-
-
-_Q253_SQL = _Q253_BODY.format(o="orders")
-
-# q254: 16-digit candidate identifiers built deterministically from
-# keys; ~10% carry the correct Luhn check digit. The oracle replays
-# the full ISO/IEC 7812 digit fold (double every second digit from
-# the right, subtract 9 on overflow, sum % 10 == 0) independently —
-# the G.711-style spec-replay discipline: any divergence between the
-# engine builtin and the published algorithm breaks the hash.
-_Q254_CAND = ("concat(lpad(CAST(o_orderkey AS STRING), 9, '0'), "
-              "lpad(CAST(o_custkey % 1000000 AS STRING), 6, '0'), "
-              "CAST(o_orderkey % 10 AS STRING))")
-
-
-def q254_luhn_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Luhn checksum validation (round 13 — `luhn_check`, the
-    identifier-validation pass a PII/compliance pipeline runs over
-    card-like digit strings before redaction routing; q55 redacts,
-    this VALIDATES): every order yields a deterministic 16-digit
-    candidate (9 key digits + 6 customer digits + a pseudo check
-    digit), and the engine builtin classifies it. The oracle does
-    NOT trust a reimplementation of luhn_check on the Spark side —
-    DuckDB independently replays the ISO/IEC 7812 fold itself
-    (list_transform over digit positions: double every second digit
-    from the right, subtract 9 on overflow, sum % 10 == 0), so the
-    builtin is pinned against the published algorithm, the
-    G.711-table discipline. Row-local, one scan, zero exchanges for
-    the validation itself; per-status counts aggregate on top.
-    ~10% of candidates validate (one check digit in ten is right)."""
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q254_o")
-    return spark.sql(f"""
-SELECT o_orderkey,
-       {_Q254_CAND} AS cand,
-       luhn_check({_Q254_CAND}) AS is_valid
-FROM q254_o
-""")
-
-
-_Q254_SQL = f"""
-WITH c AS (
-  SELECT o_orderkey, {_Q254_CAND} AS cand FROM orders
-)
-SELECT o_orderkey, cand,
-       list_sum(list_transform(range(1, len(cand) + 1), i ->
-         CASE WHEN (len(cand) - i) % 2 = 1
-              THEN CASE WHEN 2*CAST(substr(cand, i, 1) AS INT) > 9
-                        THEN 2*CAST(substr(cand, i, 1) AS INT) - 9
-                        ELSE 2*CAST(substr(cand, i, 1) AS INT) END
-              ELSE CAST(substr(cand, i, 1) AS INT) END)) % 10 = 0
-           AS is_valid
-FROM c
-"""
-
-
-def q255_weighted_percentile(spark: SparkSession,
-                             sf_dir: str) -> DataFrame:
-    """Weighted exact percentile (round 13 — `percentile(x, p, freq)`:
-    the token-weighted quality-cutoff shape, where a document's
-    influence on the threshold is its token count, not 1; q102's
-    unweighted bins are the freq=1 special case): per status, the
-    weighted p50/p90 of order value under a deterministic integer
-    weight (orderkey%7+1). Semantically freq means "this row, that
-    many times", so the oracle EXPANDS each row by its weight in
-    DuckDB (unnest(range(w)) — the scalar-list lateral form) and
-    takes plain quantile_cont, riding the verified q102 interpolation
-    identity. Raw doubles out (IEEE-exact interpolation both
-    engines). The exact-percentile scale gotcha applies doubly here —
-    the buffer is Σfreq values, not row count; q241's approx law is
-    the 100 TB form."""
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("q255_o")
-    return spark.sql("""
-WITH p AS (
-  SELECT o_orderstatus AS st,
-         percentile(CAST(o_totalprice AS DOUBLE),
-                    array(0.5D, 0.9D), o_orderkey % 7 + 1) AS pct
-  FROM q255_o GROUP BY o_orderstatus
-)
-SELECT st, pct[0] AS p50_w, pct[1] AS p90_w FROM p
-""")
-
-
-_Q255_SQL = """
-WITH expanded AS (
-  SELECT o_orderstatus AS st, CAST(o_totalprice AS DOUBLE) AS v
-  FROM orders, unnest(range(o_orderkey % 7 + 1))
-)
-SELECT st,
-       quantile_cont(v, 0.5) AS p50_w,
-       quantile_cont(v, 0.9) AS p90_w
-FROM expanded GROUP BY st
 """
 
 
@@ -12089,8 +8320,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q56_interval_join": q56_interval_join,
         "q57_vocabulary": q57_vocabulary,
         "q58_tfidf_top_terms": q58_tfidf_top_terms,
-        "q59_local_supplier_volume": q59_local_supplier_volume,
-        "q60_shipping_priority": q60_shipping_priority,
         "q61_column_profile": q61_column_profile,
         "q62_audio_features": q62_audio_features,
         "q63_length_outliers": q63_length_outliers,
@@ -12105,9 +8334,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q72_salted_join": q72_salted_join,
         "q73_train_shuffle": q73_train_shuffle,
         "q74_code_lookup": q74_code_lookup,
-        "q75_cube_order_stats": q75_cube_order_stats,
-        "q76_volume_shipping": q76_volume_shipping,
-        "q77_large_orders": q77_large_orders,
         "q78_char_classes": q78_char_classes,
         "q79_mix_entropy": q79_mix_entropy,
         "q80_decile_profile": q80_decile_profile,
@@ -12148,10 +8374,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q115_ngram_novelty": q115_ngram_novelty,
         "q116_sequence_layout": q116_sequence_layout,
         "q117_model_score": q117_model_score,
-        "q118_small_quantity_revenue": q118_small_quantity_revenue,
-        "q119_waiting_supplier": q119_waiting_supplier,
-        "q120_parts_supplier_counts": q120_parts_supplier_counts,
-        "q121_trailing_window": q121_trailing_window,
         "q122_join_discovery": q122_join_discovery,
         "q123_sketch_containment": q123_sketch_containment,
         "q124_retention_cohorts": q124_retention_cohorts,
@@ -12163,128 +8385,51 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q130_jpeg_roundtrip": q130_jpeg_roundtrip,
         "q131_wav_roundtrip": q131_wav_roundtrip,
         "q132_gif_roundtrip": q132_gif_roundtrip,
-        "q133_dominant_supplier": q133_dominant_supplier,
-        "q134_dormant_customers": q134_dormant_customers,
         "q135_gopher_rules": q135_gopher_rules,
         "q136_temperature_mix": q136_temperature_mix,
         "q137_image_dup_pairs": q137_image_dup_pairs,
         "q138_wav_features": q138_wav_features,
         "q139_video_dup_pairs": q139_video_dup_pairs,
-        "q140_priority_count": q140_priority_count,
-        "q141_shipmode_priority": q141_shipmode_priority,
         "q142_progressive_jpeg": q142_progressive_jpeg_roundtrip,
         "q143_flac_roundtrip": q143_flac_roundtrip,
         "q144_mp4_roundtrip": q144_mp4_roundtrip,
         "q145_container_parity": q145_container_parity,
         "q146_audio_container_parity": q146_audio_container_parity,
-        "q147_min_cost_supplier": q147_min_cost_supplier,
-        "q148_top_supplier": q148_top_supplier,
         "q149_pq_search": q149_pq_search,
         "q150_audio_dup_pairs": q150_audio_dup_pairs,
         "q151_ivfpq_search": q151_ivfpq_search,
         "q156_ivfpq_residual": q156_ivfpq_residual,
-        "q152_disjunctive_join": q152_disjunctive_join,
-        "q153_type_revenue_share": q153_type_revenue_share,
-        "q154_returned_revenue": q154_returned_revenue,
         "q155_keep_first_spans": q155_keep_first_spans,
         "q167_domain_cap": q167_domain_cap,
-        "q160_shipping_priority": q160_shipping_priority,
-        "q161_local_supplier_volume": q161_local_supplier_volume,
-        "q162_large_volume_customer": q162_large_volume_customer,
-        "q163_customer_distribution": q163_customer_distribution,
         "q164_vad_segments": q164_vad_segments,
         "q165_mojibake_repair": q165_mojibake_repair,
         "q166_chunk_chars": q166_chunk_chars,
         "q158_g711_decode": q158_g711_decode,
         "q159_adpcm_fold": q159_adpcm_fold,
-        "q168_important_stock": q168_important_stock,
-        "q169_market_share": q169_market_share,
-        "q170_product_profit": q170_product_profit,
         "q171_vad_segment_rows": q171_vad_segment_rows,
         "q172_mp3_inventory": q172_mp3_inventory,
-        "q173_forecast_revenue": q173_forecast_revenue,
         "q174_exact_keep_one": q174_exact_keep_one,
         "q175_quality_survivors": q175_quality_survivors,
         "q176_html_extract": q176_html_extract,
         "q177_mp3_multiversion": q177_mp3_multiversion,
-        "q178_sales_deviation_window": q178_sales_deviation_window,
-        "q179_multi_supplier_returns": q179_multi_supplier_returns,
-        "q180_cumulative_crossover": q180_cumulative_crossover,
         "q181_url_canonicalize": q181_url_canonicalize,
         "q182_profile_columns": q182_profile_columns,
-        "q183_customer_set_ops": q183_customer_set_ops,
-        "q184_recursive_tree_depth": q184_recursive_tree_depth,
         "q185_url_escape_normalize": q185_url_escape_normalize,
         "q186_chain_clusters": q186_chain_clusters,
         "q187_mp3_free_format": q187_mp3_free_format,
-        "q188_grouping_sets": q188_grouping_sets,
         "q189_cdc_chunks": q189_cdc_chunks,
-        "q190_variant_extract": q190_variant_extract,
-        "q191_null_aware_anti": q191_null_aware_anti,
         "q192_gap_fill": q192_gap_fill,
         "q193_scd2_intervals": q193_scd2_intervals,
-        "q194_reused_aggregate_join": q194_reused_aggregate_join,
-        "q195_ordered_listagg": q195_ordered_listagg,
-        "q196_lateral_decorrelate": q196_lateral_decorrelate,
         "q197_spatial_radius_pairs": q197_spatial_radius_pairs,
         "q198_gap_interpolate": q198_gap_interpolate,
         "q199_line_dedup": q199_line_dedup,
         "q200_scd2_deletes": q200_scd2_deletes,
-        "q201_unpivot_metrics": q201_unpivot_metrics,
-        "q202_multi_consumer_reuse": q202_multi_consumer_reuse,
         "q203_skewed_fact_join": q203_skewed_fact_join,
-        "q204_sql_pivot": q204_sql_pivot,
         "q205_scd2_point_in_time": q205_scd2_point_in_time,
-        "q206_merged_scalar_subqueries": q206_merged_scalar_subqueries,
-        "q207_runtime_bloom_join": q207_runtime_bloom_join,
-        "q208_xml_roundtrip": q208_xml_roundtrip,
         "q209_per_key_trend": q209_per_key_trend,
-        "q210_session_windows": q210_session_windows,
-        "q211_sql_udf": q211_sql_udf,
-        "q212_group_by_all": q212_group_by_all,
-        "q213_topk_per_key": q213_topk_per_key,
-        "q214_cbo_join_reorder": q214_cbo_join_reorder,
-        "q215_rollup_topk": q215_rollup_topk,
         "q216_idn_host_fold": q216_idn_host_fold,
-        "q217_lateral_column_alias": q217_lateral_column_alias,
-        "q218_stats_panel": q218_stats_panel,
-        "q219_collapsed_windows": q219_collapsed_windows,
-        "q220_paged_topn": q220_paged_topn,
-        "q221_pipe_syntax": q221_pipe_syntax,
-        "q222_keyset_pagination": q222_keyset_pagination,
-        "q223_parameterized_sql": q223_parameterized_sql,
-        "q224_dynamic_sql": q224_dynamic_sql,
-        "q225_order_by_all": q225_order_by_all,
-        "q226_star_except": q226_star_except,
         "q227_unicode_normalize": q227_unicode_normalize,
-        "q228_collated_group": q228_collated_group,
-        "q229_analytic_panel": q229_analytic_panel,
-        "q230_bitmap_distinct": q230_bitmap_distinct,
-        "q231_cross_channel_buyers": q231_cross_channel_buyers,
-        "q232_yoy_growth": q232_yoy_growth,
-        "q233_hll_distinct": q233_hll_distinct,
         "q234_strip_accents": q234_strip_accents,
-        "q235_sql_table_function": q235_sql_table_function,
-        "q236_sql_scripting": q236_sql_scripting,
-        "q237_recursive_cte": q237_recursive_cte,
-        "q238_hll_union_merge": q238_hll_union_merge,
-        "q239_try_arithmetic": q239_try_arithmetic,
-        "q240_join_strategy_hint": q240_join_strategy_hint,
-        "q241_approx_percentile_law": q241_approx_percentile_law,
-        "q242_array_hof_sql": q242_array_hof_sql,
-        "q243_date_spine": q243_date_spine,
-        "q244_regexp_panel": q244_regexp_panel,
-        "q245_multiset_ops": q245_multiset_ops,
-        "q246_exists_or": q246_exists_or,
-        "q247_nullsafe_join": q247_nullsafe_join,
-        "q248_regr_aggregates_law": q248_regr_aggregates_law,
-        "q249_map_functions": q249_map_functions,
-        "q250_ignore_nulls_analytics": q250_ignore_nulls_analytics,
-        "q251_selection_aggregates": q251_selection_aggregates,
-        "q252_width_bucket_histogram": q252_width_bucket_histogram,
-        "q253_bitwise_aggregates": q253_bitwise_aggregates,
-        "q254_luhn_validation": q254_luhn_validation,
-        "q255_weighted_percentile": q255_weighted_percentile,
     }
     return base
 
@@ -12352,8 +8497,6 @@ def oracle_sql() -> dict[str, str]:
         "q56_interval_join": _Q56_SQL,
         "q57_vocabulary": _Q57_SQL,
         "q58_tfidf_top_terms": _Q58_SQL,
-        "q59_local_supplier_volume": _Q59_SQL,
-        "q60_shipping_priority": _Q60_SQL,
         "q61_column_profile": _Q61_SQL,
         "q62_audio_features": _Q62_SQL,
         "q63_length_outliers": _Q63_SQL,
@@ -12368,9 +8511,6 @@ def oracle_sql() -> dict[str, str]:
         "q72_salted_join": _Q72_SQL,
         "q73_train_shuffle": _Q73_SQL,
         "q74_code_lookup": _Q74_SQL,
-        "q75_cube_order_stats": _Q75_SQL,
-        "q76_volume_shipping": _Q76_SQL,
-        "q77_large_orders": _Q77_SQL,
         "q78_char_classes": _Q78_SQL,
         "q79_mix_entropy": _Q79_SQL,
         "q80_decile_profile": _Q80_SQL,
@@ -12411,10 +8551,6 @@ def oracle_sql() -> dict[str, str]:
         "q115_ngram_novelty": _Q115_SQL,
         "q116_sequence_layout": _Q116_SQL,
         "q117_model_score": _Q117_SQL,
-        "q118_small_quantity_revenue": _Q118_SQL,
-        "q119_waiting_supplier": _Q119_SQL,
-        "q120_parts_supplier_counts": _Q120_SQL,
-        "q121_trailing_window": _Q121_SQL,
         "q122_join_discovery": _Q122_SQL,
         "q123_sketch_containment": _q123_sql(),
         "q124_retention_cohorts": _Q124_SQL,
@@ -12426,126 +8562,49 @@ def oracle_sql() -> dict[str, str]:
         "q130_jpeg_roundtrip": _Q130_SQL,
         "q131_wav_roundtrip": _Q131_SQL,
         "q132_gif_roundtrip": _Q132_SQL,
-        "q133_dominant_supplier": _Q133_SQL,
-        "q134_dormant_customers": _Q134_SQL,
         "q135_gopher_rules": _Q135_SQL,
         "q136_temperature_mix": _Q136_SQL,
         "q137_image_dup_pairs": _Q137_SQL,
         "q138_wav_features": _Q138_SQL,
         "q139_video_dup_pairs": _Q139_SQL,
-        "q140_priority_count": _Q140_SQL,
-        "q141_shipmode_priority": _Q141_SQL,
         "q142_progressive_jpeg": _Q142_SQL,
         "q143_flac_roundtrip": _Q143_SQL,
         "q144_mp4_roundtrip": _Q144_SQL,
         "q145_container_parity": _Q145_SQL,
         "q146_audio_container_parity": _Q146_SQL,
-        "q147_min_cost_supplier": _Q147_SQL,
-        "q148_top_supplier": _Q148_SQL,
         "q149_pq_search": _q149_sql(),
         "q150_audio_dup_pairs": _Q150_SQL,
         "q151_ivfpq_search": _q151_sql(),
         "q156_ivfpq_residual": _q156_sql(),
-        "q152_disjunctive_join": _Q152_SQL,
-        "q153_type_revenue_share": _Q153_SQL,
-        "q154_returned_revenue": _Q154_SQL,
         "q155_keep_first_spans": _Q155_SQL,
         "q167_domain_cap": _Q167_SQL,
-        "q160_shipping_priority": _Q160_SQL,
-        "q161_local_supplier_volume": _Q161_SQL,
-        "q162_large_volume_customer": _Q162_SQL,
-        "q163_customer_distribution": _Q163_SQL,
         "q164_vad_segments": _Q164_SQL,
         "q165_mojibake_repair": _q165_sql(),
         "q166_chunk_chars": _Q166_SQL,
         "q158_g711_decode": _Q158_SQL,
         "q159_adpcm_fold": _Q159_SQL,
-        "q168_important_stock": _Q168_SQL,
-        "q169_market_share": _Q169_SQL,
-        "q170_product_profit": _Q170_SQL,
         "q171_vad_segment_rows": _Q171_SQL,
         "q172_mp3_inventory": _Q172_SQL,
-        "q173_forecast_revenue": _Q173_SQL,
         "q174_exact_keep_one": _Q174_SQL,
         "q175_quality_survivors": _Q175_SQL,
         "q176_html_extract": _Q176_SQL,
         "q177_mp3_multiversion": _Q177_SQL,
-        "q178_sales_deviation_window": _Q178_SQL,
-        "q179_multi_supplier_returns": _Q179_SQL,
-        "q180_cumulative_crossover": _Q180_SQL,
         "q181_url_canonicalize": _Q181_SQL,
         "q182_profile_columns": _Q182_SQL,
-        "q183_customer_set_ops": _Q183_SQL,
-        "q184_recursive_tree_depth": _Q184_SQL,
         "q185_url_escape_normalize": _Q185_SQL,
         "q186_chain_clusters": _Q186_SQL,
         "q187_mp3_free_format": _Q187_SQL,
-        "q188_grouping_sets": _Q188_SQL,
         "q189_cdc_chunks": _Q189_SQL,
-        "q190_variant_extract": _Q190_SQL,
-        "q191_null_aware_anti": _Q191_SQL,
         "q192_gap_fill": _Q192_SQL,
         "q193_scd2_intervals": _Q193_SQL,
-        "q194_reused_aggregate_join": _Q194_SQL,
-        "q195_ordered_listagg": _Q195_SQL,
-        "q196_lateral_decorrelate": _Q196_SQL,
         "q197_spatial_radius_pairs": _Q197_SQL,
         "q198_gap_interpolate": _Q198_SQL,
         "q199_line_dedup": _Q199_SQL,
         "q200_scd2_deletes": _Q200_SQL,
-        "q201_unpivot_metrics": _Q201_SQL,
-        "q202_multi_consumer_reuse": _Q202_SQL,
         "q203_skewed_fact_join": _Q203_SQL,
-        "q204_sql_pivot": _Q204_SQL,
         "q205_scd2_point_in_time": _Q205_SQL,
-        "q206_merged_scalar_subqueries": _Q206_SQL,
-        "q207_runtime_bloom_join": _Q207_SQL,
-        "q208_xml_roundtrip": _Q208_SQL,
         "q209_per_key_trend": _Q209_SQL,
-        "q210_session_windows": _Q210_SQL,
-        "q211_sql_udf": _Q211_SQL,
-        "q212_group_by_all": _Q212_SQL,
-        "q213_topk_per_key": _Q213_SQL,
-        "q214_cbo_join_reorder": _Q214_SQL,
-        "q215_rollup_topk": _Q215_SQL,
         "q216_idn_host_fold": _Q216_SQL,
-        "q217_lateral_column_alias": _Q217_SQL,
-        "q218_stats_panel": _Q218_SQL,
-        "q219_collapsed_windows": _Q219_SQL,
-        "q220_paged_topn": _Q220_SQL,
-        "q221_pipe_syntax": _Q221_SQL,
-        "q222_keyset_pagination": _Q222_SQL,
-        "q223_parameterized_sql": _Q223_SQL,
-        "q224_dynamic_sql": _Q224_SQL,
-        "q225_order_by_all": _Q225_SQL,
-        "q226_star_except": _Q226_SQL,
         "q227_unicode_normalize": _Q227_SQL,
-        "q228_collated_group": _Q228_SQL,
-        "q229_analytic_panel": _Q229_SQL,
-        "q230_bitmap_distinct": _Q230_SQL,
-        "q231_cross_channel_buyers": _Q231_SQL,
-        "q232_yoy_growth": _Q232_SQL,
-        "q233_hll_distinct": _Q233_SQL,
         "q234_strip_accents": _Q234_SQL,
-        "q235_sql_table_function": _Q235_SQL,
-        "q236_sql_scripting": _Q236_SQL,
-        "q237_recursive_cte": _Q237_SQL,
-        "q238_hll_union_merge": _Q238_SQL,
-        "q239_try_arithmetic": _Q239_SQL,
-        "q240_join_strategy_hint": _Q240_SQL,
-        "q241_approx_percentile_law": _Q241_SQL,
-        "q242_array_hof_sql": _Q242_SQL,
-        "q243_date_spine": _Q243_SQL,
-        "q244_regexp_panel": _Q244_SQL,
-        "q245_multiset_ops": _Q245_SQL,
-        "q246_exists_or": _Q246_SQL,
-        "q247_nullsafe_join": _Q247_SQL,
-        "q248_regr_aggregates_law": _Q248_SQL,
-        "q249_map_functions": _Q249_SQL,
-        "q250_ignore_nulls_analytics": _Q250_SQL,
-        "q251_selection_aggregates": _Q251_SQL,
-        "q252_width_bucket_histogram": _Q252_SQL,
-        "q253_bitwise_aggregates": _Q253_SQL,
-        "q254_luhn_validation": _Q254_SQL,
-        "q255_weighted_percentile": _Q255_SQL,
     }

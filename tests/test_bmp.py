@@ -240,3 +240,33 @@ def test_rle_wrong_bpp_combination_raises():
     blob = build_rle_bmp(idx, pal, bytes([0, 1]), compression=1, bpp=4)
     with pytest.raises(BmpError, match="RLE8 requires"):
         decode_bmp(blob)
+
+
+def _rle8_claim(width: int, height: int) -> bytes:
+    """A tiny RLE8 BMP whose header claims width×height and whose pixel
+    data is a lone end-of-bitmap escape."""
+    pal = bytes(4 * 256)
+    payload = bytes([0, 1])
+    pixel_off = 14 + 40 + len(pal)
+    info = struct.pack("<IiiHHIIiiII", 40, width, height, 1, 8, 1,
+                       len(payload), 2835, 2835, 256, 0)
+    head = b"BM" + struct.pack("<IHHI", pixel_off + len(payload), 0, 0,
+                               pixel_off)
+    return head + info + pal + payload
+
+
+# (2³¹−1)² and one row over the 2²⁸-pixel cap at width 2¹⁴
+@pytest.mark.parametrize("width,height", [(2**31 - 1, 2**31 - 1),
+                                          (1 << 14, (1 << 14) + 1)])
+def test_header_over_pixel_cap_raises_before_allocating(width, height):
+    import tracemalloc
+
+    blob = _rle8_claim(width, height)
+    tracemalloc.start()
+    try:
+        with pytest.raises(BmpError, match="pixel cap"):
+            decode_bmp(blob)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 1 << 20, peak

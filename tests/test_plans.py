@@ -115,17 +115,6 @@ def test_portal_scan_no_extra_exchange(spark):
     assert s.n_exchanges == 0, s.text
 
 
-def test_q59_q60_tpch_shapes_broadcast_dims(spark, sf_dir):
-    """TPC-H Q5/Q3 shapes: every dimension join broadcasts and the whole
-    query needs at most the aggregation exchange (+AQE reads)."""
-    q5 = workload.queries()["q59_local_supplier_volume"](spark, sf_dir)
-    assert_broadcast_join(q5, min_joins=3)
-    assert_max_exchanges(q5, 2)
-    q3 = workload.queries()["q60_shipping_priority"](spark, sf_dir)
-    assert_broadcast_join(q3, min_joins=2)
-    assert_max_exchanges(q3, 2)
-
-
 def test_q56_interval_join_is_equi_join(spark, sf_dir):
     """Bucketed range join: the time-range predicate must ride an
     EQUI-join on (key, bucket) — never a BroadcastNestedLoopJoin."""
@@ -313,189 +302,6 @@ def test_q113_repeated_spans_corpus_never_sortmerges(spark, sf_dir):
     assert_no_python_in_plan(df)
 
 
-def test_q118_q120_subqueries_decorrelate_to_joins(spark, sf_dir):
-    """Correlated scalar / EXISTS / NOT-IN subqueries must rewrite into
-    joins: zero BroadcastNestedLoopJoin (the fallback a failed
-    decorrelation plans) and zero Python anywhere."""
-    for name, min_joins in (("q118_small_quantity_revenue", 2),
-                            ("q119_waiting_supplier", 2),
-                            ("q120_parts_supplier_counts", 2),
-                            ("q133_dominant_supplier", 2),
-                            # q134's scalar average runs as a one-row
-                            # subquery stage; the NOT EXISTS is the join
-                            ("q134_dormant_customers", 1),
-                            # Q4 EXISTS -> left-semi on l_orderkey
-                            ("q140_priority_count", 1),
-                            # Q2 correlated scalar MIN -> grouped agg
-                            # re-joined on p_partkey + dim joins
-                            ("q147_min_cost_supplier", 3),
-                            # Q15 scalar MAX runs as a one-row
-                            # subquery stage; the view join remains
-                            ("q148_top_supplier", 1),
-                            # Q19 OR-of-ANDs must keep the equi-key
-                            # (naive disjunction pushdown loses it and
-                            # falls into a nested loop)
-                            ("q152_disjunctive_join", 1),
-                            # Q10 fact-fact + broadcast dims
-                            ("q154_returned_revenue", 3),
-                            # Q3 segment dim + two fact scans
-                            ("q160_shipping_priority", 2),
-                            # Q5's c_nationkey = s_nationkey cycle must
-                            # close as hash joins
-                            ("q161_local_supplier_volume", 4),
-                            # Q18 IN-HAVING -> semi-join + fact joins
-                            ("q162_large_volume_customer", 3),
-                            # Q13 left-outer with ON-clause predicate
-                            ("q163_customer_distribution", 1),
-                            # Q11 HAVING vs global-total scalar
-                            # subquery: the total is a one-row stage,
-                            # never re-executed per group
-                            ("q168_important_stock", 2),
-                            # Q8 eight-relation market share: nation
-                            # joins twice, every equi-key kept
-                            ("q169_market_share", 5),
-                            # Q9 LIKE-filtered profit rollup
-                            ("q170_product_profit", 4)):
-        df = workload.queries()[name](spark, sf_dir)
-        s = summarize_plan(df)
-        assert s.n_broadcast_nl_joins == 0, (name, s.text)
-        assert s.n_broadcast_joins + s.n_sortmerge_joins >= min_joins, \
-            (name, s.text)
-        assert_no_python_in_plan(df)
-
-
-def test_q178_windows_run_over_aggregate_not_raw_join(spark, sf_dir):
-    """TPC-DS Q47 shape (round-9): exactly two Window nodes — the
-    (nation, yr) average and the shared (nation) sort for lag+lead —
-    both planned ABOVE the monthly aggregate (the Window detail
-    sections must reference the aggregated `sales`, and aggregates
-    must not outnumber the pre-window stages: windowing the raw
-    3-table join first would be a corpus-sized sort), dims broadcast,
-    no nested loop, no Python."""
-    from openpolicedata_spark.plans import _n_nodes
-
-    df = workload.queries()["q178_sales_deviation_window"](spark, sf_dir)
-    t = formatted_plan(df)
-    assert _n_nodes(t, "Window") == 2, t[:800]
-    s = summarize_plan(df)
-    assert s.n_broadcast_nl_joins == 0, s.text
-    assert s.n_broadcast_joins + s.n_sortmerge_joins >= 2, s.text
-    # the windows consume the aggregate's output column, not a raw
-    # fact column: every Window argument list mentions the aggregated
-    # alias `sales`
-    import re as _re
-
-    win_args = _re.findall(r"\(\d+\) Window\n[^(]*Arguments: \[([^\]]*)",
-                           t)
-    assert len(win_args) == 2 and all("sales" in w for w in win_args), t
-    assert_no_python_in_plan(df)
-
-
-def test_q179_exists_chain_decorrelates_to_semi_joins(spark, sf_dir):
-    """TPC-DS Q95 shape (round-9): both EXISTS over the reused
-    self-join CTE must decorrelate to LeftSemi joins (never a nested
-    loop), with the count-distinct aggregate on top."""
-    df = workload.queries()["q179_multi_supplier_returns"](spark, sf_dir)
-    t = formatted_plan(df)
-    assert t.count("LeftSemi") >= 2, t[:800]
-    s = summarize_plan(df)
-    assert s.n_broadcast_nl_joins == 0, s.text
-    assert_no_python_in_plan(df)
-
-
-def test_q180_full_outer_sortmerge_and_fused_maxsofar_window(spark,
-                                                             sf_dir):
-    """TPC-DS Q51 shape (round-9): the FULL OUTER join must plan as a
-    SortMergeJoin FullOuter (broadcast hash can't do full outer; the
-    nested-loop fallback is pinned out), and the plan carries exactly
-    three Window nodes — one running cume per channel plus ONE fused
-    node computing both max-so-far columns (identical partitioning and
-    order must share a Window)."""
-    from openpolicedata_spark.plans import _n_nodes
-
-    df = workload.queries()["q180_cumulative_crossover"](spark, sf_dir)
-    t = formatted_plan(df)
-    assert "FullOuter" in t, t[:800]
-    assert _n_nodes(t, "Window") == 3, t[:800]
-    s = summarize_plan(df)
-    assert s.n_broadcast_nl_joins == 0, s.text
-    assert s.n_sortmerge_joins >= 1, s.text
-    assert_no_python_in_plan(df)
-
-
-def test_q183_set_ops_plan_as_semi_and_anti_joins(spark, sf_dir):
-    """INTERSECT must plan as LeftSemi and both EXCEPTs as LeftAnti
-    over the distinct year slices — never a nested loop (round-9: the
-    two ANSI set ops the corpus previously lacked)."""
-    df = workload.queries()["q183_customer_set_ops"](spark, sf_dir)
-    t = formatted_plan(df)
-    assert t.count("LeftSemi") >= 2, t[:800]    # tree + detail
-    assert t.count("LeftAnti") >= 4, t[:800]    # two joins x2
-    s = summarize_plan(df)
-    assert s.n_broadcast_nl_joins == 0, s.text
-    assert_no_python_in_plan(df)
-
-
-def test_q184_recursive_cte_unionloop_and_closed_form(spark, sf_dir):
-    """Spark 4 WITH RECURSIVE plans as a UnionLoop whose recursion
-    frontier is (id, depth) pairs; the computed depths must equal the
-    binary-heap closed form floor(log2(id)) — an independent check on
-    the iteration, not a replay of it."""
-    import math
-
-    df = workload.queries()["q184_recursive_tree_depth"](spark, sf_dir)
-    t = formatted_plan(df)
-    assert "UnionLoop" in t, t[:800]
-    assert_no_python_in_plan(df)
-    rows = df.collect()
-    assert len(rows) > 0
-    for r in rows:
-        assert r.depth == int(math.floor(math.log2(r.doc_id))), r
-
-
-def test_q188_q75_multi_grouping_single_expand(spark, sf_dir):
-    """Multi-grouping aggregates (round 10: q188's asymmetric GROUPING
-    SETS; q75's full CUBE pinned alongside) must plan as ONE Expand
-    node — each input row replicated once per grouping set into a
-    single map-side-combining aggregate — never N unioned re-scans of
-    the fact table."""
-    from openpolicedata_spark.plans import _n_nodes
-
-    for name in ("q188_grouping_sets", "q75_cube_order_stats"):
-        df = workload.queries()[name](spark, sf_dir)
-        t = formatted_plan(df)
-        assert _n_nodes(t, "Expand") == 1, (name, t[:800])
-        assert _n_nodes(t, "Scan parquet") <= 1, (name, t[:800])
-        assert_no_python_in_plan(df)
-
-
-def test_q191_null_aware_anti_join_and_three_valued_nulls(spark,
-                                                          sf_dir):
-    """NOT IN over a compile-time-nullable subquery column must plan
-    as Spark's null-aware anti join (a broadcast LeftAnti with
-    isNullAwareAntiJoin=true — never a per-row nested loop), and the
-    three-valued semantics hold: ONE actual NULL in the subquery
-    empties the result."""
-    df = workload.queries()["q191_null_aware_anti"](spark, sf_dir)
-    # the isNullAwareAntiJoin flag prints as the bare trailing `true`
-    # in BroadcastHashJoin's simple string (Spark 4.1 shows it there,
-    # not in formatted explain): "..., LeftAnti, BuildRight, true"
-    simple = df._jdf.queryExecution().executedPlan().toString()
-    assert "LeftAnti, BuildRight, true" in simple, simple[:1200]
-    assert_no_python_in_plan(df)
-    assert df.count() > 0
-    # poison the inner side with a real NULL: x NOT IN (...) is now
-    # never TRUE, so the SAME query shape returns zero rows
-    poisoned = spark.sql("""
-        SELECT c_custkey FROM q191_c
-        WHERE c_custkey NOT IN (
-            SELECT CASE WHEN o_orderkey % 2 = 0 THEN NULL
-                        ELSE o_custkey END
-            FROM q191_o)
-    """)
-    assert poisoned.count() == 0
-
-
 def test_q156_adc_tables_constant_fold_to_literals(spark, sf_dir):
     """Round-7 verdict item 1, pinned: the residual-ADC tables must
     reach execution as ONE folded nested-array Literal per subspace
@@ -507,44 +313,6 @@ def test_q156_adc_tables_constant_fold_to_literals(spark, sf_dir):
     assert opt.count("element_at(array(element_at") == 0
     assert opt.count("element_at(element_at([[") >= 8, \
         opt[:500]
-
-
-def test_q173_pure_scan_aggregate(spark, sf_dir):
-    """Q6 shape: all three predicates pushed to the parquet scan, zero
-    joins, and exactly one exchange (the one-row global-agg merge —
-    map-side partials do the work). The last of the 22 TPC-H shapes."""
-    df = workload.queries()["q173_forecast_revenue"](spark, sf_dir)
-    for col in ("l_shipdate", "l_discount", "l_quantity"):
-        assert_filter_pushed(df, col)
-    assert_column_pruned(df, "l_orderkey")
-    s = summarize_plan(df)
-    assert (s.n_broadcast_joins + s.n_sortmerge_joins
-            + s.n_broadcast_nl_joins) == 0, s.text
-    assert_max_exchanges(df, 1)
-    assert_no_python_in_plan(df)
-
-
-def test_q168_global_total_is_one_row_subquery_stage(spark, sf_dir):
-    """Q11 shape: the HAVING threshold must be planned as an
-    uncorrelated scalar-subquery stage (one row, computed once) —
-    the formatted plan carries a Subquery section hosting its own
-    aggregate, and the outer plan never nested-loops."""
-    df = workload.queries()["q168_important_stock"](spark, sf_dir)
-    t = formatted_plan(df)
-    assert "Subquery" in t, t
-    s = summarize_plan(df)
-    assert s.n_broadcast_nl_joins == 0, s.text
-    assert_no_python_in_plan(df)
-
-
-def test_q121_range_frame_single_user_exchange(spark, sf_dir):
-    """The RANGE-frame window needs exactly the user_id hash exchange;
-    everything else is the window's own in-partition sort."""
-    df = workload.queries()["q121_trailing_window"](spark, sf_dir)
-    assert_max_exchanges(df, 1)
-    t = formatted_plan(df)
-    assert "Window" in t
-    assert_no_python_in_plan(df)
 
 
 def test_q122_join_discovery_broadcasts_cardinalities(spark, sf_dir):
@@ -618,23 +386,6 @@ def test_q193_scd2_one_exchange_two_windows(spark, sf_dir):
     assert_no_python_in_plan(df)
 
 
-def test_q194_self_join_reuses_aggregate_exchange(spark, sf_dir):
-    """Aggregate-once self-join (round-10): under the MERGE hint the
-    two join inputs are identical subtrees — the FINAL adaptive plan
-    must contain a ReusedExchange (the base aggregate is computed
-    ONCE; without reuse a 100 TB fact is scanned and aggregated
-    twice) feeding a SortMergeJoin whose residual carries the two
-    non-equi growth conditions."""
-    from openpolicedata_spark.plans import plan_text
-
-    df = workload.queries()["q194_reused_aggregate_join"](spark, sf_dir)
-    df.collect()
-    final = plan_text(df)
-    assert "ReusedExchange" in final, final[:2000]
-    assert "SortMergeJoin" in final, final[:2000]
-    assert_no_python_in_plan(df)
-
-
 def test_dynamic_partition_pruning_reaches_partition_filters(
         spark, sf_dir, tmp_path):
     """Dynamic partition pruning (round-10 pin): at 100 TB the fact is
@@ -659,57 +410,6 @@ def test_dynamic_partition_pruning_reaches_partition_filters(
     pf = [ln for ln in t.splitlines() if "PartitionFilters" in ln]
     assert pf and "dynamicpruning" in pf[0], pf
     assert j.count() == fact.where(F.col("yr") == 1995).count()
-
-
-def test_q196_lateral_decorrelates_no_nested_loop(spark, sf_dir):
-    """Correlated LATERAL subquery (round-10): the per-customer scalar
-    aggregate must decorrelate to a keyed aggregate JOINED back —
-    never a per-row nested-loop re-execution — with the order
-    aggregation planned BELOW the join."""
-    from openpolicedata_spark.plans import _n_nodes
-
-    df = workload.queries()["q196_lateral_decorrelate"](spark, sf_dir)
-    s = summarize_plan(df)
-    assert s.n_broadcast_nl_joins == 0, s.text
-    assert s.n_broadcast_joins + s.n_sortmerge_joins >= 1, s.text
-    # the lateral's SUM must appear as a real aggregate node (the
-    # decorrelated per-custkey rollup), not a subquery marker
-    assert _n_nodes(s.text, "HashAggregate") >= 3, s.text
-    assert_no_python_in_plan(df)
-
-
-def test_q201_unpivot_one_expand_one_scan(spark, sf_dir):
-    """Declarative UNPIVOT (round-10): the four-measure melt must plan
-    as ONE Expand over ONE fact scan — four unioned scans would read
-    a 100 TB lineitem four times."""
-    from openpolicedata_spark.plans import _n_nodes
-
-    df = workload.queries()["q201_unpivot_metrics"](spark, sf_dir)
-    t = formatted_plan(df)
-    assert _n_nodes(t, "Expand") == 1, t[:800]
-    assert _n_nodes(t, "Scan") == 1, t[:800]
-    assert_no_python_in_plan(df)
-
-
-def test_q202_freq_cte_planned_once_three_reuses(spark, sf_dir):
-    """Multi-consumer CTE reuse (round 11, TPC-DS Q23 class): the
-    frequent-parts aggregate feeds FOUR IN-subquery consumers — the
-    final adaptive plan must build it ONCE and feed the other three
-    from ReusedExchange nodes (counted in the simple-tree final plan,
-    where each consumer prints one line; the formatted-explain
-    double-print gotcha doesn't apply to plan_text)."""
-    import re as _re
-
-    from openpolicedata_spark.plans import plan_text
-
-    df = workload.queries()["q202_multi_consumer_reuse"](spark, sf_dir)
-    df.collect()
-    final = plan_text(df)
-    # strip the "== Initial Plan ==" section: reuse is a physical-plan
-    # property of the FINAL plan only
-    final = final.split("== Initial Plan ==")[0]
-    assert len(_re.findall(r"ReusedExchange", final)) == 3, final[:3000]
-    assert_no_python_in_plan(df)
 
 
 @pytest.mark.parametrize("parts", [8, 17])
@@ -762,20 +462,6 @@ def test_q203_aqe_splits_skewed_partition(spark, sf_dir, parts):
                 spark.conf.set(k, v)
 
 
-def test_q204_pivot_one_scan_no_expand(spark, sf_dir):
-    """Declarative SQL PIVOT (round 11): the two-column pivot must
-    plan as aggregates over ONE fact scan — never per-value filtered
-    re-reads (Union) or an Expand fan-out."""
-    from openpolicedata_spark.plans import _n_nodes
-
-    df = workload.queries()["q204_sql_pivot"](spark, sf_dir)
-    t = formatted_plan(df)
-    assert _n_nodes(t, "Scan") == 1, t[:800]
-    assert _n_nodes(t, "Expand") == 0, t[:800]
-    assert _n_nodes(t, "Union") == 0, t[:800]
-    assert_no_python_in_plan(df)
-
-
 def test_q205_point_in_time_small_broadcast_one_exchange(spark, sf_dir):
     """Point-in-time SCD2 snapshot (round 11): the dimension build
     keeps q193's one-keyed-exchange + two-window shape, and the
@@ -795,92 +481,6 @@ def test_q205_point_in_time_small_broadcast_one_exchange(spark, sf_dir):
     assert_no_python_in_plan(df)
 
 
-def test_q206_scalar_subqueries_merge_to_one_scan(spark, sf_dir):
-    """Scalar-subquery merging (round 11): four scalar aggregates over
-    the same filtered fact must fuse into ONE aggregate over ONE
-    'Scan parquet' (counted across the whole formatted plan including
-    the Subqueries section), with ReusedSubquery markers for the other
-    three — and the shared filter pushed into that one scan. In
-    Spark 4 the merge only materializes in the FINAL adaptive plan
-    (the collect-first gotcha, measured round 11: 4 scans / 0
-    ReusedSubquery before execution, 1 / 3 after)."""
-    import re as _re
-
-    from openpolicedata_spark.plans import _n_nodes
-
-    df = workload.queries()["q206_merged_scalar_subqueries"](spark,
-                                                             sf_dir)
-    df.collect()
-    t = formatted_plan(df)
-    assert _n_nodes(t, "Scan parquet") == 1, t[:1200]
-    assert "ReusedSubquery" in t, t[:1200]
-    # all four functions fused into the single aggregate
-    m = _re.search(r"Functions \[4\]: \[partial_count.*partial_sum"
-                   r".*partial_max.*partial_min", t, _re.DOTALL)
-    assert m, t[:2500]
-    assert_filter_pushed(df, "GreaterThan(l_quantity")
-    assert_no_python_in_plan(df)
-
-
-def test_q207_runtime_bloom_filter_injected(spark, sf_dir):
-    """InjectRuntimeFilter (round 11 — the third runtime plan class
-    after DPP and skew-split): with the runtime-filter knobs on, the
-    selective dim side must build a bloom_filter_agg over its join
-    keys and the FACT side's filter must gain might_contain(...) —
-    the engine-native decontamination join. Knobs are set only here
-    (thresholds scaled to the test data) and restored; the workload
-    query stays correctness-only."""
-    knobs = {
-        "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
-        "spark.sql.optimizer.runtime.bloomFilter."
-        "creationSideThreshold": "100MB",
-        "spark.sql.optimizer.runtime.bloomFilter."
-        "applicationSideScanSizeThreshold": "1KB",
-        # the rule SKIPS joins whose build side could broadcast by
-        # size (a broadcast join needs no runtime filter) — the tiny
-        # test dim must look non-broadcastable for injection to apply
-        "spark.sql.autoBroadcastJoinThreshold": "-1",
-    }
-    old = {}
-    for k, v in knobs.items():
-        try:
-            old[k] = spark.conf.get(k)
-        except Exception:
-            old[k] = None
-        spark.conf.set(k, v)
-    try:
-        df = workload.queries()["q207_runtime_bloom_join"](spark,
-                                                           sf_dir)
-        t = formatted_plan(df)
-        assert "bloom_filter_agg" in t, t[:2000]
-        assert "might_contain" in t, t[:2000]
-        # the injected probe sits in the FACT side's Filter condition
-        probe = [ln for ln in t.splitlines()
-                 if "Condition" in ln and "might_contain" in ln]
-        assert probe and "l_partkey" in probe[0], probe
-        assert_no_python_in_plan(df)
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-
-def test_q208_xml_parse_is_row_local(spark, sf_dir):
-    """from_xml round trip (round 11): all XML construction and
-    parsing is row-local expression work — exactly ONE exchange (the
-    final lang rollup), one scan, zero Python."""
-    from openpolicedata_spark.plans import _n_nodes
-
-    df = workload.queries()["q208_xml_roundtrip"](spark, sf_dir)
-    t = formatted_plan(df)
-    assert _n_nodes(t, "Scan parquet") == 1, t[:800]
-    assert "from_xml" in t, t[:800]
-    assert_max_exchanges(df, 1)
-    assert_no_python_in_plan(df)
-
-
 def test_q209_trend_single_keyed_aggregate(spark, sf_dir):
     """Per-key OLS trend (round 11): the whole fit is ONE keyed
     aggregate of five integer sufficient statistics (map-side
@@ -891,269 +491,6 @@ def test_q209_trend_single_keyed_aggregate(spark, sf_dir):
     assert "partial_" in s.text, s.text[:800]
     assert s.n_broadcast_joins + s.n_sortmerge_joins == 0, s.text
     assert_max_exchanges(df, 1)
-    assert_no_python_in_plan(df)
-
-
-def test_q210_session_window_single_keyed_exchange(spark, sf_dir):
-    """Batch session_window (round 11): Spark's native gap-session
-    operator must ride ONE hash exchange on the key (session merging
-    happens in-partition after the shuffle) with zero joins and zero
-    Python."""
-    df = workload.queries()["q210_session_windows"](spark, sf_dir)
-    t = formatted_plan(df)
-    assert "session_window" in t, t[:800]
-    s = summarize_plan(df)
-    assert s.n_broadcast_joins + s.n_sortmerge_joins == 0, s.text
-    assert_max_exchanges(df, 1)
-    assert_no_python_in_plan(df)
-
-
-def test_q211_sql_udf_inlines_no_python(spark, sf_dir):
-    """SQL-defined function (round 11): the body must INLINE into the
-    plan as a JVM expression — zero Python eval nodes, one scan, the
-    decimal multiply visible in the aggregate (the UDF surface that
-    keeps whole-stage codegen)."""
-    from openpolicedata_spark.plans import _n_nodes
-
-    df = workload.queries()["q211_sql_udf"](spark, sf_dir)
-    t = formatted_plan(df)
-    assert _n_nodes(t, "Scan parquet") == 1, t[:800]
-    assert "partial_sum" in t, t[:800]
-    assert_max_exchanges(df, 1)
-    assert_no_python_in_plan(df)
-
-
-def test_q212_group_by_all_plans_like_explicit(spark, sf_dir):
-    """GROUP BY ALL (round 11): the sugar must plan exactly like the
-    explicit grouping — one map-side-combined aggregate over one scan,
-    nothing extra."""
-    from openpolicedata_spark.plans import _n_nodes
-
-    df = workload.queries()["q212_group_by_all"](spark, sf_dir)
-    t = formatted_plan(df)
-    assert _n_nodes(t, "Scan parquet") == 1, t[:800]
-    assert _n_nodes(t, "HashAggregate") == 2, t[:800]
-    assert "partial_" in t, t[:800]
-    assert_max_exchanges(df, 1)
-    assert_no_python_in_plan(df)
-
-
-def test_q213_window_group_limit_partial_and_final(spark, sf_dir):
-    """Rank-limit pushdown (round 12): `row_number() <= 3` must plan a
-    WindowGroupLimit pair — PARTIAL below the exchange (each map task
-    forwards at most k rows per key, so the shuffle carries
-    O(keys × k)) and FINAL above it, before the full Window sort.
-    Turning the optimizer rule off (threshold = -1) must remove both —
-    proving the pin tests the rule, not a coincidence of the shape."""
-    from openpolicedata_spark.plans import _n_nodes
-
-    df = workload.queries()["q213_topk_per_key"](spark, sf_dir)
-    t = formatted_plan(df)
-    assert _n_nodes(t, "WindowGroupLimit") == 2, t[:1200]
-    assert "Partial" in t and "Final" in t, t[:1200]
-    # exactly one true Window node ("Window" also prefix-matches the
-    # WindowGroupLimit headers, hence the subtraction)
-    assert (_n_nodes(t, "Window")
-            - _n_nodes(t, "WindowGroupLimit")) == 1, t[:1200]
-    assert_no_python_in_plan(df)
-
-    knob = "spark.sql.optimizer.windowGroupLimitThreshold"
-    old = spark.conf.get(knob, None)
-    spark.conf.set(knob, "-1")
-    try:
-        off = formatted_plan(
-            workload.queries()["q213_topk_per_key"](spark, sf_dir))
-        assert _n_nodes(off, "WindowGroupLimit") == 0, off[:1200]
-    finally:
-        if old is None:
-            spark.conf.unset(knob)
-        else:
-            spark.conf.set(knob, old)
-
-
-def test_q214_cbo_reorders_bad_join_order(spark, sf_dir):
-    """Cost-based join reorder (round 12): over ANALYZEd catalog
-    tables with CBO + joinReorder on, the deliberately bad FROM order
-    (fact⋈fact first, selective dims last) must be REORDERED so the
-    nation-filtered customer reduction joins FIRST and the lineitem
-    fact joins LAST; without CBO the syntactic order survives. Tables
-    are external (LOCATION over the testdata parquet — stats in the
-    session catalog, no data copied) and dropped after. The workload
-    entry itself runs statless on the default session (exact-oracle
-    correctness only) — the q203 discipline."""
-    import re as _re
-
-    from openpolicedata_spark.workload import _Q214_BODY
-
-    names = ("lineitem", "orders", "customer", "nation")
-    for t in names:
-        spark.sql(f"DROP TABLE IF EXISTS cbo_{t}")
-        spark.sql(f"CREATE TABLE cbo_{t} USING parquet "
-                  f"LOCATION '{sf_dir}/{t}.parquet'")
-        spark.sql(f"ANALYZE TABLE cbo_{t} COMPUTE STATISTICS")
-    spark.sql("ANALYZE TABLE cbo_lineitem COMPUTE STATISTICS "
-              "FOR COLUMNS l_orderkey")
-    spark.sql("ANALYZE TABLE cbo_orders COMPUTE STATISTICS "
-              "FOR COLUMNS o_orderkey, o_custkey")
-    spark.sql("ANALYZE TABLE cbo_customer COMPUTE STATISTICS "
-              "FOR COLUMNS c_custkey, c_nationkey")
-    spark.sql("ANALYZE TABLE cbo_nation COMPUTE STATISTICS "
-              "FOR COLUMNS n_nationkey, n_name")
-    body = _Q214_BODY.format(l="cbo_lineitem", o="cbo_orders",
-                             c="cbo_customer", n="cbo_nation")
-
-    def relation_order():
-        opt = spark.sql(body)._jdf.queryExecution() \
-            .optimizedPlan().toString()
-        return [m for m in _re.findall(r"\.cbo_(\w+)\[", opt)]
-
-    knobs = {"spark.sql.cbo.enabled": "true",
-             "spark.sql.cbo.joinReorder.enabled": "true"}
-    old = {k: spark.conf.get(k) for k in knobs}
-    try:
-        # baseline: the syntactic (bad) order survives without CBO
-        assert relation_order() == ["lineitem", "orders",
-                                    "customer", "nation"]
-        for k, v in knobs.items():
-            spark.conf.set(k, v)
-        reordered = relation_order()
-        # the deepest (first-listed) relation must now be the
-        # selective dim chain, and the big fact must join last
-        assert reordered[0] in ("customer", "nation"), reordered
-        assert reordered[-1] == "lineitem", reordered
-        # ...and the answer is unchanged (the exact oracle's values)
-        got = {(r.n_name, r.n_items)
-               for r in spark.sql(body)
-               .select("n_name", "n_items").collect()}
-        noncbo = {(r.n_name, r.n_items) for r in
-                  workload.queries()["q214_cbo_join_reorder"](
-                      spark, sf_dir)
-                  .select("n_name", "n_items").collect()}
-        assert got == noncbo and len(got) == 2
-    finally:
-        for k, v in old.items():
-            spark.conf.set(k, v)
-        for t in names:
-            spark.sql(f"DROP TABLE IF EXISTS cbo_{t}")
-
-
-def test_q215_rollup_topk_one_expand_group_limited(spark, sf_dir):
-    """TPC-DS Q67-class (round 12): the ROLLUP must plan as ONE Expand
-    feeding one aggregate pair (never per-level re-scans), and the
-    rank filter must push a WindowGroupLimit below the full Window —
-    the composition that keeps window state bounded after the ×4
-    rollup fan-out."""
-    from openpolicedata_spark.plans import _n_nodes
-
-    df = workload.queries()["q215_rollup_topk"](spark, sf_dir)
-    t = formatted_plan(df)
-    assert _n_nodes(t, "Scan parquet") == 1, t[:1200]
-    assert _n_nodes(t, "Expand") == 1, t[:1200]
-    assert _n_nodes(t, "WindowGroupLimit") >= 1, t[:1200]
-    assert (_n_nodes(t, "Window")
-            - _n_nodes(t, "WindowGroupLimit")) == 1, t[:1200]
-    assert_no_python_in_plan(df)
-
-
-def test_q217_lateral_alias_single_aggregate(spark, sf_dir):
-    """Lateral column aliases (round 12): the fee/net chain must
-    resolve into projections over ONE aggregate pair and one scan —
-    the sum computes once (no re-evaluation per alias, no extra
-    exchange), exactly as if the expression were pasted."""
-    from openpolicedata_spark.plans import _n_nodes
-
-    df = workload.queries()["q217_lateral_column_alias"](spark, sf_dir)
-    t = formatted_plan(df)
-    assert _n_nodes(t, "Scan parquet") == 1, t[:800]
-    assert _n_nodes(t, "HashAggregate") == 2, t[:800]
-    assert "partial_sum" in t, t[:800]
-    assert_max_exchanges(df, 1)
-    assert_no_python_in_plan(df)
-
-
-def test_q218_aggregate_pushdown_to_parquet_footers(spark, sf_dir):
-    """V2 parquet aggregate pushdown (round 12): with the V2 reader +
-    aggregatePushdown on, the COUNT/MIN/MAX panel must land in the
-    scan as PushedAggregation (answered from row-group footers — a
-    metadata sweep, not a data scan, at 100 TB), with values identical
-    to the default-session run; and the measured limitation is pinned:
-    one TIMESTAMP_NTZ MIN in the panel silently disables the WHOLE
-    pushdown (parquet stats limitation) — keep stats panels numeric."""
-    import re as _re
-
-    base = workload.queries()["q218_stats_panel"](spark, sf_dir)
-    want = base.collect()
-    knobs = {"spark.sql.parquet.aggregatePushdown": "true",
-             "spark.sql.sources.useV1SourceList": "",
-             # the scan's metadata string truncates at 100 chars by
-             # default and would cut the pushed list mid-bracket
-             "spark.sql.maxMetadataStringLength": "2000"}
-    old = {}
-    for k, v in knobs.items():
-        try:
-            old[k] = spark.conf.get(k)
-        except Exception:
-            old[k] = None
-        spark.conf.set(k, v)
-    try:
-        df = workload.queries()["q218_stats_panel"](spark, sf_dir)
-        t = df._jdf.queryExecution().executedPlan().toString()
-        m = _re.search(r"PushedAggregation: \[([^\]]*)\]", t)
-        assert m, t[:1200]
-        pushed = m.group(1)
-        for agg in ("COUNT(*)", "COUNT(l_orderkey)", "MIN(l_orderkey)",
-                    "MAX(l_orderkey)", "MIN(l_quantity)",
-                    "MAX(l_extendedprice)"):
-            assert agg in pushed, (agg, pushed)
-        assert df.collect() == want
-        # the NTZ poison pill: one timestamp MIN degrades to a scan
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet") \
-            .createOrReplaceTempView("q218_ntz")
-        t2 = spark.sql(
-            "SELECT COUNT(*) AS n, MIN(l_shipdate) AS lo FROM q218_ntz"
-        )._jdf.queryExecution().executedPlan().toString()
-        m2 = _re.search(r"PushedAggregation: \[([^\]]*)\]", t2)
-        assert m2 is not None and m2.group(1) == "", t2[:1200]
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-
-def test_q219_same_spec_windows_collapse_to_one_node(spark, sf_dir):
-    """CollapseWindow (round 12): three analytics over one window spec
-    — rank, running DECIMAL sum, running max, with two different
-    frame kinds — must share ONE Window node over ONE exchange (three
-    windowed columns, one shuffle+sort)."""
-    from openpolicedata_spark.plans import _n_nodes
-
-    df = workload.queries()["q219_collapsed_windows"](spark, sf_dir)
-    t = formatted_plan(df)
-    assert (_n_nodes(t, "Window")
-            - _n_nodes(t, "WindowGroupLimit")) == 1, t[:1200]
-    assert _n_nodes(t, "Sort") == 1, t[:1200]
-    assert_max_exchanges(df, 1)
-    assert_no_python_in_plan(df)
-
-
-def test_q220_offset_plans_heap_take_no_global_sort(spark, sf_dir):
-    """OFFSET pagination (round 12): LIMIT 5 OFFSET 10 must plan ONE
-    TakeOrderedAndProject(limit=15, offset=10) — per-partition heaps
-    + a driver merge that skips the offset — with NO Sort node (a
-    global sort of the aggregate would be the naive plan)."""
-    from openpolicedata_spark.plans import _n_nodes
-
-    df = workload.queries()["q220_paged_topn"](spark, sf_dir)
-    import re as _re
-
-    t = formatted_plan(df)
-    assert _n_nodes(t, "TakeOrderedAndProject") == 1, t[:1200]
-    # formatted detail renders the node as
-    # "Arguments: <limit+offset>, [order...], [output...], <offset>"
-    assert _re.search(r"Arguments: 15, \[total.*, 10\n", t), t[:1200]
-    assert _n_nodes(t, "Sort") == 0, t[:1200]
     assert_no_python_in_plan(df)
 
 
@@ -1205,746 +542,6 @@ def test_limit_pushes_through_unpartitioned_window(spark, sf_dir):
             spark.conf.unset(knob)
         else:
             spark.conf.set(knob, old)
-
-
-def test_q221_pipe_syntax_plans_identical_to_classic(spark, sf_dir):
-    """SQL pipe syntax (round 13): FROM |> WHERE |> AGGREGATE must
-    OPTIMIZE to the exact plan of the classic SELECT form — identical
-    optimized logical plans up to expression ids (the q212/q217
-    sugar-must-cost-nothing rule, taken to full plan equality), same
-    pushed filter, one partial+final aggregate."""
-    import re as _re
-
-    from openpolicedata_spark.plans import _n_nodes
-    from openpolicedata_spark.workload import (
-        _Q221_CLASSIC_BODY,
-        _Q221_PIPE_BODY,
-    )
-
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet") \
-        .createOrReplaceTempView("q221_pin_l")
-
-    def norm(df):
-        s = df._jdf.queryExecution().optimizedPlan().toString()
-        return _re.sub(r"#\d+", "#x", s)
-
-    pipe = spark.sql(_Q221_PIPE_BODY.format(l="q221_pin_l"))
-    classic = spark.sql(_Q221_CLASSIC_BODY.format(l="q221_pin_l"))
-    assert pipe.columns == classic.columns
-    assert norm(pipe) == norm(classic), (
-        norm(pipe)[:600] + "\n!=\n" + norm(classic)[:600])
-    t = formatted_plan(pipe)
-    assert_filter_pushed(pipe, "l_quantity")
-    assert _n_nodes(t, "HashAggregate") == 2, t[:800]
-    assert_max_exchanges(pipe, 1)
-    assert_no_python_in_plan(pipe)
-
-
-def test_q222_keyset_page_is_constant_size_heap(spark, sf_dir):
-    """Keyset pagination (round 13): the page must come from ONE
-    TakeOrderedAndProject(limit=5, offset 0) over the boundary-
-    filtered aggregate, ZERO Sort nodes anywhere — the heap is page-
-    sized wherever the page sits. Contrast: the OFFSET form's heap
-    grows with page depth (page 1001 plans Arguments: 5015, the
-    O(N·page) cost q220's docstring warns about) while the keyset
-    plan is byte-identical in shape for a deep boundary."""
-    import re as _re
-
-    from openpolicedata_spark.plans import _n_nodes
-
-    df = workload.queries()["q222_keyset_pagination"](spark, sf_dir)
-    t = formatted_plan(df)
-    assert _n_nodes(t, "Sort") == 0, t[:1500]
-    takes = _re.findall(r"Arguments: (\d+), \[", t)
-    # boundary derivation (10-row page-2 tail, 1-row min) + the page
-    assert sorted(int(x) for x in takes) == [1, 5, 10], t[:1500]
-    assert_no_python_in_plan(df)
-
-    # the OFFSET form at depth: heap = limit+offset (5015), vs the
-    # keyset page staying at 5 however deep the boundary
-    spark.read.parquet(f"{sf_dir}/orders.parquet") \
-        .createOrReplaceTempView("q222_pin_o")
-    deep = spark.sql("""
-        SELECT o_custkey,
-               CAST(SUM(CAST(o_totalprice AS DECIMAL(14,2)))
-                    AS DOUBLE) AS total
-        FROM q222_pin_o GROUP BY o_custkey
-        ORDER BY total DESC, o_custkey LIMIT 5 OFFSET 5010""")
-    td = formatted_plan(deep)
-    assert _re.search(r"Arguments: 5015, \[total", td), td[:1200]
-
-
-def test_q223_parameterized_plans_identical_to_literal(spark, sf_dir):
-    """Named parameter markers (round 13): args bind as literals at
-    analysis time, so the optimized plan must be IDENTICAL to the
-    literal-substituted query up to expression ids — including the
-    parameter value constant-folded into the parquet PushedFilters."""
-    import re as _re
-
-    from openpolicedata_spark.workload import (
-        _Q223_ARGS,
-        _Q223_LITERAL_BODY,
-        _Q223_PARAM_BODY,
-    )
-
-    spark.read.parquet(f"{sf_dir}/orders.parquet") \
-        .createOrReplaceTempView("q223_pin_o")
-
-    def norm(df):
-        s = df._jdf.queryExecution().optimizedPlan().toString()
-        return _re.sub(r"#\d+", "#x", s)
-
-    p = spark.sql(_Q223_PARAM_BODY.format(o="q223_pin_o"),
-                  args=dict(_Q223_ARGS))
-    l = spark.sql(_Q223_LITERAL_BODY.format(o="q223_pin_o"))
-    assert norm(p) == norm(l), norm(p)[:600] + "\n!=\n" + norm(l)[:600]
-    s = assert_filter_pushed(p, "o_orderstatus")
-    assert any("EqualTo(o_orderstatus,O)" in f for f in
-               s.pushed_filters), s.pushed_filters
-    assert_no_python_in_plan(p)
-
-
-def test_q224_identifier_resolves_like_direct_reference(spark, sf_dir):
-    """EXECUTE IMMEDIATE + session variable + IDENTIFIER() (round 13):
-    the dynamic form must optimize to EXACTLY the plan of naming the
-    table directly — the indirection is an analysis-time binding, not
-    a runtime layer."""
-    import re as _re
-
-    from openpolicedata_spark.workload import _Q224_INNER
-
-    spark.read.parquet(f"{sf_dir}/orders.parquet") \
-        .createOrReplaceTempView("q224_pin_o")
-    spark.sql("DECLARE OR REPLACE VARIABLE q224_pin_tbl STRING")
-    spark.sql("SET VAR q224_pin_tbl = 'q224_pin_o'")
-
-    def norm(df):
-        s = df._jdf.queryExecution().optimizedPlan().toString()
-        return _re.sub(r"#\d+", "#x", s)
-
-    dyn = spark.sql(f"EXECUTE IMMEDIATE '{_Q224_INNER}' "
-                    f"USING q224_pin_tbl AS t")
-    static = spark.sql(_Q224_INNER.replace("IDENTIFIER(:t)",
-                                           "q224_pin_o"))
-    assert norm(dyn) == norm(static), (
-        norm(dyn)[:600] + "\n!=\n" + norm(static)[:600])
-    assert_no_python_in_plan(dyn)
-
-
-def test_q225_order_by_all_plans_like_explicit(spark, sf_dir):
-    """ORDER BY ALL (round 13): must optimize to the explicit
-    left-to-right column order — with the LIMIT, one
-    TakeOrderedAndProject over the aggregate, zero Sort nodes."""
-    import re as _re
-
-    from openpolicedata_spark.plans import _n_nodes
-    from openpolicedata_spark.workload import _Q225_BODY
-
-    spark.read.parquet(f"{sf_dir}/orders.parquet") \
-        .createOrReplaceTempView("q225_pin_o")
-
-    def norm(df):
-        s = df._jdf.queryExecution().optimizedPlan().toString()
-        return _re.sub(r"#\d+", "#x", s)
-
-    sugar = spark.sql(_Q225_BODY.format(o="q225_pin_o"))
-    explicit = spark.sql("""
-        SELECT o_orderstatus AS status, o_orderpriority AS pri,
-               CAST(COUNT(*) AS BIGINT) AS n,
-               CAST(SUM(CAST(o_totalprice AS DECIMAL(14,2)))
-                    AS DOUBLE) AS total
-        FROM q225_pin_o
-        GROUP BY o_orderstatus, o_orderpriority
-        ORDER BY status, pri, n, total LIMIT 7""")
-    assert norm(sugar) == norm(explicit), (
-        norm(sugar)[:600] + "\n!=\n" + norm(explicit)[:600])
-    t = formatted_plan(sugar)
-    assert _n_nodes(t, "TakeOrderedAndProject") == 1, t[:1000]
-    assert _n_nodes(t, "Sort") == 0, t[:1000]
-    assert_no_python_in_plan(sugar)
-
-
-def test_q226_star_except_prunes_scan(spark, sf_dir):
-    """SELECT * EXCEPT (round 13): the sugar must prune the parquet
-    scan to exactly the kept columns — every excepted column absent
-    from ReadSchema, every kept column present (the outer aggregate
-    consumes all five, so the except-list is the binding bound)."""
-    df = workload.queries()["q226_star_except"](spark, sf_dir)
-    for gone in ("l_partkey", "l_suppkey", "l_extendedprice",
-                 "l_discount", "l_tax", "l_shipdate"):
-        assert_column_pruned(df, gone)
-    t = formatted_plan(df)
-    import re as _re
-
-    rs = _re.search(r"ReadSchema: struct<([^>]*)>", t).group(1)
-    kept = sorted(c.split(":")[0] for c in rs.split(",") if c)
-    assert kept == ["l_linenumber", "l_linestatus", "l_orderkey",
-                    "l_quantity", "l_returnflag"], kept
-    assert_no_python_in_plan(df)
-
-
-def test_q228_collation_costs_sort_aggregate(spark, sf_dir):
-    """Collated grouping (round 13) — the honest cost pin: a
-    UTF8_LCASE group key DISABLES hash aggregation (measured: Spark
-    4.1 plans SortAggregate pairs for collated keys), but the shape
-    is still partial+final over ONE exchange, so the map-side combine
-    survives. The semantics pin: collated equality equals the lower()
-    rewrite exactly."""
-    from openpolicedata_spark.plans import _n_nodes
-
-    df = workload.queries()["q228_collated_group"](spark, sf_dir)
-    t = formatted_plan(df)
-    assert _n_nodes(t, "SortAggregate") == 2, t[:1000]
-    assert _n_nodes(t, "HashAggregate") == 0, t[:1000]
-    assert_max_exchanges(df, 1)
-    assert_no_python_in_plan(df)
-
-    spark.read.parquet(f"{sf_dir}/documents.parquet") \
-        .createOrReplaceTempView("q228_pin_d")
-    a = spark.sql("SELECT count(*) FROM (SELECT upper(lang) COLLATE "
-                  "UTF8_LCASE AS k FROM q228_pin_d) WHERE k = 'en'"
-                  ).first()[0]
-    b = spark.sql("SELECT count(*) FROM q228_pin_d "
-                  "WHERE lower(lang) = 'en'").first()[0]
-    assert a == b and a > 0
-
-
-def test_q229_five_analytics_one_window_node(spark, sf_dir):
-    """Rank-analytic panel (round 13): percent_rank, cume_dist,
-    ntile, lag, and lead over one shared spec must fuse into ONE
-    Window node over ONE exchange (CollapseWindow across the rank,
-    whole-partition, and offset families)."""
-    from openpolicedata_spark.plans import _n_nodes
-
-    df = workload.queries()["q229_analytic_panel"](spark, sf_dir)
-    t = formatted_plan(df)
-    assert (_n_nodes(t, "Window")
-            - _n_nodes(t, "WindowGroupLimit")) == 1, t[:1200]
-    assert_max_exchanges(df, 1)
-    assert_no_python_in_plan(df)
-
-
-def test_q230_bitmap_distinct_no_expand_two_aggregates(spark, sf_dir):
-    """Bitmap exact-distinct (round 13): two stacked map-combinable
-    aggregates — partial bitmaps combine map-side, the shuffle
-    carries (group, bucket, bitmap) rows, and there is NO Expand
-    node (multi-distinct's fan-out) anywhere. The naive form's
-    silent aliasing is pinned numerically: dropping the bucket
-    grouping must UNDERCOUNT the true distinct."""
-    from openpolicedata_spark.plans import _n_nodes
-
-    df = workload.queries()["q230_bitmap_distinct"](spark, sf_dir)
-    t = formatted_plan(df)
-    assert _n_nodes(t, "Expand") == 0, t[:1000]
-    # the bitmap construct is a TypedImperativeAggregate — it plans as
-    # a SortAggregate pair (measured; no hash-agg for byte-buffer
-    # state), the outer SUM as the usual HashAggregate pair
-    assert _n_nodes(t, "SortAggregate") == 2, t[:1000]
-    assert _n_nodes(t, "HashAggregate") == 2, t[:1000]
-    assert "bitmap_construct_agg" in t, t[:800]
-    assert_no_python_in_plan(df)
-
-    spark.read.parquet(f"{sf_dir}/orders.parquet") \
-        .createOrReplaceTempView("q230_pin_o")
-    naive = spark.sql("""
-        SELECT bitmap_count(bitmap_construct_agg(
-                   bitmap_bit_position(o_custkey))) AS nd
-        FROM q230_pin_o""").first().nd
-    true_nd = spark.sql("SELECT COUNT(DISTINCT o_custkey) AS n "
-                        "FROM q230_pin_o").first().n
-    assert naive < true_nd, (naive, true_nd)  # aliasing really bites
-
-
-def test_q231_intersect_cte_reused_not_recomputed(spark, sf_dir):
-    """Q14-class INTERSECT + CTE reuse (round 13): the three-scan
-    buyers INTERSECT tree must be computed ONCE — the second consumer
-    reads it through ReusedExchange (2 reuses), so the whole query
-    scans orders 7 times, not 3+3+1+… per consumer; each INTERSECT
-    arm plans as a distinct aggregate + LeftSemi join."""
-    from openpolicedata_spark.plans import _n_nodes
-
-    df = workload.queries()["q231_cross_channel_buyers"](spark, sf_dir)
-    # exchange reuse materializes at AQE time — collect FIRST (the
-    # q206 gotcha, measured again here: 0 ReusedExchange before
-    # execution, 2 after)
-    df.collect()
-    t = formatted_plan(df)
-    assert _n_nodes(t, "ReusedExchange") == 2, t[:1500]
-    assert _n_nodes(t, "Scan parquet") == 7, t[:1500]
-    assert "LeftSemi" in t, t[:800]
-    assert_no_python_in_plan(df)
-
-
-def test_q232_lag_form_equals_and_beats_self_join(spark, sf_dir):
-    """YoY growth (round 13): the window-lag rewrite must produce
-    EXACTLY the self-join formulation's rows (consecutive-year
-    alignment included — lag(yr) filtering handles skipped years)
-    with ZERO join nodes: one scan + one aggregate + one Window,
-    where the self-join pays a join and a second aggregate build."""
-    from openpolicedata_spark.plans import _n_nodes
-    from openpolicedata_spark.workload import (
-        _Q232_BODY,
-        _Q232_SELF_JOIN,
-    )
-
-    spark.read.parquet(f"{sf_dir}/orders.parquet") \
-        .createOrReplaceTempView("q232_pin_o")
-    lag_df = spark.sql(_Q232_BODY.format(o="q232_pin_o"))
-    join_df = spark.sql(_Q232_SELF_JOIN.format(o="q232_pin_o"))
-    lag_rows = {tuple(r) for r in lag_df.collect()}
-    join_rows = {tuple(r) for r in join_df.collect()}
-    assert lag_rows == join_rows and len(lag_rows) > 0
-
-    # fresh frame for the shape pins: a collected frame's formatted
-    # plan carries Initial+Final AQE sections and double-counts nodes
-    lag_df = spark.sql(_Q232_BODY.format(o="q232_pin_o"))
-    t = formatted_plan(lag_df)
-    s = summarize_plan(lag_df)
-    assert (s.n_broadcast_joins + s.n_sortmerge_joins
-            + s.n_broadcast_nl_joins) == 0, s.text
-    assert _n_nodes(t, "Scan parquet") == 1, t[:800]
-    assert (_n_nodes(t, "Window")
-            - _n_nodes(t, "WindowGroupLimit")) == 1, t[:800]
-    tj = formatted_plan(join_df)
-    assert "Join" in tj, tj[:400]   # the contrast really joins
-    assert_no_python_in_plan(lag_df)
-
-
-def test_q235_table_function_inlines_to_direct_plan(spark, sf_dir):
-    """SQL table function (round 13): `SELECT * FROM f('O')` must
-    OPTIMIZE to the identical plan of the direct WHERE/GROUP BY query
-    (up to expression ids) — the RETURNS TABLE function is an
-    analysis-time macro, and its argument constant-folds into the
-    parquet PushedFilters exactly like q223's parameter markers."""
-    import re as _re
-
-    from openpolicedata_spark.workload import _Q235_DIRECT_BODY
-
-    spark.read.parquet(f"{sf_dir}/orders.parquet") \
-        .createOrReplaceTempView("q235_pin_o")
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION q235_pin_f(st STRING) "
-        "RETURNS TABLE (pri STRING, n BIGINT, total DOUBLE) RETURN "
-        "SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT), "
-        "CAST(SUM(CAST(o_totalprice AS DECIMAL(14,2))) AS DOUBLE) "
-        "FROM q235_pin_o WHERE o_orderstatus = st "
-        "GROUP BY o_orderpriority")
-
-    def norm(df):
-        s = df._jdf.queryExecution().optimizedPlan().toString()
-        return _re.sub(r"#\d+", "#x", s)
-
-    tf = spark.sql("SELECT * FROM q235_pin_f('F')")
-    direct = spark.sql(_Q235_DIRECT_BODY.format(o="q235_pin_o", st="F"))
-    assert tf.columns == direct.columns
-    assert norm(tf) == norm(direct), (
-        norm(tf)[:600] + "\n!=\n" + norm(direct)[:600])
-    s = assert_filter_pushed(tf, "o_orderstatus")
-    assert any("EqualTo(o_orderstatus,F)" in f for f in
-               s.pushed_filters), s.pushed_filters
-    assert_no_python_in_plan(tf)
-
-
-def test_q236_scripting_executes_eagerly_and_folds_variable(spark, sf_dir):
-    """SQL scripting (round 13) — two measured behaviors pinned:
-    (a) `spark.sql(BEGIN…END)` executes the script EAGERLY and returns
-    the last statement's ROWS as a LocalRelation (each statement is
-    its own distributed Catalyst plan, but the script's return value
-    is already-materialized driver-side rows — size the final
-    statement accordingly); (b) the session variable binds into the
-    final statement as a plain LITERAL — rerunning that statement
-    with the same value as a parameter marker produces the identical
-    filter constant, and the scripted rows equal the parameterized
-    rows exactly."""
-    from openpolicedata_spark.workload import (
-        _Q236_CUTOFF,
-        _Q236_FINAL_BODY,
-    )
-
-    spark.read.parquet(f"{sf_dir}/orders.parquet") \
-        .createOrReplaceTempView("q236_pin_o")
-    script = spark.sql(f"""
-    BEGIN
-      DECLARE cutoff DOUBLE DEFAULT 0.0;
-      SET cutoff = (SELECT {_Q236_CUTOFF} FROM q236_pin_o);
-      {_Q236_FINAL_BODY.format(o="q236_pin_o", cutoff="cutoff")};
-    END""")
-    # (a) eager execution: the result is a materialized LocalRelation
-    opt = script._jdf.queryExecution().optimizedPlan().toString()
-    assert "LocalRelation" in opt, opt[:400]
-
-    val = spark.sql(f"SELECT {_Q236_CUTOFF} FROM q236_pin_o") \
-        .collect()[0][0]
-    lit = spark.sql(_Q236_FINAL_BODY.format(o="q236_pin_o",
-                                            cutoff=":cut"),
-                    args={"cut": val})
-    # (b) the variable folded to the literal the parameter binds
-    lopt = lit._jdf.queryExecution().optimizedPlan().toString()
-    assert repr(val) in lopt, (repr(val), lopt[:500])
-    assert {tuple(r) for r in script.collect()} \
-        == {tuple(r) for r in lit.collect()}
-    assert_no_python_in_plan(lit)
-
-
-def test_q237_recursive_cte_plans_union_loop(spark, sf_dir):
-    """Native WITH RECURSIVE (round 13): the plan must carry the
-    UnionLoop node (the engine-owned fixpoint loop) with its
-    UnionLoopRef frontier reference — recursion executes in-engine,
-    zero Python, and the walk genuinely recurses (depths well beyond
-    the seed level, every chain terminating at the root)."""
-    from openpolicedata_spark.plans import _n_nodes
-    from openpolicedata_spark.workload import _Q237_BODY
-
-    spark.read.parquet(f"{sf_dir}/customer.parquet") \
-        .createOrReplaceTempView("q237_pin_c")
-    df = spark.sql(_Q237_BODY.format(c="q237_pin_c", div="DIV"))
-    t = formatted_plan(df)
-    assert _n_nodes(t, "UnionLoop") >= 1, t[:1200]
-    assert "UnionLoopRef" in t, t[:1200]
-    assert_no_python_in_plan(df)
-    rows = {r["depth"]: r["n"] for r in df.collect()}
-    assert 0 in rows and max(rows) >= 5, rows
-    # monotone frontier: each level's survivors are a subset walk
-    assert all(rows[d] <= rows[0] for d in rows), rows
-
-
-def test_q238_hll_partials_are_object_hash_and_order_invariant(
-        spark, sf_dir):
-    """HLL union rollup (round 13): sketch aggregates are
-    TypedImperative (byte-buffer) aggs, so they plan as
-    ObjectHashAggregate pairs — partial sketches built map-side, ONE
-    exchange per aggregate — and the q238 law booleans must be
-    invariant to partitioning (the union ESTIMATE itself is NOT
-    bit-stable across merge orders — measured 1489 vs 1490 at
-    sf0.01 under 8 vs 16 shuffle partitions — which is exactly why
-    the query pins bands, not equality; the bands must hold under
-    any layout)."""
-    df = workload.queries()["q238_hll_union_merge"](spark, sf_dir)
-    t = formatted_plan(df)
-    assert "ObjectHashAggregate" in t, t[:1200]
-    assert_no_python_in_plan(df)
-    base = df.collect()[0]
-    assert base["union_agrees"] and base["within_5pct"], base
-
-    # partitioning invariance of the LAWS (13-way reshuffle upstream)
-    from openpolicedata_spark.workload import _Q238_BODY, _read
-    _read(spark, sf_dir, "orders").repartition(13) \
-        .createOrReplaceTempView("q238_pin_o")
-    alt = spark.sql(_Q238_BODY.format(
-        o="q238_pin_o", g="pmod(o_custkey, 8)",
-        law_merge="abs(est_u - est_g) <= 0.04 * est_g",
-        law_err="abs(est_u - exact_nd) <= 0.05 * exact_nd")) \
-        .collect()[0]
-    assert alt["union_agrees"] and alt["within_5pct"], alt
-
-
-def test_q239_try_divide_double_zero_is_null_not_infinity(spark, sf_dir):
-    """try_* semantics (round 13): the arms the q239 oracle depends
-    on, pinned in isolation — under Spark 4's ANSI default, plain
-    division by a zero divisor RAISES (DIVIDE_BY_ZERO — even for
-    DOUBLEs, where pre-ANSI Spark yielded Infinity), while try_divide
-    yields NULL, which is exactly DuckDB's native `/` behavior — plus
-    the overflow and cast arms, and the plan shape: the FILTER-clause
-    aggregate stays ONE HashAggregate pair over one scan, no
-    Expand."""
-    r = spark.sql(
-        "SELECT try_divide(1.0D, 0.0D) a, "
-        "try_add(9223372036854775807, 1) c, "
-        "try_cast('x1' AS INT) d").collect()[0]
-    assert r["a"] is None and r["c"] is None and r["d"] is None, r
-    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
-        spark.sql("SELECT 1.0D / 0.0D b").collect()
-
-    from openpolicedata_spark.plans import _n_nodes
-    df = workload.queries()["q239_try_arithmetic"](spark, sf_dir)
-    t = formatted_plan(df)
-    assert _n_nodes(t, "HashAggregate") == 2, t[:900]
-    assert _n_nodes(t, "Expand") == 0, t[:900]
-    assert _n_nodes(t, "Scan parquet") == 1, t[:900]
-    assert_max_exchanges(df, 1)
-    assert_no_python_in_plan(df)
-
-
-def test_q240_hint_triplet_overrides_size_based_choice(spark, sf_dir):
-    """Join strategy hints (round 13): customer is broadcastable at
-    test SFs, so the UNHINTED plan picks BroadcastHashJoin — each hint
-    must OVERRIDE that choice (BROADCAST→BroadcastHashJoin,
-    MERGE→SortMergeJoin, SHUFFLE_HASH→ShuffledHashJoin), and all
-    three strategies must return identical rows: strategy changes
-    cost, never semantics."""
-    from openpolicedata_spark.workload import _Q240_BODY
-
-    spark.read.parquet(f"{sf_dir}/orders.parquet") \
-        .createOrReplaceTempView("q240_pin_o")
-    spark.read.parquet(f"{sf_dir}/customer.parquet") \
-        .createOrReplaceTempView("q240_pin_c")
-
-    def run(hint):
-        df = spark.sql(_Q240_BODY.format(
-            hint=hint, o="q240_pin_o", c="q240_pin_c"))
-        rows = {tuple(r) for r in df.collect()}
-        p = df._jdf.queryExecution().executedPlan().toString()
-        kinds = [k for k in ("BroadcastHashJoin", "SortMergeJoin",
-                             "ShuffledHashJoin") if k in p]
-        return rows, kinds
-
-    base_rows, base_kinds = run("")
-    assert base_kinds == ["BroadcastHashJoin"], base_kinds
-    for hint, expect in [("/*+ BROADCAST(c) */", "BroadcastHashJoin"),
-                         ("/*+ MERGE(c) */", "SortMergeJoin"),
-                         ("/*+ SHUFFLE_HASH(c) */", "ShuffledHashJoin")]:
-        rows, kinds = run(hint)
-        assert kinds == [expect], (hint, kinds)
-        assert rows == base_rows, hint
-
-
-def test_q241_approx_and_exact_percentile_aggregate_shapes(spark, sf_dir):
-    """Approx-percentile law (round 13): both percentile families are
-    TypedImperative (byte-buffer) aggregates — ObjectHashAggregate
-    pairs, partial sketches map-side — and the law booleans must hold
-    under a different partitioning (the q238 band discipline: the
-    sketch VALUE may move within the band, the law may not)."""
-    df = workload.queries()["q241_approx_percentile_law"](spark, sf_dir)
-    t = formatted_plan(df)
-    assert "ObjectHashAggregate" in t, t[:1200]
-    assert_no_python_in_plan(df)
-    for r in df.collect():
-        assert r["p50_close"] and r["p90_close"], r
-
-    from openpolicedata_spark.workload import _Q241_BODY, _read
-    _read(spark, sf_dir, "orders").repartition(13) \
-        .createOrReplaceTempView("q241_pin_o")
-    for r in spark.sql(_Q241_BODY.format(o="q241_pin_o")).collect():
-        assert r["p50_close"] and r["p90_close"], r
-
-
-def test_q242_hof_panel_is_one_exchange_no_python(spark, sf_dir):
-    """SQL HOF surface (round 13): the whole
-    collect_list→sort→transform/filter/zip_with/aggregate panel is
-    ONE keyed exchange (the groupBy) with every fold a JVM expression
-    — zero Python nodes, zero extra shuffles, one scan; and the
-    pal_cents zip_with(reverse) arm equals its 2·sum closed form
-    row-for-row (the law the DuckDB oracle replays)."""
-    from openpolicedata_spark.plans import _n_nodes
-
-    df = workload.queries()["q242_array_hof_sql"](spark, sf_dir)
-    t = formatted_plan(df)
-    assert _n_nodes(t, "Scan parquet") == 1, t[:900]
-    assert_max_exchanges(df, 1)
-    assert_no_python_in_plan(df)
-    # closed form: pal = 2 * sum(cents)
-    chk = df.selectExpr("o_custkey", "pal_cents")
-    from openpolicedata_spark.workload import _read
-    sums = (_read(spark, sf_dir, "orders")
-            .selectExpr("o_custkey",
-                        "CAST(CAST(o_totalprice AS DECIMAL(14,2)) "
-                        "* 100 AS BIGINT) AS cents")
-            .groupBy("o_custkey")
-            .agg(F.sum("cents").alias("s")))
-    joined = chk.join(sums, "o_custkey")
-    assert joined.where("pal_cents != 2 * s").count() == 0
-
-
-def test_q243_spine_rides_broadcasts_one_real_exchange(spark, sf_dir):
-    """Date spine (round 13): the calendar spine explodes from a
-    ONE-ROW bounds aggregate and the status grid is 3 rows — both
-    ride broadcast joins (the documented one-row/snapshot-literal
-    class); the only shuffling aggregate is the monthly counts. The
-    densification is real: zero-filled grid cells exist and carry
-    n = 0."""
-    df = workload.queries()["q243_date_spine"](spark, sf_dir)
-    s = summarize_plan(df)
-    assert s.n_sortmerge_joins == 0, s.text
-    assert_no_python_in_plan(df)
-    rows = df.collect()
-    filled = [r for r in rows if r["filled"]]
-    assert filled and all(r["n"] == 0 for r in filled)
-    real = [r for r in rows if not r["filled"]]
-    assert sum(r["n"] for r in real) > 0
-    # the grid is complete: |spine| x |statuses| rows
-    months = {r["ym"] for r in rows}
-    sts = {r["st"] for r in rows}
-    assert len(rows) == len(months) * len(sts)
-
-
-def test_q244_regexp_panel_rowlocal_zero_exchanges(spark, sf_dir):
-    """Regexp panel (round 13): the whole extraction family is
-    row-local JVM expressions — one scan, ZERO exchanges, zero
-    Python; both arms deterministically present (every 5th doc is the
-    digit-free literal: empty join-string, count 0, NULL first match,
-    position 0)."""
-    df = workload.queries()["q244_regexp_panel"](spark, sf_dir)
-    t = formatted_plan(df)
-    from openpolicedata_spark.plans import _n_nodes
-    assert _n_nodes(t, "Scan parquet") == 1, t[:900]
-    assert_max_exchanges(df, 0)
-    assert_no_python_in_plan(df)
-    rows = df.collect()
-    none = [r for r in rows if r["doc_id"] % 5 == 0]
-    assert none and all(
-        r["all_nums"] == "" and r["n_nums"] == 0
-        and r["first_num"] is None and r["first_pos"] == 0
-        for r in none)
-    hit = [r for r in rows if r["doc_id"] % 5 != 0]
-    assert hit and all(r["n_nums"] >= 3 for r in hit)  # injected runs
-
-
-def test_q245_intersect_all_is_join_free_replicaterows(spark, sf_dir):
-    """Bag set ops (round 13): Spark must rewrite INTERSECT ALL and
-    EXCEPT ALL JOIN-FREE — tagged Union → ONE aggregate counting both
-    tags per key → Generate replicaterows re-expanding the multiset.
-    Zero joins of any kind in the whole two-arm plan."""
-    from openpolicedata_spark.plans import _n_nodes
-
-    df = workload.queries()["q245_multiset_ops"](spark, sf_dir)
-    t = formatted_plan(df)
-    assert t.count("replicaterows") >= 2, t[:1200]   # both ALL ops
-    s = summarize_plan(df)
-    assert (s.n_broadcast_joins + s.n_sortmerge_joins
-            + s.n_broadcast_nl_joins) == 0, s.text
-    assert "Join" not in t, t[:1200]
-    assert_no_python_in_plan(df)
-    # bag law: mult(both) = min(nO, nF); mult(o_surplus) = nO - nF > 0
-    from openpolicedata_spark.workload import _read
-    counts = (_read(spark, sf_dir, "orders")
-              .groupBy("o_custkey")
-              .agg(F.sum(F.expr("IF(o_orderstatus = 'O', 1, 0)"))
-                   .alias("no"),
-                   F.sum(F.expr("IF(o_orderstatus = 'F', 1, 0)"))
-                   .alias("nf")))
-    got = df.join(counts, "o_custkey")
-    assert got.where(
-        "(arm = 'both' AND mult != least(no, nf)) OR "
-        "(arm = 'o_surplus' AND mult != no - nf)").count() == 0
-
-
-def test_q246_or_of_exists_plans_existence_joins(spark, sf_dir):
-    """ExistenceJoin (round 13): an EXISTS inside a disjunction (or
-    projected as a column) cannot decorrelate to LeftSemi — the plan
-    must carry ExistenceJoin nodes appending boolean verdicts and a
-    disjunctive Filter over them, with NO row multiplication (output
-    keys stay unique). Contrast: q179's conjunctive chains DO plan
-    LeftSemi."""
-    df = workload.queries()["q246_exists_or"](spark, sf_dir)
-    df.collect()
-    p = df._jdf.queryExecution().executedPlan().toString()
-    assert p.count("ExistenceJoin") >= 2, p[:1200]
-    assert "LeftSemi" not in p, p[:1200]
-    fresh = workload.queries()["q246_exists_or"](spark, sf_dir)
-    assert_no_python_in_plan(fresh)
-    rows = fresh.collect()
-    keys = [r["c_custkey"] for r in rows]
-    assert len(keys) == len(set(keys)) and len(keys) > 0
-    assert all(r["has_filled"] or r["has_big"] for r in rows)
-    assert any(not r["has_filled"] for r in rows)   # OR is real
-    assert any(not r["has_big"] for r in rows)
-
-
-def test_q247_nullsafe_join_hashes_and_keeps_null_group(spark, sf_dir):
-    """Null-safe join (round 13): `<=>` must still plan a HASH join
-    (Catalyst rewrites null-safe equality into a hashable key — no
-    nested loop), and the NULL group must survive the join with both
-    sides' counts; the plain `=` contrast silently drops it."""
-    from openpolicedata_spark.workload import _Q247_BODY
-
-    df = workload.queries()["q247_nullsafe_join"](spark, sf_dir)
-    df.collect()
-    p = df._jdf.queryExecution().executedPlan().toString()
-    assert ("BroadcastHashJoin" in p or "SortMergeJoin" in p
-            or "ShuffledHashJoin" in p), p[:900]
-    assert "NestedLoop" not in p, p[:900]
-    fresh = workload.queries()["q247_nullsafe_join"](spark, sf_dir)
-    assert_no_python_in_plan(fresh)
-    rows = fresh.collect()
-    nulls = [r for r in rows if r["k"] is None]
-    assert len(nulls) == 1, nulls
-    assert nulls[0]["n_open"] > 0 and nulls[0]["n_filled"] > 0
-
-    spark.read.parquet(f"{sf_dir}/orders.parquet") \
-        .createOrReplaceTempView("q247_pin_o")
-    eq = spark.sql(_Q247_BODY.format(o="q247_pin_o", eq="="))
-    assert all(r["k"] is not None for r in eq.collect())
-    assert len(rows) == eq.count() + 1
-
-
-def test_q248_regr_laws_one_pass_and_partition_invariant(spark, sf_dir):
-    """regr_* law (round 13): the five exact sums and the three
-    native regression aggregates ride ONE grouped aggregate pass
-    (one exchange, one partial+final pair), and the 1e-9 law
-    booleans hold under a different partitioning (single-pass float
-    accumulators are order-sensitive at ~1e-15 — the band must
-    absorb that, the q238 discipline)."""
-    from openpolicedata_spark.plans import _n_nodes
-    from openpolicedata_spark.workload import (
-        _Q248_BODY,
-        _Q248_LAWS,
-        _read,
-    )
-
-    df = workload.queries()["q248_regr_aggregates_law"](spark, sf_dir)
-    t = formatted_plan(df)
-    assert _n_nodes(t, "HashAggregate") == 2, t[:900]
-    assert_max_exchanges(df, 1)
-    assert_no_python_in_plan(df)
-    for r in df.collect():
-        assert r["slope_ok"] and r["icept_ok"] and r["r2_ok"], r
-
-    _read(spark, sf_dir, "orders").repartition(13) \
-        .createOrReplaceTempView("q248_pin_o")
-    alt = spark.sql(_Q248_BODY.format(
-        o="q248_pin_o", big="DECIMAL(38,0)", **_Q248_LAWS))
-    for r in alt.collect():
-        assert r["slope_ok"] and r["icept_ok"] and r["r2_ok"], r
-
-
-def test_q249_map_panel_two_aggregates_no_python(spark, sf_dir):
-    """Map surface (round 13): the status→count map panel is two
-    grouped aggregates (per-status counts, then the per-customer map
-    build) — two exchanges total, every map op a JVM expression, zero
-    Python; entry order is deterministic because the struct array is
-    SORTED before map_from_entries (map entry order is construction
-    order)."""
-    from openpolicedata_spark.plans import _n_nodes
-
-    df = workload.queries()["q249_map_functions"](spark, sf_dir)
-    t = formatted_plan(df)
-    assert _n_nodes(t, "Scan parquet") == 1, t[:900]
-    assert_max_exchanges(df, 2)
-    assert_no_python_in_plan(df)
-    rows = df.collect()
-    assert rows and all(r["n_statuses"] >= 1 for r in rows)
-    # entries arrive key-sorted; the filter is real (some drop)
-    for r in rows:
-        ks = [e.split("=")[0] for e in r["big_entries"].split(",")
-              if e]
-        assert ks == sorted(ks), r
-    assert any("," in r["big_entries"] for r in rows)
-    assert any(r["big_entries"] == "" for r in rows) or all(
-        r["big_entries"] for r in rows)
-
-
-def test_q250_three_ignore_nulls_one_window_node(spark, sf_dir):
-    """IGNORE NULLS analytics (round 13): the three analytics share
-    one frame, so CollapseWindow must fuse them into ONE Window node
-    with one keyed exchange; and the LOCF law holds: locf is v
-    wherever v is non-NULL, and never NULL after the key's first
-    observation."""
-    from openpolicedata_spark.plans import _n_nodes
-
-    df = workload.queries()["q250_ignore_nulls_analytics"](
-        spark, sf_dir)
-    t = formatted_plan(df)
-    assert (_n_nodes(t, "Window")
-            - _n_nodes(t, "WindowGroupLimit")) == 1, t[:900]
-    assert_max_exchanges(df, 1)
-    assert_no_python_in_plan(df)
-    rows = df.collect()
-    assert any(r["v"] is None for r in rows)
-    for r in rows:
-        if r["v"] is not None:
-            assert r["locf"] == r["v"], r
-        if r["first_seen"] is not None:
-            assert r["locf"] is not None, r
 
 
 def test_static_partition_pruning_on_partitioned_writes(spark, sf_dir,
@@ -2003,59 +600,6 @@ def test_tablesample_is_layout_sensitive_unlike_weighted_sample(
     assert w1 == w2 and len(w1) == 50
 
 
-def test_q251_selection_aggregates_one_pass(spark, sf_dir):
-    """Selection aggregates (round 13): all six ride ONE grouped
-    aggregate pass — one exchange, a partial+final pair, zero
-    Python; and the engineered determinism holds: the modal sentinel
-    (-1) wins strictly in every group, and the max_by/min_by
-    ordering values are unique so the extrema keys are stable under
-    a 13-way reshuffle."""
-    from openpolicedata_spark.plans import _n_nodes
-    from openpolicedata_spark.workload import _Q251_BODY, _read
-
-    df = workload.queries()["q251_selection_aggregates"](spark, sf_dir)
-    t = formatted_plan(df)
-    assert_max_exchanges(df, 1)
-    assert _n_nodes(t, "Scan parquet") == 1, t[:900]
-    assert_no_python_in_plan(df)
-    rows = {r["st"]: r for r in df.collect()}
-    assert rows and all(r["common_m"] == -1 for r in rows.values())
-
-    _read(spark, sf_dir, "orders").repartition(13) \
-        .createOrReplaceTempView("q251_pin_o")
-    alt = {r["st"]: r for r in spark.sql(_Q251_BODY.format(
-        o="q251_pin_o", every="every", any="any")).collect()}
-    for st, r in rows.items():
-        assert (r["priciest_key"], r["cheapest_key"]) \
-            == (alt[st]["priciest_key"], alt[st]["cheapest_key"]), st
-
-
-def test_q252_histogram_is_total_and_map_combined(spark, sf_dir):
-    """width_bucket histogram (round 13): ONE map-side-combined
-    aggregate (partial+final, one exchange, no sort, no percentile
-    state); the bucketing is TOTAL — per-status bucket counts sum to
-    the status row counts — and bucket ids stay within [0, n+1]."""
-    from openpolicedata_spark.plans import _n_nodes
-
-    df = workload.queries()["q252_width_bucket_histogram"](
-        spark, sf_dir)
-    t = formatted_plan(df)
-    assert _n_nodes(t, "HashAggregate") == 2, t[:900]
-    assert _n_nodes(t, "Sort") == 0, t[:900]
-    assert_max_exchanges(df, 1)
-    assert_no_python_in_plan(df)
-    rows = df.collect()
-    assert all(0 <= r["bkt"] <= 13 for r in rows)
-    import collections
-    per_st = collections.Counter()
-    for r in rows:
-        per_st[r["st"]] += r["n"]
-    totals = {r["o_orderstatus"]: r["count"] for r in
-              spark.read.parquet(f"{sf_dir}/orders.parquet")
-              .groupBy("o_orderstatus").count().collect()}
-    assert dict(per_st) == totals
-
-
 def test_cluster_by_is_local_sort_no_global_order(spark, sf_dir):
     """CLUSTER BY / DISTRIBUTE BY … SORT BY (round 13, plan-pin-only
     — their row order is UNSPECIFIED SQL, the
@@ -2084,33 +628,6 @@ def test_cluster_by_is_local_sort_no_global_order(spark, sf_dir):
         assert_max_exchanges(df, 1)
 
 
-def test_q253_bit_folds_map_combine_and_shuffle_invariance(spark, sf_dir):
-    """Bitwise aggregates (round 13): one partial+final pass (the
-    folds map-side combine — AND/OR/XOR are commutative+associative,
-    EXACT under any reorder, unlike float sums), and the engineered
-    invariants hold: the AND-fold's low nibble is all-ones, the OR
-    mask covers exactly the 7 one-hot slots, bit_count agrees."""
-    from openpolicedata_spark.plans import _n_nodes
-    from openpolicedata_spark.workload import _Q253_BODY, _read
-
-    df = workload.queries()["q253_bitwise_aggregates"](spark, sf_dir)
-    t = formatted_plan(df)
-    assert _n_nodes(t, "HashAggregate") == 2, t[:900]
-    assert_max_exchanges(df, 1)
-    assert_no_python_in_plan(df)
-    rows = df.collect()
-    for r in rows:
-        assert r["common_bits"] & 15 == 15, r
-        assert r["seen_mask"] == 127, r          # all 7 slots occur
-        assert r["n_distinct_slots"] == 7, r
-
-    _read(spark, sf_dir, "orders").repartition(13) \
-        .createOrReplaceTempView("q253_pin_o")
-    alt = {r["st"]: tuple(r) for r in
-           spark.sql(_Q253_BODY.format(o="q253_pin_o")).collect()}
-    assert {r["st"]: tuple(r) for r in rows} == alt
-
-
 def test_aqe_coalesces_small_shuffle_partitions(spark, sf_dir):
     """AQE partition coalescing (round 13 — the latency knob the
     session enables by default): a small aggregate shuffled across
@@ -2125,118 +642,6 @@ def test_aqe_coalesces_small_shuffle_partitions(spark, sf_dir):
     t = df._jdf.queryExecution().executedPlan().toString()
     assert "AQEShuffleRead" in t, t[:800]
     assert "coalesced" in t, t[:800]
-
-
-def test_q254_luhn_rowlocal_and_both_arms(spark, sf_dir):
-    """Luhn validation (round 13): row-local JVM expression — one
-    scan, zero exchanges, zero Python; both verdicts genuinely
-    present, the valid fraction ≈ 1/10 (exactly one check digit in
-    ten validates any 15-digit prefix), and the canonical
-    test-vector identity holds engine-side."""
-    df = workload.queries()["q254_luhn_validation"](spark, sf_dir)
-    from openpolicedata_spark.plans import _n_nodes
-    t = formatted_plan(df)
-    assert _n_nodes(t, "Scan parquet") == 1, t[:800]
-    assert_max_exchanges(df, 0)
-    assert_no_python_in_plan(df)
-    rows = df.collect()
-    n_valid = sum(1 for r in rows if r["is_valid"])
-    assert 0 < n_valid < len(rows)
-    assert abs(n_valid / len(rows) - 0.1) < 0.03, n_valid
-    r = spark.sql("SELECT luhn_check('79927398713') a, "
-                  "luhn_check('79927398710') b").collect()[0]
-    assert r["a"] is True and r["b"] is False
-
-
-def test_width_bucket_matches_spelled_formula_randomized(spark):
-    """q252's oracle rests on the EXACT operand order of Spark's
-    width_bucket: `floor(n * (v - lo) / (hi - lo)) + 1` — n times
-    the offset FIRST, then one division (Spark's
-    WidthBucket.computeBucketNumber). BOTH other groupings flipped
-    32/2000 seeded-random boundary cases when this test ran against
-    them — `(v-lo)/((hi-lo)/n)` (precomputed width) and
-    `((v-lo)/(hi-lo))*n` (ratio then scale) each differ from the
-    builtin in the last ulp exactly on boundaries. Pinned on 2000
-    cases INSIDE Spark, 30% constructed to land on boundaries; with
-    the operand order matched, the DuckDB replay only needs IEEE
-    determinism, which multiply, divide, and floor guarantee."""
-    import numpy as np
-    import pandas as pd
-
-    rng = np.random.default_rng(42)
-    lo = rng.uniform(-1e6, 1e6, 2000)
-    hi = lo + rng.uniform(1e-3, 1e6, 2000)
-    n = rng.integers(1, 65, 2000)
-    v = np.where(rng.random(2000) < 0.3,
-                 # 30% land EXACTLY on a bucket boundary (of the
-                 # width-form — adversarial for the operand order)
-                 lo + (hi - lo) / n * rng.integers(0, 66, 2000),
-                 rng.uniform(lo - 1e5, hi + 1e5))
-    pdf = pd.DataFrame({"v": v, "lo": lo, "hi": hi,
-                        "n": n.astype("int64")})
-    df = spark.createDataFrame(pdf)
-    bad = df.selectExpr(
-        "width_bucket(v, lo, hi, n) AS builtin",
-        "CASE WHEN v < lo THEN CAST(0 AS BIGINT) "
-        "     WHEN v >= hi THEN n + 1 "
-        "     ELSE CAST(FLOOR((n * (v - lo)) / (hi - lo)) AS BIGINT)"
-        "          + 1 END AS spelled"
-    ).where("builtin IS DISTINCT FROM spelled")
-    assert bad.count() == 0, bad.take(5)
-
-
-def test_q255_weighted_percentile_equals_expansion(spark, sf_dir):
-    """Weighted percentile (round 13): the freq argument must equal
-    EXPANDING each row freq times — pinned in-engine by exploding
-    the weights and taking the unweighted percentile (bit-equal
-    doubles), plus the plan shape: ObjectHashAggregate (percentile
-    is TypedImperative), one exchange."""
-    df = workload.queries()["q255_weighted_percentile"](spark, sf_dir)
-    t = formatted_plan(df)
-    assert "ObjectHashAggregate" in t, t[:900]
-    assert_max_exchanges(df, 1)
-    assert_no_python_in_plan(df)
-
-    spark.read.parquet(f"{sf_dir}/orders.parquet") \
-        .createOrReplaceTempView("q255_pin_o")
-    exp = spark.sql("""
-        SELECT o_orderstatus AS st,
-               percentile(CAST(o_totalprice AS DOUBLE),
-                          array(0.5D, 0.9D)) AS pct
-        FROM (SELECT o_orderstatus, o_totalprice,
-                     explode(sequence(1, o_orderkey % 7 + 1))
-              FROM q255_pin_o)
-        GROUP BY o_orderstatus""")
-    want = {r["st"]: (r["pct"][0], r["pct"][1]) for r in exp.collect()}
-    got = {r["st"]: (r["p50_w"], r["p90_w"]) for r in df.collect()}
-    assert got == want and len(got) == 3
-
-
-def test_q244_instr_equals_strpos_of_first_match_randomized(spark):
-    """q244's oracle replays regexp_instr as strpos(s, first_match) —
-    valid for '[0-9]+' because the leftmost match starts at the
-    FIRST digit and any occurrence of the matched string must itself
-    start with a digit. Pinned on 3000 seeded-random alnum strings
-    INSIDE Spark: regexp_instr(s, '[0-9]+') equals
-    CASE WHEN no match THEN 0 ELSE instr(s, regexp_substr(...)) END
-    on every row."""
-    import random
-    import string
-
-    import pandas as pd
-
-    rnd = random.Random(42)
-    alphabet = string.ascii_lowercase + string.digits
-    rows = ["".join(rnd.choice(alphabet)
-                    for _ in range(rnd.randint(0, 24)))
-            for _ in range(3000)]
-    df = spark.createDataFrame(pd.DataFrame({"s": rows}))
-    bad = df.selectExpr(
-        "regexp_instr(s, '[0-9]+') AS builtin",
-        "CASE WHEN regexp_substr(s, '[0-9]+') IS NULL THEN 0 "
-        "     ELSE instr(s, regexp_substr(s, '[0-9]+')) END AS spelled"
-    ).where("builtin != spelled")
-    assert bad.count() == 0, bad.take(5)
 
 
 def test_q114_knn_graph_single_subtree_symmetrize(spark, sf_dir):

@@ -261,3 +261,25 @@ def test_truncation_anywhere_raises_pngerror_not_struct_error():
     for cut in range(8, len(data)):
         with pytest.raises(PngError):
             decode_png(data[:cut])
+
+
+def _interlaced_claim(w, h):
+    """An Adam7 gray PNG header claiming w×h over a one-row IDAT."""
+    return _raw_png(w, h, 8, 0, b"\x00\x00", interlace=1)
+
+
+# (2³¹−1)² and one row over the 2²⁸-pixel cap at width 2¹⁴
+@pytest.mark.parametrize("width,height", [(2**31 - 1, 2**31 - 1),
+                                          (1 << 14, (1 << 14) + 1)])
+def test_header_over_pixel_cap_raises_before_allocating(width, height):
+    import tracemalloc
+
+    blob = _interlaced_claim(width, height)
+    tracemalloc.start()
+    try:
+        with pytest.raises(PngError, match="pixel cap"):
+            decode_png(blob)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 1 << 20, peak

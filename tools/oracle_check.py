@@ -92,7 +92,7 @@ def main() -> int:
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = 0
-    # `only` entries may be full names or prefixes (e.g. "q147");
+    # `only` entries may be full names or prefixes (e.g. "q28");
     # unmatched selectors are an error, not a silent no-op
     if only:
         matched = {name for name in qs

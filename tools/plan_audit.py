@@ -44,14 +44,7 @@ def main() -> None:
         "q205 (3-row snapshot-literal broadcast for the point-in-time",
         "containment join — plan-pinned to exactly one BNLJ and ≤3",
         "exchanges; a big snapshot table routes through",
-        "scale.bucketed_interval_join instead), q222 (ONE-row keyset",
-        "boundary broadcast — the in-query stand-in for the literal a",
-        "client passes from the previous page; the page itself is a",
-        "5-row TakeOrdered, zero Sort, pinned), q238 (one-row",
-        "merged×global HLL-estimate cross — two scalar sketch results",
-        "compared), q243 (one-row month-bounds cross feeding the",
-        "explode(sequence) calendar spine — the spine×status grid is",
-        "months×3 rows however big the fact table).",
+        "scale.bucketed_interval_join instead).",
         "",
         "| query | exchanges | sort-merge | broadcast | nested-loop | py | pushed filters |",
         "|---|---|---|---|---|---|---|",
