@@ -10,7 +10,8 @@ data.py:869-1100), `Table` (data.py:43-213), save/re-load (data.py:397-501,
 Spark mapping: `Table.table` is a *lazy* DataFrame — filters, joins,
 standardization, and expansion compose into one Catalyst plan; nothing
 executes until count/save/collect. At 100 TB this is the difference between
-one scan and five.
+one scan and five. Portal tables are the exception: `Source.load` binds
+them as snapshots, fetched once at their first action.
 """
 
 from __future__ import annotations
@@ -260,8 +261,11 @@ class Table:
     # ------------------------------------------------------------ transforms
     def standardize(self, **kwargs) -> "Table":
         """Standardize columns/values into the canonical schema
-        (reference data.py:682-792 → preproc.standardize). Lazy: appends
-        Column expressions, no job runs."""
+        (reference data.py:682-792 → preproc.standardize). Identification
+        runs one sample job (``limit(1000).toPandas()``); the date-format
+        probe adds a second only when that sample cannot vote for it (1000
+        rows or more, or a float date column). The standardization itself
+        is appended as Column expressions and runs with the next action."""
         from openpolicedata_spark.standardize import standardize
 
         self.table, self.transforms = standardize(
@@ -580,14 +584,35 @@ class Source:
         id: Optional[str] = None,
     ) -> Table:
         """Main query path (reference data.py:1165-1219 → __load
-        data.py:1372-1436): catalog row → loader → lazy filtered DataFrame →
-        Table."""
+        data.py:1372-1436): catalog row → loader → filtered DataFrame →
+        Table. Runs no Spark job, except a portal load with
+        ``sortby="date"``, whose sort runs when the snapshot is bound.
+
+        A file-backed table is the loader's native scan: every action
+        re-reads the files, and later filters on ``Table.table`` still
+        reach the scan. A portal table (the loader is not file-backed) is
+        a snapshot, bound with ``localCheckpoint(eager=False)``: its first
+        action fetches every page once, and every later action (the
+        standardize sample, expand, merge, the write) reads the stored
+        rows. So:
+        - a preview (``show``, ``to_pandas(max_rows=…)``) fetches the
+          whole filtered table, as the reference's pandas load does;
+          bound it with ``nrows=``;
+        - a later filter on ``Table.table`` runs on the snapshot and does
+          not reach the portal; push filters through ``date=``,
+          ``agency=`` and ``nrows=``;
+        - losing an executor loses the snapshot (SCALE.md, localCheckpoint
+          loss semantics): load the Table again.
+        ``RestLoader.load``, ``load_stream`` and
+        ``spark.read.format("opd_*")`` stay unbound."""
         row = self.filter(table_type, date, url=url, id=id)
         loader = self._get_loader(row)
         df = loader.load(
             date=date, nrows=nrows, offset=offset, agency=agency,
             select=select, sortby=sortby,
         )
+        if not loader.isfile():
+            df = df.localCheckpoint(eager=False)
         year = date if date is not None else row["Year"]
         return Table(
             df,

@@ -89,7 +89,13 @@ def detect_date_format(df: DataFrame, col: str, sample_n: int = 1000) -> dict:
         .limit(sample_n)
         .collect()
     )
-    vals = [r.v for r in rows]
+    return _strategy_from_values(dtype, [r.v for r in rows])
+
+
+def _strategy_from_values(dtype: str, vals: list) -> dict:
+    """`detect_date_format`'s vote over already-sampled non-null values
+    of a column whose Spark type string is `dtype`. The vote depends on
+    the multiset of values, not their order."""
     if dtype in ("int", "bigint", "smallint", "double", "float"):
         ints = [int(v) for v in vals if v is not None]
         kind = _classify_numeric(ints)

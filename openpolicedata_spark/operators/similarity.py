@@ -364,6 +364,13 @@ def kmeans_fit(corpus: DataFrame, k: int = 16, vec_col: str = "embedding",
     # pq_train at 121 s for a 240-vector corpus (round 14). With the
     # checkpoint each iteration reads the materialized rows: 121 -> ~8 s.
     corpus = corpus.select(vec_col).localCheckpoint(eager=False)
+    return _kmeans_fit_bound(corpus, k, vec_col, iters, seed)
+
+
+def _kmeans_fit_bound(corpus: DataFrame, k: int, vec_col: str, iters: int,
+                      seed: int) -> list[list[float]]:
+    """`kmeans_fit`'s Lloyd loop over a `corpus` the caller has already
+    bound (or that is a cheap projection of a bound frame)."""
     init_rows = (
         corpus.select(vec_col)
         .orderBy(F.xxhash64(F.col(vec_col), F.lit(seed)).asc())
@@ -721,6 +728,8 @@ def pq_train(corpus: DataFrame, m: int = 8, k: int = 16,
     # expression tree (e.g. ivf_residual_corpus's routed residual) under
     # its slice — m x (1 + iters) evaluations of the heaviest projection
     # in the family (round 14; same rule as kmeans_fit's own binding).
+    # The per-subspace fits run on slices of this one bound corpus, so
+    # they skip kmeans_fit's own bind.
     corpus = corpus.select(vec_col).localCheckpoint(eager=False)
 
     # The m subspace fits are INDEPENDENT (each reads its own slice of
@@ -734,8 +743,7 @@ def pq_train(corpus: DataFrame, m: int = 8, k: int = 16,
     def fit(s: int) -> list[list[float]]:
         sliced = corpus.select(
             F.slice(F.col(vec_col), s * sub + 1, sub).alias(vec_col))
-        return kmeans_fit(sliced, k=k, vec_col=vec_col,
-                          iters=iters, seed=seed + s)
+        return _kmeans_fit_bound(sliced, k, vec_col, iters, seed + s)
 
     with ThreadPoolExecutor(max_workers=min(m, 4)) as pool:
         books = list(pool.map(fit, range(m)))

@@ -13,6 +13,7 @@ the handler class when the FakeTransport pickle ships with a reader.
 from __future__ import annotations
 
 import datetime as _dt
+import json
 import re
 import urllib.parse
 from typing import Any, Optional
@@ -298,3 +299,27 @@ class FakePortal:
         if lo + lim > 10_000:
             raise ValueError("ODS: offset+limit exceeds the 10000-row window")
         return {"total_count": len(rows), "results": rows[lo:lo + lim]}
+
+
+class LoggingPortal(FakePortal):
+    """A FakePortal that appends each request to ``log_path`` as one JSON
+    line ``[url, params]``. Portal reads run in Python workers, so a file
+    is how the driver sees which requests were made (``read_requests``)."""
+
+    def __init__(self, portal: str, log_path: str, **kw):
+        super().__init__(portal, **kw)
+        self.log_path = log_path
+
+    def __call__(self, url: str, params: Optional[dict]) -> Any:
+        with open(self.log_path, "a") as f:
+            f.write(json.dumps([url, dict(params or {})]) + "\n")
+        return super().__call__(url, params)
+
+
+def read_requests(log_path: str) -> list[tuple[str, dict]]:
+    """The ``(url, params)`` requests a LoggingPortal served, in log order."""
+    try:
+        with open(log_path) as f:
+            return [tuple(json.loads(line)) for line in f]
+    except FileNotFoundError:
+        return []

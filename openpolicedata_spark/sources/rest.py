@@ -6,6 +6,18 @@ query predicates, agency equality — reference data.py:1372-1436), reads
 through ``spark.read.format("opd_<portal>")``, and re-applies the exact
 date filter locally when the pushed clause was inaccurate (reference
 `_filter_inaccurate_date_query`, data_loader.py:41-66).
+
+`RestLoader.load` returns the portal scan itself: every action on it
+pages the portal again, and Catalyst pushes later filters into it.
+`Source.load` binds that scan once per Table
+(``localCheckpoint(eager=False)``), so a loaded Table is a snapshot: its
+first action fetches every page once, and later actions (the
+standardize sample, expand, merge, the write) read the stored rows. A
+preview (``show``, ``Table.to_pandas(max_rows=…)``) therefore fetches
+the whole filtered table, as the reference's pandas load does; bound it
+with ``nrows=``. A filter added later on ``Table.table`` runs on the
+snapshot and does not reach the portal; push it through ``date=``,
+``agency=`` or ``nrows=``. ``load_stream`` is never bound.
 """
 
 from __future__ import annotations

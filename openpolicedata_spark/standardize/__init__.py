@@ -9,7 +9,8 @@ detection (`check_for_multiple`, preproc.py:1623-1944), cleanup/reorder
 
 Spark architecture (SURVEY §2.10 mapping): column *identification* is
 driver-side Python over ``df.schema`` plus ONE sample job
-(``df.limit(N).toPandas()``) — heuristics never scan the data. The chosen
+(``df.limit(N).toPandas()``) — heuristics never scan the data; the
+date-format vote reads the same sample when it holds every row. The chosen
 mappings are then *applied* as compiled Column expressions in a single
 ``withColumns`` — one lazy projection, fully codegen'd, no Python at
 execution time.
@@ -32,6 +33,7 @@ from openpolicedata_spark import defs
 from openpolicedata_spark.defs import Columns
 from openpolicedata_spark.functions import luts
 from openpolicedata_spark.functions.datetime import (
+    _strategy_from_values,
     date_precision_expr,
     detect_date_format,
     merge_date_time_expr,
@@ -248,6 +250,26 @@ def _role_col(role: Optional[str], subject_name: str, officer_name: str,
     return both_name
 
 
+# Spark types whose pandas sample values vote exactly like
+# `detect_date_format`'s collected Rows: strings arrive as str/None, and
+# integral columns with nulls arrive as float64/NaN, which `int()` maps
+# back exactly (a value above 2**53 fails every numeric range either
+# way). float/double keep the probe job: pandas reads NaN as null there,
+# while the probe's isNotNull keeps it.
+_SAMPLE_VOTE_TYPES = ("string", "int", "bigint", "smallint")
+
+
+def _date_strategy(ident: "ColumnIdentifier", date_col: str) -> dict:
+    """`detect_date_format(ident.df, date_col)` without its job when the
+    identification sample holds every row: the probe would collect the
+    same non-null values, and the vote ignores their order."""
+    dtype = dict(ident.df.dtypes).get(date_col, "")
+    if dtype in _SAMPLE_VOTE_TYPES and len(ident.sample) < SAMPLE_N:
+        return _strategy_from_values(
+            dtype, ident.sample[date_col].dropna().tolist())
+    return detect_date_format(ident.df, date_col)
+
+
 def standardize(
     df: DataFrame,
     table_type: Optional[str] = None,
@@ -383,7 +405,7 @@ def standardize(
     ))
     if date_col:
         col_map[Columns.DATE] = date_col
-        strat = detect_date_format(probe, date_col)
+        strat = _date_strategy(ident, date_col)
         specs.append((Columns.DATE, date_col,
                       lambda c, s=strat: to_datetime_expr(c, s)))
         # (date, precision) pair = the reference's pd.Period encoding

@@ -20,3 +20,22 @@ def source(spark, sf_dir):
     from openpolicedata_spark import Source, local_testdata_catalog
 
     return Source("TestData", catalog=local_testdata_catalog(sf_dir), spark=spark)
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(group, fn)`` runs ``fn()`` under Spark job group
+    ``group`` and returns (its result, the number of jobs it started)."""
+    sc = spark.sparkContext
+
+    def run(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

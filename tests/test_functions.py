@@ -276,6 +276,66 @@ def test_year_quarter_parsing(spark):
     assert df.select(date_precision_expr(strat).alias("p")).first().p == "quarter"
 
 
+# standardize's date-format vote reads its identification sample when
+# that sample holds every row; each frame must get the strategy
+# detect_date_format's own probe job would pick
+_COMPLETE_SAMPLE_DATES = {
+    "mixed_strings": ([("03/15/2021",), ("2021-11-02",), (None,),
+                       ("11/02/2021 10:30",), ("4/1/2020",)], "d string"),
+    "glued_ymd": ([("20210315",), ("20211102",)], "d string"),
+    "glued_mdy": ([("11052025",), ("01312024",)], "d string"),
+    "int_ymd_nulls": ([(20210315,), (None,), (20211102,)], "d bigint"),
+    "int_epoch_ms_nulls": ([(1609459200000,), (None,)], "d bigint"),
+    "int_year_nulls": ([(2019,), (None,), (2021,)], "d int"),
+    "year_strings": ([("2019",), ("2021",)], "d string"),
+    "quarters": ([("2021 Q1",), ("2021 Q2",), ("2022 Q4",), ("2023q3",)],
+                 "d string"),
+}
+
+
+def _std_date_strategy(df, count_jobs, tag):
+    """(standardize's DATE strategy, its job count, the job count of the
+    identification sample alone) for a frame whose date column is d."""
+    from openpolicedata_spark.defs import Columns
+    from openpolicedata_spark.standardize import SAMPLE_N, standardize
+
+    (_, maps), std_jobs = count_jobs(
+        f"std-{tag}", lambda: standardize(df, known_cols={Columns.DATE: "d"}))
+    _, sample_jobs = count_jobs(
+        f"sample-{tag}", lambda: df.limit(SAMPLE_N).toPandas())
+    strat = next(m.data_maps["strategy"] for m in maps
+                 if m.new_column_name == Columns.DATE)
+    return strat, std_jobs, sample_jobs
+
+
+@pytest.mark.parametrize("name", sorted(_COMPLETE_SAMPLE_DATES))
+def test_standardize_date_vote_reuses_complete_sample(spark, count_jobs, name):
+    rows, schema = _COMPLETE_SAMPLE_DATES[name]
+    df = spark.createDataFrame(rows, schema)
+    strat, std_jobs, sample_jobs = _std_date_strategy(df, count_jobs, name)
+    assert strat == detect_date_format(df, "d")
+    assert std_jobs == sample_jobs  # no probe job beside the sample
+
+
+@pytest.mark.parametrize("name", ["over_sample_n", "double"])
+def test_standardize_date_probe_runs_when_sample_cannot_vote(
+        spark, count_jobs, name):
+    """Above SAMPLE_N rows the sample is not the whole column, and a
+    double column's pandas sample cannot tell NaN from null: the probe
+    job still runs there."""
+    from openpolicedata_spark.standardize import SAMPLE_N
+
+    if name == "double":
+        df = spark.createDataFrame([(20210315.0,), (20211102.0,)], "d double")
+    else:
+        df = spark.range(SAMPLE_N + 1).select(F.concat(
+            F.lit("1/"), (F.col("id") % 28 + 1).cast("string"),
+            F.lit("/2020")).alias("d"))
+    strat, std_jobs, sample_jobs = _std_date_strategy(df, count_jobs, name)
+    assert strat == detect_date_format(df, "d")
+    assert std_jobs > sample_jobs
+
+
 class TestGeo:
     def test_haversine_known_distance(self, spark):
         """Paris→London ≈ 343.5 km (great-circle, spherical earth)."""

@@ -287,3 +287,53 @@ def test_read_parquet_repaired_nanosecond_units_repaired(spark, tmp_path):
     # ns truncates to us on repair
     assert r0.year == 2024 and r0.microsecond == 123_456
     assert _ts_is_nanos(p)
+
+
+def test_portal_table_fetches_each_page_once(spark, tmp_path, count_jobs):
+    """A portal Table is one snapshot: load (date + agency pushdown) ->
+    standardize -> expand -> to_parquet fetches every page exactly once,
+    although identification samples the table and the write reads it
+    again. Source.load itself starts no Spark job (the fetch happens at
+    the first action)."""
+    from openpolicedata_spark.catalog import Catalog
+    from openpolicedata_spark.data import Source
+    from openpolicedata_spark.sources.portals.testing import (
+        LoggingPortal,
+        make_rows,
+        read_requests,
+    )
+    from openpolicedata_spark.sources.portals.transport import FakeTransport
+    from openpolicedata_spark.sources.rest import make_rest_loader
+
+    rows = make_rows(300, date_text="mmddyyyy")
+    log = str(tmp_path / "requests.jsonl")
+    server = LoggingPortal("socrata", log, rows=rows, date_text="mmddyyyy")
+    cat = Catalog([dict(
+        State="Ohio", SourceName="Columbus", Agency="MULTIPLE",
+        TableType="STOPS", Year="MULTIPLE", DataType="Socrata",
+        URL="fake.portal", dataset_id="abcd-1234",
+        date_field="incident_date", agency_field="agency")])
+    src = Source("Columbus", catalog=cat, spark=spark)
+
+    def loader(row):
+        ld = make_rest_loader(spark, row["DataType"], row,
+                              transport=FakeTransport(handler=server))
+        ld.page_size = 10
+        return ld
+
+    src._get_loader = loader
+    t, load_jobs = count_jobs(
+        "load-fetch-once",
+        lambda: src.load("STOPS", 2020, agency="Springfield PD"))
+    assert load_jobs == 0
+    t.standardize().expand()
+    out = t.to_parquet(str(tmp_path / "stops"))
+
+    pages = [(p.get("$where"), int(p["$offset"]), int(p["$limit"]))
+             for _, p in read_requests(log) if "$offset" in p]
+    assert pages, "no page requests were logged"
+    repeated = {pg: pages.count(pg) for pg in set(pages) if pages.count(pg) > 1}
+    assert not repeated, f"pages fetched more than once: {repeated}"
+    want = sum(1 for r in rows if r["agency"] == "Springfield PD"
+               and r["incident_date"].endswith("/2020"))
+    assert want and spark.read.parquet(out).count() == want
