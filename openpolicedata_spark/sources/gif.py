@@ -37,6 +37,8 @@ import struct
 
 import numpy as np
 
+from openpolicedata_spark.sources.pixels import MAX_PIXELS
+
 __all__ = ["GifError", "decode_gif", "encode_gif", "GIF_SIGNATURES"]
 
 GIF_SIGNATURES = (b"GIF87a", b"GIF89a")
@@ -171,6 +173,8 @@ def decode_gif(data: bytes) -> tuple[list[np.ndarray], list[int]]:
 
     if width == 0 or height == 0:
         raise GifError("zero canvas dimension")
+    if width * height > MAX_PIXELS:
+        raise GifError(f"{width}x{height} exceeds the {MAX_PIXELS}-pixel cap")
     # Background color: equals the canvas fill when the GCT covers
     # bg_index, zeros otherwise (matching the canvas's zero-init).
     if gct is not None and bg_index < len(gct):
@@ -180,7 +184,7 @@ def decode_gif(data: bytes) -> tuple[list[np.ndarray], list[int]]:
         bg_rgb = np.zeros(3, dtype=np.uint8)
         bg_fill = False
     # The canvas is allocated LAZILY at the first image descriptor: a
-    # junk/adversarial header can declare a multi-gigapixel canvas and
+    # junk/adversarial header can declare a canvas up to the cap and
     # then fail on its very first block, and materializing + filling
     # height*width*3 bytes before any block is validated measured 19 s
     # and 7.6 GB for one 120-byte fuzz blob. Every valid GIF reaches an

@@ -53,6 +53,8 @@ from typing import Optional
 
 import numpy as np
 
+from openpolicedata_spark.sources.pixels import MAX_PIXELS
+
 __all__ = ["JpegError", "decode_jpeg", "encode_jpeg",
            "encode_jpeg_progressive", "JPEG_SIGNATURE"]
 
@@ -567,6 +569,9 @@ def decode_jpeg(data: bytes) -> np.ndarray:
                                 "(grayscale or YCbCr)")
             if width == 0 or height == 0:
                 raise JpegError("zero image dimension")
+            if width * height > MAX_PIXELS:
+                raise JpegError(
+                    f"{width}x{height} exceeds the {MAX_PIXELS}-pixel cap")
             if len(body) < 6 + 3 * ncomp:
                 raise JpegError("truncated SOF component specs")
             for i in range(ncomp):

@@ -1,4 +1,5 @@
-"""Decoded-size cap shared by the still-image codecs (PNG, BMP, TIFF).
+"""Decoded-size cap shared by the still-image codecs (PNG, BMP, TIFF, GIF,
+JPEG).
 
 A header's width×height is untrusted: each decoder rejects a claim above
 ``MAX_PIXELS`` before it allocates anything sized from it, so a

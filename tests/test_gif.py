@@ -326,6 +326,29 @@ def test_frame_rect_exceeding_canvas_raises():
         decode_gif(bytes(out))
 
 
+# (2¹⁶−1)² and one row over the 2²⁸-pixel cap at width 2¹⁴
+@pytest.mark.parametrize("width,height", [(65535, 65535),
+                                          (1 << 14, (1 << 14) + 1)])
+def test_header_over_pixel_cap_raises_before_allocating(width, height):
+    """A 1x1 frame under a screen claimed past the cap: no canvas."""
+    import tracemalloc
+
+    pal = gray_palette(4)
+    out = bytearray(b"GIF89a")
+    out += struct.pack("<HHBBB", width, height, 0, 0, 0)
+    out += b"\x2c" + struct.pack("<HHHH", 0, 0, 1, 1) + b"\x81" \
+        + pal.tobytes()
+    out += bytes([2]) + subblocks(lzw_encode_ref(2, [0])) + b"\x3b"
+    tracemalloc.start()
+    try:
+        with pytest.raises(GifError, match="pixel cap"):
+            decode_gif(bytes(out))
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 1 << 20, peak
+
+
 # -------------------------------------------- multimodal dispatch hooks
 
 def test_decode_video_and_image_dispatch():

@@ -489,6 +489,29 @@ def test_missing_sos_raises():
         decode_jpeg(b"\xff\xd8\xff\xd9")
 
 
+# (2¹⁶−1)² and one row over the 2²⁸-pixel cap at width 2¹⁴
+@pytest.mark.parametrize("width,height", [(65535, 65535),
+                                          (1 << 14, (1 << 14) + 1)])
+def test_header_over_pixel_cap_raises_before_allocating(width, height):
+    """SOF claims past the cap, then an SOS: no coefficient blocks."""
+    import tracemalloc
+
+    sof = struct.pack(">BHHB", 8, height, width, 1) + bytes([1, 0x11, 0])
+    sos = bytes([1, 1, 0x00, 0, 63, 0])
+    blob = (b"\xff\xd8"
+            + b"\xff\xc0" + struct.pack(">H", 2 + len(sof)) + sof
+            + b"\xff\xda" + struct.pack(">H", 2 + len(sos)) + sos
+            + b"\x00" * 16 + b"\xff\xd9")
+    tracemalloc.start()
+    try:
+        with pytest.raises(JpegError, match="pixel cap"):
+            decode_jpeg(blob)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 1 << 20, peak
+
+
 # -------------------------------------------------- decode_image dispatch
 
 def test_decode_image_magic_dispatch_jpeg():
