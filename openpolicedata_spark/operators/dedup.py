@@ -32,7 +32,7 @@ from openpolicedata_spark.functions.text import (
     normalize_text_expr,
     tokens_expr,
 )
-from openpolicedata_spark.streaming import _read_index
+from openpolicedata_spark.publish import publish, read_index, roll_forward
 
 
 def _token_hash_expr(tok: Column, token_hash: str) -> Column:
@@ -126,12 +126,17 @@ def exact_dedup(df: DataFrame, text_col: str = "text",
     return _exact_dedup_fp(df, text_col, id_col).drop("__fp__")
 
 
+def _digest(text_col: str) -> Column:
+    """The index key: md5 of the text, NULL text hashed as ''."""
+    return fingerprint_md5_expr(F.coalesce(F.col(text_col), F.lit("")))
+
+
 def _exact_dedup_fp(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """exact_dedup retaining the `__fp__` digest column — the single
     implementation of the min-id-wins contract (shared by the
     incremental variant so the semantics can never diverge)."""
-    fp = fingerprint_md5_expr(F.coalesce(F.col(text_col), F.lit("")))
-    return _collapse_by_fp(df.withColumn("__fp__", fp), df.columns, id_col)
+    return _collapse_by_fp(df.withColumn("__fp__", _digest(text_col)),
+                           df.columns, id_col)
 
 
 def _collapse_by_fp(tagged: DataFrame, cols: list, id_col: str) -> DataFrame:
@@ -1027,7 +1032,6 @@ def exact_dedup_incremental(
     index_path: str,
     text_col: str = "text",
     id_col: str = "doc_id",
-    update_index: bool = False,
 ) -> DataFrame:
     """Incremental exact dedup for a daily/continuous INGEST: drop batch
     rows whose content digest already exists in the persisted index
@@ -1038,45 +1042,22 @@ def exact_dedup_incremental(
     `streaming.near_dedup_sink`'s exact stage: each increment joins only
     a 16-byte-digest index, never the historical corpus.
 
-    Durability contract — the ORDER of the two writes decides the
-    failure mode, so the caller controls it:
-
-        kept = exact_dedup_incremental(batch, idx)     # no index write
-        kept.write...                                  # persist FIRST
-        append_digest_index(kept, idx, text_col)       # then admit
-
-    gives AT-LEAST-ONCE (a crash between the writes re-admits the same
-    content next run — dedup downstream on id). `update_index=True`
-    appends EAGERLY inside this call, which is AT-MOST-ONCE: a crash
-    before the caller persists loses that content forever (the index
-    says admitted, nothing holds the rows). Duplicate digests in the
-    index from retries are harmless (membership is an anti-join). A
-    half-written index directory (no parquet files) reads as empty
-    rather than wedging every later increment."""
+    Read-only: the index is never written here. `exact_dedup_ingest`
+    is the writer — it publishes survivors and their digests together.
+    NULL fingerprints in an index (markers an older ingest protocol
+    wrote) never match the anti-join. A half-written index directory
+    (no parquet files) reads as empty rather than wedging every later
+    increment."""
     spark = batch.sparkSession
-    tagged = batch.withColumn(
-        "__fp__", fingerprint_md5_expr(F.coalesce(F.col(text_col),
-                                                  F.lit(""))))
-    idx = _read_index(spark, index_path)
+    tagged = batch.withColumn("__fp__", _digest(text_col))
+    idx = read_index(spark, index_path)
     if idx is not None:
         tagged = tagged.join(
-            idx.withColumnRenamed("fingerprint", "__fp__"),
+            idx.select(F.col("fingerprint").alias("__fp__")),
             on="__fp__", how="left_anti")
     kept = _collapse_by_fp(tagged, batch.columns, id_col) \
         .localCheckpoint(eager=True)
-    if update_index:
-        kept.select(F.col("__fp__").alias("fingerprint"))             .write.mode("append").parquet(index_path)
     return kept.drop("__fp__")
-
-
-def append_digest_index(admitted: DataFrame, index_path: str,
-                        text_col: str = "text") -> None:
-    """Admit rows into the digest index — call AFTER persisting them
-    (the at-least-once ordering `exact_dedup_incremental` documents)."""
-    admitted.select(
-        fingerprint_md5_expr(F.coalesce(F.col(text_col), F.lit("")))
-        .alias("fingerprint")
-    ).write.mode("append").parquet(index_path)
 
 
 def exact_dedup_ingest(
@@ -1089,80 +1070,43 @@ def exact_dedup_ingest(
     compact_index_files: Optional[int] = 64,
 ) -> DataFrame:
     """EXACTLY-ONCE incremental exact dedup: `exact_dedup_incremental`
-    with the survivor-write/index-append window closed by the
-    countmin_sink marker-row technique (streaming/__init__.py), for
-    callers that want the function to own both writes.
+    with its survivors and their digests published together through
+    `publish.publish` (the appending sinks' protocol), for callers that
+    want the function to own both writes.
 
     Protocol (idempotent under redelivery of the same `batch_id`):
 
-    1. if the index holds a MARKER row for `batch_id` (fingerprint IS
-       NULL — inert for membership, which anti-joins on fingerprint),
-       the batch already fully committed: return the persisted survivors
+    1. roll forward any publish a crash left under `output_path`;
+    2. if `output_path/batch=<batch_id>/` exists, the batch already
+       committed — its directory appears with one rename, so its
+       presence is the replay marker: return the persisted survivors
        without recomputing or rewriting anything;
-    2. anti-join the batch against the index digests, collapse in-batch
-       duplicates (min-id wins);
-    3. OVERWRITE the survivors to `output_path/batch=<batch_id>/` —
-       rerunning after a crash rewrites the same rows, never appends;
-    4. append the survivors' digests AND the marker row in ONE job —
-       they commit together, so a crash can never record "admitted"
-       without the digests (which would silently re-admit content) or
-       digests without the survivor rows (which would silently drop the
-       batch on replay: the re-run would anti-join against its own
-       digests).
+    3. otherwise the survivors are `exact_dedup_incremental(batch,
+       index_path)`; publish them to `batch=<batch_id>` and their
+       digests to `index_path` under tag `batch_id`, then compact the
+       index (`streaming.compact_index`).
 
-    A crash between 3 and 4 replays 2–4 against an unchanged index —
-    same survivors, same overwrite, exactly-once output. Step 2 also
-    EXCLUDES digests tagged with this `batch_id`: a multi-file append
-    job that dies mid-commit can leave some of its own digest files
-    visible without the marker, and without the exclusion the replay
-    would anti-join the batch against its own digests and overwrite the
-    partition with nothing. With it, any partial state of step 4
-    replays to identical survivors (own-batch digest rows may then
-    appear twice in the index — harmless for the left-anti membership
-    join). The corpus stays one readable dataset:
+    A crash before the publish commits leaves nothing visible, and the
+    replay recomputes against an unchanged index; a crash after it is
+    finished by step 1. The corpus stays one readable dataset:
     `spark.read.parquet(output_path)` sees a `batch` partition column.
-    Old single-column indexes interoperate (mergeSchema read; missing
-    batch_id column means "no markers")."""
+    Indexes written by the older marker-row protocol keep working:
+    membership reads only `fingerprint`, in either file layout."""
+    import os
     import re as _re
+
+    from openpolicedata_spark.streaming import compact_index
 
     if not _re.fullmatch(r"[A-Za-z0-9._-]+", batch_id):
         raise ValueError(f"batch_id {batch_id!r} must be path-safe "
                          "([A-Za-z0-9._-]+)")
     spark = batch.sparkSession
-    part_path = f"{output_path}/batch={batch_id}"
-    idx = _read_index(spark, index_path, merge_schema=True)
-    if idx is not None and "batch_id" in idx.columns:
-        done = idx.where(F.col("fingerprint").isNull()
-                         & (F.col("batch_id") == batch_id)).limit(1)
-        if done.count() > 0:
-            return spark.read.parquet(part_path)
-    tagged = batch.withColumn(
-        "__fp__", fingerprint_md5_expr(F.coalesce(F.col(text_col),
-                                                  F.lit(""))))
-    if idx is not None:
-        members = idx.where(F.col("fingerprint").isNotNull())
-        if "batch_id" in idx.columns:
-            # never anti-join a replay against its own partially
-            # committed digests (see the protocol note above)
-            members = members.where(F.col("batch_id").isNull()
-                                    | (F.col("batch_id") != batch_id))
-        members = members.select(F.col("fingerprint").alias("__fp__"))
-        tagged = tagged.join(members, on="__fp__", how="left_anti")
-    kept = _collapse_by_fp(tagged, batch.columns, id_col) \
-        .localCheckpoint(eager=True)
-    kept.drop("__fp__").write.mode("overwrite").parquet(part_path)
-    digests = kept.select(F.col("__fp__").alias("fingerprint"),
-                          F.lit(batch_id).alias("batch_id"))
-    marker = spark.createDataFrame(
-        [(None, batch_id)], "fingerprint string, batch_id string")
-    digests.unionByName(marker).write.mode("append").parquet(index_path)
-    # the marker just committed, so this is the protocol's safe point:
-    # compaction preserves digests + markers row-for-row (mergeSchema
-    # unions old single-column index files; their NULL batch_id already
-    # means "no marker"), and a crash mid-compaction leaves old-or-new,
-    # restored by _recover_dir at the next index read
-    from openpolicedata_spark.streaming import compact_index
-
-    compact_index(spark, index_path, compact_index_files,
-                  merge_schema=True)
+    part_path = os.path.join(output_path, f"batch={batch_id}")
+    roll_forward(output_path)
+    if not os.path.isdir(part_path):
+        kept = exact_dedup_incremental(batch, index_path, text_col, id_col)
+        digests = kept.select(_digest(text_col).alias("fingerprint"))
+        publish(output_path, batch_id,
+                [(kept, part_path), (digests, index_path)])
+        compact_index(spark, index_path, compact_index_files)
     return spark.read.parquet(part_path)

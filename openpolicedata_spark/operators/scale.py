@@ -358,17 +358,16 @@ def zorder_layout(df: DataFrame, col_x: str, col_y: str, bits: int = 16,
 
 
 def compact_parquet_dir(spark: SparkSession, path: str,
-                        target_mb: int = 128,
-                        merge_schema: bool = False) -> tuple[int, int]:
+                        target_mb: int = 128) -> tuple[int, int]:
     """Small-file maintenance for append-mode sinks: streaming writers
     (`near_dedup_sink`, micro-batch appends) accumulate one file per
     batch, and a 100 TB table of kilobyte files dies on open() overhead
     and footer reads long before it dies on data volume. Rewrites the
     directory to ≈`target_mb` files via `coalesce` (NARROW — no shuffle;
     compaction only needs fewer files, not a new distribution) and swaps
-    atomically with the streaming module's write-then-swap (crash
-    recovery included: an interrupted compaction leaves either the old
-    or the new directory, never neither).
+    it in with `publish.swap` (crash recovery included: an interrupted
+    compaction leaves either the old or the new directory, never
+    neither).
 
     Returns (files_before, files_after). Run it out-of-band on sink
     output directories — the same cadence a lakehouse's OPTIMIZE job
@@ -384,9 +383,14 @@ def compact_parquet_dir(spark: SparkSession, path: str,
     import os
     import shutil
 
-    from openpolicedata_spark.streaming import _recover_dir, _swap_dir
+    from openpolicedata_spark.publish import (
+        aside_of,
+        fresh_stage,
+        recover,
+        swap,
+    )
 
-    _recover_dir(path)
+    recover(path, aside_of(path))
     files = sorted(_glob.glob(os.path.join(path, "*.parquet")))
     nested = _glob.glob(os.path.join(path, "*", "*.parquet"))
     if nested:
@@ -399,21 +403,13 @@ def compact_parquet_dir(spark: SparkSession, path: str,
     n_out = max(1, math.ceil(total / (target_mb * 1024 * 1024)))
     if n_out >= len(files):
         return (len(files), len(files))  # already compact enough
-    rd = spark.read
-    if merge_schema:
-        # mixed-schema append dirs (e.g. exact_dedup_ingest's digest
-        # index: old single-column files + (fingerprint, batch_id)
-        # files) must union columns, not take the first file's schema —
-        # absent columns become NULL, which every reader treats as
-        # "no marker / no batch tag" already
-        rd = rd.option("mergeSchema", "true")
-    df = rd.parquet(*files)             # explicit snapshot, not the dir
-    tmp = path.rstrip("/") + ".__stage_compact__"
+    df = spark.read.parquet(*files)     # explicit snapshot, not the dir
+    tmp = fresh_stage(path, "compact")
     df.coalesce(n_out).write.mode("overwrite").parquet(tmp)
     if sorted(_glob.glob(os.path.join(path, "*.parquet"))) != files:
         shutil.rmtree(tmp)              # sink appended meanwhile: abort
         return (len(files), len(files))
-    _swap_dir(tmp, path)
+    swap(tmp, path, aside_of(path))
     return (len(files),
             len(_glob.glob(os.path.join(path, "*.parquet"))))
 

@@ -187,6 +187,13 @@ def _parse_stbl(data: bytes, b: int, e: int, timescale: int,
 
     _, p = _full(data, table(b"stsz")[0])
     fixed_size, n_samples = struct.unpack_from(">II", data, p)
+    # every table count is checked against the file before a list is
+    # sized by it: a patched count must not allocate gigabytes
+    if n_samples * max(1, fixed_size) > len(data):
+        raise Mp4Error(f"stsz claims {n_samples} samples, more than "
+                       f"the {len(data)}-byte file holds")
+    if sum(count for count, _ in stts) != n_samples:
+        raise Mp4Error("stts does not cover the sample list")
     if fixed_size:
         sizes = [fixed_size] * n_samples
     else:
@@ -216,7 +223,7 @@ def _parse_stbl(data: bytes, b: int, e: int, timescale: int,
     spc = []
     for i, (first, per, _desc) in enumerate(stsc):
         last = stsc[i + 1][0] - 1 if i + 1 < len(stsc) else n_chunks
-        if first < 1 or first > last + 1:
+        if first < 1 or first > last + 1 or last > n_chunks:
             raise Mp4Error("bad stsc chunk run")
         spc.extend([per] * (last - first + 1))
     if len(spc) != n_chunks:
@@ -226,8 +233,6 @@ def _parse_stbl(data: bytes, b: int, e: int, timescale: int,
     deltas = []
     for count, delta in stts:
         deltas.extend([delta] * count)
-    if len(deltas) != n_samples:
-        raise Mp4Error("stts does not cover the sample list")
 
     samples = []
     si = 0

@@ -22,6 +22,16 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from openpolicedata_spark.publish import (
+    aside_of,
+    fresh_stage,
+    publish,
+    read_index,
+    recover,
+    roll_forward,
+    swap,
+)
+
 # When the events parquet stores ts as TIMESTAMP(NANOS) (Spark's reader
 # rejects that as a timestamp — see sources/file.py read_parquet_repaired)
 # ts is read as a raw long and repaired below. Other units read natively.
@@ -563,79 +573,18 @@ def running_user_totals(events: DataFrame,
     )
 
 
-def _recover_dir(path: str, tolerate: bool = False) -> None:
-    """Crash recovery for the rename-aside swap: if a previous process
-    died between the two renames (table moved aside, replacement not yet
-    in place), the `.__old__` copy is the only table — restore it before
-    reading state. Called at the top of every merging batch.
-    `tolerate=True` is the read-path form (round 13): losing the
-    restore race to another process means the table is live — benign."""
-    import os
-
-    old = path.rstrip("/") + ".__old__"
-    if not os.path.isdir(path) and os.path.isdir(old):
-        try:
-            os.rename(old, path)
-        except OSError:
-            if not tolerate:
-                raise
-
-
-def _read_index(spark, index_path: str, merge_schema: bool = False):
-    """The append-per-batch index at `index_path`, or None while it holds
-    no data files: absent, or left empty by a crash during its first
-    write (read.parquet would fail 'unable to infer schema' on every
-    later batch). `_recover_dir` runs first: a compaction that died
-    between its two swap renames leaves the index only at
-    `<path>.__old__`, and reading the missing directory as empty would
-    silently re-admit everything. `merge_schema` unions old
-    single-column digest files with `exact_dedup_ingest`'s
-    marker-carrying (fingerprint, batch_id) files."""
-    import glob as _glob
-    import os
-
-    _recover_dir(index_path)
-    if not _glob.glob(os.path.join(index_path, "*.parquet")):
-        return None
-    rd = spark.read
-    if merge_schema:
-        rd = rd.option("mergeSchema", "true")
-    return rd.parquet(index_path)
-
-
-def _swap_dir(tmp: str, path: str) -> None:
-    """Swap `tmp` into `path` via rename-aside. The old copy survives (as
-    path.__old__) until the new one is in place, and `_recover_dir`
-    restores it if a crash lands between the renames — so no crash point
-    loses the table. Readers can still observe a brief missing-directory
-    window between the two renames; a real table format (Delta/Iceberg)
-    closes that with atomic metadata commits."""
-    import os
-    import shutil
-
-    if os.path.isdir(path):
-        old = path.rstrip("/") + ".__old__"
-        if os.path.isdir(old):
-            shutil.rmtree(old)
-        os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old)
-    else:
-        os.rename(tmp, path)
-
-
 def compact_index(spark, index_path: str, max_files: Optional[int],
-                  target_mb: int = 128, merge_schema: bool = False) -> None:
+                  target_mb: int = 128) -> None:
     """Opportunistic small-file maintenance for the append-per-batch
     index sinks: every micro-batch appends one parquet file to
     `index_path` forever, so at production batch counts the index read
     at the head of every batch becomes listing/footer-bound long before
     it is data-bound. When the directory holds >= `max_files` data
     files, rewrite it with `operators.scale.compact_parquet_dir`
-    (explicit-snapshot read + write-then-swap: an interrupted compaction
-    leaves either the old or the new directory, never neither, and
-    `_recover_dir` at the head of every index read restores the
-    moved-aside copy if a crash landed between the two renames).
+    (explicit-snapshot read + `publish.swap`: an interrupted compaction
+    leaves either the old or the new directory, never neither, and the
+    recovery at the head of every index read restores the moved-aside
+    copy if a crash landed between the two renames).
     Contents are preserved row-for-row, so replay semantics are
     untouched — a redelivered batch sees exactly the index it would
     have seen uncompacted. `max_files=None` disables.
@@ -653,15 +602,14 @@ def compact_index(spark, index_path: str, max_files: Optional[int],
         return
     from openpolicedata_spark.operators.scale import compact_parquet_dir
 
-    compact_parquet_dir(spark, index_path, target_mb,
-                        merge_schema=merge_schema)
+    compact_parquet_dir(spark, index_path, target_mb)
 
 
 def upsert_sink(stream_df: DataFrame, path: str,
                 key_cols: tuple[str, ...],
                 order_cols: tuple[str, ...],
                 query_name: str = "upsert",
-                timeout_s: int = 120) -> None:
+                timeout_s: int = 120) -> "list":
     """Streaming upsert (merge-on-key) materialization via foreachBatch:
     each micro-batch is compacted to its latest row per key
     (`operators.sampling.latest_per_key` — max_by, map-side combined) and
@@ -678,30 +626,23 @@ def upsert_sink(stream_df: DataFrame, path: str,
     nothing upstream of the sink changes.
 
     Runs with trigger(availableNow) and blocks until drained (test /
-    backfill semantics). Exactly-once: foreachBatch may redeliver a batch
-    on failure-recovery, but the merge is idempotent (same keys, same
-    last-writer order), so replays converge."""
-    import os
-
+    backfill semantics); returns the drain's progress dicts.
+    Exactly-once: foreachBatch may redeliver a batch on
+    failure-recovery, but the merge is idempotent (same keys, same
+    last-writer order), so replays converge; each batch lands through
+    `_run_replace_sink`'s swap."""
     from openpolicedata_spark.operators.sampling import latest_per_key
 
-    spark = stream_df.sparkSession
     ks, order = list(key_cols), list(order_cols)
 
-    def merge_batch(batch: DataFrame, batch_id: int) -> None:
-        _recover_dir(path)
+    def fold(batch: DataFrame, prev, batch_id: int) -> DataFrame:
         compact = latest_per_key(batch, ks, order)
-        if os.path.isdir(path):
-            prev = spark.read.parquet(path)
-            compact = latest_per_key(
-                prev.unionByName(compact), ks, order)
-        # write-then-swap: never read and overwrite the same files in one
-        # job (Spark would delete inputs before reading them)
-        tmp = path.rstrip("/") + f".__stage_{batch_id}__"
-        compact.write.mode("overwrite").parquet(tmp)
-        _swap_dir(tmp, path)
+        if prev is not None:
+            compact = latest_per_key(prev.unionByName(compact), ks, order)
+        return compact
 
-    _run_merge_sink(stream_df, merge_batch, None, query_name, timeout_s)
+    return _run_replace_sink(stream_df, path, fold, None, query_name,
+                             timeout_s)
 
 
 def near_dedup_sink(stream_df: DataFrame, out_path: str, index_path: str,
@@ -762,7 +703,7 @@ def near_dedup_sink(stream_df: DataFrame, out_path: str, index_path: str,
         # broadcasts it (collecting the whole index to the driver every
         # batch) or shuffles both sides. Inner join + distinct on the
         # non-null band keys is set-identical to the former left_semi.
-        idx = _read_index(spark, index_path)
+        idx = read_index(spark, index_path)
         if idx is not None:
             seen = (idx.join(F.broadcast(banded),
                              on=["band_id", "band_hash"])
@@ -830,66 +771,57 @@ def _run_append_sink(stream_df: DataFrame, out_path: str, body,
     `body(batch, tag)` returns the (DataFrame, target_dir) pairs a batch
     publishes, or None; the tag is the batch id, prefixed with a per-run
     token under an ephemeral checkpoint (ids restart at 0 every run).
-    Per batch: (1) at the head, every hidden `<out_path>/.stage_*` a
-    crashed batch left is rolled forward if committed, else deleted —
-    before the body reads any index; (2) each frame is written to
-    `<out_path>/.stage_<tag>__/<i>` (readers skip dot-names); (3) a
-    `_COMMITTED` marker listing the targets is created atomically by
-    rename; (4) the staged files move into their targets by rename — the
-    whole directory when the target is new, so a `batch=<tag>` directory
-    appears at once — and `index_path` is compacted. A crash before (3)
-    publishes nothing; after it, the next batch head finishes the moves.
-    Output and index thus land together or not at all, and a replayed
-    batch meets its own index rows. Targets must share out_path's
-    filesystem; one writer per out_path (every stage is taken for this
-    sink's crash residue)."""
-    import json
-    import os
-    import shutil
+    Per batch: at the head, `publish.roll_forward(out_path)` finishes or
+    discards what a crashed batch left — before the body reads any
+    index; then `publish.publish` lands the pairs together or not at
+    all, and `index_path` is compacted. Output and index thus land
+    together, and a replayed batch meets its own index rows. One writer
+    per out_path."""
     import uuid
 
     spark = stream_df.sparkSession
     run_tok = "" if checkpoint_dir is not None else uuid.uuid4().hex[:8] + "-"
 
-    def land(stage: str) -> None:
-        marker = os.path.join(stage, "_COMMITTED")
-        if os.path.isfile(marker):
-            with open(marker) as fh:
-                targets = json.load(fh)
-            for i, target in enumerate(targets):
-                src = os.path.join(stage, str(i))
-                if not os.path.isdir(src):
-                    continue  # moved whole before the crash
-                _recover_dir(target)
-                if not os.path.isdir(target):
-                    os.makedirs(os.path.dirname(target), exist_ok=True)
-                    os.rename(src, target)
-                    continue
-                for name in os.listdir(src):
-                    if not name.startswith((".", "_")):
-                        os.rename(os.path.join(src, name),
-                                  os.path.join(target, name))
-        shutil.rmtree(stage, ignore_errors=True)
-
     def step(batch: DataFrame, batch_id: int) -> None:
-        if os.path.isdir(out_path):
-            for name in sorted(os.listdir(out_path)):
-                if name.startswith(".stage_"):
-                    land(os.path.join(out_path, name))
+        roll_forward(out_path)
         tag = f"{run_tok}{batch_id}"
         pubs = body(batch, tag)
         if not pubs:
             return
-        stage = os.path.join(out_path, f".stage_{tag}__")
-        for i, (df, _) in enumerate(pubs):
-            df.write.mode("overwrite").parquet(os.path.join(stage, str(i)))
-        aside = os.path.join(stage, "_COMMITTED.tmp")
-        with open(aside, "w") as fh:
-            json.dump([os.path.abspath(t) for _, t in pubs], fh)
-        os.rename(aside, os.path.join(stage, "_COMMITTED"))
-        land(stage)
+        publish(out_path, tag, pubs)
         if index_path is not None:
             compact_index(spark, index_path, compact_index_files)
+
+    return _run_merge_sink(stream_df, step, checkpoint_dir, query_name,
+                           timeout_s)
+
+
+def _run_replace_sink(stream_df: DataFrame, path: str, fold,
+                      checkpoint_dir: Optional[str], query_name: str,
+                      timeout_s: int) -> "list":
+    """The one exactly-once path of the replacing sinks, the counterpart
+    of `_run_append_sink`. `fold(batch, prev, batch_id)` returns the
+    whole new table, or None to leave it as it is; `prev` is the table
+    at `path`, or None before the first publish. Per batch: recover a
+    swap a crash interrupted, read `prev`, fold, write the result to a
+    fresh stage beside `path` (never read and overwrite the same files in
+    one job — Spark would delete inputs before reading them), and
+    `publish.swap` it into place. No crash point loses the table: the
+    old copy stays at its aside until the new one is live."""
+    import os
+
+    spark = stream_df.sparkSession
+    aside = aside_of(path)
+
+    def step(batch: DataFrame, batch_id: int) -> None:
+        recover(path, aside)
+        prev = spark.read.parquet(path) if os.path.isdir(path) else None
+        new = fold(batch, prev, batch_id)
+        if new is None:
+            return
+        stage = fresh_stage(path, batch_id)
+        new.write.mode("overwrite").parquet(stage)
+        swap(stage, path, aside)
 
     return _run_merge_sink(stream_df, step, checkpoint_dir, query_name,
                            timeout_s)
@@ -915,48 +847,48 @@ def countmin_sink(stream_df: DataFrame, key: str, path: str,
     Exactly-once: addition is NOT idempotent, so a replayed batch would
     double-count. Pass a persistent `checkpoint_dir` for production:
     Spark's source offsets make batch ids monotonic across runs, and the
-    sink then records each applied batch id as a MARKER ROW inside the
-    sketch table itself (row = -1, bucket = batch_id, cnt = 0) — the
-    marker commits in the SAME atomic directory swap as the counts it
-    describes, so no crash point can separate them (a sidecar written
+    sink then keeps ONE high-water marker row inside the sketch table
+    itself (row = -1, bucket = the last applied batch id, cnt = 0), so
+    `hwm >= batch_id` means "already applied" (scd2_sink's per-bucket
+    rule). The marker commits in the SAME directory swap as the counts
+    it describes, so no crash point can separate them (a sidecar written
     after the swap would leave a double-count window; written before, a
-    data-loss window). Lookups never see markers: `countmin_lookup`
-    probes rows 0..depth-1 only. With the default ephemeral checkpoint
-    every invocation restarts batch numbering at 0, so the guard is
-    DISABLED — ids from a previous run would wrongly mask new data; each
-    ephemeral run merges everything the source lists. Write-then-swap
-    with crash recovery as in `upsert_sink`."""
-    import os
-
+    data-loss window), and the table stays depth×width + 1 rows. A
+    table holding older per-batch markers keeps guarding: their max is
+    the hwm, and the next applied batch collapses them to one row.
+    Lookups never see markers: `countmin_lookup` probes rows
+    0..depth-1 only. With the default ephemeral checkpoint every
+    invocation restarts batch numbering at 0, so the guard is DISABLED
+    — ids from a previous run would wrongly mask new data; each
+    ephemeral run merges everything the source lists. Lands through
+    `_run_replace_sink`."""
     from openpolicedata_spark.operators.sketch import countmin_table
 
     spark = stream_df.sparkSession
     guarded = checkpoint_dir is not None
 
-    def body(batch: DataFrame, batch_id: int) -> None:
+    def fold(batch: DataFrame, prev, batch_id: int):
         if not batch.head(1):
-            return
-        _recover_dir(path)
-        prev = spark.read.parquet(path) if os.path.isdir(path) else None
-        if guarded and prev is not None:
-            applied = {r["bucket"] for r in
-                       prev.where(F.col("row") == -1).collect()}
-            if batch_id in applied:
-                return  # failure-recovery replay: already merged
+            return None
         partial = countmin_table(batch, key, depth=depth, width=width)
         if guarded:
+            if prev is not None:
+                hwm = (prev.where(F.col("row") == -1)
+                       .agg(F.max("bucket")).first()[0])
+                if hwm is not None and hwm >= batch_id:
+                    return None  # failure-recovery replay: already merged
+                prev = prev.where(F.col("row") >= 0)
             partial = partial.unionByName(spark.createDataFrame(
                 [(-1, batch_id, 0)], "row int, bucket long, cnt long"))
         if prev is not None:
             partial = (prev.unionByName(partial)
                        .groupBy("row", "bucket")
                        .agg(F.sum("cnt").alias("cnt")))
-        tmp = path.rstrip("/") + f".__stage_{batch_id}__"
-        # the running sketch is ≤ depth×width rows — one file is right
-        partial.coalesce(1).write.mode("overwrite").parquet(tmp)
-        _swap_dir(tmp, path)
+        # the running sketch is ≤ depth×width + 1 rows — one file is right
+        return partial.coalesce(1)
 
-    return _run_merge_sink(stream_df, body, checkpoint_dir, query_name, timeout_s)
+    return _run_replace_sink(stream_df, path, fold, checkpoint_dir,
+                             query_name, timeout_s)
 
 
 def bloom_sink(stream_df: DataFrame, key: str, path: str,
@@ -974,30 +906,23 @@ def bloom_sink(stream_df: DataFrame, key: str, path: str,
     batch_keys, m) rows); the merge is DISTINCT UNION — set union is
     IDEMPOTENT, so a failure-recovery replay of a micro-batch is
     harmless and no batch-id marker is needed (contrast countmin_sink,
-    whose additive merge must guard replays with marker rows). State
-    never exceeds m rows regardless of stream length. Write-then-swap
-    with the same crash recovery as `upsert_sink`; readers always see a
-    complete filter."""
-    import os
-
+    whose additive merge must guard replays with a high-water marker).
+    State never exceeds m rows regardless of stream length. Lands
+    through `_run_replace_sink`; readers always see a complete
+    filter."""
     from openpolicedata_spark.operators.sketch import bloom_build
 
-    spark = stream_df.sparkSession
-
-    def body(batch: DataFrame, batch_id: int) -> None:
+    def fold(batch: DataFrame, prev, batch_id: int):
         if not batch.head(1):
-            return
-        _recover_dir(path)
+            return None
         partial = bloom_build(batch, key, k=k, m=m)
-        if os.path.isdir(path):
-            partial = (spark.read.parquet(path)
-                       .unionByName(partial).distinct())
-        tmp = path.rstrip("/") + f".__stage_{batch_id}__"
+        if prev is not None:
+            partial = prev.unionByName(partial).distinct()
         # the filter is ≤ m rows — one file is right
-        partial.coalesce(1).write.mode("overwrite").parquet(tmp)
-        _swap_dir(tmp, path)
+        return partial.coalesce(1)
 
-    return _run_merge_sink(stream_df, body, checkpoint_dir, query_name, timeout_s)
+    return _run_replace_sink(stream_df, path, fold, checkpoint_dir,
+                             query_name, timeout_s)
 
 
 def semantic_dedup_sink(stream_df: DataFrame, out_path: str,
@@ -1042,7 +967,7 @@ def semantic_dedup_sink(stream_df: DataFrame, out_path: str,
                           vec_col=vec_col, id_col=id_col)
                  .where(F.col("keep"))
                  .drop("max_cos_prev", "keep"))
-        reps = _read_index(spark, index_path)
+        reps = read_index(spark, index_path)
         if reps is not None:
             th, vname = threshold, vec_col
             schema = T.StructType(list(intra.schema.fields))
@@ -1149,7 +1074,7 @@ def media_dedup_sink(stream_df: DataFrame, out_path: str,
                 .select(F.col("doc_id").alias(id_col)))
         hashed = (batch.join(drop, on=id_col, how="left_anti")
                   .join(ah, on=id_col))
-        idx = _read_index(spark, index_path)
+        idx = read_index(spark, index_path)
         if idx is not None:
             chunks = ahash_chunk_exprs(n_chunks, nbits)
             bc = hashed.select(
@@ -1280,7 +1205,7 @@ def video_dedup_sink(stream_df: DataFrame, out_path: str,
                 .select(F.col("doc_id").alias(id_col)))
         keep = batch.join(drop, on=id_col, how="left_anti")
         keep_fh = fh.join(drop, on=id_col, how="left_anti")
-        idx = _read_index(spark, index_path)
+        idx = read_index(spark, index_path)
         if idx is not None:
             n_own = keep_fh.groupBy(id_col).agg(
                 F.countDistinct("fhash").alias("n_own"))
@@ -1346,7 +1271,7 @@ def media_scan_sink(stream_df: DataFrame, out_path: str,
             F.coalesce(F.md5(F.col(content_col)), F.lit(""))
             .alias("__dg__"))
             .dropDuplicates([id_col, "__dg__"]))
-        idx = _read_index(spark, index_path)
+        idx = read_index(spark, index_path)
         if idx is not None:
             # NULL-SAFE on the id (review r9): a plain on=[id_col, ...]
             # anti-join never matches a NULL id (NULL=NULL is NULL), so
@@ -1369,112 +1294,36 @@ def media_scan_sink(stream_df: DataFrame, out_path: str,
                             timeout_s, index_path, compact_index_files)
 
 
-def _scd2_bucket_dir(path: str, b: int) -> str:
+def _scd2_bucket_dir(path: str, b) -> str:
     import os
 
     return os.path.join(path, f"bkt={b}")
 
 
-def _recover_scd2_buckets(path: str, writer: bool = True) -> None:
-    """Crash recovery for scd2_sink's PER-BUCKET rename-aside swaps:
-    a process that died between the two renames of one bucket leaves
-    the bucket only as its hidden `.old_bkt_K` aside — restore it; a
-    death after the replacement landed but before the aside cleanup
-    leaves a stale aside next to a live bucket — drop it. Hidden
-    names (leading dot) keep Spark's partition discovery blind to
-    both. Called at the head of every fold and every read.
+def _open_scd2(path: str, reader: bool = False) -> None:
+    """Bring an scd2_sink table to a consistent state before a fold, a
+    migration or a read: finish an interrupted whole-table swap (a
+    crashed rebucket_scd2 migration), refuse a foreign layout, then
+    finish every interrupted bucket swap — a bucket's aside is the
+    hidden `.old_bkt_K` (Spark's partition discovery skips dot-names).
+    `reader=True` is the read path (read_scd2, and through it
+    scd2_enrich_sink), which may run CONCURRENTLY with the fold:
+    restore-only and race-tolerant (`publish.recover`).
 
-    `writer=False` is the READ-path variant (ADVICE r12): a reader —
-    read_scd2, and scd2_enrich_sink's per-batch read — may run
-    CONCURRENTLY with the fold, and a swap in flight looks exactly
-    like a crash (live missing, aside present). The read path
-    therefore only RESTORES a missing bucket (required so a real
-    crash doesn't lose it for readers) and never deletes a stale
-    aside (that cleanup racing `_swap_scd2_bucket`'s own rmtree/
-    rename would kill the writer's batch); every rename tolerates
-    losing the race to the writer or to another reader — whichever
-    process wins, the bucket ends up live. The writer path keeps the
-    full cleanup and needs no tolerance: foreachBatch serializes it
-    against itself, and `_swap_scd2_bucket`'s retry loop absorbs a
-    reader restoring an aside mid-swap."""
-    import os
-    import shutil
-
-    if not os.path.isdir(path):
-        return
-    for name in os.listdir(path):
-        if not name.startswith(".old_bkt_"):
-            continue
-        aside = os.path.join(path, name)
-        live = os.path.join(path, f"bkt={name[len('.old_bkt_'):]}")
-        if os.path.isdir(live):
-            if writer:
-                shutil.rmtree(aside)
-        else:
-            try:
-                os.rename(aside, live)
-            except OSError:
-                if writer:
-                    raise
-                # a racing writer (mid-swap rename) or reader won;
-                # the bucket is live either way — nothing to restore
-
-
-def _swap_scd2_bucket(stage_dir: str, path: str, b: int) -> None:
-    """Atomically (rename-aside) replace ONE bucket directory. Same
-    crash discipline as `_swap_dir`, scoped to the bucket: no crash
-    point loses the bucket, `_recover_scd2_buckets` finishes an
-    interrupted swap either direction.
-
-    Retry loop (ADVICE r12): a concurrent reader's recovery can
-    restore the aside to live BETWEEN this function's two renames
-    (to the reader, the in-flight swap is indistinguishable from a
-    crash). The stage→live rename then fails — move the restored
-    copy aside again and retry; readers only restore a missing
-    bucket, so the loop converges as soon as a full
-    aside→stage-landing cycle runs unobserved (bounded here because
-    each read call restores at most once)."""
-    import os
-    import shutil
-
-    live = _scd2_bucket_dir(path, b)
-    aside = os.path.join(path, f".old_bkt_{b}")
-    for _ in range(1000):
-        if os.path.isdir(live):
-            shutil.rmtree(aside, ignore_errors=True)
-            try:
-                os.rename(live, aside)
-            except OSError:
-                continue  # a racing reader cannot cause this rename
-                # to fail (readers never touch live dirs that exist),
-                # but be safe: re-check state and retry
-        try:
-            os.rename(stage_dir, live)
-            break
-        except OSError:
-            continue  # racing reader restored aside→live: loop
-    else:
-        raise OSError(
-            f"scd2 bucket swap for bkt={b} could not land after 1000 "
-            f"attempts — a process is repeatedly restoring the aside")
-    shutil.rmtree(aside, ignore_errors=True)
-
-
-def _check_scd2_layout(path: str) -> None:
-    """Refuse a directory that holds ROOT-LEVEL parquet files with no
-    `.n_buckets` stamp (ADVICE r12): that is a pre-round-12
-    UNBUCKETED scd2 table (or some other flat parquet dir) — silently
-    treating it as an empty bucketed table would fork its state, and
-    a later read would hit Spark's conflicting-directory-structure
-    error on the mixed layout. Raise the migration path instead."""
+    Layout check (ADVICE r12): ROOT-LEVEL parquet files with no
+    `.n_buckets` stamp are a pre-round-12 UNBUCKETED scd2 table (or
+    some other flat parquet dir) — silently treating it as an empty
+    bucketed table would fork its state, and a later read would hit
+    Spark's conflicting-directory-structure error on the mixed layout.
+    Raise the migration path instead."""
     import glob as _glob
     import os
 
+    recover(path, aside_of(path), reader)
     if not os.path.isdir(path):
         return
-    if os.path.isfile(os.path.join(path, ".n_buckets")):
-        return
-    if _glob.glob(os.path.join(path, "*.parquet")):
+    if (not os.path.isfile(os.path.join(path, ".n_buckets"))
+            and _glob.glob(os.path.join(path, "*.parquet"))):
         raise ValueError(
             f"scd2 table at {path} holds root-level parquet files but "
             f"no .n_buckets stamp — this is an UNBUCKETED (pre-r12) "
@@ -1482,6 +1331,10 @@ def _check_scd2_layout(path: str) -> None:
             f"it first (read it, rewrite through rebucket_scd2 after "
             f"an initial bucketed fold, or point the sink at a fresh "
             f"path)")
+    for name in os.listdir(path):
+        if name.startswith(".old_bkt_"):
+            recover(_scd2_bucket_dir(path, name[len(".old_bkt_"):]),
+                    os.path.join(path, name), reader)
 
 
 def read_scd2(spark: SparkSession, path: str) -> DataFrame:
@@ -1489,12 +1342,7 @@ def read_scd2(spark: SparkSession, path: str) -> DataFrame:
     the in-table state/marker rows, bookkeeping columns, and the
     bucket partition column stripped.
     Schema: (key, *value_cols, valid_from, valid_to, is_current)."""
-    # read-only recovery: restore-only, race-tolerant — a read may run
-    # concurrently with the sink's fold (ADVICE r12). The whole-table
-    # form first (a crashed rebucket_scd2 migration), then per-bucket.
-    _recover_dir(path, tolerate=True)
-    _check_scd2_layout(path)
-    _recover_scd2_buckets(path, writer=False)
+    _open_scd2(path, reader=True)
     t = spark.read.parquet(path)
     drop = [c for c in ("__kind__", "__del__", "__tb__", "__bid__",
                         "bkt")
@@ -1636,17 +1484,11 @@ def scd2_sink(stream_df: DataFrame, path: str,
     order_tail = ["__tb__"] if tiebreak_col else []
 
     def body(batch: DataFrame, batch_id: int) -> None:
-        import glob as _glob
         import shutil
 
         if not batch.head(1):
             return
-        _recover_dir(path)  # a crashed rebucket_scd2 migration swap
-        _check_scd2_layout(path)
-        _recover_scd2_buckets(path)
-        # a crashed previous attempt may have left a stage dir behind
-        for stale in _glob.glob(path.rstrip("/") + ".__stage_*__"):
-            shutil.rmtree(stale)
+        _open_scd2(path)
         nb_file = os.path.join(path, ".n_buckets")
         if os.path.isfile(nb_file):
             with open(nb_file) as fh:
@@ -1830,7 +1672,7 @@ def scd2_sink(stream_df: DataFrame, path: str,
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
-        stage = path.rstrip("/") + f".__stage_{batch_id}__"
+        stage = fresh_stage(path, batch_id)
         # one output partition per touched bucket → one data file per
         # bucket dir: the table stays self-compacted per bucket
         (out.repartition(len(touched), "bkt")
@@ -1840,9 +1682,10 @@ def scd2_sink(stream_df: DataFrame, path: str,
             with open(nb_file, "w") as fh:
                 fh.write(str(n_buckets))
         for b in touched:
-            sdir = os.path.join(stage, f"bkt={b}")
+            sdir = _scd2_bucket_dir(stage, b)
             if os.path.isdir(sdir):
-                _swap_scd2_bucket(sdir, path, b)
+                swap(sdir, _scd2_bucket_dir(path, b),
+                     os.path.join(path, f".old_bkt_{b}"))
         shutil.rmtree(stage)
 
     return _run_merge_sink(stream_df, body, checkpoint_dir, query_name,
@@ -1865,7 +1708,7 @@ def rebucket_scd2(spark: SparkSession, path: str,
     recovery redelivery of any batch ≤ hwm must skip everywhere), and
     land the result as a from-scratch layout via ONE whole-table
     rename-aside swap — a crash at any point leaves either the old
-    table or the new one, never a mix (`_recover_dir` at the head of
+    table or the new one, never a mix (the recovery at the head of
     this utility, every fold, and every read finishes an interrupted
     swap).
 
@@ -1879,24 +1722,18 @@ def rebucket_scd2(spark: SparkSession, path: str,
     rebuild, paid once per resize instead of per batch; the
     repartition puts one data file per new bucket (the self-compacted
     invariant folds maintain)."""
-    import glob as _glob
     import os
-    import shutil
 
     if new_n_buckets < 1:
         raise ValueError(
             f"new_n_buckets must be >= 1, got {new_n_buckets}")
-    _recover_dir(path)            # finish an interrupted migration swap
-    _check_scd2_layout(path)
-    _recover_scd2_buckets(path)   # finish interrupted bucket swaps
+    _open_scd2(path)   # finish interrupted migration and bucket swaps
     nb_file = os.path.join(path, ".n_buckets")
     if not os.path.isfile(nb_file):
         raise ValueError(
             f"rebucket_scd2: {path} is not an scd2_sink table "
             f"(no .n_buckets stamp)")
-    stage = path.rstrip("/") + ".__stage_rebucket__"
-    if os.path.isdir(stage):      # a crashed previous migration attempt
-        shutil.rmtree(stage)
+    stage = fresh_stage(path, "rebucket")
     t = spark.read.parquet(path)
     if key_col is None:
         key_col = t.columns[0]    # canon layout: the key is first
@@ -1925,11 +1762,7 @@ def rebucket_scd2(spark: SparkSession, path: str,
      .write.partitionBy("bkt").mode("overwrite").parquet(stage))
     with open(os.path.join(stage, ".n_buckets"), "w") as fh:
         fh.write(str(new_n_buckets))
-    # parquet's overwrite drops nothing else into stage; make sure no
-    # hidden aside names ride along (paranoia: they never should)
-    for junk in _glob.glob(os.path.join(stage, ".old_bkt_*")):
-        shutil.rmtree(junk, ignore_errors=True)
-    _swap_dir(stage, path)
+    swap(stage, path, aside_of(path))
 
 
 # stateful_gap_fill's DEFAULT corrupted-epoch guard (VERDICT r11 #3 →

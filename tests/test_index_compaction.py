@@ -113,23 +113,33 @@ def test_media_dedup_sink_replay_over_compaction_boundary(
                   for r in spark.read.parquet(idx).collect()) == idx_rows
 
 
+def _legacy_digests(spark, idx, texts, batch_id=None):
+    """Write digests the way older ingest code did: a single-column
+    file, or with batch_id a (fingerprint, batch_id) file that ends in
+    that batch's NULL-fingerprint marker row."""
+    from openpolicedata_spark.functions.text import fingerprint_md5_expr
+
+    df = spark.createDataFrame([(t,) for t in texts], "text string") \
+        .select(fingerprint_md5_expr(F.col("text")).alias("fingerprint"))
+    if batch_id is not None:
+        df = df.withColumn("batch_id", F.lit(batch_id)).unionByName(
+            spark.createDataFrame([(None, batch_id)],
+                                  "fingerprint string, batch_id string"))
+    df.coalesce(1).write.mode("append").parquet(idx)
+
+
 def test_exact_dedup_ingest_replay_after_compaction(spark, tmp_path):
-    """exact_dedup_ingest with compaction enabled: markers and digests
-    survive the rewrite (mergeSchema unions the old single-column files),
-    so a replayed batch_id still short-circuits to its persisted
-    survivors and cross-batch membership still drops dups."""
-    from openpolicedata_spark.operators.dedup import (
-        append_digest_index,
-        exact_dedup_ingest,
-    )
+    """exact_dedup_ingest with compaction enabled: digests survive the
+    rewrite, so a replayed batch_id still short-circuits to its
+    persisted survivors and cross-batch membership still drops dups."""
+    from openpolicedata_spark.operators.dedup import exact_dedup_ingest
 
     idx = str(tmp_path / "idx")
     out = str(tmp_path / "out")
     schema = "doc_id long, text string"
 
     # an OLD-style single-column index file precedes the ingests
-    legacy = spark.createDataFrame([(0, "legacy doc")], schema)
-    append_digest_index(legacy, idx)
+    _legacy_digests(spark, idx, ["legacy doc"])
 
     for day in range(4):
         b = spark.createDataFrame(
@@ -143,8 +153,8 @@ def test_exact_dedup_ingest_replay_after_compaction(spark, tmp_path):
     n_files = len(_pq_files(idx))
     assert n_files < 5  # 1 legacy + 4 ingests appended; compaction fired
 
-    # replay an old batch over the compacted index: marker found →
-    # persisted survivors returned, nothing recomputed/re-admitted
+    # replay an old batch over the compacted index: its partition is
+    # found → persisted survivors returned, nothing recomputed/re-admitted
     b1 = spark.createDataFrame(
         [(100 + j, f"content 1:{j}") for j in range(3)]
         + [(109, "legacy doc")], schema)
@@ -157,6 +167,45 @@ def test_exact_dedup_ingest_replay_after_compaction(spark, tmp_path):
     b_new = spark.createDataFrame([(500, "content 2:1")], schema)
     assert exact_dedup_ingest(b_new, idx, out, "day9",
                               compact_index_files=None).count() == 0
+
+
+def test_exact_dedup_ingest_reads_marker_row_index(spark, tmp_path):
+    """An index the marker-row protocol wrote mixes single-column files
+    with (fingerprint, batch_id) files holding NULL-fingerprint markers.
+    Membership still drops every indexed digest, a published batch still
+    short-circuits, and compaction keeps every non-NULL fingerprint."""
+    from openpolicedata_spark.operators.dedup import exact_dedup_ingest
+    from openpolicedata_spark.streaming import compact_index
+
+    idx = str(tmp_path / "idx")
+    out = str(tmp_path / "out")
+    schema = "doc_id long, text string"
+    _legacy_digests(spark, idx, ["legacy doc"])
+    _legacy_digests(spark, idx, ["old a", "old b"], batch_id="day0")
+    spark.createDataFrame([(1, "old a"), (2, "old b")], schema) \
+        .write.parquet(os.path.join(out, "batch=day0"))
+
+    def fingerprints():
+        return sorted(r.fingerprint for r in spark.read.parquet(idx)
+                      .where("fingerprint IS NOT NULL").collect())
+
+    before = fingerprints()
+    assert len(before) == 3
+    b = spark.createDataFrame(
+        [(10, "legacy doc"), (11, "old b"), (12, "new c")], schema)
+    kept = exact_dedup_ingest(b, idx, out, "day1", compact_index_files=None)
+    assert [r.doc_id for r in kept.collect()] == [12]
+    assert sorted(r.doc_id for r in exact_dedup_ingest(
+        b, idx, out, "day0").collect()) == [1, 2]
+
+    after = fingerprints()
+    compact_index(spark, idx, 1)
+    assert len(_pq_files(idx)) == 1
+    assert fingerprints() == after and set(before) < set(after)
+    b2 = spark.createDataFrame([(20, "old a"), (21, "new c"),
+                                (22, "new d")], schema)
+    assert [r.doc_id for r in exact_dedup_ingest(
+        b2, idx, out, "day2").collect()] == [22]
 
 
 def test_digest_index_read_recovers_crashed_compaction(spark, tmp_path):

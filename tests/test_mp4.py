@@ -226,6 +226,38 @@ def test_truncation_never_leaks_struct_error():
         pass
 
 
+def _overcount(table: str) -> bytes:
+    """A one-sample file whose `table` claims 2²⁴ entries: the stsz
+    count under a fixed sample size, the stts run count, or an stsc
+    run ending 2²⁴ chunks past the one real chunk."""
+    j = encode_jpeg(flat_frame(1, 1))
+    stsc = [(1, 1), (1 << 24, 1)] if table == "stsc" else [(1, 1)]
+    stbl = make_stbl(b"jpeg", 8, 8, [(1, 100)], stsc, [len(j)],
+                     [ftyp_len() + 8], fixed_size=len(j))
+    blob = bytearray(make_mp4([make_trak(b"vide", stbl)], j))
+    # count field: after the box type, version/flags and sample size
+    # (stsz) or entry count (stts)
+    if table in ("stsz", "stts"):
+        struct.pack_into(">I", blob, blob.index(table.encode()) + 12,
+                         1 << 24)
+    return bytes(blob)
+
+
+@pytest.mark.parametrize("table", ["stsz", "stts", "stsc"])
+def test_table_overcount_raises_before_allocating(table):
+    import tracemalloc
+
+    blob = _overcount(table)
+    tracemalloc.start()
+    try:
+        with pytest.raises(Mp4Error):
+            parse_mp4_video_track(blob)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 1 << 20, peak
+
+
 def test_junk_fuzz():
     for seed in range(40):
         r = np.random.default_rng(seed)

@@ -658,23 +658,25 @@ def test_frequent_directions_terminates_when_dim_le_ell(spark):
 class TestExactDedupIncremental:
     def test_increments_never_readmit(self, spark, tmp_path):
         from openpolicedata_spark.operators.dedup import (
-            append_digest_index,
             exact_dedup_incremental,
+            exact_dedup_ingest,
         )
 
         idx = str(tmp_path / "digest_index")
+        out = str(tmp_path / "out")
         b1 = spark.createDataFrame(
             [(1, "alpha beta"), (2, "alpha beta"), (3, "gamma")],
             "doc_id long, text string")
         k1 = exact_dedup_incremental(b1, idx)
         assert sorted(r["doc_id"] for r in k1.collect()) == [1, 3]
-        # at-least-once pattern: persist first, then admit
-        append_digest_index(k1, idx)
+        # read-only: admitting is exact_dedup_ingest's job
+        exact_dedup_ingest(b1, idx, out, "b1")
         b2 = spark.createDataFrame(
             [(10, "alpha beta"), (11, "delta")],
             "doc_id long, text string")
-        k2 = exact_dedup_incremental(b2, idx, update_index=True)  # eager
+        k2 = exact_dedup_incremental(b2, idx)
         assert sorted(r["doc_id"] for r in k2.collect()) == [11]
+        exact_dedup_ingest(b2, idx, out, "b2")
         # third increment repeats everything: nothing admitted
         assert exact_dedup_incremental(b1.unionByName(b2), idx).count() == 0
         assert spark.read.parquet(idx).distinct().count() == 3
@@ -682,20 +684,20 @@ class TestExactDedupIncremental:
     def test_default_leaves_index_and_null_text_collapses(self, spark,
                                                           tmp_path):
         from openpolicedata_spark.operators.dedup import (
-            append_digest_index,
             exact_dedup_incremental,
+            exact_dedup_ingest,
         )
 
         idx = str(tmp_path / "idx2")
         b = spark.createDataFrame(
             [(1, None), (2, ""), (3, "x")], "doc_id long, text string")
-        k = exact_dedup_incremental(b, idx)   # default: no index write
+        k = exact_dedup_incremental(b, idx)   # never writes the index
         # NULL and empty text share one dup group (min id 1 wins)
         assert sorted(r["doc_id"] for r in k.collect()) == [1, 3]
         import os
 
         assert not os.path.isdir(idx)
-        append_digest_index(k, idx)
+        exact_dedup_ingest(b, idx, str(tmp_path / "out"), "b")
         # null-text content is now indexed: never re-admitted
         again = exact_dedup_incremental(b, idx)
         assert again.count() == 0
@@ -714,8 +716,8 @@ class TestExactDedupIncremental:
 
 
 class TestExactDedupIngest:
-    """Exactly-once ingest (VERDICT r3/r4 item: close the survivor-write/
-    index-append window with the countmin_sink marker technique)."""
+    """Exactly-once ingest: survivors and digests publish together
+    (crash cases: tests/test_sink_publication.py)."""
 
     def _batch(self, spark, rows):
         return spark.createDataFrame(rows, "doc_id long, text string")
@@ -727,15 +729,15 @@ class TestExactDedupIngest:
         b1 = self._batch(spark, [(1, "alpha"), (2, "alpha"), (3, "beta")])
         k1 = exact_dedup_ingest(b1, idx, out, "day1")
         assert sorted(r["doc_id"] for r in k1.collect()) == [1, 3]
-        # full redelivery of the SAME batch id: marker short-circuits —
-        # output unchanged, index digests not duplicated
+        # full redelivery of the SAME batch id: the published partition
+        # short-circuits — output unchanged, index digests not duplicated
         k1b = exact_dedup_ingest(b1, idx, out, "day1")
         assert sorted(r["doc_id"] for r in k1b.collect()) == [1, 3]
         corpus = spark.read.parquet(out)
         assert corpus.count() == 2
         idx_rows = spark.read.parquet(idx)
         assert idx_rows.where("fingerprint IS NOT NULL").count() == 2
-        assert idx_rows.where("fingerprint IS NULL").count() == 1
+        assert idx_rows.where("fingerprint IS NULL").count() == 0
         # a later batch with overlapping content dedups against day1
         b2 = self._batch(spark, [(10, "alpha"), (11, "gamma")])
         k2 = exact_dedup_ingest(b2, idx, out, "day2")
@@ -745,81 +747,23 @@ class TestExactDedupIngest:
                    spark.read.parquet(out).select("batch").collect()) \
             == {"day1", "day2"}
 
-    def test_crash_between_output_and_index_replays_clean(self, spark,
-                                                          tmp_path):
-        """Simulate the crash window: survivors written, index append
-        never happened. The re-run must produce the SAME output rows
-        (not zero — the failure mode of appending digests first) and
-        then commit the index."""
-        from openpolicedata_spark.operators import dedup as D
-
-        idx, out = str(tmp_path / "idx"), str(tmp_path / "out")
-        b1 = self._batch(spark, [(1, "alpha"), (3, "beta")])
-        # first run: let the output write land, then die before append
-        tagged = b1.withColumn("__fp__", D.fingerprint_md5_expr(
-            F.coalesce(F.col("text"), F.lit(""))))
-        kept = D._collapse_by_fp(tagged, b1.columns, "doc_id")
-        kept.drop("__fp__").write.mode("overwrite").parquet(
-            out + "/batch=day1")
-        # (no index write — crashed here)
-        k = D.exact_dedup_ingest(b1, idx, out, "day1")
-        assert sorted(r["doc_id"] for r in k.collect()) == [1, 3]
-        assert spark.read.parquet(out).count() == 2
-        assert spark.read.parquet(idx).where(
-            "fingerprint IS NULL").count() == 1
-        # and now the marker exists: a further redelivery is a no-op
-        assert D.exact_dedup_ingest(b1, idx, out, "day1").count() == 2
-
-    def test_crash_mid_index_commit_replays_clean(self, spark, tmp_path):
-        """Simulate the WORST crash window: the digest+marker append job
-        died mid-commit, leaving this batch's digest rows visible but no
-        marker. Without the own-batch exclusion, the replay anti-joins
-        the batch against its own digests and overwrites the partition
-        with NOTHING (data loss); with it, the replay recomputes
-        identical survivors."""
-        from openpolicedata_spark.operators import dedup as D
-
-        idx, out = str(tmp_path / "idx"), str(tmp_path / "out")
-        b1 = self._batch(spark, [(1, "alpha"), (3, "beta")])
-        tagged = b1.withColumn("__fp__", D.fingerprint_md5_expr(
-            F.coalesce(F.col("text"), F.lit(""))))
-        kept = D._collapse_by_fp(tagged, b1.columns, "doc_id")
-        kept.drop("__fp__").write.mode("overwrite").parquet(
-            out + "/batch=day1")
-        # partial step 4: digests landed, marker did NOT
-        kept.select(F.col("__fp__").alias("fingerprint"),
-                    F.lit("day1").alias("batch_id")) \
-            .write.mode("append").parquet(idx)
-        k = D.exact_dedup_ingest(b1, idx, out, "day1")
-        assert sorted(r["doc_id"] for r in k.collect()) == [1, 3]
-        assert spark.read.parquet(out).count() == 2
-        # marker now committed; a redelivery short-circuits
-        assert spark.read.parquet(idx).where(
-            "fingerprint IS NULL").count() == 1
-        assert D.exact_dedup_ingest(b1, idx, out, "day1").count() == 2
-        # membership for LATER batches is unaffected by the duplicate
-        # own-batch digest rows
-        b2 = self._batch(spark, [(10, "alpha"), (11, "gamma")])
-        assert sorted(r["doc_id"] for r in D.exact_dedup_ingest(
-            b2, idx, out, "day2").collect()) == [11]
-
     def test_interop_with_legacy_single_column_index(self, spark,
                                                      tmp_path):
+        from openpolicedata_spark.functions.text import fingerprint_md5_expr
         from openpolicedata_spark.operators.dedup import (
-            append_digest_index,
             exact_dedup_incremental,
             exact_dedup_ingest,
         )
 
         idx, out = str(tmp_path / "idx"), str(tmp_path / "out")
         legacy = self._batch(spark, [(1, "alpha")])
-        append_digest_index(legacy, idx)           # single-column file
+        legacy.select(fingerprint_md5_expr(F.col("text"))
+                      .alias("fingerprint")).write.parquet(idx)
         k = exact_dedup_ingest(
             self._batch(spark, [(2, "alpha"), (3, "beta")]),
             idx, out, "day1")
         assert sorted(r["doc_id"] for r in k.collect()) == [3]
-        # and the incremental (at-least-once) reader still works on the
-        # now-mixed-schema index
+        # and the incremental reader sees both writers' digests
         k2 = exact_dedup_incremental(
             self._batch(spark, [(4, "beta"), (5, "delta")]), idx)
         assert sorted(r["doc_id"] for r in k2.collect()) == [5]

@@ -1,12 +1,16 @@
-"""Exactly-once publication of the appending foreachBatch sinks.
+"""Exactly-once publication of every persisted write.
 
 Every sink that appends per micro-batch (the five index sinks, the
-audio wrapper, scd2_enrich_sink and windowed_topk_sink) is driven over
-a small two-publish stream, killed once mid-publication, and re-drained
-from the same source into the same paths. The result must equal a clean
-run's: no id duplicated, none lost. The tests check behaviour only, not
-the on-disk layout. A static guard keeps every append and rename in the
-streaming module inside its publication and swap helpers."""
+audio wrapper, scd2_enrich_sink and windowed_topk_sink) and every sink
+that replaces its table per micro-batch (upsert, countmin, bloom, scd2)
+is driven over a small two-batch stream, killed once mid-publication,
+and re-drained from the same source into the same paths. The result
+must equal a clean run's: no row duplicated, none lost.
+`exact_dedup_ingest` is killed the same way and its batch redelivered;
+`compact_parquet_dir` and `rebucket_scd2` must leave a readable table
+at every fault. The tests check behaviour only, not the on-disk layout.
+A static guard keeps every append and rename in the package inside the
+commit module."""
 import ast
 import datetime
 import os
@@ -173,10 +177,12 @@ def _case(spark, tmp, name):
 
 def _install_fault(mp, fault, arm_at):
     """(a) 'write': the `arm_at`-th parquet write raises — the last
-    write of the second publishing batch. (b) 'rename': once that
-    batch's writes are done, the first rename that moves published
-    data (a `_`-prefixed marker excluded) raises. Each fires once."""
-    state = {"writes": 0, "fired": False}
+    write of the second publishing batch. (b) 'rename' / 'rename2':
+    once that batch's writes are done, the first / second rename that
+    moves published data (a `_`-prefixed marker excluded) raises. Each
+    fires once."""
+    state = {"writes": 0, "renames": 0, "fired": False}
+    nth = {"rename": 1, "rename2": 2}.get(fault)
     real_parquet = DataFrameWriter.parquet
 
     def parquet(self, path, *a, **kw):
@@ -189,11 +195,13 @@ def _install_fault(mp, fault, arm_at):
 
     def failing(real):
         def move(src, dst, *a, **kw):
-            if (fault == "rename" and not state["fired"]
+            if (nth and not state["fired"]
                     and state["writes"] >= arm_at
                     and not os.path.basename(str(src)).startswith("_")):
-                state["fired"] = True
-                raise OSError("injected rename failure")
+                state["renames"] += 1
+                if state["renames"] == nth:
+                    state["fired"] = True
+                    raise OSError("injected rename failure")
             return real(src, dst, *a, **kw)
         return move
 
@@ -238,44 +246,261 @@ def test_appending_sink_crash_replay_is_exactly_once(clean_runs, tmp_path,
     assert sorted(read(out), key=repr) == clean
 
 
-GUARDED = {"_run_append_sink", "_swap_dir", "_recover_dir",
-           "_swap_scd2_bucket", "_recover_scd2_buckets"}
+REPLACING = ["upsert", "countmin", "bloom", "scd2"]
+FAULTS = ["write", "rename", "rename2"]
+
+
+def _replace_case(spark, tmp, name):
+    """(drain(out, ckpt), read(out)) for one replacing sink over two
+    files. countmin and scd2 run with a persistent checkpoint: their
+    folds are not idempotent, so only the replay guard makes a
+    redelivered batch harmless."""
+    from openpolicedata_spark import streaming as S
+
+    src = tmp / "src"
+    rows = lambda out: [tuple(r) for r in  # noqa: E731
+                        spark.read.parquet(out).collect()]
+    if name == "upsert":
+        schema = "k long, ts long, v string"
+        _write_files(spark, src, schema, [[(1, 1, "a"), (2, 1, "b")],
+                                          [(1, 2, "c"), (3, 1, "d")]])
+
+        def drain(out, ckpt):
+            S.upsert_sink(_file_stream(spark, src, schema), out,
+                          key_cols=("k",), order_cols=("ts", "v"))
+        return drain, rows
+    if name == "scd2":
+        schema = "user_id long, ts timestamp, event_type string"
+        day = lambda d: datetime.datetime(2024, 1, d)  # noqa: E731
+        _write_files(spark, src, schema,
+                     [[(1, day(1), "a"), (2, day(1), "b")],
+                      [(1, day(2), "c"), (3, day(2), "d")]])
+
+        def drain(out, ckpt):
+            S.scd2_sink(_file_stream(spark, src, schema), out, "user_id",
+                        "ts", ["event_type"], checkpoint_dir=ckpt,
+                        n_buckets=4)
+
+        def read(out):
+            return [tuple(r) for r in S.read_scd2(spark, out).collect()]
+        return drain, read
+    schema = "token string"
+    _write_files(spark, src, schema, [[("a",), ("b",)], [("a",), ("c",)]])
+    if name == "countmin":
+        def drain(out, ckpt):
+            S.countmin_sink(_file_stream(spark, src, schema), "token", out,
+                            depth=2, width=16, checkpoint_dir=ckpt)
+    else:
+        def drain(out, ckpt):
+            S.bloom_sink(_file_stream(spark, src, schema), "token", out,
+                         k=2, m=64)
+    return drain, rows
+
+
+@pytest.fixture(scope="module")
+def clean_replacing(spark, tmp_path_factory):
+    runs = {}
+
+    def get(sink):
+        if sink not in runs:
+            tmp = tmp_path_factory.mktemp(sink)
+            drain, read = _replace_case(spark, tmp, sink)
+            drain(str(tmp / "out"), str(tmp / "ckpt"))
+            runs[sink] = (drain, read,
+                          sorted(read(str(tmp / "out")), key=repr))
+        return runs[sink]
+    return get
+
+
+@pytest.mark.parametrize("fault", FAULTS)
+@pytest.mark.parametrize("sink", REPLACING)
+def test_replacing_sink_crash_replay_is_exactly_once(clean_replacing,
+                                                     tmp_path, sink,
+                                                     fault):
+    """The second batch dies at its stage write, or between or at the
+    two renames of its swap; the re-drain from the same checkpoint
+    equals a clean run."""
+    drain, read, clean = clean_replacing(sink)
+    assert clean
+
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ck1")
+    with pytest.MonkeyPatch.context() as mp:
+        # every replacing sink writes one stage per batch
+        state = _install_fault(mp, fault, 2)
+        with pytest.raises(StreamingQueryException):
+            drain(out, ckpt)
+    assert state["fired"], "the fault never hit a publication"
+    drain(out, ckpt)
+    assert sorted(read(out), key=repr) == clean
+
+
+@pytest.mark.parametrize("fault", FAULTS)
+def test_exact_dedup_ingest_crash_replay_is_exactly_once(spark, tmp_path,
+                                                         fault):
+    """A batch killed at its stage write or at either publish rename,
+    then redelivered under the same batch id, leaves the output and the
+    index a clean ingest leaves: the same survivors, each digest once."""
+    from openpolicedata_spark.operators.dedup import exact_dedup_ingest
+
+    schema = "doc_id long, text string"
+    day0 = spark.createDataFrame([(1, "alpha"), (2, "beta")], schema)
+    day1 = spark.createDataFrame([(3, "alpha"), (4, "gamma"),
+                                  (5, "gamma"), (6, "delta")], schema)
+
+    def state(idx, out):
+        return (sorted(tuple(r) for r in spark.read.parquet(out).collect()),
+                sorted(r.fingerprint for r in
+                       spark.read.parquet(idx).collect()))
+
+    def ingest(root):
+        idx, out = str(root / "idx"), str(root / "out")
+        exact_dedup_ingest(day0, idx, out, "day0")
+        return idx, out
+
+    c_idx, c_out = ingest(tmp_path / "clean")
+    kept = exact_dedup_ingest(day1, c_idx, c_out, "day1")
+    clean_kept = sorted(r.doc_id for r in kept.collect())
+    assert clean_kept == [4, 6]
+    clean = state(c_idx, c_out)
+
+    idx, out = ingest(tmp_path / "crash")
+    with pytest.MonkeyPatch.context() as mp:
+        # day1 writes two stages: survivors, then digests
+        st = _install_fault(mp, fault, 2)
+        with pytest.raises(OSError, match="injected"):
+            exact_dedup_ingest(day1, idx, out, "day1")
+    assert st["fired"]
+    kept = exact_dedup_ingest(day1, idx, out, "day1")
+    assert sorted(r.doc_id for r in kept.collect()) == clean_kept
+    assert state(idx, out) == clean
+    # a further redelivery is a no-op
+    exact_dedup_ingest(day1, idx, out, "day1")
+    assert state(idx, out) == clean
+
+
+@pytest.mark.parametrize("fault", FAULTS)
+def test_compact_parquet_dir_fault_leaves_table_readable(spark, tmp_path,
+                                                         fault):
+    """A compaction killed at its stage write or at either swap rename
+    leaves the directory readable with its old contents, and the next
+    compaction lands."""
+    from openpolicedata_spark.operators.scale import compact_parquet_dir
+    from openpolicedata_spark.publish import read_index
+
+    path = str(tmp_path / "t")
+    for i in range(4):
+        spark.createDataFrame([(i, f"r{i}")], "id long, v string") \
+            .coalesce(1).write.mode("append").parquet(path)
+    rows = lambda: sorted(tuple(r) for r in  # noqa: E731
+                          read_index(spark, path).collect())
+    before = rows()
+    with pytest.MonkeyPatch.context() as mp:
+        st = _install_fault(mp, fault, 1)
+        with pytest.raises(OSError, match="injected"):
+            compact_parquet_dir(spark, path)
+    assert st["fired"]
+    assert rows() == before
+    assert compact_parquet_dir(spark, path) == (4, 1)
+    assert rows() == before
+
+
+@pytest.mark.parametrize("fault", FAULTS)
+def test_rebucket_scd2_fault_leaves_table_readable(spark, tmp_path, fault):
+    """A migration killed at its stage write or at either swap rename
+    leaves a table read_scd2 reads in full, stamped with the old or the
+    new bucket count, and the next migration lands."""
+    from openpolicedata_spark.streaming import (
+        read_scd2,
+        rebucket_scd2,
+        scd2_sink,
+    )
+
+    schema = "user_id long, ts timestamp, event_type string"
+    day = lambda d: datetime.datetime(2024, 1, d)  # noqa: E731
+    src = tmp_path / "src"
+    _write_files(spark, src, schema,
+                 [[(k, day(1), "a") for k in range(6)],
+                  [(k, day(2), "b") for k in range(0, 6, 2)]])
+    path = str(tmp_path / "dim")
+    scd2_sink(_file_stream(spark, src, schema), path, "user_id", "ts",
+              ["event_type"], checkpoint_dir=str(tmp_path / "ck"),
+              n_buckets=2)
+    versions = lambda: sorted(tuple(r) for r in  # noqa: E731
+                              read_scd2(spark, path).collect())
+
+    def stamp():
+        with open(os.path.join(path, ".n_buckets")) as fh:
+            return int(fh.read())
+
+    before = versions()
+    assert len(before) == 9
+    with pytest.MonkeyPatch.context() as mp:
+        st = _install_fault(mp, fault, 1)
+        with pytest.raises(OSError, match="injected"):
+            rebucket_scd2(spark, path, 3)
+    assert st["fired"]
+    assert versions() == before
+    assert stamp() in (2, 3)
+    rebucket_scd2(spark, path, 3)
+    assert versions() == before and stamp() == 3
+
+
+# sites allowed outside the commit module: sources/file.py's download
+# cache moves a fully written temp file over its cache entry with one
+# rename (no directory, no Spark write, nothing to stage or recover)
+EXEMPT = {("sources/file.py", "CsvLoader._prefetch_member", "os.replace"),
+          ("sources/file.py", "CsvLoader._prefetch", "os.replace"),
+          ("sources/file.py", "CsvLoader._unzip", "os.rename")}
 
 
 def _publication_sites(tree):
-    """(enclosing top-level function, what) for every `.write.mode(
-    "append")` and `os.rename`/`os.replace` in the module."""
+    """(enclosing qualified name, what) for every `.write.mode(
+    "append")` and `os.rename`/`os.replace` in a module."""
     sites = []
-    for top in tree.body:
-        for node in ast.walk(top):
-            if not isinstance(node, ast.Call):
+
+    def visit(node, scope):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                  ast.ClassDef)):
+                visit(child, scope + [child.name])
                 continue
-            f = node.func
-            if not isinstance(f, ast.Attribute):
-                continue
-            append = (f.attr == "mode"
-                      and isinstance(f.value, ast.Attribute)
-                      and f.value.attr == "write"
-                      and any(isinstance(a, ast.Constant)
-                              and a.value == "append" for a in node.args))
-            rename = (f.attr in ("rename", "replace")
-                      and isinstance(f.value, ast.Name)
-                      and f.value.id == "os")
-            if append or rename:
-                sites.append((getattr(top, "name", "<module>"),
-                              "append" if append else f"os.{f.attr}"))
+            if isinstance(child, ast.Call) and isinstance(
+                    child.func, ast.Attribute):
+                f = child.func
+                append = (f.attr == "mode"
+                          and isinstance(f.value, ast.Attribute)
+                          and f.value.attr == "write"
+                          and any(isinstance(a, ast.Constant)
+                                  and a.value == "append"
+                                  for a in child.args))
+                rename = (f.attr in ("rename", "replace")
+                          and isinstance(f.value, ast.Name)
+                          and f.value.id == "os")
+                if append or rename:
+                    sites.append((".".join(scope) or "<module>",
+                                  "append" if append else f"os.{f.attr}"))
+            visit(child, scope)
+
+    visit(tree, [])
     return sites
 
 
 def test_streaming_appends_and_renames_only_in_publication_helpers():
-    """A new sink cannot grow a second publication path: appends and
-    renames in streaming/__init__.py live only in the publication
-    helper and the directory swap/recovery helpers."""
-    import openpolicedata_spark.streaming as S
+    """A new writer cannot grow a second commit protocol: every append
+    and rename in the package lives in publish.py, apart from the named
+    download-cache moves."""
+    import pathlib
 
-    with open(S.__file__) as fh:
-        tree = ast.parse(fh.read())
-    sites = _publication_sites(tree)
-    assert any(fn == "_run_append_sink" for fn, _ in sites)
-    stray = [s for s in sites if s[0] not in GUARDED]
+    import openpolicedata_spark
+
+    root = pathlib.Path(openpolicedata_spark.__file__).parent
+    stray, committed = [], []
+    for py in sorted(root.rglob("*.py")):
+        rel = py.relative_to(root).as_posix()
+        for fn, what in _publication_sites(ast.parse(py.read_text())):
+            if rel == "publish.py":
+                committed.append(what)
+            elif (rel, fn, what) not in EXEMPT:
+                stray.append((rel, fn, what))
     assert not stray, stray
+    assert "os.rename" in committed

@@ -751,7 +751,7 @@ def test_countmin_sink_stream_equals_batch_sketch(spark, tmp_path):
     """Micro-batched CMS merge must equal the one-shot batch sketch —
     cell-wise addition is the merge law the sink relies on. With a
     PERSISTENT checkpoint, re-invoking after new data arrives merges
-    only the new files (offsets + the applied-batch sidecar), never
+    only the new files (offsets + the high-water marker row), never
     double-counting the old ones."""
     from openpolicedata_spark.operators.sketch import (
         countmin_lookup,
@@ -781,9 +781,9 @@ def test_countmin_sink_stream_equals_batch_sketch(spark, tmp_path):
     wave1 = full.where(F.col("token") != "b")
     expected1 = countmin_table(wave1, "token", depth=3, width=256)
     raw1 = spark.read.parquet(sketch_path)
-    # applied-batch markers (row = -1) ride inside the swapped table so
-    # they commit atomically with the counts they describe
-    assert raw1.where(F.col("row") == -1).count() == 2
+    # ONE high-water marker (row = -1) rides inside the swapped table
+    # so it commits atomically with the counts it describes
+    assert raw1.where(F.col("row") == -1).count() == 1
     merged1 = raw1.where(F.col("row") >= 0)
     assert (merged1.exceptAll(expected1).count() == 0
             and expected1.exceptAll(merged1).count() == 0)
@@ -794,6 +794,7 @@ def test_countmin_sink_stream_equals_batch_sketch(spark, tmp_path):
         src, mode="append")
     drain()
     raw2 = spark.read.parquet(sketch_path)
+    assert raw2.where(F.col("row") == -1).count() == 1
     merged2 = raw2.where(F.col("row") >= 0)
     expected2 = countmin_table(full, "token", depth=3, width=256)
     assert (merged2.exceptAll(expected2).count() == 0
@@ -807,12 +808,48 @@ def test_countmin_sink_stream_equals_batch_sketch(spark, tmp_path):
     assert est["a"] == 30 and est["b"] == 12 and est["c"] == 4
 
 
+def test_countmin_sink_per_batch_markers_keep_guarding(spark, tmp_path):
+    """A sketch table that still holds one marker row per applied batch
+    (the guard's earlier layout) keeps guarding: their max is the
+    high-water mark. A fresh checkpoint redelivers ids 0-2, which are
+    skipped; id 3 folds, and the markers collapse to one row."""
+    from openpolicedata_spark.operators.sketch import countmin_table
+    from openpolicedata_spark.streaming import countmin_sink
+
+    schema = "token string"
+    files = [[("a",)], [("b",)], [("c",)], [("d",), ("a",)]]
+    src = tmp_path / "src"
+    for i, rows in enumerate(files):
+        spark.createDataFrame(rows, schema).coalesce(1) \
+            .write.parquet(str(src / f"f{i}"))
+    sketch = lambda rows: countmin_table(  # noqa: E731
+        spark.createDataFrame(rows, schema), "token", depth=2, width=64)
+    path = str(tmp_path / "cms")
+    # files 0-2 already applied as batches 0-2, one marker each
+    sketch([r for f in files[:3] for r in f]).unionByName(
+        spark.createDataFrame([(-1, b, 0) for b in range(3)],
+                              "row int, bucket long, cnt long")
+    ).write.parquet(path)
+
+    stream = (spark.readStream.schema(schema)
+              .option("maxFilesPerTrigger", 1).parquet(f"{src}/*/"))
+    countmin_sink(stream, "token", path, depth=2, width=64,
+                  checkpoint_dir=str(tmp_path / "ckpt"))
+    raw = spark.read.parquet(path)
+    assert [tuple(r) for r in raw.where(F.col("row") == -1).collect()] \
+        == [(-1, 3, 0)]
+    merged = raw.where(F.col("row") >= 0)
+    expected = sketch([r for f in files for r in f])
+    assert (merged.exceptAll(expected).count() == 0
+            and expected.exceptAll(merged).count() == 0)
+
+
 def test_swap_dir_crash_recovery(tmp_path):
     """If a crash lands between the two swap renames (table moved aside,
-    replacement not in place), _recover_dir restores the .__old__ copy."""
+    replacement not in place), recover restores the .__old__ copy."""
     import os
 
-    from openpolicedata_spark.streaming import _recover_dir
+    from openpolicedata_spark.publish import aside_of, recover
 
     path = str(tmp_path / "table")
     os.makedirs(path)
@@ -820,11 +857,11 @@ def test_swap_dir_crash_recovery(tmp_path):
         f.write("v1")
     # simulate the crash window: path renamed aside, new copy never landed
     os.rename(path, path + ".__old__")
-    _recover_dir(path)
+    recover(path, aside_of(path))
     assert os.path.isdir(path)
     assert open(os.path.join(path, "part-0")).read() == "v1"
     # no-op when the table is healthy
-    _recover_dir(path)
+    recover(path, aside_of(path))
     assert os.path.isdir(path)
 
 

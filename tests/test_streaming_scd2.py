@@ -748,23 +748,21 @@ def test_scd2_recovery_read_path_is_restore_only(spark, tmp_path):
     keeps the full cleanup."""
     import os
 
-    from openpolicedata_spark.streaming import (
-        _recover_scd2_buckets,
-        _swap_scd2_bucket,
-    )
+    from openpolicedata_spark.publish import recover, swap
 
     root = tmp_path / "dim"
     root.mkdir()
+    live, aside = str(root / "bkt=0"), str(root / ".old_bkt_0")
     # state A: live + stale aside (post-swap crash before cleanup)
     (root / "bkt=0").mkdir()
     (root / ".old_bkt_0").mkdir()
-    _recover_scd2_buckets(str(root), writer=False)
+    recover(live, aside, reader=True)
     assert (root / ".old_bkt_0").is_dir(), "read path deleted an aside"
-    _recover_scd2_buckets(str(root), writer=True)
+    recover(live, aside)
     assert not (root / ".old_bkt_0").exists()
     # state B: aside only (mid-swap crash) — BOTH paths restore
-    os.rename(str(root / "bkt=0"), str(root / ".old_bkt_0"))
-    _recover_scd2_buckets(str(root), writer=False)
+    os.rename(live, aside)
+    recover(live, aside, reader=True)
     assert (root / "bkt=0").is_dir()
 
     # the swap retry: a reader restores the aside BETWEEN the writer's
@@ -780,12 +778,12 @@ def test_scd2_recovery_read_path_is_restore_only(spark, tmp_path):
         if src == str(stage) and fired["n"] == 0:
             fired["n"] = 1
             # the racing reader restores the aside first
-            real_rename(str(root / ".old_bkt_0"), str(root / "bkt=0"))
+            real_rename(aside, live)
         return real_rename(src, dst)
 
     os.rename = racing_rename
     try:
-        _swap_scd2_bucket(str(stage), str(root), 0)
+        swap(str(stage), live, aside)
     finally:
         os.rename = real_rename
     assert (root / "bkt=0" / "marker.txt").is_file()

@@ -200,7 +200,8 @@ def index_cadence_run(compact: bool, n_batches: int = 200,
     import tempfile
 
     from openpolicedata_spark import get_spark
-    from openpolicedata_spark.streaming import _recover_dir, compact_index
+    from openpolicedata_spark.publish import aside_of, recover
+    from openpolicedata_spark.streaming import compact_index
 
     spark = get_spark(app_name="opdspark-index-cadence",
                       master="local[8]", shuffle_partitions=8)
@@ -210,7 +211,7 @@ def index_cadence_run(compact: bool, n_batches: int = 200,
     n_compact = 0
     try:
         for b in range(n_batches):
-            _recover_dir(idx)
+            recover(idx, aside_of(idx))
             t0 = time.perf_counter()
             if os.path.isdir(idx):
                 # the sinks' probe shape: full index scan + filter
