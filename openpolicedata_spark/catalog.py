@@ -145,15 +145,10 @@ class Catalog:
         return out
 
     def _suggest_sources(self, name: str) -> list[str]:
+        import difflib
+
         candidates = sorted(set(self.df["SourceName"].dropna()))
-        try:  # rapidfuzz if present (reference dependency), else difflib
-            from rapidfuzz import fuzz
-
-            return [c for c in candidates if fuzz.partial_ratio(name.lower(), c.lower()) > 90]
-        except ImportError:
-            import difflib
-
-            return difflib.get_close_matches(name, candidates, n=3, cutoff=0.6)
+        return difflib.get_close_matches(name, candidates, n=3, cutoff=0.6)
 
     # -------------------------------------------------------------- summaries
     def num_unique(self) -> int:
@@ -295,25 +290,22 @@ def reload(csvfile: Any = None) -> None:
 
 
 def _partial_ratio(a: str, b: str) -> float:
-    """rapidfuzz.fuzz.partial_ratio with a difflib fallback (reference
-    depends on rapidfuzz, datasets.py:11; this container may not have it)."""
-    try:
-        from rapidfuzz import fuzz
+    """Case-insensitive partial-ratio score in [0, 100]: the best
+    difflib ratio of the shorter string against every equal-length window
+    of the longer (the reference scores with rapidfuzz.fuzz.partial_ratio,
+    datasets.py:11)."""
+    import difflib
 
-        return float(fuzz.partial_ratio(a, b))
-    except ImportError:
-        import difflib
-
-        a, b = a.lower(), b.lower()
-        short, long_ = (a, b) if len(a) <= len(b) else (b, a)
-        if short in long_:
-            return 100.0
-        best = 0.0
-        for i in range(len(long_) - len(short) + 1):
-            r = difflib.SequenceMatcher(
-                None, short, long_[i:i + len(short)]).ratio()
-            best = max(best, r)
-        return best * 100.0
+    a, b = a.lower(), b.lower()
+    short, long_ = (a, b) if len(a) <= len(b) else (b, a)
+    if short in long_:
+        return 100.0
+    best = 0.0
+    for i in range(len(long_) - len(short) + 1):
+        r = difflib.SequenceMatcher(
+            None, short, long_[i:i + len(short)]).ratio()
+        best = max(best, r)
+    return best * 100.0
 
 
 def query(

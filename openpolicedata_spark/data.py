@@ -135,13 +135,9 @@ def _make_loader(spark: SparkSession, row: pd.Series) -> DataLoader:
         from openpolicedata_spark.sources.html import HtmlLoader
 
         return HtmlLoader(spark, **kwargs)
-    if dt == defs.DataType.SOCRATA.value:
-        from openpolicedata_spark.sources.socrata import SocrataLoader
-
-        return SocrataLoader(spark, url=row["URL"], data_set=row["dataset_id"],
-                             date_field=row["date_field"])
-    if dt in (defs.DataType.ARCGIS.value, defs.DataType.CKAN.value,
-              defs.DataType.CARTO.value, defs.DataType.OPENDATASOFT.value):
+    if dt in (defs.DataType.SOCRATA.value, defs.DataType.ARCGIS.value,
+              defs.DataType.CKAN.value, defs.DataType.CARTO.value,
+              defs.DataType.OPENDATASOFT.value):
         from openpolicedata_spark.sources import rest
 
         return rest.make_rest_loader(spark, dt, row)
@@ -604,7 +600,14 @@ class Source:
         - losing an executor loses the snapshot (SCALE.md, localCheckpoint
           loss semantics): load the Table again.
         ``RestLoader.load``, ``load_stream`` and
-        ``spark.read.format("opd_*")`` stay unbound."""
+        ``spark.read.format("opd_*")`` stay unbound.
+
+        Every portal row, Socrata included, loads through
+        ``rest.make_rest_loader``, so ``agency=`` (on the row's
+        ``agency_field``) and the row's static ``query`` predicates reach
+        the portal. A portal row that sets no
+        ``date_format`` probes it once per loader (one page request) at
+        its first date-filtered load."""
         row = self.filter(table_type, date, url=url, id=id)
         loader = self._get_loader(row)
         df = loader.load(

@@ -209,12 +209,6 @@ def to_datetime_expr(col: Column, strategy: Optional[dict] = None,
     return F.coalesce(*attempts)
 
 
-def check_date_expr(ts: Column, sentinel: str = "1900-01-01") -> Column:
-    """Post-load normalization (reference `_check_date` data.py:1868-1960):
-    null out the publisher sentinel date."""
-    return F.when(ts.cast("date") == F.lit(sentinel).cast("date"), None).otherwise(ts)
-
-
 # --------------------------------------------------------------------------
 # time of day
 # --------------------------------------------------------------------------

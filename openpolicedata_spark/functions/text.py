@@ -27,16 +27,6 @@ def token_count_expr(col: Column) -> Column:
     return F.size(tokens_expr(col))
 
 
-def bpe_ish_token_count_expr(col: Column) -> Column:
-    """BPE-ish token estimate: count word pieces + digits + punctuation
-    separately (a regex approximation of subword tokenizers; good enough
-    for per-document budget accounting at pipeline scale)."""
-    pieces = F.regexp_extract_all(
-        col, F.lit(r"[A-Za-z]{1,8}|\d|[^A-Za-z\d\s]"), 0
-    )
-    return F.size(pieces)
-
-
 # --------------------------------------------------------------------------
 # quality scoring
 # --------------------------------------------------------------------------

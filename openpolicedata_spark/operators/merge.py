@@ -62,15 +62,14 @@ def merge_tables(
     how: str = "inner",
     std_id: bool = False,
     suffix: str = "_FromMerged",
-    broadcast_right: Optional[bool] = None,
 ) -> DataFrame:
     """Join two related tables (reference data.py:312-389).
 
     `how` ∈ {inner, outer, left, right, cross}. Overlapping non-key columns
     on the right get `suffix` (reference suffixes (None,'_FromMerged')).
-    `std_id=True` renames the key to the canonical INCIDENT_ID.
-    `broadcast_right=True` forces a broadcast-hash join (small dim side);
-    None lets AQE decide from runtime stats.
+    `std_id=True` renames the key to the canonical INCIDENT_ID. The join
+    strategy is the planner's: a size-based broadcast when one side is
+    small, AQE's runtime re-plan otherwise.
     """
     if how == "cross":
         return left.crossJoin(right)
@@ -100,9 +99,6 @@ def merge_tables(
     r = right
     for c in overlap:
         r = r.withColumnRenamed(c, c + suffix)
-
-    if broadcast_right:
-        r = F.broadcast(r)
 
     if lk == rk:
         out = left.join(r, on=lk, how=how)

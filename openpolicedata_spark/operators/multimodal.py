@@ -492,7 +492,6 @@ MP3_SCAN_FIELDS = ("n_frames long, sample_rate long, "
                    "first_frame_offset long, bitrate_min_kbps long, "
                    "bitrate_max_kbps long, bitrate_sum_kbps long, "
                    "is_vbr boolean")
-MP3_SCAN_SCHEMA = "media_id long, " + MP3_SCAN_FIELDS
 
 
 def mp3_scan(df: DataFrame, content_col: str = "content",

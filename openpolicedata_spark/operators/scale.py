@@ -164,20 +164,6 @@ def bucketed_interval_join(
     return f.join(i, cond, how).select(*out_cols)
 
 
-def repartition_by_key_bounded(df: DataFrame, key: str, max_per_partition: int,
-                               count_col: str = "__n__") -> DataFrame:
-    """Repartition so no partition holds more than ~max_per_partition rows
-    of one key: keys are split into ceil(n/max) salted sub-keys computed
-    from an aggregate pass (explicit skew flattening for writes)."""
-    counts = df.groupBy(key).agg(F.count(F.lit(1)).alias(count_col))
-    with_counts = df.join(F.broadcast(counts), on=key)
-    n_splits = F.greatest(
-        F.ceil(F.col(count_col) / max_per_partition).cast("int"), F.lit(1))
-    salted = with_counts.withColumn(
-        "__salt__", (F.rand(seed=42) * n_splits).cast("int")).drop(count_col)
-    return salted.repartition(F.col(key), F.col("__salt__")).drop("__salt__")
-
-
 def radius_join(
     left: DataFrame,
     right: DataFrame,

@@ -26,10 +26,6 @@ def notnull(x: Any) -> bool:
         return x is not None
 
 
-def isnull(x: Any) -> bool:
-    return not notnull(x)
-
-
 def parse_id(x: Any) -> Any:
     """Decode a JSON-looking dataset_id string (curly quotes repaired —
     catalog entries get pasted from spreadsheets); anything else passes

@@ -9,9 +9,11 @@ repair (:215-253), fuzzy cross-sheet column reconciliation (:311-337).
 Spark mapping (SURVEY.md §2.1): workbooks are small, so parsing is a
 driver-side pandas pre-parse; each repaired sheet becomes a Spark
 DataFrame and sheets concatenate with
-``unionByName(allowMissingColumns=True)``. The openpyxl parse itself is
-gated behind an import-try (not in this container); everything after the
-raw grid is implemented and tested on plain DataFrames.
+``unionByName(allowMissingColumns=True)``. The raw grids come from the
+stdlib readers — ``sources/xlsx`` (.xlsx), ``sources/xls`` (legacy BIFF)
+and ``sources/msoffice_crypto`` (VelvetSweatshop decryption) — whatever
+else is installed; everything after the raw grid is tested on plain
+DataFrames.
 """
 
 from __future__ import annotations
@@ -179,8 +181,8 @@ def reconcile_columns(frames: dict[str, pd.DataFrame],
 
 class ExcelLoader(DataLoader):
     """Workbook → repaired sheets → Spark ``unionByName`` (reference
-    excel.py:24-398). The openpyxl parse is import-gated; tests and
-    offline use inject pre-parsed grids via ``sheets=``."""
+    excel.py:24-398). Tests and offline use may inject pre-parsed grids
+    via ``sheets=``."""
 
     def __init__(self, spark: SparkSession, url: str,
                  date_field: Optional[str] = None,
@@ -274,51 +276,33 @@ class ExcelLoader(DataLoader):
         """Excel's default-password encryption: workbooks saved with
         password 'VelvetSweatshop' open transparently in Excel, so public
         agencies publish them thinking they're plain files (reference
-        excel.py:128-153 decrypts via msoffcrypto). msoffcrypto handles
-        every scheme when installed; without it, the stdlib decryptor
-        (sources/msoffice_crypto.py) covers both ECMA-376 schemes —
-        standard (AES-ECB + SHA-1) and agile (4.4 XML descriptor,
-        AES-CBC segments). Plain workbooks pass through untouched."""
+        excel.py:128-153 decrypts via msoffcrypto). The stdlib decryptor
+        (sources/msoffice_crypto.py) is the only one; it covers both
+        ECMA-376 schemes — standard (AES-ECB + SHA-1) and agile (4.4 XML
+        descriptor, AES-CBC segments). It sniffs the CFB magic first (a
+        plain .xlsx is a zip, never CFB) and rewinds a buffer after the
+        sniff, so plain workbooks pass through untouched."""
         import io
 
-        try:
-            import msoffcrypto
-        except ImportError:
-            # stdlib path: sniff the CFB magic (a plain .xlsx is a zip,
-            # never CFB), decrypt standard-encrypted containers in-process
-            from openpolicedata_spark.sources.msoffice_crypto import (
-                decrypt_office,
-                is_encrypted_office,
-            )
+        from openpolicedata_spark.sources.msoffice_crypto import (
+            decrypt_office,
+            is_encrypted_office,
+        )
 
-            if isinstance(path_or_buf, (str, bytes)):
-                with open(path_or_buf, "rb") as f:
-                    head = f.read(8)
-                    if head[:4] != b"\xd0\xcf\x11\xe0":
-                        return path_or_buf
-                    data = head + f.read()
-            else:
-                data = path_or_buf.read()
-                path_or_buf.seek(0)
-                if data[:4] != b"\xd0\xcf\x11\xe0":
+        if isinstance(path_or_buf, (str, bytes)):
+            with open(path_or_buf, "rb") as f:
+                head = f.read(8)
+                if head[:4] != b"\xd0\xcf\x11\xe0":
                     return path_or_buf
-            if is_encrypted_office(data):
-                return io.BytesIO(decrypt_office(data))
-            return path_or_buf
-        try:
-            f = (open(path_or_buf, "rb")
-                 if isinstance(path_or_buf, (str, bytes)) else path_or_buf)
-            office = msoffcrypto.OfficeFile(f)
-            if not office.is_encrypted():
-                f.seek(0)
-                return f
-            office.load_key(password="VelvetSweatshop")
-            out = io.BytesIO()
-            office.decrypt(out)
-            out.seek(0)
-            return out
-        except Exception:
-            return path_or_buf
+                data = head + f.read()
+        else:
+            data = path_or_buf.read()
+            path_or_buf.seek(0)
+            if data[:4] != b"\xd0\xcf\x11\xe0":
+                return path_or_buf
+        if is_encrypted_office(data):
+            return io.BytesIO(decrypt_office(data))
+        return path_or_buf
 
     def _raw_sheets(self) -> dict[str, pd.DataFrame]:
         if self._sheets is not None:
@@ -359,24 +343,13 @@ class ExcelLoader(DataLoader):
                 raise XlsError(
                     "CFB container has no BIFF Workbook stream "
                     "(not a legacy .xls)")
-            try:
-                import xlrd  # noqa: F401
-                xl = pd.ExcelFile(src, engine="xlrd")
-                return {name: xl.parse(name, header=None)
-                        for name in xl.sheet_names}
-            except ImportError:
-                # stdlib BIFF8 reader (sources/xls.py) — same raw-grid
-                # contract as read_xlsx
-                return read_xls(raw)
-        try:
-            import openpyxl  # noqa: F401
-        except ImportError:
-            # stdlib fallback: .xlsx is a ZIP of SpreadsheetML — parse it
-            # directly (sources/xlsx.py)
-            from openpolicedata_spark.sources.xlsx import read_xlsx
-            return read_xlsx(src)
-        xl = pd.ExcelFile(src)
-        return {name: xl.parse(name, header=None) for name in xl.sheet_names}
+            # stdlib BIFF8 reader (sources/xls.py) — same raw-grid
+            # contract as read_xlsx
+            return read_xls(raw)
+        # .xlsx is a ZIP of SpreadsheetML — parse it directly
+        # (sources/xlsx.py)
+        from openpolicedata_spark.sources.xlsx import read_xlsx
+        return read_xlsx(src)
 
     def load(self, date: DateInput = None, nrows: Optional[int] = None,
              offset: int = 0, *, agency: Optional[str] = None,

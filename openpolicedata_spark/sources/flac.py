@@ -201,8 +201,6 @@ _RATE_FIXED = {1: 88200, 2: 176400, 3: 192000, 4: 8000, 5: 16000,
                11: 96000}
 _BPS_CODE = {1: 8, 2: 12, 4: 16, 5: 20, 6: 24, 7: 32}
 
-_FIXED_COEF = {1: (1,), 2: (2, -1), 3: (3, -3, 1), 4: (4, -6, 4, -1)}
-
 
 class _NeedMoreBits(Exception):
     """Internal: a vectorized read ran past the current bit WINDOW (not

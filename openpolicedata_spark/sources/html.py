@@ -3,8 +3,9 @@
 Parity: /root/reference/openpolicedata/data_loaders/html.py:10-194 —
 `pd.read_html` with a browser UA, exactly one table expected, then the
 standard local date/agency filter. Driver-side parse (HTML tables are
-small) → ``spark.createDataFrame``; the lxml/bs4 parse is import-gated
-(not in this container) and tests inject pre-parsed tables.
+small) → ``spark.createDataFrame``. The page parses with the stdlib
+``sources/htmltable`` reader, whatever else is installed; tests may
+inject pre-parsed tables.
 """
 
 from __future__ import annotations
@@ -60,21 +61,11 @@ class HtmlLoader(DataLoader):
         if tables is None:
             # fetch ONCE with the browser UA (agency sites 403 the
             # default Python UA — pd.read_html(url) would hit exactly
-            # that), then hand the text to whichever parser exists
-            text = self._fetch()
-            try:
-                import io
+            # that), then extract the tables with html.parser
+            # (sources/htmltable.py, pd.read_html's list-of-frames contract)
+            from openpolicedata_spark.sources.htmltable import read_html_tables
 
-                import lxml  # noqa: F401
-
-                tables = pd.read_html(io.StringIO(text))
-            except ImportError:
-                # stdlib fallback: html.parser-based table extraction
-                # (sources/htmltable.py) — same list-of-frames contract.
-                from openpolicedata_spark.sources.htmltable import (
-                    read_html_tables,
-                )
-                tables = read_html_tables(text)
+            tables = read_html_tables(self._fetch())
         if len(tables) != 1:
             # reference html.py expects exactly one table per page
             raise ValueError(f"expected exactly 1 HTML table, got {len(tables)}")

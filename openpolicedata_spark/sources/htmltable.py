@@ -1,9 +1,9 @@
 """Stdlib HTML table extractor (html.parser) — no lxml/bs4 needed.
 
 Parity: /root/reference/openpolicedata/data_loaders/html.py:10-194 parses
-pages with ``pd.read_html`` (lxml engine). That engine isn't in this
-container; this module extracts ``<table>`` elements with the stdlib
-``html.parser`` instead, covering what agency pages actually use:
+pages with ``pd.read_html`` (lxml engine). This module is ``HtmlLoader``'s
+only parser: it extracts ``<table>`` elements with the stdlib
+``html.parser``, covering what agency pages actually use:
 
 - ``<th>``/``<td>`` cells, ``<thead>``/``<tbody>`` sections
 - ``colspan``/``rowspan`` (values replicated across the span, matching

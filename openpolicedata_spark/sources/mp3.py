@@ -37,10 +37,6 @@ requests keep raising in `multimodal.decode_audio`.
 
 from __future__ import annotations
 
-# Back-compat aliases: the MPEG-1 Layer III constants round 8 shipped
-# (q172's builder and the hand-computed fixtures key off them).
-MP3_SAMPLES_PER_FRAME = 1152
-
 # Bitrate ladders (kbit/s), indexed by the 4-bit bitrate field; index
 # 0 = free-format (gated), index 15 = invalid. Keyed by (version
 # class, layer) where version class 1 = MPEG-1 and 2 = MPEG-2/2.5
@@ -71,8 +67,6 @@ MP3_SAMPLE_RATES_BY_VERSION = {
     0: (11025, 12000, 8000),
 }
 MP3_SAMPLE_RATES = MP3_SAMPLE_RATES_BY_VERSION[3]
-
-MP3_VERSION_NAMES = {3: "MPEG-1", 2: "MPEG-2", 0: "MPEG-2.5"}
 
 
 class Mp3Error(ValueError):

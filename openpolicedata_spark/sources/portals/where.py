@@ -42,6 +42,19 @@ class DateFormat(str, Enum):
     YYYYQ_TEXT = "yyyyq"             # '2022 Q1'
 
 
+# `functions.datetime.to_datetime_expr` strategy that parses each text
+# format whose pushed clause can be inaccurate (build_date_where), for the
+# exact residual re-filter (RestLoader._residual_date_filter). YYYYMMDD
+# compares exactly as text, so it never needs one; YEAR_NUMERIC filters
+# as an integer.
+TEXT_DATE_STRATEGIES = {
+    DateFormat.MMDDYYYY_TEXT: {"kind": "string", "formats": ["M/d/yyyy"]},
+    DateFormat.MONTH_ABBREV_TEXT: {"kind": "string",
+                                   "formats": ["MMM d, yyyy", "MMM d yyyy"]},
+    DateFormat.YYYYQ_TEXT: {"kind": "year_quarter"},
+}
+
+
 class Dialect(str, Enum):
     SOQL = "soql"        # Socrata
     SQL = "sql"          # CKAN / Carto (PostgreSQL-ish)

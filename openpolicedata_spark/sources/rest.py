@@ -32,6 +32,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from openpolicedata_spark import defs
+from openpolicedata_spark.functions.datetime import (
+    date_precision_expr,
+    period_overlap_filter,
+    to_datetime_expr,
+)
 from openpolicedata_spark.sources.base import (
     DataLoader,
     DateInput,
@@ -39,6 +44,7 @@ from openpolicedata_spark.sources.base import (
     clean_date_input,
 )
 from openpolicedata_spark.sources.portals.where import (
+    TEXT_DATE_STRATEGIES,
     DateFormat,
     Where,
     and_wheres,
@@ -239,25 +245,24 @@ class RestLoader(DataLoader):
         return df
 
     def _residual_date_filter(self, df: DataFrame, date: DateInput) -> DataFrame:
-        """Exact re-filter after inaccurate pushdown. Day-precision formats
-        use a plain between; coarser formats (quarter/year) use *period
-        overlap* — the reference's pd.Period semantics (data.py:1868-1960):
-        a '2020 Q1' value matches any range intersecting Jan-Mar 2020."""
+        """Exact re-filter after inaccurate pushdown, parsing the text
+        column the way standardize does (`to_datetime_expr`). Quarter
+        values use *period overlap* — the reference's pd.Period semantics
+        (data.py:1868-1960): a '2020 Q1' value matches any range
+        intersecting Jan-Mar 2020; day-precision values degenerate to a
+        plain between."""
         rng = clean_date_input(date)
         if rng is None or self.date_field is None:
             return df
-        parsed = _parse_text_date(F.col(self.date_field), self.date_format)
-        start = F.lit(rng[0].strftime("%Y-%m-%d %H:%M:%S")).cast("timestamp_ntz")
-        stop = F.lit(rng[1].replace(hour=23, minute=59, second=59)
-                     .strftime("%Y-%m-%d %H:%M:%S")).cast("timestamp_ntz")
-        if self.date_format == DateFormat.YYYYQ_TEXT:
-            period_end = F.timestamp_add("SECOND", F.lit(-1),
-                                         F.timestamp_add("MONTH", F.lit(3), parsed))
-            return df.where((parsed <= stop) & (period_end >= start))
         if self.date_format == DateFormat.YEAR_NUMERIC:
             y = F.col(self.date_field).cast("int")
             return df.where(y.between(rng[0].year, rng[1].year))
-        return df.where(parsed.between(start, stop))
+        strategy = TEXT_DATE_STRATEGIES[self.date_format]
+        return df.where(period_overlap_filter(
+            to_datetime_expr(F.col(self.date_field), strategy),
+            date_precision_expr(strategy),
+            rng[0].strftime("%Y-%m-%d %H:%M:%S"),
+            rng[1].strftime("%Y-%m-%d 23:59:59")))
 
     # -- fast paths -----------------------------------------------------------
     def get_count(self, date: DateInput = None, *, agency: Optional[str] = None,
@@ -313,26 +318,6 @@ class RestLoader(DataLoader):
         return super().get_agencies(agency_field, partial)
 
 
-def _parse_text_date(col, fmt: DateFormat):
-    """Exact re-parse of a text date column for residual filtering."""
-    if fmt == DateFormat.MMDDYYYY_TEXT:
-        return F.to_timestamp(col, "M/d/yyyy")
-    if fmt == DateFormat.YYYYMMDD_TEXT:
-        return F.to_timestamp(col, "yyyyMMdd")
-    if fmt == DateFormat.MONTH_ABBREV_TEXT:
-        return F.coalesce(F.try_to_timestamp(col, F.lit("MMM d, yyyy")),
-                          F.try_to_timestamp(col, F.lit("MMM d yyyy")))
-    if fmt == DateFormat.YYYYQ_TEXT:
-        y = F.regexp_extract(col, r"^(\d{4})", 1).cast("int")
-        q = F.regexp_extract(col, r"Q(\d)", 1).cast("int")
-        return F.make_timestamp_ntz(y, (q - 1) * 3 + 1, F.lit(1),
-                                    F.lit(0), F.lit(0), F.lit(0))
-    if fmt == DateFormat.YEAR_NUMERIC:
-        return F.make_timestamp_ntz(col.cast("int"), F.lit(7), F.lit(2),
-                                    F.lit(0), F.lit(0), F.lit(0))
-    return col.cast("timestamp_ntz")
-
-
 _FORMAT_BY_DATATYPE = {
     defs.DataType.ARCGIS.value: "opd_arcgis",
     defs.DataType.CKAN.value: "opd_ckan",
@@ -344,7 +329,11 @@ _FORMAT_BY_DATATYPE = {
 
 def make_rest_loader(spark: SparkSession, data_type: str, row: pd.Series,
                      transport=None) -> RestLoader:
-    """Factory from a catalog row (reference data.py:1819-1857)."""
+    """Factory from a catalog row (reference data.py:1819-1857) for every
+    portal DataType, Socrata included. The loader keeps the row's
+    `agency_field`, static `query` predicates and `date_format`; a row
+    with no `date_format` probes it once per loader (one page request,
+    portals/probe.py) at the first use that needs it."""
     ds = row.get("dataset_id")
     ds = "" if ds is None or (isinstance(ds, float) and pd.isna(ds)) else str(ds)
     q = row.get("query")

@@ -1,8 +1,8 @@
 """Minimal stdlib .xlsx reader (zipfile + xml.etree) — no openpyxl needed.
 
 Parity: /root/reference/openpolicedata/data_loaders/excel.py:128-213 parses
-workbooks via pandas/openpyxl. That engine isn't in this container, but an
-.xlsx file is just a ZIP of SpreadsheetML XML, so this module implements the
+workbooks via pandas/openpyxl. An .xlsx file is just a ZIP of SpreadsheetML
+XML, so this module — ``ExcelLoader``'s only .xlsx reader — implements the
 subset agencies' published workbooks actually use:
 
 - workbook.xml + workbook.xml.rels  → ordered sheet names → part paths
@@ -18,8 +18,9 @@ shape), exactly what ``ExcelLoader``'s repair pipeline consumes — so the
 messy-workbook logic (merged headers, repeated headers, year sheets) now runs
 end-to-end from real file bytes instead of injected grids.
 
-Not supported (import-gated upstream): legacy .xls (BIFF), VelvetSweatshop
-AES-encrypted containers, and charts/pivots (ignored by design).
+Legacy .xls (BIFF) is ``sources/xls``'s job, and VelvetSweatshop-encrypted
+containers are decrypted by ``sources/msoffice_crypto`` before they reach
+this reader. Charts and pivots are ignored by design.
 """
 
 from __future__ import annotations

@@ -1105,7 +1105,7 @@ def media_dedup_sink(stream_df: DataFrame, out_path: str,
 def audio_dedup_sink(stream_df: DataFrame, out_path: str,
                      index_path: str, max_hamming: int = 3,
                      content_col: str = "content",
-                     id_col: str = "media_id", nblocks: int = 64,
+                     id_col: str = "media_id",
                      decode=None,
                      query_name: str = "audiodedup",
                      timeout_s: int = 300,
@@ -1117,12 +1117,8 @@ def audio_dedup_sink(stream_df: DataFrame, out_path: str,
     safety) is the SAME code path, so batch (`audio_dup_pairs`) and
     stream block identically and the index stays 16 bytes per admitted
     clip. `decode` is the injectable ``bytes -> int samples`` stand-in;
-    the default routes real containers through `decode_audio`.
-    `nblocks` must be 64 (the index probe chunks a full 64-bit
-    hash)."""
-    if nblocks != 64:
-        raise ValueError("audio_dedup_sink requires nblocks=64 (the "
-                         "index probe chunks 64 bits)")
+    the default routes real containers through `decode_audio`. The
+    hash is always the full 64 blocks: the index probe chunks 64 bits."""
     from openpolicedata_spark.operators.multimodal import audio_ahash
 
     return media_dedup_sink(
@@ -1131,7 +1127,7 @@ def audio_dedup_sink(stream_df: DataFrame, out_path: str,
         query_name=query_name, timeout_s=timeout_s,
         compact_index_files=compact_index_files,
         hasher=lambda batch: audio_ahash(batch, content_col, id_col,
-                                         nblocks, decode))
+                                         64, decode))
 
 
 def video_dedup_sink(stream_df: DataFrame, out_path: str,

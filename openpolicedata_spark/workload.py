@@ -219,7 +219,7 @@ def q10_merge_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _read(spark, sf_dir, "orders")
     c = _read(spark, sf_dir, "customer")
     joined = merge_tables(o, c, left_on="o_custkey", right_on="c_custkey",
-                          how="inner", broadcast_right=True)
+                          how="inner")
     return joined.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.sum(F.col("o_totalprice").cast("decimal(14,2)")).cast("double").alias("revenue"),

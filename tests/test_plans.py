@@ -50,6 +50,13 @@ def test_q11_star_join_broadcasts_dims(spark, sf_dir):
     assert_broadcast_join(df, min_joins=2)
 
 
+def test_q10_merge_join_broadcasts_customer_unhinted(spark, sf_dir):
+    """q10 carries no broadcast hint: customer is small, so the size-based
+    planner broadcasts it and orders never shuffle for the join."""
+    df = workload.queries()["q10_merge_join"](spark, sf_dir)
+    assert_broadcast_join(df, min_joins=1)
+
+
 def test_q02_date_range_prunes_columns(spark, sf_dir):
     df = workload.queries()["q02_date_range_load"](spark, sf_dir)
     assert_filter_pushed(df, "o_orderdate")

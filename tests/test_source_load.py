@@ -337,3 +337,116 @@ def test_portal_table_fetches_each_page_once(spark, tmp_path, count_jobs):
     want = sum(1 for r in rows if r["agency"] == "Springfield PD"
                and r["incident_date"].endswith("/2020"))
     assert want and spark.read.parquet(out).count() == want
+
+
+def test_socrata_row_loads_through_production_factory(spark, monkeypatch):
+    """A Socrata catalog row resolves through the same factory as every
+    other portal, so a sub-year date range, `agency=` and the row's
+    static `query` predicate all hold. Only the transport is swapped:
+    the loader probes the text date format itself (the catalog carries
+    none)."""
+    from openpolicedata_spark import data
+    from openpolicedata_spark.catalog import Catalog
+    from openpolicedata_spark.data import Source
+    from openpolicedata_spark.sources.portals.testing import FakePortal
+    from openpolicedata_spark.sources.portals.transport import (
+        FakeTransport,
+        encode_transport,
+    )
+    from openpolicedata_spark.sources.portals.where import DateFormat
+
+    server = FakePortal("socrata", date_text="mmddyyyy")
+    made = []
+
+    def make_loader(spark_, row):
+        ld = real_make_loader(spark_, row)
+        ld.transport_pickle = encode_transport(FakeTransport(handler=server))
+        made.append(ld)
+        return ld
+
+    real_make_loader = data._make_loader
+    monkeypatch.setattr(data, "_make_loader", make_loader)
+    cat = Catalog([dict(
+        State="Ohio", SourceName="Columbus", Agency="MULTIPLE",
+        TableType="STOPS", Year="MULTIPLE", DataType="Socrata",
+        URL="https://fake.portal.test", dataset_id="abcd-1234",
+        date_field="incident_date", agency_field="agency",
+        query={"category": "STOP"})])
+    src = Source("Columbus", catalog=cat, spark=spark)
+    t = src.load("STOPS", ["2020-03-01", "2020-08-31"],
+                 agency="Springfield PD")
+
+    (loader,) = made
+    assert loader.format_name == "opd_socrata"
+    assert loader.date_format == DateFormat.MMDDYYYY_TEXT
+
+    def in_range(d):
+        m, day, y = map(int, d.split("/"))
+        return dt.date(2020, 3, 1) <= dt.date(y, m, day) <= dt.date(2020, 8, 31)
+
+    want = sorted(r["case_id"] for r in server.rows
+                  if r["agency"] == "Springfield PD"
+                  and r["category"] == "STOP" and in_range(r["incident_date"]))
+    got = sorted(r.case_id for r in t.table.select("case_id").collect())
+    assert want and got == want
+
+
+def _import_forks(tree):
+    """(line, module) for every import of a module outside the stdlib and
+    the required dependencies, inside a `try` whose handler catches
+    ImportError or ModuleNotFoundError."""
+    import ast
+    import sys
+
+    allowed = set(sys.stdlib_module_names) | {
+        "openpolicedata_spark", "pyspark", "pandas", "numpy", "pyarrow"}
+    caught = {"ImportError", "ModuleNotFoundError"}
+
+    def catches_import_error(handler):
+        t = handler.type
+        names = t.elts if isinstance(t, ast.Tuple) else [t]
+        return any(isinstance(n, ast.Name) and n.id in caught for n in names)
+
+    forks = []
+    for node in ast.walk(tree):
+        if not (isinstance(node, ast.Try)
+                and any(catches_import_error(h) for h in node.handlers)):
+            continue
+        for stmt in node.body:
+            for sub in ast.walk(stmt):
+                if isinstance(sub, ast.Import):
+                    mods = [a.name for a in sub.names]
+                elif isinstance(sub, ast.ImportFrom) and not sub.level:
+                    mods = [sub.module]
+                else:
+                    continue
+                forks += [(sub.lineno, m) for m in mods
+                          if m.split(".")[0] not in allowed]
+    return forks
+
+
+def test_no_reader_is_selected_by_an_optional_import():
+    """Each input has one reader: no module picks a parser by which
+    third-party libraries happen to be installed (a try/except
+    ImportError around an optional import swaps in an untested reader
+    for the same bytes)."""
+    import ast
+    import pathlib
+
+    import openpolicedata_spark
+
+    root = pathlib.Path(openpolicedata_spark.__file__).parent
+    forks = [(py.relative_to(root).as_posix(), line, mod)
+             for py in sorted(root.rglob("*.py"))
+             for line, mod in _import_forks(ast.parse(py.read_text()))]
+    assert not forks, forks
+
+
+def test_import_fork_guard_sees_both_handler_spellings():
+    import ast
+
+    src = ("try:\n    import lxml\nexcept ImportError:\n    pass\n"
+           "try:\n    from rapidfuzz import fuzz\n"
+           "except (ValueError, ModuleNotFoundError):\n    pass\n"
+           "try:\n    import json\nexcept ImportError:\n    pass\n")
+    assert _import_forks(ast.parse(src)) == [(2, "lxml"), (6, "rapidfuzz")]
