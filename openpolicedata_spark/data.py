@@ -605,9 +605,8 @@ class Source:
         Every portal row, Socrata included, loads through
         ``rest.make_rest_loader``, so ``agency=`` (on the row's
         ``agency_field``) and the row's static ``query`` predicates reach
-        the portal. A portal row that sets no
-        ``date_format`` probes it once per loader (one page request) at
-        its first date-filtered load."""
+        the portal. A portal loader probes the table's date format once
+        (one page request) at its first date-filtered load."""
         row = self.filter(table_type, date, url=url, id=id)
         loader = self._get_loader(row)
         df = loader.load(

@@ -702,33 +702,35 @@ def image_dup_pairs(df: DataFrame, max_hamming: int = 3,
             .select("id_a", "id_b", "hamming"))
 
 
-def audio_energy_hash(samples: "np.ndarray", nblocks: int = 64) -> int:
+# One bit per block: the shared pigeonhole blocking chunks a full 64-bit
+# hash, and a shorter hash would make the always-zero high chunks a
+# corpus-wide degenerate bucket.
+AUDIO_HASH_BLOCKS = 64
+
+
+def audio_energy_hash(samples: "np.ndarray") -> int:
     """Integer-exact audio fingerprint — the audio face of
     `ahash_of_pixels`: fold channels by summing PER-CHANNEL
     magnitudes (|L| + |R|, not |L + R| — an out-of-phase stereo pair
-    hashes as loud, not as silence), split into `nblocks` equal
-    blocks (trailing remainder dropped), sum |sample| per block, and
-    set bit j when ``block_sum * nblocks > total_sum`` (strict). All
-    arithmetic is integer, so every bit replays in an external SQL
-    oracle (q150), and re-encodes through any LOSSLESS audio chain
-    (WAV/FLAC/Ogg-FLAC/MP4-PCM) hash identically. Returns a SIGNED
-    64-bit value like the image/video hashes; `nblocks` is capped at
-    64 so the value always fits the long schema."""
-    if not (1 <= nblocks <= 64):
-        raise ValueError(f"nblocks={nblocks} must be in 1..64 "
-                         "(the hash is a 64-bit long)")
+    hashes as loud, not as silence), split into `AUDIO_HASH_BLOCKS`
+    equal blocks (trailing remainder dropped), sum |sample| per block,
+    and set bit j when ``block_sum * AUDIO_HASH_BLOCKS > total_sum``
+    (strict). All arithmetic is integer, so every bit replays in an
+    external SQL oracle (q150), and re-encodes through any LOSSLESS
+    audio chain (WAV/FLAC/Ogg-FLAC/MP4-PCM) hash identically. Returns
+    a SIGNED 64-bit value like the image/video hashes."""
     a = np.asarray(samples)
     if a.ndim == 1:
         a = a[:, None]
     mono = np.abs(a.astype(np.int64)).sum(axis=1)
-    n = (len(mono) // nblocks) * nblocks
+    n = (len(mono) // AUDIO_HASH_BLOCKS) * AUDIO_HASH_BLOCKS
     if n == 0:
         return 0
-    blocks = mono[:n].reshape(nblocks, -1).sum(axis=1)
+    blocks = mono[:n].reshape(AUDIO_HASH_BLOCKS, -1).sum(axis=1)
     total = int(blocks.sum())
     v = 0
     for j, b in enumerate(blocks):
-        if int(b) * nblocks > total:
+        if int(b) * AUDIO_HASH_BLOCKS > total:
             v |= 1 << j
     if v >= 1 << 63:
         v -= 1 << 64
@@ -736,16 +738,12 @@ def audio_energy_hash(samples: "np.ndarray", nblocks: int = 64) -> int:
 
 
 def audio_ahash(df: DataFrame, content_col: str = "content",
-                id_col: str = "media_id", nblocks: int = 64,
-                decode=None) -> DataFrame:
+                id_col: str = "media_id", decode=None) -> DataFrame:
     """Energy fingerprint per audio payload: decode (real codecs via
     `decode_audio`'s magic dispatch, or an injectable
     ``decode(bytes) -> int array`` stand-in), de-normalize to int16,
     hash with `audio_energy_hash`. One Arrow-batched pass; bytes never
     leave the executor and the output is (id, ahash) longs."""
-    if not (1 <= nblocks <= 64):
-        raise ValueError(f"nblocks={nblocks} must be in 1..64 "
-                         "(the hash is a 64-bit long)")
     dec = decode
 
     def gen(batches):
@@ -759,8 +757,7 @@ def audio_ahash(df: DataFrame, content_col: str = "content",
                 else:
                     _rate, norm = decode_audio(bytes(blob), "audio/*")
                     samples = np.rint(norm * 32768.0).astype(np.int64)
-                rows.append((int(mid),
-                             audio_energy_hash(samples, nblocks)))
+                rows.append((int(mid), audio_energy_hash(samples)))
             yield pd.DataFrame(rows, columns=[id_col, "ahash"])
 
     return df.select(id_col, content_col).mapInPandas(
@@ -769,8 +766,7 @@ def audio_ahash(df: DataFrame, content_col: str = "content",
 
 def audio_dup_pairs(df: DataFrame, max_hamming: int = 3,
                     content_col: str = "content",
-                    id_col: str = "media_id", nblocks: int = 64,
-                    decode=None,
+                    id_col: str = "media_id", decode=None,
                     max_bucket_size: Optional[int] = None) -> DataFrame:
     """Near-duplicate audio pairs — the audio face of the blocked
     near-dedup family. The energy hash decodes once; the pigeonhole
@@ -778,14 +774,8 @@ def audio_dup_pairs(df: DataFrame, max_hamming: int = 3,
     blocks purely on the 64-bit hash via ``hashes=``), so the shuffle
     carries longs, never samples, and the `max_bucket_size` skew guard
     applies identically (a corpus full of silence collapses into one
-    bucket — the degenerate signature case). `nblocks` must be 64:
-    the shared pigeonhole blocking chunks a full 64-bit hash, and a
-    shorter hash would make the always-zero high chunks a corpus-wide
-    degenerate bucket."""
-    if nblocks != 64:
-        raise ValueError("audio_dup_pairs requires nblocks=64 (the "
-                         "shared hamming blocking chunks 64 bits)")
-    hashes = audio_ahash(df, content_col, id_col, nblocks, decode)
+    bucket — the degenerate signature case)."""
+    hashes = audio_ahash(df, content_col, id_col, decode)
     return image_dup_pairs(df, max_hamming=max_hamming,
                            content_col=content_col, id_col=id_col,
                            max_bucket_size=max_bucket_size,

@@ -331,9 +331,10 @@ def make_rest_loader(spark: SparkSession, data_type: str, row: pd.Series,
                      transport=None) -> RestLoader:
     """Factory from a catalog row (reference data.py:1819-1857) for every
     portal DataType, Socrata included. The loader keeps the row's
-    `agency_field`, static `query` predicates and `date_format`; a row
-    with no `date_format` probes it once per loader (one page request,
-    portals/probe.py) at the first use that needs it."""
+    `agency_field` and static `query` predicates. The catalog carries no
+    date format, so the loader probes it once (one page request,
+    portals/probe.py) at the first use that needs it, as the reference's
+    date-format search does."""
     ds = row.get("dataset_id")
     ds = "" if ds is None or (isinstance(ds, float) and pd.isna(ds)) else str(ds)
     q = row.get("query")
@@ -346,9 +347,7 @@ def make_rest_loader(spark: SparkSession, data_type: str, row: pd.Series,
         dataset=ds,
         date_field=row.get("date_field"),
         agency_field=row.get("agency_field"),
-        date_format=(row.get("date_format")
-                     if isinstance(row.get("date_format"), str)
-                     and row.get("date_format") else "auto"),
+        date_format="auto",
         query=q if isinstance(q, dict) else None,
         transport=transport,
     )

@@ -1127,7 +1127,7 @@ def audio_dedup_sink(stream_df: DataFrame, out_path: str,
         query_name=query_name, timeout_s=timeout_s,
         compact_index_files=compact_index_files,
         hasher=lambda batch: audio_ahash(batch, content_col, id_col,
-                                         64, decode))
+                                         decode))
 
 
 def video_dedup_sink(stream_df: DataFrame, out_path: str,

@@ -1711,80 +1711,6 @@ QUALIFY rank <= 3
 """
 
 
-def q61_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Single-pass data-quality profile of the events table: one
-    aggregation computes rows/nulls/distincts/min/max for every column —
-    at 100 TB this is ONE scan, where a per-column loop would be
-    O(columns) scans. Long (column, metric) output shape."""
-    e = _read(spark, sf_dir, "events")
-    cols = ["event_id", "user_id", "event_type", "value"]
-
-    def render(c: Column, dtype: str) -> Column:
-        # engine-portable string rendering: doubles go through a fixed
-        # decimal scale (Java prints 1e7 as '1.0E7', DuckDB as
-        # '10000000.0'); integers and strings agree natively
-        if dtype == "double":
-            return c.cast("decimal(18,6)").cast("string")
-        return c.cast("string")
-
-    dtypes = dict(e.dtypes)
-    aggs = [F.count(F.lit(1)).alias("n_rows")]
-    for c in cols:
-        aggs += [
-            F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"{c}__nulls"),
-            F.countDistinct(c).alias(f"{c}__distinct"),
-            # min/max on the NATIVE type (lexicographic string order would
-            # put '10' before '9'), rendered portably afterwards
-            render(F.min(F.col(c)), dtypes[c]).alias(f"{c}__min"),
-            render(F.max(F.col(c)), dtypes[c]).alias(f"{c}__max"),
-        ]
-    wide = e.agg(*aggs)
-    profile_rows = F.array(*[
-        F.struct(
-            F.lit(c).alias("column"),
-            F.col("n_rows").alias("n_rows"),
-            F.col(f"{c}__nulls").alias("n_nulls"),
-            F.col(f"{c}__distinct").alias("n_distinct"),
-            F.col(f"{c}__min").alias("min_value"),
-            F.col(f"{c}__max").alias("max_value"),
-        )
-        for c in cols
-    ])
-    return wide.select(F.explode(profile_rows).alias("p")).select("p.*")
-
-
-_Q61_SQL = """
-WITH w AS (
-  SELECT COUNT(*) AS n_rows,
-    SUM(CASE WHEN event_id IS NULL THEN 1 ELSE 0 END) AS eid_nulls,
-    COUNT(DISTINCT event_id) AS eid_distinct,
-    CAST(MIN(event_id) AS VARCHAR) AS eid_min,
-    CAST(MAX(event_id) AS VARCHAR) AS eid_max,
-    SUM(CASE WHEN user_id IS NULL THEN 1 ELSE 0 END) AS uid_nulls,
-    COUNT(DISTINCT user_id) AS uid_distinct,
-    CAST(MIN(user_id) AS VARCHAR) AS uid_min,
-    CAST(MAX(user_id) AS VARCHAR) AS uid_max,
-    SUM(CASE WHEN event_type IS NULL THEN 1 ELSE 0 END) AS et_nulls,
-    COUNT(DISTINCT event_type) AS et_distinct,
-    MIN(event_type) AS et_min,
-    MAX(event_type) AS et_max,
-    SUM(CASE WHEN value IS NULL THEN 1 ELSE 0 END) AS v_nulls,
-    COUNT(DISTINCT value) AS v_distinct,
-    CAST(CAST(MIN(value) AS DECIMAL(18,6)) AS VARCHAR) AS v_min,
-    CAST(CAST(MAX(value) AS DECIMAL(18,6)) AS VARCHAR) AS v_max
-  FROM events)
-SELECT 'event_id' AS "column", n_rows, eid_nulls AS n_nulls,
-       eid_distinct AS n_distinct, eid_min AS min_value, eid_max AS max_value
-FROM w
-UNION ALL
-SELECT 'user_id', n_rows, uid_nulls, uid_distinct, uid_min, uid_max FROM w
-UNION ALL
-SELECT 'event_type', n_rows, et_nulls, et_distinct, et_min, et_max FROM w
-UNION ALL
-SELECT 'value', n_rows, v_nulls, v_distinct, v_min, v_max FROM w
-"""
-
-
 def q62_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio-modality plumbing: document bytes treated as raw 16-bit PCM
     at 16 kHz (codec-free — real signal math in an Arrow-batched
@@ -1810,34 +1736,6 @@ SELECT doc_id AS media_id,
   ROUND((octet_length(encode(text)) // 2) / 16000.0, 6) AS duration_s,
   CAST(CEIL((octet_length(encode(text)) // 2) / 400.0) AS INTEGER) AS n_frames
 FROM documents
-"""
-
-
-def q63_length_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Percentile-based outlier trimming — the 'drop the tails' quality
-    step of a pretraining pipeline: keep docs whose n_chars lies within
-    [p05, p95]. The percentile pair is ONE tiny aggregate broadcast into
-    the filter (cross-join of a 1-row frame → BroadcastNestedLoop over a
-    single row): no second scan, no driver round-trip in the plan."""
-    d = _read(spark, sf_dir, "documents")
-    bounds = d.agg(
-        F.percentile("n_chars", F.lit(0.05)).alias("lo"),
-        F.percentile("n_chars", F.lit(0.95)).alias("hi"),
-    )
-    return (
-        d.crossJoin(F.broadcast(bounds))
-        .where(F.col("n_chars").between(F.col("lo"), F.col("hi")))
-        .select("doc_id", "n_chars")
-    )
-
-
-_Q63_SQL = """
-WITH b AS (
-  SELECT quantile_cont(n_chars, 0.05) AS lo, quantile_cont(n_chars, 0.95) AS hi
-  FROM documents)
-SELECT doc_id, n_chars
-FROM documents, b
-WHERE n_chars BETWEEN b.lo AND b.hi
 """
 
 
@@ -1872,29 +1770,6 @@ scored AS (
                c.vec_id ASC) AS rk
   FROM c CROSS JOIN q)
 SELECT q_id, vec_id, score FROM scored WHERE rk <= 3
-"""
-
-
-def q65_sample_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic K-per-group sample (3 docs per source by id order) —
-    the 'pull a few examples of every slice for inspection' step. One rank
-    window per group; at scale the partial sort is per-key and the filter
-    truncates early."""
-    d = _read(spark, sf_dir, "documents")
-    w = Window.partitionBy("source").orderBy(F.asc("doc_id"))
-    return (
-        d.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= 3)
-        .select("source", F.col("rk").alias("rank"), "doc_id", "n_chars")
-    )
-
-
-_Q65_SQL = """
-SELECT source, CAST(rk AS INTEGER) AS rank, doc_id, n_chars FROM (
-  SELECT source, doc_id, n_chars,
-    ROW_NUMBER() OVER (PARTITION BY source ORDER BY doc_id ASC) AS rk
-  FROM documents)
-WHERE rk <= 3
 """
 
 
@@ -1947,40 +1822,6 @@ SELECT user_id, event_id, ts, event_type, value FROM (
       PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rk
   FROM events)
 WHERE rk = 1
-"""
-
-
-def q68_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Document-length histogram (50-char bins) with exact and cumulative
-    shares — the length-distribution snapshot behind truncation / packing
-    decisions. One groupBy over the corpus; the window cumsum runs on the
-    post-aggregate frame (≤ thousands of buckets), never on raw rows."""
-    d = _read(spark, sf_dir, "documents")
-    counts = (
-        d.groupBy((F.floor(F.col("n_chars") / 50) * 50).alias("bucket"))
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-    )
-    w_all = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    w_cum = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
-    return counts.select(
-        "bucket",
-        "n_docs",
-        F.round(F.col("n_docs") / F.sum("n_docs").over(w_all), 6).alias("share"),
-        F.round(F.sum("n_docs").over(w_cum) / F.sum("n_docs").over(w_all), 6)
-        .alias("cum_share"),
-    )
-
-
-_Q68_SQL = """
-WITH c AS (
-  SELECT CAST(FLOOR(n_chars / 50) * 50 AS BIGINT) AS bucket,
-         COUNT(*) AS n_docs
-  FROM documents GROUP BY 1)
-SELECT bucket, n_docs,
-  ROUND(n_docs / SUM(n_docs) OVER (), 6) AS share,
-  ROUND(SUM(n_docs) OVER (ORDER BY bucket ROWS UNBOUNDED PRECEDING)
-          / SUM(n_docs) OVER (), 6) AS cum_share
-FROM c
 """
 
 
@@ -2192,101 +2033,6 @@ GROUP BY l.value
 """
 
 
-def q78_char_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source character-class profile (alpha/digit/space/other shares)
-    — the byte-level corpus audit before tokenizer training. Length
-    deltas after class-targeted regexp_replace: pure codegen string ops,
-    one narrow pass + one tiny groupBy."""
-    d = _read(spark, sf_dir, "documents")
-    t = F.col("text")
-    n = F.length(t)
-    alpha = n - F.length(F.regexp_replace(t, "[A-Za-z]", ""))
-    digit = n - F.length(F.regexp_replace(t, "[0-9]", ""))
-    space = n - F.length(F.regexp_replace(t, " ", ""))
-    per = d.select(
-        "source", n.alias("__n__"), alpha.alias("__a__"),
-        digit.alias("__d__"), space.alias("__s__"))
-    return (
-        per.groupBy("source")
-        .agg(F.sum("__n__").alias("n_chars"),
-             F.round(F.sum("__a__") / F.sum("__n__"), 6).alias("alpha_share"),
-             F.round(F.sum("__d__") / F.sum("__n__"), 6).alias("digit_share"),
-             F.round(F.sum("__s__") / F.sum("__n__"), 6).alias("space_share"))
-    )
-
-
-_Q78_SQL = """
-SELECT source, SUM(LENGTH(text)) AS n_chars,
-  ROUND(SUM(LENGTH(text) - LENGTH(regexp_replace(text, '[A-Za-z]', '', 'g')))
-          / SUM(LENGTH(text)), 6) AS alpha_share,
-  ROUND(SUM(LENGTH(text) - LENGTH(regexp_replace(text, '[0-9]', '', 'g')))
-          / SUM(LENGTH(text)), 6) AS digit_share,
-  ROUND(SUM(LENGTH(text) - LENGTH(replace(text, ' ', '')))
-          / SUM(LENGTH(text)), 6) AS space_share
-FROM documents GROUP BY source
-"""
-
-
-def q79_mix_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Language-mix Shannon entropy per source — the balance diagnostic of
-    a training-mix config. Two cheap aggregations ((source,lang) counts →
-    per-source entropy); all log math on the post-aggregate frame."""
-    d = _read(spark, sf_dir, "documents")
-    counts = d.groupBy("source", "lang").agg(F.count(F.lit(1)).alias("n"))
-    tot = Window.partitionBy("source")
-    p = F.col("n") / F.sum("n").over(tot)
-    return (
-        counts.select("source", F.col("n"), (-p * F.log(p)).alias("__h__"))
-        .groupBy("source")
-        .agg(F.sum("n").alias("n_docs"),
-             F.round(F.sum("__h__"), 6).alias("lang_entropy"))
-    )
-
-
-_Q79_SQL = """
-WITH c AS (
-  SELECT source, lang, COUNT(*) AS n FROM documents GROUP BY source, lang),
-p AS (
-  SELECT source, n, CAST(n AS DOUBLE) / SUM(n) OVER (PARTITION BY source) AS p
-  FROM c)
-SELECT source, SUM(n) AS n_docs, ROUND(SUM(-p * LN(p)), 6) AS lang_entropy
-FROM p GROUP BY source
-"""
-
-
-def q80_decile_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Length deciles (NTILE over a unique ordering) with per-decile
-    stats — the distribution sketch behind curriculum/packing decisions.
-
-    Scale note: a global NTILE funnels every row through ONE window task —
-    exact and fine up to ~10^8 rows, but at 100 TB the production path is
-    two narrow passes instead: approx_percentile(n_chars, [0.1..0.9]) for
-    the boundaries, then a row-local `width_bucket`-style binning. This
-    query keeps the exact formulation because it is the oracle-checkable
-    semantics the approximate path is validated against."""
-    d = _read(spark, sf_dir, "documents")
-    w = Window.orderBy(F.asc("n_chars"), F.asc("doc_id"))
-    return (
-        d.select("n_chars", F.ntile(10).over(w).alias("decile"))
-        .groupBy("decile")
-        .agg(F.count(F.lit(1)).alias("n_docs"),
-             F.min("n_chars").alias("min_chars"),
-             F.max("n_chars").alias("max_chars"),
-             F.round(F.sum("n_chars") / F.count(F.lit(1)), 6).alias("avg_chars"))
-    )
-
-
-_Q80_SQL = """
-SELECT decile, COUNT(*) AS n_docs, MIN(n_chars) AS min_chars,
-       MAX(n_chars) AS max_chars,
-       ROUND(SUM(n_chars) / COUNT(*), 6) AS avg_chars
-FROM (SELECT n_chars,
-             NTILE(10) OVER (ORDER BY n_chars ASC, doc_id ASC) AS decile
-      FROM documents)
-GROUP BY decile
-"""
-
-
 def q81_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source duplication audit on the dup-injected corpus: distinct
     normalized fingerprints vs rows. count(DISTINCT md5) keeps the shuffle
@@ -2313,112 +2059,6 @@ SELECT source, COUNT(*) AS n_docs,
                  / COUNT(*), 6) AS dup_share
 FROM {_DOCS_WITH_DUPS_SQL} d
 GROUP BY source
-"""
-
-
-def q82_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One k-means assignment step: per-label centroids (exact DECIMAL
-    mean per position), then nearest-centroid per vector by squared L2.
-    Exact-oracle formulation: posexplode vector+centroid, per-position
-    (v-c)^2 cast to DECIMAL so the distance sum is order-independent, then
-    a rank-1 window with a label tiebreak. The centroid frame broadcasts
-    (K x dim rows). At corpus scale the same step runs through
-    `operators.similarity.ivf_assign` (numpy argmin per Arrow batch, no
-    explode) — this query pins its semantics to an engine-portable oracle."""
-    emb = _read(spark, sf_dir, "embeddings")
-    pe = emb.select("vec_id", "label",
-                    F.posexplode("embedding").alias("pos0", "v"))
-    cent = (
-        pe.groupBy(F.col("label").alias("c_label"),
-                   F.col("pos0").alias("c_pos"))
-        .agg((F.sum(F.col("v").cast("decimal(20,10)")).cast("double")
-              / F.count(F.lit(1))).alias("c"))
-    )
-    dists = (
-        emb.select("vec_id", F.posexplode("embedding").alias("pos0", "v"))
-        .join(F.broadcast(cent), F.col("pos0") == F.col("c_pos"))
-        .groupBy("vec_id", "c_label")
-        .agg(F.sum(((F.col("v") - F.col("c")) * (F.col("v") - F.col("c")))
-                   .cast("decimal(30,12)")).alias("d2"))
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.asc("d2"), F.asc("c_label"))
-    return (
-        dists.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") == 1)
-        .select("vec_id", F.col("c_label").alias("centroid"),
-                F.round(F.col("d2").cast("double"), 6).alias("dist2"))
-    )
-
-
-_Q82_SQL = """
-WITH pe AS (
-  SELECT vec_id, label, unnest(range(1, len(embedding) + 1)) AS pos,
-         CAST(unnest(embedding) AS DOUBLE) AS v
-  FROM embeddings),
-cent AS (
-  SELECT label AS c_label, pos AS c_pos,
-         CAST(SUM(CAST(v AS DECIMAL(20,10))) AS DOUBLE) / COUNT(*) AS c
-  FROM pe GROUP BY label, pos),
-dists AS (
-  SELECT pe.vec_id, cent.c_label,
-         SUM(CAST((pe.v - cent.c) * (pe.v - cent.c) AS DECIMAL(30,12))) AS d2
-  FROM pe JOIN cent ON pe.pos = cent.c_pos
-  GROUP BY pe.vec_id, cent.c_label)
-SELECT vec_id, c_label AS centroid, ROUND(CAST(d2 AS DOUBLE), 6) AS dist2
-FROM (SELECT *, ROW_NUMBER() OVER (
-        PARTITION BY vec_id ORDER BY d2 ASC, c_label ASC) AS rk
-      FROM dists)
-WHERE rk = 1
-"""
-
-
-def q83_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rule-based corpus filter with attribution — the keep/drop decision
-    step of a curation pipeline (each doc gets its FIRST failing rule as
-    the reason, or 'keep'). All rules are codegen string expressions; the
-    decision is row-local (narrow), so the filter costs one scan at any
-    corpus size."""
-    d = _read(spark, sf_dir, "documents")
-    t = F.col("text")
-    n_chars = F.length(t)
-    n_tokens = F.size(F.filter(F.split(F.trim(t), r"\s+"),
-                               lambda x: x != ""))
-    alpha_share = (
-        (n_chars - F.length(F.regexp_replace(t, "[A-Za-z]", ""))).cast("double")
-        / F.when(n_chars > 0, n_chars.cast("double")).otherwise(F.lit(1.0)))
-    reason = (
-        F.when(n_tokens < 10, "too_short")
-        .when(n_chars > 3000, "too_long")
-        .when(alpha_share < F.lit(0.6), "low_alpha")
-        .otherwise("keep")
-    )
-    return d.select(
-        "doc_id",
-        reason.alias("reason"),
-        (reason == "keep").alias("keep"),
-    )
-
-
-_Q83_SQL = r"""
-WITH m AS (
-  SELECT doc_id, LENGTH(text) AS n_chars,
-    len(list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x <> ''))
-      AS n_tokens,
-    CAST(LENGTH(text) - LENGTH(regexp_replace(text, '[A-Za-z]', '', 'g'))
-         AS DOUBLE)
-      / (CASE WHEN LENGTH(text) > 0 THEN CAST(LENGTH(text) AS DOUBLE)
-              ELSE 1.0 END) AS alpha_share
-  FROM documents)
-SELECT doc_id,
-  CASE WHEN n_tokens < 10 THEN 'too_short'
-       WHEN n_chars > 3000 THEN 'too_long'
-       WHEN alpha_share < 0.6 THEN 'low_alpha'
-       ELSE 'keep' END AS reason,
-  (CASE WHEN n_tokens < 10 THEN 'too_short'
-        WHEN n_chars > 3000 THEN 'too_long'
-        WHEN alpha_share < 0.6 THEN 'low_alpha'
-        ELSE 'keep' END) = 'keep' AS keep
-FROM m
 """
 
 
@@ -2679,122 +2319,6 @@ GROUP BY doc_id
 """
 
 
-def q89_blocked_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Blocked record linkage (entity resolution): self-match part names
-    by edit distance, but only WITHIN a blocking key (first two words) —
-    the classic blocking trick that turns O(n²) fuzzy matching into
-    per-block cross products. The block key equi-join shuffles both sides
-    on the key; levenshtein runs only on within-block candidates. Spark's
-    levenshtein(l, r) and DuckDB's agree exactly (classic DP edit
-    distance), so the pair set is oracle-checkable."""
-    p = _read(spark, sf_dir, "part")
-    words = F.split(F.col("p_name"), " ")
-    named = p.select(
-        F.col("p_partkey").alias("pk"),
-        F.col("p_name").alias("name"),
-        F.concat_ws(" ", words[0], words[1]).alias("block"),
-    )
-    a, b = named.alias("a"), named.alias("b")
-    lev = F.levenshtein(F.col("a.name"), F.col("b.name"))
-    return (
-        a.join(b, on=[F.col("a.block") == F.col("b.block"),
-                      F.col("a.pk") < F.col("b.pk")])
-        .where(lev <= 12)
-        .select(
-            F.col("a.pk").alias("pk_a"),
-            F.col("b.pk").alias("pk_b"),
-            lev.cast("int").alias("distance"),
-        )
-    )
-
-
-_Q89_SQL = """
-WITH named AS (
-  SELECT p_partkey AS pk, p_name AS name,
-    concat_ws(' ', string_split(p_name, ' ')[1], string_split(p_name, ' ')[2])
-      AS block
-  FROM part)
-SELECT a.pk AS pk_a, b.pk AS pk_b,
-       CAST(levenshtein(a.name, b.name) AS INTEGER) AS distance
-FROM named a JOIN named b ON a.block = b.block AND a.pk < b.pk
-WHERE levenshtein(a.name, b.name) <= 12
-"""
-
-
-def q90_kmeans_update(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One full Lloyd iteration (assign + centroid update): init centroids
-    from per-label means, assign each vector to its nearest centroid by
-    squared L2, then recompute each centroid as the exact DECIMAL mean of
-    its members. Complements q82 (assignment only) — together they pin the
-    semantics of the iterative loop `operators.similarity` runs with numpy
-    at corpus scale. The update groupBy reuses the assignment's vec_id
-    partitioning; centroid frames stay broadcast-sized (K × dim)."""
-    emb = _read(spark, sf_dir, "embeddings")
-    pe = emb.select("vec_id", "label",
-                    F.posexplode("embedding").alias("pos0", "v"))
-    cent = (
-        pe.groupBy(F.col("label").alias("c_label"),
-                   F.col("pos0").alias("c_pos"))
-        .agg((F.sum(F.col("v").cast("decimal(20,10)")).cast("double")
-              / F.count(F.lit(1))).alias("c"))
-    )
-    dists = (
-        emb.select("vec_id", F.posexplode("embedding").alias("pos0", "v"))
-        .join(F.broadcast(cent), F.col("pos0") == F.col("c_pos"))
-        .groupBy("vec_id", "c_label")
-        .agg(F.sum(((F.col("v") - F.col("c")) * (F.col("v") - F.col("c")))
-                   .cast("decimal(30,12)")).alias("d2"))
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.asc("d2"), F.asc("c_label"))
-    assign = (
-        dists.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") == 1)
-        .select("vec_id", F.col("c_label").alias("centroid"))
-    )
-    members = assign.join(
-        emb.select("vec_id", F.posexplode("embedding").alias("pos0", "v")),
-        on="vec_id",
-    )
-    return (
-        members.groupBy("centroid", F.col("pos0").alias("pos"))
-        .agg(
-            F.round(
-                F.sum(F.col("v").cast("decimal(20,10)")).cast("double")
-                / F.count(F.lit(1)), 6).alias("c_new"),
-            # one row per member vector lands in each (centroid, pos) group
-            F.count(F.lit(1)).alias("n_members"),
-        )
-    )
-
-
-_Q90_SQL = """
-WITH pe AS (
-  SELECT vec_id, label, unnest(range(0, len(embedding))) AS pos,
-         CAST(unnest(embedding) AS DOUBLE) AS v
-  FROM embeddings),
-cent AS (
-  SELECT label AS c_label, pos AS c_pos,
-         CAST(SUM(CAST(v AS DECIMAL(20,10))) AS DOUBLE) / COUNT(*) AS c
-  FROM pe GROUP BY label, pos),
-dists AS (
-  SELECT pe.vec_id, cent.c_label,
-         SUM(CAST((pe.v - cent.c) * (pe.v - cent.c) AS DECIMAL(30,12))) AS d2
-  FROM pe JOIN cent ON pe.pos = cent.c_pos
-  GROUP BY pe.vec_id, cent.c_label),
-assign AS (
-  SELECT vec_id, c_label AS centroid
-  FROM (SELECT *, ROW_NUMBER() OVER (
-          PARTITION BY vec_id ORDER BY d2 ASC, c_label ASC) AS rk
-        FROM dists)
-  WHERE rk = 1)
-SELECT centroid, pos,
-  ROUND(CAST(SUM(CAST(v AS DECIMAL(20,10))) AS DOUBLE) / COUNT(*), 6) AS c_new,
-  COUNT(*) AS n_members
-FROM assign JOIN pe USING (vec_id)
-GROUP BY centroid, pos
-"""
-
-
 def q91_user_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user behavioral feature vector from the event log — the
     feature-engineering step before training: activity counts, type
@@ -2963,141 +2487,6 @@ SELECT doc_id, COUNT(*) AS n_tokens,
      p -> p[2]))[1:8], ' ') AS head_ids
 FROM tok LEFT JOIN vocab USING (token)
 GROUP BY doc_id
-"""
-
-
-def q94_zscore_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group feature normalization (z-score of doc length within its
-    source) — the feature-scaling step before training. Determinism
-    trick: mean/std come from DECIMAL sum and sum-of-squares aggregates
-    (order-independent), then the final arithmetic runs in double from
-    those exact inputs — bit-identical across engines, unlike native
-    STDDEV whose accumulation order varies. Plan: one tiny per-source
-    aggregate broadcast back onto the scan — the data shuffles zero
-    times."""
-    d = _read(spark, sf_dir, "documents")
-    x = F.length("text").cast("long")
-    stats = (
-        d.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(x.cast("decimal(20,4)")).cast("double").alias("s"),
-            F.sum((x * x).cast("decimal(30,4)")).cast("double").alias("ss"),
-        )
-        .select(
-            "source",
-            (F.col("s") / F.col("n")).alias("mu"),
-            # n=1 → divisor 0: Spark's non-ANSI divide yields NULL here
-            # but DuckDB (IEEE default) yields inf — nullify explicitly
-            # on BOTH sides so degenerate groups agree (z NULL)
-            F.sqrt((F.col("ss") - F.col("s") * F.col("s") / F.col("n"))
-                   / F.nullif(F.col("n") - 1, F.lit(0))).alias("sd"),
-        )
-    )
-    return (
-        d.select("doc_id", "source", x.alias("n_chars"))
-        .join(F.broadcast(stats), on="source")
-        .select(
-            "doc_id", "source", "n_chars",
-            # sd=0 (constant group) → NULL z, not ±inf
-            F.round((F.col("n_chars") - F.col("mu"))
-                    / F.nullif(F.col("sd"), F.lit(0.0)), 6)
-            .alias("z"),
-        )
-    )
-
-
-_Q94_SQL = """
-WITH stats AS (
-  SELECT source, COUNT(*) AS n,
-    CAST(SUM(CAST(LENGTH(text) AS DECIMAL(20,4))) AS DOUBLE) AS s,
-    CAST(SUM(CAST(LENGTH(text) * LENGTH(text) AS DECIMAL(30,4))) AS DOUBLE)
-      AS ss
-  FROM documents GROUP BY source),
-m AS (
-  SELECT source, s / n AS mu,
-    SQRT((ss - s * s / n) / NULLIF(n - 1, 0)) AS sd
-  FROM stats)
-SELECT doc_id, source, CAST(LENGTH(text) AS BIGINT) AS n_chars,
-  ROUND((LENGTH(text) - mu) / NULLIF(sd, 0), 6) AS z
-FROM documents JOIN m USING (source)
-"""
-
-
-def q95_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-based mixture sampling — the multilingual-pretraining
-    knob: per-source sampling probability ∝ share^(1/T) (T=2 here), so
-    low-resource sources are up-weighted relative to their natural share.
-    Per-doc keep decisions use a Knuth multiplicative hash of doc_id
-    (pure BIGINT arithmetic — identical in every engine, unlike native
-    rand/hash functions), compared against the source's computed keep
-    probability. Output is the per-source audit: natural share, adjusted
-    probability, realized sample. Two tiny aggregates + one broadcast
-    join back — the corpus itself never shuffles."""
-    d = _read(spark, sf_dir, "documents")
-    # u in [0,1): Knuth multiplicative hash over the 32-bit ring,
-    # SPLIT-MULTIPLIED so no intermediate exceeds int64: even a masked
-    # 32-bit id times 2654435761 reaches ~1.1e19 > 2^63-1 (DuckDB raises
-    # on bigint overflow where Spark wraps — the engines must agree at
-    # 100 TB id ranges, not just testdata's). With x = id mod 2^32 split
-    # as x_lo + 2^16·x_hi: (x·C) mod 2^32 =
-    # (x_lo·C + ((x_hi·C) mod 2^16)·2^16) mod 2^32, every term < 2^48.
-    x = F.col("doc_id") % F.lit(4294967296)
-    x_lo, x_hi = x % F.lit(65536), x / F.lit(65536)
-    x_hi = x_hi.cast("long")  # floor division
-    h = ((x_lo * F.lit(2654435761)
-          + ((x_hi * F.lit(2654435761)) % F.lit(65536)) * F.lit(65536))
-         % F.lit(4294967296))
-    u = h / F.lit(4294967296.0)
-    counts = d.groupBy("source").agg(F.count(F.lit(1)).alias("n_s"))
-    tot = counts.agg(F.sum("n_s").alias("n_total"),
-                     F.sum(F.sqrt(F.col("n_s"))).alias("z"))
-    rates = (
-        counts.crossJoin(F.broadcast(tot))
-        # p_s ∝ (n_s/N)^(1/2); target sample M = N/2 docs overall
-        .select(
-            "source", "n_s", "n_total",
-            F.least(
-                F.lit(1.0),
-                (F.col("n_total") / 2.0)
-                * (F.sqrt(F.col("n_s")) / F.col("z")) / F.col("n_s"),
-            ).alias("keep_prob"),
-        )
-    )
-    return (
-        d.select("source", u.alias("u"))
-        .join(F.broadcast(rates), on="source")
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.round(F.first("n_s") / F.first("n_total"), 6)
-            .alias("natural_share"),
-            F.round(F.first("keep_prob"), 6).alias("keep_prob"),
-            F.sum(F.when(F.col("u") < F.col("keep_prob"), 1).otherwise(0))
-            .alias("n_sampled"),
-        )
-    )
-
-
-_Q95_SQL = """
-WITH counts AS (
-  SELECT source, COUNT(*) AS n_s FROM documents GROUP BY source),
-tot AS (
-  SELECT SUM(n_s) AS n_total, SUM(SQRT(n_s)) AS z FROM counts),
-rates AS (
-  SELECT source, n_s, n_total,
-    LEAST(1.0, (n_total / 2.0) * (SQRT(n_s) / z) / n_s) AS keep_prob
-  FROM counts CROSS JOIN tot)
-SELECT source, COUNT(*) AS n_docs,
-  ROUND(MIN(n_s) / CAST(MIN(n_total) AS DOUBLE), 6) AS natural_share,
-  ROUND(MIN(keep_prob), 6) AS keep_prob,
-  SUM(CASE WHEN (((doc_id % 4294967296) % 65536) * 2654435761
-                 + ((((doc_id % 4294967296) // 65536) * 2654435761)
-                    % 65536) * 65536) % 4294967296
-               / 4294967296.0
-             < keep_prob THEN 1 ELSE 0 END) AS n_sampled
-FROM documents JOIN rates USING (source)
-GROUP BY source
 """
 
 
@@ -3305,8 +2694,8 @@ def q99_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/similarity.power_iteration). The per-row score is a
     row-local left-associative fold (replayed verbatim as a DuckDB
     list_reduce in the oracle); the cross-row reduction runs in
-    DECIMAL(30,12) so the result is independent of partitioning — q90's
-    exact-decimal technique applied to the spectral step. Shuffle
+    DECIMAL(30,12) so the result is independent of partitioning — the
+    exact-decimal reduction applied to the spectral step. Shuffle
     carries ≤ dim rows per partition (map-side partial), never vectors.
     The embedding dim is probed from the data (one limit-1 scan), never
     hardcoded — the oracle derives its length from len(embedding) the
@@ -3794,9 +3183,10 @@ GROUP BY doc_id
 
 def q109_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup semantics pinned to an exact oracle: assign each vector to
-    its nearest per-label centroid (q82's DECIMAL-distance formulation),
-    then within each cluster flag every vector whose max cosine to a
-    SMALLER-id cluster-mate reaches the threshold — smallest id survives,
+    its nearest per-label centroid (squared distances summed in DECIMAL,
+    ties to the smaller label), then within each cluster flag every
+    vector whose max cosine to a SMALLER-id cluster-mate reaches the
+    threshold — smallest id survives,
     the `dedup.exact_dedup` min-wins contract. Runs on the vec_id%5
     deterministic subset so the all-pairs-within-cluster oracle stays
     replayable at sf0.1.
@@ -4466,63 +3856,6 @@ FROM marked GROUP BY src_a, src_b
 """
 
 
-def q124_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Retention-cohort matrix: users grouped by FIRST-activity week,
-    tracked by how many are still active N weeks later — the standard
-    product-analytics rollup. Both engines truncate to Monday-start
-    weeks, so the offset (days/7 between week starts) is exact integer
-    arithmetic. Shape: one min-agg for cohorts (map-side combined), one
-    distinct over (user, week), one shuffle join on user_id, and the
-    cohort sizes broadcast back onto the matrix — no window, no
-    self-join over events."""
-    e = _read(spark, sf_dir, "events")
-    cohort = (e.groupBy("user_id")
-              .agg(F.date_trunc("week", F.min("ts")).alias("cohort_week")))
-    active = (e.select("user_id",
-                       F.date_trunc("week", F.col("ts")).alias("week"))
-              .distinct())
-    joined = active.join(cohort, on="user_id").select(
-        "cohort_week",
-        (F.datediff(F.col("week"), F.col("cohort_week")) / 7)
-        .cast("int").alias("week_offset"),
-    )
-    matrix = joined.groupBy("cohort_week", "week_offset").agg(
-        F.count(F.lit(1)).alias("n_active"))
-    sizes = cohort.groupBy("cohort_week").agg(
-        F.count(F.lit(1)).alias("cohort_size"))
-    return (
-        matrix.join(F.broadcast(sizes), on="cohort_week")
-        .select(
-            "cohort_week", "week_offset", "n_active", "cohort_size",
-            F.round(F.col("n_active") / F.col("cohort_size").cast("double"),
-                    6).alias("retention"),
-        )
-    )
-
-
-_Q124_SQL = """
-WITH cohort AS (
-  SELECT user_id, date_trunc('week', MIN(ts)) AS cohort_week
-  FROM events GROUP BY user_id),
-active AS (
-  SELECT DISTINCT user_id, date_trunc('week', ts) AS week FROM events),
-joined AS (
-  SELECT cohort_week,
-         CAST(datediff('day', cohort_week, week) / 7 AS INTEGER)
-           AS week_offset
-  FROM active JOIN cohort USING (user_id)),
-matrix AS (
-  SELECT cohort_week, week_offset, COUNT(*) AS n_active
-  FROM joined GROUP BY cohort_week, week_offset),
-sizes AS (
-  SELECT cohort_week, COUNT(*) AS cohort_size FROM cohort
-  GROUP BY cohort_week)
-SELECT cohort_week, week_offset, n_active, cohort_size,
-  ROUND(n_active / CAST(cohort_size AS DOUBLE), 6) AS retention
-FROM matrix JOIN sizes USING (cohort_week)
-"""
-
-
 def q125_pagerank_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One damped PageRank step over the q114 kNN similarity graph —
     centrality on the semantic graph ranks prototypical vs peripheral
@@ -4710,73 +4043,6 @@ FROM seg
 """
 
 
-_Q128_COLS = [
-    ("events.user_id", "events", "user_id"),
-    ("events.event_type", "events", "event_type"),
-    ("lineitem.l_partkey", "lineitem", "l_partkey"),
-    ("lineitem.l_suppkey", "lineitem", "l_suppkey"),
-    ("orders.o_custkey", "orders", "o_custkey"),
-    ("documents.source", "documents", "source"),
-    ("documents.lang", "documents", "lang"),
-]
-
-
-def q128_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Key-skew audit: for every shuffle-key candidate in the warehouse,
-    the concentration numbers that decide whether a join/agg on it needs
-    salting or AQE skew handling — row count, distinct keys, and the
-    share of rows held by the hottest 1 and 10 keys. One
-    map-side-combined groupBy per column plus a per-column top-k window
-    (tiny after the agg); the per-column summaries union into one audit
-    table. This is the measurement `salted_agg`/`salted_broadcast_join`
-    act on."""
-    frames = []
-    for cid, table, col in _Q128_COLS:
-        t = _read(spark, sf_dir, table)
-        counts = (t.groupBy(F.col(col).cast("string").alias("k"))
-                  .agg(F.count(F.lit(1)).alias("c"))
-                  .localCheckpoint(eager=False))
-        # top-10 via TakeOrderedAndProject (per-partition heaps), NOT a
-        # global row_number window — an un-partitioned window would put
-        # every distinct key on ONE task, the exact anti-pattern the
-        # audit exists to prevent
-        top10 = (counts.orderBy(F.desc("c"), F.asc_nulls_last("k")).limit(10)
-                 .agg(F.max("c").alias("c_top1"),
-                      F.sum("c").alias("c_top10")))
-        totals = counts.agg(F.sum("c").alias("n_rows"),
-                            F.count(F.lit(1)).alias("n_keys"))
-        frames.append(
-            totals.crossJoin(F.broadcast(top10)).select(
-                F.lit(cid).alias("src"),
-                "n_rows", "n_keys",
-                F.round(F.col("c_top1") / F.col("n_rows").cast("double"), 6)
-                .alias("top1_share"),
-                F.round(F.col("c_top10") / F.col("n_rows").cast("double"), 6)
-                .alias("top10_share"),
-            ))
-    out = frames[0]
-    for fr in frames[1:]:
-        out = out.unionByName(fr)
-    return out
-
-
-def _q128_sql() -> str:
-    parts = []
-    for cid, table, col in _Q128_COLS:
-        parts.append(f"""
-SELECT '{cid}' AS src, CAST(SUM(c) AS BIGINT) AS n_rows,
-  COUNT(*) AS n_keys,
-  ROUND(SUM(CASE WHEN rk <= 1 THEN c ELSE 0 END)
-        / CAST(SUM(c) AS DOUBLE), 6) AS top1_share,
-  ROUND(SUM(CASE WHEN rk <= 10 THEN c ELSE 0 END)
-        / CAST(SUM(c) AS DOUBLE), 6) AS top10_share
-FROM (
-  SELECT k, c, ROW_NUMBER() OVER (ORDER BY c DESC, k ASC NULLS LAST) AS rk
-  FROM (SELECT CAST({col} AS VARCHAR) AS k, COUNT(*) AS c
-        FROM {table} GROUP BY 1))""")
-    return "\nUNION ALL\n".join(parts)
-
-
 def q129_png_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real image bytes through the full multimodal path: deterministic
     pseudo-pixels (md5 stream over doc text, the fake_decode pattern with
@@ -4933,111 +4199,6 @@ def q132_gif_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q132_SQL = ("SELECT doc_id, md5("
              + " || ".join(f"md5(text || '{i}')" for i in range(16))
              + ") AS idx_md5, TRUE AS gif_ok FROM documents")
-
-
-_GOPHER_STOPS = ["the", "be", "to", "of", "and", "that", "have", "with"]
-
-
-def q135_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style per-rule quality filtering (Rae et al. 2021 §A1.1 —
-    the rule TABLE, not a blended score like q31): word-count bounds,
-    mean-word-length band, alphabetic-word fraction, stopword presence,
-    bullet-line fraction, symbol-to-word ratio, and the AND of all.
-    Pure expression pipeline (split/filter/transform HOFs + length
-    arithmetic), zero Python, no shuffle — one narrow projection per
-    document, which is the only shape that survives a 100 TB corpus.
-    All metrics are integer-derived, so the rule booleans replay
-    exactly in SQL."""
-    d = _read(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.trim(F.col("text")), r"\s+"),
-                    lambda x: x != F.lit(""))
-    lines = F.filter(F.split(F.col("text"), "\n"),
-                     lambda x: F.trim(x) != F.lit(""))
-    t = d.select(
-        "doc_id", "text",
-        F.size(toks).alias("n_words"),
-        F.size(F.filter(toks, lambda x: x.rlike("[A-Za-z]")))
-        .alias("n_alpha"),
-        F.size(F.array_intersect(
-            F.transform(toks, F.lower),
-            F.array(*[F.lit(s) for s in _GOPHER_STOPS]))).alias("n_stop"),
-        F.size(lines).alias("n_lines"),
-        F.size(F.filter(lines, lambda x:
-                        F.ltrim(x).startswith("-")
-                        | F.ltrim(x).startswith("*"))).alias("n_bullet"),
-        F.length(F.regexp_replace(F.col("text"), r"\s", ""))
-        .alias("n_nonspace"),
-        (F.length("text") - F.length(F.replace(F.col("text"), F.lit("#"),
-                                               F.lit("")))).alias("n_hash"),
-        ((F.length("text")
-          - F.length(F.replace(F.col("text"), F.lit("..."), F.lit(""))))
-         / F.lit(3)).cast("long").alias("n_ellipsis"),
-    )
-    nw = F.col("n_words").cast("double")
-    mwl = F.col("n_nonspace") / nw
-    rules = {
-        "wc_ok": (F.col("n_words") >= 30) & (F.col("n_words") <= 100000),
-        "mwl_ok": (mwl >= 3.0) & (mwl <= 4.5),
-        "alpha_ok": (F.col("n_alpha") / nw) >= 0.8,
-        "stop_ok": F.col("n_stop") >= 1,
-        "bullet_ok": (F.col("n_bullet") / F.col("n_lines").cast("double"))
-        < 0.9,
-        "sym_ok": ((F.col("n_hash") + F.col("n_ellipsis")) / nw) < 0.1,
-    }
-    guarded = {k: F.coalesce(v, F.lit(False)).alias(k)
-               for k, v in rules.items()}
-    keep = F.lit(True)
-    for k in rules:
-        keep = keep & F.coalesce(rules[k], F.lit(False))
-    return t.select(
-        "doc_id", "n_words",
-        F.round(mwl, 6).alias("mean_word_len"),
-        *guarded.values(),
-        keep.alias("keep"),
-    )
-
-
-_Q135_SQL = r"""
-WITH t AS (
-  SELECT doc_id, text,
-    list_filter(regexp_split_to_array(trim(text), '\s+'),
-                x -> x <> '') AS toks,
-    list_filter(str_split(text, chr(10)), x -> trim(x) <> '') AS lines
-  FROM documents),
-m AS (
-  SELECT doc_id,
-    len(toks) AS n_words,
-    len(list_filter(toks, x -> regexp_matches(x, '[A-Za-z]'))) AS n_alpha,
-    len(list_intersect(list_transform(toks, x -> lower(x)),
-        ['the','be','to','of','and','that','have','with'])) AS n_stop,
-    len(lines) AS n_lines,
-    len(list_filter(lines, x -> starts_with(ltrim(x), '-')
-                              OR starts_with(ltrim(x), '*'))) AS n_bullet,
-    length(regexp_replace(text, '\s', '', 'g')) AS n_nonspace,
-    length(text) - length(replace(text, '#', '')) AS n_hash,
-    (length(text) - length(replace(text, '...', ''))) // 3 AS n_ellipsis
-  FROM t),
-r AS (
-  SELECT doc_id, n_words,
-    CASE WHEN n_words > 0
-         THEN CAST(n_nonspace AS DOUBLE) / n_words END AS mwl,
-    COALESCE(n_words >= 30 AND n_words <= 100000, FALSE) AS wc_ok,
-    COALESCE(CAST(n_nonspace AS DOUBLE) / n_words >= 3.0
-             AND CAST(n_nonspace AS DOUBLE) / n_words <= 4.5,
-             FALSE) AS mwl_ok,
-    COALESCE(CAST(n_alpha AS DOUBLE) / n_words >= 0.8, FALSE) AS alpha_ok,
-    COALESCE(n_stop >= 1, FALSE) AS stop_ok,
-    COALESCE(CAST(n_bullet AS DOUBLE) / n_lines < 0.9, FALSE)
-        AS bullet_ok,
-    COALESCE(CAST(n_hash + n_ellipsis AS DOUBLE) / n_words < 0.1, FALSE)
-        AS sym_ok
-  FROM m)
-SELECT doc_id, n_words, ROUND(mwl, 6) AS mean_word_len,
-       wc_ok, mwl_ok, alpha_ok, stop_ok, bullet_ok, sym_ok,
-       (wc_ok AND mwl_ok AND alpha_ok AND stop_ok AND bullet_ok
-        AND sym_ok) AS keep
-FROM r
-"""
 
 
 def q136_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7300,7 +6461,7 @@ def q203_skewed_fact_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deliberately skewed fact-fact sort-merge join (round 11 — the
     input shape AQE's OptimizeSkewedJoin exists for, which the corpus
     handled only MANUALLY until now via salted_agg/salted_join
-    q38/q72 and the q128 audit): 60% of lineitem rows collapse onto
+    q38/q72): 60% of lineitem rows collapse onto
     one synthetic join key (k=0 — 363k of 600k rows at sf0.1, the
     measured hot partition) and join a 97-row unique-key side forced
     onto the shuffle path by MERGE hints. Values are plain
@@ -7413,69 +6574,6 @@ FROM dim, snaps
 WHERE valid_from <= snap_ts AND (valid_to IS NULL OR snap_ts < valid_to)
 GROUP BY 1, 2
 """.format(s0=_Q205_SNAPS[0], s1=_Q205_SNAPS[1], s2=_Q205_SNAPS[2])
-
-
-def q209_per_key_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-key OLS trend fit via closed-form sufficient statistics
-    (round 11 — the per-entity feature-fit every training pipeline
-    runs: activity slope per user, drift per sensor — as ONE
-    aggregate, no UDF, no per-group iteration): per user, slope of
-    y over hourly bucket index x computed from (n, Σx, Σy, Σxy, Σx²)
-    — map-side-combined exact INTEGER sums. Overflow is ENGINEERED
-    away, not assumed (second review pass r11: 1970-based hour
-    indices squared overflow BIGINT at ~6.4k rows/key): x is rebased
-    to the data epoch (hours since 2024-01-01, ≤ ~9k for a year) so
-    the BIGINT sums are exact to ~10¹¹ rows/key, and the n·Σxy−ΣΣ
-    products run in DECIMAL(38,0) (HUGEINT on DuckDB) — exact 128-bit
-    integers on both engines to ~10¹⁵ rows/key. The slope is one
-    division of two exactly-converted doubles — the only rounding in
-    the whole query, identical on both engines. Degenerate keys (a
-    single bucket) yield NULL. The grouped applyInPandas numpy fit is
-    the slow-path twin (equivalence pinned in tests); the closed form
-    IS the 100 TB plan: one keyed exchange of five longs per key."""
-    e = _read(spark, sf_dir, "events")
-    epoch = F.lit("2024-01-01 00:00:00").cast("timestamp_ntz")
-    x = F.floor(F.timestamp_diff(
-        "SECOND", epoch, F.col("ts").cast("timestamp_ntz")) / 3600)
-    pts = (e.where(F.col("user_id") % 10 == 7)
-           .select("user_id", x.alias("x"),
-                   (F.col("event_id") % 997).alias("y")))
-    s = (pts.groupBy("user_id")
-         .agg(F.count(F.lit(1)).alias("n"), F.sum("x").alias("sx"),
-              F.sum("y").alias("sy"),
-              F.sum(F.col("x") * F.col("y")).alias("sxy"),
-              F.sum(F.col("x") * F.col("x")).alias("sxx")))
-    d38 = "decimal(38,0)"
-    den = (s["n"].cast(d38) * s["sxx"].cast(d38)
-           - s["sx"].cast(d38) * s["sx"].cast(d38))
-    num = (s["n"].cast(d38) * s["sxy"].cast(d38)
-           - s["sx"].cast(d38) * s["sy"].cast(d38))
-    return s.select(
-        "user_id", "n",
-        F.when(den == 0, F.lit(None)).otherwise(
-            num.cast("double") / den.cast("double")).alias("slope"))
-
-
-_Q209_SQL = """
-WITH pts AS (
-  SELECT user_id,
-         CAST(floor((epoch(ts) - epoch(TIMESTAMP '2024-01-01'))
-                    / 3600) AS BIGINT) AS x,
-         event_id % 997 AS y
-  FROM events WHERE user_id % 10 = 7
-), s AS (
-  SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(x) AS HUGEINT) AS sx, CAST(SUM(y) AS HUGEINT) AS sy,
-         CAST(SUM(x * y) AS HUGEINT) AS sxy,
-         CAST(SUM(x * x) AS HUGEINT) AS sxx
-  FROM pts GROUP BY user_id
-)
-SELECT user_id, n,
-       CASE WHEN n * sxx - sx * sx = 0 THEN NULL
-            ELSE CAST(n * sxy - sx * sy AS DOUBLE)
-                 / CAST(n * sxx - sx * sx AS DOUBLE) END AS slope
-FROM s
-"""
 
 
 # q216: the 8 generative IDN labels and their RFC 3490 ToASCII forms
@@ -8320,38 +7418,25 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q56_interval_join": q56_interval_join,
         "q57_vocabulary": q57_vocabulary,
         "q58_tfidf_top_terms": q58_tfidf_top_terms,
-        "q61_column_profile": q61_column_profile,
         "q62_audio_features": q62_audio_features,
-        "q63_length_outliers": q63_length_outliers,
         "q64_knn_join": q64_knn_join,
-        "q65_sample_per_group": q65_sample_per_group,
         "q66_hash_split": q66_hash_split,
         "q67_latest_per_key": q67_latest_per_key,
-        "q68_length_histogram": q68_length_histogram,
         "q69_bigram_topk": q69_bigram_topk,
         "q70_vocab_coverage": q70_vocab_coverage,
         "q71_embedding_quantize": q71_embedding_quantize,
         "q72_salted_join": q72_salted_join,
         "q73_train_shuffle": q73_train_shuffle,
         "q74_code_lookup": q74_code_lookup,
-        "q78_char_classes": q78_char_classes,
-        "q79_mix_entropy": q79_mix_entropy,
-        "q80_decile_profile": q80_decile_profile,
         "q81_dup_rate_by_source": q81_dup_rate_by_source,
-        "q82_kmeans_assign": q82_kmeans_assign,
-        "q83_quality_filter": q83_quality_filter,
         "q84_geo_distance": q84_geo_distance,
         "q85_radius_join": q85_radius_join,
         "q86_winnow_fingerprints": q86_winnow_fingerprints,
         "q87_scd2_intervals": q87_scd2_intervals,
         "q88_rare_token_share": q88_rare_token_share,
-        "q89_blocked_linkage": q89_blocked_linkage,
-        "q90_kmeans_update": q90_kmeans_update,
         "q91_user_features": q91_user_features,
         "q92_funnel": q92_funnel,
         "q93_encode_tokens": q93_encode_tokens,
-        "q94_zscore_normalize": q94_zscore_normalize,
-        "q95_temperature_mix": q95_temperature_mix,
         "q96_leakage_safe_split": q96_leakage_safe_split,
         "q97_dsir_weights": q97_dsir_weights,
         "q98_countmin_freq": q98_countmin_freq,
@@ -8376,16 +7461,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q117_model_score": q117_model_score,
         "q122_join_discovery": q122_join_discovery,
         "q123_sketch_containment": q123_sketch_containment,
-        "q124_retention_cohorts": q124_retention_cohorts,
         "q125_pagerank_step": q125_pagerank_step,
         "q126_weighted_sample": q126_weighted_sample,
         "q127_bpe_segmentation": q127_bpe_segmentation,
-        "q128_skew_audit": q128_skew_audit,
         "q129_png_roundtrip": q129_png_roundtrip,
         "q130_jpeg_roundtrip": q130_jpeg_roundtrip,
         "q131_wav_roundtrip": q131_wav_roundtrip,
         "q132_gif_roundtrip": q132_gif_roundtrip,
-        "q135_gopher_rules": q135_gopher_rules,
         "q136_temperature_mix": q136_temperature_mix,
         "q137_image_dup_pairs": q137_image_dup_pairs,
         "q138_wav_features": q138_wav_features,
@@ -8426,7 +7508,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q200_scd2_deletes": q200_scd2_deletes,
         "q203_skewed_fact_join": q203_skewed_fact_join,
         "q205_scd2_point_in_time": q205_scd2_point_in_time,
-        "q209_per_key_trend": q209_per_key_trend,
         "q216_idn_host_fold": q216_idn_host_fold,
         "q227_unicode_normalize": q227_unicode_normalize,
         "q234_strip_accents": q234_strip_accents,
@@ -8497,38 +7578,25 @@ def oracle_sql() -> dict[str, str]:
         "q56_interval_join": _Q56_SQL,
         "q57_vocabulary": _Q57_SQL,
         "q58_tfidf_top_terms": _Q58_SQL,
-        "q61_column_profile": _Q61_SQL,
         "q62_audio_features": _Q62_SQL,
-        "q63_length_outliers": _Q63_SQL,
         "q64_knn_join": _Q64_SQL,
-        "q65_sample_per_group": _Q65_SQL,
         "q66_hash_split": _Q66_SQL,
         "q67_latest_per_key": _Q67_SQL,
-        "q68_length_histogram": _Q68_SQL,
         "q69_bigram_topk": _Q69_SQL,
         "q70_vocab_coverage": _Q70_SQL,
         "q71_embedding_quantize": _Q71_SQL,
         "q72_salted_join": _Q72_SQL,
         "q73_train_shuffle": _Q73_SQL,
         "q74_code_lookup": _Q74_SQL,
-        "q78_char_classes": _Q78_SQL,
-        "q79_mix_entropy": _Q79_SQL,
-        "q80_decile_profile": _Q80_SQL,
         "q81_dup_rate_by_source": _Q81_SQL,
-        "q82_kmeans_assign": _Q82_SQL,
-        "q83_quality_filter": _Q83_SQL,
         "q84_geo_distance": _Q84_SQL,
         "q85_radius_join": _Q85_SQL,
         "q86_winnow_fingerprints": _Q86_SQL,
         "q87_scd2_intervals": _Q87_SQL,
         "q88_rare_token_share": _Q88_SQL,
-        "q89_blocked_linkage": _Q89_SQL,
-        "q90_kmeans_update": _Q90_SQL,
         "q91_user_features": _Q91_SQL,
         "q92_funnel": _Q92_SQL,
         "q93_encode_tokens": _Q93_SQL,
-        "q94_zscore_normalize": _Q94_SQL,
-        "q95_temperature_mix": _Q95_SQL,
         "q96_leakage_safe_split": _Q96_SQL,
         "q97_dsir_weights": _Q97_SQL,
         "q98_countmin_freq": _Q98_SQL,
@@ -8553,16 +7621,13 @@ def oracle_sql() -> dict[str, str]:
         "q117_model_score": _Q117_SQL,
         "q122_join_discovery": _Q122_SQL,
         "q123_sketch_containment": _q123_sql(),
-        "q124_retention_cohorts": _Q124_SQL,
         "q125_pagerank_step": _q125_sql(),
         "q126_weighted_sample": _Q126_SQL,
         "q127_bpe_segmentation": _q127_sql(),
-        "q128_skew_audit": _q128_sql(),
         "q129_png_roundtrip": _Q129_SQL,
         "q130_jpeg_roundtrip": _Q130_SQL,
         "q131_wav_roundtrip": _Q131_SQL,
         "q132_gif_roundtrip": _Q132_SQL,
-        "q135_gopher_rules": _Q135_SQL,
         "q136_temperature_mix": _Q136_SQL,
         "q137_image_dup_pairs": _Q137_SQL,
         "q138_wav_features": _Q138_SQL,
@@ -8603,7 +7668,6 @@ def oracle_sql() -> dict[str, str]:
         "q200_scd2_deletes": _Q200_SQL,
         "q203_skewed_fact_join": _Q203_SQL,
         "q205_scd2_point_in_time": _Q205_SQL,
-        "q209_per_key_trend": _Q209_SQL,
         "q216_idn_host_fold": _Q216_SQL,
         "q227_unicode_normalize": _Q227_SQL,
         "q234_strip_accents": _Q234_SQL,

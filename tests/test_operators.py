@@ -1427,49 +1427,3 @@ class TestRadiusPairs:
         with pytest.raises(ValueError, match="max_cell_size"):
             radius_pairs(df, "id", "lon", "lat", radius=1.0,
                          max_cell_size=0)
-
-
-def test_per_key_trend_closed_form_equals_apply_in_pandas(spark, sf_dir):
-    """q209's closed-form OLS (one keyed aggregate of integer
-    sufficient statistics) must equal the grouped applyInPandas
-    numpy fit — the slow-path twin a pipeline would reach for first.
-    Pins both the algebra and the claim that the aggregate IS the
-    right plan (the pandas path ships whole groups; the closed form
-    ships five longs per key). DELIBERATELY uses the 1970 epoch for x
-    while q209 rebases to 2024 (its overflow-headroom fix): the OLS
-    slope is exactly translation-invariant in integer arithmetic
-    (nΣ(x−c)y − Σ(x−c)Σy ≡ nΣxy − ΣxΣy), so equality here also pins
-    that the rebase changed nothing but headroom."""
-    import numpy as np
-    import pandas as pd
-
-    from openpolicedata_spark import workload
-
-    got = {r.user_id: (r.n, r.slope) for r in
-           workload.queries()["q209_per_key_trend"](
-               spark, sf_dir).collect()}
-
-    from openpolicedata_spark.sources.file import read_parquet_repaired
-
-    e = read_parquet_repaired(spark, f"{sf_dir}/events.parquet")
-    epoch = F.lit("1970-01-01 00:00:00").cast("timestamp_ntz")
-    x = F.floor(F.timestamp_diff(
-        "SECOND", epoch, F.col("ts").cast("timestamp_ntz")) / 3600)
-    pts = (e.where(F.col("user_id") % 10 == 7)
-           .select("user_id", x.alias("x"),
-                   (F.col("event_id") % 997).alias("y")))
-
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        xs = pdf["x"].to_numpy(dtype=np.int64)
-        ys = pdf["y"].to_numpy(dtype=np.int64)
-        n = len(xs)
-        den = n * int((xs * xs).sum()) - int(xs.sum()) ** 2
-        num = n * int((xs * ys).sum()) - int(xs.sum()) * int(ys.sum())
-        slope = None if den == 0 else float(num) / float(den)
-        return pd.DataFrame({"user_id": [pdf["user_id"].iloc[0]],
-                             "n": [n], "slope": [slope]})
-
-    want = {r.user_id: (r.n, r.slope) for r in
-            pts.groupBy("user_id").applyInPandas(
-                fit, "user_id long, n long, slope double").collect()}
-    assert got == want and len(got) > 0

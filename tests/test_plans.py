@@ -5,7 +5,6 @@ shuffle budget, JVM-only hot paths) asserted on real plans — per the
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from openpolicedata_spark import workload
 from openpolicedata_spark.plans import (
@@ -149,24 +148,6 @@ def test_q87_scd2_single_partitioning(spark, sf_dir):
     assert_no_python_in_plan(df)
 
 
-def test_q89_blocked_linkage_is_equi_join(spark, sf_dir):
-    """Blocking must turn fuzzy matching into an equi-join on the block
-    key — never a cartesian/nested-loop product of the full table."""
-    df = workload.queries()["q89_blocked_linkage"](spark, sf_dir)
-    s = summarize_plan(df)
-    assert s.n_broadcast_nl_joins == 0, s.text
-    assert "CartesianProduct" not in s.text, s.text
-    assert s.n_broadcast_joins + s.n_sortmerge_joins >= 1, s.text
-    assert_no_python_in_plan(df)
-
-
-def test_q90_kmeans_update_broadcasts_centroids(spark, sf_dir):
-    """Lloyd iteration: the K×dim centroid frame must broadcast; the
-    vector side must never shuffle for the distance join."""
-    df = workload.queries()["q90_kmeans_update"](spark, sf_dir)
-    assert_broadcast_join(df, min_joins=1)
-
-
 def test_q91_user_features_two_level_agg(spark, sf_dir):
     """Per-user features: raw events shuffle once (partial-combined per
     (user, type)); the reduce over per-type rows is the only other
@@ -201,17 +182,6 @@ def test_q88_rare_token_share_shuffle_budget(spark, sf_dir):
     df = workload.queries()["q88_rare_token_share"](spark, sf_dir)
     assert_max_exchanges(df, 5)
     assert_no_python_in_plan(df)
-
-
-def test_q94_q95_broadcast_stats_no_corpus_shuffle(spark, sf_dir):
-    """Normalization/mixing: the tiny per-source stats frames broadcast
-    back onto the scan — the corpus itself must never sort-merge."""
-    for name in ("q94_zscore_normalize", "q95_temperature_mix"):
-        df = workload.queries()[name](spark, sf_dir)
-        s = summarize_plan(df)
-        assert s.n_broadcast_joins >= 1, (name, s.text)
-        assert s.n_sortmerge_joins == 0, (name, s.text)
-        assert_no_python_in_plan(df)
 
 
 def test_q98_countmin_sketch_broadcasts_into_lookup(spark, sf_dir):
@@ -332,24 +302,6 @@ def test_q122_join_discovery_broadcasts_cardinalities(spark, sf_dir):
     assert_no_python_in_plan(df)
 
 
-def test_q128_skew_audit_no_global_window(spark, sf_dir):
-    """The top-10 must come from TakeOrderedAndProject, never an
-    un-partitioned window (which puts every distinct key on one task)."""
-    df = workload.queries()["q128_skew_audit"](spark, sf_dir)
-    t = formatted_plan(df)
-    assert "Window" not in t, t
-    assert "TakeOrderedAndProject" in t
-    assert_no_python_in_plan(df)
-
-
-def test_q135_gopher_rules_zero_exchange_no_python(spark, sf_dir):
-    """The rule table is one narrow projection: no shuffle at any scale,
-    all HOF/regex expression work, zero Python."""
-    df = workload.queries()["q135_gopher_rules"](spark, sf_dir)
-    assert_max_exchanges(df, 0)
-    assert_no_python_in_plan(df)
-
-
 def test_q136_temperature_mix_corpus_never_shuffles_rows(spark, sf_dir):
     """Rates broadcast onto the scan; the only exchanges carry 20-row
     source aggregates / partials, never corpus rows: the corpus-side
@@ -391,32 +343,6 @@ def test_q193_scd2_one_exchange_two_windows(spark, sf_dir):
     assert _n_nodes(t, "Window") == 2, t[:800]
     assert_max_exchanges(df, 1)
     assert_no_python_in_plan(df)
-
-
-def test_dynamic_partition_pruning_reaches_partition_filters(
-        spark, sf_dir, tmp_path):
-    """Dynamic partition pruning (round-10 pin): at 100 TB the fact is
-    partition-laid-out, and a selective dim filter must prune fact
-    PARTITIONS at runtime — the broadcast result feeds back into the
-    scan as a dynamicpruningexpression in PartitionFilters, so the
-    engine never lists (let alone reads) the other years' files. The
-    flat single-file testdata can't show this in the workload, so the
-    pin builds a partitioned copy once; values must equal the
-    statically filtered count."""
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    fact = o.withColumn("yr", F.year("o_orderdate"))
-    path = str(tmp_path / "orders_by_year")
-    fact.write.partitionBy("yr").parquet(path)
-    part = spark.read.parquet(path)
-    dim = spark.createDataFrame(
-        [(y, "keep" if y == 1995 else "drop") for y in range(1992, 1999)],
-        "yr int, tag string")
-    j = part.join(F.broadcast(dim.where(F.col("tag") == "keep")), "yr")
-    t = formatted_plan(j)
-    assert "dynamicpruningexpression" in t.lower(), t[:2000]
-    pf = [ln for ln in t.splitlines() if "PartitionFilters" in ln]
-    assert pf and "dynamicpruning" in pf[0], pf
-    assert j.count() == fact.where(F.col("yr") == 1995).count()
 
 
 @pytest.mark.parametrize("parts", [8, 17])
@@ -486,169 +412,6 @@ def test_q205_point_in_time_small_broadcast_one_exchange(spark, sf_dir):
     s = summarize_plan(df)
     assert s.n_exchanges <= 3, s.text
     assert_no_python_in_plan(df)
-
-
-def test_q209_trend_single_keyed_aggregate(spark, sf_dir):
-    """Per-key OLS trend (round 11): the whole fit is ONE keyed
-    aggregate of five integer sufficient statistics (map-side
-    combined) — no join, no window, no Python; the slope division is
-    a post-aggregation projection."""
-    df = workload.queries()["q209_per_key_trend"](spark, sf_dir)
-    s = summarize_plan(df)
-    assert "partial_" in s.text, s.text[:800]
-    assert s.n_broadcast_joins + s.n_sortmerge_joins == 0, s.text
-    assert_max_exchanges(df, 1)
-    assert_no_python_in_plan(df)
-
-
-def test_limit_pushes_through_unpartitioned_window(spark, sf_dir):
-    """LimitPushDownThroughWindow (round 12, plan-pin-only — the DPP
-    precedent: a bare LIMIT over a window is semantically
-    order-unspecified, so it gets no oracle query): `LIMIT k` directly
-    over an UNPARTITIONED row_number window must push a
-    TakeOrderedAndProject(limit=k) BELOW the Window — the window ranks
-    k rows, not the table, and the full Sort disappears. Excluding the
-    rule restores the global Sort, proving the pin tests the rule."""
-    from openpolicedata_spark.plans import _n_nodes
-
-    spark.read.parquet(f"{sf_dir}/orders.parquet") \
-        .createOrReplaceTempView("lpw_o")
-    q = """
-    SELECT * FROM (
-      SELECT o_orderkey,
-             row_number() OVER (ORDER BY o_totalprice DESC,
-                                o_orderkey) AS rn
-      FROM lpw_o) LIMIT 7"""
-    import re as _re
-
-    t = formatted_plan(spark.sql(q))
-    assert "TakeOrderedAndProject" in t, t[:1200]
-    assert _re.search(r"Arguments: 7, \[o_totalprice", t), t[:1200]
-    assert _n_nodes(t, "Sort") == 0, t[:1200]
-    # the TakeOrdered must be BELOW the Window: in formatted explain
-    # node ids grow leaf→root, so the pushed TakeOrdered's id is
-    # SMALLER than the Window's
-    ids = {name: int(n) for n, name in
-           _re.findall(r"\((\d+)\) (TakeOrderedAndProject|Window)\b", t)}
-    assert ids["TakeOrderedAndProject"] < ids["Window"], t[:1200]
-
-    knob = "spark.sql.optimizer.excludedRules"
-    try:
-        old = spark.conf.get(knob)
-    except Exception:
-        old = None
-    spark.conf.set(
-        knob,
-        "org.apache.spark.sql.catalyst.optimizer."
-        "LimitPushDownThroughWindow")
-    try:
-        t2 = formatted_plan(spark.sql(q))
-        assert _n_nodes(t2, "Sort") >= 1, t2[:1200]
-    finally:
-        if old is None:
-            spark.conf.unset(knob)
-        else:
-            spark.conf.set(knob, old)
-
-
-def test_static_partition_pruning_on_partitioned_writes(spark, sf_dir,
-                                                        tmp_path):
-    """Physical layout (round 13): a `partitionBy` write produces
-    hive-style dirs and a filter on the partition column must prune
-    at PLANNING time — PartitionFilters on the scan, zero
-    PushedFilters needed, and the scan only lists the one matching
-    directory (the static sibling of the pinned DPP rule; the scd2
-    sink's bkt= layout relies on exactly this)."""
-    out = str(tmp_path / "part")
-    spark.read.parquet(f"{sf_dir}/orders.parquet") \
-        .write.partitionBy("o_orderstatus").parquet(out)
-    df = spark.read.parquet(out).where(F.col("o_orderstatus") == "O") \
-        .groupBy().count()
-    t = formatted_plan(df)
-    assert "PartitionFilters" in t, t[:900]
-    import re as _re
-    m = _re.search(r"PartitionFilters: \[([^\]]*)\]", t)
-    assert m and "o_orderstatus" in m.group(1), t[:900]
-    # the partition column never reaches data filters
-    pf = _re.search(r"PushedFilters: \[([^\]]*)\]", t)
-    assert pf is None or "o_orderstatus" not in pf.group(1), t[:900]
-    # and the count only sees the 'O' partition's rows
-    n_o = (spark.read.parquet(f"{sf_dir}/orders.parquet")
-           .where("o_orderstatus = 'O'").count())
-    assert df.collect()[0][0] == n_o
-
-
-def test_tablesample_is_layout_sensitive_unlike_weighted_sample(
-        spark, sf_dir):
-    """Sampling determinism (round 13, the rule behind
-    sampling.weighted_sample's existence, now MEASURED): TABLESAMPLE
-    ... REPEATABLE(seed) is Bernoulli over the PHYSICAL row stream,
-    so the selected set changes with partitioning — repartition(13)
-    yields a different sample under the same seed — while the
-    deterministic Efraimidis-Spirakis operator selects the identical
-    rows under any layout. Seeded != deterministic at cluster scale;
-    only key-hash-derived sampling survives a layout change."""
-    from openpolicedata_spark.operators.sampling import weighted_sample
-
-    base = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    base.createOrReplaceTempView("ts_pin_o")
-    base.repartition(13).createOrReplaceTempView("ts_pin_o13")
-    q = "SELECT o_orderkey FROM {t} TABLESAMPLE (20 PERCENT) REPEATABLE (7)"
-    a = {r[0] for r in spark.sql(q.format(t="ts_pin_o")).collect()}
-    b = {r[0] for r in spark.sql(q.format(t="ts_pin_o13")).collect()}
-    assert a != b, "TABLESAMPLE unexpectedly layout-stable"
-
-    w1 = {r[0] for r in weighted_sample(
-        base, 50, "o_totalprice",
-        "o_orderkey").select("o_orderkey").collect()}
-    w2 = {r[0] for r in weighted_sample(
-        base.repartition(13), 50, "o_totalprice",
-        "o_orderkey").select("o_orderkey").collect()}
-    assert w1 == w2 and len(w1) == 50
-
-
-def test_cluster_by_is_local_sort_no_global_order(spark, sf_dir):
-    """CLUSTER BY / DISTRIBUTE BY … SORT BY (round 13, plan-pin-only
-    — their row order is UNSPECIFIED SQL, the
-    LimitPushDownThroughWindow/DPP precedent): both forms must plan
-    ONE hash-partitioning Exchange plus a PARTITION-LOCAL Sort
-    (global=false) — never a global order (range partitioning). This
-    is the pre-write layout primitive: co-locate by key, sort within
-    files, cost one shuffle."""
-    import re as _re
-
-    spark.read.parquet(f"{sf_dir}/orders.parquet") \
-        .createOrReplaceTempView("cb_pin_o")
-    for q in ("SELECT o_custkey, o_orderkey FROM cb_pin_o "
-              "CLUSTER BY o_custkey",
-              "SELECT o_custkey, o_orderkey FROM cb_pin_o "
-              "DISTRIBUTE BY o_custkey SORT BY o_orderkey"):
-        df = spark.sql(q)
-        t = formatted_plan(df)
-        from openpolicedata_spark.plans import _n_nodes
-        assert _n_nodes(t, "Sort") == 1, t[:900]
-        assert "hashpartitioning(o_custkey" in t, t[:900]
-        assert "rangepartitioning" not in t, t[:900]
-        m = _re.search(r"\(\d+\) Sort\b.*?Arguments: \[([^\]]*)\], (\w+)",
-                       t, _re.S)
-        assert m and m.group(2) == "false", (m and m.groups(), t[:900])
-        assert_max_exchanges(df, 1)
-
-
-def test_aqe_coalesces_small_shuffle_partitions(spark, sf_dir):
-    """AQE partition coalescing (round 13 — the latency knob the
-    session enables by default): a small aggregate shuffled across
-    the configured 8 partitions must coalesce at AQE time — the
-    final adaptive plan carries an AQEShuffleRead marked `coalesced`
-    — so a 3-group aggregate never schedules 8 near-empty reduce
-    tasks. At 100 TB the same rule right-sizes every stage after a
-    selective filter without hand-tuning shuffle.partitions."""
-    df = (spark.read.parquet(f"{sf_dir}/orders.parquet")
-          .groupBy("o_orderstatus").count())
-    df.collect()
-    t = df._jdf.queryExecution().executedPlan().toString()
-    assert "AQEShuffleRead" in t, t[:800]
-    assert "coalesced" in t, t[:800]
 
 
 def test_q114_knn_graph_single_subtree_symmetrize(spark, sf_dir):

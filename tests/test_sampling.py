@@ -376,6 +376,21 @@ class TestWeightedSample:
                weighted_sample(df, 1, "w", "doc_id").collect()}
         assert None not in got and len(got) == 1
 
+    def test_same_rows_after_repartition(self, spark, sf_dir):
+        """Priorities derive from the key hash, never the physical row
+        stream, so the Efraimidis-Spirakis draw selects the identical
+        rows under any layout (unlike a seeded Bernoulli TABLESAMPLE)."""
+        from openpolicedata_spark.operators.sampling import weighted_sample
+
+        base = spark.read.parquet(f"{sf_dir}/orders.parquet")
+        w1 = {r[0] for r in weighted_sample(
+            base, 50, "o_totalprice",
+            "o_orderkey").select("o_orderkey").collect()}
+        w2 = {r[0] for r in weighted_sample(
+            base.repartition(13), 50, "o_totalprice",
+            "o_orderkey").select("o_orderkey").collect()}
+        assert w1 == w2 and len(w1) == 50
+
 
 def test_write_training_shards_rejects_null_keys(spark, tmp_path):
     """ADVICE r3: a NULL key hashes to a NULL shard, which partitionBy

@@ -33,14 +33,13 @@ def main() -> None:
         "",
         "Known-intentional nested-loop joins: q39 (30-id pair-list cross",
         "product feeding the verify op — the op itself takes candidate",
-        "pairs), q63 (one-row percentile-bounds scalar subquery), q64",
+        "pairs), q64",
         "(5-row query side of the k-NN join; asserted sort-merge-free),",
         "q102/q107 (one-row percentile-boundary array broadcast",
-        "crossJoins — the no-global-window form of ntile), q95/q97/q108",
+        "crossJoins — the no-global-window form of ntile), q97/q108",
         "(one-row totals/vocab broadcast crossJoins), q123 (8-row",
         "signature OR-join + 28-pair cross — the pair/source frames are",
-        "sketch-sized by construction), q128 (six one-row",
-        "totals×top10 broadcast crossJoins — one per audited column),",
+        "sketch-sized by construction),",
         "q205 (3-row snapshot-literal broadcast for the point-in-time",
         "containment join — plan-pinned to exactly one BNLJ and ≤3",
         "exchanges; a big snapshot table routes through",
