@@ -25,14 +25,12 @@ from openpolicedata_spark.functions.datetime import (
     detect_date_format,
     parse_time_expr,
     merge_date_time_expr,
-    epoch_expr,
 )
 from openpolicedata_spark.functions.text import (
     token_count_expr,
     tokens_expr,
     quality_metrics,
     fingerprint_md5_expr,
-    rolling_hash_expr,
     shingles_expr,
     language_id_expr,
     bpe_token_count_expr,
@@ -42,7 +40,7 @@ __all__ = [
     "compile_lut", "race_expr", "ethnicity_expr", "gender_expr", "age_expr",
     "age_range_expr", "injury_expr", "fatal_expr", "firearm_expr", "role_expr",
     "to_datetime_expr", "detect_date_format", "parse_time_expr",
-    "merge_date_time_expr", "epoch_expr",
+    "merge_date_time_expr",
     "token_count_expr", "tokens_expr", "quality_metrics",
-    "fingerprint_md5_expr", "rolling_hash_expr", "shingles_expr", "language_id_expr", "bpe_token_count_expr",
+    "fingerprint_md5_expr", "shingles_expr", "language_id_expr", "bpe_token_count_expr",
 ]

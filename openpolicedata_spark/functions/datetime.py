@@ -284,16 +284,6 @@ def merge_date_time_expr(date_col: Column, time_secs: Column,
     return F.when(time_secs.isNull(), date_col.cast("timestamp")).otherwise(merged)
 
 
-def epoch_expr(col: Column, unit: str = "ms") -> Column:
-    """Esri epoch fields (reference arcgis_class.py:516-524 converts ms
-    epochs)."""
-    return (
-        F.timestamp_millis(col.cast("long"))
-        if unit == "ms"
-        else F.timestamp_seconds(col.cast("long"))
-    )
-
-
 def date_precision_row_expr(raw: Column, strategy: Optional[dict] = None) -> Column:
     """PER-ROW precision for string columns that mix full and masked dates:
     '2023-__-__' rows are year-precision, the rest day-precision."""

@@ -29,12 +29,6 @@ from pyspark.sql import functions as F
 EARTH_RADIUS_KM = 6371.0088
 
 
-def point_expr(lon: Column, lat: Column) -> Column:
-    """Pack lon/lat doubles into the engine's point struct."""
-    return F.struct(lon.cast("double").alias("lon"),
-                    lat.cast("double").alias("lat"))
-
-
 def haversine_km_expr(lon1: Column, lat1: Column,
                       lon2: Column, lat2: Column) -> Column:
     """Great-circle distance in km (haversine, spherical earth).

@@ -194,19 +194,6 @@ def fix_mojibake_expr(col: Column) -> Column:
     return out
 
 
-def rolling_hash_expr(col: Column, base: int = 257, mod: int = 1_000_000_007) -> Column:
-    """Polynomial rolling hash of the normalized text (Rabin-Karp style),
-    computed with F.aggregate over the character codes — deterministic,
-    order-sensitive, no UDF. `mod` kept < 2^55/base so `acc*base+c` never
-    overflows a long (Spark 4 runs ANSI arithmetic)."""
-    chars = F.split(normalize_text_expr(col), "")
-    return F.aggregate(
-        F.transform(chars, lambda c: F.ascii(c).cast("long")),
-        F.lit(0).cast("long"),
-        lambda acc, c: ((acc * base) + c) % F.lit(mod),
-    )
-
-
 def shingles_expr(col: Column, k: int = 5) -> Column:
     """Word k-shingles (k consecutive tokens joined by space) — the unit set
     for MinHash / Jaccard dedup. Expression-only: sequence + transform +

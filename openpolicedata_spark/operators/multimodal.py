@@ -487,13 +487,6 @@ def vad_segments(df: DataFrame, frame_samples: int = 80,
         compute, schema=VAD_SEGMENTS_SCHEMA)
 
 
-MP3_SCAN_FIELDS = ("n_frames long, sample_rate long, "
-                   "duration_ms long, audio_bytes long, "
-                   "first_frame_offset long, bitrate_min_kbps long, "
-                   "bitrate_max_kbps long, bitrate_sum_kbps long, "
-                   "is_vbr boolean")
-
-
 def mp3_scan(df: DataFrame, content_col: str = "content",
              id_col: str = "media_id") -> DataFrame:
     """Metadata-only mp3 scan (`sources.mp3.mp3_stats` — ID3v2 skip +

@@ -13,12 +13,15 @@ DataFrame and sheets concatenate with
 stdlib readers — ``sources/xlsx`` (.xlsx), ``sources/xls`` (legacy BIFF)
 and ``sources/msoffice_crypto`` (VelvetSweatshop decryption) — whatever
 else is installed; everything after the raw grid is tested on plain
-DataFrames.
+DataFrames. A remote workbook, plain or inside a zip, is fetched once per
+loader through ``sources/httpio`` (the package's one remote-read path);
+the readers always see a local spool file.
 """
 
 from __future__ import annotations
 
 import difflib
+import functools
 import re
 from typing import Optional
 
@@ -26,6 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from openpolicedata_spark.sources import httpio
 from openpolicedata_spark.sources.base import (
     DataLoader,
     DateInput,
@@ -206,70 +210,22 @@ class ExcelLoader(DataLoader):
     def isfile(self) -> bool:
         return True
 
-    def _workbook_from_zip(self):
-        """Workbook bytes out of a zip archive. Remote archives read the
-        one member over HTTP Range requests (sources/httpio, the
-        reference's UrlIoContextManager+ZipFile path) and fall back to a
-        full download when the server can't serve ranges."""
-        import io
-        import zipfile
-
-        def pick(names: list[str]) -> str:
-            if "[Content_Types].xml" in names:
-                # the ".zip" in the URL was part of the workbook's own
-                # name: an .xlsx IS a zip (OOXML package) — treat the
-                # whole archive as the workbook, not as a container
-                return None
-            if self.member:
-                if self.member in names:
-                    return self.member
-                base = self.member.lower()
-                hits = [n for n in names
-                        if n.rsplit("/", 1)[-1].lower() == base]
-                if len(hits) != 1:
-                    raise ValueError(
-                        f"Unable to find file {self.member} in {self.url}")
-                return hits[0]
-            if len(names) > 1:
-                raise ValueError(
-                    f"More than one file found in zip file at {self.url}."
-                    " One file must be specified if there is more than"
-                    " one file.")
-            if not names:
-                raise ValueError(f"empty zip archive at {self.url}")
-            return names[0]
-
-        def extract(z: "zipfile.ZipFile", whole) -> "io.BytesIO":
-            member = pick(z.namelist())
-            if member is None:
-                return whole()          # the archive IS the workbook
-            return io.BytesIO(z.read(member))
-
-        if self.url.startswith(("http://", "https://")):
-            from openpolicedata_spark.sources.httpio import (
-                HttpIOError,
-                HttpRangeFile,
-            )
-
-            try:
-                with HttpRangeFile(self.url, block_size=256 * 1024) as f:
-                    with zipfile.ZipFile(f) as z:
-                        got = extract(
-                            z, lambda: (f.seek(0), io.BytesIO(f.read()))[1])
-                    return got
-            except HttpIOError:
-                import urllib.request
-
-                req = urllib.request.Request(
-                    self.url, headers={"User-Agent": "Mozilla/5.0"})
-                with urllib.request.urlopen(req) as r:
-                    blob = io.BytesIO(r.read())
-                with zipfile.ZipFile(blob) as z:
-                    return extract(
-                        z, lambda: io.BytesIO(blob.getvalue()))
-        with zipfile.ZipFile(self.url) as z:
-            return extract(
-                z, lambda: io.BytesIO(open(self.url, "rb").read()))
+    @functools.cached_property
+    def _workbook(self) -> str:
+        """Local path of the workbook, fetched once per loader through
+        sources/httpio: a URL downloads into the spool; a ".zip" archive
+        yields its ``member``, or its only file (reference excel.py:69-82),
+        over HTTP ranges when remote. An archive holding
+        ``[Content_Types].xml`` is itself the workbook (an .xlsx is an
+        OOXML zip whose own name contained ".zip")."""
+        if ".zip" in self.url.lower():
+            with httpio.open_zip(self.url) as z:
+                names = z.namelist()
+                if "[Content_Types].xml" not in names:
+                    name = httpio.pick_member(names, self.member, self.url)
+                    with z.open(name) as src:
+                        return httpio.spool(src, name)
+        return httpio.local_copy(self.url)
 
     @staticmethod
     def _maybe_decrypt(path_or_buf):
@@ -307,9 +263,7 @@ class ExcelLoader(DataLoader):
     def _raw_sheets(self) -> dict[str, pd.DataFrame]:
         if self._sheets is not None:
             return self._sheets
-        source = (self._workbook_from_zip()
-                  if ".zip" in self.url.lower() else self.url)
-        src = self._maybe_decrypt(source)
+        src = self._maybe_decrypt(self._workbook)
         # legacy BIFF sniff: a plain .xls is a CFB container (an encrypted
         # workbook has already been decrypted to OOXML zip bytes above)
         if isinstance(src, str):

@@ -8,12 +8,18 @@ pandas reader; date/agency filters become Catalyst predicates pushed into the
 scan (PushedFilters), so the reference's "local filter after read"
 (csv_class.py:377-379) costs nothing extra. The reference's quote-aware
 streaming row counter (csv_class.py:90-127) is unnecessary — `df.count()`
-is a scan-only job. Zip/remote-URL prefetch is a driver-side download step.
+is a scan-only job. Remote URLs and zip members are fetched on the driver
+through sources/httpio (the package's one remote-read path) into its spool,
+once per loader; Spark then reads the local copy.
 """
 
 from __future__ import annotations
 
+import functools
 import os
+import shutil
+import tempfile
+import zipfile
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -133,7 +139,7 @@ class JsonLoader(_FileLoader):
 
 class CsvLoader(_FileLoader):
     """CSV scan (reference csv_class.py:130-420). Local/`file://` paths read
-    distributed; remote URLs are prefetched to a local spool path on the
+    distributed; remote URLs are fetched to a local spool path on the
     driver then read distributed (the reference streams bytes through pandas
     on one thread)."""
 
@@ -145,165 +151,52 @@ class CsvLoader(_FileLoader):
         # csv_class.py:64-70 reads just that member over HTTP ranges)
         self.member = member
 
-    def _prefetch_member(self, url: str) -> Optional[str]:
-        """Range-request path for one member of a remote zip (reference
-        csv_class.py:64-70 via httpio): fetch only the central directory
-        + that member's span instead of the whole archive. Returns the
-        spooled path, or None when the server can't serve ranges (caller
-        falls back to the full-download path)."""
-        import hashlib
+    @functools.cached_property
+    def _path(self) -> str:
+        """The local path Spark reads, fetched once per loader through
+        sources/httpio: a URL downloads into the spool; a ``.zip`` yields
+        its ``member`` (over HTTP ranges when remote) or, with no member,
+        every CSV inside it (reference csv_class.py:64-87)."""
+        from openpolicedata_spark.sources import httpio
 
-        from openpolicedata_spark.sources.httpio import (
-            HttpIOError,
-            fetch_zip_member,
-        )
-
-        spool = os.path.join("/tmp", "opdspark_spool")
-        os.makedirs(spool, exist_ok=True)
-        key = hashlib.sha1(f"{url}|{self.member}".encode()).hexdigest()
-        dest = os.path.join(spool, key + ".csv")
-        if os.path.exists(dest):
-            return dest
-        try:
-            # 256 KiB blocks: zipfile's access pattern is the EOCD tail
-            # scan plus one member span — big blocks mostly fetch bytes
-            # the extraction never touches
-            data = fetch_zip_member(url, self.member,
-                                    block_size=256 * 1024)
-        except HttpIOError:
-            return None          # no range support: full download instead
-        tmp = f"{dest}.part.{os.getpid()}.{id(self)}"
-        try:
-            with open(tmp, "wb") as f:
-                f.write(data)
-            os.replace(tmp, dest)
-        except BaseException:
-            if os.path.exists(tmp):
-                os.remove(tmp)
-            raise
-        return dest
-
-    def _prefetch(self) -> str:
-        url = self.url
-        if url.startswith(("http://", "https://")):
-            if self.member and url.lower().endswith(".zip"):
-                got = self._prefetch_member(url)
-                if got is not None:
-                    return got
-            import hashlib
-            import urllib.request
-
-            spool = os.path.join("/tmp", "opdspark_spool")
-            os.makedirs(spool, exist_ok=True)
-            ext = ".zip" if url.lower().endswith(".zip") else ".csv"
-            dest = os.path.join(spool, hashlib.sha1(url.encode()).hexdigest() + ext)
-            if not os.path.exists(dest):
-                # Browser-ish UA fallback mirrors reference csv_class.py.
-                # Download to a temp path and rename on success — a
-                # mid-download failure must never leave a partial file the
-                # cache check would treat as complete (same discipline as
-                # _unzip below).
-                req = urllib.request.Request(url, headers={"User-Agent": "Mozilla/5.0"})
-                # UNIQUE temp name per fetch: two concurrent loads of the
-                # same URL must not interleave writes into one .part file
-                # and promote corrupt bytes into the cache (os.replace
-                # below stays atomic; last complete download wins)
-                tmp = f"{dest}.part.{os.getpid()}.{id(self)}"
-
-                def _fetch(ctx=None):
-                    with urllib.request.urlopen(req, context=ctx) as r, \
-                            open(tmp, "wb") as f:
-                        f.write(r.read())
-
-                try:
-                    try:
-                        _fetch()
-                    except Exception as e:  # legacy-SSL retry below
-                        if ("SSL" not in type(e).__name__
-                                and "ssl" not in str(e).lower()):
-                            raise
-                        # Legacy-renegotiation fallback (reference
-                        # csv_class.py: old municipal portals run TLS
-                        # stacks OpenSSL 3 rejects by default — retry once
-                        # with OP_LEGACY_SERVER_CONNECT + relaxed seclevel)
-                        import ssl
-
-                        ctx = ssl.create_default_context()
-                        ctx.options |= getattr(ssl, "OP_LEGACY_SERVER_CONNECT", 0x4)
-                        try:
-                            ctx.set_ciphers("DEFAULT@SECLEVEL=1")
-                        except ssl.SSLError:
-                            pass
-                        _fetch(ctx)
-                    os.replace(tmp, dest)
-                except BaseException:
-                    if os.path.exists(tmp):
-                        os.remove(tmp)
-                    raise
-            url = dest
-        if url.lower().endswith(".zip"):
-            url = self._unzip(url)
-            if self.member:
-                # full-download fallback still selects just the member
-                # (basename-tolerant, matching fetch_zip_member)
-                base = os.path.basename(self.member).lower()
-                hits = [f for f in sorted(os.listdir(url))
-                        if f.lower() == base
-                        or f.lower().endswith("__" + base)]
-                if len(hits) != 1:
-                    raise ValueError(
-                        f"zip member {self.member!r} not found in "
-                        f"{self.url} (extracted: {sorted(os.listdir(url))})")
-                url = os.path.join(url, hits[0])
-        return url
+        if not self.url.lower().endswith(".zip"):
+            return httpio.local_copy(self.url)
+        if self.member:
+            with httpio.open_zip(self.url) as z:
+                name = httpio.pick_member(z.namelist(), self.member, self.url)
+                with z.open(name) as src:
+                    return httpio.spool(src, name)
+        return self._unzip(httpio.local_copy(self.url))
 
     @staticmethod
     def _unzip(path: str) -> str:
-        """Zipped CSV support (reference csv_class.py:64-87): extract the
-        single inner CSV to the spool dir; multi-member archives extract
-        every CSV into one directory (Spark reads the directory)."""
-        import hashlib
-        import zipfile
+        """Every CSV member of a local archive, extracted into a new spool
+        directory that Spark reads whole."""
+        from openpolicedata_spark.sources.httpio import SPOOL_DIR
 
-        spool = os.path.join("/tmp", "opdspark_spool",
-                             hashlib.sha1(path.encode()).hexdigest())
-        if not os.path.exists(spool):
-            # Extract into a temp dir and atomically rename into place, so a
-            # mid-extraction failure never leaves a partial dir that later
-            # calls would treat as a complete cached extraction.
-            import shutil
-            import tempfile
-
-            os.makedirs(os.path.dirname(spool), exist_ok=True)
-            tmp = tempfile.mkdtemp(dir=os.path.dirname(spool) or "/tmp")
-            try:
-                with zipfile.ZipFile(path) as z:
-                    members = [m for m in z.namelist()
-                               if m.lower().endswith(".csv") and not m.endswith("/")]
-                    if not members:
-                        raise ValueError(f"no CSV member inside {path}")
-                    seen: set[str] = set()
-                    for m in members:
-                        base = os.path.basename(m)
-                        if base in seen:
-                            # disambiguate equal basenames from different
-                            # subdirs instead of silently overwriting
-                            base = m.replace("/", "__")
-                        seen.add(base)
-                        with z.open(m) as src, \
-                                open(os.path.join(tmp, base), "wb") as out:
-                            out.write(src.read())
-            except BaseException:
-                shutil.rmtree(tmp, ignore_errors=True)
-                raise
-            try:
-                os.rename(tmp, spool)
-            except OSError:
-                # lost the rename race to a concurrent extractor: theirs wins
-                shutil.rmtree(tmp, ignore_errors=True)
-                if not os.path.isdir(spool):
-                    raise
-        return spool
+        os.makedirs(SPOOL_DIR, exist_ok=True)
+        out = tempfile.mkdtemp(dir=SPOOL_DIR)
+        try:
+            with zipfile.ZipFile(path) as z:
+                members = [m for m in z.namelist()
+                           if m.lower().endswith(".csv") and not m.endswith("/")]
+                if not members:
+                    raise ValueError(f"no CSV member inside {path}")
+                seen: set[str] = set()
+                for m in members:
+                    base = os.path.basename(m)
+                    if base in seen:
+                        # disambiguate equal basenames from different
+                        # subdirs instead of silently overwriting
+                        base = m.replace("/", "__")
+                    seen.add(base)
+                    with z.open(m) as src, \
+                            open(os.path.join(out, base), "wb") as dst:
+                        shutil.copyfileobj(src, dst)
+        except BaseException:
+            shutil.rmtree(out, ignore_errors=True)
+            raise
+        return out
 
     @staticmethod
     def _detect_charset(path: str, sample_bytes: int = 1 << 20) -> str:
@@ -336,7 +229,7 @@ class CsvLoader(_FileLoader):
             return "UTF-8"
 
     def _read(self) -> DataFrame:
-        path = self._prefetch()
+        path = self._path
         return self.spark.read.csv(path, header=self.header,
                                    inferSchema=True,
                                    encoding=self._detect_charset(path))

@@ -2,7 +2,9 @@
 
 Parity: /root/reference/openpolicedata/data_loaders/html.py:10-194 —
 `pd.read_html` with a browser UA, exactly one table expected, then the
-standard local date/agency filter. Driver-side parse (HTML tables are
+standard local date/agency filter. A remote page is read through
+``sources/httpio.open_url`` (the package's one remote-read path: browser
+UA, timeout, legacy-TLS retry). Driver-side parse (HTML tables are
 small) → ``spark.createDataFrame``. The page parses with the stdlib
 ``sources/htmltable`` reader, whatever else is installed; tests may
 inject pre-parsed tables.
@@ -16,6 +18,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from openpolicedata_spark.sources import httpio
 from openpolicedata_spark.sources.base import (
     DataLoader,
     DateInput,
@@ -42,18 +45,13 @@ class HtmlLoader(DataLoader):
 
     def _fetch(self) -> str:
         """Page bytes → text. Local paths read directly; http(s) URLs go
-        through urllib with a browser UA (reference html.py sends one —
-        agency sites 403 the default Python UA)."""
-        url = str(self.url)
-        if url.startswith(("http://", "https://")):
-            import urllib.request
-
-            req = urllib.request.Request(
-                url, headers={"User-Agent": "Mozilla/5.0"})
-            with urllib.request.urlopen(req, timeout=60) as resp:
+        through sources/httpio (browser UA: agency sites 403 the default
+        Python UA, as reference html.py knows)."""
+        if httpio.is_url(self.url):
+            with httpio.open_url(self.url, httpio.TIMEOUT_S) as resp:
                 charset = resp.headers.get_content_charset() or "utf-8"
                 return resp.read().decode(charset, errors="replace")
-        with open(url, encoding="utf-8", errors="replace") as f:
+        with open(self.url, encoding="utf-8", errors="replace") as f:
             return f.read()
 
     def _parse(self) -> pd.DataFrame:

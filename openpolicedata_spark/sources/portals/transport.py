@@ -12,6 +12,10 @@ picklable Transport object so that
 
 Retry/backoff constants mirror the reference (data_loader.py:35,
 arcgis_class.py:461-476: 0.1 s politeness sleep, 2-10 s backoff on 429/5xx).
+Each attempt opens its URL through ``sources/httpio.open_url``, the
+package's one request function (browser UA, legacy-TLS retry), with the
+transport's own ``timeout_s``; a timed-out attempt is retried like a
+refused connection.
 """
 
 from __future__ import annotations
@@ -20,20 +24,14 @@ import json
 import time
 import urllib.error
 import urllib.parse
-import urllib.request
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Any, Callable, Optional
-
-_BROWSER_UA = (
-    "Mozilla/5.0 (X11; Linux x86_64) AppleWebKit/537.36 "
-    "(KHTML, like Gecko) Chrome/120.0 Safari/537.36"
-)
-
 
 from openpolicedata_spark.exceptions import (
     OPD_DataUnavailableError,
     OPD_TooManyRequestsError,
 )
+from openpolicedata_spark.sources.httpio import open_url
 
 
 class TransportError(OPD_DataUnavailableError):
@@ -59,7 +57,6 @@ class HttpTransport:
     retries: int = 3
     backoff_s: float = 2.0           # reference arcgis_class.py:471-475
     sleep_s: float = 0.1             # reference data_loader.py:35
-    headers: dict = field(default_factory=dict)
 
     def get_json(self, url: str, params: Optional[dict] = None) -> Any:
         raw = self.get_bytes(url, params)
@@ -81,16 +78,13 @@ class HttpTransport:
             elif self.sleep_s:
                 time.sleep(self.sleep_s)
             try:
-                req = urllib.request.Request(
-                    url, headers={"User-Agent": _BROWSER_UA, **self.headers}
-                )
-                with urllib.request.urlopen(req, timeout=self.timeout_s) as r:
+                with open_url(url, self.timeout_s) as r:
                     return r.read()
             except urllib.error.HTTPError as e:
                 last = e
                 if e.code not in (429, 500, 502, 503, 504):
                     raise TransportError(f"HTTP {e.code} from {url}") from e
-            except urllib.error.URLError as e:
+            except (urllib.error.URLError, TimeoutError) as e:
                 last = e
         if getattr(last, "code", None) == 429:
             raise RateLimitError(

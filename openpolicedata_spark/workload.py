@@ -5929,7 +5929,6 @@ def q187_mp3_free_format(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from openpolicedata_spark.operators.dedup import rebalance
     from openpolicedata_spark.operators.multimodal import mp3_scan
-    from openpolicedata_spark.sources.mp3 import MP3_SAMPLE_RATES_BY_VERSION
 
     d = _read(spark, sf_dir, "documents")
     ver_bits_by_vidx = (3, 2, 0)   # MPEG-1, MPEG-2, MPEG-2.5

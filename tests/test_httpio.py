@@ -378,3 +378,118 @@ def test_excel_loader_remote_xlsx_named_dot_zip(spark, serve):
 
     srv, url = serve(make_xlsx(_SHEET))  # url ends .zip but IS an xlsx
     assert ExcelLoader(spark, url=url).load().count() == 2
+
+
+# ------------------------------------------------- one remote-read path
+
+def test_only_httpio_opens_urls():
+    """Every URL the package opens goes through sources/httpio: no other
+    module names `urlopen`, so UA, timeout and TLS policy live in one
+    place."""
+    import ast
+    import pathlib
+
+    import openpolicedata_spark
+
+    root = pathlib.Path(openpolicedata_spark.__file__).parent
+    openers = []
+    for py in sorted(root.rglob("*.py")):
+        rel = py.relative_to(root).as_posix()
+        for node in ast.walk(ast.parse(py.read_text())):
+            name = (node.id if isinstance(node, ast.Name)
+                    else node.attr if isinstance(node, ast.Attribute)
+                    else None)
+            aliases = ([a.name for a in node.names]
+                       if isinstance(node, (ast.Import, ast.ImportFrom))
+                       else [])
+            if name == "urlopen" or "urlopen" in aliases:
+                openers.append(rel)
+                break
+    assert [m for m in openers if m != "sources/httpio.py"] == [], openers
+
+
+def test_excel_loader_remote_plain_workbook(spark, serve):
+    """A workbook URL without ".zip" downloads and parses like a local
+    file."""
+    from tests.test_native_parsers import make_xlsx
+
+    from openpolicedata_spark.sources.excel import ExcelLoader
+
+    srv, url = serve(make_xlsx(_SHEET))
+    url = url.replace("/data.zip", "/a.xlsx")
+    assert ExcelLoader(spark, url=url).load().count() == 2
+
+
+def test_changed_remote_csv_reaches_a_new_loader(spark, serve):
+    """One loader downloads once; a new loader over the same URL sees the
+    publisher's new bytes, and a Table from the first keeps its own."""
+    from openpolicedata_spark.sources.file import CsvLoader
+
+    srv, url = serve(b"a,b\n1,2\n3,4\n")
+    url = url.replace("/data.zip", "/data.csv")
+    first = CsvLoader(spark, url=url)
+    old = first.load()
+    assert sorted(int(r.a) for r in old.collect()) == [1, 3]
+    assert first.load().count() == 2
+    assert srv.n_requests == 1
+    srv.blob = b"a,b\n5,6\n7,8\n9,10\n"
+    new = CsvLoader(spark, url=url).load()
+    assert sorted(int(r.a) for r in new.collect()) == [5, 7, 9]
+    assert sorted(int(r.a) for r in old.collect()) == [1, 3]
+
+
+@pytest.fixture
+def stalled_url():
+    """A URL whose server accepts the connection (the kernel's listen
+    backlog) and never answers."""
+    import socket
+
+    sock = socket.socket()
+    sock.bind(("127.0.0.1", 0))
+    sock.listen(4)
+    yield f"http://127.0.0.1:{sock.getsockname()[1]}/data.csv"
+    sock.close()
+
+
+def _raises_within(fn, seconds: float):
+    """Run fn in a daemon thread; return what it raised, failing the test
+    when it is still blocked after `seconds`."""
+    out = {}
+
+    def run():
+        try:
+            fn()
+        except BaseException as e:  # noqa: BLE001 - handed to the test
+            out["error"] = e
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(seconds)
+    assert not t.is_alive(), f"still blocked after {seconds} s"
+    assert "error" in out, "returned instead of raising"
+    return out["error"]
+
+
+def test_csv_load_from_stalled_server_times_out(spark, stalled_url,
+                                                monkeypatch):
+    import urllib.error
+
+    from openpolicedata_spark.sources import httpio
+    from openpolicedata_spark.sources.file import CsvLoader
+
+    monkeypatch.setattr(httpio, "TIMEOUT_S", 1.0)
+    err = _raises_within(CsvLoader(spark, url=stalled_url).load, 10)
+    assert isinstance(err, (TimeoutError, urllib.error.URLError)), err
+
+
+def test_transport_retries_a_timed_out_request(stalled_url):
+    """A portal request that times out is transient, like a refused
+    connection: retried, then a TransportError."""
+    from openpolicedata_spark.sources.portals.transport import (
+        HttpTransport,
+        TransportError,
+    )
+
+    t = HttpTransport(timeout_s=0.5, retries=1, backoff_s=0.01, sleep_s=0)
+    err = _raises_within(lambda: t.get_bytes(stalled_url), 10)
+    assert isinstance(err, TransportError), err

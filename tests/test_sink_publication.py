@@ -445,12 +445,11 @@ def test_rebucket_scd2_fault_leaves_table_readable(spark, tmp_path, fault):
     assert versions() == before and stamp() == 3
 
 
-# sites allowed outside the commit module: sources/file.py's download
-# cache moves a fully written temp file over its cache entry with one
-# rename (no directory, no Spark write, nothing to stage or recover)
-EXEMPT = {("sources/file.py", "CsvLoader._prefetch_member", "os.replace"),
-          ("sources/file.py", "CsvLoader._prefetch", "os.replace"),
-          ("sources/file.py", "CsvLoader._unzip", "os.rename")}
+# the one site allowed outside the commit module: sources/httpio.py's
+# download spool moves a fully written temp file to its content-addressed
+# name with one rename (no directory, no Spark write, nothing to stage or
+# recover)
+EXEMPT = {("sources/httpio.py", "spool", "os.replace")}
 
 
 def _publication_sites(tree):
