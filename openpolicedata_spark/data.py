@@ -581,8 +581,15 @@ class Source:
     ) -> Table:
         """Main query path (reference data.py:1165-1219 → __load
         data.py:1372-1436): catalog row → loader → filtered DataFrame →
-        Table. Runs no Spark job, except a portal load with
-        ``sortby="date"``, whose sort runs when the snapshot is bound.
+        Table. The filtered rows are read at the first action, not here.
+        The jobs a load can run:
+        - a file loader's first date-filtered load classifies a date column
+          that is not a native timestamp with one sample job (at most 1000
+          rows, `detect_date_format`, memoized per loader); a native column
+          costs none;
+        - a CSV read infers its schema (Spark's own jobs);
+        - a portal load with ``sortby="date"`` sorts when the snapshot is
+          bound.
 
         A file-backed table is the loader's native scan: every action
         re-reads the files, and later filters on ``Table.table`` still

@@ -1,5 +1,6 @@
 """Date/time parsing engine: driver-side format detection over samples +
-vectorized Column expressions for the bulk conversion.
+vectorized Column expressions for the bulk conversion, and the one
+date-range predicate every loader filters with (`date_range_filter`).
 
 Parity target: /root/reference/openpolicedata/datetime_parser.py —
 `to_datetime` recovery branches (:530-757), `parse_date_to_datetime` numeric
@@ -15,6 +16,7 @@ string) pairs — see ``PERIOD_PRECISIONS``.
 
 from __future__ import annotations
 
+import datetime as _dt
 import re
 from typing import Optional
 
@@ -29,6 +31,7 @@ PERIOD_PRECISIONS = ("day", "month", "quarter", "year")
 STRING_FORMATS: list[tuple[str, str]] = [
     # (regex on the raw string, Spark datetime pattern)
     (r"^\d{4}-\d{2}-\d{2}[T ]\d{2}:\d{2}:\d{2}", "yyyy-MM-dd HH:mm:ss"),
+    (r"^\d{4}-\d{2}-\d{2}[T ]\d{2}:\d{2}$", "yyyy-MM-dd['T'][ ]HH:mm"),
     (r"^\d{4}-\d{2}-\d{2}$", "yyyy-MM-dd"),
     (r"^\d{4}/\d{2}/\d{2}$", "yyyy/MM/dd"),
     (r"^\d{1,2}/\d{1,2}/\d{4} \d{1,2}:\d{2}:\d{2}", "M/d/yyyy H:mm:ss"),
@@ -37,8 +40,9 @@ STRING_FORMATS: list[tuple[str, str]] = [
     (r"^\d{1,2}-\d{1,2}-\d{4}$", "M-d-yyyy"),
     (r"^\d{1,2}/\d{1,2}/\d{2}$", "M/d/yy"),
     (r"^\d{8}$", "yyyyMMdd"),
-    (r"^[A-Za-z]{3} \d{1,2}, \d{4}$", "MMM d, yyyy"),
-    (r"^[A-Za-z]{3,9} \d{1,2}, \d{4}$", "MMMM d, yyyy"),
+    # 'Jan 31, 2022' / 'Jan. 31 2022' / 'January 31 2022'
+    (r"^[A-Za-z]{3,9}\.? \d{1,2},? \d{4}$", "MMM[.] d[,] yyyy"),
+    (r"^[A-Za-z]{3,9}\.? \d{1,2},? \d{4}$", "MMMM[.] d[,] yyyy"),
     (r"^\d{1,2} [A-Za-z]{3} \d{4}$", "d MMM yyyy"),
     # '11/05/2025 1430 hours' (reference datetime_parser.py:562-571)
     (r"(?i)^\d{1,2}/\d{1,2}/\d{4} \d{3,4} *(hours|hrs)\.?$", "__hours__"),
@@ -66,10 +70,11 @@ def _classify_numeric(vals: list[int]) -> Optional[str]:
         return "yyyymmdd"
     if all(10**7 <= v < 10**8 and ok_mmddyyyy(v) for v in vals):
         return "mmddyyyy"
-    # epoch ranges: seconds ~ [1980, 2100] → [3.2e8, 4.1e9]; ms 1000×
+    # epoch ranges: seconds ~ [1980, 2100] → [3.2e8, 4.1e9]; ms from 1e10
+    # (past any real date in seconds) to 2100
     if all(3 * 10**8 < v < 4.2 * 10**9 for v in vals):
         return "epoch_s"
-    if all(3 * 10**11 < v < 4.2 * 10**12 for v in vals):
+    if all(10**10 < v < 4.2 * 10**12 for v in vals):
         return "epoch_ms"
     return None
 
@@ -97,9 +102,11 @@ def _strategy_from_values(dtype: str, vals: list) -> dict:
     of a column whose Spark type string is `dtype`. The vote depends on
     the multiset of values, not their order."""
     if dtype in ("int", "bigint", "smallint", "double", "float"):
-        ints = [int(v) for v in vals if v is not None]
-        kind = _classify_numeric(ints)
-        return {"kind": kind or "unknown"}
+        vals = [int(v) for v in vals if v is not None]
+        kind = _classify_numeric(vals)
+        if kind:
+            return {"kind": kind}
+        # no numeric reading (20220000: unknown day): the digits vote as text
     # string column: vote across candidate formats
     fmts: list[str] = []
     svals = [str(v).strip() for v in vals if str(v).strip()]
@@ -316,19 +323,37 @@ def period_overlap_filter(date_col: Column, precision_col: Column,
                           start: str, stop: str) -> Column:
     """Filter respecting period semantics: a year-precision value
     2020-01-01 matches any range intersecting calendar-2020 (reference
-    interval containment, data.py:1337-1356). The period END is
-    date + precision-length - 1s; overlap = p_start <= stop AND
-    p_end >= start. Day precision degenerates to a plain between."""
-    start_ts = F.lit(start).cast("timestamp_ntz")
-    stop_ts = F.lit(stop).cast("timestamp_ntz")
+    interval containment, data.py:1337-1356). ``start``/``stop`` are days,
+    stop inclusive: a period ``[p, p + length)`` overlaps when
+    ``p < stop + 1 day AND p + length > start``; a day-precision value is a
+    point, ``start <= p < stop + 1 day``."""
+    start_ts = F.lit(start).cast("date").cast("timestamp_ntz")
+    stop_excl = F.date_add(F.lit(stop).cast("date"), 1).cast("timestamp_ntz")
     months = F.coalesce(
         *[F.when(precision_col == k, F.lit(v))
           for k, v in _PRECISION_MONTHS.items()],
         F.lit(0),
     )
-    p_end = F.when(
-        months > 0,
-        F.timestamp_add("SECOND", F.lit(-1),
-                        F.timestamp_add("MONTH", months, date_col)),
-    ).otherwise(F.timestamp_add("SECOND", F.lit(86399), date_col))
-    return (date_col <= stop_ts) & (p_end >= start_ts)
+    after_start = F.when(
+        months > 0, F.timestamp_add("MONTH", months, date_col) > start_ts,
+    ).otherwise(date_col >= start_ts)
+    return (date_col < stop_excl) & after_start
+
+
+def date_range_filter(col: Column, strategy: dict,
+                      rng: list[_dt.datetime]) -> Column:
+    """The loaders' one date-range predicate: ``col``, stored as the
+    `detect_date_format` ``strategy`` says, within ``rng = [start, stop]``
+    (`clean_date_input` days, stop inclusive). A native column compares raw,
+    ``col >= start AND col < stop + 1 day``, so it stays a pushed scan
+    filter; any other column is parsed (`to_datetime_expr`) and matched by
+    `period_overlap_filter`."""
+    start, stop = rng
+    if strategy.get("kind") == "native":
+        return (col >= F.lit(start)) & (
+            col < F.lit(stop + _dt.timedelta(days=1)))
+    precision = (date_precision_row_expr(col, strategy)
+                 if strategy.get("masked") else date_precision_expr(strategy))
+    return period_overlap_filter(to_datetime_expr(col, strategy), precision,
+                                 start.strftime("%Y-%m-%d"),
+                                 stop.strftime("%Y-%m-%d"))

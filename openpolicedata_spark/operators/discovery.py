@@ -85,7 +85,12 @@ def sketch_containment(columns: Sequence[ColumnSpec],
     union bottom-k and the |∩|/min(k,|u|) estimator. Deterministic
     integer/float arithmetic an external SQL oracle replays exactly
     (q123 pins it). Output: (src_a, src_b, u_size, shared,
-    est_jaccard)."""
+    est_jaccard).
+
+    The call itself runs Spark jobs: the signature is bound with
+    ``localCheckpoint(eager=False)``, and under AQE planning that binding
+    runs the shuffle stages below it (the distinct and the per-column
+    window sort), before any action on the result."""
     from openpolicedata_spark.functions.text import md5lower64_expr
 
     vals = _tall_distinct(
@@ -167,7 +172,9 @@ def join_key_discovery(
     discovery to the k-bounded sketch. `mode='exact'` / `mode='sketch'`
     force a path (the workload's q122/q123 pin each against its own
     oracle). The two paths rank pairs identically; exact additionally
-    reports true containment directions."""
+    reports true containment directions. The sketch path runs its
+    signature's shuffle stages at call time (`sketch_containment`), and
+    `mode='auto'` runs the distinct-count probe (one job per table)."""
     if mode == "exact":
         return exact_containment(columns)
     if mode == "sketch":

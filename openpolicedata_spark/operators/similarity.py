@@ -209,7 +209,6 @@ def embedding_dup_pairs(
     id_col: str = "vec_id",
     bands: int = 1,
     max_bucket_size: Optional[int] = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Embedding-cosine near-dup: bucket self-join then exact cosine verify —
     same blocking pattern as MinHash LSH but in embedding space.
@@ -226,8 +225,8 @@ def embedding_dup_pairs(
         an all-boilerplate embedding mode) instead of letting one bucket
         emit B²/2 pairs on a single task — identical contract to
         `dedup.minhash_lsh_dup_pairs`;
-      - `materialize` localCheckpoints the banded index so the self-join's
-        two sides share ONE evaluation of the `len(planes)` dot-product
+      - the banded index is localCheckpointed, so the self-join's two
+        sides share ONE evaluation of the `len(planes)` dot-product
         expressions instead of recomputing them per side.
     """
     nb = len(planes)
@@ -242,8 +241,7 @@ def embedding_dup_pairs(
         F.col(id_col), F.col(vec_col),
         F.posexplode(F.array(*band_exprs)).alias("band_id", "bucket"),
     )
-    if materialize:
-        idx = idx.localCheckpoint(eager=False)
+    idx = idx.localCheckpoint(eager=False)
     if max_bucket_size is not None:
         sizes = (
             idx.groupBy("band_id", "bucket")

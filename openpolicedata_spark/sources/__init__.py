@@ -9,8 +9,6 @@ fetch (SURVEY.md §4)."""
 from openpolicedata_spark.sources.base import (
     DataLoader,
     clean_date_input,
-    date_filter_expr,
-    filter_dataframe,
 )
 from openpolicedata_spark.sources.file import CsvLoader, ParquetLoader
 from openpolicedata_spark.sources.combined import CombinedLoader
@@ -18,8 +16,6 @@ from openpolicedata_spark.sources.combined import CombinedLoader
 __all__ = [
     "DataLoader",
     "clean_date_input",
-    "date_filter_expr",
-    "filter_dataframe",
     "CsvLoader",
     "ParquetLoader",
     "CombinedLoader",

@@ -9,6 +9,10 @@ Spark mapping: the reference filters a loaded pandas frame row-by-row; here
 filters are *Column expressions* attached to a lazy DataFrame so Catalyst
 pushes them into the scan (PushedFilters on parquet, $where/SQL on portal
 readers). The date-input normalization is identical driver-side logic.
+
+Dates go through `functions/datetime`, the one date layer: a loader
+classifies its date column once (no job for a native column, else one
+sample job), then filters with `date_range_filter`.
 """
 
 from __future__ import annotations
@@ -19,11 +23,15 @@ import warnings
 from abc import ABC, abstractmethod
 from typing import Optional, Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from openpolicedata_spark import defs
+from openpolicedata_spark.functions.datetime import (
+    date_range_filter,
+    detect_date_format,
+    to_datetime_expr,
+)
 
 DateInput = int | str | _dt.date | _dt.datetime | Sequence | None
 
@@ -72,71 +80,6 @@ def clean_date_input(date: DateInput) -> Optional[list[_dt.datetime]]:
     return out
 
 
-def _is_year_column(df: DataFrame, date_field: str) -> bool:
-    """Heuristic from reference data_loader.py:151-155: the column is a year
-    if named 'year', or is integer-typed with all values in [1900, 2200].
-    The all-values check runs as one distributed aggregate, not a collect."""
-    if date_field.lower() == "year":
-        return True
-    dtype = dict(df.dtypes).get(date_field, "")
-    if dtype in ("int", "bigint", "smallint", "tinyint"):
-        row = df.agg(
-            F.min(date_field).alias("lo"), F.max(date_field).alias("hi")
-        ).first()
-        return row.lo is not None and row.lo >= 1900 and row.hi <= 2200
-    return False
-
-
-def date_filter_expr(
-    date_field: str,
-    date_range: list[_dt.datetime],
-    is_year: bool = False,
-) -> Column:
-    """Build the date-range predicate (reference data_loader.py:170-188):
-    ``d >= start AND d < stop + 1 day`` for real dates, ``year IN
-    [y0..y1]`` for year-valued columns (full-year requests only)."""
-    if not is_year:
-        stop_excl = date_range[1] + _dt.timedelta(days=1)
-        return (F.col(date_field) >= F.lit(date_range[0])) & (
-            F.col(date_field) < F.lit(stop_excl)
-        )
-    if (
-        date_range[0] != date_range[0].replace(month=1, day=1)
-        or date_range[1] != date_range[1].replace(month=12, day=31)
-    ):
-        raise ValueError(
-            f"Column {date_field} is a year column and cannot be filtered "
-            f"by partial-year dates: {date_range}"
-        )
-    years = list(range(date_range[0].year, date_range[1].year + 1))
-    # String year columns compare after cast (reference casts digit strings).
-    return F.col(date_field).cast("int").isin(years)
-
-
-def filter_dataframe(
-    df: DataFrame,
-    date_field: Optional[str] = None,
-    date_filter: DateInput = None,
-    agency_field: Optional[str] = None,
-    agency: Optional[str] = None,
-) -> DataFrame:
-    """Apply agency + date filters (reference data_loader.py:120-191) as lazy
-    Column predicates — Catalyst pushes them down to the scan."""
-    date_range = clean_date_input(date_filter)
-
-    if agency:
-        if not agency_field:
-            raise ValueError("Agency filtering requested but no agency field was provided")
-        df = df.filter(F.col(agency_field) == agency)
-
-    if date_range is not None:
-        if not date_field:
-            raise ValueError("Date filtering requested but no date field was provided")
-        is_year = _is_year_column(df, date_field)
-        df = df.filter(date_filter_expr(date_field, date_range, is_year))
-    return df
-
-
 class DataLoader(ABC):
     """Loader interface (reference data_loader.py:297-378): ``load`` returns a
     lazy DataFrame; ``get_count`` / ``get_years`` / ``get_agencies`` are the
@@ -146,6 +89,40 @@ class DataLoader(ABC):
     def __init__(self, spark: SparkSession):
         self.spark = spark
         self._last_count: Optional[tuple] = None  # memo (reference data_loader.py:449-457)
+        self._date_strategy: Optional[tuple] = None  # (date_field, strategy) memo
+
+    def _column_strategy(self, df: DataFrame, date_field: str) -> dict:
+        """`detect_date_format` of ``date_field``, memoized per loader like
+        ``_last_count``: a native timestamp/date column costs no job, any
+        other column one sample job (at most 1000 rows) per loader."""
+        if self._date_strategy is None or self._date_strategy[0] != date_field:
+            self._date_strategy = (date_field, detect_date_format(df, date_field))
+        return self._date_strategy[1]
+
+    def filter_dataframe(
+        self,
+        df: DataFrame,
+        date_field: Optional[str] = None,
+        date_filter: DateInput = None,
+        agency_field: Optional[str] = None,
+        agency: Optional[str] = None,
+    ) -> DataFrame:
+        """Apply agency + date filters (reference data_loader.py:120-191) as
+        lazy Column predicates; the date filter is `date_range_filter` under
+        the column's memoized `_column_strategy`."""
+        date_range = clean_date_input(date_filter)
+        out = df
+        if agency:
+            if not agency_field:
+                raise ValueError("Agency filtering requested but no agency field was provided")
+            out = out.filter(F.col(agency_field) == agency)
+        if date_range is not None:
+            if not date_field:
+                raise ValueError("Date filtering requested but no date field was provided")
+            # classified before the agency filter: one memo serves every agency
+            strategy = self._column_strategy(df, date_field)
+            out = out.filter(date_range_filter(F.col(date_field), strategy, date_range))
+        return out
 
     @abstractmethod
     def isfile(self) -> bool: ...
@@ -177,15 +154,11 @@ class DataLoader(ABC):
         """Distinct years present. The reference probes the portal year by
         year with sleeps (data_loader.py:324-378); for loaded data one
         distinct-aggregate query replaces the N-request loop (SURVEY §2.4)."""
-        df = self.load()
         if date_field is None:
             raise ValueError("date_field required for get_years")
-        dtype = dict(df.dtypes).get(date_field, "")
-        col = (
-            F.col(date_field).cast("int")
-            if dtype in ("int", "bigint", "string") and _is_year_column(df, date_field)
-            else F.year(date_field)
-        )
+        df = self.load()
+        strategy = self._column_strategy(df, date_field)
+        col = F.year(to_datetime_expr(F.col(date_field), strategy))
         rows = df.select(col.alias("y")).where(F.col("y").isNotNull()).distinct().collect()
         return sorted(r.y for r in rows)
 

@@ -15,7 +15,8 @@ and ``sources/msoffice_crypto`` (VelvetSweatshop decryption) — whatever
 else is installed; everything after the raw grid is tested on plain
 DataFrames. A remote workbook, plain or inside a zip, is fetched once per
 loader through ``sources/httpio`` (the package's one remote-read path);
-the readers always see a local spool file.
+the readers always see a local spool file. Cells load as text; dates
+are parsed by the loaders' one date layer (``functions/datetime``).
 """
 
 from __future__ import annotations
@@ -34,7 +35,6 @@ from openpolicedata_spark.sources.base import (
     DataLoader,
     DateInput,
     apply_limit_offset,
-    filter_dataframe,
 )
 
 _YEAR_RE = re.compile(r"^(19|20)\d{2}$")
@@ -335,8 +335,8 @@ class ExcelLoader(DataLoader):
         # year-sheet workbooks filter on the injected Year column when the
         # dataset has no date column (reference excel.py:340-357)
         date_field = self.date_field or ("Year" if years else None)
-        df = filter_dataframe(df, date_field=date_field, date_filter=date,
-                              agency=agency, agency_field=self.agency_field)
+        df = self.filter_dataframe(df, date_field=date_field, date_filter=date,
+                                   agency=agency, agency_field=self.agency_field)
         if select:
             df = df.select(*select)
         if sortby == "date" and self.date_field:

@@ -6,7 +6,8 @@ Parity target: /root/reference/openpolicedata/data_loaders/csv_class.py
 Spark mapping (SURVEY §2.1): `spark.read.parquet/csv` replaces the streaming
 pandas reader; date/agency filters become Catalyst predicates pushed into the
 scan (PushedFilters), so the reference's "local filter after read"
-(csv_class.py:377-379) costs nothing extra. The reference's quote-aware
+(csv_class.py:377-379) costs nothing extra; a text or year date column is
+parsed by the one date layer (`functions.datetime`). The reference's quote-aware
 streaming row counter (csv_class.py:90-127) is unnecessary — `df.count()`
 is a scan-only job. Remote URLs and zip members are fetched on the driver
 through sources/httpio (the package's one remote-read path) into its spool,
@@ -28,7 +29,6 @@ from openpolicedata_spark.sources.base import (
     DataLoader,
     DateInput,
     apply_limit_offset,
-    filter_dataframe,
 )
 
 
@@ -99,7 +99,7 @@ class _FileLoader(DataLoader):
         # Static catalog-declared predicates (reference csv_class.py:377-379).
         for k, v in self.query.items():
             df = df.filter(df[k] == v)
-        df = filter_dataframe(
+        df = self.filter_dataframe(
             df,
             date_field=self.date_field,
             date_filter=date,
@@ -114,18 +114,12 @@ class _FileLoader(DataLoader):
 
 
 class ParquetLoader(_FileLoader):
-    """Native parquet scan — full Catalyst pushdown (predicates, pruning,
-    metadata-only counts). Supersedes the reference's feather/parquet
-    re-load path (data.py:1540-1626)."""
+    """Native parquet scan — full Catalyst pushdown (predicates, pruning).
+    Supersedes the reference's feather/parquet re-load path
+    (data.py:1540-1626)."""
 
     def _read(self) -> DataFrame:
         return read_parquet_repaired(self.spark, self.url)
-
-    def get_count(self, date: DateInput = None, *, agency: Optional[str] = None,
-                  force: bool = False) -> int:
-        # Unfiltered counts are parquet-metadata-only in Spark — the analog
-        # of the reference's server-side count(*) pushdown (SURVEY §2.4).
-        return super().get_count(date, agency=agency, force=force)
 
 
 class JsonLoader(_FileLoader):

@@ -4,14 +4,16 @@ Parity: /root/reference/openpolicedata/data_loaders/html.py:10-194 —
 `pd.read_html` with a browser UA, exactly one table expected, then the
 standard local date/agency filter. A remote page is read through
 ``sources/httpio.open_url`` (the package's one remote-read path: browser
-UA, timeout, legacy-TLS retry). Driver-side parse (HTML tables are
-small) → ``spark.createDataFrame``. The page parses with the stdlib
-``sources/htmltable`` reader, whatever else is installed; tests may
-inject pre-parsed tables.
+UA, timeout, legacy-TLS retry), once per loader. Driver-side parse (HTML
+tables are small) → ``spark.createDataFrame``. The page parses with the
+stdlib ``sources/htmltable`` reader, whatever else is installed; tests
+may inject pre-parsed tables. Cells load as text; dates are parsed by
+the loaders' one date layer (``functions/datetime``).
 """
 
 from __future__ import annotations
 
+import functools
 from typing import Optional
 
 import pandas as pd
@@ -23,7 +25,6 @@ from openpolicedata_spark.sources.base import (
     DataLoader,
     DateInput,
     apply_limit_offset,
-    filter_dataframe,
 )
 
 
@@ -54,7 +55,10 @@ class HtmlLoader(DataLoader):
         with open(self.url, encoding="utf-8", errors="replace") as f:
             return f.read()
 
-    def _parse(self) -> pd.DataFrame:
+    @functools.cached_property
+    def _table(self) -> pd.DataFrame:
+        """The page's one table, fetched and parsed once per loader, the
+        rule `CsvLoader._path` and `ExcelLoader._workbook` follow."""
         tables = self._tables
         if tables is None:
             # fetch ONCE with the browser UA (agency sites 403 the
@@ -73,12 +77,12 @@ class HtmlLoader(DataLoader):
              offset: int = 0, *, agency: Optional[str] = None,
              select: Optional[list[str]] = None,
              sortby: Optional[str] = None) -> DataFrame:
-        pdf = self._parse()
+        pdf = self._table
         df = self.spark.createDataFrame(pdf.astype(str).where(pdf.notna(), None))
         for k, v in self.query.items():
             df = df.filter(F.col(k) == F.lit(v))
-        df = filter_dataframe(df, date_field=self.date_field, date_filter=date,
-                              agency=agency, agency_field=self.agency_field)
+        df = self.filter_dataframe(df, date_field=self.date_field, date_filter=date,
+                                   agency=agency, agency_field=self.agency_field)
         if select:
             df = df.select(*select)
         if sortby == "date" and self.date_field:

@@ -6,8 +6,8 @@ data_loader.py:381-446): planning (count probe → offset windows) happens
 once on the driver, then **each page window becomes an input partition**
 and executors fetch pages in parallel. The reference's `Where.accurate`
 flag maps onto Spark's pushed-filter contract: an inaccurate clause means
-the source returns a superset and the exact filter is re-applied above
-the scan.
+the source returns a superset and `RestLoader` re-applies the exact date
+filter above the scan.
 """
 
 from __future__ import annotations
@@ -64,11 +64,10 @@ def _as_point(v) -> object:
 
 from openpolicedata_spark.sources.portals.transport import resolve_transport
 from openpolicedata_spark.sources.portals.where import (
-    DateFormat,
     Dialect,
     Where,
+    _ts_lit,
     and_wheres,
-    build_date_where,
     build_equals_where,
 )
 
@@ -248,7 +247,7 @@ class PortalReader(DataSourceReader):
                   LessThan: "<", LessThanOrEqual: "<="}[type(flt)]
             v = flt.value
             if isinstance(v, _dt.datetime):
-                return f"{ident} {op} " + _ts(v, d)
+                return f"{ident} {op} " + _ts_lit(v, d)
             if isinstance(v, (int, float)) and not isinstance(v, bool):
                 return f"{ident} {op} {v}"
             if isinstance(v, str):
@@ -296,12 +295,6 @@ class PortalReader(DataSourceReader):
         epoch = self._client.epoch_ms_fields
         for r in rows:
             yield convert_row(r, schema, epoch)
-
-
-def _ts(v: _dt.datetime, d: Dialect) -> str:
-    from openpolicedata_spark.sources.portals.where import _ts_lit
-
-    return _ts_lit(v, d)
 
 
 class PortalStreamReader(SimpleDataSourceStreamReader):
@@ -368,9 +361,13 @@ class PortalStreamReader(SimpleDataSourceStreamReader):
 class PortalDataSource(DataSource):
     """Base DataSource: subclasses provide `make_client` + `name`.
 
-    Options (all strings, per the Python DS contract):
-      url, dataset, date_field, date_format, page_size, nrows, offset,
-      select, where (pre-built clause), transport_key (tests).
+    Options (all strings, per the Python DS contract): url, dataset,
+    page_size, nrows, offset, select, where (one pre-built clause) or
+    wheres_json (a JSON list of clauses, each counted and paged on its
+    own), the transport's transport_pickle, timeout_s and sleep_s
+    (portals/transport.py), and the client's own (ArcGIS order_field).
+    The date clause arrives pre-built: `RestLoader` builds it and applies
+    any residual filter itself.
     """
 
     _drop: set = frozenset()
@@ -389,24 +386,11 @@ class PortalDataSource(DataSource):
         if o.get("wheres_json"):
             import json as _json
 
-            return [Where(c, bool(a)) for c, a in _json.loads(o["wheres_json"])]
-        parts: list[Where] = []
-        if o.get("where"):
-            parts.append(Where(o["where"], accurate=o.get("where_accurate", "true") == "true"))
-        if o.get("date_start") and o.get("date_stop"):
-            fmt = DateFormat(o.get("date_format", "timestamp"))
-            start = _dt.datetime.fromisoformat(o["date_start"])
-            stop = _dt.datetime.fromisoformat(o["date_stop"])
-            dws = build_date_where(o["date_field"], start, stop, fmt, self._client.dialect)
-            if parts:
-                base = parts[0]
-                return [Where(and_wheres(base.clause, w.clause), base.accurate and w.accurate)
-                        for w in dws]
-            return dws
-        return parts
+            return [Where(c) for c in _json.loads(o["wheres_json"])]
+        return [Where(o["where"])] if o.get("where") else []
 
     def schema(self) -> StructType:
-        sample = self._client.fetch(0, int(self.options.get("sample_rows", 50)), None)
+        sample = self._client.fetch(0, 50, None)  # driver-side schema sample
         st = infer_schema_from_rows(sample, self._client.epoch_ms_fields,
                                     set(self._drop))
         # CRS propagation: geometry columns carry the client's probed CRS

@@ -7,60 +7,30 @@ arcgis_class.py:296-361 (`_find_string_type_date_query_format`: sample
 
 Spark disposition (SURVEY §2.1): a driver-side planning step. Instead of
 issuing per-format probe queries, we fetch ONE sample page through the
-client and classify the values — one round trip, same outcome, and the
-resulting DateFormat drives the WHERE builders in where.py.
+client and classify the values with the date layer's vote
+(`functions.datetime._strategy_from_values`, the vote standardize and the
+file loaders use). `where.format_of_strategy` maps the result to the
+DateFormat that drives the WHERE builders in where.py.
 """
 
 from __future__ import annotations
 
-import re
 from typing import Optional
 
+from openpolicedata_spark.functions.datetime import _strategy_from_values
 from openpolicedata_spark.sources.portals.core import PortalClient
-from openpolicedata_spark.sources.portals.where import DateFormat
-
-# regex table (reference arcgis_class.py:317-344 DateParseParams analog)
-_PATTERNS: list[tuple[re.Pattern, DateFormat]] = [
-    (re.compile(r"^\d{4}-\d{2}-\d{2}([T ]\d{2}:\d{2})?"), DateFormat.TIMESTAMP),
-    (re.compile(r"^(19|20)\d{6}$"), DateFormat.YYYYMMDD_TEXT),
-    (re.compile(r"^\d{1,2}/\d{1,2}/\d{4}$"), DateFormat.MMDDYYYY_TEXT),
-    (re.compile(r"^[A-Za-z]{3,9}\.? \d{1,2},? \d{4}$"), DateFormat.MONTH_ABBREV_TEXT),
-    (re.compile(r"^(19|20)\d{2} ?Q[1-4]$"), DateFormat.YYYYQ_TEXT),
-    (re.compile(r"^(19|20)\d{2}$"), DateFormat.YEAR_NUMERIC),
-]
-
-
-def classify_date_values(values: list) -> Optional[DateFormat]:
-    """Majority-vote classification of sampled date values."""
-    vals = [v for v in values if v not in (None, "")]
-    if not vals:
-        return None
-    if all(isinstance(v, (int, float)) for v in vals):
-        iv = [int(v) for v in vals]
-        if all(v > 10_000_000_000 for v in iv):      # > year 10000 as yyyymmdd
-            return DateFormat.EPOCH_MS
-        if all(re.match(r"^(19|20)\d{6}$", str(v)) for v in iv):
-            return DateFormat.YYYYMMDD_TEXT
-        if all(1900 <= v <= 2200 for v in iv):
-            return DateFormat.YEAR_NUMERIC
-        return None
-    votes: dict[DateFormat, int] = {}
-    for v in vals:
-        s = str(v).strip()
-        for pat, fmt in _PATTERNS:
-            if pat.match(s):
-                votes[fmt] = votes.get(fmt, 0) + 1
-                break
-    if not votes:
-        return None
-    best, n = max(votes.items(), key=lambda kv: kv[1])
-    return best if n >= len(vals) * 0.5 else None
+from openpolicedata_spark.sources.portals.where import DateFormat, format_of_strategy
 
 
 def probe_date_format(client: PortalClient, date_field: str,
                       sample_n: int = 1000) -> Optional[DateFormat]:
     """ONE sample fetch through the portal client → DateFormat for the
     WHERE builders. Replaces the reference's per-format probe-query loop
-    (socrata.py:552-636) with a single page + local classification."""
+    (socrata.py:552-636) with a single page + local classification. The
+    page's JSON values vote as the Spark column they would load as: all
+    numbers as a numeric column, anything else as text."""
     rows = client.fetch(0, sample_n, None, select=None)
-    return classify_date_values([r.get(date_field) for r in rows])
+    vals = [v for v in (r.get(date_field) for r in rows) if v not in (None, "")]
+    numeric = all(isinstance(v, (int, float)) for v in vals)
+    return format_of_strategy(
+        _strategy_from_values("double" if numeric else "string", vals))

@@ -11,10 +11,14 @@ Parity with the reference's per-loader `__construct_where` builders:
 Semantics, not string-for-string: each builder returns a list of
 ``Where(clause, accurate)``.  ``accurate=False`` means the clause
 over-selects (e.g. a year-granularity LIKE for a sub-year range) and the
-engine must re-apply the exact date filter after the scan — exactly
+loader must re-apply the exact date filter after the scan — exactly
 Spark's "source may return a superset" contract for pushed filters
 (reference `Where.accurate`, data_loader.py:206-214, and residual filter
-:41-66).
+:41-66). That exact filter is not built here: it is
+`functions.datetime.date_range_filter`, the one date-range predicate of
+every loader (`RestLoader._residual_date_filter`). This module only
+translates a ``[start, stop]`` range into each portal's WHERE dialect, and
+maps a date-layer strategy to its ``DateFormat`` and back.
 """
 
 from __future__ import annotations
@@ -29,9 +33,10 @@ _MONTH_ABBREV = ["JAN", "FEB", "MAR", "APR", "MAY", "JUN",
 
 
 class DateFormat(str, Enum):
-    """Storage format of the portal's date column (discovered by the
-    reference's probe queries, socrata.py:524-636 / arcgis_class.py:296-361;
-    we take it as dataset metadata)."""
+    """Storage format of the portal's date column, as far as it shapes the
+    WHERE clause (discovered by the reference's probe queries,
+    socrata.py:524-636 / arcgis_class.py:296-361; here by
+    portals/probe.py, or given as ``RestLoader(date_format=)``)."""
 
     TIMESTAMP = "timestamp"          # native timestamp/date column
     EPOCH_MS = "epoch_ms"            # ArcGIS esriFieldTypeDate
@@ -42,17 +47,41 @@ class DateFormat(str, Enum):
     YYYYQ_TEXT = "yyyyq"             # '2022 Q1'
 
 
-# `functions.datetime.to_datetime_expr` strategy that parses each text
-# format whose pushed clause can be inaccurate (build_date_where), for the
-# exact residual re-filter (RestLoader._residual_date_filter). YYYYMMDD
-# compares exactly as text, so it never needs one; YEAR_NUMERIC filters
-# as an integer.
-TEXT_DATE_STRATEGIES = {
+# The bridge to the date layer (`functions.datetime`): the DateFormat a
+# `detect_date_format` strategy pushes down as (the probe's decision), and
+# the strategy that parses each format whose clause can be inaccurate, for
+# the residual filter (`RestLoader._residual_date_filter`).
+_FORMAT_OF_KIND = {
+    "epoch_ms": DateFormat.EPOCH_MS,
+    "year": DateFormat.YEAR_NUMERIC,
+    "yyyymmdd": DateFormat.YYYYMMDD_TEXT,
+    "year_quarter": DateFormat.YYYYQ_TEXT,
+}
+_FORMAT_OF_PATTERN = {
+    "yyyy-MM-dd HH:mm:ss": DateFormat.TIMESTAMP,
+    "yyyy-MM-dd['T'][ ]HH:mm": DateFormat.TIMESTAMP,
+    "yyyy-MM-dd": DateFormat.TIMESTAMP,
+    "yyyyMMdd": DateFormat.YYYYMMDD_TEXT,
+    "M/d/yyyy": DateFormat.MMDDYYYY_TEXT,
+    "MMM[.] d[,] yyyy": DateFormat.MONTH_ABBREV_TEXT,
+    "MMMM[.] d[,] yyyy": DateFormat.MONTH_ABBREV_TEXT,
+}
+STRATEGY_OF_FORMAT = {
+    DateFormat.YEAR_NUMERIC: {"kind": "year"},
     DateFormat.MMDDYYYY_TEXT: {"kind": "string", "formats": ["M/d/yyyy"]},
-    DateFormat.MONTH_ABBREV_TEXT: {"kind": "string",
-                                   "formats": ["MMM d, yyyy", "MMM d yyyy"]},
+    DateFormat.MONTH_ABBREV_TEXT: {
+        "kind": "string", "formats": ["MMM[.] d[,] yyyy", "MMMM[.] d[,] yyyy"]},
     DateFormat.YYYYQ_TEXT: {"kind": "year_quarter"},
 }
+
+
+def format_of_strategy(strategy: dict) -> Optional[DateFormat]:
+    """A kind maps directly, a text column by its first Spark pattern with a
+    WHERE form; None when there is none (the loader then assumes TIMESTAMP)."""
+    if strategy.get("kind") == "string":
+        return next((_FORMAT_OF_PATTERN[f] for f in strategy.get("formats", [])
+                     if f in _FORMAT_OF_PATTERN), None)
+    return _FORMAT_OF_KIND.get(strategy.get("kind"))
 
 
 class Dialect(str, Enum):

@@ -32,11 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from openpolicedata_spark import defs
-from openpolicedata_spark.functions.datetime import (
-    date_precision_expr,
-    period_overlap_filter,
-    to_datetime_expr,
-)
+from openpolicedata_spark.functions.datetime import date_range_filter
 from openpolicedata_spark.sources.base import (
     DataLoader,
     DateInput,
@@ -44,7 +40,7 @@ from openpolicedata_spark.sources.base import (
     clean_date_input,
 )
 from openpolicedata_spark.sources.portals.where import (
-    TEXT_DATE_STRATEGIES,
+    STRATEGY_OF_FORMAT,
     DateFormat,
     Where,
     and_wheres,
@@ -165,12 +161,10 @@ class RestLoader(DataLoader):
         clauses = [w for w in wheres if w.clause]
         if len(clauses) == 1:
             opts["where"] = clauses[0].clause
-            opts["where_accurate"] = "true" if clauses[0].accurate else "false"
         elif clauses:
             # multi-clause (text-date LIKE families): keep them separate so
             # each gets its own count + partitions; encode as JSON
-            opts["wheres_json"] = json.dumps(
-                [[w.clause, w.accurate] for w in clauses])
+            opts["wheres_json"] = json.dumps([w.clause for w in clauses])
         pushed_select = select
         if (select and not accurate and self.date_field
                 and self.date_field not in select):
@@ -245,24 +239,16 @@ class RestLoader(DataLoader):
         return df
 
     def _residual_date_filter(self, df: DataFrame, date: DateInput) -> DataFrame:
-        """Exact re-filter after inaccurate pushdown, parsing the text
-        column the way standardize does (`to_datetime_expr`). Quarter
-        values use *period overlap* — the reference's pd.Period semantics
-        (data.py:1868-1960): a '2020 Q1' value matches any range
-        intersecting Jan-Mar 2020; day-precision values degenerate to a
-        plain between."""
+        """Exact re-filter after inaccurate pushdown: the date layer's
+        `date_range_filter`, under the strategy of the column's DateFormat,
+        as a file loader filters. A year or '2020 Q1' value matches by
+        *period overlap* — the reference's pd.Period semantics
+        (data.py:1868-1960); a day value by the half-open day range."""
         rng = clean_date_input(date)
         if rng is None or self.date_field is None:
             return df
-        if self.date_format == DateFormat.YEAR_NUMERIC:
-            y = F.col(self.date_field).cast("int")
-            return df.where(y.between(rng[0].year, rng[1].year))
-        strategy = TEXT_DATE_STRATEGIES[self.date_format]
-        return df.where(period_overlap_filter(
-            to_datetime_expr(F.col(self.date_field), strategy),
-            date_precision_expr(strategy),
-            rng[0].strftime("%Y-%m-%d %H:%M:%S"),
-            rng[1].strftime("%Y-%m-%d 23:59:59")))
+        return df.where(date_range_filter(
+            F.col(self.date_field), STRATEGY_OF_FORMAT[self.date_format], rng))
 
     # -- fast paths -----------------------------------------------------------
     def get_count(self, date: DateInput = None, *, agency: Optional[str] = None,
