@@ -196,6 +196,9 @@ def to_datetime_expr(col: Column, strategy: Optional[dict] = None,
     # 'Jan 15, 2024' to 'Jan 15' and break the MMM d, yyyy formats.
     is_date_list = s.rlike(r"^\d{1,4}[-/]\d{1,2}[-/]\d{1,4}\s*,\s*\d{1,4}[-/]")
     s = F.when(is_date_list, F.trim(F.split(s, ",")[0])).otherwise(s)
+    # the vote's month-name forms accept 'Sept.', which no Java month
+    # pattern reads: parse it as 'Sep.'
+    s = F.regexp_replace(s, r"(?i)^(sep)t(?=[.\s])", "$1")
     attempts = []
     for f in fmts:
         if f == "__hours__":

@@ -32,7 +32,6 @@ from openpolicedata_spark.functions.text import (
     normalize_text_expr,
     tokens_expr,
 )
-from openpolicedata_spark.publish import publish, read_index, roll_forward
 
 
 def _token_hash_expr(tok: Column, token_hash: str) -> Column:
@@ -1025,6 +1024,20 @@ def edit_distance_pairs(
     )
 
 
+def _exact_admit(text_col: str, id_col: str):
+    """The exact-digest admit step (`streaming._novel_rows`): drop rows
+    whose digest is in the index, then collapse the batch to its min id
+    per digest — literally `exact_dedup`'s shared implementation."""
+    def admit(batch: DataFrame, idx) -> DataFrame:
+        tagged = batch.withColumn("__fp__", _digest(text_col))
+        if idx is not None:
+            tagged = tagged.join(
+                idx.select(F.col("fingerprint").alias("__fp__")),
+                on="__fp__", how="left_anti")
+        return _collapse_by_fp(tagged, batch.columns, id_col)
+    return admit
+
+
 def exact_dedup_incremental(
     batch: DataFrame,
     index_path: str,
@@ -1046,16 +1059,11 @@ def exact_dedup_incremental(
     wrote) never match the anti-join. A half-written index directory
     (no parquet files) reads as empty rather than wedging every later
     increment."""
-    spark = batch.sparkSession
-    tagged = batch.withColumn("__fp__", _digest(text_col))
-    idx = read_index(spark, index_path)
-    if idx is not None:
-        tagged = tagged.join(
-            idx.select(F.col("fingerprint").alias("__fp__")),
-            on="__fp__", how="left_anti")
-    kept = _collapse_by_fp(tagged, batch.columns, id_col) \
-        .localCheckpoint(eager=True)
-    return kept.drop("__fp__")
+    from openpolicedata_spark.streaming import _novel_rows
+
+    novel, _ = _novel_rows(batch, index_path, None,
+                           _exact_admit(text_col, id_col))
+    return novel.drop("__fp__")
 
 
 def exact_dedup_ingest(
@@ -1065,12 +1073,12 @@ def exact_dedup_ingest(
     batch_id: str,
     text_col: str = "text",
     id_col: str = "doc_id",
-    compact_index_files: Optional[int] = 64,
 ) -> DataFrame:
     """EXACTLY-ONCE incremental exact dedup: `exact_dedup_incremental`
-    with its survivors and their digests published together through
-    `publish.publish` (the appending sinks' protocol), for callers that
-    want the function to own both writes.
+    with its survivors and their digests published together through the
+    index sinks' per-batch step (`streaming._admit_pairs`,
+    `streaming._append_step`), for callers that want the function to own
+    both writes.
 
     Protocol (idempotent under redelivery of the same `batch_id`):
 
@@ -1079,10 +1087,10 @@ def exact_dedup_ingest(
        committed — its directory appears with one rename, so its
        presence is the replay marker: return the persisted survivors
        without recomputing or rewriting anything;
-    3. otherwise the survivors are `exact_dedup_incremental(batch,
-       index_path)`; publish them to `batch=<batch_id>` and their
-       digests to `index_path` under tag `batch_id`, then compact the
-       index (`streaming.compact_index`).
+    3. otherwise admit the batch against `index_path`; publish the
+       survivors to `batch=<batch_id>` and their digests to `index_path`
+       under tag `batch_id`, then compact the index. A batch with no
+       survivors publishes nothing and returns an empty frame.
 
     A crash before the publish commits leaves nothing visible, and the
     replay recomputes against an unchanged index; a crash after it is
@@ -1093,18 +1101,23 @@ def exact_dedup_ingest(
     import os
     import re as _re
 
-    from openpolicedata_spark.streaming import compact_index
+    from openpolicedata_spark.streaming import _admit_pairs, _append_step
 
     if not _re.fullmatch(r"[A-Za-z0-9._-]+", batch_id):
         raise ValueError(f"batch_id {batch_id!r} must be path-safe "
                          "([A-Za-z0-9._-]+)")
     spark = batch.sparkSession
     part_path = os.path.join(output_path, f"batch={batch_id}")
-    roll_forward(output_path)
-    if not os.path.isdir(part_path):
-        kept = exact_dedup_incremental(batch, index_path, text_col, id_col)
-        digests = kept.select(_digest(text_col).alias("fingerprint"))
-        publish(output_path, batch_id,
-                [(kept, part_path), (digests, index_path)])
-        compact_index(spark, index_path, compact_index_files)
+    def body():
+        if os.path.isdir(part_path):
+            return None
+        return _admit_pairs(
+            batch, part_path, index_path, None,
+            _exact_admit(text_col, id_col),
+            lambda novel: (novel.drop("__fp__"),
+                           novel.select(F.col("__fp__").alias("fingerprint"))))
+
+    _append_step(spark, output_path, batch_id, body, index_path)
+    if not os.path.isdir(part_path):   # nothing novel: nothing published
+        return spark.createDataFrame([], batch.schema)
     return spark.read.parquet(part_path)

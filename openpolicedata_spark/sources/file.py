@@ -78,9 +78,25 @@ class _FileLoader(DataLoader):
         self.date_field = date_field
         self.agency_field = agency_field
         self.query = query or {}
+        self._inferred: Optional[tuple] = None  # (version, result) memo
 
     def isfile(self) -> bool:
         return True
+
+    def _infer_once(self, path: str, infer):
+        """`infer()` — the reader's schema inference, a Spark job or two —
+        once per version of the local file at `path` (its size and mtime;
+        a spool file is content-addressed and never rewritten), memoized
+        per loader like ``_last_count``. A path that is not local is
+        inferred on every read."""
+        try:
+            st = os.stat(path)
+        except OSError:
+            return infer()
+        version = (path, st.st_size, st.st_mtime_ns)
+        if self._inferred is None or self._inferred[0] != version:
+            self._inferred = (version, infer())
+        return self._inferred[1]
 
     def _read(self) -> DataFrame:
         raise NotImplementedError
@@ -128,7 +144,9 @@ class JsonLoader(_FileLoader):
     filter pushdown/pruning as with any file scan."""
 
     def _read(self) -> DataFrame:
-        return self.spark.read.json(self.url)
+        schema = self._infer_once(
+            self.url, lambda: self.spark.read.json(self.url).schema)
+        return self.spark.read.json(self.url, schema=schema)
 
 
 class CsvLoader(_FileLoader):
@@ -224,6 +242,13 @@ class CsvLoader(_FileLoader):
 
     def _read(self) -> DataFrame:
         path = self._path
-        return self.spark.read.csv(path, header=self.header,
-                                   inferSchema=True,
-                                   encoding=self._detect_charset(path))
+
+        def infer():
+            charset = self._detect_charset(path)
+            return charset, self.spark.read.csv(
+                path, header=self.header, inferSchema=True,
+                encoding=charset).schema
+
+        charset, schema = self._infer_once(path, infer)
+        return self.spark.read.csv(path, header=self.header, schema=schema,
+                                   encoding=charset)

@@ -19,7 +19,7 @@ from __future__ import annotations
 import tempfile
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from openpolicedata_spark.publish import (
@@ -331,9 +331,11 @@ def observe_rows(df: DataFrame, name: str = "opd_metrics",
     foreachBatch count(). `exprs` maps metric name → aggregate Column
     (default: row count as `rows`). Measured caveat (round 13): the
     metrics accumulate across EVERY evaluation of the plan within one
-    batch — a foreachBatch body that probes its frame (head(1) guard)
-    or re-evaluates it adds those rows to the batch's numbers;
-    localCheckpoint the frame first if exact-once metrics matter."""
+    batch — a foreachBatch body that re-evaluates its frame adds those
+    rows to the batch's numbers. The index sinks bind each batch once
+    and read it from the binding (`_novel_rows`), so upstream of them
+    every row counts once; localCheckpoint the frame first in any other
+    body if exact-once metrics matter."""
     if exprs is None:
         exprs = {"rows": F.count(F.lit(1))}
     return df.observe(name, *[v.alias(k) for k, v in exprs.items()])
@@ -573,10 +575,15 @@ def running_user_totals(events: DataFrame,
     )
 
 
+# An index sink's index directory is compacted once it holds this many
+# parquet files (`_append_step` reads it at call time).
+COMPACT_INDEX_FILES = 64
+
+
 def compact_index(spark, index_path: str, max_files: Optional[int],
                   target_mb: int = 128) -> None:
     """Opportunistic small-file maintenance for the append-per-batch
-    index sinks: every micro-batch appends one parquet file to
+    index sinks: every publishing micro-batch appends one parquet file to
     `index_path` forever, so at production batch counts the index read
     at the head of every batch becomes listing/footer-bound long before
     it is data-bound. When the directory holds >= `max_files` data
@@ -589,7 +596,7 @@ def compact_index(spark, index_path: str, max_files: Optional[int],
     untouched — a redelivered batch sees exactly the index it would
     have seen uncompacted. `max_files=None` disables.
 
-    Called by `_run_append_sink` AFTER each publish — inside foreachBatch,
+    Called by `_append_step` AFTER each publish — inside foreachBatch,
     which Structured Streaming serializes per query, so the compactor
     never races its own sink's appends (its changed-while-staging abort
     guards cross-process racers)."""
@@ -650,87 +657,58 @@ def near_dedup_sink(stream_df: DataFrame, out_path: str, index_path: str,
                     num_hashes: int = 32, bands: int = 8,
                     shingle_k: int = 3, seed: int = 42,
                     query_name: str = "near_dedup",
-                    timeout_s: int = 300,
-                    compact_index_files: Optional[int] = 64) -> "list":
+                    timeout_s: int = 300) -> "list":
     """Streaming NEAR-duplicate suppression via a persistent LSH band
-    index (foreachBatch): each micro-batch MinHash-signs its documents
-    (`operators.dedup.shingle_minhash` — the same signature family as the
-    batch dedup, so live and backfill agree on what is near-duplicate),
-    drops docs whose band hash collides with the index (seen content) or
-    with an earlier doc in the same batch, appends survivors to
-    `out_path`, and appends their bands to `index_path`.
+    index: each micro-batch MinHash-signs its documents
+    (`operators.dedup.shingle_minhash` — the batch dedup's signature
+    family, so live and backfill agree), drops docs whose band hash
+    collides with the index or with a smaller id in the same batch,
+    appends survivors to `out_path` and their bands to `index_path`.
 
-    Recall-oriented approximation: a band collision alone marks a
-    duplicate (no exact-Jaccard verify — that would require storing every
-    doc's shingle set in the index). False-positive rate is the LSH
-    s-curve at (num_hashes/bands) rows per band; the batch
-    `minhash_lsh_dup_pairs` pass over the accumulated output remains the
-    exact ground truth for backfill. State is the band index: `bands`
-    longs per unique doc, appended as parquet — O(corpus), but 8 longs
-    per doc, not the text; `compact_index_files` bounds the one-file-
-    per-batch growth (`compact_index` rewrites the directory when it
-    exceeds that many files — contents identical, replay-safe).
-
-    Within-batch ties keep the smallest `id_col`. Output and index
-    publish together (`_run_append_sink`), so a replayed batch drops
-    against its own index bands and never duplicates output rows. Per
-    batch the batch side broadcasts and the O(corpus) index is only
-    scanned, never shuffled."""
+    Recall-oriented: a band collision alone marks a duplicate (an exact
+    Jaccard verify would need every doc's shingle set in the index); the
+    batch `minhash_lsh_dup_pairs` over the output stays the exact ground
+    truth. The index holds `bands` longs per admitted doc, and per batch
+    only the batch side broadcasts. Binding, the index probe and
+    publication: `_run_index_sink`."""
     from openpolicedata_spark.operators.dedup import (
         band_hash_col,
         check_banding,
         shingle_minhash,
     )
 
-    spark = stream_df.sparkSession
     rows_per_band = check_banding(num_hashes, bands)
+    band_cols = band_hash_col(F.col("minhash"), bands, rows_per_band) \
+        .alias("band_id", "band_hash")
 
-    def body(batch: DataFrame, tag: str):
-        if not batch.head(1):
-            return None
-        ms = shingle_minhash(batch, text_col, id_col,
-                             num_hashes, shingle_k, seed)
-        banded = ms.select(
-            F.col(id_col),
-            band_hash_col(F.col("minhash"), bands, rows_per_band)
-            .alias("band_id", "band_hash"),
-        ).localCheckpoint(eager=False)
-        # seen before: collide with the persisted index. The BATCH side
-        # broadcasts (it is trigger-bounded by construction; the index
-        # is O(corpus)) so the index is only ever SCANNED, never
-        # shuffled or collected — without the hint the static planner
-        # (no AQE in streaming) size-estimates the index and either
-        # broadcasts it (collecting the whole index to the driver every
-        # batch) or shuffles both sides. Inner join + distinct on the
-        # non-null band keys is set-identical to the former left_semi.
-        idx = read_index(spark, index_path)
-        if idx is not None:
-            seen = (idx.join(F.broadcast(banded),
-                             on=["band_id", "band_hash"])
-                    .select(id_col).distinct())
-        else:
-            seen = banded.select(id_col).where(F.lit(False))
+    def sign(batch: DataFrame) -> DataFrame:
+        ms = shingle_minhash(batch, text_col, "__row__", num_hashes,
+                             shingle_k, seed)
+        return batch.join(ms.select("__row__", "minhash"), on="__row__")
+
+    def admit(signed: DataFrame, idx) -> DataFrame:
+        banded = signed.select(id_col, band_cols)
         # seen within this batch: same band bucket, smaller id survives
-        w_min = (banded.groupBy("band_id", "band_hash")
-                 .agg(F.min(id_col).alias("__keep__")))
-        intra = (banded.join(w_min, on=["band_id", "band_hash"])
-                 .where(F.col(id_col) != F.col("__keep__"))
-                 .select(id_col).distinct())
-        # drop is read by BOTH writes below — checkpoint it so the
-        # index join + dedup aggregates run once per batch, not once
-        # per write action (round-14 per-batch floor profile: the
-        # second evaluation was ~0.4 s of every batch)
-        drop = (seen.unionByName(intra).distinct()
-                .localCheckpoint(eager=False))
-        survivors = batch.join(F.broadcast(drop), on=id_col,
-                               how="left_anti")
-        bands_out = (banded.join(F.broadcast(drop), on=id_col,
-                                 how="left_anti")
-                     .select("band_id", "band_hash"))
-        return [(survivors, out_path), (bands_out, index_path)]
+        bucket = Window.partitionBy("band_id", "band_hash")
+        drop = (banded.withColumn("__keep__", F.min(id_col).over(bucket))
+                .where(F.col(id_col) != F.col("__keep__")).select(id_col))
+        if idx is not None:
+            # seen before: collide with the persisted index. The BATCH
+            # side broadcasts (it is trigger-bounded by construction; the
+            # index is O(corpus)) so the index is only ever SCANNED, never
+            # shuffled or collected — without the hint the planner
+            # size-estimates the index and either broadcasts it
+            # (collecting the whole index to the driver every batch) or
+            # shuffles both sides.
+            drop = drop.unionByName(
+                idx.join(F.broadcast(banded), on=["band_id", "band_hash"])
+                .select(id_col))
+        return signed.join(F.broadcast(drop), on=id_col, how="left_anti")
 
-    return _run_append_sink(stream_df, out_path, body, None, query_name,
-                            timeout_s, index_path, compact_index_files)
+    return _run_index_sink(
+        stream_df, out_path, index_path, sign, admit,
+        lambda novel: (novel.drop("minhash"), novel.select(band_cols)),
+        query_name, timeout_s)
 
 
 def _run_merge_sink(stream_df: DataFrame, body, checkpoint_dir: Optional[str],
@@ -763,37 +741,103 @@ def _run_merge_sink(stream_df: DataFrame, body, checkpoint_dir: Optional[str],
         return [json.loads(p.json) for p in q.recentProgress]
 
 
+def _append_step(spark, out_path: str, tag: str, body,
+                 index_path: Optional[str] = None) -> None:
+    """One batch of the exactly-once publication path of the
+    appending writers: `publish.roll_forward(out_path)` finishes or
+    discards what a crashed batch left before `body()` reads any index;
+    `body()` returns the (DataFrame, target_dir) pairs to publish, or
+    None; `publish.publish` lands them together or not at all; then
+    `index_path` is compacted past `COMPACT_INDEX_FILES` files. A
+    replayed batch thus meets its own index rows. One writer per
+    out_path."""
+    roll_forward(out_path)
+    pubs = body()
+    if not pubs:
+        return
+    publish(out_path, tag, pubs)
+    if index_path is not None:
+        compact_index(spark, index_path, COMPACT_INDEX_FILES)
+
+
 def _run_append_sink(stream_df: DataFrame, out_path: str, body,
                      checkpoint_dir: Optional[str], query_name: str,
-                     timeout_s: int, index_path: Optional[str] = None,
-                     compact_index_files: Optional[int] = None) -> "list":
-    """The one exactly-once publication path of the appending sinks.
-    `body(batch, tag)` returns the (DataFrame, target_dir) pairs a batch
-    publishes, or None; the tag is the batch id, prefixed with a per-run
-    token under an ephemeral checkpoint (ids restart at 0 every run).
-    Per batch: at the head, `publish.roll_forward(out_path)` finishes or
-    discards what a crashed batch left — before the body reads any
-    index; then `publish.publish` lands the pairs together or not at
-    all, and `index_path` is compacted. Output and index thus land
-    together, and a replayed batch meets its own index rows. One writer
-    per out_path."""
+                     timeout_s: int,
+                     index_path: Optional[str] = None) -> "list":
+    """Drain `stream_df` through `_append_step`, one step per micro-batch.
+    `body(batch, tag)` returns the pairs a batch publishes, or None; the
+    tag is the batch id, prefixed with a per-run token under an
+    ephemeral checkpoint (ids restart at 0 every run)."""
     import uuid
 
     spark = stream_df.sparkSession
     run_tok = "" if checkpoint_dir is not None else uuid.uuid4().hex[:8] + "-"
 
     def step(batch: DataFrame, batch_id: int) -> None:
-        roll_forward(out_path)
         tag = f"{run_tok}{batch_id}"
-        pubs = body(batch, tag)
-        if not pubs:
-            return
-        publish(out_path, tag, pubs)
-        if index_path is not None:
-            compact_index(spark, index_path, compact_index_files)
+        _append_step(spark, out_path, tag, lambda: body(batch, tag),
+                     index_path)
 
     return _run_merge_sink(stream_df, step, checkpoint_dir, query_name,
                            timeout_s)
+
+
+def _novel_rows(batch: DataFrame, index_path: str, sign, admit):
+    """The rows of `batch` new to the index at `index_path`, bound, and
+    how many there are: the one bind rule of the index writers, under
+    which the source is read once and each signature computed once.
+    `sign(batch)` joins the batch, bound, to each row's signature on the
+    row key `__row__`, and the signed rows are bound; a writer whose
+    signature is cheap passes None and its `admit` reads the batch once.
+    The index is read once,
+    and `admit(signed, idx)` — idx None before the first publish — keeps
+    the rows that pass the writer's within-batch rule and are not in the
+    index. Those rows are bound once and counted by an observation on
+    that bind, so the count runs no Spark job."""
+    signed = batch
+    if sign is not None:
+        # `__row__` keys each bound row, so a signature joins back to its
+        # own row even when two rows of the batch share an id
+        keyed = batch.withColumn("__row__", F.monotonically_increasing_id())
+        signed = sign(keyed.localCheckpoint(eager=True)).drop("__row__") \
+            .localCheckpoint(eager=True)
+    counted = admit(signed, read_index(batch.sparkSession, index_path)) \
+        .observe("__novel__", F.count(F.lit(1)))
+    novel = counted.localCheckpoint(eager=True)
+    # the bind's own metrics; a pyspark Observation would attach an
+    # ObservationManager to the session, and Spark then fails to
+    # serialize any closure that captures the session (pyspark.ml's
+    # training summaries do)
+    return novel, counted._jdf.queryExecution().observedMetrics() \
+        .get("__novel__").get().getLong(0)
+
+
+def _admit_pairs(batch: DataFrame, out_path: str, index_path: str,
+                 sign, admit, split):
+    """What one batch of an index writer publishes: `split(novel)`'s
+    (output rows, index rows) to (`out_path`, `index_path`), from the
+    rows `_novel_rows` admits — or None when none is novel, so a batch
+    that only repeats what the index holds publishes nothing."""
+    novel, n = _novel_rows(batch, index_path, sign, admit)
+    if not n:
+        return None
+    out, index = split(novel)
+    return [(out, out_path), (index, index_path)]
+
+
+def _run_index_sink(stream_df: DataFrame, out_path: str, index_path: str,
+                    sign, admit, split, query_name: str,
+                    timeout_s: int) -> "list":
+    """The one body of the index-membership sinks: each micro-batch
+    admits through `_admit_pairs` and publishes through `_append_step`,
+    so output and index land together and a replayed batch meets its own
+    index rows (it admits nothing and publishes nothing). The sink
+    supplies only `sign`, `admit` and `split`."""
+    return _run_append_sink(
+        stream_df, out_path,
+        lambda batch, tag: _admit_pairs(batch, out_path, index_path, sign,
+                                        admit, split),
+        None, query_name, timeout_s, index_path)
 
 
 def _run_replace_sink(stream_df: DataFrame, path: str, fold,
@@ -932,82 +976,110 @@ def semantic_dedup_sink(stream_df: DataFrame, out_path: str,
                         vec_col: str = "embedding",
                         id_col: str = "vec_id",
                         query_name: str = "semdedup",
-                        timeout_s: int = 300,
-                        compact_index_files: Optional[int] = 64) -> "list":
+                        timeout_s: int = 300) -> "list":
     """Streaming SemDeDup: drop vectors semantically near anything ever
-    admitted. Per micro-batch: `similarity.semdedup` dedups WITHIN the
-    batch (smallest id survives per near-dup set), then survivors are
-    checked against the persisted REPRESENTATIVES index — cluster by
-    cluster via a COGROUP on list_id (ships batch+reps rows once and
-    runs ONE matmul per cluster; the join-per-rep formulation would
-    shuffle B·R duplicated embeddings) — and only genuinely novel
-    vectors append to the output and the index.
-
-    State = the representatives index: one row per admitted vector,
-    read cluster-bounded. Unlike the exact/minhash digest indexes this
-    one stores vectors — the price of semantic membership;
-    int8-quantize it when it outgrows comfort, and
-    `compact_index_files` bounds its one-file-per-batch growth
-    (`compact_index`, contents preserved, replay-safe). Centroids are FIXED
-    state shared by all batches (retrain offline; version the index
-    with the quantizer). Output and index publish together
-    (`_run_append_sink`), so a replayed batch matches its own reps and
-    never duplicates output rows."""
+    admitted. Per micro-batch `similarity.semdedup` dedups WITHIN the
+    batch (smallest id survives per near-dup set), then survivors meet
+    the persisted REPRESENTATIVES index cluster by cluster via a COGROUP
+    on list_id (one matmul per cluster, never B·R duplicated
+    embeddings). The index stores one vector per admitted row; the
+    centroids are FIXED state (retrain offline, version the index with
+    the quantizer). Binding, the index probe and publication:
+    `_run_index_sink`."""
     import numpy as np
     import pyspark.sql.types as T
 
     from openpolicedata_spark.operators.similarity import semdedup
 
-    spark = stream_df.sparkSession
-
-    def body(batch: DataFrame, tag: str):
-        if not batch.head(1):
-            return None
+    def admit(batch: DataFrame, reps) -> DataFrame:
         intra = (semdedup(batch, centroids, threshold,
                           vec_col=vec_col, id_col=id_col)
                  .where(F.col("keep"))
                  .drop("max_cos_prev", "keep"))
-        reps = read_index(spark, index_path)
-        if reps is not None:
-            th, vname = threshold, vec_col
-            schema = T.StructType(list(intra.schema.fields))
+        if reps is None:
+            return intra
+        th, vname = threshold, vec_col
 
-            def novel_in_cluster(left, right):
-                # left: this cluster's batch survivors; right: its reps
-                if not len(left):
-                    return left
-                if not len(right):
-                    return left
-                X = np.array(list(left[vname]), dtype=np.float64)
-                Xn = np.linalg.norm(X, axis=1)
-                xz = Xn == 0.0
-                Xn[xz] = 1.0
-                R = np.array(list(right[vname]), dtype=np.float64)
-                Rn = np.linalg.norm(R, axis=1)
-                rz = Rn == 0.0
-                Rn[rz] = 1.0
-                sims = (X / Xn[:, None]) @ (R / Rn[:, None]).T
-                # cosine is undefined for zero-norm vectors and the
-                # clamped form yields sim 0 — which would re-admit a
-                # zero-norm doc on EVERY micro-batch replay (its indexed
-                # copy never matches itself). Treat zero-norm as
-                # identical to any zero-norm rep instead.
-                if xz.any() and rz.any():
-                    sims[np.ix_(xz, rz)] = 1.0
-                return left[sims.max(axis=1) < th]
+        def novel_in_cluster(left, right):
+            # left: this cluster's batch survivors; right: its reps
+            if not len(left) or not len(right):
+                return left
+            X = np.array(list(left[vname]), dtype=np.float64)
+            Xn = np.linalg.norm(X, axis=1)
+            xz = Xn == 0.0
+            Xn[xz] = 1.0
+            R = np.array(list(right[vname]), dtype=np.float64)
+            Rn = np.linalg.norm(R, axis=1)
+            rz = Rn == 0.0
+            Rn[rz] = 1.0
+            sims = (X / Xn[:, None]) @ (R / Rn[:, None]).T
+            # cosine is undefined for zero-norm vectors and the clamped
+            # form yields sim 0 — which would re-admit a zero-norm doc on
+            # EVERY micro-batch replay (its indexed copy never matches
+            # itself). Treat zero-norm as identical to any zero-norm rep.
+            if xz.any() and rz.any():
+                sims[np.ix_(xz, rz)] = 1.0
+            return left[sims.max(axis=1) < th]
 
-            novel = (
-                intra.groupBy("list_id")
+        return (intra.groupBy("list_id")
                 .cogroup(reps.groupBy("list_id"))
-                .applyInPandas(novel_in_cluster, schema=schema)
-            )
-        else:
-            novel = intra
-        novel = novel.localCheckpoint(eager=True)
-        return [(novel.drop("list_id"), out_path), (novel, index_path)]
+                .applyInPandas(novel_in_cluster,
+                               schema=T.StructType(intra.schema.fields)))
 
-    return _run_append_sink(stream_df, out_path, body, None, query_name,
-                            timeout_s, index_path, compact_index_files)
+    return _run_index_sink(stream_df, out_path, index_path, None, admit,
+                           lambda novel: (novel.drop("list_id"), novel),
+                           query_name, timeout_s)
+
+
+def _ahash_dedup_sink(stream_df: DataFrame, out_path: str, index_path: str,
+                      hasher, max_hamming: int, id_col: str, grid: int,
+                      query_name: str, timeout_s: int) -> "list":
+    """The perceptual-hash body shared by `media_dedup_sink` and
+    `audio_dedup_sink`; `hasher(batch)` returns (__row__, ahash) per row.
+    Within-batch: `image_dup_pairs` blocks on the hashes already computed
+    → `dedup.dup_clusters`, smallest id survives. Against the index: the
+    SAME pigeonhole chunk blocking (`multimodal.ahash_chunk_exprs` —
+    batch and stream block identically): explode both sides into chunks,
+    equi-join on (chunk_id, chunk), verify bit_count(xor) ≤ budget."""
+    from openpolicedata_spark.operators.dedup import dup_clusters
+    from openpolicedata_spark.operators.multimodal import (
+        ahash_chunk_exprs,
+        image_dup_pairs,
+    )
+
+    chunks = ahash_chunk_exprs(max_hamming + 1, grid * grid)
+
+    def sign(batch: DataFrame) -> DataFrame:
+        return batch.join(hasher(batch), on="__row__")
+
+    def admit(signed: DataFrame, idx) -> DataFrame:
+        pairs = image_dup_pairs(signed, max_hamming, id_col=id_col,
+                                grid=grid,
+                                hashes=signed.select(id_col, "ahash"))
+        drop = (dup_clusters(pairs)
+                .where(F.col("doc_id") != F.col("cluster_id"))
+                .select(F.col("doc_id").alias(id_col)))
+        novel = signed.join(drop, on=id_col, how="left_anti")
+        if idx is None:
+            return novel
+        bc = novel.select(
+            id_col, "ahash",
+            F.posexplode(F.array(*chunks)).alias("chunk_id", "chunk"))
+        ic = idx.select(
+            F.col("ahash").alias("iah"),
+            F.posexplode(F.array(*chunks)).alias("chunk_id", "chunk"))
+        # batch side broadcasts (trigger-bounded); the O(corpus) index
+        # is scanned, never shuffled per batch (round 14)
+        matched = (ic.join(F.broadcast(bc), on=["chunk_id", "chunk"])
+                   .where(F.bit_count(F.col("ahash").bitwiseXOR(F.col("iah")))
+                          <= max_hamming)
+                   .select(id_col).distinct())
+        return novel.join(matched, on=id_col, how="left_anti")
+
+    return _run_index_sink(
+        stream_df, out_path, index_path, sign, admit,
+        lambda novel: (novel.drop("ahash"), novel.select(id_col, "ahash")),
+        query_name, timeout_s)
 
 
 def media_dedup_sink(stream_df: DataFrame, out_path: str,
@@ -1016,90 +1088,23 @@ def media_dedup_sink(stream_df: DataFrame, out_path: str,
                      id_col: str = "media_id", grid: int = 8,
                      decode=None,
                      query_name: str = "mediadedup",
-                     timeout_s: int = 300,
-                     compact_index_files: Optional[int] = 64,
-                     hasher=None) -> "list":
-    """Streaming perceptual media dedup: drop images within
-    `max_hamming` bits of anything ever admitted — the multimodal face
-    of `semantic_dedup_sink`, with a 16-byte-per-item index instead of
-    stored vectors.
+                     timeout_s: int = 300) -> "list":
+    """Streaming perceptual image dedup: drop images within
+    `max_hamming` bits of anything ever admitted, with a 16-byte-per-item
+    (id, ahash) index. Every payload is hashed once
+    (`multimodal.image_ahash`; real codecs via `decode=real_decode`, or
+    the injectable test stand-in); within-batch clustering and the
+    pigeonhole index probe are `_ahash_dedup_sink`'s. A redelivered
+    batch re-matches its own indexed hashes at hamming 0, so it never
+    re-admits. Binding, the index probe and publication:
+    `_run_index_sink`."""
+    from openpolicedata_spark.operators.multimodal import image_ahash
 
-    Per micro-batch: perceptual-hash every payload ONCE
-    (`multimodal.image_ahash`, real codecs via `decode=real_decode` or
-    the injectable test stand-in), dedup WITHIN the batch
-    (`image_dup_pairs` blocking on the hashes already computed →
-    `dedup.dup_clusters`, smallest id survives), then check survivors
-    against the persisted (id, ahash) index using the SAME pigeonhole
-    chunk blocking (`multimodal.ahash_chunk_exprs` — batch and stream
-    block identically): explode both sides into chunks, equi-join on
-    (chunk_id, chunk), verify bit_count(xor) ≤ budget. Only novel items
-    append to the output and the index.
-
-    Scale: the index holds one long per admitted item — hamming
-    membership at billions of items is a broadcast-or-shuffle of
-    hashes, never pixels, and per batch the decode cost dominates;
-    `compact_index_files` bounds the one-file-per-batch index growth
-    (`compact_index`, contents preserved, replay-safe).
-    Replay safety: output and index publish together
-    (`_run_append_sink`), and a redelivered batch re-matches its own
-    indexed hashes at hamming 0, so it never re-admits (no zero-norm
-    analog — identical hashes always match)."""
-    from openpolicedata_spark.operators.dedup import dup_clusters
-    from openpolicedata_spark.operators.multimodal import (
-        ahash_chunk_exprs,
-        image_ahash,
-        image_dup_pairs,
-    )
-
-    spark = stream_df.sparkSession
-    n_chunks = max_hamming + 1
-    nbits = grid * grid
-    if hasher is None:
-        def hasher(batch):
-            return image_ahash(batch, content_col, id_col, grid, decode)
-
-    def body(batch: DataFrame, tag: str):
-        if not batch.head(1):
-            return None
-        batch = batch.localCheckpoint(eager=True)
-        # decode + hash every payload ONCE; everything downstream works
-        # off the 64-bit hashes
-        ah = hasher(batch).localCheckpoint(eager=True)
-        # within-batch: smallest id survives each near-dup cluster
-        # (the hamming join blocks purely on the precomputed hashes)
-        pairs = image_dup_pairs(batch, max_hamming, content_col,
-                                id_col, grid, decode, hashes=ah)
-        clusters = dup_clusters(pairs)
-        drop = (clusters.where(F.col("doc_id") != F.col("cluster_id"))
-                .select(F.col("doc_id").alias(id_col)))
-        hashed = (batch.join(drop, on=id_col, how="left_anti")
-                  .join(ah, on=id_col))
-        idx = read_index(spark, index_path)
-        if idx is not None:
-            chunks = ahash_chunk_exprs(n_chunks, nbits)
-            bc = hashed.select(
-                id_col, "ahash",
-                F.posexplode(F.array(*chunks)).alias("chunk_id", "chunk"))
-            ic = idx.select(
-                F.col("ahash").alias("iah"),
-                F.posexplode(F.array(*ahash_chunk_exprs(n_chunks, nbits)))
-                .alias("chunk_id", "chunk"))
-            # batch side broadcasts (trigger-bounded); the O(corpus)
-            # index is scanned, never shuffled per batch (round 14)
-            matched = (ic.join(F.broadcast(bc), on=["chunk_id", "chunk"])
-                       .where(F.bit_count(
-                           F.col("ahash").bitwiseXOR(F.col("iah")))
-                           <= max_hamming)
-                       .select(id_col).distinct())
-            hashed = hashed.join(matched, on=id_col, how="left_anti")
-        novel = hashed.localCheckpoint(eager=True)
-        if not novel.head(1):
-            return None
-        return [(novel.drop("ahash"), out_path),
-                (novel.select(id_col, "ahash"), index_path)]
-
-    return _run_append_sink(stream_df, out_path, body, None, query_name,
-                            timeout_s, index_path, compact_index_files)
+    return _ahash_dedup_sink(
+        stream_df, out_path, index_path,
+        lambda batch: image_ahash(batch, content_col, "__row__", grid,
+                                  decode),
+        max_hamming, id_col, grid, query_name, timeout_s)
 
 
 def audio_dedup_sink(stream_df: DataFrame, out_path: str,
@@ -1108,26 +1113,19 @@ def audio_dedup_sink(stream_df: DataFrame, out_path: str,
                      id_col: str = "media_id",
                      decode=None,
                      query_name: str = "audiodedup",
-                     timeout_s: int = 300,
-                     compact_index_files: Optional[int] = 64) -> "list":
+                     timeout_s: int = 300) -> "list":
     """Streaming perceptual AUDIO dedup — `media_dedup_sink` with the
-    integer energy fingerprint (`multimodal.audio_ahash`) instead of
-    the image ahash. Everything downstream of the hash (within-batch
-    clustering, the pigeonhole index probe, self-compaction, replay
-    safety) is the SAME code path, so batch (`audio_dup_pairs`) and
-    stream block identically and the index stays 16 bytes per admitted
-    clip. `decode` is the injectable ``bytes -> int samples`` stand-in;
-    the default routes real containers through `decode_audio`. The
-    hash is always the full 64 blocks: the index probe chunks 64 bits."""
+    integer energy fingerprint (`multimodal.audio_ahash`); everything
+    downstream of the hash is `_ahash_dedup_sink`, so batch
+    (`audio_dup_pairs`) and stream block identically. `decode` is the
+    injectable ``bytes -> int samples`` stand-in (default: real
+    containers through `decode_audio`); the hash is always 64 blocks."""
     from openpolicedata_spark.operators.multimodal import audio_ahash
 
-    return media_dedup_sink(
-        stream_df, out_path, index_path, max_hamming=max_hamming,
-        content_col=content_col, id_col=id_col,
-        query_name=query_name, timeout_s=timeout_s,
-        compact_index_files=compact_index_files,
-        hasher=lambda batch: audio_ahash(batch, content_col, id_col,
-                                         decode))
+    return _ahash_dedup_sink(
+        stream_df, out_path, index_path,
+        lambda batch: audio_ahash(batch, content_col, "__row__", decode),
+        max_hamming, id_col, 8, query_name, timeout_s)
 
 
 def video_dedup_sink(stream_df: DataFrame, out_path: str,
@@ -1136,37 +1134,22 @@ def video_dedup_sink(stream_df: DataFrame, out_path: str,
                      id_col: str = "media_id",
                      decode=None,
                      query_name: str = "videodedup",
-                     timeout_s: int = 300,
-                     compact_index_files: Optional[int] = 64) -> "list":
+                     timeout_s: int = 300) -> "list":
     """Streaming VIDEO near-dup suppression: drop videos sharing
-    enough exact frame signatures with anything ever admitted — the
-    multi-frame face of `media_dedup_sink`.
-
-    Per micro-batch: decode every container ONCE (`decode_video`
-    magic-byte dispatch — GIF/MP4/AVI/Matroska — or the injectable
-    `decode(bytes) -> [frames]` test stand-in) and perceptually hash
-    each frame (`ahash_of_pixels`), dedup WITHIN the batch
-    (`multimodal.video_dup_pairs` → `dedup.dup_clusters`, smallest id
-    survives), then check survivors against the persisted
-    (id, fhash) index by joining on the frame hash and counting
-    distinct shared signatures per (new, indexed) pair. Only novel
-    videos append to the output and the index.
-
-    A new video is a duplicate when it shares
-    ``least(min_shared, its own distinct-hash count)`` signatures —
-    the LEAST makes replay exact: a re-delivered video matches ALL of
-    its own indexed hashes, so even a clip with fewer than
-    `min_shared` distinct frames never re-admits, and output and index
-    publish together (`_run_append_sink`). Scale: index state
-    is one long per distinct frame hash per admitted video; the
-    cross-batch join ships longs, never frames, and the index
-    self-compacts past `compact_index_files`."""
+    enough exact frame signatures with anything ever admitted. Each
+    container is decoded once (`decode_video` magic-byte dispatch, or
+    the injectable `decode(bytes) -> [frames]` stand-in) and each frame
+    perceptually hashed (`ahash_of_pixels`); within the batch
+    `multimodal.video_dup_pairs` → `dedup.dup_clusters` keeps the
+    smallest id; against the (id, fhash) index a video is a duplicate
+    when it shares ``least(min_shared, its own distinct-hash count)``
+    hashes with one indexed video — the LEAST makes replay exact even
+    for clips with fewer than `min_shared` distinct frames. Binding, the
+    index probe and publication: `_run_index_sink`."""
     from openpolicedata_spark.operators.dedup import dup_clusters
     from openpolicedata_spark.operators.multimodal import video_dup_pairs
 
-    spark = stream_df.sparkSession
-
-    def frame_hash_frame(batch: DataFrame) -> DataFrame:
+    def frame_hashes(batch: DataFrame) -> DataFrame:
         dec = decode
 
         def gen(batches):
@@ -1178,52 +1161,45 @@ def video_dedup_sink(stream_df: DataFrame, out_path: str,
             )
             d = dec or (lambda b: decode_video(b, "video/*")[0])
             for pdf in batches:
-                rows = []
-                for vid, blob in zip(pdf[id_col], pdf[content_col]):
-                    for fh in {ahash_of_pixels(fr)
-                               for fr in d(bytes(blob))}:
-                        rows.append((int(vid), fh))
-                yield pd.DataFrame(rows, columns=[id_col, "fhash"])
+                yield pd.DataFrame({
+                    "__row__": pdf["__row__"],
+                    "fhashes": [sorted({ahash_of_pixels(fr)
+                                        for fr in d(bytes(blob))})
+                                for blob in pdf[content_col]]})
 
-        return batch.select(id_col, content_col).mapInPandas(
-            gen, f"{id_col} long, fhash long")
+        return batch.select("__row__", content_col).mapInPandas(
+            gen, "__row__ long, fhashes array<long>")
 
-    def body(batch: DataFrame, tag: str):
-        if not batch.head(1):
-            return None
-        batch = batch.localCheckpoint(eager=True)
-        fh = frame_hash_frame(batch).localCheckpoint(eager=True)
-        # within-batch: smallest id survives each near-dup cluster
-        pairs = video_dup_pairs(fh, id_col=id_col,
+    def exploded(df: DataFrame) -> DataFrame:
+        return df.select(id_col, F.explode("fhashes").alias("fhash"))
+
+    def admit(signed: DataFrame, idx) -> DataFrame:
+        pairs = video_dup_pairs(exploded(signed), id_col=id_col,
                                 min_shared=min_shared)
-        clusters = dup_clusters(pairs)
-        drop = (clusters.where(F.col("doc_id") != F.col("cluster_id"))
+        drop = (dup_clusters(pairs)
+                .where(F.col("doc_id") != F.col("cluster_id"))
                 .select(F.col("doc_id").alias(id_col)))
-        keep = batch.join(drop, on=id_col, how="left_anti")
-        keep_fh = fh.join(drop, on=id_col, how="left_anti")
-        idx = read_index(spark, index_path)
-        if idx is not None:
-            n_own = keep_fh.groupBy(id_col).agg(
-                F.countDistinct("fhash").alias("n_own"))
-            # batch side broadcasts (trigger-bounded); the O(corpus)
-            # index is scanned, never shuffled per batch (round 14)
-            shared = (idx.select(F.col(id_col).alias("idx_id"), "fhash")
-                      .join(F.broadcast(keep_fh), on="fhash")
-                      .groupBy(id_col, "idx_id")
-                      .agg(F.countDistinct("fhash").alias("n_shared")))
-            dup = (shared.join(n_own, on=id_col)
-                   .where(F.col("n_shared") >= F.least(
-                       F.lit(min_shared), F.col("n_own")))
-                   .select(id_col).distinct())
-            keep = keep.join(dup, on=id_col, how="left_anti")
-            keep_fh = keep_fh.join(dup, on=id_col, how="left_anti")
-        novel = keep.localCheckpoint(eager=True)
-        if not novel.head(1):
-            return None
-        return [(novel, out_path), (keep_fh, index_path)]
+        keep = signed.join(drop, on=id_col, how="left_anti")
+        if idx is None:
+            return keep
+        # batch side broadcasts (trigger-bounded); the O(corpus)
+        # index is scanned, never shuffled per batch (round 14)
+        shared = (idx.select(F.col(id_col).alias("idx_id"), "fhash")
+                  .join(F.broadcast(exploded(keep)), on="fhash")
+                  .groupBy(id_col, "idx_id")
+                  .agg(F.countDistinct("fhash").alias("n_shared")))
+        n_own = keep.select(id_col, F.size("fhashes").alias("n_own"))
+        dup = (shared.join(n_own, on=id_col)
+               .where(F.col("n_shared") >= F.least(
+                   F.lit(min_shared), F.col("n_own")))
+               .select(id_col).distinct())
+        return keep.join(dup, on=id_col, how="left_anti")
 
-    return _run_append_sink(stream_df, out_path, body, None, query_name,
-                            timeout_s, index_path, compact_index_files)
+    return _run_index_sink(
+        stream_df, out_path, index_path,
+        lambda batch: batch.join(frame_hashes(batch), on="__row__"), admit,
+        lambda novel: (novel.drop("fhashes"), exploded(novel)),
+        query_name, timeout_s)
 
 
 def media_scan_sink(stream_df: DataFrame, out_path: str,
@@ -1231,63 +1207,41 @@ def media_scan_sink(stream_df: DataFrame, out_path: str,
                     content_col: str = "content",
                     id_col: str = "media_id",
                     query_name: str = "mediascan",
-                    timeout_s: int = 300,
-                    compact_index_files: Optional[int] = 64) -> "list":
-    """Streaming media INVENTORY ingest — the metadata face of the
-    dedup sinks (round-9 verdict item 5): apply a per-payload scan
-    operator (`multimodal.mp3_scan`, `multimodal.vad_segments`, or
-    any ``df(id, content) -> DataFrame``) to each micro-batch and
-    append its rows EXACTLY ONCE, so an audio-ingest stream can
-    inventory / silence-trim incrementally exactly like the dedup
-    sinks admit content — previously only hashes/features streamed.
-
-    Replay guard: the persisted index holds one (id, payload-md5) row
-    per scanned clip; a redelivered batch anti-joins against it and
-    contributes nothing (full replays re-scan nothing), while the
-    SAME id arriving with CHANGED bytes is a new scan — deliberately
-    admitted, since the inventory of an updated clip differs. NULL
-    payloads digest to '' so their replays drop too (a NULL-keyed
-    anti-join would never match, re-appending them every replay).
-    Within one batch, duplicate (id, digest) deliveries collapse
-    before scanning.
-
-    Scale: the per-clip scan is the mapInPandas pass the batch
-    operator already runs (bytes never leave executors; ≤ a few rows
-    out per clip); the cross-batch state is 16-ish bytes per clip and
-    self-compacts past `compact_index_files` (crash-safe swap, same
-    machinery as every other sink here). Output and index publish
-    together (`_run_append_sink`)."""
-    spark = stream_df.sparkSession
-
-    def body(batch: DataFrame, tag: str):
-        if not batch.head(1):
-            return None
+                    timeout_s: int = 300) -> "list":
+    """Streaming media INVENTORY ingest: apply a per-payload scan
+    (`multimodal.mp3_scan`, `multimodal.vad_segments`, or any
+    ``df(id, content) -> DataFrame``) to each micro-batch and append its
+    rows EXACTLY ONCE. The index holds one (id, payload-md5) row per
+    scanned clip: a redelivered clip contributes nothing, while the SAME
+    id with CHANGED bytes is a fresh scan. NULL payloads digest to '' and
+    the id match is null-safe, so neither re-scans on replay; duplicate
+    (id, digest) deliveries within a batch collapse before scanning.
+    Binding, the index probe and publication: `_run_index_sink`."""
+    def admit(batch: DataFrame, idx) -> DataFrame:
         keyed = (batch.select(
             id_col, content_col,
             F.coalesce(F.md5(F.col(content_col)), F.lit(""))
             .alias("__dg__"))
             .dropDuplicates([id_col, "__dg__"]))
-        idx = read_index(spark, index_path)
-        if idx is not None:
-            # NULL-SAFE on the id (review r9): a plain on=[id_col, ...]
-            # anti-join never matches a NULL id (NULL=NULL is NULL), so
-            # a NULL-id clip would be re-scanned on every replay — the
-            # same hole the '' digest coalesce closes for NULL payloads
-            idx = idx.select(F.col(id_col).alias("__iid__"),
-                             F.col("__dg__").alias("__idg__"))
-            keyed = keyed.join(
-                idx,
-                on=[keyed[id_col].eqNullSafe(idx["__iid__"]),
-                    keyed["__dg__"] == idx["__idg__"]],
-                how="left_anti")
-        novel = keyed.localCheckpoint(eager=True)
-        if not novel.head(1):
-            return None
-        return [(scan(novel.select(id_col, content_col)), out_path),
-                (novel.select(id_col, "__dg__"), index_path)]
+        if idx is None:
+            return keyed
+        # NULL-SAFE on the id (review r9): a plain on=[id_col, ...]
+        # anti-join never matches a NULL id (NULL=NULL is NULL), so
+        # a NULL-id clip would be re-scanned on every replay — the
+        # same hole the '' digest coalesce closes for NULL payloads
+        idx = idx.select(F.col(id_col).alias("__iid__"),
+                         F.col("__dg__").alias("__idg__"))
+        return keyed.join(
+            idx,
+            on=[keyed[id_col].eqNullSafe(idx["__iid__"]),
+                keyed["__dg__"] == idx["__idg__"]],
+            how="left_anti")
 
-    return _run_append_sink(stream_df, out_path, body, None, query_name,
-                            timeout_s, index_path, compact_index_files)
+    return _run_index_sink(
+        stream_df, out_path, index_path, None, admit,
+        lambda novel: (scan(novel.select(id_col, content_col)),
+                       novel.select(id_col, "__dg__")),
+        query_name, timeout_s)
 
 
 def _scd2_bucket_dir(path: str, b) -> str:

@@ -157,3 +157,44 @@ def test_html_loader_fetches_its_page_once(spark, monkeypatch):
     assert _ids(loader.load(date=2022)) == ["A"]
     assert loader.get_count(2023) == 1
     assert calls == ["http://fake.test/page.html"]
+
+
+# one value per `STRING_FORMATS` entry, in its order, and 'Sept.', which
+# the month-name vote accepts but Java's month patterns do not
+_VOTED_VALUES = [
+    ("2022-09-05 10:11:12", "2022-09-05 10:11:12"),
+    ("2022-09-05T10:11", "2022-09-05 10:11:00"),
+    ("2022-09-05", "2022-09-05 00:00:00"),
+    ("2022/09/05", "2022-09-05 00:00:00"),
+    ("9/5/2022 10:11:12", "2022-09-05 10:11:12"),
+    ("9/5/2022 10:11", "2022-09-05 10:11:00"),
+    ("9/5/2022", "2022-09-05 00:00:00"),
+    ("9-5-2022", "2022-09-05 00:00:00"),
+    ("9/5/22", "2022-09-05 00:00:00"),
+    ("20220905", "2022-09-05 00:00:00"),
+    ("Sep 5, 2022", "2022-09-05 00:00:00"),
+    ("September 5 2022", "2022-09-05 00:00:00"),
+    ("5 Sep 2022", "2022-09-05 00:00:00"),
+    ("9/5/2022 1430 hours", "2022-09-05 14:30:00"),
+    ("Sept. 5, 2022", "2022-09-05 00:00:00"),
+    ("sept 5 2022", "2022-09-05 00:00:00"),
+]
+
+
+def test_every_voted_string_format_parses(spark):
+    """The vote and the parse agree: every value the vote classifies
+    parses, under the strategy the vote chose, to its date."""
+    from openpolicedata_spark.functions.datetime import (
+        STRING_FORMATS,
+        _strategy_from_values,
+        to_datetime_expr,
+    )
+
+    assert len(_VOTED_VALUES) == len(STRING_FORMATS) + 2
+    for value, expected in _VOTED_VALUES:
+        strategy = _strategy_from_values("string", [value])
+        assert strategy["kind"] != "unknown", value
+        got = spark.createDataFrame([(value,)], "v string").select(
+            F.date_format(to_datetime_expr(F.col("v"), strategy),
+                          "yyyy-MM-dd HH:mm:ss").alias("t")).first().t
+        assert got == expected, (value, strategy)

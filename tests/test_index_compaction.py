@@ -15,11 +15,13 @@ def _pq_files(path):
     return sorted(glob.glob(os.path.join(path, "*.parquet")))
 
 
-def test_near_dedup_sink_compacts_index_same_admits(spark, tmp_path):
+def test_near_dedup_sink_compacts_index_same_admits(spark, tmp_path,
+                                                    monkeypatch):
     """Drive enough micro-batches (maxFilesPerTrigger=1) that the band
     index crosses the compaction threshold mid-stream; admits must equal
     an uncompacted run's, the index contents must be set-identical, and
     the file count must be below one-file-per-batch."""
+    from openpolicedata_spark import streaming as S
     from openpolicedata_spark.streaming import near_dedup_sink
 
     topics = [
@@ -49,17 +51,18 @@ def test_near_dedup_sink_compacts_index_same_admits(spark, tmp_path):
     spark.createDataFrame([(999, near_of_first)], schema).coalesce(1) \
         .write.parquet(str(src / "f_last"))
 
-    def run(idx, out, **kw):
+    def run(idx, out, max_files):
+        monkeypatch.setattr(S, "COMPACT_INDEX_FILES", max_files)
         stream = (spark.readStream.schema(schema)
                   .option("maxFilesPerTrigger", 1)
                   .parquet(f"{src}/*/"))
         near_dedup_sink(stream, out, idx, num_hashes=32, bands=8,
-                        shingle_k=3, **kw)
+                        shingle_k=3)
 
     out_c, idx_c = str(tmp_path / "out_c"), str(tmp_path / "idx_c")
-    run(idx_c, out_c, compact_index_files=3)
+    run(idx_c, out_c, 3)
     out_u, idx_u = str(tmp_path / "out_u"), str(tmp_path / "idx_u")
-    run(idx_u, out_u, compact_index_files=None)
+    run(idx_u, out_u, None)
 
     kept_c = sorted(r.doc_id for r in spark.read.parquet(out_c).collect())
     kept_u = sorted(r.doc_id for r in spark.read.parquet(out_u).collect())
@@ -67,19 +70,22 @@ def test_near_dedup_sink_compacts_index_same_admits(spark, tmp_path):
     rows = lambda p: sorted(  # noqa: E731
         (r.band_id, r.band_hash) for r in spark.read.parquet(p).collect())
     assert rows(idx_c) == rows(idx_u)
-    # 7 batches appended (multiple part-files each); the compacted index
-    # must end strictly smaller, and below the one-file-per-batch floor
-    assert len(_pq_files(idx_c)) < 7 <= len(_pq_files(idx_u))
+    # 6 batches appended (the 7th only repeats batch 0 and publishes
+    # nothing); the compacted index must end strictly smaller, and below
+    # the one-file-per-batch floor
+    assert len(_pq_files(idx_c)) < 6 <= len(_pq_files(idx_u))
 
 
 def test_media_dedup_sink_replay_over_compaction_boundary(
-        spark, tmp_path):
+        spark, tmp_path, monkeypatch):
     """Fresh-checkpoint FULL replay after the index has been compacted
     mid-stream: same admits, nothing re-admitted, index contents
     identical to before the replay."""
+    from openpolicedata_spark import streaming as S
     from openpolicedata_spark.operators.multimodal import fake_decode
     from openpolicedata_spark.streaming import media_dedup_sink
 
+    monkeypatch.setattr(S, "COMPACT_INDEX_FILES", 2)
     schema = "media_id long, content binary"
     src = tmp_path / "src"
     src.mkdir()
@@ -96,7 +102,7 @@ def test_media_dedup_sink_replay_over_compaction_boundary(
                   .option("maxFilesPerTrigger", 1)
                   .parquet(f"{src}/*/"))
         media_dedup_sink(stream, out, idx, max_hamming=0,
-                         decode=fake_decode, compact_index_files=2)
+                         decode=fake_decode)
 
     run()
     kept = sorted(r.media_id for r in spark.read.parquet(out).collect())
@@ -128,12 +134,15 @@ def _legacy_digests(spark, idx, texts, batch_id=None):
     df.coalesce(1).write.mode("append").parquet(idx)
 
 
-def test_exact_dedup_ingest_replay_after_compaction(spark, tmp_path):
+def test_exact_dedup_ingest_replay_after_compaction(spark, tmp_path,
+                                                    monkeypatch):
     """exact_dedup_ingest with compaction enabled: digests survive the
     rewrite, so a replayed batch_id still short-circuits to its
     persisted survivors and cross-batch membership still drops dups."""
+    from openpolicedata_spark import streaming as S
     from openpolicedata_spark.operators.dedup import exact_dedup_ingest
 
+    monkeypatch.setattr(S, "COMPACT_INDEX_FILES", 3)
     idx = str(tmp_path / "idx")
     out = str(tmp_path / "out")
     schema = "doc_id long, text string"
@@ -146,8 +155,7 @@ def test_exact_dedup_ingest_replay_after_compaction(spark, tmp_path):
             [(100 * day + j, f"content {day}:{j}") for j in range(3)]
             + [(100 * day + 9, "legacy doc")],   # always a known dup
             schema)
-        kept = exact_dedup_ingest(b, idx, out, f"day{day}",
-                                  compact_index_files=3)
+        kept = exact_dedup_ingest(b, idx, out, f"day{day}")
         assert kept.count() == 3  # the legacy dup dropped every day
 
     n_files = len(_pq_files(idx))
@@ -158,15 +166,13 @@ def test_exact_dedup_ingest_replay_after_compaction(spark, tmp_path):
     b1 = spark.createDataFrame(
         [(100 + j, f"content 1:{j}") for j in range(3)]
         + [(109, "legacy doc")], schema)
-    replay = exact_dedup_ingest(b1, idx, out, "day1",
-                                compact_index_files=3)
+    replay = exact_dedup_ingest(b1, idx, out, "day1")
     assert sorted(r.doc_id for r in replay.collect()) == [100, 101, 102]
     assert len(_pq_files(idx)) == n_files  # replay wrote nothing new
 
     # and a NEW batch redelivering day-2 content is still dropped
     b_new = spark.createDataFrame([(500, "content 2:1")], schema)
-    assert exact_dedup_ingest(b_new, idx, out, "day9",
-                              compact_index_files=None).count() == 0
+    assert exact_dedup_ingest(b_new, idx, out, "day9").count() == 0
 
 
 def test_exact_dedup_ingest_reads_marker_row_index(spark, tmp_path):
@@ -193,7 +199,7 @@ def test_exact_dedup_ingest_reads_marker_row_index(spark, tmp_path):
     assert len(before) == 3
     b = spark.createDataFrame(
         [(10, "legacy doc"), (11, "old b"), (12, "new c")], schema)
-    kept = exact_dedup_ingest(b, idx, out, "day1", compact_index_files=None)
+    kept = exact_dedup_ingest(b, idx, out, "day1")
     assert [r.doc_id for r in kept.collect()] == [12]
     assert sorted(r.doc_id for r in exact_dedup_ingest(
         b, idx, out, "day0").collect()) == [1, 2]
@@ -229,10 +235,12 @@ def test_digest_index_read_recovers_crashed_compaction(spark, tmp_path):
     assert not os.path.isdir(idx + ".__old__")
 
 
-def test_semantic_dedup_sink_compaction_same_admits(spark, tmp_path):
+def test_semantic_dedup_sink_compaction_same_admits(spark, tmp_path,
+                                                    monkeypatch):
     """semantic_dedup_sink with a tiny compaction threshold admits the
     same vectors as the default run and keeps the reps index readable
     (schema and rows preserved through the rewrite)."""
+    from openpolicedata_spark import streaming as S
     from openpolicedata_spark.streaming import semantic_dedup_sink
 
     centroids = [[1.0, 0.0], [0.0, 1.0]]
@@ -250,17 +258,17 @@ def test_semantic_dedup_sink_compaction_same_admits(spark, tmp_path):
         spark.createDataFrame(rows, schema).coalesce(1) \
             .write.parquet(str(src / f"f{i}"))
 
-    def run(out, idx, **kw):
+    def run(out, idx, max_files):
+        monkeypatch.setattr(S, "COMPACT_INDEX_FILES", max_files)
         stream = (spark.readStream.schema(schema)
                   .option("maxFilesPerTrigger", 1)
                   .parquet(f"{src}/*/"))
-        semantic_dedup_sink(stream, out, idx, centroids,
-                            threshold=0.95, **kw)
+        semantic_dedup_sink(stream, out, idx, centroids, threshold=0.95)
 
     out_c, idx_c = str(tmp_path / "oc"), str(tmp_path / "ic")
-    run(out_c, idx_c, compact_index_files=2)
+    run(out_c, idx_c, 2)
     out_u, idx_u = str(tmp_path / "ou"), str(tmp_path / "iu")
-    run(out_u, idx_u, compact_index_files=None)
+    run(out_u, idx_u, None)
 
     kc = sorted(r.vec_id for r in spark.read.parquet(out_c).collect())
     ku = sorted(r.vec_id for r in spark.read.parquet(out_u).collect())

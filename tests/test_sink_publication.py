@@ -9,8 +9,10 @@ must equal a clean run's: no row duplicated, none lost.
 `exact_dedup_ingest` is killed the same way and its batch redelivered;
 `compact_parquet_dir` and `rebucket_scd2` must leave a readable table
 at every fault. The tests check behaviour only, not the on-disk layout.
-A static guard keeps every append and rename in the package inside the
-commit module."""
+Static guards keep every append and rename in the package inside the
+commit module, and every index writer's index read and publication in
+one shared step. An all-duplicate batch must publish nothing, and each
+index sink's jobs per drain are pinned."""
 import ast
 import datetime
 import os
@@ -503,3 +505,136 @@ def test_streaming_appends_and_renames_only_in_publication_helpers():
                 stray.append((rel, fn, what))
     assert not stray, stray
     assert "os.rename" in committed
+
+
+def _call_sites(tree, names):
+    """(enclosing qualified name, callee) for every call of a function
+    in `names`, by bare name or attribute."""
+    sites = []
+
+    def visit(node, scope):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                  ast.ClassDef)):
+                visit(child, scope + [child.name])
+                continue
+            if isinstance(child, ast.Call):
+                f = child.func
+                name = (f.id if isinstance(f, ast.Name)
+                        else f.attr if isinstance(f, ast.Attribute) else None)
+                if name in names:
+                    sites.append((".".join(scope) or "<module>", name))
+            visit(child, scope)
+
+    visit(tree, [])
+    return sites
+
+
+def test_index_writers_land_through_one_step():
+    """Every index writer admits and publishes through one step: outside
+    the commit module, `publish`, `roll_forward` and `compact_index` are
+    called only by `streaming._append_step`, and within `streaming/` only
+    `streaming._novel_rows` reads an index."""
+    import pathlib
+
+    import openpolicedata_spark
+
+    root = pathlib.Path(openpolicedata_spark.__file__).parent
+    steps = ("publish", "roll_forward", "compact_index")
+    found = {n: [] for n in steps + ("read_index",)}
+    for py in sorted(root.rglob("*.py")):
+        rel = py.relative_to(root).as_posix()
+        if rel == "publish.py":
+            continue
+        for fn, name in _call_sites(ast.parse(py.read_text()), found):
+            if name != "read_index" or rel.startswith("streaming/"):
+                found[name].append((rel, fn))
+    for name in steps:
+        assert found[name] == [("streaming/__init__.py", "_append_step")], \
+            (name, found[name])
+    assert found["read_index"] == [("streaming/__init__.py", "_novel_rows")]
+
+
+INDEX_SINKS = ["near", "semantic", "media", "audio", "video", "media_scan"]
+
+
+@pytest.mark.parametrize("sink", INDEX_SINKS)
+def test_all_duplicate_batch_publishes_nothing(spark, tmp_path, sink):
+    """A batch with nothing novel adds no file to the output or the
+    index: a full replay of a drained stream (fresh ephemeral checkpoint,
+    every batch a duplicate of what the index holds) leaves both
+    directories as they were."""
+    drain, read = _index_case(spark, tmp_path, sink)
+    out, idx = str(tmp_path / "out"), str(tmp_path / "idx")
+
+    def files():
+        return {d: sorted(n for n in os.listdir(d) if n.endswith(".parquet"))
+                for d in (out, idx)}
+
+    drain(out, idx, None)
+    before, rows = files(), sorted(read(out), key=repr)
+    drain(out, idx, None)
+    assert files() == before
+    assert sorted(read(out), key=repr) == rows
+
+
+# Spark jobs of one two-batch drain of `_index_case`, counted by the
+# query's runId job group (every job started inside foreachBatch carries
+# it). Before the shared admit step the drains ran near 21, semantic 13,
+# media 30, audio 30, video 42 and media_scan 14 jobs; a new eager job in
+# a sink body fails here until the pin is raised with a reason.
+DRAIN_JOBS = {"near": 20, "semantic": 11, "media": 25, "audio": 25,
+              "video": 30, "media_scan": 10}
+
+
+@pytest.mark.parametrize("sink", INDEX_SINKS)
+def test_index_sink_jobs_per_drain_are_pinned(spark, tmp_path, monkeypatch,
+                                              sink):
+    from openpolicedata_spark import streaming as S
+
+    drains = []
+    run = S._run_merge_sink
+    monkeypatch.setattr(S, "_run_merge_sink",
+                        lambda *a, **k: drains.append(run(*a, **k)))
+    drain, _ = _index_case(spark, tmp_path, sink)
+    drain(str(tmp_path / "out"), str(tmp_path / "idx"), None)
+    (progress,) = drains
+    assert len([p for p in progress if p["numInputRows"]]) == 2
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(progress[0]["runId"])
+    assert 0 < len(jobs) <= DRAIN_JOBS[sink]
+
+
+@pytest.mark.parametrize("sink", ["near", "media", "video"])
+def test_signed_rows_keep_their_own_signature(spark, tmp_path, sink):
+    """The signing sinks join each row to its own signature: two rows
+    that share an id in one batch publish once each, not once per
+    signature of that id."""
+    from openpolicedata_spark import streaming as S
+    from openpolicedata_spark.operators.multimodal import fake_decode
+
+    src, out, idx = (tmp_path / "src", str(tmp_path / "out"),
+                     str(tmp_path / "idx"))
+    if sink == "near":
+        schema = "doc_id long, text string"
+        rows = [(1, "the quick brown fox jumps over the lazy dog while the "
+                    "cat watches from the warm windowsill every single day"),
+                (1, "parquet row groups carry footers statistics and column "
+                    "chunk encodings that readers consult before any scan")]
+    else:
+        schema = "media_id long, content binary"
+        rows = [(1, bytes([1]) * 256), (1, bytes([2]) * 256)]
+    _write_files(spark, src, schema, [rows])
+    stream = _file_stream(spark, src, schema)
+    if sink == "near":
+        S.near_dedup_sink(stream, out, idx)
+    elif sink == "media":
+        S.media_dedup_sink(stream, out, idx, max_hamming=0,
+                           decode=fake_decode)
+    else:
+        S.video_dedup_sink(stream, out, idx, min_shared=2,
+                           decode=lambda b: [fake_decode(b + bytes([k]))
+                                             for k in range(3)])
+    assert sorted(tuple(r) for r in spark.read.parquet(out).collect()) \
+        == sorted((i, bytes(v) if sink != "near" else v) for i, v in rows)

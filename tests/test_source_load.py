@@ -203,6 +203,45 @@ def test_csv_loader_detects_charset_inside_zip(spark, tmp_path):
     assert rows[0].name == "Renée"
 
 
+def test_csv_schema_inferred_once_per_file_version(spark, tmp_path,
+                                                  count_jobs):
+    """A loader infers a CSV's schema and charset once per version of the
+    file: a second load of the unchanged file runs no Spark job before
+    its first action, and a file rewritten between two loads is inferred
+    again (its new column type shows)."""
+    import os
+
+    from openpolicedata_spark.sources.file import CsvLoader
+
+    p = tmp_path / "t.csv"
+    p.write_text("id,v\n1,10\n2,20\n")
+    loader = CsvLoader(spark, url=str(p))
+    first, inferred = count_jobs("csv-first", loader.load)
+    again, cached = count_jobs("csv-again", loader.load)
+    assert inferred > 0 and cached == 0
+    assert [tuple(r) for r in again.collect()] == [(1, 10), (2, 20)]
+
+    p.write_text("id,v\n1,x\n2,y\n3,z\n")
+    os.utime(p, ns=(1, 1))   # a new version even on a coarse clock
+    changed, reinferred = count_jobs("csv-changed", loader.load)
+    assert reinferred > 0
+    assert dict(changed.dtypes)["v"] == "string"
+    assert changed.count() == 3
+
+
+def test_json_schema_inferred_once_per_file_version(spark, tmp_path,
+                                                   count_jobs):
+    from openpolicedata_spark.sources.file import JsonLoader
+
+    p = tmp_path / "t.json"
+    p.write_text('{"id": 1, "v": "a"}\n{"id": 2, "v": "b"}\n')
+    loader = JsonLoader(spark, url=str(p))
+    _, inferred = count_jobs("json-first", loader.load)
+    again, cached = count_jobs("json-again", loader.load)
+    assert inferred > 0 and cached == 0
+    assert sorted(tuple(r) for r in again.collect()) == [(1, "a"), (2, "b")]
+
+
 def test_multi_file_dataset_id_routes_to_combined_loader(spark, tmp_path):
     """A list-valued dataset_id (reference multi-file datasets) must build
     a CombinedLoader over per-file children, not treat the list as a

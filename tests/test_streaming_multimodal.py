@@ -1430,14 +1430,16 @@ def test_audio_dedup_sink_mulaw_payload(spark, tmp_path):
     assert kept == [1, 3], kept
 
 
-def test_media_scan_sink_mp3_inventory_exactly_once(spark, tmp_path):
+def test_media_scan_sink_mp3_inventory_exactly_once(spark, tmp_path,
+                                                     monkeypatch):
     """Streaming media INVENTORY ingest (round-9): mp3_scan rows land
     exactly once per (id, payload) — an identical redelivery in a
     later batch contributes nothing, the SAME id with CHANGED bytes is
     a fresh scan, a NULL payload's null-stats row is emitted once and
     never re-emitted on replay, and a FULL replay after index
-    compaction (compact_index_files=1 forces it every batch) re-scans
+    compaction (COMPACT_INDEX_FILES=1 forces it every batch) re-scans
     nothing."""
+    from openpolicedata_spark import streaming as S
     from openpolicedata_spark.operators.multimodal import mp3_scan
     from openpolicedata_spark.sources.mp3 import (
         MP3_BITRATES_KBPS,
@@ -1470,13 +1472,13 @@ def test_media_scan_sink_mp3_inventory_exactly_once(spark, tmp_path):
     ).coalesce(1).write.parquet(str(src / "f2"))
 
     out, idx = str(tmp_path / "out"), str(tmp_path / "idx")
+    monkeypatch.setattr(S, "COMPACT_INDEX_FILES", 1)
 
     def run():
         stream = (spark.readStream.schema(schema)
                   .option("maxFilesPerTrigger", 1)
                   .parquet(f"{src}/*/"))
-        media_scan_sink(stream, out, idx, scan=mp3_scan,
-                        compact_index_files=1)
+        media_scan_sink(stream, out, idx, scan=mp3_scan)
 
     run()
     rows = sorted(((r.media_id, r.n_frames)
