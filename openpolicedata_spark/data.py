@@ -591,6 +591,15 @@ class Source:
         - a portal load with ``sortby="date"`` sorts when the snapshot is
           bound.
 
+        Every loader applies ``select``, the date sort and the
+        ``nrows``/``offset`` window in one step (`DataLoader.load`), so a
+        window is always cut after the sort. ``sortby`` accepts only
+        ``"date"``, and only on a table with a date column; anything else
+        raises ``ValueError``. A portal window is pushed to the server only
+        when it is exact (the pushed date clause needs no local re-filter)
+        and unsorted. A sorted window fetches the whole filtered table, as
+        a file loader reads the whole file.
+
         A file-backed table is the loader's native scan: every action
         re-reads the files, and later filters on ``Table.table`` still
         reach the scan. A portal table (the loader is not file-backed) is
@@ -681,14 +690,17 @@ class Source:
     # --------------------------------------------------------------- re-load
     def load_parquet(self, path: str, table_type: Optional[str] = None,
                      date=None) -> Table:
-        """reference data.py:1540-1587."""
-        df = self.spark.read.parquet(path)
+        """reference data.py:1540-1587. Reads through `ParquetLoader`, so a
+        nanosecond-timestamp file loads repaired."""
+        df = ParquetLoader(self.spark, url=path).load()
         return Table(df, state=self.state, source_name=self.source_name,
                      table_type=table_type, year=date)
 
     def load_csv(self, path: str, table_type: Optional[str] = None, date=None) -> Table:
-        """reference data.py:1438-1538."""
-        df = self.spark.read.csv(path, header=True, inferSchema=True)
+        """reference data.py:1438-1538. Reads through `CsvLoader`: the
+        charset check, and the schema inferred once per file version. A
+        column that `Table.to_csv` wrote as JSON text loads as that text."""
+        df = CsvLoader(self.spark, url=path).load()
         return Table(df, state=self.state, source_name=self.source_name,
                      table_type=table_type, year=date)
 

@@ -84,7 +84,14 @@ class DataLoader(ABC):
     """Loader interface (reference data_loader.py:297-378): ``load`` returns a
     lazy DataFrame; ``get_count`` / ``get_years`` / ``get_agencies`` are the
     discovery fast-paths. ``isfile`` distinguishes file-backed sources (local
-    filtering) from query-API sources (server-side pushdown)."""
+    filtering) from query-API sources (server-side pushdown).
+
+    ``load`` is the one load step. A loader supplies only ``_scan``, its
+    date/agency-filtered rows; ``load`` then applies ``select``, the date
+    sort and the ``nrows``/``offset`` window, in that order, for every
+    loader."""
+
+    date_field: Optional[str] = None
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
@@ -128,6 +135,17 @@ class DataLoader(ABC):
     def isfile(self) -> bool: ...
 
     @abstractmethod
+    def _scan(self, date: DateInput, agency: Optional[str],
+              columns: Optional[list[str]],
+              window: Optional[tuple[Optional[int], int]],
+              ) -> tuple[DataFrame, bool]:
+        """The loader's rows filtered by ``date`` and ``agency``, and whether
+        they are already cut to ``window``. ``columns`` are the columns the
+        load step reads (the selection plus the sort key), None for all; a
+        scan may push them to its source. ``window`` is ``(nrows, offset)``
+        when the load asks for no sort, else None; a scan may push it only
+        when the rows it returns are exactly that window."""
+
     def load(
         self,
         date: DateInput = None,
@@ -137,7 +155,32 @@ class DataLoader(ABC):
         agency: Optional[str] = None,
         select: Optional[list[str]] = None,
         sortby: Optional[str] = None,
-    ) -> DataFrame: ...
+    ) -> DataFrame:
+        """Filtered rows → ``select`` → date sort → ``nrows``/``offset``
+        window (reference data_loader.py:381-439). ``sortby="date"`` orders
+        by the loader's ``date_field``; any other value, or a loader with
+        no date column, raises before anything is read."""
+        if sortby is not None:
+            if sortby != "date":
+                raise ValueError(f"sortby must be 'date' or None, not {sortby!r}")
+            if not self.date_field:
+                raise ValueError(
+                    f"sortby='date' needs a date column; {type(self).__name__} "
+                    f"has none: sort the result explicitly")
+        columns = None
+        if select:
+            columns = list(select)
+            if sortby and self.date_field not in columns:
+                columns.append(self.date_field)
+        df, windowed = self._scan(date, agency, columns,
+                                  None if sortby else (nrows, offset))
+        if select:
+            df = df.select(*select)
+        if sortby:
+            df = df.orderBy(self.date_field)
+        if not windowed:
+            df = apply_limit_offset(df, nrows, offset)
+        return df
 
     def get_count(self, date: DateInput = None, *, agency: Optional[str] = None,
                   force: bool = False) -> int:

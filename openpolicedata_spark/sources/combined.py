@@ -16,18 +16,15 @@ from __future__ import annotations
 from functools import reduce
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame
-
-from openpolicedata_spark.sources.base import (
-    DataLoader,
-    DateInput,
-    apply_limit_offset,
-)
+from openpolicedata_spark.sources.base import DataLoader
 
 
 class CombinedLoader(DataLoader):
     """Wraps child loaders; `how='concat'` unions, `how='join'` outer-joins
-    on `on` keys (the reference only ever declares the join path)."""
+    on `on` keys (the reference only ever declares the join path). The
+    children load whole (date/agency filtered); `select` and the row
+    window apply to the combined frame, under its final column names. It
+    has no date column of its own, so ``sortby="date"`` raises."""
 
     def __init__(
         self,
@@ -50,35 +47,22 @@ class CombinedLoader(DataLoader):
     def isfile(self) -> bool:
         return all(c.isfile() for c in self.children)
 
-    def load(
-        self,
-        date: DateInput = None,
-        nrows: Optional[int] = None,
-        offset: int = 0,
-        *,
-        agency: Optional[str] = None,
-        select: Optional[list[str]] = None,
-        sortby: Optional[str] = None,
-    ) -> DataFrame:
+    def _scan(self, date, agency, columns, window):
         frames = []
         for child in self.children:
-            df = child.load(date=date, agency=agency, select=select, sortby=None)
+            df = child.load(date=date, agency=agency)
             for old, new in self.rename.items():
                 if old in df.columns:
                     df = df.withColumnRenamed(old, new)
             frames.append(df)
 
         if self.how == "concat":
-            out = reduce(
+            return reduce(
                 lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
-            )
-        elif self.how == "join":
+            ), False
+        if self.how == "join":
             if not self.on:
                 raise ValueError("join requires `on` keys (dataset_id.py:29-33)")
-            out = reduce(lambda a, b: a.join(b, on=self.on, how="outer"), frames)
-        else:
-            raise ValueError(f"Unknown combine mode: {self.how}")
-
-        if sortby == "date":
-            raise ValueError("sortby='date' on combined loads: sort the result explicitly")
-        return apply_limit_offset(out, nrows, offset)
+            return reduce(lambda a, b: a.join(b, on=self.on, how="outer"),
+                          frames), False
+        raise ValueError(f"Unknown combine mode: {self.how}")

@@ -31,11 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from openpolicedata_spark.sources import httpio
-from openpolicedata_spark.sources.base import (
-    DataLoader,
-    DateInput,
-    apply_limit_offset,
-)
+from openpolicedata_spark.sources.file import _FileLoader
 
 _YEAR_RE = re.compile(r"^(19|20)\d{2}$")
 
@@ -183,10 +179,13 @@ def reconcile_columns(frames: dict[str, pd.DataFrame],
 # loader
 # ---------------------------------------------------------------------------
 
-class ExcelLoader(DataLoader):
+class ExcelLoader(_FileLoader):
     """Workbook → repaired sheets → Spark ``unionByName`` (reference
     excel.py:24-398). Tests and offline use may inject pre-parsed grids
     via ``sheets=``."""
+
+    # the Year column of a year-sheet workbook, set by each _read
+    _year_column: Optional[str] = None
 
     def __init__(self, spark: SparkSession, url: str,
                  date_field: Optional[str] = None,
@@ -195,20 +194,13 @@ class ExcelLoader(DataLoader):
                  sheets: Optional[dict[str, pd.DataFrame]] = None,
                  sheet_filter: Optional[list[str]] = None,
                  member: Optional[str] = None):
-        super().__init__(spark)
-        self.url = url
-        self.date_field = date_field
-        self.agency_field = agency_field
-        self.query = query or {}
+        super().__init__(spark, url, date_field, agency_field, query)
         self._sheets = sheets
         self.sheet_filter = sheet_filter
         # workbook-inside-zip selection (reference excel.py:69-82:
         # dataset_id names the member; a single-member archive needs no
         # name; multiple members without one is an error)
         self.member = member
-
-    def isfile(self) -> bool:
-        return True
 
     @functools.cached_property
     def _workbook(self) -> str:
@@ -305,10 +297,7 @@ class ExcelLoader(DataLoader):
         from openpolicedata_spark.sources.xlsx import read_xlsx
         return read_xlsx(src)
 
-    def load(self, date: DateInput = None, nrows: Optional[int] = None,
-             offset: int = 0, *, agency: Optional[str] = None,
-             select: Optional[list[str]] = None,
-             sortby: Optional[str] = None) -> DataFrame:
+    def _read(self) -> DataFrame:
         raw = self._raw_sheets()
         if self.sheet_filter:
             raw = {k: v for k, v in raw.items() if k in self.sheet_filter}
@@ -327,18 +316,13 @@ class ExcelLoader(DataLoader):
             sdfs.append(sdf)
         if not sdfs:
             raise ValueError(f"no usable sheets in {self.url}")
+        self._year_column = "Year" if years else None
         df = sdfs[0]
         for other in sdfs[1:]:
             df = df.unionByName(other, allowMissingColumns=True)
-        for k, v in self.query.items():
-            df = df.filter(F.col(k) == F.lit(v))
+        return df
+
+    def _date_column(self) -> Optional[str]:
         # year-sheet workbooks filter on the injected Year column when the
         # dataset has no date column (reference excel.py:340-357)
-        date_field = self.date_field or ("Year" if years else None)
-        df = self.filter_dataframe(df, date_field=date_field, date_filter=date,
-                                   agency=agency, agency_field=self.agency_field)
-        if select:
-            df = df.select(*select)
-        if sortby == "date" and self.date_field:
-            df = df.orderBy(self.date_field)
-        return apply_limit_offset(df, nrows, offset)
+        return self.date_field or self._year_column

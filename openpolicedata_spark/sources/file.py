@@ -24,12 +24,9 @@ import zipfile
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from openpolicedata_spark.sources.base import (
-    DataLoader,
-    DateInput,
-    apply_limit_offset,
-)
+from openpolicedata_spark.sources.base import DataLoader
 
 
 def read_parquet_repaired(spark: SparkSession, path: str) -> DataFrame:
@@ -55,8 +52,6 @@ def read_parquet_repaired(spark: SparkSession, path: str) -> DataFrame:
         return spark.read.parquet(path)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(path)
-    from pyspark.sql import functions as F
-
     for c in nanos_cols:
         df = df.withColumn(
             c, F.timestamp_micros(F.expr(f"`{c}` div 1000")).cast("timestamp_ntz")
@@ -99,34 +94,26 @@ class _FileLoader(DataLoader):
         return self._inferred[1]
 
     def _read(self) -> DataFrame:
+        """The whole input as one frame: the only step a file format
+        supplies."""
         raise NotImplementedError
 
-    def load(
-        self,
-        date: DateInput = None,
-        nrows: Optional[int] = None,
-        offset: int = 0,
-        *,
-        agency: Optional[str] = None,
-        select: Optional[list[str]] = None,
-        sortby: Optional[str] = None,
-    ) -> DataFrame:
+    def _date_column(self) -> Optional[str]:
+        """The column ``date=`` filters on (after ``_read``)."""
+        return self.date_field
+
+    def _scan(self, date, agency, columns, window):
         df = self._read()
         # Static catalog-declared predicates (reference csv_class.py:377-379).
         for k, v in self.query.items():
-            df = df.filter(df[k] == v)
-        df = self.filter_dataframe(
+            df = df.filter(F.col(k) == F.lit(v))
+        return self.filter_dataframe(
             df,
-            date_field=self.date_field,
+            date_field=self._date_column(),
             date_filter=date,
             agency_field=self.agency_field,
             agency=agency,
-        )
-        if select:
-            df = df.select(*select)
-        if sortby == "date" and self.date_field:
-            df = df.orderBy(self.date_field)
-        return apply_limit_offset(df, nrows, offset)
+        ), False
 
 
 class ParquetLoader(_FileLoader):

@@ -18,31 +18,19 @@ from typing import Optional
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from openpolicedata_spark.sources import httpio
-from openpolicedata_spark.sources.base import (
-    DataLoader,
-    DateInput,
-    apply_limit_offset,
-)
+from openpolicedata_spark.sources.file import _FileLoader
 
 
-class HtmlLoader(DataLoader):
+class HtmlLoader(_FileLoader):
     def __init__(self, spark: SparkSession, url: str,
                  date_field: Optional[str] = None,
                  agency_field: Optional[str] = None,
                  query: Optional[dict] = None,
                  tables: Optional[list[pd.DataFrame]] = None):
-        super().__init__(spark)
-        self.url = url
-        self.date_field = date_field
-        self.agency_field = agency_field
-        self.query = query or {}
+        super().__init__(spark, url, date_field, agency_field, query)
         self._tables = tables
-
-    def isfile(self) -> bool:
-        return True
 
     def _fetch(self) -> str:
         """Page bytes → text. Local paths read directly; http(s) URLs go
@@ -73,18 +61,6 @@ class HtmlLoader(DataLoader):
             raise ValueError(f"expected exactly 1 HTML table, got {len(tables)}")
         return tables[0]
 
-    def load(self, date: DateInput = None, nrows: Optional[int] = None,
-             offset: int = 0, *, agency: Optional[str] = None,
-             select: Optional[list[str]] = None,
-             sortby: Optional[str] = None) -> DataFrame:
+    def _read(self) -> DataFrame:
         pdf = self._table
-        df = self.spark.createDataFrame(pdf.astype(str).where(pdf.notna(), None))
-        for k, v in self.query.items():
-            df = df.filter(F.col(k) == F.lit(v))
-        df = self.filter_dataframe(df, date_field=self.date_field, date_filter=date,
-                                   agency=agency, agency_field=self.agency_field)
-        if select:
-            df = df.select(*select)
-        if sortby == "date" and self.date_field:
-            df = df.orderBy(self.date_field)
-        return apply_limit_offset(df, nrows, offset)
+        return self.spark.createDataFrame(pdf.astype(str).where(pdf.notna(), None))

@@ -1,11 +1,18 @@
 """DataLoader bridge over the portal Python Data Sources.
 
 `Source.load(...)` (reference data.py:1165-1219) routes here for REST
-DataTypes. The loader builds the pushdown options (date WHERE, static
-query predicates, agency equality — reference data.py:1372-1436), reads
+DataTypes. The loader supplies the scan of the one load step,
+`DataLoader.load`: it builds the pushdown options (date WHERE, static
+query predicates, agency equality, the columns — reference
+data.py:1372-1436) in `_options`, which `load_stream` shares, reads
 through ``spark.read.format("opd_<portal>")``, and re-applies the exact
 date filter locally when the pushed clause was inaccurate (reference
-`_filter_inaccurate_date_query`, data_loader.py:41-66).
+`_filter_inaccurate_date_query`, data_loader.py:41-66). The date column
+is fetched whenever that residual filter or ``sortby="date"`` needs it.
+The ``nrows``/``offset`` window reaches the server only when the pushed
+clauses are exact and no sort is asked for; a sorted or re-filtered
+window fetches the whole filtered table and is cut locally after the
+sort, as a file loader reads its whole file.
 
 `RestLoader.load` returns the portal scan itself: every action on it
 pages the portal again, and Catalyst pushes later filters into it.
@@ -36,7 +43,6 @@ from openpolicedata_spark.functions.datetime import date_range_filter
 from openpolicedata_spark.sources.base import (
     DataLoader,
     DateInput,
-    apply_limit_offset,
     clean_date_input,
 )
 from openpolicedata_spark.sources.portals.where import (
@@ -151,34 +157,36 @@ class RestLoader(DataLoader):
                 accurate)
 
     # -- load ----------------------------------------------------------------
-    def load(self, date: DateInput = None, nrows: Optional[int] = None,
-             offset: int = 0, *, agency: Optional[str] = None,
-             select: Optional[list[str]] = None,
-             sortby: Optional[str] = None) -> DataFrame:
+    def _options(self, date: DateInput, agency: Optional[str],
+                 columns: Optional[list[str]]) -> tuple[dict, bool]:
+        """Reader options for one filtered read, and whether its pushed
+        clauses are exact. Several clauses (text-date LIKE families) stay
+        separate so each gets its own count and partitions, encoded as
+        JSON. Inexact clauses fetch the date column too: the exact date
+        filter then runs locally (reference data_loader.py:41-66)."""
         opts = self._base_options()
-        client = self._client()
-        wheres, accurate = self._wheres(date, agency, client.dialect)
-        clauses = [w for w in wheres if w.clause]
+        wheres, accurate = self._wheres(date, agency, self._client().dialect)
+        clauses = [w.clause for w in wheres if w.clause]
         if len(clauses) == 1:
-            opts["where"] = clauses[0].clause
+            opts["where"] = clauses[0]
         elif clauses:
-            # multi-clause (text-date LIKE families): keep them separate so
-            # each gets its own count + partitions; encode as JSON
-            opts["wheres_json"] = json.dumps([w.clause for w in clauses])
-        pushed_select = select
-        if (select and not accurate and self.date_field
-                and self.date_field not in select):
-            # the residual exact date filter needs the date column even
-            # when the caller didn't select it — fetch it, drop it below
-            pushed_select = list(select) + [self.date_field]
-        if pushed_select:
-            opts["select"] = ", ".join(pushed_select)
+            opts["wheres_json"] = json.dumps(clauses)
+        if columns and not accurate and self.date_field not in columns:
+            columns = [*columns, self.date_field]
+        if columns:
+            opts["select"] = ", ".join(columns)
         if self.page_size:
             opts["page_size"] = str(self.page_size)
-        # push nrows/offset into the reader ONLY when exact (accurate
-        # clauses): otherwise the residual filter changes row positions
-        # (reference data_loader.py:41-66 applies offset after re-filter).
-        if accurate:
+        return opts, accurate
+
+    def _scan(self, date, agency, columns, window):
+        """The portal read with the filters pushed. The window is pushed
+        only when the clauses are exact and no sort is asked for:
+        otherwise the residual filter or the sort changes row positions."""
+        opts, accurate = self._options(date, agency, columns)
+        pushed = accurate and window is not None
+        if pushed:
+            nrows, offset = window
             if nrows is not None:
                 opts["nrows"] = str(nrows)
             if offset:
@@ -186,16 +194,7 @@ class RestLoader(DataLoader):
         df = self.spark.read.format(self.format_name).options(**opts).load()
         if not accurate:
             df = self._residual_date_filter(df, date)
-            df = apply_limit_offset(df, nrows, offset)
-        if select:
-            # the portal projected server-side, but the sampled schema
-            # covers every column — without this the result would keep the
-            # non-selected columns as silent all-null fields (and the
-            # residual path above may have fetched an extra date column)
-            df = df.select(*select)
-        if sortby == "date" and self.date_field:
-            df = df.orderBy(self.date_field)
-        return df
+        return df, pushed
 
     def load_stream(self, date: DateInput = None, *,
                     agency: Optional[str] = None,
@@ -212,26 +211,17 @@ class RestLoader(DataLoader):
         re-filters would break the linear offset, so they raise here;
         an availableNow drain advances one page per trigger (loop to
         catch a backlog up — semantics in PortalStreamReader)."""
-        opts = self._base_options()
-        client = self._client()
-        wheres, accurate = self._wheres(date, agency, client.dialect)
+        opts, accurate = self._options(date, agency, select)
         if not accurate:
             raise ValueError(
                 "load_stream needs an ACCURATE pushed filter (the "
                 "residual re-filter would change row positions and "
                 "break the stream's linear offset); use a timestamp "
                 "date_format or filter downstream")
-        clauses = [w for w in wheres if w.clause]
-        if len(clauses) == 1:
-            opts["where"] = clauses[0].clause
-        elif clauses:
+        if "wheres_json" in opts:
             raise ValueError(
                 "load_stream supports at most one WHERE clause "
-                f"(got {len(clauses)})")
-        if select:
-            opts["select"] = ", ".join(select)
-        if self.page_size:
-            opts["page_size"] = str(self.page_size)
+                f"(got {len(json.loads(opts['wheres_json']))})")
         df = (self.spark.readStream.format(self.format_name)
               .options(**opts).load())
         if select:

@@ -701,6 +701,11 @@ def standardize(
         return F.when(e == defs.Ethnicity.LATINO,
                       F.lit(defs.Race.LATINO)).otherwise(r)
 
+    def _space_concat(r: Column, e: Column) -> Column:
+        return F.concat_ws(" ", r, e)
+
+    combine = _latino_merge if race_eth_combo == "merge" else _space_concat
+
     for race_c, eth_c, combo_c, group_c in [
         (Columns.RACE_SUBJECT, Columns.ETHNICITY_SUBJECT,
          Columns.RACE_ETHNICITY_SUBJECT, Columns.RE_GROUP_SUBJECT),
@@ -710,37 +715,17 @@ def standardize(
          Columns.RACE_ETHNICITY_OFF_SUB, Columns.RE_GROUP_OFF_SUB),
     ]:
         if race_c in spec_names and eth_c in spec_names and race_eth_combo:
+            # element-wise over whichever side is per person (array)
+            race, eth = F.col(race_c), F.col(eth_c)
             r_arr, e_arr = race_c in array_canonicals, eth_c in array_canonicals
-            if race_eth_combo == "merge":
-                if r_arr and e_arr:
-                    combo = F.zip_with(F.col(race_c), F.col(eth_c),
-                                       _latino_merge)
-                elif r_arr:
-                    combo = F.transform(
-                        F.col(race_c),
-                        lambda r: _latino_merge(r, F.col(eth_c)))
-                elif e_arr:
-                    # scalar race + per-person ethnicity: apply per person
-                    combo = F.transform(
-                        F.col(eth_c),
-                        lambda e: _latino_merge(F.col(race_c), e))
-                else:
-                    combo = _latino_merge(F.col(race_c), F.col(eth_c))
-            else:  # 'concat'
-                if r_arr and e_arr:
-                    combo = F.zip_with(
-                        F.col(race_c), F.col(eth_c),
-                        lambda r, e: F.concat_ws(" ", r, e))
-                elif r_arr:
-                    combo = F.transform(
-                        F.col(race_c),
-                        lambda r: F.concat_ws(" ", r, F.col(eth_c)))
-                elif e_arr:
-                    combo = F.transform(
-                        F.col(eth_c),
-                        lambda e: F.concat_ws(" ", F.col(race_c), e))
-                else:
-                    combo = F.concat_ws(" ", F.col(race_c), F.col(eth_c))
+            if r_arr and e_arr:
+                combo = F.zip_with(race, eth, combine)
+            elif r_arr:
+                combo = F.transform(race, lambda r: combine(r, eth))
+            elif e_arr:
+                combo = F.transform(eth, lambda e: combine(race, e))
+            else:
+                combo = combine(race, eth)
             post_cols[combo_c] = combo
             post_cols[group_c] = combo
             transforms.append(DataMapping(None, combo_c))
