@@ -23,6 +23,8 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from openpolicedata_spark.functions.sqltext import ColumnOrName, bind, column, conj, lit
+
 PERIOD_PRECISIONS = ("day", "month", "quarter", "year")
 
 # Candidate string formats, ordered: first match in sampling wins
@@ -145,78 +147,87 @@ def _strategy_from_values(dtype: str, vals: list) -> dict:
     return {"kind": "unknown"}
 
 
-def to_datetime_expr(col: Column, strategy: Optional[dict] = None,
-                     formats: Optional[list[str]] = None) -> Column:
+def _make_ts(year: str, month: str = "1", day: str = "1") -> str:
+    return f"make_timestamp({year}, {month}, {day}, 0, 0, 0)"
+
+
+def to_datetime_sql(ref: str, strategy: Optional[dict] = None,
+                    formats: Optional[list[str]] = None) -> str:
     """Vectorized conversion to timestamp using a detected strategy
     (reference `to_datetime` datetime_parser.py:530-757 → one coalesce of
-    try_to_timestamp attempts; no row-wise Python)."""
+    try_to_timestamp attempts; no row-wise Python), as SQL over ``ref``."""
     if formats is not None:
         strategy = {"kind": "string", "formats": formats}
     strategy = strategy or {}
     kind = strategy.get("kind", "unknown")
     if kind == "native":
-        return col.cast("timestamp")
+        return f"CAST({ref} AS TIMESTAMP)"
     if kind == "year":
-        return F.make_timestamp(col.cast("int"), F.lit(1), F.lit(1),
-                                F.lit(0), F.lit(0), F.lit(0))
+        return _make_ts(f"CAST({ref} AS INT)")
     if kind == "year_month":
-        s = col.cast("string")
-        return F.make_timestamp(
-            F.substring(s, 1, 4).cast("int"), F.substring(s, 6, 2).cast("int"),
-            F.lit(1), F.lit(0), F.lit(0), F.lit(0),
-        )
+        s = f"CAST({ref} AS STRING)"
+        return _make_ts(f"CAST(substring({s}, 1, 4) AS INT)",
+                        f"CAST(substring({s}, 6, 2) AS INT)")
     if kind == "year_quarter":
-        s_q = F.upper(F.trim(col.cast("string")))
-        q = F.regexp_extract(s_q, r"Q([1-4])$", 1).cast("int")
-        return F.make_timestamp(
-            F.substring(s_q, 1, 4).cast("int"),
-            (q - 1) * 3 + 1, F.lit(1), F.lit(0), F.lit(0), F.lit(0))
+        s_q = f"upper(trim(CAST({ref} AS STRING)))"
+        q = f"CAST(regexp_extract({s_q}, {lit('Q([1-4])$')}, 1) AS INT)"
+        return _make_ts(f"CAST(substring({s_q}, 1, 4) AS INT)",
+                        f"({q} - 1) * 3 + 1")
     if kind == "yyyymmdd":
-        v = col.cast("long")
-        return F.make_timestamp((v / 10000).cast("int"),
-                                ((v / 100) % 100).cast("int"),
-                                (v % 100).cast("int"),
-                                F.lit(0), F.lit(0), F.lit(0))
+        v = f"CAST({ref} AS BIGINT)"
+        return _make_ts(f"CAST({v} / 10000 AS INT)",
+                        f"CAST({v} / 100 % 100 AS INT)",
+                        f"CAST({v} % 100 AS INT)")
     if kind == "mmddyyyy":
-        v = col.cast("long")
-        return F.make_timestamp((v % 10000).cast("int"),
-                                (v / 1000000).cast("int"),
-                                ((v / 10000) % 100).cast("int"),
-                                F.lit(0), F.lit(0), F.lit(0))
+        v = f"CAST({ref} AS BIGINT)"
+        return _make_ts(f"CAST({v} % 10000 AS INT)",
+                        f"CAST({v} / 1000000 AS INT)",
+                        f"CAST({v} / 10000 % 100 AS INT)")
     if kind == "epoch_s":
-        return F.timestamp_seconds(col.cast("long"))
+        return f"timestamp_seconds(CAST({ref} AS BIGINT))"
     if kind == "epoch_ms":
-        return F.timestamp_millis(col.cast("long"))
+        return f"timestamp_millis(CAST({ref} AS BIGINT))"
     # string with known formats, or unknown → try the whole candidate list
     fmts = strategy.get("formats") or [f for _, f in STRING_FORMATS]
-    s = F.trim(col.cast("string"))
+    s = f"trim(CAST({ref} AS STRING))"
     # comma-separated date LISTS take the first entry (reference
     # datetime_parser.py:698-706). Only trigger on an actual list of
     # slash/dash dates — a loose `anything,digit` test would truncate
     # 'Jan 15, 2024' to 'Jan 15' and break the MMM d, yyyy formats.
-    is_date_list = s.rlike(r"^\d{1,4}[-/]\d{1,2}[-/]\d{1,4}\s*,\s*\d{1,4}[-/]")
-    s = F.when(is_date_list, F.trim(F.split(s, ",")[0])).otherwise(s)
+    date_list = lit(r"^\d{1,4}[-/]\d{1,2}[-/]\d{1,4}\s*,\s*\d{1,4}[-/]")
+    s = (f"CASE WHEN {s} RLIKE {date_list} "
+         f"THEN trim(split({s}, ',', -1)[0]) ELSE {s} END")
     # the vote's month-name forms accept 'Sept.', which no Java month
     # pattern reads: parse it as 'Sep.'
-    s = F.regexp_replace(s, r"(?i)^(sep)t(?=[.\s])", "$1")
+    s = f"regexp_replace({s}, {lit(_SEPT)}, '$1')"
     attempts = []
     for f in fmts:
         if f == "__hours__":
             # '11/05/2025 1430 hours' → strip suffix, parse M/d/yyyy HHmm
-            cleaned = F.regexp_replace(s, r"(?i)\s*(hours|hrs)\.?$", "")
-            attempts.append(F.try_to_timestamp(cleaned, F.lit("M/d/yyyy HHmm")))
+            hours = lit(r"(?i)\s*(hours|hrs)\.?$")
+            cleaned = f"regexp_replace({s}, {hours}, '')"
+            attempts.append(f"try_to_timestamp({cleaned}, 'M/d/yyyy HHmm')")
         else:
-            attempts.append(F.try_to_timestamp(s, F.lit(f)))
-    attempts.append(F.try_to_timestamp(s))  # ISO fallback
+            attempts.append(f"try_to_timestamp({s}, {lit(f)})")
+    attempts.append(f"try_to_timestamp({s})")  # ISO fallback
     # masked partial dates '2023-__-__' floor to Jan-1 (year precision;
     # reference datetime_parser.py:643-652 → Period)
     attempts.append(
-        F.when(s.rlike(r"^\d{4}[-/]_+[-/]_+"),
-               F.make_timestamp(F.substring(s, 1, 4).cast("int"), F.lit(1),
-                                F.lit(1), F.lit(0), F.lit(0), F.lit(0))))
+        f"CASE WHEN {s} RLIKE {lit(_MASKED)} "
+        f"THEN {_make_ts(f'CAST(substring({s}, 1, 4) AS INT)')} END")
     # trailing Z / fractional seconds: normalize then ISO-parse
-    attempts.append(F.try_to_timestamp(F.regexp_replace(s, r"[Zz]$", "")))
-    return F.coalesce(*attempts)
+    attempts.append(f"try_to_timestamp(regexp_replace({s}, '[Zz]$', ''))")
+    return f"coalesce({', '.join(attempts)})"
+
+
+def to_datetime_expr(col: ColumnOrName, strategy: Optional[dict] = None,
+                     formats: Optional[list[str]] = None) -> Column:
+    return bind(lambda r: to_datetime_sql(r, strategy, formats), col)
+
+
+# masked partial dates: '2023-__-__'
+_MASKED = r"^\d{4}[-/]_+[-/]_+"
+_SEPT = r"(?i)^(sep)t(?=[.\s])"
 
 
 # --------------------------------------------------------------------------
@@ -224,7 +235,19 @@ def to_datetime_expr(col: Column, strategy: Optional[dict] = None,
 # --------------------------------------------------------------------------
 
 
-def parse_time_expr(col: Column) -> Column:
+_TIME_RX = {
+    "date_t": r"^\d{4}-\d{2}-\d{2}T",
+    "delim": r"[;.](?=\d{2}(:|$))",
+    "ampm": r"^\d{1,2}(:\d{2})?(:\d{2})?\s*[AP]\.?M\.?$",
+    "hour": r"^(\d{1,2})",
+    "minute": r":(\d{2})",
+    "pm": r"P\.?M\.?$",
+    "colon": r"^\d{1,2}:\d{2}(:\d{2})?$",
+    "hhmm": r"^\d{1,4}$",
+}
+
+
+def parse_time_sql(ref: str) -> str:
     """Parse a time-of-day column to *seconds since midnight* (int).
 
     Handles (reference `parse_time` datetime_parser.py:382-527):
@@ -232,91 +255,98 @@ def parse_time_expr(col: Column) -> Column:
     (';'/'.' typo delimiters), 'h:mm AM/PM' (12AM→0, typo '13PM'), embedded
     'T' datetime fragments, junk → null.
     """
-    s = F.upper(F.trim(col.cast("string")))
+    rx = {k: lit(v) for k, v in _TIME_RX.items()}
+    s = f"upper(trim(CAST({ref} AS STRING)))"
     # strip a leading date + 'T' (embedded datetime)
-    s = F.regexp_replace(s, r"^\d{4}-\d{2}-\d{2}T", "")
+    s = f"regexp_replace({s}, {rx['date_t']}, '')"
     # normalize typo delimiters ; . → :
-    s = F.regexp_replace(s, r"[;.](?=\d{2}(:|$))", ":")
+    s = f"regexp_replace({s}, {rx['delim']}, ':')"
 
-    is_ampm = s.rlike(r"^\d{1,2}(:\d{2})?(:\d{2})?\s*[AP]\.?M\.?$")
-    ampm_h = F.regexp_extract(s, r"^(\d{1,2})", 1).try_cast("int")
-    ampm_m = F.coalesce(F.regexp_extract(s, r":(\d{2})", 1).try_cast("int"), F.lit(0))
-    is_pm = s.rlike(r"P\.?M\.?$")
-    h12 = (
-        F.when(is_pm & (ampm_h < 12), ampm_h + 12)
-        .when(~is_pm & (ampm_h == 12), F.lit(0))
-        .when(ampm_h == 13, F.lit(13))  # '13PM' typo → 13 (reference keeps hour)
-        .otherwise(ampm_h)
-    )
-    ampm_secs = h12 * 3600 + ampm_m * 60
+    is_ampm = f"{s} RLIKE {rx['ampm']}"
+    ampm_h = f"TRY_CAST(regexp_extract({s}, {rx['hour']}, 1) AS INT)"
+    ampm_m = f"coalesce(TRY_CAST(regexp_extract({s}, {rx['minute']}, 1) AS INT), 0)"
+    is_pm = f"{s} RLIKE {rx['pm']}"
+    h12 = (f"CASE WHEN {is_pm} AND {ampm_h} < 12 THEN {ampm_h} + 12 "
+           f"WHEN NOT ({is_pm}) AND {ampm_h} = 12 THEN 0 "
+           f"WHEN {ampm_h} = 13 THEN 13 "  # '13PM' typo → 13 (reference keeps hour)
+           f"ELSE {ampm_h} END")
+    ampm_secs = f"({h12}) * 3600 + {ampm_m} * 60"
 
-    is_colon = s.rlike(r"^\d{1,2}:\d{2}(:\d{2})?$")
-    parts = F.split(s, ":")
-    c_h = F.try_element_at(parts, F.lit(1)).try_cast("int")
-    c_m = F.coalesce(F.try_element_at(parts, F.lit(2)).try_cast("int"), F.lit(0))
-    c_s = F.coalesce(F.try_element_at(parts, F.lit(3)).try_cast("int"), F.lit(0))
-    colon_secs = c_h * 3600 + c_m * 60 + c_s
+    is_colon = f"{s} RLIKE {rx['colon']}"
+    parts = f"split({s}, ':', -1)"
+    c_h = f"TRY_CAST(try_element_at({parts}, 1) AS INT)"
+    c_m = f"coalesce(TRY_CAST(try_element_at({parts}, 2) AS INT), 0)"
+    c_s = f"coalesce(TRY_CAST(try_element_at({parts}, 3) AS INT), 0)"
+    colon_secs = f"{c_h} * 3600 + {c_m} * 60 + {c_s}"
 
-    is_hhmm = s.rlike(r"^\d{1,4}$")
-    v = s.try_cast("int")  # try_cast: ANSI mode errors on junk strings
-    hh = (v / 100).cast("int")
-    mm = v % 100
-    hhmm_secs = (
-        F.when((v == 2400), F.lit(0))
-        .when((v == 9999) | (v == 999), F.lit(None))
-        .when((hh <= 23) & (mm <= 59), hh * 3600 + mm * 60)
-        .otherwise(F.lit(None))
-    )
+    is_hhmm = f"{s} RLIKE {rx['hhmm']}"
+    v = f"TRY_CAST({s} AS INT)"  # try_cast: ANSI mode errors on junk strings
+    hh = f"CAST({v} / 100 AS INT)"
+    mm = f"{v} % 100"
+    hhmm_secs = (f"CASE WHEN {v} = 2400 THEN 0 "
+                 f"WHEN {v} = 9999 OR {v} = 999 THEN NULL "
+                 f"WHEN {hh} <= 23 AND {mm} <= 59 THEN {hh} * 3600 + {mm} * 60 "
+                 f"ELSE NULL END")
 
-    out = (
-        F.when(col.isNull(), F.lit(None))
-        .when(is_ampm & (h12 <= 23) & (ampm_m <= 59), ampm_secs)
-        .when(is_colon & (c_h <= 23) & (c_m <= 59) & (c_s <= 59), colon_secs)
-        .when(is_hhmm, hhmm_secs)
-        .otherwise(F.lit(None))
-    )
-    return out.cast("int")
+    ampm_ok = conj(is_ampm, f"({h12}) <= 23", f"{ampm_m} <= 59")
+    colon_ok = conj(is_colon, f"{c_h} <= 23", f"{c_m} <= 59", f"{c_s} <= 59")
+    return (f"CAST(CASE WHEN {ref} IS NULL THEN NULL "
+            f"WHEN {ampm_ok} THEN {ampm_secs} "
+            f"WHEN {colon_ok} THEN {colon_secs} "
+            f"WHEN {is_hhmm} THEN {hhmm_secs} "
+            f"ELSE NULL END AS INT)")
 
 
-def merge_date_time_expr(date_col: Column, time_secs: Column,
-                         empty_time: str = "nat") -> Column:
+def parse_time_expr(col: ColumnOrName) -> Column:
+    return bind(parse_time_sql, col)
+
+
+def merge_date_time_sql(date_ref: str, secs_ref: str,
+                        empty_time: str = "nat") -> str:
     """date + seconds-since-midnight → timestamp (reference
     `merge_date_and_time` datetime_parser.py:206-228). ``empty_time='nat'``
     nulls rows lacking a time; ``'ignore'`` keeps the bare date."""
     if empty_time.lower() not in ("nat", "ignore"):
         raise ValueError(
             f"empty_time must be 'nat' or 'ignore', got {empty_time!r}")
-    merged = F.timestamp_seconds(
-        F.unix_timestamp(date_col.cast("timestamp")) + time_secs.cast("long")
-    )
-    if empty_time.lower() == "nat":
-        return F.when(time_secs.isNull(), None).otherwise(merged)
-    return F.when(time_secs.isNull(), date_col.cast("timestamp")).otherwise(merged)
+    date_ts = f"CAST({date_ref} AS TIMESTAMP)"
+    merged = (f"timestamp_seconds(unix_timestamp({date_ts}, "
+              f"'yyyy-MM-dd HH:mm:ss') + CAST({secs_ref} AS BIGINT))")
+    unset = "NULL" if empty_time.lower() == "nat" else date_ts
+    return f"CASE WHEN {secs_ref} IS NULL THEN {unset} ELSE {merged} END"
 
 
-def date_precision_row_expr(raw: Column, strategy: Optional[dict] = None) -> Column:
+def merge_date_time_expr(date_col: ColumnOrName, time_secs: ColumnOrName,
+                         empty_time: str = "nat") -> Column:
+    return bind(lambda d, t: merge_date_time_sql(d, t, empty_time),
+                date_col, time_secs)
+
+
+def date_precision_row_sql(ref: str, strategy: Optional[dict] = None) -> str:
     """PER-ROW precision for string columns that mix full and masked dates:
     '2023-__-__' rows are year-precision, the rest day-precision."""
-    base = date_precision_expr(strategy)
-    return F.when(
-        F.trim(raw.cast("string")).rlike(r"^\d{4}[-/]_+[-/]_+"), F.lit("year")
-    ).otherwise(base)
+    return (f"CASE WHEN trim(CAST({ref} AS STRING)) RLIKE {lit(_MASKED)} "
+            f"THEN 'year' ELSE {date_precision_sql(strategy)} END")
 
 
-def date_precision_expr(strategy: Optional[dict] = None) -> Column:
+def date_precision_row_expr(raw: ColumnOrName,
+                            strategy: Optional[dict] = None) -> Column:
+    return bind(lambda r: date_precision_row_sql(r, strategy), raw)
+
+
+def date_precision_sql(strategy: Optional[dict] = None) -> str:
     """Companion DATE_PRECISION value for the (date, precision) encoding of
     pd.Period semantics (SURVEY §1.3; reference stores Period('Y'/'M'/'Q')
     for partial dates, data.py:1881-1894). Precision is a property of the
     detected column strategy: 'year' and 'year_month' columns floor to
     Jan-1 / day-1, everything else is day-or-finer."""
     kind = (strategy or {}).get("kind", "unknown")
-    if kind == "year":
-        return F.lit("year")
-    if kind == "year_month":
-        return F.lit("month")
-    if kind == "year_quarter":
-        return F.lit("quarter")
-    return F.lit("day")
+    return lit({"year": "year", "year_month": "month",
+                "year_quarter": "quarter"}.get(kind, "day"))
+
+
+def date_precision_expr(strategy: Optional[dict] = None) -> Column:
+    return column(date_precision_sql(strategy))
 
 
 _PRECISION_MONTHS = {"day": 0, "month": 1, "quarter": 3, "year": 12}

@@ -1,18 +1,22 @@
-"""Value-standardization LUTs compiled to Column expressions.
+"""Value-standardization LUTs compiled to SQL expressions.
 
 Parity target: /root/reference/openpolicedata/_converters.py — race LUT
 (:293-617), ethnicity (:233-290), gender (:620-770), age-range (:146-230),
 injury (:773-851), fatal (:853-881), firearm (:884-905), role (:129-143).
 
 Architecture: the reference applies Python dict/regex lookups row-by-row via
-``Series.apply``. Here each LUT is *compiled once* on the driver into a
-Column expression:
+``Series.apply``. Here each LUT is *compiled once* on the driver into one
+SQL expression over its input:
 
-    exact-code map  →  F.element_at(F.create_map([...literals...]), key)
-    pattern family  →  F.when(col.rlike(...), category) chain
+    exact-code map  →  element_at(map(...literals...), key)
+    pattern family  →  CASE WHEN key RLIKE ... THEN category ... END
     no_id fallback  →  keep original / null / sentinel
 
-The compiled expression is pure Catalyst — whole-stage codegen applies, no
+Each ``*_sql(ref, ...)`` builder returns SQL text over ``ref``, the SQL
+text of its input (`functions.sqltext`: every literal and identifier is
+quoted there); `standardize` embeds it in one projection. The public
+``*_expr(col, ...)`` functions are thin wrappers that bind a Column. The
+compiled expression is pure Catalyst — whole-stage codegen applies, no
 Python in the executor path, and the map literals ship with the plan (they
 are tiny). Per-source quirk codes live in declarative tables keyed by
 source_name, mirroring the reference's per-source dict branches.
@@ -23,25 +27,37 @@ from __future__ import annotations
 from typing import Optional
 
 from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 from openpolicedata_spark.defs import Ethnicity, Fatal, Gender, Injury, PersonType, Race
+from openpolicedata_spark.functions.sqltext import ColumnOrName, bind, conj, lit
 
 # --------------------------------------------------------------------------
 # generic compiler
 # --------------------------------------------------------------------------
 
 
-def compile_lut(
-    col: Column,
+def _fallback_sql(ref: str, no_id: str) -> str:
+    """The value of an unmatched input under ``no_id`` (reference
+    _converters.py:56-70)."""
+    if no_id == "keep":
+        return f"CAST({ref} AS STRING)"
+    if no_id == "null":
+        return "CAST(NULL AS STRING)"
+    if no_id == "error":
+        return lit("__NO_ID_ERROR__")
+    raise ValueError(f"no_id must be keep|null|error, got {no_id!r}")
+
+
+def compile_lut_sql(
+    ref: str,
     exact: Optional[dict[str, str]] = None,
     patterns: Optional[list[tuple[str, str]]] = None,
     no_id: str = "keep",
     upper: bool = True,
     trim: bool = True,
-) -> Column:
+) -> str:
     """Compile (exact-code dict, [(regex, category)] pattern family, no_id
-    fallback) into one Column expression.
+    fallback) into one SQL expression over ``ref``.
 
     ``no_id`` ∈ {'keep', 'null', 'error'} mirrors the reference's fallback
     modes (_converters.py:56-70): keep the original value, null it, or — in
@@ -49,46 +65,37 @@ def compile_lut(
     raises on (raising from a distributed expression is done by a checked
     assert_true at action time).
     """
-    key = col.cast("string")
+    fallback = _fallback_sql(ref, no_id)
+    key = f"CAST({ref} AS STRING)"
     if trim:
-        key = F.trim(key)
+        key = f"trim({key})"
     if upper:
-        key = F.upper(key)
+        key = f"upper({key})"
 
-    expr = None
+    found = []
     if exact:
-        kv = []
-        for k, v in exact.items():
-            kv.extend([F.lit(k.upper() if upper else k), F.lit(v)])
-        expr = F.element_at(F.create_map(*kv), key)
-
-    pattern_expr = None
+        kv = ", ".join(f"{lit(k.upper() if upper else k)}, {lit(v)}"
+                       for k, v in exact.items())
+        found.append(f"element_at(map({kv}), {key})")
     if patterns:
-        for rx, category in patterns:
-            cond = key.rlike(rx)
-            pattern_expr = (
-                F.when(cond, F.lit(category))
-                if pattern_expr is None
-                else pattern_expr.when(cond, F.lit(category))
-            )
-
-    if expr is not None and pattern_expr is not None:
-        matched = F.coalesce(expr, pattern_expr)
+        found.append("CASE " + " ".join(
+            f"WHEN {key} RLIKE {lit(rx)} THEN {lit(category)}"
+            for rx, category in patterns) + " END")
+    if len(found) == 2:
+        matched = f"coalesce({found[0]}, {found[1]})"
     else:
-        matched = expr if expr is not None else pattern_expr
-    if matched is None:
-        matched = F.lit(None).cast("string")
+        matched = found[0] if found else "CAST(NULL AS STRING)"
+    return (f"CASE WHEN {ref} IS NULL THEN NULL "
+            f"ELSE coalesce({matched}, {fallback}) END")
 
-    if no_id == "keep":
-        fallback = col.cast("string")
-    elif no_id == "null":
-        fallback = F.lit(None).cast("string")
-    elif no_id == "error":
-        fallback = F.lit("__NO_ID_ERROR__")
-    else:
-        raise ValueError(f"no_id must be keep|null|error, got {no_id!r}")
 
-    return F.when(col.isNull(), F.lit(None)).otherwise(F.coalesce(matched, fallback))
+def compile_lut(col: ColumnOrName, exact: Optional[dict[str, str]] = None,
+                patterns: Optional[list[tuple[str, str]]] = None,
+                no_id: str = "keep", upper: bool = True,
+                trim: bool = True) -> Column:
+    """`compile_lut_sql` as a Column over ``col``."""
+    return bind(lambda r: compile_lut_sql(r, exact, patterns, no_id, upper,
+                                          trim), col)
 
 
 # --------------------------------------------------------------------------
@@ -169,10 +176,10 @@ AGG_RACE_PATTERNS: list[tuple[str, str]] = [
 ]
 
 
-def race_expr(col: Column, source_name: Optional[str] = None,
-              state: Optional[str] = None, no_id: str = "keep",
-              agg_cat: bool = False) -> Column:
-    """Compile the race LUT for one source into a Column expression
+def race_sql(ref: str, source_name: Optional[str] = None,
+             state: Optional[str] = None, no_id: str = "keep",
+             agg_cat: bool = False) -> str:
+    """Compile the race LUT for one source into a SQL expression
     (reference `_create_race_lut`, _converters.py:293-617). ``agg_cat``
     folds census ancestry answers into the canonical buckets first."""
     exact: dict[str, str] = {}
@@ -183,7 +190,13 @@ def race_expr(col: Column, source_name: Optional[str] = None,
     if source_name in SOURCE_RACE_CODES:
         exact.update(SOURCE_RACE_CODES[source_name])
     patterns = (AGG_RACE_PATTERNS + RACE_PATTERNS) if agg_cat else RACE_PATTERNS
-    return compile_lut(col, exact=exact, patterns=patterns, no_id=no_id)
+    return compile_lut_sql(ref, exact=exact, patterns=patterns, no_id=no_id)
+
+
+def race_expr(col: ColumnOrName, source_name: Optional[str] = None,
+              state: Optional[str] = None, no_id: str = "keep",
+              agg_cat: bool = False) -> Column:
+    return bind(lambda r: race_sql(r, source_name, state, no_id, agg_cat), col)
 
 
 # --------------------------------------------------------------------------
@@ -200,9 +213,14 @@ ETHNICITY_PATTERNS: list[tuple[str, str]] = [
 ]
 
 
-def ethnicity_expr(col: Column, source_name: Optional[str] = None,
+def ethnicity_sql(ref: str, source_name: Optional[str] = None,
+                  no_id: str = "keep") -> str:
+    return compile_lut_sql(ref, patterns=ETHNICITY_PATTERNS, no_id=no_id)
+
+
+def ethnicity_expr(col: ColumnOrName, source_name: Optional[str] = None,
                    no_id: str = "keep") -> Column:
-    return compile_lut(col, patterns=ETHNICITY_PATTERNS, no_id=no_id)
+    return bind(lambda r: ethnicity_sql(r, source_name, no_id), col)
 
 
 # --------------------------------------------------------------------------
@@ -233,14 +251,20 @@ GENDER_PATTERNS: list[tuple[str, str]] = [
 ]
 
 
-def gender_expr(col: Column, source_name: Optional[str] = None,
-                state: Optional[str] = None, no_id: str = "keep") -> Column:
+def gender_sql(ref: str, source_name: Optional[str] = None,
+               state: Optional[str] = None, no_id: str = "keep") -> str:
     exact: dict[str, str] = {}
     if state in NUMERIC_GENDER_CODES:
         exact.update(NUMERIC_GENDER_CODES[state])
     if source_name in NUMERIC_GENDER_CODES:
         exact.update(NUMERIC_GENDER_CODES[source_name])
-    return compile_lut(col, exact=exact, patterns=GENDER_PATTERNS, no_id=no_id)
+    return compile_lut_sql(ref, exact=exact, patterns=GENDER_PATTERNS,
+                           no_id=no_id)
+
+
+def gender_expr(col: ColumnOrName, source_name: Optional[str] = None,
+                state: Optional[str] = None, no_id: str = "keep") -> Column:
+    return bind(lambda r: gender_sql(r, source_name, state, no_id), col)
 
 
 # --------------------------------------------------------------------------
@@ -248,14 +272,18 @@ def gender_expr(col: Column, source_name: Optional[str] = None,
 # --------------------------------------------------------------------------
 
 
-def age_expr(col: Column, min_age: int = 1, max_age: int = 120) -> Column:
+def age_sql(ref: str, min_age: int = 1, max_age: int = 120) -> str:
     """Numeric coercion with outlier nulling (reference preproc.py:2147-2148
     uses nullable Int64 and [1,120] bounds)."""
-    n = col.cast("double")
-    i = F.round(n).cast("int")
-    return F.when(
-        n.isNotNull() & (n == i.cast("double")) & (i >= min_age) & (i <= max_age), i
-    ).otherwise(F.lit(None).cast("int"))
+    n = f"CAST({ref} AS DOUBLE)"
+    i = f"CAST(round({n}) AS INT)"
+    ok = conj(f"{n} IS NOT NULL", f"{n} = CAST({i} AS DOUBLE)",
+              f"{i} >= {lit(min_age)}", f"{i} <= {lit(max_age)}")
+    return f"CASE WHEN {ok} THEN {i} ELSE CAST(NULL AS INT) END"
+
+
+def age_expr(col: ColumnOrName, min_age: int = 1, max_age: int = 120) -> Column:
+    return bind(lambda r: age_sql(r, min_age, max_age), col)
 
 
 AGE_RANGE_NORMALIZE: list[tuple[str, str]] = [
@@ -268,35 +296,33 @@ AGE_RANGE_NORMALIZE: list[tuple[str, str]] = [
 ]
 
 
-def age_range_expr(col: Column, no_id: str = "keep") -> Column:
+def age_range_sql(ref: str, no_id: str = "keep") -> str:
     """Normalize age-range strings to 'lo-hi' / 'lo+' (reference
     `_create_age_range_lut`, _converters.py:146-230). Implemented as a
     regexp_replace chain + the month-name autocorrect ('17-Oct' → '10-17',
     an Excel mangling the reference repairs)."""
     months = {"JAN": 1, "FEB": 2, "MAR": 3, "APR": 4, "MAY": 5, "JUN": 6,
               "JUL": 7, "AUG": 8, "SEP": 9, "OCT": 10, "NOV": 11, "DEC": 12}
-    s = F.upper(F.trim(col.cast("string")))
+    fb = _fallback_sql(ref, no_id)
+    s = f"upper(trim(CAST({ref} AS STRING)))"
     # Excel date-ification: '17-Oct' means the range 10-17.
     month_alt = "|".join(months)
-    mnum = F.element_at(
-        F.create_map(*[F.lit(x) for kv in months.items() for x in (kv[0], str(kv[1]))]),
-        F.regexp_extract(s, rf"^\d+-({month_alt})$", 1),
-    )
-    day = F.regexp_extract(s, rf"^(\d+)-(?:{month_alt})$", 1)
-    s = F.when(
-        s.rlike(rf"^\d+-(?:{month_alt})$"), F.concat(mnum, F.lit("-"), day)
-    ).otherwise(s)
-    for rx, repl in AGE_RANGE_NORMALIZE:
-        s = F.regexp_replace(s, rx, repl)
-    s = F.regexp_replace(s, r"^(\d+)<=X<(\d+)$", "$1-$2")  # 18<=x<25 style
-    known = s.rlike(r"^(\d+-\d+|\d+\+|ADULT|JUVENILE)$")
-    if no_id == "keep":
-        fb = col.cast("string")
-    elif no_id == "null":
-        fb = F.lit(None).cast("string")
-    else:
-        fb = F.lit("__NO_ID_ERROR__")
-    return F.when(col.isNull(), F.lit(None)).when(known, s).otherwise(fb)
+    kv = ", ".join(f"{lit(k)}, {lit(str(v))}" for k, v in months.items())
+    month_rx, day_rx, mangled_rx = (
+        lit(rf"^\d+-({month_alt})$"), lit(rf"^(\d+)-(?:{month_alt})$"),
+        lit(rf"^\d+-(?:{month_alt})$"))
+    mnum = f"element_at(map({kv}), regexp_extract({s}, {month_rx}, 1))"
+    day = f"regexp_extract({s}, {day_rx}, 1)"
+    s = (f"CASE WHEN {s} RLIKE {mangled_rx} "
+         f"THEN concat({mnum}, '-', {day}) ELSE {s} END")
+    for rx, repl in AGE_RANGE_NORMALIZE + [(r"^(\d+)<=X<(\d+)$", "$1-$2")]:
+        s = f"regexp_replace({s}, {lit(rx)}, {lit(repl)})"  # last: 18<=x<25 style
+    known = f"{s} RLIKE " + lit(r"^(\d+-\d+|\d+\+|ADULT|JUVENILE)$")
+    return f"CASE WHEN {ref} IS NULL THEN NULL WHEN {known} THEN {s} ELSE {fb} END"
+
+
+def age_range_expr(col: ColumnOrName, no_id: str = "keep") -> Column:
+    return bind(lambda r: age_range_sql(r, no_id), col)
 
 
 # --------------------------------------------------------------------------
@@ -315,9 +341,13 @@ INJURY_PATTERNS: list[tuple[str, str]] = [
 ]
 
 
-def injury_expr(col: Column, no_id: str = "keep") -> Column:
+def injury_sql(ref: str, no_id: str = "keep") -> str:
     """reference `_create_injury_lut` _converters.py:773-851."""
-    return compile_lut(col, patterns=INJURY_PATTERNS, no_id=no_id)
+    return compile_lut_sql(ref, patterns=INJURY_PATTERNS, no_id=no_id)
+
+
+def injury_expr(col: ColumnOrName, no_id: str = "keep") -> Column:
+    return bind(lambda r: injury_sql(r, no_id), col)
 
 
 FATAL_PATTERNS: list[tuple[str, str]] = [
@@ -328,29 +358,41 @@ FATAL_PATTERNS: list[tuple[str, str]] = [
 ]
 
 
-def fatal_expr(col: Column, no_id: str = "keep") -> Column:
+def fatal_sql(ref: str, no_id: str = "keep") -> str:
     """reference `_create_fatal_lut` _converters.py:853-881."""
-    return compile_lut(col, patterns=FATAL_PATTERNS, no_id=no_id)
+    return compile_lut_sql(ref, patterns=FATAL_PATTERNS, no_id=no_id)
 
 
-def firearm_expr(col: Column, no_id: str = "keep") -> Column:
+def fatal_expr(col: ColumnOrName, no_id: str = "keep") -> Column:
+    return bind(lambda r: fatal_sql(r, no_id), col)
+
+
+FIREARM_PATTERNS: list[tuple[str, str]] = [
+    (r"^(Y|YES|1|TRUE|FIREARM.*)$", "YES"),
+    (r"^(N|NO|0|FALSE|NONE)$", "NO"),
+]
+
+
+def firearm_sql(ref: str, no_id: str = "keep") -> str:
     """reference `_create_firearm_lut` _converters.py:884-905."""
-    return compile_lut(
-        col,
-        patterns=[(r"^(Y|YES|1|TRUE|FIREARM.*)$", "YES"),
-                  (r"^(N|NO|0|FALSE|NONE)$", "NO")],
-        no_id=no_id,
-    )
+    return compile_lut_sql(ref, patterns=FIREARM_PATTERNS, no_id=no_id)
 
 
-def role_expr(col: Column, no_id: str = "keep") -> Column:
+def firearm_expr(col: ColumnOrName, no_id: str = "keep") -> Column:
+    return bind(lambda r: firearm_sql(r, no_id), col)
+
+
+ROLE_PATTERNS: list[tuple[str, str]] = [
+    (r"^(OFFICER|OFF|PO|POLICE.*|DEPUTY|LAW ENFORCEMENT.*)$", PersonType.OFFICER),
+    (r"^(SUBJECT|CIVILIAN|CITIZEN|SUSPECT|COMMUNITY MEMBER)$", PersonType.SUBJECT),
+    (r"^(U|UNK|UNKNOWN|)$", PersonType.UNSPECIFIED),
+]
+
+
+def role_sql(ref: str, no_id: str = "keep") -> str:
     """reference `convert_off_or_civ` _converters.py:129-143."""
-    return compile_lut(
-        col,
-        patterns=[
-            (r"^(OFFICER|OFF|PO|POLICE.*|DEPUTY|LAW ENFORCEMENT.*)$", PersonType.OFFICER),
-            (r"^(SUBJECT|CIVILIAN|CITIZEN|SUSPECT|COMMUNITY MEMBER)$", PersonType.SUBJECT),
-            (r"^(U|UNK|UNKNOWN|)$", PersonType.UNSPECIFIED),
-        ],
-        no_id=no_id,
-    )
+    return compile_lut_sql(ref, patterns=ROLE_PATTERNS, no_id=no_id)
+
+
+def role_expr(col: ColumnOrName, no_id: str = "keep") -> Column:
+    return bind(lambda r: role_sql(r, no_id), col)

@@ -5,7 +5,8 @@ Parity target: /root/reference/openpolicedata/data.py:578-679 (`Table.expand`).
 The reference stores multi-person demographics as dicts {person_idx: value}
 and uses `df.explode`; our standardizer produces `ArrayType` columns
 (SURVEY §1.3), so expand = pad arrays to a common length, `arrays_zip`,
-`posexplode`. Mismatch modes (data.py:644-674):
+`inline_outer` over the zipped persons with their positions. Mismatch
+modes (data.py:644-674):
 
 - 'nan'        → pad shorter arrays with null up to the row max
 - 'error'      → fail the action if person counts disagree (assert_true)
@@ -17,76 +18,86 @@ from __future__ import annotations
 from typing import Optional
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from openpolicedata_spark.functions.sqltext import conj, ident, lit
+
 PERSON_INDEX = "PERSON_INDEX"
+
+
+def _sql_type(t: T.DataType) -> str:
+    """``t`` as a SQL type, struct field names quoted by `ident`."""
+    if isinstance(t, T.StructType):
+        return "STRUCT<" + ", ".join(
+            f"{ident(f.name)}: {_sql_type(f.dataType)}" for f in t.fields) + ">"
+    if isinstance(t, T.ArrayType):
+        return f"ARRAY<{_sql_type(t.elementType)}>"
+    if isinstance(t, T.MapType):
+        return f"MAP<{_sql_type(t.keyType)}, {_sql_type(t.valueType)}>"
+    return t.simpleString()
 
 
 def expand(df: DataFrame, cols: Optional[list[str]] = None,
            mismatch: str = "nan", keep_index: bool = True) -> DataFrame:
     """Explode multi-person array columns into one row per person.
 
-    Scalar (non-array) columns replicate; `posexplode` keeps the person
-    index (the dict keys of the reference encoding). Entirely expression-
-    based — the explode is a narrow map-side op, no shuffle.
+    Scalar (non-array) columns replicate; the person index (the dict keys
+    of the reference encoding) is each person's position. Entirely
+    expression-based — the explode is a narrow map-side op, no shuffle —
+    and built as SQL text applied by one ``selectExpr``.
     """
+    fields = {f.name: f.dataType for f in df.schema.fields}
     if cols is None:
-        cols = [f.name for f in df.schema.fields
-                if isinstance(f.dataType, (T.ArrayType, T.MapType))]
+        cols = [n for n, t in fields.items()
+                if isinstance(t, (T.ArrayType, T.MapType))]
     if not cols:
         return df
-    # MapType {person_idx: value} cells (reference dict encoding,
-    # data.py:578-679 converts dicts → value lists before explode):
-    # key-ordered values become the array form, then one code path
+    maps = {}
     for c in cols:
-        if isinstance(df.schema[c].dataType, T.MapType):
-            df = df.withColumn(
-                c,
-                F.transform(F.array_sort(F.map_keys(F.col(c))),
-                            lambda k: F.element_at(F.col(c), k)))
-    for c in cols:
-        if not isinstance(df.schema[c].dataType, T.ArrayType):
+        t = fields[c]
+        if isinstance(t, T.MapType):
+            maps[c] = t.valueType
+        elif not isinstance(t, T.ArrayType):
             raise ValueError(f"Column {c} is not an array or map column")
+    if maps:
+        # MapType {person_idx: value} cells (reference dict encoding,
+        # data.py:578-679 converts dicts → value lists before explode):
+        # key-ordered values become the array form, then one code path
+        df = df.selectExpr(*[
+            f"transform(array_sort(map_keys({ident(c)})), "
+            f"__k -> element_at({ident(c)}, __k)) AS {ident(c)}"
+            if c in maps else ident(c) for c in fields])
+    elem_types = {c: maps[c] if c in maps else fields[c].elementType
+                  for c in cols}
 
-    sizes = [F.size(F.col(c)) for c in cols]
-    n = F.greatest(*sizes) if len(sizes) > 1 else sizes[0]
-    n = F.when(n < 1, F.lit(1)).otherwise(n)  # rows with all-empty arrays keep 1 row
+    sizes = [f"size({ident(c)})" for c in cols]
+    n = f"greatest({', '.join(sizes)})" if len(sizes) > 1 else sizes[0]
+    n = f"CASE WHEN {n} < 1 THEN 1 ELSE {n} END"  # rows with all-empty arrays keep 1 row
 
     if mismatch == "error":
         # Fail the action on disagreeing person counts (data.py mismatch='error').
-        agree = None
-        for c in cols:
-            ok = (F.size(F.col(c)) <= 1) | (F.size(F.col(c)) == n)
-            agree = ok if agree is None else (agree & ok)
-        df = df.filter(
-            F.when(agree, F.lit(True)).otherwise(
-                F.raise_error(F.lit("mismatched person counts in expand"))
-            )
-        )
+        agree = conj(*[f"size({ident(c)}) <= 1 OR size({ident(c)}) = {n}"
+                       for c in cols])
+        df = df.where(f"CASE WHEN {agree} THEN TRUE ELSE raise_error("
+                      f"{lit('mismatched person counts in expand')}) END")
 
-    def padded(c: str):
-        arr = F.col(c)
+    def padded(c: str) -> str:
+        arr = ident(c)
         if mismatch == "splitsingle":
             # replicate singletons to the row max (data.py:666-674)
-            arr = F.when(
-                F.size(arr) == 1,
-                F.transform(F.sequence(F.lit(1), n), lambda _: F.element_at(F.col(c), 1)),
-            ).otherwise(arr)
+            arr = (f"CASE WHEN size({arr}) = 1 THEN transform(sequence(1, {n}), "
+                   f"__i -> element_at({arr}, 1)) ELSE {arr} END")
         # pad with nulls to n (data.py:644-664 'nan' mode). Guard the
-        # sequence: F.sequence(1, 0) yields a DESCENDING sequence, not empty.
-        pad = F.transform(
-            F.sequence(F.lit(1), n - F.size(arr)),
-            lambda _: F.lit(None).cast(df.schema[c].dataType.elementType),
-        )
-        return F.when(F.size(arr) >= n, arr).otherwise(F.concat(arr, pad))
+        # sequence: sequence(1, 0) yields a DESCENDING sequence, not empty.
+        pad = (f"transform(sequence(1, {n} - size({arr})), "
+               f"__i -> CAST(NULL AS {_sql_type(elem_types[c])}))")
+        return f"CASE WHEN size({arr}) >= {n} THEN {arr} ELSE concat({arr}, {pad}) END"
 
-    zipped = F.arrays_zip(*[padded(c).alias(c) for c in cols])
-    other = [c for c in df.columns if c not in cols]
-    out = df.select(*other, F.posexplode_outer(zipped).alias(PERSON_INDEX, "__z__"))
-    for c in cols:
-        out = out.withColumn(c, F.col("__z__")[c])
-    out = out.drop("__z__")
-    if not keep_index:
-        out = out.drop(PERSON_INDEX)
-    return out
+    # arrays_zip names the fields of computed arrays by position
+    person = ", ".join(
+        ([f"__i AS {ident(PERSON_INDEX)}"] if keep_index else [])
+        + [f"__z.{ident(str(k))} AS {ident(c)}" for k, c in enumerate(cols)])
+    people = (f"transform(arrays_zip({', '.join(padded(c) for c in cols)}), "
+              f"(__z, __i) -> struct({person}))")
+    other = [ident(c) for c in fields if c not in cols]
+    return df.selectExpr(*other, f"inline_outer({people})")

@@ -158,8 +158,9 @@ class DataLoader(ABC):
     ) -> DataFrame:
         """Filtered rows → ``select`` → date sort → ``nrows``/``offset``
         window (reference data_loader.py:381-439). ``sortby="date"`` orders
-        by the loader's ``date_field``; any other value, or a loader with
-        no date column, raises before anything is read."""
+        by the loader's ``date_field`` read as a date (`_date_sort_keys`);
+        any other value, or a loader with no date column, raises before
+        anything is read."""
         if sortby is not None:
             if sortby != "date":
                 raise ValueError(f"sortby must be 'date' or None, not {sortby!r}")
@@ -174,13 +175,28 @@ class DataLoader(ABC):
                 columns.append(self.date_field)
         df, windowed = self._scan(date, agency, columns,
                                   None if sortby else (nrows, offset))
+        keys = self._date_sort_keys(df) if sortby else None
         if select:
             df = df.select(*select)
-        if sortby:
-            df = df.orderBy(self.date_field)
+        if keys:
+            df = df.orderBy(*keys)
         if not windowed:
             df = apply_limit_offset(df, nrows, offset)
         return df
+
+    def _sort_strategy(self, df: DataFrame) -> Optional[dict]:
+        """The date-layer strategy the date sort parses ``date_field``
+        with; None sorts the raw values."""
+        return self._column_strategy(df, self.date_field)
+
+    def _date_sort_keys(self, df: DataFrame) -> list:
+        """The date sort: the date layer's parse of ``date_field`` (so a
+        text date column sorts by date, not as text), then the raw value
+        as a tiebreak."""
+        raw = F.col(self.date_field)
+        strategy = self._sort_strategy(df)
+        return [raw] if strategy is None else [
+            to_datetime_expr(raw, strategy), raw]
 
     def get_count(self, date: DateInput = None, *, agency: Optional[str] = None,
                   force: bool = False) -> int:

@@ -184,7 +184,8 @@ class ExcelLoader(_FileLoader):
     excel.py:24-398). Tests and offline use may inject pre-parsed grids
     via ``sheets=``."""
 
-    # the Year column of a year-sheet workbook, set by each _read
+    # the Year column of a year-sheet workbook, set by each _read from
+    # the memoized repair
     _year_column: Optional[str] = None
 
     def __init__(self, spark: SparkSession, url: str,
@@ -297,13 +298,20 @@ class ExcelLoader(_FileLoader):
         from openpolicedata_spark.sources.xlsx import read_xlsx
         return read_xlsx(src)
 
-    def _read(self) -> DataFrame:
+    def _repaired(self) -> tuple[dict[str, pd.DataFrame], dict]:
+        """The repaired sheets and their year-sheet years."""
         raw = self._raw_sheets()
         if self.sheet_filter:
             raw = {k: v for k, v in raw.items() if k in self.sheet_filter}
         repaired = {name: repair_sheet(grid) for name, grid in raw.items()}
         years = detect_year_sheets(list(repaired))
-        repaired = reconcile_columns(repaired)
+        return reconcile_columns(repaired), years
+
+    def _read(self) -> DataFrame:
+        # one parse and repair per workbook version; injected sheets have
+        # no file
+        repaired, years = (self._repaired() if self._sheets is not None
+                           else self._infer_once(self._workbook, self._repaired))
         sdfs = []
         for name, pdf in repaired.items():
             if pdf.empty:

@@ -79,11 +79,12 @@ class _FileLoader(DataLoader):
         return True
 
     def _infer_once(self, path: str, infer):
-        """`infer()` — the reader's schema inference, a Spark job or two —
-        once per version of the local file at `path` (its size and mtime;
-        a spool file is content-addressed and never rewritten), memoized
-        per loader like ``_last_count``. A path that is not local is
-        inferred on every read."""
+        """`infer()` — work that depends on the file alone: a reader's
+        schema inference (CSV, JSON: a Spark job or two), a workbook's
+        parse and repair (Excel) — once per version of the local file at
+        `path` (its size and mtime; a spool file is content-addressed and
+        never rewritten), memoized per loader like ``_last_count``. A path
+        that is not local is inferred on every read."""
         try:
             st = os.stat(path)
         except OSError:

@@ -228,6 +228,12 @@ class RestLoader(DataLoader):
             df = df.select(*select)
         return df
 
+    def _sort_strategy(self, df: DataFrame) -> Optional[dict]:
+        """The date sort parses the text formats the residual filter
+        parses (no sample job); every other `DateFormat` already sorts
+        in date order raw."""
+        return STRATEGY_OF_FORMAT.get(self.date_format)
+
     def _residual_date_filter(self, df: DataFrame, date: DateInput) -> DataFrame:
         """Exact re-filter after inaccurate pushdown: the date layer's
         `date_range_filter`, under the strategy of the column's DateFormat,

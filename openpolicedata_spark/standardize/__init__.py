@@ -11,9 +11,9 @@ Spark architecture (SURVEY §2.10 mapping): column *identification* is
 driver-side Python over ``df.schema`` plus ONE sample job
 (``df.limit(N).toPandas()``) — heuristics never scan the data; the
 date-format vote reads the same sample when it holds every row. The chosen
-mappings are then *applied* as compiled Column expressions in a single
-``withColumns`` — one lazy projection, fully codegen'd, no Python at
-execution time.
+mappings are then *applied* as SQL text (the ``*_sql`` builders of
+`functions`), one ``selectExpr`` per projection — lazy, fully codegen'd,
+no Python at execution time, and one py4j call to build each.
 """
 
 from __future__ import annotations
@@ -26,7 +26,7 @@ from typing import Any, Callable, Optional
 _log = logging.getLogger(__name__)
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from openpolicedata_spark import defs
@@ -34,12 +34,13 @@ from openpolicedata_spark.defs import Columns
 from openpolicedata_spark.functions import luts
 from openpolicedata_spark.functions.datetime import (
     _strategy_from_values,
-    date_precision_expr,
+    date_precision_sql,
     detect_date_format,
-    merge_date_time_expr,
-    parse_time_expr,
-    to_datetime_expr,
+    merge_date_time_sql,
+    parse_time_sql,
+    to_datetime_sql,
 )
+from openpolicedata_spark.functions.sqltext import ident as sql_ident, lit
 
 SAMPLE_N = 1000
 
@@ -270,6 +271,28 @@ def _date_strategy(ident: "ColumnIdentifier", date_col: str) -> dict:
     return detect_date_format(ident.df, date_col)
 
 
+def _with_columns(df: DataFrame, columns: list[str], new: dict[str, str],
+                  renames: Optional[dict[str, str]] = None,
+                  ) -> tuple[DataFrame, list[str]]:
+    """``df.withColumnsRenamed(renames).withColumns(new)`` as one
+    ``selectExpr``, for ``df`` with ``columns``; ``new`` maps a name to its
+    SQL. A renamed column keeps its place; a new column replaces a
+    same-named one (names match case-insensitively, as Spark resolves
+    them) or is appended. Returns the frame and its columns."""
+    renames = {k.lower(): v for k, v in (renames or {}).items()}
+    new_by_key = {k.lower(): k for k in new}
+    exprs, names = [], []
+    for c in columns:
+        name = renames.get(c.lower(), c)
+        key = new_by_key.pop(name.lower(), None)
+        exprs.append(f"{new[key]} AS {sql_ident(key)}" if key is not None
+                     else sql_ident(c) if name == c
+                     else f"{sql_ident(c)} AS {sql_ident(name)}")
+        names.append(name if key is None else key)
+    exprs += [f"{new[k]} AS {sql_ident(k)}" for k in new_by_key.values()]
+    return df.selectExpr(*exprs), names + list(new_by_key.values())
+
+
 def standardize(
     df: DataFrame,
     table_type: Optional[str] = None,
@@ -296,7 +319,7 @@ def standardize(
     Pipeline order mirrors the reference: id columns → date → time →
     datetime merge → race → ethnicity → combo → gender → age → age range →
     injury → fatal → zip. Identification = driver-side heuristics on one
-    sample; application = ONE ``withColumns`` projection.
+    sample; application = one ``selectExpr`` of SQL text per projection.
 
     ``race_cats``/``eth_cats``/``gender_cats`` relabel canonical output
     categories (reference data.py:682-757: keys must be known category
@@ -333,12 +356,12 @@ def standardize(
         return {v for k, v in vars(cls).items()
                 if not k.startswith("_") and isinstance(v, str)}
 
-    def _relabel(expr_fn, cats: Optional[dict], valid: set[str], what: str):
-        """Wrap a scalar standardizer so canonical categories map to the
-        caller's labels (reference data.py:682-757; invalid keys raise
+    def _relabel(sql_fn, cats: Optional[dict], valid: set[str], what: str):
+        """Wrap a scalar SQL standardizer so canonical categories map to
+        the caller's labels (reference data.py:682-757; invalid keys raise
         like BadCategoryDict, exceptions.py:65)."""
         if not cats:
-            return expr_fn
+            return sql_fn
         bad = set(cats) - valid
         if bad:
             from openpolicedata_spark.exceptions import BadCategoryDict
@@ -346,9 +369,13 @@ def standardize(
             raise BadCategoryDict(
                 f"Invalid {what} category keys: {sorted(bad)} "
                 f"(must be a subset of the known {what} categories)")
-        m = F.create_map(*[F.lit(x) for kv in cats.items() for x in kv])
-        return lambda c: (lambda base: F.coalesce(F.element_at(m, base),
-                                                  base))(expr_fn(c))
+        m = "map(" + ", ".join(lit(x) for kv in cats.items() for x in kv) + ")"
+
+        def relabeled(ref: str) -> str:
+            base = sql_fn(ref)
+            return f"coalesce(element_at({m}, {base}), {base})"
+
+        return relabeled
 
     if df.isStreaming and sample_df is None:
         raise ValueError(
@@ -366,7 +393,7 @@ def standardize(
     from openpolicedata_spark.standardize.extras import (
         detect_gender_race_swap,
         find_onehot_group,
-        fold_onehot_expr,
+        fold_onehot_sql,
         validate_name,
     )
 
@@ -375,17 +402,19 @@ def standardize(
     if not any("race" in c.lower() for c in df.columns):
         group = find_onehot_group(df.columns, ident.sample)
         if group:
-            onehot = fold_onehot_expr(group)
-            df = df.withColumn("race_onehot", onehot)
-            probe = probe.withColumn("race_onehot", onehot)
+            onehot = f"{fold_onehot_sql(group)} AS race_onehot"
+            df = df.selectExpr("*", onehot)
+            probe = df if sample_df is None else probe.selectExpr("*", onehot)
             ident = ColumnIdentifier(probe, table_type, source_name, known_cols)
             ident.excluded = set(group)  # consumed: don't re-identify members
     col_map = ColumnMap()
     # (canonical, raw, builder) — applied AFTER raw columns are renamed
     # RAW_*: Spark resolves column names case-insensitively, so adding
     # SUBJECT_RACE while subject_race exists would silently overwrite it.
-    specs: list[tuple[str, str, Callable[[Column], Column]]] = []
-    post_cols: dict[str, Column] = {}  # built from canonical columns
+    # A builder maps the SQL text of its raw column to the SQL of the
+    # canonical one.
+    specs: list[tuple[str, str, Callable[[str], str]]] = []
+    post_cols: dict[str, str] = {}  # SQL over canonical columns
     transforms: list[DataMapping] = []
 
     def pick(canonical: str, candidates: list[str]) -> Optional[str]:
@@ -407,11 +436,11 @@ def standardize(
         col_map[Columns.DATE] = date_col
         strat = _date_strategy(ident, date_col)
         specs.append((Columns.DATE, date_col,
-                      lambda c, s=strat: to_datetime_expr(c, s)))
+                      lambda r, s=strat: to_datetime_sql(r, s)))
         # (date, precision) pair = the reference's pd.Period encoding
         # (SURVEY §1.3): partial dates floor + carry their granularity
         if strat.get("kind") in ("year", "year_month", "year_quarter"):
-            post_cols[Columns.DATE_PRECISION] = date_precision_expr(strat)
+            post_cols[Columns.DATE_PRECISION] = date_precision_sql(strat)
         transforms.append(DataMapping(date_col, Columns.DATE,
                                       {"strategy": strat}))
 
@@ -423,13 +452,12 @@ def standardize(
     ])
     if time_col:
         col_map[Columns.TIME] = time_col
-        specs.append((Columns.TIME, time_col, parse_time_expr))
+        specs.append((Columns.TIME, time_col, parse_time_sql))
         transforms.append(DataMapping(time_col, Columns.TIME))
 
     if merge_date_time and date_col and time_col:
-        post_cols[Columns.DATETIME] = merge_date_time_expr(
-            F.col(Columns.DATE), F.col(Columns.TIME), empty_time=empty_time
-        )
+        post_cols[Columns.DATETIME] = merge_date_time_sql(
+            sql_ident(Columns.DATE), sql_ident(Columns.TIME), empty_time=empty_time)
         transforms.append(DataMapping(None, Columns.DATETIME))
 
     # ----------------------------------------------------- demographic columns
@@ -440,8 +468,8 @@ def standardize(
         MultType,
         agreement,
         detect_multi,
-        dict_expr,
-        multi_expr,
+        dict_sql,
+        multi_sql,
     )
     mult_candidates: dict[str, Any] = {}
     mult_kwargs: dict[str, dict] = {}
@@ -470,7 +498,6 @@ def standardize(
         the same role whose names differ only by an incrementing 1..N are
         one table of people merged sideways). Trailing empties are
         trimmed; interior nulls become '' to preserve person positions."""
-        nonlocal df
         by_role: dict[Any, list[str]] = {}
         for c in cols:
             by_role.setdefault(roles[c], []).append(c)
@@ -488,17 +515,14 @@ def standardize(
                 continue
             ordered = [c for _, c in sorted(zip(nums, group))]
             merged = bases[0].strip("_ ") + "_merged"
-            arr = F.array(*[F.col(c).cast("string") for c in ordered])
-            n = len(ordered)
-            last = F.aggregate(
-                F.sequence(F.lit(1), F.lit(n)), F.lit(0),
-                lambda acc, i: F.when(
-                    F.element_at(arr, i).isNotNull()
-                    & (F.trim(F.element_at(arr, i)) != ""), i).otherwise(acc),
-            )
-            df = df.withColumn(merged, F.transform(
-                F.slice(arr, 1, last),
-                lambda x: F.coalesce(F.trim(x), F.lit(""))))
+            arr = ("array(" + ", ".join(f"CAST({sql_ident(c)} AS STRING)"
+                                        for c in ordered) + ")")
+            last = (f"aggregate(sequence(1, {len(ordered)}), 0, (__acc, __i) -> "
+                    f"CASE WHEN element_at({arr}, __i) IS NOT NULL "
+                    f"AND trim(element_at({arr}, __i)) != '' "
+                    f"THEN __i ELSE __acc END)")
+            merged_cols[merged] = (f"transform(slice({arr}, 1, {last}), "
+                                   f"__x -> coalesce(trim(__x), ''))")
             transforms.append(DataMapping(
                 str(ordered), merged, {"numbered_merge": ordered}))
             out_cols = [c for c in out_cols if c not in group]
@@ -508,6 +532,8 @@ def standardize(
         return out_cols
 
     _merged_arrays: dict[str, list[str]] = {}
+    # numbered-merge array columns: name → SQL, added with the renames
+    merged_cols: dict[str, str] = {}
 
     def std_demographic(substrs, validator, canonical_triplet, expr_fn,
                         exclude=None, allow_multi=False,
@@ -534,8 +560,8 @@ def standardize(
             if c in _merged_arrays:
                 # numbered-merge output is already array<string>: apply the
                 # scalar standardizer per person, positions preserved
-                specs.append((canonical, c,
-                              lambda col, fn=expr_fn: F.transform(col, fn)))
+                specs.append((canonical, c, lambda r, fn=expr_fn:
+                              f"transform({r}, __x -> {fn('__x')})"))
                 transforms.append(DataMapping(c, canonical))
                 used.append((canonical, c))
                 continue
@@ -547,7 +573,7 @@ def standardize(
                 # standardize values in place; text-mode detection would
                 # misread the rendered dict as a delimited string
                 specs.append((canonical, c,
-                              lambda col, fn=expr_fn: dict_expr(col, fn)))
+                              lambda r, fn=expr_fn: dict_sql(r, fn)))
                 transforms.append(DataMapping(c, canonical,
                                               {"multi": "dict"}))
                 used.append((canonical, c))
@@ -572,8 +598,8 @@ def standardize(
         ["race", "ethnicity race", "race ethnicity"], ident.validate_race,
         (Columns.RACE_SUBJECT, Columns.RACE_OFFICER, Columns.RACE_OFF_SUB),
         _relabel(
-            lambda c: luts.race_expr(c, source_name=source_name, state=state,
-                                     no_id=no_id, agg_cat=agg_race_cat),
+            lambda r: luts.race_sql(r, source_name=source_name, state=state,
+                                    no_id=no_id, agg_cat=agg_race_cat),
             race_cats, _cat_values(defs.Race), "race"),
         exclude=["ethnicity"], allow_multi=True,
     )
@@ -581,7 +607,7 @@ def standardize(
         ["ethnicity", "hispanic"], None,
         (Columns.ETHNICITY_SUBJECT, Columns.ETHNICITY_OFFICER, Columns.ETHNICITY_OFF_SUB),
         _relabel(
-            lambda c: luts.ethnicity_expr(c, source_name=source_name, no_id=no_id),
+            lambda r: luts.ethnicity_sql(r, source_name=source_name, no_id=no_id),
             eth_cats, _cat_values(defs.Ethnicity), "ethnicity"),
         allow_multi=True,
     )
@@ -589,8 +615,8 @@ def standardize(
         ["gender", "sex"], ident.validate_gender,
         (Columns.GENDER_SUBJECT, Columns.GENDER_OFFICER, Columns.GENDER_OFF_SUB),
         _relabel(
-            lambda c: luts.gender_expr(c, source_name=source_name, state=state,
-                                       no_id=no_id),
+            lambda r: luts.gender_sql(r, source_name=source_name, state=state,
+                                      no_id=no_id),
             gender_cats, _cat_values(defs.Gender), "gender"),
         allow_multi=True,
         # "W/M" pairs and "(White, Male)" groups list gender second
@@ -599,13 +625,13 @@ def standardize(
     std_demographic(
         ["age"], ident.validate_age,
         (Columns.AGE_SUBJECT, Columns.AGE_OFFICER, Columns.AGE_OFF_SUB),
-        lambda c: luts.age_expr(c),
+        luts.age_sql,
         exclude=["agency", "range", "group", "bracket"], allow_multi=True,
     )
     std_demographic(
         ["age range", "age group", "age bracket"], None,
         (Columns.AGE_RANGE_SUBJECT, Columns.AGE_RANGE_OFFICER, Columns.AGE_RANGE_OFF_SUB),
-        lambda c: luts.age_range_expr(c, no_id=no_id),
+        lambda r: luts.age_range_sql(r, no_id=no_id),
     )
     # injury phrase vocabulary for '2 Injured 1 Deceased' cells (reference
     # std_with_counts probes its converter; the expression path needs the
@@ -615,18 +641,18 @@ def standardize(
     std_demographic(
         ["injury", "injured"], None,
         (Columns.INJURY_SUBJECT, Columns.INJURY_OFFICER, Columns.INJURY_OFF_SUB),
-        lambda c: luts.injury_expr(c, no_id=no_id),
+        lambda r: luts.injury_sql(r, no_id=no_id),
         allow_multi=True, counts_vocab=_injury_vocab,
     )
     std_demographic(
         ["fatal", "deceased"], None,
         (Columns.FATAL_SUBJECT, Columns.FATAL_OFFICER, Columns.FATAL_OFF_SUB),
-        lambda c: luts.fatal_expr(c, no_id=no_id),
+        lambda r: luts.fatal_sql(r, no_id=no_id),
     )
     std_demographic(
         ["firearm", "firearm used", "weapon discharged"], None,
         (Columns.FIREARM_SUBJECT, Columns.FIREARM_OFFICER, Columns.FIREARM_OFF_SUB),
-        lambda c: luts.firearm_expr(c, no_id=no_id),
+        lambda r: luts.firearm_sql(r, no_id=no_id),
     )
 
     # role column: SUBJECT vs OFFICER per row (reference convert_off_or_civ
@@ -638,14 +664,14 @@ def standardize(
     if role_cols and Columns.SUBJECT_OR_OFFICER not in col_map:
         col_map[Columns.SUBJECT_OR_OFFICER] = role_cols[0]
         specs.append((Columns.SUBJECT_OR_OFFICER, role_cols[0],
-                      lambda c: luts.role_expr(c, no_id=no_id)))
+                      lambda r: luts.role_sql(r, no_id=no_id)))
         transforms.append(DataMapping(role_cols[0], Columns.SUBJECT_OR_OFFICER))
 
     # ----------------------------------------------------------------- names
     std_demographic(
         ["name", "full name"], validate_name,
         (Columns.NAME_SUBJECT, Columns.NAME_OFFICER, Columns.NAME_OFF_SUB),
-        lambda c: c.cast("string"),
+        lambda r: f"CAST({r} AS STRING)",
         exclude=["agency", "street", "file", "court"],
     )
 
@@ -654,7 +680,7 @@ def standardize(
                               validator=ident.validate_zip)
     if zips:
         col_map[Columns.ZIP_CODE] = zips[0]
-        specs.append((Columns.ZIP_CODE, zips[0], lambda c: c.cast("string")))
+        specs.append((Columns.ZIP_CODE, zips[0], lambda r: f"CAST({r} AS STRING)"))
         transforms.append(DataMapping(zips[0], Columns.ZIP_CODE))
 
     # ------------------------------------------------------------ apply once
@@ -697,12 +723,12 @@ def standardize(
         if raw in mult_candidates or raw in _merged_arrays
     }
 
-    def _latino_merge(r: Column, e: Column) -> Column:
-        return F.when(e == defs.Ethnicity.LATINO,
-                      F.lit(defs.Race.LATINO)).otherwise(r)
+    def _latino_merge(r: str, e: str) -> str:
+        return (f"CASE WHEN {e} = {lit(defs.Ethnicity.LATINO)} "
+                f"THEN {lit(defs.Race.LATINO)} ELSE {r} END")
 
-    def _space_concat(r: Column, e: Column) -> Column:
-        return F.concat_ws(" ", r, e)
+    def _space_concat(r: str, e: str) -> str:
+        return f"concat_ws(' ', {r}, {e})"
 
     combine = _latino_merge if race_eth_combo == "merge" else _space_concat
 
@@ -716,35 +742,39 @@ def standardize(
     ]:
         if race_c in spec_names and eth_c in spec_names and race_eth_combo:
             # element-wise over whichever side is per person (array)
-            race, eth = F.col(race_c), F.col(eth_c)
+            race, eth = sql_ident(race_c), sql_ident(eth_c)
             r_arr, e_arr = race_c in array_canonicals, eth_c in array_canonicals
             if r_arr and e_arr:
-                combo = F.zip_with(race, eth, combine)
+                combo = f"zip_with({race}, {eth}, (__x, __y) -> {combine('__x', '__y')})"
             elif r_arr:
-                combo = F.transform(race, lambda r: combine(r, eth))
+                combo = f"transform({race}, __x -> {combine('__x', eth)})"
             elif e_arr:
-                combo = F.transform(eth, lambda e: combine(race, e))
+                combo = f"transform({eth}, __x -> {combine(race, '__x')})"
             else:
                 combo = combine(race, eth)
             post_cols[combo_c] = combo
             post_cols[group_c] = combo
             transforms.append(DataMapping(None, combo_c))
         elif race_c in spec_names:
-            post_cols[group_c] = F.col(race_c)
+            post_cols[group_c] = sql_ident(race_c)
 
-    out = df.withColumnsRenamed(raw_renames)
-    out = out.withColumns({
+    # apply: one selectExpr per projection — raw renames (with the
+    # numbered-merge arrays, under their RAW_ names), the canonical
+    # columns, then the columns built from canonical ones
+    out, columns = _with_columns(df, df.columns, {
+        raw_renames.get(k, k): v for k, v in merged_cols.items()}, raw_renames)
+    out, columns = _with_columns(out, columns, {
         canonical: (
-            multi_expr(F.col(raw_renames.get(raw, raw)),
-                       mult_candidates[raw], builder,
-                       **mult_kwargs.get(raw, {}))
+            multi_sql(sql_ident(raw_renames.get(raw, raw)),
+                      mult_candidates[raw], builder,
+                      **mult_kwargs.get(raw, {}))
             if raw in mult_candidates
-            else builder(F.col(raw_renames.get(raw, raw)))
+            else builder(sql_ident(raw_renames.get(raw, raw)))
         )
         for canonical, raw, builder in specs
     })
     if post_cols:
-        out = out.withColumns(post_cols)
+        out, _ = _with_columns(out, columns, post_cols)
 
     if collect_value_counts:
         # audit head-5 value counts (reference _preproc_utils.py:15) — one

@@ -17,6 +17,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from openpolicedata_spark.functions.sqltext import column, ident, lit
+
 _NAME_RE = re.compile(r"^[A-Za-z][A-Za-z'.\-]+([ ,]+[A-Za-z][A-Za-z'.\-]*)+$")
 
 
@@ -47,20 +49,25 @@ def detect_gender_race_swap(sample: pd.DataFrame, race_col: str,
 _TRUTHY = ("true", "t", "yes", "y", "1", "x")
 
 
-def fold_onehot_expr(cols_to_cats: dict[str, str]) -> Column:
+def fold_onehot_sql(cols_to_cats: dict[str, str]) -> str:
     """Fold per-category boolean columns into one categorical value
     (reference boolean-cols branch, _converters.py:37-124: Bloomington
-    publishes `white`/`black`/`asian_pacific_islander` booleans).
+    publishes `white`/`black`/`asian_pacific_islander` booleans), as SQL.
 
     Rows with several true flags concatenate the categories with ', '
     (multi-racial), matching the reference's delimited multi-value form —
     which the multi-person/mult-race machinery then parses downstream."""
-    parts = [
-        F.when(F.lower(F.col(c).cast("string")).isin(*_TRUTHY), F.lit(cat))
-        for c, cat in cols_to_cats.items()
-    ]
-    out = F.concat_ws(", ", *parts)
-    return F.when(out == "", None).otherwise(out)
+    truthy = ", ".join(lit(t) for t in _TRUTHY)
+    parts = ", ".join(
+        f"CASE WHEN lower(CAST({ident(c)} AS STRING)) IN ({truthy}) "
+        f"THEN {lit(cat)} END"
+        for c, cat in cols_to_cats.items())
+    out = f"concat_ws(', ', {parts})"
+    return f"CASE WHEN {out} = '' THEN NULL ELSE {out} END"
+
+
+def fold_onehot_expr(cols_to_cats: dict[str, str]) -> Column:
+    return column(fold_onehot_sql(cols_to_cats))
 
 
 def find_onehot_group(columns: Sequence[str],

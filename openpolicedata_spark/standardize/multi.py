@@ -10,7 +10,7 @@ across demographic columns) and _converters.py:908-1142 (`std_list`,
 
 Detection runs driver-side on the identification sample (never a data
 scan); application compiles to `split`/`transform`/`regexp_extract_all`/
-`flatten` expressions wrapping the SAME scalar LUT used for single-person
+`flatten` SQL wrapping the SAME scalar LUT used for single-person
 columns — one code path for category mapping.
 """
 
@@ -23,7 +23,8 @@ from typing import Callable, Optional
 
 import pandas as pd
 from pyspark.sql import Column
-from pyspark.sql import functions as F
+
+from openpolicedata_spark.functions.sqltext import ColumnOrName, bind, lit, sql_fn
 
 # candidate person delimiters, election order (reference preproc.py:1784-1860)
 DELIMITERS = [",", "|", ";", "/", "\n"]
@@ -141,15 +142,14 @@ def agreement(sample: pd.DataFrame, cols_delims: dict[str, str],
     return agree >= min_agree
 
 
-def multi_expr(col: Column, mult: MultData,
-               item_fn: Callable[[Column], Column],
-               item_num: int = 0,
-               vocab: Optional[list[str]] = None) -> Column:
+def multi_sql(ref: str, mult: MultData, item: Callable[[str], str],
+              item_num: int = 0, vocab: Optional[list[str]] = None) -> str:
     """Compile a multi-person cell into ``array<T>`` applying the scalar
-    standardizer ``item_fn`` per person. Expression-only — no UDF.
+    standardizer ``item`` (a SQL builder) once per person, as SQL over
+    ``ref``: ``transform(<per-person values>, __x -> item(__x))``.
 
-    DELIMITED   : split → transform(item_fn)
-    COUNTS      : split → per token "N - CAT" → array_repeat(item_fn(CAT), N)
+    DELIMITED   : split → trim → drop empties
+    COUNTS      : split → per token "N - CAT" → array_repeat(CAT, N)
                   → flatten (reference std_counts _converters.py:1000-1040)
     MULTIPLIER  : split → per token "CATxN" → array_repeat → flatten
                   (reference std_demo_col multiplier syntax)
@@ -166,24 +166,17 @@ def multi_expr(col: Column, mult: MultData,
     """
     if mult.type == MultType.SINGLE:
         raise ValueError("multi_expr called for a single-valued column")
-    if mult.type == MultType.WITH_NAME:
+    text = f"CAST({ref} AS STRING)"
+    if mult.type in (MultType.WITH_NAME, MultType.DEMO_COL):
         # same separator class as detection ([\sÊ] — the reference's
         # Ê-delimited exports), or a mode-positive cell extracts nothing
-        pairs = F.regexp_extract_all(
-            col.cast("string"), F.lit(r"[\sÊ](\w{1,2}/\w)\b"), 1)
-        return F.transform(
-            pairs,
-            lambda t: item_fn(
-                F.trim(F.element_at(F.split(t, "/"), item_num + 1))),
-        )
-    if mult.type == MultType.DEMO_COL:
-        groups = F.regexp_extract_all(
-            col.cast("string"), F.lit(r"\(([^)]+)\)"), 1)
-        return F.transform(
-            groups,
-            lambda g: item_fn(
-                F.trim(F.element_at(F.split(g, "[,/]"), item_num + 1))),
-        )
+        group_rx, field_rx = ((r"[\sÊ](\w{1,2}/\w)\b", "/")
+                              if mult.type == MultType.WITH_NAME
+                              else (r"\(([^)]+)\)", "[,/]"))
+        field = (f"trim(element_at(split(__x, {lit(field_rx)}, -1), "
+                 f"{item_num + 1}))")
+        return (f"transform(regexp_extract_all({text}, {lit(group_rx)}, 1), "
+                f"__x -> {item(field)})")
     if mult.type == MultType.WITH_COUNTS:
         if not vocab:
             raise ValueError(
@@ -193,49 +186,50 @@ def multi_expr(col: Column, mult: MultData,
         # word boundaries so 'Injured' can't match inside 'Uninjured'
         alt = "|".join(re.escape(p) for p in
                        sorted(vocab, key=len, reverse=True))
-        toks = F.regexp_extract_all(
-            col.cast("string"),
-            F.lit(rf"(?i)\b((?:\d+\s+)?(?:{alt}))\b"), 1)
-        def expand_tok(t: Column) -> Column:
-            n = F.regexp_extract(t, r"^(\d+)\s", 1)
-            cat = F.trim(F.regexp_replace(t, r"^\d+\s+", ""))
-            return F.when(
-                n != "",
-                F.array_repeat(item_fn(cat), n.cast("int")),
-            ).otherwise(F.array(item_fn(t)))
-        return F.flatten(F.transform(toks, expand_tok))
-    toks = F.transform(
-        F.split(col.cast("string"), re.escape(mult.delim or ",")),
-        lambda t: F.trim(t),
-    )
-    toks = F.filter(toks, lambda t: t != "")
-    if mult.type == MultType.DELIMITED:
-        return F.transform(toks, item_fn)
-    if mult.type == MultType.COUNTS:
-        def expand_tok(t: Column) -> Column:
-            n = F.regexp_extract(t, r"^(\d+)\s*[-–x×]", 1)
-            cat = F.trim(F.regexp_replace(t, r"^\d+\s*[-–x×]\s*", ""))
-            return F.when(
-                n != "",
-                F.array_repeat(item_fn(cat), n.cast("int")),
-            ).otherwise(F.array(item_fn(t)))
-        return F.flatten(F.transform(toks, expand_tok))
-    if mult.type == MultType.MULTIPLIER:
-        def expand_tok(t: Column) -> Column:
-            n = F.regexp_extract(t, r"[x×]\s*(\d+)\s*$", 1)
-            cat = F.trim(F.regexp_replace(t, r"\s*[x×]\s*\d+\s*$", ""))
-            return F.when(
-                n != "",
-                F.array_repeat(item_fn(cat), n.cast("int")),
-            ).otherwise(F.array(item_fn(t)))
-        return F.flatten(F.transform(toks, expand_tok))
-    raise ValueError(f"unsupported MultType {mult.type}")
+        phrase = lit(rf"(?i)\b((?:\d+\s+)?(?:{alt}))\b")
+        toks = f"regexp_extract_all({text}, {phrase}, 1)"
+        count_rx, cat_rx = r"^(\d+)\s", r"^\d+\s+"
+    else:
+        toks = (f"filter(transform(split({text}, "
+                f"{lit(re.escape(mult.delim or ','))}, -1), __t -> trim(__t)), "
+                f"__t -> __t != '')")
+        if mult.type == MultType.DELIMITED:
+            return f"transform({toks}, __x -> {item('__x')})"
+        if mult.type == MultType.COUNTS:
+            count_rx, cat_rx = r"^(\d+)\s*[-–x×]", r"^\d+\s*[-–x×]\s*"
+        elif mult.type == MultType.MULTIPLIER:
+            count_rx, cat_rx = r"[x×]\s*(\d+)\s*$", r"\s*[x×]\s*\d+\s*$"
+        else:
+            raise ValueError(f"unsupported MultType {mult.type}")
+    # counted tokens repeat their category N times; the standardizer then
+    # runs once per person
+    n = f"regexp_extract(__t, {lit(count_rx)}, 1)"
+    cat = f"trim(regexp_replace(__t, {lit(cat_rx)}, ''))"
+    people = (f"flatten(transform({toks}, __t -> CASE WHEN {n} != '' "
+              f"THEN array_repeat({cat}, CAST({n} AS INT)) "
+              f"ELSE array(__t) END))")
+    return f"transform({people}, __x -> {item('__x')})"
 
 
-def dict_expr(col: Column, item_fn: Callable[[Column], Column]) -> Column:
+def multi_expr(col: ColumnOrName, mult: MultData,
+               item_fn: Callable[[Column], Column],
+               item_num: int = 0,
+               vocab: Optional[list[str]] = None) -> Column:
+    """`multi_sql` as a Column over ``col``; ``item_fn`` is built from this
+    package's ``*_expr`` functions (`sqltext.sql_fn`)."""
+    item = sql_fn(item_fn)
+    return bind(lambda r: multi_sql(r, mult, item, item_num, vocab), col)
+
+
+def dict_sql(ref: str, item: Callable[[str], str]) -> str:
     """Standardize a MapType column of {person_idx: raw value} — the
     encoding merge round trips produce (reference std_dict
     _converters.py:908-924). `transform_values` applies the SAME scalar
     LUT per entry, expression-only; `Table.expand` consumes either this
     map form or the array form."""
-    return F.transform_values(col, lambda _, v: item_fn(v))
+    return f"transform_values({ref}, (__k, __v) -> {item('__v')})"
+
+
+def dict_expr(col: ColumnOrName, item_fn: Callable[[Column], Column]) -> Column:
+    item = sql_fn(item_fn)
+    return bind(lambda r: dict_sql(r, item), col)

@@ -39,3 +39,29 @@ def count_jobs(spark):
         return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
     return run
+
+
+@pytest.fixture
+def count_py4j(spark):
+    """``count_py4j(fn)`` runs ``fn()`` and returns (its result, the number
+    of py4j commands the driver sent the JVM meanwhile: every method call,
+    field read, object creation and proxy release)."""
+    from py4j.clientserver import ClientServerConnection
+
+    def run(fn):
+        sent = 0
+        send = ClientServerConnection.send_command
+
+        def counting(self, command):
+            nonlocal sent
+            sent += 1
+            return send(self, command)
+
+        ClientServerConnection.send_command = counting
+        try:
+            out = fn()
+        finally:
+            ClientServerConnection.send_command = send
+        return out, sent
+
+    return run

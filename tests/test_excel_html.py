@@ -87,6 +87,36 @@ def test_excel_loader_year_sheets_union_and_filter(spark):
     assert loader.get_count(2019, force=True) == 2
 
 
+def test_excel_workbook_parsed_once_per_file_version(spark, tmp_path,
+                                                    monkeypatch):
+    """get_count, get_years and load on one loader parse and repair the
+    workbook once; a changed file is parsed again."""
+    import os
+
+    from openpolicedata_spark.sources import xlsx
+    from test_native_parsers import make_xlsx
+
+    calls = []
+    read = xlsx.read_xlsx
+    monkeypatch.setattr(xlsx, "read_xlsx",
+                        lambda src: calls.append(src) or read(src))
+    path = tmp_path / "book.xlsx"
+    header = ["Case", "Date"]
+    path.write_bytes(make_xlsx({"Sheet1": [
+        header, ["C1", "2020-01-05"], ["C2", "2021-03-01"]]}))
+    loader = ExcelLoader(spark, url=str(path), date_field="Date")
+    assert loader.get_count(2020) == 1
+    assert loader.get_years("Date") == [2020, 2021]
+    assert loader.load(2021).count() == 1
+    assert len(calls) == 1
+    path.write_bytes(make_xlsx({"Sheet1": [
+        header, ["C1", "2020-01-05"], ["C2", "2021-03-01"],
+        ["C3", "2021-04-01"]]}))
+    os.utime(path, ns=(1, 1))  # a new version even within the mtime tick
+    assert loader.load(2021).count() == 2
+    assert len(calls) == 2
+
+
 def test_html_loader(spark):
     t = pd.DataFrame({"case": ["C1", "C2", "C3"],
                       "agency": ["X PD", "Y PD", "X PD"]})

@@ -185,3 +185,32 @@ def test_loaders_share_one_load_step():
     assert defs == [("base.py", "DataLoader")], defs
     assert sorted(calls) == [("base.py", "DataLoader.load", "apply_limit_offset"),
                              ("base.py", "DataLoader.load", "orderBy")], calls
+
+
+@pytest.mark.parametrize("kind", ["csv", "socrata"])
+def test_text_dates_sort_by_date(spark, tmp_path, kind):
+    """`sortby="date"` on a text date column ('1/13/2020') orders by the
+    date the text names, not by the text."""
+    import datetime as dt
+
+    rows = make_rows(300, date_text="mmddyyyy")[::-7]
+    if kind == "csv":
+        loader = CsvLoader(spark, url=_csv(tmp_path, rows), **FIELDS)
+    else:
+        fmt, url, ds = PORTALS[kind]
+        loader = RestLoader(
+            spark, format_name=fmt, url=url, dataset=ds,
+            date_format="mmddyyyy",
+            transport=FakeTransport(handler=FakePortal(
+                kind, rows=rows, date_text="mmddyyyy")),
+            **FIELDS)
+
+    def day(text):
+        return dt.datetime.strptime(text, "%m/%d/%Y")
+
+    want = sorted(day(r["incident_date"]) for r in rows
+                  if day(r["incident_date"]).year == 2020)
+    got = [day(r.incident_date) for r in
+           loader.load(date=2020, sortby="date").collect()]
+    assert got == want
+    assert want != sorted(want, key=lambda d: f"{d.month}/{d.day}/{d.year}")
