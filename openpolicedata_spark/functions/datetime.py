@@ -196,17 +196,17 @@ def to_datetime_sql(ref: str, strategy: Optional[dict] = None,
     # 'Jan 15, 2024' to 'Jan 15' and break the MMM d, yyyy formats.
     date_list = lit(r"^\d{1,4}[-/]\d{1,2}[-/]\d{1,4}\s*,\s*\d{1,4}[-/]")
     s = (f"CASE WHEN {s} RLIKE {date_list} "
-         f"THEN trim(split({s}, ',', -1)[0]) ELSE {s} END")
+         f"THEN trim(split({s}, {lit(',')}, -1)[0]) ELSE {s} END")
     # the vote's month-name forms accept 'Sept.', which no Java month
     # pattern reads: parse it as 'Sep.'
-    s = f"regexp_replace({s}, {lit(_SEPT)}, '$1')"
+    s = f"regexp_replace({s}, {lit(_SEPT)}, {lit('$1')})"
     attempts = []
     for f in fmts:
         if f == "__hours__":
             # '11/05/2025 1430 hours' → strip suffix, parse M/d/yyyy HHmm
             hours = lit(r"(?i)\s*(hours|hrs)\.?$")
-            cleaned = f"regexp_replace({s}, {hours}, '')"
-            attempts.append(f"try_to_timestamp({cleaned}, 'M/d/yyyy HHmm')")
+            cleaned = f"regexp_replace({s}, {hours}, {lit('')})"
+            attempts.append(f"try_to_timestamp({cleaned}, {lit('M/d/yyyy HHmm')})")
         else:
             attempts.append(f"try_to_timestamp({s}, {lit(f)})")
     attempts.append(f"try_to_timestamp({s})")  # ISO fallback
@@ -216,7 +216,8 @@ def to_datetime_sql(ref: str, strategy: Optional[dict] = None,
         f"CASE WHEN {s} RLIKE {lit(_MASKED)} "
         f"THEN {_make_ts(f'CAST(substring({s}, 1, 4) AS INT)')} END")
     # trailing Z / fractional seconds: normalize then ISO-parse
-    attempts.append(f"try_to_timestamp(regexp_replace({s}, '[Zz]$', ''))")
+    attempts.append(
+        f"try_to_timestamp(regexp_replace({s}, {lit('[Zz]$')}, {lit('')}))")
     return f"coalesce({', '.join(attempts)})"
 
 
@@ -258,9 +259,9 @@ def parse_time_sql(ref: str) -> str:
     rx = {k: lit(v) for k, v in _TIME_RX.items()}
     s = f"upper(trim(CAST({ref} AS STRING)))"
     # strip a leading date + 'T' (embedded datetime)
-    s = f"regexp_replace({s}, {rx['date_t']}, '')"
+    s = f"regexp_replace({s}, {rx['date_t']}, {lit('')})"
     # normalize typo delimiters ; . → :
-    s = f"regexp_replace({s}, {rx['delim']}, ':')"
+    s = f"regexp_replace({s}, {rx['delim']}, {lit(':')})"
 
     is_ampm = f"{s} RLIKE {rx['ampm']}"
     ampm_h = f"TRY_CAST(regexp_extract({s}, {rx['hour']}, 1) AS INT)"
@@ -273,7 +274,7 @@ def parse_time_sql(ref: str) -> str:
     ampm_secs = f"({h12}) * 3600 + {ampm_m} * 60"
 
     is_colon = f"{s} RLIKE {rx['colon']}"
-    parts = f"split({s}, ':', -1)"
+    parts = f"split({s}, {lit(':')}, -1)"
     c_h = f"TRY_CAST(try_element_at({parts}, 1) AS INT)"
     c_m = f"coalesce(TRY_CAST(try_element_at({parts}, 2) AS INT), 0)"
     c_s = f"coalesce(TRY_CAST(try_element_at({parts}, 3) AS INT), 0)"
@@ -311,7 +312,7 @@ def merge_date_time_sql(date_ref: str, secs_ref: str,
             f"empty_time must be 'nat' or 'ignore', got {empty_time!r}")
     date_ts = f"CAST({date_ref} AS TIMESTAMP)"
     merged = (f"timestamp_seconds(unix_timestamp({date_ts}, "
-              f"'yyyy-MM-dd HH:mm:ss') + CAST({secs_ref} AS BIGINT))")
+              f"{lit('yyyy-MM-dd HH:mm:ss')}) + CAST({secs_ref} AS BIGINT))")
     unset = "NULL" if empty_time.lower() == "nat" else date_ts
     return f"CASE WHEN {secs_ref} IS NULL THEN {unset} ELSE {merged} END"
 
@@ -326,7 +327,7 @@ def date_precision_row_sql(ref: str, strategy: Optional[dict] = None) -> str:
     """PER-ROW precision for string columns that mix full and masked dates:
     '2023-__-__' rows are year-precision, the rest day-precision."""
     return (f"CASE WHEN trim(CAST({ref} AS STRING)) RLIKE {lit(_MASKED)} "
-            f"THEN 'year' ELSE {date_precision_sql(strategy)} END")
+            f"THEN {lit('year')} ELSE {date_precision_sql(strategy)} END")
 
 
 def date_precision_row_expr(raw: ColumnOrName,

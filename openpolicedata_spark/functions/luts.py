@@ -314,7 +314,7 @@ def age_range_sql(ref: str, no_id: str = "keep") -> str:
     mnum = f"element_at(map({kv}), regexp_extract({s}, {month_rx}, 1))"
     day = f"regexp_extract({s}, {day_rx}, 1)"
     s = (f"CASE WHEN {s} RLIKE {mangled_rx} "
-         f"THEN concat({mnum}, '-', {day}) ELSE {s} END")
+         f"THEN concat({mnum}, {lit('-')}, {day}) ELSE {s} END")
     for rx, repl in AGE_RANGE_NORMALIZE + [(r"^(\d+)<=X<(\d+)$", "$1-$2")]:
         s = f"regexp_replace({s}, {lit(rx)}, {lit(repl)})"  # last: 18<=x<25 style
     known = f"{s} RLIKE " + lit(r"^(\d+-\d+|\d+\+|ADULT|JUVENILE)$")

@@ -519,10 +519,10 @@ def standardize(
                                         for c in ordered) + ")")
             last = (f"aggregate(sequence(1, {len(ordered)}), 0, (__acc, __i) -> "
                     f"CASE WHEN element_at({arr}, __i) IS NOT NULL "
-                    f"AND trim(element_at({arr}, __i)) != '' "
+                    f"AND trim(element_at({arr}, __i)) != {lit('')} "
                     f"THEN __i ELSE __acc END)")
             merged_cols[merged] = (f"transform(slice({arr}, 1, {last}), "
-                                   f"__x -> coalesce(trim(__x), ''))")
+                                   f"__x -> coalesce(trim(__x), {lit('')}))")
             transforms.append(DataMapping(
                 str(ordered), merged, {"numbered_merge": ordered}))
             out_cols = [c for c in out_cols if c not in group]
@@ -728,7 +728,7 @@ def standardize(
                 f"THEN {lit(defs.Race.LATINO)} ELSE {r} END")
 
     def _space_concat(r: str, e: str) -> str:
-        return f"concat_ws(' ', {r}, {e})"
+        return f"concat_ws({lit(' ')}, {r}, {e})"
 
     combine = _latino_merge if race_eth_combo == "merge" else _space_concat
 

@@ -62,8 +62,8 @@ def fold_onehot_sql(cols_to_cats: dict[str, str]) -> str:
         f"CASE WHEN lower(CAST({ident(c)} AS STRING)) IN ({truthy}) "
         f"THEN {lit(cat)} END"
         for c, cat in cols_to_cats.items())
-    out = f"concat_ws(', ', {parts})"
-    return f"CASE WHEN {out} = '' THEN NULL ELSE {out} END"
+    out = f"concat_ws({lit(', ')}, {parts})"
+    return f"CASE WHEN {out} = {lit('')} THEN NULL ELSE {out} END"
 
 
 def fold_onehot_expr(cols_to_cats: dict[str, str]) -> Column:

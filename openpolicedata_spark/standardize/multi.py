@@ -192,7 +192,7 @@ def multi_sql(ref: str, mult: MultData, item: Callable[[str], str],
     else:
         toks = (f"filter(transform(split({text}, "
                 f"{lit(re.escape(mult.delim or ','))}, -1), __t -> trim(__t)), "
-                f"__t -> __t != '')")
+                f"__t -> __t != {lit('')})")
         if mult.type == MultType.DELIMITED:
             return f"transform({toks}, __x -> {item('__x')})"
         if mult.type == MultType.COUNTS:
@@ -204,8 +204,8 @@ def multi_sql(ref: str, mult: MultData, item: Callable[[str], str],
     # counted tokens repeat their category N times; the standardizer then
     # runs once per person
     n = f"regexp_extract(__t, {lit(count_rx)}, 1)"
-    cat = f"trim(regexp_replace(__t, {lit(cat_rx)}, ''))"
-    people = (f"flatten(transform({toks}, __t -> CASE WHEN {n} != '' "
+    cat = f"trim(regexp_replace(__t, {lit(cat_rx)}, {lit('')}))"
+    people = (f"flatten(transform({toks}, __t -> CASE WHEN {n} != {lit('')} "
               f"THEN array_repeat({cat}, CAST({n} AS INT)) "
               f"ELSE array(__t) END))")
     return f"transform({people}, __x -> {item('__x')})"
