@@ -3,21 +3,25 @@ pipelines — beyond the reference (BASELINE.json north star).
 
 Design for 100 TB: media rides as an opaque ``binary`` column plus a typed
 metadata struct; all per-item work (decode, feature extraction, resize,
-frame sampling) runs as Arrow-batched ``mapInPandas`` so bytes stream
-through in columnar batches and never materialize on the driver.
+hashing) runs through ``map_rows``, the package's one per-row Python
+pass, so bytes stream through in Arrow batches and never materialize on
+the driver. Kernels that work on a whole batch at once use
+``mapInArrow`` instead.
 
-Codecs: PNG decodes for real via the stdlib codec in sources/png.py
-(``decode_image`` / ``real_decode``); JPEG and compressed audio remain
-clearly-marked gates (they need DCT/audio libraries not in this
-container). ``fake_decode`` stays as the deterministic stand-in for
-tests that only exercise the Spark-side plumbing — schema, batch shape,
-partitioning — independent of any codec.
+Codecs: every decoder is in-repo and dispatches by magic bytes, not the
+mime hint. ``decode_image`` decodes PNG, JPEG (baseline and
+progressive), GIF, BMP and TIFF; ``decode_audio`` decodes WAV, FLAC,
+Ogg-FLAC and MP4/MOV PCM+FLAC tracks; ``decode_video`` decodes animated
+GIF and Motion-JPEG MP4/AVI/Matroska. WebP, mp3 PCM and inter-frame
+video codecs raise. ``fake_decode`` stays as the deterministic stand-in
+for tests that only exercise the Spark-side plumbing — schema, batch
+shape, partitioning — independent of any codec.
 """
 
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator, Optional
+from typing import Callable, Iterable, Optional
 
 import numpy as np
 import pandas as pd
@@ -25,6 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
+    DataType,
     IntegerType,
     LongType,
     StringType,
@@ -66,14 +71,47 @@ def attach_payload(df: DataFrame, src_col: str, media_id_col: str,
     )
 
 
+def map_rows(df: DataFrame, fn: Callable[..., Iterable[tuple]],
+             schema: "str | StructType") -> DataFrame:
+    """The package's one per-row Python pass. The first column of `df`
+    is the row key. ``fn(*row_values)`` gets each row's values, key
+    first, and returns that row's output tuples — zero or more, without
+    the key. Every output row leads with its input row's key, under the
+    key's own name and type from `df.schema`; `schema` (DDL or
+    StructType) lists only the output fields, and each batch's frame is
+    built from those names. Output values reach Arrow as Python objects,
+    so a long beside a NULL stays exact (a float64 column would round it
+    above 2**53)."""
+    key = df.schema.fields[0]
+    out = DataType.fromDDL(schema) if isinstance(schema, str) else schema
+    names = out.fieldNames()
+
+    def run(batches):
+        for pdf in batches:
+            rows = [list(fn(*vals))
+                    for vals in pdf.itertuples(index=False, name=None)]
+            keys = pdf.iloc[:, 0].repeat([len(r) for r in rows])
+            cols = list(zip(*(t for r in rows for t in r))) \
+                or [()] * len(names)
+            frame = {key.name: keys.reset_index(drop=True)}
+            frame.update((n, pd.Series(c, dtype=object))
+                         for n, c in zip(names, cols))
+            yield pd.DataFrame(frame)
+
+    return df.mapInPandas(run, StructType(
+        [StructField(key.name, key.dataType, True)] + out.fields))
+
+
 def decode_image(content: bytes, mime: str) -> "np.ndarray":
     """REAL image decode → HxWx3 uint8.
 
     PNG decodes fully in-repo via the stdlib codec (sources/png.py —
-    zlib inflate + filter reconstruction; all color types, Adam7), and
-    baseline JPEG via the numpy DCT codec (sources/jpeg.py — Huffman
-    entropy decode + batched IDCT + chroma upsampling), the same
-    replace-the-dependency pattern as the xlsx/html readers. WebP/…
+    zlib inflate + filter reconstruction; all color types, Adam7),
+    baseline and progressive JPEG via the numpy DCT codec
+    (sources/jpeg.py — Huffman entropy decode + batched IDCT + chroma
+    upsampling), and GIF (first frame), BMP and TIFF via their in-repo
+    codecs — the same replace-the-dependency pattern as the xlsx/html
+    readers. WebP/…
     would need codecs not expressible over the stdlib and still
     raise — clearly-marked gate, not a silent fallback. Dispatch is
     by magic bytes, not the mime hint, so a mislabeled payload can't
@@ -178,11 +216,12 @@ def box_resize(img: "np.ndarray", h: int, w: int) -> "np.ndarray":
 
 
 def real_decode(content: bytes, h: int = 8, w: int = 8) -> "np.ndarray":
-    """Drop-in for `fake_decode` backed by the real PNG codec: decode the
-    actual pixels, then area-resize to (h, w). Pass as the `decode=` arg
-    of image_ahash / image_dup_pairs to run the perceptual near-dup
-    family on real image bytes."""
-    return box_resize(decode_image(content, "image/png"), h, w)
+    """Drop-in for `fake_decode` backed by the real codecs: decode the
+    actual pixels through `decode_image` (any still format it reads,
+    chosen by magic bytes), then area-resize to (h, w). Pass as the
+    `decode=` arg of image_ahash / image_dup_pairs to run the perceptual
+    near-dup family on real image bytes."""
+    return box_resize(decode_image(content, "image/*"), h, w)
 
 
 def fake_decode(content: bytes, h: int = 8, w: int = 8) -> "np.ndarray":
@@ -197,20 +236,20 @@ def fake_decode(content: bytes, h: int = 8, w: int = 8) -> "np.ndarray":
     return np.frombuffer(bytes(out[:need]), dtype=np.uint8).reshape(h, w, 3)
 
 
-BINARY_FEATURES_SCHEMA = "media_id long, byte_len long, digest string, mean_pixel double"
+BINARY_FEATURES_SCHEMA = "byte_len long, digest string, mean_pixel double"
 
 
 def binary_features(df: DataFrame, content_col: str = "content",
                     id_col: str = "media_id",
                     with_decode: bool = True) -> DataFrame:
-    """Per-item features over the binary payload via Arrow-batched
-    mapInPandas: exact byte length + md5 digest (both independently
+    """Per-item features over the binary payload via `map_rows`: exact
+    byte length + md5 digest (both independently
     computable by the SQL oracle) + mean pseudo-pixel from the fake decode
     (exercises the decode→ndarray→feature path).
 
     ``with_decode=False`` skips the fake-decode mean_pixel column
     entirely (r13 optimization): Catalyst cannot prune INSIDE a
-    mapInPandas function, so a caller that only wants byte_len/digest
+    Python map function, so a caller that only wants byte_len/digest
     (q34) would otherwise pay the per-row decode→ndarray→mean for a
     column it immediately drops — guide §4.1's don't-compute-what-you-
     throw-away applied at the UDF boundary (measured 1.50x on q34 at
@@ -219,58 +258,45 @@ def binary_features(df: DataFrame, content_col: str = "content",
     NULL-propagating built-ins with identical semantics), so the
     no-decode path skips the JVM↔Python boundary entirely (guide §4.1:
     prefer built-ins; r13 session 4, measured 2.02× on q34 at sf0.1,
-    interleaved; plan: MapInPandas node removed). The mapInPandas stage
+    interleaved; plan: MapInPandas node removed). The Python pass
     remains for ``with_decode=True``, where the codec work is genuinely
-    Python."""
+    Python. Both paths keep the caller's key name and type."""
     if not with_decode:
         return df.select(
-            F.col(id_col).cast("long").alias("media_id"),
+            F.col(id_col),
             F.octet_length(F.col(content_col)).cast("long").alias("byte_len"),
             F.md5(F.col(content_col)).alias("digest"),
         )
 
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            content = pdf[content_col]
-            yield pd.DataFrame({
-                "media_id": pdf[id_col],
-                # NULL content → NULL length (SQL octet_length semantics;
-                # an empty-but-present payload is byte_len 0, a missing
-                # one is NULL — pcm_features makes the same distinction)
-                "byte_len": content.map(
-                    lambda b: len(b) if b is not None else None),
-                "digest": content.map(
-                    lambda b: hashlib.md5(b).hexdigest() if b is not None else None),
-                "mean_pixel": content.map(
-                    lambda b: float(fake_decode(bytes(b)).mean()) if b is not None else None),
-            })
+    def features(_key, b):
+        # NULL content → NULL length (SQL octet_length semantics; an
+        # empty-but-present payload is byte_len 0, a missing one is
+        # NULL — pcm_features makes the same distinction)
+        if b is None:
+            return [(None, None, None)]
+        return [(len(b), hashlib.md5(b).hexdigest(),
+                 float(fake_decode(bytes(b)).mean()))]
 
-    return df.select(id_col, content_col).mapInPandas(
-        compute, schema=BINARY_FEATURES_SCHEMA)
+    return map_rows(df.select(id_col, content_col), features,
+                    BINARY_FEATURES_SCHEMA)
 
 
-RESIZE_SCHEMA = "media_id long, height int, width int, pixels binary"
+RESIZE_SCHEMA = "height int, width int, pixels binary"
 
 
 def resize_images(df: DataFrame, h: int, w: int, content_col: str = "content",
                   id_col: str = "media_id") -> DataFrame:
     """Decode → resize → re-emit pixel buffers (fake decode backend).
     Batch shape and output schema match what a real Pillow-backed version
-    would produce; only the codec is substituted."""
+    would produce; only the codec is substituted. A NULL payload has
+    no image, so all three outputs are NULL."""
 
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            px = pdf[content_col].map(
-                lambda b: fake_decode(bytes(b), h, w).tobytes()
-                if b is not None else None)
-            yield pd.DataFrame({
-                "media_id": pdf[id_col],
-                "height": h,
-                "width": w,
-                "pixels": px,
-            })
+    def resize(_key, b):
+        if b is None:
+            return [(None, None, None)]
+        return [(h, w, fake_decode(bytes(b), h, w).tobytes())]
 
-    return df.select(id_col, content_col).mapInPandas(compute, schema=RESIZE_SCHEMA)
+    return map_rows(df.select(id_col, content_col), resize, RESIZE_SCHEMA)
 
 
 def decode_audio(content: bytes, mime: str) -> "tuple[int, np.ndarray]":
@@ -279,11 +305,11 @@ def decode_audio(content: bytes, mime: str) -> "tuple[int, np.ndarray]":
 
     WAV (RIFF PCM / IEEE float, incl. WAVE_FORMAT_EXTENSIBLE) and FLAC
     (sources/flac.py — full subframe/Rice/stereo-decorrelation
-    decoder) decode fully in-repo via the stdlib codecs. mp3/ogg would
-    need a real audio codec (soundfile/ffmpeg, not in this container)
-    and still raise — clearly-marked gate. Dispatch is by magic bytes,
-    not the mime hint. Raw codec-free PCM (audio/L16) bypasses this
-    entirely via pcm_features."""
+    decoder), Ogg-FLAC and MP4/MOV PCM+FLAC tracks decode fully in-repo
+    via the stdlib codecs. mp3/vorbis/opus/aac PCM would need a real
+    audio codec (soundfile/ffmpeg) and still raises. Dispatch is by
+    magic bytes, not the mime hint. Raw codec-free PCM (audio/L16)
+    bypasses this entirely via pcm_features."""
     from openpolicedata_spark.sources import wav as _wav
 
     b = bytes(content)
@@ -320,8 +346,8 @@ def decode_audio(content: bytes, mime: str) -> "tuple[int, np.ndarray]":
         "raw PCM (audio/L16) is handled codec-free by pcm_features")
 
 
-PCM_FEATURES_SCHEMA = ("media_id long, n_samples long, duration_s double, "
-                       "rms double, peak int, n_frames int")
+PCM_FEATURES_SCHEMA = ("n_samples long, duration_s double, rms double, "
+                       "peak int, n_frames int")
 
 
 def pcm_features(df: DataFrame, frame_ms: int = 25,
@@ -334,42 +360,31 @@ def pcm_features(df: DataFrame, frame_ms: int = 25,
     batches → numpy int16 views, vectorized per payload; the compressed
     formats would route through decode_audio (stubbed) first."""
 
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, buf, sr in zip(pdf[id_col], pdf[content_col],
-                                    pdf["__sr__"]):
-                # Arrow→pandas renders a nullable int sample_rate as
-                # float64 NaN — `is None` never fires, use pd.isna.
-                # Null content → all-null metrics (matches SQL NULL
-                # propagation, e.g. octet_length(encode(NULL))).
-                if buf is None:
-                    rows.append((mid, None, None, None, None, None))
-                    continue
-                x = np.frombuffer(bytes(buf)[: (len(buf) // 2) * 2],
-                                  dtype="<i2").astype(np.float64)
-                n = x.size
-                rms = float(np.sqrt(np.mean(x * x))) if n else None
-                peak = int(np.abs(x).max()) if n else None
-                if sr is None or pd.isna(sr) or sr <= 0:
-                    # rms/peak need no clock; duration/frames do
-                    rows.append((mid, n, None, rms, peak, None))
-                    continue
-                frame = max(int(sr * frame_ms / 1000), 1)
-                rows.append((mid, n, n / sr, rms, peak,
-                             -(-n // frame) if n else 0))
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "n_samples", "duration_s", "rms", "peak",
-                "n_frames"])
+    def features(_key, buf, sr):
+        # Arrow→pandas renders a nullable int sample_rate as float64
+        # NaN — `is None` never fires, use pd.isna. Null content →
+        # all-null metrics (matches SQL NULL propagation, e.g.
+        # octet_length(encode(NULL))).
+        if buf is None:
+            return [(None, None, None, None, None)]
+        x = np.frombuffer(bytes(buf)[: (len(buf) // 2) * 2],
+                          dtype="<i2").astype(np.float64)
+        n = x.size
+        rms = float(np.sqrt(np.mean(x * x))) if n else None
+        peak = int(np.abs(x).max()) if n else None
+        if sr is None or pd.isna(sr) or sr <= 0:
+            # rms/peak need no clock; duration/frames do
+            return [(n, None, rms, peak, None)]
+        frame = max(int(sr * frame_ms / 1000), 1)
+        return [(n, n / sr, rms, peak, -(-n // frame) if n else 0)]
 
-    return df.select(
-        id_col, content_col, F.col(sample_rate_col).alias("__sr__")
-    ).mapInPandas(compute, schema=PCM_FEATURES_SCHEMA)
+    return map_rows(
+        df.select(id_col, content_col, F.col(sample_rate_col)),
+        features, PCM_FEATURES_SCHEMA)
 
 
-VAD_STATS_SCHEMA = ("media_id long, n_frames long, n_speech long, "
-                    "first_speech long, last_speech long, "
-                    "total_energy long")
+VAD_STATS_SCHEMA = ("n_frames long, n_speech long, first_speech long, "
+                    "last_speech long, total_energy long")
 
 
 def _frame_energies(buf: bytes,
@@ -401,37 +416,26 @@ def vad_stats(df: DataFrame, frame_samples: int = 80,
     count, 1-based first/last speech frame (0 = none), and the total
     energy — all integers, so a SQL engine can replay them exactly
     (q164). The trailing partial frame is dropped (a fixed analysis
-    grid, the standard VAD convention). Arrow-batched mapInPandas;
-    bytes never leave the executor."""
+    grid, the standard VAD convention). One `map_rows` pass; bytes never
+    leave the executor."""
 
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, buf in zip(pdf[id_col], pdf[content_col]):
-                if buf is None:
-                    rows.append((mid, None, None, None, None, None))
-                    continue
-                _rate, energy = _frame_energies(bytes(buf), frame_samples)
-                nf = energy.shape[0]
-                speech = energy > energy_threshold
-                idx = np.flatnonzero(speech)
-                rows.append((
-                    mid, nf, int(speech.sum()),
-                    int(idx[0]) + 1 if idx.size else 0,
-                    int(idx[-1]) + 1 if idx.size else 0,
-                    int(energy.sum()),
-                ))
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "n_frames", "n_speech", "first_speech",
-                "last_speech", "total_energy"])
+    def stats(_key, buf):
+        if buf is None:
+            return [(None, None, None, None, None)]
+        _rate, energy = _frame_energies(bytes(buf), frame_samples)
+        speech = energy > energy_threshold
+        idx = np.flatnonzero(speech)
+        return [(energy.shape[0], int(speech.sum()),
+                 int(idx[0]) + 1 if idx.size else 0,
+                 int(idx[-1]) + 1 if idx.size else 0,
+                 int(energy.sum()))]
 
-    return df.select(id_col, content_col).mapInPandas(
-        compute, schema=VAD_STATS_SCHEMA)
+    return map_rows(df.select(id_col, content_col), stats, VAD_STATS_SCHEMA)
 
 
-VAD_SEGMENTS_SCHEMA = ("media_id long, seg_idx long, start_frame long, "
-                       "end_frame long, n_frames long, start_ms long, "
-                       "end_ms long, seg_energy long")
+VAD_SEGMENTS_SCHEMA = ("seg_idx long, start_frame long, end_frame long, "
+                       "n_frames long, start_ms long, end_ms long, "
+                       "seg_energy long")
 
 
 def vad_segments(df: DataFrame, frame_samples: int = 80,
@@ -452,39 +456,39 @@ def vad_segments(df: DataFrame, frame_samples: int = 80,
     segment's [start, end) sample positions on the decoded clock in
     integer floor milliseconds — all-integer outputs, so a SQL engine
     replays the whole gaps-and-islands computation exactly (q171).
-    Arrow-batched mapInPandas; bytes never leave the executor, and a
-    clip emits at most n_frames/min_frames rows."""
+    One `map_rows` pass; bytes never leave the executor, a NULL
+    payload emits nothing, and a clip emits at most
+    n_frames/min_frames rows."""
 
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, buf in zip(pdf[id_col], pdf[content_col]):
-                if buf is None:
-                    continue
-                rate, energy = _frame_energies(bytes(buf), frame_samples)
-                idx = np.flatnonzero(energy > energy_threshold)
-                if not idx.size:
-                    continue
-                brk = np.flatnonzero(np.diff(idx) > 1)
-                starts = np.concatenate(([idx[0]], idx[brk + 1]))
-                ends = np.concatenate((idx[brk], [idx[-1]]))
-                cs = np.concatenate(([0], np.cumsum(energy)))
-                seg = 0
-                for s0, e0 in zip(starts.tolist(), ends.tolist()):
-                    if e0 - s0 + 1 < min_frames:
-                        continue
-                    seg += 1
-                    rows.append((
-                        mid, seg, s0 + 1, e0 + 1, e0 - s0 + 1,
-                        s0 * frame_samples * 1000 // rate,
-                        (e0 + 1) * frame_samples * 1000 // rate,
-                        int(cs[e0 + 1] - cs[s0])))
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "seg_idx", "start_frame", "end_frame",
-                "n_frames", "start_ms", "end_ms", "seg_energy"])
+    def segments(_key, buf):
+        if buf is None:
+            return
+        rate, energy = _frame_energies(bytes(buf), frame_samples)
+        idx = np.flatnonzero(energy > energy_threshold)
+        if not idx.size:
+            return
+        brk = np.flatnonzero(np.diff(idx) > 1)
+        starts = np.concatenate(([idx[0]], idx[brk + 1]))
+        ends = np.concatenate((idx[brk], [idx[-1]]))
+        cs = np.concatenate(([0], np.cumsum(energy)))
+        seg = 0
+        for s0, e0 in zip(starts.tolist(), ends.tolist()):
+            if e0 - s0 + 1 < min_frames:
+                continue
+            seg += 1
+            yield (seg, s0 + 1, e0 + 1, e0 - s0 + 1,
+                   s0 * frame_samples * 1000 // rate,
+                   (e0 + 1) * frame_samples * 1000 // rate,
+                   int(cs[e0 + 1] - cs[s0]))
 
-    return df.select(id_col, content_col).mapInPandas(
-        compute, schema=VAD_SEGMENTS_SCHEMA)
+    return map_rows(df.select(id_col, content_col), segments,
+                    VAD_SEGMENTS_SCHEMA)
+
+
+MP3_SCAN_SCHEMA = ("n_frames long, sample_rate long, duration_ms long, "
+                   "audio_bytes long, first_frame_offset long, "
+                   "bitrate_min_kbps long, bitrate_max_kbps long, "
+                   "bitrate_sum_kbps long, is_vbr boolean")
 
 
 def mp3_scan(df: DataFrame, content_col: str = "content",
@@ -499,43 +503,25 @@ def mp3_scan(df: DataFrame, content_col: str = "content",
     the container arithmetic here is pure recalled FORMULA
     (144*bitrate//rate + padding, syncsafe sizes), pinned by
     hand-computed fixtures and q172's parse-vs-generative-replay
-    oracle. Arrow-batched mapInPandas; unparseable payloads yield
+    oracle. One `map_rows` pass; NULL and unparseable payloads yield
     null stats rather than failing the scan (the walker itself raises
-    loudly when called directly). The id column keeps the caller's
-    `id_col` name AND the caller's id TYPE — both are read off the
-    input schema (review finding: the hardcoded 'media_id' schema
-    broke any non-default id_col; ADVICE r8: a hardcoded `long` broke
-    any string/decimal id at Arrow conversion)."""
-    from pyspark.sql.types import (BooleanType, LongType, StructField,
-                                   StructType)
-
+    loudly when called directly)."""
     from openpolicedata_spark.sources.mp3 import Mp3Error, mp3_stats
 
-    cols = ["n_frames", "sample_rate", "duration_ms", "audio_bytes",
-            "first_frame_offset", "bitrate_min_kbps", "bitrate_max_kbps",
-            "bitrate_sum_kbps", "is_vbr"]
+    schema = DataType.fromDDL(MP3_SCAN_SCHEMA)
+    cols = schema.fieldNames()
 
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, buf in zip(pdf[id_col], pdf[content_col]):
-                if buf is None:
-                    rows.append((mid,) + (None,) * len(cols))
-                    continue
-                try:
-                    st = mp3_stats(bytes(buf))
-                except Mp3Error:
-                    rows.append((mid,) + (None,) * len(cols))
-                    continue
-                rows.append((mid,) + tuple(st[c] for c in cols))
-            yield pd.DataFrame(rows, columns=[id_col] + cols)
+    def scan(_key, buf):
+        if buf is not None:
+            try:
+                st = mp3_stats(bytes(buf))
+            except Mp3Error:
+                pass
+            else:
+                return [tuple(st[c] for c in cols)]
+        return [(None,) * len(cols)]
 
-    schema = StructType(
-        [StructField(id_col, df.schema[id_col].dataType, True)]
-        + [StructField(c, BooleanType() if c == "is_vbr" else LongType(),
-                       True) for c in cols])
-    return df.select(id_col, content_col).mapInPandas(
-        compute, schema=schema)
+    return map_rows(df.select(id_col, content_col), scan, schema)
 
 
 def sample_frames(df: DataFrame, every_n: int = 10, content_col: str = "content",
@@ -566,7 +552,7 @@ def image_ahash(df: DataFrame, content_col: str = "content",
     decoder) land within a few hamming bits; `image_dup_pairs` below
     turns that into a blocked near-dup join.
 
-    Arrow-batched mapInPandas (numpy per batch); `decode` is injectable —
+    One `map_rows` pass (numpy per payload); `decode` is injectable —
     defaults to `fake_decode` (the md5 stand-in: only byte-identical
     payloads collide) so the plumbing is testable without codecs, and a
     Pillow-backed decoder drops in unchanged.
@@ -581,20 +567,11 @@ def image_ahash(df: DataFrame, content_col: str = "content",
             "64-bit long; use grid <= 8")
     dec = decode or fake_decode
 
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            def ah(b):
-                if b is None:
-                    return None
-                return ahash_of_pixels(dec(bytes(b), grid, grid), nbits)
+    def ahash(_key, b):
+        return [(None if b is None
+                 else ahash_of_pixels(dec(bytes(b), grid, grid), nbits),)]
 
-            yield pd.DataFrame({
-                id_col: pdf[id_col],
-                "ahash": pdf[content_col].map(ah).astype("Int64"),
-            })
-
-    return df.select(id_col, content_col).mapInPandas(
-        compute, schema=f"{id_col} long, ahash long")
+    return map_rows(df.select(id_col, content_col), ahash, "ahash long")
 
 
 def ahash_of_pixels(px: "np.ndarray", nbits: int = 64) -> int:
@@ -611,6 +588,16 @@ def ahash_of_pixels(px: "np.ndarray", nbits: int = 64) -> int:
         if bit:
             v |= 1 << i
     return v - (1 << 64) if v >= 1 << 63 else v
+
+
+def video_frame_hashes(content: bytes, decode=None) -> "list[int]":
+    """One container's frame signatures, in frame order: decode it
+    (`decode_video`'s magic-byte dispatch, or an injectable
+    ``decode(bytes) -> frames`` stand-in) and `ahash_of_pixels` each
+    frame. `video_dup_pairs` blocks on these hashes."""
+    b = bytes(content)
+    frames = decode(b) if decode is not None else decode_video(b, "video/*")[0]
+    return [ahash_of_pixels(fr) for fr in frames]
 
 
 def ahash_chunk_exprs(n_chunks: int, nbits: int = 64,
@@ -735,26 +722,21 @@ def audio_ahash(df: DataFrame, content_col: str = "content",
     """Energy fingerprint per audio payload: decode (real codecs via
     `decode_audio`'s magic dispatch, or an injectable
     ``decode(bytes) -> int array`` stand-in), de-normalize to int16,
-    hash with `audio_energy_hash`. One Arrow-batched pass; bytes never
-    leave the executor and the output is (id, ahash) longs."""
-    dec = decode
+    hash with `audio_energy_hash`. One `map_rows` pass; bytes never
+    leave the executor, the output is (id, ahash) and a NULL payload
+    hashes to NULL, as in `image_ahash`."""
 
-    def gen(batches):
-        import pandas as pd
+    def ahash(_key, blob):
+        if blob is None:
+            return [(None,)]
+        if decode is not None:
+            samples = np.asarray(decode(bytes(blob)))
+        else:
+            _rate, norm = decode_audio(bytes(blob), "audio/*")
+            samples = np.rint(norm * 32768.0).astype(np.int64)
+        return [(audio_energy_hash(samples),)]
 
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf[id_col], pdf[content_col]):
-                if dec is not None:
-                    samples = np.asarray(dec(bytes(blob)))
-                else:
-                    _rate, norm = decode_audio(bytes(blob), "audio/*")
-                    samples = np.rint(norm * 32768.0).astype(np.int64)
-                rows.append((int(mid), audio_energy_hash(samples)))
-            yield pd.DataFrame(rows, columns=[id_col, "ahash"])
-
-    return df.select(id_col, content_col).mapInPandas(
-        gen, f"{id_col} long, ahash long")
+    return map_rows(df.select(id_col, content_col), ahash, "ahash long")
 
 
 def audio_dup_pairs(df: DataFrame, max_hamming: int = 3,
@@ -780,8 +762,7 @@ def video_dup_pairs(frame_hashes: DataFrame, id_col: str = "doc_id",
                     max_bucket_size: Optional[int] = None) -> DataFrame:
     """Video near-dup pairs from per-frame perceptual signatures — the
     video face of the blocked near-dedup family. Input is the
-    (video_id, frame_hash) frame produced by decoding each container
-    (`decode_video`) and hashing each frame (`ahash_of_pixels`); two
+    (video_id, frame_hash) frame produced by `video_frame_hashes`; two
     videos are near-dups when they share at least `min_shared` exact
     frame hashes. The blocking key IS the frame hash: bucket on it,
     generate i<j pairs in-bucket, then count distinct shared hashes per

@@ -713,38 +713,22 @@ def extract_html_text(df: DataFrame, html_col: str = "html",
     FineWeb/trafilatura extraction step between crawl and
     quality/dedup): `sources.htmltable.html_to_text` per row —
     script/style/head dropped, block boundaries become newlines,
-    inline whitespace collapsed, entities decoded. Arrow-batched
-    mapInPandas (the parse is genuinely imperative — the sanctioned
-    escape); output is (id, text, n_blocks). Embarrassingly parallel,
-    bytes never leave the executor; NULL html → NULL text. q176 pins
-    the extractor against a generative SQL replay."""
+    inline whitespace collapsed, entities decoded. One
+    `multimodal.map_rows` pass (the parse is genuinely imperative — the
+    sanctioned escape); output is (id, text, n_blocks). Embarrassingly
+    parallel, bytes never leave the executor; NULL html → NULL text.
+    q176 pins the extractor against a generative SQL replay."""
+    from openpolicedata_spark.operators.multimodal import map_rows
     from openpolicedata_spark.sources.htmltable import html_to_text
 
-    def run(batches):
-        for pdf in batches:
-            texts, blocks = [], []
-            for h in pdf[html_col]:
-                if h is None:
-                    texts.append(None)
-                    blocks.append(None)
-                    continue
-                t = html_to_text(h)
-                texts.append(t)
-                blocks.append(len(t.split("\n")) if t else 0)
-            yield pd.DataFrame({id_col: pdf[id_col], "text": texts,
-                                "n_blocks": pd.array(blocks,
-                                                     dtype="Int64")})
+    def extract(_key, h):
+        if h is None:
+            return [(None, None)]
+        t = html_to_text(h)
+        return [(t, len(t.split("\n")) if t else 0)]
 
-    from pyspark.sql.types import (LongType, StringType, StructField,
-                                   StructType)
-
-    # id keeps the caller's TYPE too, not just its name (ADVICE r8: a
-    # hardcoded `long` failed Arrow conversion for string ids)
-    schema = StructType([
-        StructField(id_col, df.schema[id_col].dataType, True),
-        StructField("text", StringType(), True),
-        StructField("n_blocks", LongType(), True)])
-    return df.select(id_col, html_col).mapInPandas(run, schema=schema)
+    return map_rows(df.select(id_col, html_col), extract,
+                    "text string, n_blocks long")
 
 
 def chunk_chars(

@@ -1147,28 +1147,21 @@ def video_dedup_sink(stream_df: DataFrame, out_path: str,
     for clips with fewer than `min_shared` distinct frames. Binding, the
     index probe and publication: `_run_index_sink`."""
     from openpolicedata_spark.operators.dedup import dup_clusters
-    from openpolicedata_spark.operators.multimodal import video_dup_pairs
+    from openpolicedata_spark.operators.multimodal import (
+        map_rows,
+        video_dup_pairs,
+        video_frame_hashes,
+    )
 
-    def frame_hashes(batch: DataFrame) -> DataFrame:
-        dec = decode
+    def fhashes(_row, blob):
+        # a NULL payload has no frames: NULL hashes, never a match
+        return [(None if blob is None
+                 else sorted(set(video_frame_hashes(blob, decode))),)]
 
-        def gen(batches):
-            import pandas as pd
-
-            from openpolicedata_spark.operators.multimodal import (
-                ahash_of_pixels,
-                decode_video,
-            )
-            d = dec or (lambda b: decode_video(b, "video/*")[0])
-            for pdf in batches:
-                yield pd.DataFrame({
-                    "__row__": pdf["__row__"],
-                    "fhashes": [sorted({ahash_of_pixels(fr)
-                                        for fr in d(bytes(blob))})
-                                for blob in pdf[content_col]]})
-
-        return batch.select("__row__", content_col).mapInPandas(
-            gen, "__row__ long, fhashes array<long>")
+    def sign(batch: DataFrame) -> DataFrame:
+        return batch.join(map_rows(batch.select("__row__", content_col),
+                                   fhashes, "fhashes array<long>"),
+                          on="__row__")
 
     def exploded(df: DataFrame) -> DataFrame:
         return df.select(id_col, F.explode("fhashes").alias("fhash"))
@@ -1196,8 +1189,7 @@ def video_dedup_sink(stream_df: DataFrame, out_path: str,
         return keep.join(dup, on=id_col, how="left_anti")
 
     return _run_index_sink(
-        stream_df, out_path, index_path,
-        lambda batch: batch.join(frame_hashes(batch), on="__row__"), admit,
+        stream_df, out_path, index_path, sign, admit,
         lambda novel: (novel.drop("fhashes"), exploded(novel)),
         query_name, timeout_s)
 

@@ -4056,35 +4056,30 @@ def q129_png_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib as _hl
 
     import numpy as np
-    import pandas as pd
-    from openpolicedata_spark.operators.multimodal import decode_image
+    from openpolicedata_spark.operators.multimodal import (
+        decode_image,
+        map_rows,
+    )
     from openpolicedata_spark.sources.png import encode_png
 
     d = _read(spark, sf_dir, "documents")
 
-    def compute(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = b"".join(
-                    _hl.md5(text.encode("utf-8") + str(i).encode()).digest()
-                    for i in range(12))
-                px = np.frombuffer(raw, dtype=np.uint8).reshape(8, 8, 3)
-                png = encode_png(px, interlace=(int(did) % 2 == 0))
-                dec = decode_image(png, "image/png")
-                rows.append((
-                    did,
-                    _hl.md5(dec.tobytes().hex().encode()).hexdigest(),
-                    bool((dec == px).all()),
-                ))
-            yield pd.DataFrame(rows, columns=["doc_id", "pix_md5", "png_ok"])
+    def compute(did, text):
+        raw = b"".join(
+            _hl.md5(text.encode("utf-8") + str(i).encode()).digest()
+            for i in range(12))
+        px = np.frombuffer(raw, dtype=np.uint8).reshape(8, 8, 3)
+        png = encode_png(px, interlace=(int(did) % 2 == 0))
+        dec = decode_image(png, "image/png")
+        return [(_hl.md5(dec.tobytes().hex().encode()).hexdigest(),
+                 bool((dec == px).all()))]
 
     from openpolicedata_spark.operators.dedup import rebalance
 
     # single-row-group parquet arrives as ONE partition; codec
     # work is exactly the per-row-heavy case the rebalance exists for
-    return rebalance(d.select("doc_id", "text")).mapInPandas(
-        compute, "doc_id long, pix_md5 string, png_ok boolean")
+    return map_rows(rebalance(d.select("doc_id", "text")), compute,
+                    "pix_md5 string, png_ok boolean")
 
 
 _Q129_SQL = ("SELECT doc_id, md5("
@@ -4108,39 +4103,31 @@ def q130_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib as _hl
 
     import numpy as np
-    import pandas as pd
-    from openpolicedata_spark.operators.multimodal import decode_image
+    from openpolicedata_spark.operators.multimodal import (
+        decode_image,
+        map_rows,
+    )
     from openpolicedata_spark.sources.jpeg import encode_jpeg
 
     d = _read(spark, sf_dir, "documents")
 
-    def compute(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = _hl.md5(text.encode("utf-8") + b"0").digest()[:4]
-                tiles = np.frombuffer(raw, dtype=np.uint8).reshape(2, 2)
-                img = tiles.repeat(8, axis=0).repeat(8, axis=1)
-                jpg = encode_jpeg(img)
-                dec = decode_image(jpg, "image/jpeg")
-                gray = dec[:, :, 0]
-                ok = bool((gray == img).all()
-                          and (dec[:, :, 1] == gray).all()
-                          and (dec[:, :, 2] == gray).all())
-                rows.append((
-                    did,
-                    _hl.md5(gray.tobytes().hex().encode()).hexdigest(),
-                    ok,
-                ))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "pix_md5", "jpeg_ok"])
+    def compute(_did, text):
+        raw = _hl.md5(text.encode("utf-8") + b"0").digest()[:4]
+        tiles = np.frombuffer(raw, dtype=np.uint8).reshape(2, 2)
+        img = tiles.repeat(8, axis=0).repeat(8, axis=1)
+        dec = decode_image(encode_jpeg(img), "image/jpeg")
+        gray = dec[:, :, 0]
+        ok = bool((gray == img).all()
+                  and (dec[:, :, 1] == gray).all()
+                  and (dec[:, :, 2] == gray).all())
+        return [(_hl.md5(gray.tobytes().hex().encode()).hexdigest(), ok)]
 
     from openpolicedata_spark.operators.dedup import rebalance
 
     # single-row-group parquet arrives as ONE partition; codec
     # work is exactly the per-row-heavy case the rebalance exists for
-    return rebalance(d.select("doc_id", "text")).mapInPandas(
-        compute, "doc_id long, pix_md5 string, jpeg_ok boolean")
+    return map_rows(rebalance(d.select("doc_id", "text")), compute,
+                    "pix_md5 string, jpeg_ok boolean")
 
 
 def q132_gif_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4157,43 +4144,36 @@ def q132_gif_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib as _hl
 
     import numpy as np
-    import pandas as pd
-    from openpolicedata_spark.operators.multimodal import decode_video
+    from openpolicedata_spark.operators.multimodal import (
+        decode_video,
+        map_rows,
+    )
     from openpolicedata_spark.sources.gif import encode_gif
 
     d = _read(spark, sf_dir, "documents")
     pal = np.stack([np.arange(256, dtype=np.uint8)] * 3, axis=1)
 
-    def compute(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = b"".join(
-                    _hl.md5(text.encode("utf-8") + str(i).encode()).digest()
-                    for i in range(16))
-                grids = [
-                    np.frombuffer(raw[k * 128:(k + 1) * 128],
-                                  dtype=np.uint8).reshape(16, 8)
-                    for k in range(2)]
-                blob = encode_gif(grids, pal, delays=[3, 7])
-                frames, delays = decode_video(blob, "image/gif")
-                back = b"".join(f[:, :, 0].tobytes() for f in frames)
-                ok = bool(delays == [3, 7] and back == raw
-                          and all((f[:, :, 1] == f[:, :, 0]).all()
-                                  for f in frames))
-                rows.append((
-                    did,
-                    _hl.md5(back.hex().encode()).hexdigest(),
-                    ok,
-                ))
-            yield pd.DataFrame(rows, columns=["doc_id", "idx_md5", "gif_ok"])
+    def compute(_did, text):
+        raw = b"".join(
+            _hl.md5(text.encode("utf-8") + str(i).encode()).digest()
+            for i in range(16))
+        grids = [
+            np.frombuffer(raw[k * 128:(k + 1) * 128],
+                          dtype=np.uint8).reshape(16, 8)
+            for k in range(2)]
+        blob = encode_gif(grids, pal, delays=[3, 7])
+        frames, delays = decode_video(blob, "image/gif")
+        back = b"".join(f[:, :, 0].tobytes() for f in frames)
+        ok = bool(delays == [3, 7] and back == raw
+                  and all((f[:, :, 1] == f[:, :, 0]).all() for f in frames))
+        return [(_hl.md5(back.hex().encode()).hexdigest(), ok)]
 
     from openpolicedata_spark.operators.dedup import rebalance
 
     # single-row-group parquet arrives as ONE partition; codec
     # work is exactly the per-row-heavy case the rebalance exists for
-    return rebalance(d.select("doc_id", "text")).mapInPandas(
-        compute, "doc_id long, idx_md5 string, gif_ok boolean")
+    return map_rows(rebalance(d.select("doc_id", "text")), compute,
+                    "idx_md5 string, gif_ok boolean")
 
 
 _Q132_SQL = ("SELECT doc_id, md5("
@@ -4272,37 +4252,30 @@ def q137_image_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib as _hl
 
     import numpy as np
-    import pandas as pd
     from openpolicedata_spark.operators.multimodal import (
         image_dup_pairs,
+        map_rows,
         real_decode,
     )
     from openpolicedata_spark.sources.png import encode_png
 
     d = _read(spark, sf_dir, "documents").select("doc_id")
 
-    def gen(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                seed = f"img:{did % 50}"
-                raw = b"".join(
-                    _hl.md5((seed + str(i)).encode()).digest()
-                    for i in range(4))
-                v = np.frombuffer(raw, dtype=np.uint8).copy().reshape(8, 8)
-                if did % 5:
-                    j = did % 64
-                    v[j // 8, j % 8] = 255
-                px = np.stack([v] * 3, axis=-1)
-                rows.append((did, encode_png(px)))
-            yield pd.DataFrame(rows, columns=["media_id", "content"])
+    def gen(did):
+        did = int(did)
+        seed = f"img:{did % 50}"
+        raw = b"".join(
+            _hl.md5((seed + str(i)).encode()).digest() for i in range(4))
+        v = np.frombuffer(raw, dtype=np.uint8).copy().reshape(8, 8)
+        if did % 5:
+            j = did % 64
+            v[j // 8, j % 8] = 255
+        return [(encode_png(np.stack([v] * 3, axis=-1)),)]
 
     from openpolicedata_spark.operators.dedup import rebalance
 
-    media = rebalance(d).mapInPandas(
-        gen, "media_id long, content binary")
-    return image_dup_pairs(media, max_hamming=3,
+    media = map_rows(rebalance(d), gen, "content binary")
+    return image_dup_pairs(media, max_hamming=3, id_col="doc_id",
                            decode=real_decode).orderBy("id_a", "id_b")
 
 
@@ -4354,41 +4327,35 @@ def q138_wav_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib as _hl
 
     import numpy as np
-    import pandas as pd
-    from openpolicedata_spark.operators.multimodal import decode_audio
+    from openpolicedata_spark.operators.multimodal import (
+        decode_audio,
+        map_rows,
+    )
     from openpolicedata_spark.sources.wav import encode_wav
 
     d = _read(spark, sf_dir, "documents")
 
-    def compute(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = b"".join(
-                    _hl.md5(text.encode("utf-8") + str(i).encode()).digest()
-                    for i in range(8))
-                pcm = np.frombuffer(raw, dtype="<i2")
-                rate, norm = decode_audio(encode_wav(pcm, 16_000),
-                                          "audio/wav")
-                s = np.rint(norm[:, 0] * 32768.0).astype(np.int64)
-                sum_sq = int((s * s).sum())
-                rms = float(np.sqrt(sum_sq / (64.0 * 1073741824.0)))
-                peak = int(np.abs(s).max())
-                signs = s >= 0
-                zc = int((signs[1:] != signs[:-1]).sum())
-                rows.append((did, len(s), round(len(s) / rate, 6),
-                             round(rms, 6), peak, zc))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "n_samples", "duration_s", "rms", "peak",
-                "zero_crossings"])
+    def compute(_did, text):
+        raw = b"".join(
+            _hl.md5(text.encode("utf-8") + str(i).encode()).digest()
+            for i in range(8))
+        pcm = np.frombuffer(raw, dtype="<i2")
+        rate, norm = decode_audio(encode_wav(pcm, 16_000), "audio/wav")
+        s = np.rint(norm[:, 0] * 32768.0).astype(np.int64)
+        sum_sq = int((s * s).sum())
+        rms = float(np.sqrt(sum_sq / (64.0 * 1073741824.0)))
+        signs = s >= 0
+        return [(len(s), round(len(s) / rate, 6), round(rms, 6),
+                 int(np.abs(s).max()),
+                 int((signs[1:] != signs[:-1]).sum()))]
 
     from openpolicedata_spark.operators.dedup import rebalance
 
     # single-row-group parquet arrives as ONE partition; codec
     # work is exactly the per-row-heavy case the rebalance exists for
-    return rebalance(d.select("doc_id", "text")).mapInPandas(
-        compute, "doc_id long, n_samples int, duration_s double, "
-                 "rms double, peak long, zero_crossings long")
+    return map_rows(rebalance(d.select("doc_id", "text")), compute,
+                    "n_samples int, duration_s double, rms double, "
+                    "peak long, zero_crossings long")
 
 
 _Q138_SQL = ("""
@@ -4431,8 +4398,9 @@ def q139_video_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video near-dup via frame signatures, through the REAL container
     codec: each document carries a 4-frame animated GIF (videos sharing
     `doc_id % 40` share base frames; `doc_id % 3 != 0` perturbs one
-    frame), decoded with `decode_video` and perceptually hashed
-    per frame (`multimodal.ahash_of_pixels` — the image_ahash math).
+    frame), decoded and perceptually hashed per frame by
+    `multimodal.video_frame_hashes` (the image_ahash math, shared with
+    `streaming.video_dedup_sink`).
     Two videos are near-dups when they share ≥ 3 of 4 exact frame
     hashes — the standard frame-signature approach to video dedup via
     `multimodal.video_dup_pairs`: the shuffle carries (frame_hash,
@@ -4444,7 +4412,7 @@ def q139_video_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (~N/40 videos share base frames, so any fixed cap would drop real
     dup pairs at some SF and break SF-invariance of the oracle) — a
     real corpus run would pass the cap, and the degenerate-frame case
-    is pinned in tests/test_multimodal.py.
+    is pinned in tests/test_scale_ops.py.
 
     Exactness: identity-palette GIF decodes to equal channels and
     integer cells, so every frame hash (and thus every pair) replays
@@ -4452,44 +4420,31 @@ def q139_video_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib as _hl
 
     import numpy as np
-    import pandas as pd
     from openpolicedata_spark.operators.dedup import rebalance
     from openpolicedata_spark.operators.multimodal import (
-        ahash_of_pixels,
-        decode_video,
+        map_rows,
+        video_dup_pairs,
+        video_frame_hashes,
     )
     from openpolicedata_spark.sources.gif import encode_gif
 
     d = _read(spark, sf_dir, "documents").select("doc_id")
     pal = np.stack([np.arange(256, dtype=np.uint8)] * 3, axis=1)
 
-    def frame_hashes(batches: "Iterator[pd.DataFrame]") \
-            -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                grids = []
-                for f in range(4):
-                    raw = b"".join(
-                        _hl.md5(f"vid:{did % 40}:{f}{i}".encode())
-                        .digest() for i in range(4))
-                    g = np.frombuffer(raw, dtype=np.uint8).copy() \
-                        .reshape(8, 8)
-                    if did % 3 and f == did % 4:
-                        g[(did % 64) // 8, (did % 64) % 8] = 255
-                    grids.append(g)
-                blob = encode_gif(grids, pal)
-                frames, _delays = decode_video(blob, "image/gif")
-                for f, fr in enumerate(frames):
-                    rows.append((did, f, ahash_of_pixels(fr)))
-            yield pd.DataFrame(rows,
-                               columns=["doc_id", "frame_idx", "fhash"])
+    def frame_hashes(did):
+        did = int(did)
+        grids = []
+        for f in range(4):
+            raw = b"".join(
+                _hl.md5(f"vid:{did % 40}:{f}{i}".encode()).digest()
+                for i in range(4))
+            g = np.frombuffer(raw, dtype=np.uint8).copy().reshape(8, 8)
+            if did % 3 and f == did % 4:
+                g[(did % 64) // 8, (did % 64) % 8] = 255
+            grids.append(g)
+        return enumerate(video_frame_hashes(encode_gif(grids, pal)))
 
-    fh = rebalance(d).mapInPandas(
-        frame_hashes, "doc_id long, frame_idx int, fhash long")
-    from openpolicedata_spark.operators.multimodal import video_dup_pairs
-
+    fh = map_rows(rebalance(d), frame_hashes, "frame_idx int, fhash long")
     return video_dup_pairs(fh, min_shared=3).orderBy("id_a", "id_b")
 
 
@@ -4553,37 +4508,29 @@ def q142_progressive_jpeg_roundtrip(spark: SparkSession,
     import hashlib as _hl
 
     import numpy as np
-    import pandas as pd
-    from openpolicedata_spark.operators.multimodal import decode_image
+    from openpolicedata_spark.operators.multimodal import (
+        decode_image,
+        map_rows,
+    )
     from openpolicedata_spark.sources.jpeg import encode_jpeg_progressive
 
     d = _read(spark, sf_dir, "documents")
 
-    def compute(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = _hl.md5(text.encode("utf-8") + b"p").digest()[:6]
-                tiles = np.frombuffer(raw, dtype=np.uint8).reshape(2, 3)
-                img = tiles.repeat(8, axis=0).repeat(8, axis=1)
-                jpg = encode_jpeg_progressive(img)
-                dec = decode_image(jpg, "image/jpeg")
-                gray = dec[:, :, 0]
-                ok = bool((gray == img).all()
-                          and (dec[:, :, 1] == gray).all()
-                          and (dec[:, :, 2] == gray).all())
-                rows.append((
-                    did,
-                    _hl.md5(gray.tobytes().hex().encode()).hexdigest(),
-                    ok,
-                ))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "pix_md5", "prog_ok"])
+    def compute(_did, text):
+        raw = _hl.md5(text.encode("utf-8") + b"p").digest()[:6]
+        tiles = np.frombuffer(raw, dtype=np.uint8).reshape(2, 3)
+        img = tiles.repeat(8, axis=0).repeat(8, axis=1)
+        dec = decode_image(encode_jpeg_progressive(img), "image/jpeg")
+        gray = dec[:, :, 0]
+        ok = bool((gray == img).all()
+                  and (dec[:, :, 1] == gray).all()
+                  and (dec[:, :, 2] == gray).all())
+        return [(_hl.md5(gray.tobytes().hex().encode()).hexdigest(), ok)]
 
     from openpolicedata_spark.operators.dedup import rebalance
 
-    return rebalance(d.select("doc_id", "text")).mapInPandas(
-        compute, "doc_id long, pix_md5 string, prog_ok boolean")
+    return map_rows(rebalance(d.select("doc_id", "text")), compute,
+                    "pix_md5 string, prog_ok boolean")
 
 
 # Replay (q130's recipe, 2x3 tiles): byte k of md5(text||'p') is hex
@@ -4613,38 +4560,30 @@ def q131_wav_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib as _hl
 
     import numpy as np
-    import pandas as pd
-    from openpolicedata_spark.operators.multimodal import decode_audio
+    from openpolicedata_spark.operators.multimodal import (
+        decode_audio,
+        map_rows,
+    )
     from openpolicedata_spark.sources.wav import encode_wav
 
     d = _read(spark, sf_dir, "documents")
 
-    def compute(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = b"".join(
-                    _hl.md5(text.encode("utf-8") + str(i).encode()).digest()
-                    for i in range(8))
-                pcm = np.frombuffer(raw, dtype="<i2")
-                wav = encode_wav(pcm, rate=16_000)
-                rate, norm = decode_audio(wav, "audio/wav")
-                back = np.rint(norm[:, 0] * 32768.0).astype("<i2")
-                ok = bool(rate == 16_000
-                          and back.tobytes() == raw)
-                rows.append((
-                    did,
-                    _hl.md5(back.tobytes().hex().encode()).hexdigest(),
-                    ok,
-                ))
-            yield pd.DataFrame(rows, columns=["doc_id", "pcm_md5", "wav_ok"])
+    def compute(_did, text):
+        raw = b"".join(
+            _hl.md5(text.encode("utf-8") + str(i).encode()).digest()
+            for i in range(8))
+        pcm = np.frombuffer(raw, dtype="<i2")
+        rate, norm = decode_audio(encode_wav(pcm, rate=16_000), "audio/wav")
+        back = np.rint(norm[:, 0] * 32768.0).astype("<i2")
+        ok = bool(rate == 16_000 and back.tobytes() == raw)
+        return [(_hl.md5(back.tobytes().hex().encode()).hexdigest(), ok)]
 
     from openpolicedata_spark.operators.dedup import rebalance
 
     # single-row-group parquet arrives as ONE partition; codec
     # work is exactly the per-row-heavy case the rebalance exists for
-    return rebalance(d.select("doc_id", "text")).mapInPandas(
-        compute, "doc_id long, pcm_md5 string, wav_ok boolean")
+    return map_rows(rebalance(d.select("doc_id", "text")), compute,
+                    "pcm_md5 string, wav_ok boolean")
 
 
 _Q131_SQL = ("SELECT doc_id, md5("
@@ -4669,37 +4608,30 @@ def q143_flac_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib as _hl
 
     import numpy as np
-    import pandas as pd
-    from openpolicedata_spark.operators.multimodal import decode_audio
+    from openpolicedata_spark.operators.multimodal import (
+        decode_audio,
+        map_rows,
+    )
     from openpolicedata_spark.sources.flac import encode_flac
 
     d = _read(spark, sf_dir, "documents")
 
-    def compute(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = b"".join(
-                    _hl.md5(text.encode("utf-8") + b"f" + str(i).encode())
-                    .digest() for i in range(8))
-                pcm = np.frombuffer(raw, dtype="<i2").reshape(-1, 2)
-                blob = encode_flac(pcm, rate=22_050)
-                rate, norm = decode_audio(blob, "audio/flac")
-                back = np.rint(norm * 32768.0).astype("<i2")
-                ok = bool(rate == 22_050 and norm.shape == pcm.shape
-                          and back.tobytes() == raw)
-                rows.append((
-                    did,
-                    _hl.md5(back.tobytes().hex().encode()).hexdigest(),
-                    ok,
-                ))
-            yield pd.DataFrame(rows,
-                               columns=["doc_id", "pcm_md5", "flac_ok"])
+    def compute(_did, text):
+        raw = b"".join(
+            _hl.md5(text.encode("utf-8") + b"f" + str(i).encode()).digest()
+            for i in range(8))
+        pcm = np.frombuffer(raw, dtype="<i2").reshape(-1, 2)
+        rate, norm = decode_audio(encode_flac(pcm, rate=22_050),
+                                  "audio/flac")
+        back = np.rint(norm * 32768.0).astype("<i2")
+        ok = bool(rate == 22_050 and norm.shape == pcm.shape
+                  and back.tobytes() == raw)
+        return [(_hl.md5(back.tobytes().hex().encode()).hexdigest(), ok)]
 
     from openpolicedata_spark.operators.dedup import rebalance
 
-    return rebalance(d.select("doc_id", "text")).mapInPandas(
-        compute, "doc_id long, pcm_md5 string, flac_ok boolean")
+    return map_rows(rebalance(d.select("doc_id", "text")), compute,
+                    "pcm_md5 string, flac_ok boolean")
 
 
 _Q143_SQL = ("SELECT doc_id, md5("
@@ -4725,42 +4657,37 @@ def q144_mp4_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib as _hl
 
     import numpy as np
-    import pandas as pd
-    from openpolicedata_spark.operators.multimodal import decode_video
+    from openpolicedata_spark.operators.multimodal import (
+        decode_video,
+        map_rows,
+    )
     from openpolicedata_spark.sources.jpeg import encode_jpeg
     from openpolicedata_spark.sources.mp4 import encode_mp4_mjpeg
 
     d = _read(spark, sf_dir, "documents")
 
-    def compute(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                jpegs = []
-                for f in range(3):
-                    raw = _hl.md5(text.encode("utf-8")
-                                  + f"v{f}".encode()).digest()[:4]
-                    tiles = np.frombuffer(raw, dtype=np.uint8).reshape(2, 2)
-                    jpegs.append(encode_jpeg(
-                        tiles.repeat(8, axis=0).repeat(8, axis=1)))
-                blob = encode_mp4_mjpeg(jpegs, 16, 16,
-                                        timescale=600, delta=60)
-                frames, delays = decode_video(blob, "video/mp4")
-                ok = bool(delays == [10, 10, 10]
-                          and all(fr.shape == (16, 16, 3)
-                                  and (fr[..., 0] == fr[..., 1]).all()
-                                  and (fr[..., 0] == fr[..., 2]).all()
-                                  for fr in frames))
-                hexes = "".join(fr[..., 0].tobytes().hex()
-                                for fr in frames)
-                rows.append((did, _hl.md5(hexes.encode()).hexdigest(), ok))
-            yield pd.DataFrame(rows,
-                               columns=["doc_id", "pix_md5", "mp4_ok"])
+    def compute(_did, text):
+        jpegs = []
+        for f in range(3):
+            raw = _hl.md5(text.encode("utf-8")
+                          + f"v{f}".encode()).digest()[:4]
+            tiles = np.frombuffer(raw, dtype=np.uint8).reshape(2, 2)
+            jpegs.append(encode_jpeg(
+                tiles.repeat(8, axis=0).repeat(8, axis=1)))
+        blob = encode_mp4_mjpeg(jpegs, 16, 16, timescale=600, delta=60)
+        frames, delays = decode_video(blob, "video/mp4")
+        ok = bool(delays == [10, 10, 10]
+                  and all(fr.shape == (16, 16, 3)
+                          and (fr[..., 0] == fr[..., 1]).all()
+                          and (fr[..., 0] == fr[..., 2]).all()
+                          for fr in frames))
+        hexes = "".join(fr[..., 0].tobytes().hex() for fr in frames)
+        return [(_hl.md5(hexes.encode()).hexdigest(), ok)]
 
     from openpolicedata_spark.operators.dedup import rebalance
 
-    return rebalance(d.select("doc_id", "text")).mapInPandas(
-        compute, "doc_id long, pix_md5 string, mp4_ok boolean")
+    return map_rows(rebalance(d.select("doc_id", "text")), compute,
+                    "pix_md5 string, mp4_ok boolean")
 
 
 def _q144_band(salt: str) -> str:
@@ -4792,8 +4719,10 @@ def q145_container_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib as _hl
 
     import numpy as np
-    import pandas as pd
-    from openpolicedata_spark.operators.multimodal import decode_video
+    from openpolicedata_spark.operators.multimodal import (
+        decode_video,
+        map_rows,
+    )
     from openpolicedata_spark.sources.avi import encode_avi_mjpeg
     from openpolicedata_spark.sources.jpeg import encode_jpeg
     from openpolicedata_spark.sources.mp4 import encode_mp4_mjpeg
@@ -4801,40 +4730,32 @@ def q145_container_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _read(spark, sf_dir, "documents")
 
-    def compute(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                jpegs = []
-                for f in range(2):
-                    raw = _hl.md5(text.encode("utf-8")
-                                  + f"c{f}".encode()).digest()[:4]
-                    tiles = np.frombuffer(raw, dtype=np.uint8).reshape(2, 2)
-                    jpegs.append(encode_jpeg(
-                        tiles.repeat(8, axis=0).repeat(8, axis=1)))
-                muxed = [
-                    encode_mp4_mjpeg(jpegs, 16, 16,
-                                     timescale=600, delta=60),
-                    encode_avi_mjpeg(jpegs, 16, 16, fps=10),
-                    encode_webm_mjpeg(jpegs, 16, 16, delta_ms=100),
-                ]
-                decoded = [decode_video(b, "video/*") for b in muxed]
-                ref_frames, ref_delays = decoded[0]
-                ok = bool(ref_delays == [10, 10] and all(
-                    dly == [10, 10]
-                    and all(np.array_equal(a, b)
-                            for a, b in zip(frs, ref_frames))
-                    for frs, dly in decoded[1:]))
-                hexes = "".join(fr[..., 0].tobytes().hex()
-                                for fr in ref_frames)
-                rows.append((did, _hl.md5(hexes.encode()).hexdigest(), ok))
-            yield pd.DataFrame(rows,
-                               columns=["doc_id", "pix_md5", "parity_ok"])
+    def compute(_did, text):
+        jpegs = []
+        for f in range(2):
+            raw = _hl.md5(text.encode("utf-8")
+                          + f"c{f}".encode()).digest()[:4]
+            tiles = np.frombuffer(raw, dtype=np.uint8).reshape(2, 2)
+            jpegs.append(encode_jpeg(
+                tiles.repeat(8, axis=0).repeat(8, axis=1)))
+        muxed = [
+            encode_mp4_mjpeg(jpegs, 16, 16, timescale=600, delta=60),
+            encode_avi_mjpeg(jpegs, 16, 16, fps=10),
+            encode_webm_mjpeg(jpegs, 16, 16, delta_ms=100),
+        ]
+        decoded = [decode_video(b, "video/*") for b in muxed]
+        ref_frames, ref_delays = decoded[0]
+        ok = bool(ref_delays == [10, 10] and all(
+            dly == [10, 10]
+            and all(np.array_equal(a, b) for a, b in zip(frs, ref_frames))
+            for frs, dly in decoded[1:]))
+        hexes = "".join(fr[..., 0].tobytes().hex() for fr in ref_frames)
+        return [(_hl.md5(hexes.encode()).hexdigest(), ok)]
 
     from openpolicedata_spark.operators.dedup import rebalance
 
-    return rebalance(d.select("doc_id", "text")).mapInPandas(
-        compute, "doc_id long, pix_md5 string, parity_ok boolean")
+    return map_rows(rebalance(d.select("doc_id", "text")), compute,
+                    "pix_md5 string, parity_ok boolean")
 
 
 _Q145_SQL = ("SELECT doc_id, md5("
@@ -4864,8 +4785,10 @@ def q146_audio_container_parity(spark: SparkSession,
     import hashlib as _hl
 
     import numpy as np
-    import pandas as pd
-    from openpolicedata_spark.operators.multimodal import decode_audio
+    from openpolicedata_spark.operators.multimodal import (
+        decode_audio,
+        map_rows,
+    )
     from openpolicedata_spark.sources.flac import encode_flac
     from openpolicedata_spark.sources.mp4 import encode_mp4_audio
     from openpolicedata_spark.sources.ogg import encode_ogg_flac
@@ -4877,47 +4800,38 @@ def q146_audio_container_parity(spark: SparkSession,
              ("alaw", linear_to_alaw, alaw_decode_table()))
     d = _read(spark, sf_dir, "documents")
 
-    def compute(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = b"".join(
-                    _hl.md5(text.encode("utf-8") + b"a" + str(i).encode())
-                    .digest() for i in range(4))
-                pcm = np.frombuffer(raw, dtype="<i2").reshape(-1, 2)
-                blobs = [
-                    encode_wav(pcm, rate=16_000),
-                    encode_flac(pcm, rate=16_000),
-                    encode_ogg_flac(pcm, rate=16_000),
-                    encode_mp4_audio(pcm, rate=16_000, codec="sowt"),
-                    encode_mp4_audio(pcm, rate=16_000, codec="fLaC"),
-                ]
-                outs = [decode_audio(b, "audio/*") for b in blobs]
-                backs = [np.rint(n_ * 32768.0).astype("<i2")
-                         for _r, n_ in outs]
-                ok = bool(all(r == 16_000 for r, _n in outs)
-                          and all(b.tobytes() == raw for b in backs))
-                # chains 6-7: G.711 on the QUANTIZED signal is exact
-                for _codec, _enc, _tab in _g711:
-                    q = _tab[_enc(pcm.astype(np.int32))]
-                    r6, n6 = decode_audio(
-                        encode_wav(q.astype(np.int16), rate=16_000,
-                                   codec=_codec), "audio/*")
-                    b6 = np.rint(n6 * 32768.0).astype("<i2")
-                    ok = ok and r6 == 16_000 and (
-                        b6.tobytes() == q.astype("<i2").tobytes())
-                rows.append((
-                    did,
-                    _hl.md5(backs[0].tobytes().hex().encode()).hexdigest(),
-                    ok,
-                ))
-            yield pd.DataFrame(rows,
-                               columns=["doc_id", "pcm_md5", "parity_ok"])
+    def compute(_did, text):
+        raw = b"".join(
+            _hl.md5(text.encode("utf-8") + b"a" + str(i).encode()).digest()
+            for i in range(4))
+        pcm = np.frombuffer(raw, dtype="<i2").reshape(-1, 2)
+        blobs = [
+            encode_wav(pcm, rate=16_000),
+            encode_flac(pcm, rate=16_000),
+            encode_ogg_flac(pcm, rate=16_000),
+            encode_mp4_audio(pcm, rate=16_000, codec="sowt"),
+            encode_mp4_audio(pcm, rate=16_000, codec="fLaC"),
+        ]
+        outs = [decode_audio(b, "audio/*") for b in blobs]
+        backs = [np.rint(n_ * 32768.0).astype("<i2") for _r, n_ in outs]
+        ok = bool(all(r == 16_000 for r, _n in outs)
+                  and all(b.tobytes() == raw for b in backs))
+        # chains 6-7: G.711 on the QUANTIZED signal is exact
+        for _codec, _enc, _tab in _g711:
+            q = _tab[_enc(pcm.astype(np.int32))]
+            r6, n6 = decode_audio(
+                encode_wav(q.astype(np.int16), rate=16_000, codec=_codec),
+                "audio/*")
+            b6 = np.rint(n6 * 32768.0).astype("<i2")
+            ok = ok and r6 == 16_000 and (
+                b6.tobytes() == q.astype("<i2").tobytes())
+        return [(_hl.md5(backs[0].tobytes().hex().encode()).hexdigest(),
+                 ok)]
 
     from openpolicedata_spark.operators.dedup import rebalance
 
-    return rebalance(d.select("doc_id", "text")).mapInPandas(
-        compute, "doc_id long, pcm_md5 string, parity_ok boolean")
+    return map_rows(rebalance(d.select("doc_id", "text")), compute,
+                    "pcm_md5 string, parity_ok boolean")
 
 
 _Q146_SQL = ("SELECT doc_id, md5("
@@ -4983,42 +4897,40 @@ def q164_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     from openpolicedata_spark.operators.multimodal import vad_stats
 
     clips = _g711_vad_clips(_read(spark, sf_dir, "documents"))
-    return (vad_stats(clips, frame_samples=8,
-                      energy_threshold=700_000_000)
-            .withColumnRenamed("media_id", "doc_id"))
+    return vad_stats(clips, frame_samples=8, energy_threshold=700_000_000,
+                     id_col="doc_id")
+
+
+def _g711_wav(payload: bytes, wtag: int = 7) -> bytes:
+    """A hand-assembled mono 8 kHz G.711 WAV around `payload` (format
+    tag 7 µ-law, 6 A-law), with the fact chunk the spec asks for."""
+    import struct as _st
+
+    fmt = _st.pack("<HHIIHH", wtag, 1, 8000, 8000, 1, 8)
+    body = (b"WAVE" + b"fmt " + _st.pack("<I", len(fmt)) + fmt
+            + b"fact" + _st.pack("<II", 4, len(payload))
+            + b"data" + _st.pack("<I", len(payload)) + payload)
+    return b"RIFF" + _st.pack("<I", len(body)) + body
 
 
 def _g711_vad_clips(d: DataFrame) -> DataFrame:
     """Deterministic µ-law telephony clips for the VAD queries (q164,
     q171): 64 md5-stream bytes per document wrapped as a mono 8 kHz
     G.711 WAV — the same integer-exact construction both DuckDB
-    oracles replay from the raw hex."""
+    oracles replay from the raw hex. Output: (doc_id, content)."""
     import hashlib as _hl
-    import struct as _st
-
-    import pandas as pd
-
-    def _wav(payload: bytes) -> bytes:
-        fmt = _st.pack("<HHIIHH", 7, 1, 8000, 8000, 1, 8)
-        body = (b"WAVE" + b"fmt " + _st.pack("<I", len(fmt)) + fmt
-                + b"fact" + _st.pack("<II", 4, len(payload))
-                + b"data" + _st.pack("<I", len(payload)) + payload)
-        return b"RIFF" + _st.pack("<I", len(body)) + body
-
-    def build(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = b"".join(
-                    _hl.md5(text.encode("utf-8") + b"v" + str(i).encode())
-                    .digest() for i in range(4))
-                rows.append((did, _wav(raw)))
-            yield pd.DataFrame(rows, columns=["media_id", "content"])
 
     from openpolicedata_spark.operators.dedup import rebalance
+    from openpolicedata_spark.operators.multimodal import map_rows
 
-    return rebalance(d.select("doc_id", "text")).mapInPandas(
-        build, "media_id long, content binary")
+    def build(_did, text):
+        raw = b"".join(
+            _hl.md5(text.encode("utf-8") + b"v" + str(i).encode()).digest()
+            for i in range(4))
+        return [(_g711_wav(raw),)]
+
+    return map_rows(rebalance(d.select("doc_id", "text")), build,
+                    "content binary")
 
 
 # shared oracle prefix for q164/q171: replay the µ-law clip bytes from
@@ -5076,9 +4988,9 @@ def q171_vad_segment_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from openpolicedata_spark.operators.multimodal import vad_segments
 
     clips = _g711_vad_clips(_read(spark, sf_dir, "documents"))
-    return (vad_segments(clips, frame_samples=8,
-                         energy_threshold=700_000_000, min_frames=2)
-            .withColumnRenamed("media_id", "doc_id"))
+    return vad_segments(clips, frame_samples=8,
+                        energy_threshold=700_000_000, min_frames=2,
+                        id_col="doc_id")
 
 
 _Q171_SQL = _VAD_FE_CTE + """
@@ -5122,44 +5034,36 @@ def q172_mp3_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
     Embarrassingly parallel, 9 scalars out per clip."""
     import hashlib as _hl
 
-    import pandas as pd
     from openpolicedata_spark.operators.dedup import rebalance
-    from openpolicedata_spark.operators.multimodal import mp3_scan
+    from openpolicedata_spark.operators.multimodal import map_rows, mp3_scan
     from openpolicedata_spark.sources.mp3 import MP3_BITRATES_KBPS
 
     d = _read(spark, sf_dir, "documents")
 
-    def build(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                sz = did % 200
-                tag = (b"ID3" + bytes([3, 0, 0]) +
-                       bytes([(sz >> 21) & 0x7F, (sz >> 14) & 0x7F,
-                              (sz >> 7) & 0x7F, sz & 0x7F]) +
-                       b"\x00" * sz)
-                frames = []
-                for i in range(3 + did % 5):
-                    h = _hl.md5(
-                        text.encode("utf-8") + b"m" + str(i).encode()
-                    ).hexdigest()
-                    br_idx = 1 + int(h[0], 16) % 14
-                    pad = int(h[1], 16) % 2
-                    # the walker's own ladder: a future table fix can't
-                    # desynchronize builder and parser (review finding)
-                    size = (144 * MP3_BITRATES_KBPS[br_idx] * 1000
-                            // 44100 + pad)
-                    hdr = bytes([0xFF, 0xFB,
-                                 (br_idx << 4) | (0 << 2) | (pad << 1),
-                                 0x00])
-                    frames.append(hdr + b"\x00" * (size - 4))
-                rows.append((did, tag + b"".join(frames)))
-            yield pd.DataFrame(rows, columns=["media_id", "content"])
+    def build(did, text):
+        did = int(did)
+        sz = did % 200
+        tag = (b"ID3" + bytes([3, 0, 0]) +
+               bytes([(sz >> 21) & 0x7F, (sz >> 14) & 0x7F,
+                      (sz >> 7) & 0x7F, sz & 0x7F]) +
+               b"\x00" * sz)
+        frames = []
+        for i in range(3 + did % 5):
+            h = _hl.md5(
+                text.encode("utf-8") + b"m" + str(i).encode()).hexdigest()
+            br_idx = 1 + int(h[0], 16) % 14
+            pad = int(h[1], 16) % 2
+            # the walker's own ladder: a future table fix can't
+            # desynchronize builder and parser (review finding)
+            size = 144 * MP3_BITRATES_KBPS[br_idx] * 1000 // 44100 + pad
+            hdr = bytes([0xFF, 0xFB, (br_idx << 4) | (0 << 2) | (pad << 1),
+                         0x00])
+            frames.append(hdr + b"\x00" * (size - 4))
+        return [(tag + b"".join(frames),)]
 
-    clips = rebalance(d.select("doc_id", "text")).mapInPandas(
-        build, "media_id long, content binary")
-    return mp3_scan(clips).withColumnRenamed("media_id", "doc_id")
+    clips = map_rows(rebalance(d.select("doc_id", "text")), build,
+                     "content binary")
+    return mp3_scan(clips, id_col="doc_id")
 
 
 _Q172_SQL = """
@@ -5586,9 +5490,8 @@ def q177_mp3_multiversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     covering ID3v2 skip + trailers on the MPEG-1 path)."""
     import hashlib as _hl
 
-    import pandas as pd
     from openpolicedata_spark.operators.dedup import rebalance
-    from openpolicedata_spark.operators.multimodal import mp3_scan
+    from openpolicedata_spark.operators.multimodal import map_rows, mp3_scan
     from openpolicedata_spark.sources.mp3 import (
         MP3_BITRATE_LADDERS,
         MP3_SAMPLE_RATES_BY_VERSION,
@@ -5597,43 +5500,37 @@ def q177_mp3_multiversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _read(spark, sf_dir, "documents")
     ver_bits_by_vidx = (3, 2, 0)   # MPEG-1, MPEG-2, MPEG-2.5
 
-    def build(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                vidx, layer = (did % 9) // 3, (did % 9) % 3 + 1
-                ver = ver_bits_by_vidx[vidx]
-                vclass = 1 if ver == 3 else 2
-                sr_idx = did % 3
-                rate = MP3_SAMPLE_RATES_BY_VERSION[ver][sr_idx]
-                ladder = MP3_BITRATE_LADDERS[(vclass, layer)]
-                frames = []
-                for i in range(2 + did % 4):
-                    h = _hl.md5(
-                        text.encode("utf-8") + b"v" + str(i).encode()
-                    ).hexdigest()
-                    br_idx = 1 + int(h[0], 16) % 14
-                    pad = int(h[1], 16) % 2
-                    br = ladder[br_idx]
-                    if layer == 1:
-                        size = (12 * br * 1000 // rate + pad) * 4
-                    else:
-                        spf = 576 if (layer == 3 and vclass == 2) else 1152
-                        size = spf // 8 * br * 1000 // rate + pad
-                    hdr = bytes([
-                        0xFF,
-                        0xE0 | (ver << 3) | ((4 - layer) << 1) | 1,
-                        (br_idx << 4) | (sr_idx << 2) | (pad << 1),
-                        0x00])
-                    frames.append(hdr + b"\x00" * (size - 4))
-                rows.append((did, b"".join(frames)))
-            yield pd.DataFrame(rows, columns=["media_id", "content"])
+    def build(did, text):
+        did = int(did)
+        vidx, layer = (did % 9) // 3, (did % 9) % 3 + 1
+        ver = ver_bits_by_vidx[vidx]
+        vclass = 1 if ver == 3 else 2
+        sr_idx = did % 3
+        rate = MP3_SAMPLE_RATES_BY_VERSION[ver][sr_idx]
+        ladder = MP3_BITRATE_LADDERS[(vclass, layer)]
+        frames = []
+        for i in range(2 + did % 4):
+            h = _hl.md5(
+                text.encode("utf-8") + b"v" + str(i).encode()).hexdigest()
+            br_idx = 1 + int(h[0], 16) % 14
+            pad = int(h[1], 16) % 2
+            br = ladder[br_idx]
+            if layer == 1:
+                size = (12 * br * 1000 // rate + pad) * 4
+            else:
+                spf = 576 if (layer == 3 and vclass == 2) else 1152
+                size = spf // 8 * br * 1000 // rate + pad
+            hdr = bytes([
+                0xFF,
+                0xE0 | (ver << 3) | ((4 - layer) << 1) | 1,
+                (br_idx << 4) | (sr_idx << 2) | (pad << 1),
+                0x00])
+            frames.append(hdr + b"\x00" * (size - 4))
+        return [(b"".join(frames),)]
 
-    clips = rebalance(d.select("doc_id", "text")).mapInPandas(
-        build, "media_id long, content binary")
-    return (mp3_scan(clips).withColumnRenamed("media_id", "doc_id")
-            .drop("first_frame_offset"))
+    clips = map_rows(rebalance(d.select("doc_id", "text")), build,
+                     "content binary")
+    return mp3_scan(clips, id_col="doc_id").drop("first_frame_offset")
 
 
 _Q177_SQL = """
@@ -5926,52 +5823,43 @@ def q187_mp3_free_format(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned FLOOR-inverse bitrate formula — in pure SQL."""
     import hashlib as _hl
 
-    import pandas as pd
     from openpolicedata_spark.operators.dedup import rebalance
-    from openpolicedata_spark.operators.multimodal import mp3_scan
+    from openpolicedata_spark.operators.multimodal import map_rows, mp3_scan
 
     d = _read(spark, sf_dir, "documents")
     ver_bits_by_vidx = (3, 2, 0)   # MPEG-1, MPEG-2, MPEG-2.5
 
-    def build(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                vidx, layer = (did % 9) // 3, (did % 9) % 3 + 1
-                ver = ver_bits_by_vidx[vidx]
-                vclass = 1 if ver == 3 else 2
-                sr_idx = did % 3
-                slot = 4 if layer == 1 else 1
-                hb = _hl.md5(text.encode("utf-8") + b"fb").hexdigest()
-                raw = 160 + int(hb[:2], 16)          # 160..415 slots-ish
-                base = raw * 4 if layer == 1 else raw
-                frames = []
-                for i in range(3 + did % 3):
-                    h = _hl.md5(
-                        text.encode("utf-8") + b"p" + str(i).encode()
-                    ).hexdigest()
-                    pad = int(h[0], 16) % 2
-                    size = base + pad * slot
-                    hdr = bytes([
-                        0xFF,
-                        0xE0 | (ver << 3) | ((4 - layer) << 1) | 1,
-                        (0 << 4) | (sr_idx << 2) | (pad << 1),
-                        0x00])
-                    payload = bytearray()
-                    while len(payload) < size - 4:
-                        payload += _hl.md5(
-                            text.encode("utf-8") + b"y"
-                            + bytes([i, len(payload) % 251])).digest()
-                    frames.append(
-                        hdr + bytes(b & 0x7F for b in payload[:size - 4]))
-                rows.append((did, b"".join(frames)))
-            yield pd.DataFrame(rows, columns=["media_id", "content"])
+    def build(did, text):
+        did = int(did)
+        vidx, layer = (did % 9) // 3, (did % 9) % 3 + 1
+        ver = ver_bits_by_vidx[vidx]
+        sr_idx = did % 3
+        slot = 4 if layer == 1 else 1
+        hb = _hl.md5(text.encode("utf-8") + b"fb").hexdigest()
+        raw = 160 + int(hb[:2], 16)          # 160..415 slots-ish
+        base = raw * 4 if layer == 1 else raw
+        frames = []
+        for i in range(3 + did % 3):
+            h = _hl.md5(
+                text.encode("utf-8") + b"p" + str(i).encode()).hexdigest()
+            pad = int(h[0], 16) % 2
+            size = base + pad * slot
+            hdr = bytes([
+                0xFF,
+                0xE0 | (ver << 3) | ((4 - layer) << 1) | 1,
+                (0 << 4) | (sr_idx << 2) | (pad << 1),
+                0x00])
+            payload = bytearray()
+            while len(payload) < size - 4:
+                payload += _hl.md5(
+                    text.encode("utf-8") + b"y"
+                    + bytes([i, len(payload) % 251])).digest()
+            frames.append(hdr + bytes(b & 0x7F for b in payload[:size - 4]))
+        return [(b"".join(frames),)]
 
-    clips = rebalance(d.select("doc_id", "text")).mapInPandas(
-        build, "media_id long, content binary")
-    return (mp3_scan(clips).withColumnRenamed("media_id", "doc_id")
-            .drop("first_frame_offset"))
+    clips = map_rows(rebalance(d.select("doc_id", "text")), build,
+                     "content binary")
+    return mp3_scan(clips, id_col="doc_id").drop("first_frame_offset")
 
 
 _Q187_SQL = """
@@ -6752,43 +6640,31 @@ def q158_g711_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     speech payload a 100 TB pipeline ingests) decode through exactly
     this path. One Arrow-batched mapInPandas pass."""
     import hashlib as _hl
-    import struct as _st
 
     import numpy as np
-    import pandas as pd
-    from openpolicedata_spark.operators.multimodal import decode_audio
+    from openpolicedata_spark.operators.multimodal import (
+        decode_audio,
+        map_rows,
+    )
 
     d = _read(spark, sf_dir, "documents")
+    w = np.arange(1, 33, dtype=np.int64)
 
-    def _wav(payload: bytes, wtag: int) -> bytes:
-        fmt = _st.pack("<HHIIHH", wtag, 1, 8000, 8000, 1, 8)
-        body = (b"WAVE" + b"fmt " + _st.pack("<I", len(fmt)) + fmt
-                + b"fact" + _st.pack("<II", 4, len(payload))
-                + b"data" + _st.pack("<I", len(payload)) + payload)
-        return b"RIFF" + _st.pack("<I", len(body)) + body
-
-    def compute(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        w = np.arange(1, 33, dtype=np.int64)
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = (_hl.md5(text.encode("utf-8") + b"u0").digest()
-                       + _hl.md5(text.encode("utf-8") + b"u1").digest())
-                sums = []
-                for wtag in (7, 6):  # µ-law, then A-law
-                    _r, norm = decode_audio(_wav(raw, wtag), "audio/wav")
-                    v = np.rint(norm * 32768.0).astype(np.int64).ravel()
-                    sums += [int(v.sum()), int((w * v).sum())]
-                rows.append((did, sums[0], sums[1], sums[2], sums[3]))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "ulaw_sum", "ulaw_whash",
-                "alaw_sum", "alaw_whash"])
+    def compute(_did, text):
+        raw = (_hl.md5(text.encode("utf-8") + b"u0").digest()
+               + _hl.md5(text.encode("utf-8") + b"u1").digest())
+        sums = []
+        for wtag in (7, 6):  # µ-law, then A-law
+            _r, norm = decode_audio(_g711_wav(raw, wtag), "audio/wav")
+            v = np.rint(norm * 32768.0).astype(np.int64).ravel()
+            sums += [int(v.sum()), int((w * v).sum())]
+        return [tuple(sums)]
 
     from openpolicedata_spark.operators.dedup import rebalance
 
-    return rebalance(d.select("doc_id", "text")).mapInPandas(
-        compute, "doc_id long, ulaw_sum long, ulaw_whash long, "
-                 "alaw_sum long, alaw_whash long")
+    return map_rows(rebalance(d.select("doc_id", "text")), compute,
+                    "ulaw_sum long, ulaw_whash long, alaw_sum long, "
+                    "alaw_whash long")
 
 
 # µ-law: u' = 255 - code (ones complement); seg = (u'//16)%8; mant = u'%16;
@@ -7238,33 +7114,31 @@ def q150_audio_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib as _hl
 
     import numpy as np
-    import pandas as pd
-    from openpolicedata_spark.operators.multimodal import audio_dup_pairs
+    from openpolicedata_spark.operators.multimodal import (
+        audio_dup_pairs,
+        map_rows,
+    )
     from openpolicedata_spark.sources.flac import encode_flac
 
     d = _read(spark, sf_dir, "documents").select("doc_id")
     fam_mod = max(25, d.count() // 200)
 
-    def gen(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                seed = f"aud:{did % fam_mod}"
-                raw = b"".join(
-                    _hl.md5((seed + str(i)).encode()).digest()
-                    for i in range(16))
-                s = np.frombuffer(raw, np.uint8).astype(np.int16).copy()
-                if did % 5:
-                    b = did % 64
-                    s[b * 4:(b + 1) * 4] += 128
-                rows.append((did, encode_flac(s, 8000)))
-            yield pd.DataFrame(rows, columns=["media_id", "content"])
+    def gen(did):
+        did = int(did)
+        seed = f"aud:{did % fam_mod}"
+        raw = b"".join(
+            _hl.md5((seed + str(i)).encode()).digest() for i in range(16))
+        s = np.frombuffer(raw, np.uint8).astype(np.int16).copy()
+        if did % 5:
+            b = did % 64
+            s[b * 4:(b + 1) * 4] += 128
+        return [(encode_flac(s, 8000),)]
 
     from openpolicedata_spark.operators.dedup import rebalance
 
-    media = rebalance(d).mapInPandas(gen, "media_id long, content binary")
-    return audio_dup_pairs(media, max_hamming=3).orderBy("id_a", "id_b")
+    media = map_rows(rebalance(d), gen, "content binary")
+    return audio_dup_pairs(media, max_hamming=3,
+                           id_col="doc_id").orderBy("id_a", "id_b")
 
 
 _Q150_SQL = """
